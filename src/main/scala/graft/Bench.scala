@@ -185,7 +185,7 @@ object Bench {
           spark.read.parquet(master), groups)
         .collect()
         .map(r => new java.io.File(
-          graft.forget.Forget.stripScheme(r.getString(0))).getName)
+          DistributedRewrite.stripScheme(r.getString(0))).getName)
         .toSet
       val nFiles = matchedNames.size
       var allOk = true
@@ -268,7 +268,7 @@ object Bench {
         .filter(col("l_returnflag") === "R")
         .select(col("_f")).distinct().collect()
         .map(r => new java.io.File(
-          graft.forget.Forget.stripScheme(r.getString(0))).getName)
+          DistributedRewrite.stripScheme(r.getString(0))).getName)
         .toSet
       forgetJsonObjects = matchedJson.size
       def listJsonGz(dir: String): Seq[String] = {

@@ -98,7 +98,7 @@ final class GraftApi(spark: SparkSession) {
     * can never clear the running job's flag. `readTableFn` passes
     * through to [[JobRunner.run]] (the JobRunnerSpec dispatch seam) —
     * ApiSpec uses it to hold a job mid-Find and probe the guards. */
-  def startJob(jobId: String, distributed: Boolean = true,
+  def startJob(jobId: String,
                readTableFn: (SparkSession, TableDef) =>
                  org.apache.spark.sql.DataFrame = JobRunner.readTable)
       : JobRunner.JobRun = {
@@ -109,7 +109,7 @@ final class GraftApi(spark: SparkSession) {
       // snapshot the settings onto the job: changes made while it runs
       // must not affect it (queue/handlers.py:126-141)
       val run = JobRunner.run(spark, jobId, mappers.values.toSeq,
-        queue.asScala.toSeq, distributed, settings = settings.get(),
+        queue.asScala.toSeq, settings = settings.get(),
         readTableFn = readTableFn)
       // cleanup phase clears consumed queue items (stream_processor.py:129-139)
       val clearedIds = run.clearedQueue.map(_.id).toSet

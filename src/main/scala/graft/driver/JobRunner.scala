@@ -2,11 +2,10 @@ package graft.driver
 
 import graft.catalog.{Catalog, TableDef}
 import graft.find.Finder
-import graft.forget.{DistributedRewrite, Forget, JsonMatch}
+import graft.forget.DistributedRewrite
 import graft.jobs.Jobs
 import graft.model._
 import graft.tools.ParquetStats
-import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.util.control.NonFatal
@@ -45,17 +44,11 @@ object JobRunner {
       settings: JobSettings = JobSettings(),
       expiresAt: Option[Long] = None)
 
-  /** Run a full deletion job.
-    *
-    * @param distributed true = [[DistributedRewrite]] (one Spark job, one
-    *                    task per object — the at-scale path); false = the
-    *                    driver-pool [[Forget.run]] (per-file Spark jobs,
-    *                    exact writer parity with spark.write)
-    */
+  /** Run a full deletion job. The Forget phase is one
+    * [[DistributedRewrite]] job per mapper with found objects. */
   def run(spark: SparkSession, jobId: String,
           mappers: Seq[(DataMapper, TableDef)],
           queue: Seq[DeletionQueueItem],
-          distributed: Boolean = true,
           outPathFor: String => Option[String] = _ => None,
           manifestAuditDir: Option[String] = None,
           settings: JobSettings = JobSettings(),
@@ -127,8 +120,10 @@ object JobRunner {
               case DataFormat.Parquet =>
                 // identifier-columns-only projection: the scan cost is the
                 // pruned column chunks (README.md:75-81), not the table
-                ParquetStats.columnBytes(new Configuration(),
-                  paths.map(Forget.stripScheme), m.columns).selected
+                ParquetStats.columnBytes(
+                  spark.sparkContext.hadoopConfiguration,
+                  paths.map(DistributedRewrite.stripScheme), m.columns)
+                  .selected
               case DataFormat.JsonLines =>
                 // row format has no column pruning: a Find is a full scan
                 // of the table's bytes (reference scenario 5,
@@ -197,11 +192,8 @@ object JobRunner {
               ObjectWorkUnit(jobId, p, m.id, table.format,
                 m.deleteOldVersions, m.ignoreObjectNotFound))
             val groups = groupsByMapper(m.id)
-            events ++= (if (distributed)
-              DistributedRewrite.run(spark, jobId, units, groups, outPathFor)
-            else Forget.run(spark, jobId, units, groups,
-              maxParallel = settings.deletionTasksMaxNumber,
-              outPathFor = outPathFor))
+            events ++= DistributedRewrite.run(spark, jobId, units, groups,
+              outPathFor)
           }
         }
         events += ev(JobEventName.ForgetPhaseEnded)
@@ -260,8 +252,8 @@ object JobRunner {
     * schema (SURVEY.md §1.3: schema is declared for planning,
     * self-describing for execution; the reference reads every object
     * through the Glue schema, generate_queries.py:264-265). For
-    * parquet this buys two things at 100 TB (★r19 schema-drift
-    * sweep): no distributed footer-inference job before every Find,
+    * parquet this buys two things at 100 TB: no distributed
+    * footer-inference job before every Find,
     * and drift-stable semantics — a physical object missing an
     * evolved column reads NULL (→ never matches), an extra physical
     * column is invisible, and column order resolves by name, no

@@ -18,13 +18,12 @@ import org.apache.spark.sql.SparkSession
 import java.util.UUID
 import scala.util.control.NonFatal
 
-/** Distributed Forget: ONE Spark job over the whole object queue, one task
-  * per file, the rewrite performed INSIDE the task with parquet-mr / raw
-  * streams — no per-file driver-scheduled Spark actions (VERDICT r2 "What's
-  * wrong" #2: the thread-pool Forget issued ~3 driver jobs per object;
-  * at the reference's scenario 4 — 45,300 objects,
-  * /root/reference/docs/COST_OVERVIEW.md:288-290 — that is ~135k driver
-  * jobs, where this is ONE job with 45,300 tasks).
+/** The Forget engine: ONE Spark job over the whole object queue, each
+  * object rewritten INSIDE a task with parquet-mr / raw streams — no
+  * per-object driver-scheduled Spark actions, so the driver's job count
+  * is independent of the queue (the reference's scenario 4, 45,300
+  * objects, docs/COST_OVERVIEW.md:288-290, is one job here, not one or
+  * more driver jobs per object).
   *
   * This is the Spark analog of the reference's Fargate fleet
   * (backend/ecs_tasks/delete_files/main.py:288-306: N containers × process
@@ -124,18 +123,18 @@ object DistributedRewrite {
   // ------------------------------------------------------------------
 
   // ------------------------------------------------------------------
-  // Local-filesystem fast path (★r21 optimization round)
+  // Local-filesystem fast path
   // ------------------------------------------------------------------
   //
   // On a local warehouse every Hadoop call goes through
   // ChecksumFileSystem: each open VERIFIES a .crc sidecar (re-reading
   // and CRC-ing the whole file), each create WRITES one, and
   // delete/rename double their syscalls to keep sidecars in step. The
-  // rewrite task pays that tax ~6× per object (footer open, record
+  // rewrite task would pay that tax ~6× per object (footer open, record
   // read, staged write, stat, swap, version copy) — pure overhead on a
   // many-small-object forget job, and the dominant per-object cost at
   // the 10k/40k soak rungs. Where the filesystem is local the task
-  // now uses java.nio / parquet's LocalInputFile|LocalOutputFile
+  // uses java.nio / parquet's LocalInputFile|LocalOutputFile
   // directly (no sidecars, no verification — integrity is the commit
   // protocol's own capture-check-swap job, mirroring S3 where there
   // are no sidecars either); any other FileSystem keeps the exact
@@ -210,7 +209,7 @@ object DistributedRewrite {
     * semantics: decimals compare by value regardless of scale
     * (Decimal('2547.4') == Decimal('2547.40'), parquet_handler.py:102-130);
     * float/double NaN equals NaN (Spark SQL NaN semantics, which the
-    * driver-side Forget predicate also uses). */
+    * Find predicate, [[Finder.forgetPredicate]], also uses). */
   private def leafEquals(pt: PrimitiveType, g: Group, idx: Int, m: PVal): Boolean = {
     val scaleOpt = decimalScale(pt)
     pt.getPrimitiveTypeName match {
@@ -349,13 +348,12 @@ object DistributedRewrite {
         // java.nio for local paths: a Hadoop LocalFileSystem create costs
         // ~25 ms (crc sidecar + permission bookkeeping) — pure overhead
         // on a 10-byte marker, ×1 per object per job.
-        // Write-first, mkdir only on miss (★r22): createDirectories
-        // issues a real mkdir syscall per call even when the directory
-        // exists (EEXIST under the parent's inode write lock) — at the
-        // 40k-object soak that serialized 32 task threads on one
-        // directory mutex (thread-sampled: mkdir0 was the 2nd-hottest
-        // frame). The marker dir exists for every object after the
-        // first, so the common case is now one open syscall.
+        // Write-first, mkdir only on miss: createDirectories issues a
+        // real mkdir syscall per call even when the directory exists
+        // (EEXIST under the parent's inode write lock), which serializes
+        // concurrent tasks on one directory mutex. The marker dir exists
+        // for every object after the first, so the common case is one
+        // open syscall.
         try java.nio.file.Files.write(p, bytes)
         catch {
           case _: java.nio.file.NoSuchFileException =>
@@ -397,17 +395,15 @@ object DistributedRewrite {
     }
     val nioDest = nioPath(fs, dest)
     val nioStaged = nioPath(fs, staged)
-    // Version capture (★r22 scale fix): when the swap below is the
-    // ATOMIC local-FS rename AND the mapper purges versions anyway
-    // (deleteOldVersions), the capture→swap→purge sequence nets to
-    // NOTHING on success — the snapshot exists only to roll back a
-    // failed swap, and an atomic rename either fully replaces dest or
-    // leaves it untouched (there is no partial state to restore).
-    // Skipping it drops ~8 directory-metadata syscalls per object
-    // (mkdir×2, copy open/creat, unlink, rmdir, list) that all
-    // serialize on the SHARED .graft-versions parent inode lock —
-    // thread-sampled as the top wall consumer at the 40,960-object
-    // soak (delete0/mkdir0/open0 frames). Version-store state after
+    // Version capture: when the swap below is the ATOMIC local-FS
+    // rename AND the mapper purges versions anyway (deleteOldVersions),
+    // the capture→swap→purge sequence nets to NOTHING on success — the
+    // snapshot exists only to roll back a failed swap, and an atomic
+    // rename either fully replaces dest or leaves it untouched (there
+    // is no partial state to restore). Skipping it drops ~8
+    // directory-metadata syscalls per object (mkdir×2, copy
+    // open/creat, unlink, rmdir, list) that all serialize on the
+    // SHARED .graft-versions parent inode lock. Version-store state after
     // the job is byte-identical: none in either case (the purge still
     // runs and still clears any PRIOR job's versions). The capture
     // stays for: deleteOldVersions=false (versions must accumulate —
@@ -423,12 +419,11 @@ object DistributedRewrite {
         // one atomic same-directory rename replaces the delete+rename
         // pair (no reader-visible missing-object window on local FS);
         // a stale checksum sidecar of the OLD content goes first.
-        // ATOMIC_MOVE (★r22, ADVICE r21): without it the JDK may
-        // silently fall back to copy+delete (non-atomic,
-        // reader-visible partial state) if the move ever crosses file
-        // stores — staging is same-directory today, so this makes a
-        // future violation fail loudly (AtomicMoveNotSupportedException
-        // feeds the existing rollback path) instead of degrading.
+        // ATOMIC_MOVE: without it the JDK may silently fall back to
+        // copy+delete (non-atomic, reader-visible partial state) if the
+        // move ever crosses file stores — staging is same-directory, so
+        // a violation fails loudly (AtomicMoveNotSupportedException
+        // feeds the rollback path) instead of degrading.
         try {
           java.nio.file.Files.deleteIfExists(crcSidecar(destNio))
           java.nio.file.Files.move(stagedNio, destNio,
@@ -513,7 +508,7 @@ object DistributedRewrite {
       s"$path was found by Find but Forget deleted 0 rows"
   }
 
-  /** Rewrite every work unit in ONE Spark job (one task per file).
+  /** Rewrite every work unit in ONE Spark job (k objects per task).
     * Returns the job events (sorted by sk); live progress is visible on
     * the two accumulators (`graft.forget.rowsProcessed|rowsDeleted`).
     * Match-group cast validation ([[buildSpecs]]) runs BEFORE the
@@ -543,51 +538,41 @@ object DistributedRewrite {
     val accDeleted = spark.sparkContext.longAccumulator("graft.forget.rowsDeleted")
 
     val work: Seq[(ObjectWorkUnit, String)] = units.map { u =>
-      val srcPath = Forget.stripScheme(u.path)
-      (u, outPathFor(u.path).map(Forget.stripScheme).getOrElse(srcPath))
+      val srcPath = stripScheme(u.path)
+      (u, outPathFor(u.path).map(stripScheme).getOrElse(srcPath))
     }
 
     val confBc = spark.sparkContext.broadcast(
       new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration))
     val tag = jobTag(jobId)
-    // Task granularity (★r22, VERDICT r21 #1): one task per object put
-    // the SCHEDULER on the critical path at soak scale — 40,960 tasks
-    // cost ~1 ms each to dispatch, so the 32-core wall sat at 42 s
-    // against a ~10 s compute floor (cpu/wall ≈ 7-9, and c8 ≈ c32).
-    // Batch k objects per task instead. Per-object semantics are
-    // untouched: every contract (failure isolation, idempotency
-    // markers, rollback, zero-deletion, accumulators) already lives in
-    // the per-object body below, which catches everything and emits
+    // Task granularity: k objects per task. One task per object would
+    // put the SCHEDULER on the critical path at soak scale (~1 ms of
+    // dispatch per task, tens of thousands of tasks). Per-object
+    // semantics do not depend on k: every contract (failure isolation,
+    // idempotency markers, rollback, zero-deletion, accumulators) lives
+    // in the per-object body below, which catches everything and emits
     // one TaskOutcome per object — a batch neighbor's failure cannot
     // fail this object, and a retried/speculated batch replays each
-    // committed member from its own done marker exactly as the
-    // one-task-per-object shape did. k is scale-adaptive (targets
-    // 8 task waves per core so stragglers amortize — a fixed k would
-    // under-split small queues or leave 40k tasks at soak scale),
-    // bounded to 32 objects so one retry never redoes more than that,
-    // and overridable via `graft.forget.objectsPerTask` (set 1 to
-    // restore the exact former dispatch).
-    val objectsPerTask: Int = {
-      val auto = math.ceil(work.size.toDouble /
-        (spark.sparkContext.defaultParallelism.toDouble * 8)).toInt
-      spark.conf.getOption("graft.forget.objectsPerTask")
-        .map(_.toInt).getOrElse(math.min(32, math.max(1, auto)))
-    }
-    val numSlices = math.max(1,
-      math.ceil(work.size.toDouble / objectsPerTask).toInt)
+    // committed member from its own done marker. k is scale-adaptive
+    // (targets 8 task waves per core so stragglers amortize — a fixed k
+    // would under-split small queues or over-split large ones) and
+    // bounded to 32 objects so one retry never redoes more than that.
+    val auto = math.ceil(work.size.toDouble /
+      (spark.sparkContext.defaultParallelism.toDouble * 8)).toInt
+    val k = math.min(32, math.max(1, auto))
+    val numSlices = math.max(1, math.ceil(work.size.toDouble / k).toInt)
     val outcomes = spark.sparkContext
       .parallelize(work, numSlices) // k objects per task (see above)
       .mapPartitions { it =>
-        // ONE Configuration copy per task, not per object (★r22): the
-        // copy ctor re-walks the source's property overlay under its
-        // monitor — per-object copies burned ~1-2 ms of cpu each and
-        // thread-sampled as BLOCKED contention on the shared broadcast
-        // value at soak scale. Single-threaded within the task, so the
-        // objects of one batch can safely share the copy.
+        // ONE Configuration copy per task, not per object: the copy ctor
+        // re-walks the source's property overlay under its monitor, so
+        // per-object copies cost ~1-2 ms of cpu each and contend on the
+        // shared broadcast value. Single-threaded within the task, so
+        // the objects of one batch can safely share the copy.
         val conf = confBc.value.value
         it.map { case (u, destStr) =>
         val t0 = System.currentTimeMillis()
-        val src = new HPath(Forget.stripScheme(u.path))
+        val src = new HPath(stripScheme(u.path))
         val dest = new HPath(destStr)
         try {
           val fs = src.getFileSystem(conf)
@@ -721,8 +706,8 @@ object DistributedRewrite {
             // added markers between the list and this check
             if (dfs.listStatus(dir).isEmpty) dfs.delete(dir, false)
           }
-          // reclaim ALL staging debris in the data dir (★r20 crash
-          // axis): own-tag files are a failed attempt's leftovers
+          // reclaim ALL staging debris in the data dir: own-tag files
+          // are a failed attempt's leftovers
           // (every live attempt is done), foreign-tag files are a
           // dead prior run's orphans — a task that died between its
           // staging write and swap. Dot-prefixed names are invisible
@@ -774,14 +759,12 @@ object DistributedRewrite {
     }
 
   /** Every ParquetReader.Builder ctor except (InputFile,
-    * ParquetConfiguration) — and ParquetFileReader.open's no-options
+    * ParquetConfiguration) — and the footer reader's no-options open
     * overload — eagerly constructs a FRESH `new Configuration()`,
     * which re-parses core-default.xml/core-site.xml out of the jars
-    * (~8 ms, measured by the PerfProbe `forgettask` sampler: the
-    * "footer open" phase was Inflater + woodstox XML frames, not
-    * parquet). On a many-small-object forget job that tax lands
-    * twice PER OBJECT; both call sites below thread the task's
-    * existing conf instead. */
+    * (~8 ms of Inflater + woodstox XML work, not parquet). On a
+    * many-small-object job that tax would land on every footer read;
+    * both helpers below thread the caller's existing conf instead. */
   private[graft] def groupReader(conf: Configuration,
                                  src: HPath): ParquetReader[Group] =
     new ParquetReader.Builder[Group](parquetInput(conf, src),
@@ -791,7 +774,10 @@ object DistributedRewrite {
         new GroupReadSupport()
     }.build()
 
-  /** Footer read reusing the caller's conf (see [[groupReader]]). */
+  /** Footer read reusing the caller's conf (see [[groupReader]]) — the
+    * one parquet footer-open in the engine: the rewrite task and the
+    * Find phase's scan-bytes stat ([[graft.tools.ParquetStats]]) both
+    * go through it. */
   private[graft] def readFooter(conf: Configuration, src: HPath)
       : org.apache.parquet.hadoop.metadata.ParquetMetadata = {
     val r = ParquetFileReader.open(parquetInput(conf, src),
@@ -817,62 +803,14 @@ object DistributedRewrite {
     }
   }
 
-  /** Dev-probe instrumentation ([[graft.tools.PerfProbe]] `forgettask`):
-    * runs one object's task-body phases sequentially with per-phase
-    * nanosecond accumulators, so the soak rungs' per-object cpu has a
-    * phase budget. Never used by the job path. */
-  val probeTimers: scala.collection.mutable.LinkedHashMap[String, Long] =
-    scala.collection.mutable.LinkedHashMap.empty
-  private def probeTime[A](k: String)(f: => A): A = {
-    val t0 = System.nanoTime()
-    val r = f
-    probeTimers(k) = probeTimers.getOrElse(k, 0L) + (System.nanoTime() - t0)
-    r
-  }
-  def probeParquetInput(conf: Configuration,
-                        src: HPath): org.apache.parquet.io.InputFile =
-    parquetInput(conf, src)
-  def probeTaskBody(conf: Configuration, path: String,
-                    specs: Seq[TaskGroupSpec]): Unit = {
-    // Destructive by design (commits the rewrite over its input with
-    // deleteOldVersions = true) — refuse anything outside the system
-    // temp directory so a mispointed probe cannot eat real data
-    // (★r22, ADVICE r21).
-    val tmpRoot = java.nio.file.Paths
-      .get(System.getProperty("java.io.tmpdir")).toRealPath()
-    val real = java.nio.file.Paths.get(path).toRealPath()
-    require(real.startsWith(tmpRoot),
-      s"probeTaskBody refuses non-temp path $path (probe staging only)")
-    val src = new HPath(path)
-    val dest = src
-    val fs = probeTime("stat") {
-      val f = src.getFileSystem(conf); f.getFileStatus(src); f
-    }
-    val st = fs.getFileStatus(src)
-    probeTime("marker_check") {
-      nioPath(fs, doneMarker(dest, "probe")) match {
-        case Some(p) => java.nio.file.Files.exists(p)
-        case None => fs.exists(doneMarker(dest, "probe"))
-      }
-    }
-    val staged = stagingPath(dest, jobTag("probe"))
-    probeTime("footer") { readFooter(conf, src) }
-    probeTime("reader_only") {
-      val r = groupReader(conf, src)
-      try { var g = r.read(); while (g != null) g = r.read() }
-      finally r.close()
-    }
-    probeTime("rewrite") {
-      rewriteParquetTaskTo(conf, src, staged, specs)
-    }
-    probeTime("commit") {
-      commitTask(conf, src, dest, staged, st.getLen,
-        st.getModificationTime, deleteOldVersions = true)
-    }
-    probeTime("marker_write") {
-      writeDoneMarker(fs, doneMarker(dest, "probe"), 1L, 1L)
-    }
-  }
+  /** `input_file_name()` yields a percent-encoded `file:` URI; decode it
+    * to a real filesystem path (spaces, '%', unicode) — raw strings that
+    * aren't URIs pass through unchanged. */
+  private[graft] def stripScheme(p: String): String =
+    if (p.startsWith("file:"))
+      try new java.net.URI(p).getPath
+      catch { case _: java.net.URISyntaxException => p.stripPrefix("file:") }
+    else p
 
   /** Variants writing directly to a given staging path (no commit). */
   private def rewriteParquetTaskTo(conf: Configuration, src: HPath,

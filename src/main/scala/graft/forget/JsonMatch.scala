@@ -2,11 +2,9 @@ package graft.forget
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import graft.find.Finder.GroupMatches
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions.udf
 import org.apache.spark.sql.types._
 
-/** Raw-JSON match predicate for the JSON-lines Forget path.
+/** Raw-JSON match evaluation for the JSON-lines Forget path.
   *
   * The reference evaluates matches on PARSED lines while writing the RAW
   * line through untouched (json_handler.py:41-74), with:
@@ -20,9 +18,9 @@ import org.apache.spark.sql.types._
   *     NOT JSON string "1234"; numeric cross-type compares numerically,
   *     mirroring Python `==` — generate_queries.py:102-109).
   *
-  * Implemented as a Scala UDF over the raw line. This sits outside
-  * whole-stage codegen, but the JSON parse itself dominates the cost (the
-  * reference pays the same parse per line); the scan stays a single pass.
+  * [[Evaluator]] runs inside the rewrite task
+  * ([[DistributedRewrite]]), one parse per line — the reference pays the
+  * same parse per line.
   */
 object JsonMatch {
 
@@ -104,13 +102,5 @@ object JsonMatch {
                                  case _            => false })
       }
     }
-  }
-
-  /** Column-level predicate: true when the raw JSON line matches any
-    * group's match set. */
-  def predicate(groups: Seq[GroupMatches]): Column => Column = {
-    val ev = new Evaluator(groups.map(spec))
-    val f = udf((line: String) => ev.matches(line))
-    (c: Column) => f(c)
   }
 }

@@ -1,6 +1,6 @@
 package graft.llm
 
-import graft.forget.{DistributedRewrite, Forget, PayloadCodec}
+import graft.forget.{DistributedRewrite, PayloadCodec}
 import graft.model._
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
@@ -65,7 +65,7 @@ object PiiForget {
   def findObjects(data: DataFrame, textCol: String): Seq[String] =
     data.filter(anyPii(col(textCol)))
       .select(input_file_name().as("_p")).distinct()
-      .collect().map(r => Forget.stripScheme(r.getString(0))).toSeq
+      .collect().map(r => DistributedRewrite.stripScheme(r.getString(0))).toSeq
 
   /** The Forget phase: scrub `textPath` (dot path, case-insensitive) in
     * every work unit through the shared distributed rewrite job.

@@ -113,8 +113,10 @@ object JobStatus {
   * `GraftApi.listSettings`/`putSettings` (settings/handlers.py:16-33).
   *
   * Only the knobs with a Spark-side meaning are carried: the reference's
-  * `*WaitSeconds` knobs pace its SQS/Athena polling loops, which Spark's
-  * own scheduler replaces.
+  * `*WaitSeconds` knobs pace its SQS/Athena polling loops, and its
+  * `DeletionTasksMaxNumber` sizes its Fargate fleet — Spark's own
+  * scheduler replaces both (the Forget job's parallelism is the
+  * cluster's).
   *
   * @param findQueryMaxRetries     failed Find queries are silently retried
   *        this many times before the job fails (`AthenaQueryMaxRetries`,
@@ -124,8 +126,6 @@ object JobStatus {
   *        reference's dispatcher keeps up to 15 Athena executions in
   *        flight against a 20-query account limit,
   *        backend/lambdas/tasks/work_query_queue.py:17-74)
-  * @param deletionTasksMaxNumber  driver-pool Forget concurrency
-  *        (`DeletionTasksMaxNumber` fleet size analog)
   * @param inSetMaxKeys            Find switches from the native InSet
   *        predicate to the broadcast semi-join above this many match keys
   *        (engine-specific; mirrors `Finder.InSetMaxKeys`)
@@ -136,13 +136,11 @@ object JobStatus {
 final case class JobSettings(
     findQueryMaxRetries: Int = 2,
     findConcurrencyLimit: Int = 15,
-    deletionTasksMaxNumber: Int = 8,
     inSetMaxKeys: Int = 100000,
     jobDetailsRetentionDays: Int = 0) {
   def validate(): JobSettings = {
     require(findQueryMaxRetries >= 0, "findQueryMaxRetries must be >= 0")
     require(findConcurrencyLimit >= 1, "findConcurrencyLimit must be >= 1")
-    require(deletionTasksMaxNumber >= 1, "deletionTasksMaxNumber must be >= 1")
     require(inSetMaxKeys >= 1, "inSetMaxKeys must be >= 1")
     require(jobDetailsRetentionDays >= 0,
       "jobDetailsRetentionDays must be >= 0")
@@ -259,13 +257,6 @@ final case class ObjectWorkUnit(
     format: DataFormat,
     deleteOldVersions: Boolean,
     ignoreObjectNotFound: Boolean = false)
-
-/** Result of rewriting one object. */
-final case class RewriteResult(
-    path: String,
-    processedRows: Long,
-    deletedRows: Long,
-    newPath: String)
 
 /** Raised when a match id cannot be cast to its column's type
   * (reference: generate_queries.py:516-519 MatchIdCastingError). */

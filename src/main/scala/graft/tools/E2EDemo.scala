@@ -88,7 +88,7 @@ object E2EDemo {
     val beforeJson = JobRunner.readTable(spark, jsonTable).count()
 
     // ---- the job
-    val run = JobRunner.run(spark, "job1", mappers, queue, distributed = true)
+    val run = JobRunner.run(spark, "job1", mappers, queue)
     println(s"== job status=${run.state.status} stats=${run.state.stats}")
     run.events.groupBy(_.eventName).toSeq.sortBy(_._1).foreach { case (n, es) =>
       println(s"   event $n x${es.size}")

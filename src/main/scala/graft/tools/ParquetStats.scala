@@ -1,9 +1,8 @@
 package graft.tools
 
+import graft.forget.DistributedRewrite
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import scala.jdk.CollectionConverters._
 
 /** Footer-level parquet statistics.
@@ -14,6 +13,9 @@ import scala.jdk.CollectionConverters._
   * Catalyst's column pruning gives the same plan; this helper measures it
   * from the column-chunk metadata: bytes of the pruned projection vs the
   * whole file — the BASELINE.md facet (a) scan ratio.
+  *
+  * Footers are read through [[DistributedRewrite.readFooter]] with the
+  * caller's conf, so a per-object stat costs no fresh `Configuration`.
   */
 object ParquetStats {
 
@@ -28,19 +30,16 @@ object ParquetStats {
     * under it) vs all chunks of the file. */
   def columnBytes(conf: Configuration, file: String,
                   columns: Seq[String]): ScanBytes = {
-    // Locale.ROOT (★r19 default-locale sweep): a tr-TR JVM lowercases
-    // "L_SHIPDATE" to "l_shıpdate" (dotless ı), silently matching NO
-    // chunk — the selected-bytes ratio would read 0 for any uppercase
-    // identifier. Case-insensitivity here is an IDENTIFIER contract,
-    // never a linguistic one.
+    // Locale.ROOT: a tr-TR JVM lowercases "L_SHIPDATE" to "l_shıpdate"
+    // (dotless ı), silently matching NO chunk — the selected-bytes ratio
+    // would read 0 for any uppercase identifier. Case-insensitivity here
+    // is an IDENTIFIER contract, never a linguistic one.
     val wanted = columns.map(_.toLowerCase(java.util.Locale.ROOT))
-    val r = ParquetFileReader.open(
-      HadoopInputFile.fromPath(new HPath(file), conf))
-    try {
-      var selected = 0L
-      var total = 0L
-      var rows = 0L
-      r.getFooter.getBlocks.asScala.foreach { b =>
+    var selected = 0L
+    var total = 0L
+    var rows = 0L
+    DistributedRewrite.readFooter(conf, new HPath(file))
+      .getBlocks.asScala.foreach { b =>
         rows += b.getRowCount
         b.getColumns.asScala.foreach { c =>
           val path = c.getPath.toDotString
@@ -50,8 +49,7 @@ object ParquetStats {
             selected += c.getTotalSize
         }
       }
-      ScanBytes(selected, total, rows)
-    } finally r.close()
+    ScanBytes(selected, total, rows)
   }
 
   def columnBytes(conf: Configuration, files: Seq[String],
@@ -80,10 +78,7 @@ object ParquetStats {
         }
         buf.toSeq
       } else Seq(p)
-    files.map { f =>
-      val r = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
-      try r.getFooter.getBlocks.asScala.map(_.getRowCount).sum
-      finally r.close()
-    }.sum
+    files.map(f => DistributedRewrite.readFooter(conf, f)
+      .getBlocks.asScala.map(_.getRowCount).sum).sum
   }
 }

@@ -9,7 +9,11 @@ import org.apache.spark.sql.functions._
   * model fitting (driver-sequenced Lloyd/GD/BPE rounds), codegen, or
   * the scoring scan before touching anything. Not part of the gate —
   * `runMain graft.tools.PerfProbe [probe ...]` with the Bench env
-  * (`SPARK_GRAFT_SF_DIR`); no args = all probes. */
+  * (`SPARK_GRAFT_SF_DIR`); no args = all probes.
+  *
+  * Probes: `classifier`, `ivfpq`, `ivfpqsteps` (the steps inside
+  * IvfPq.train), `bpe`, `kmeans`, `jaccard` (the q29 pipeline's
+  * stages), and `dump` (exact model values for before/after diffs). */
 object PerfProbe {
 
   private def time[A](name: String)(f: => A): A = {
@@ -21,10 +25,9 @@ object PerfProbe {
   }
 
   def main(args: Array[String]): Unit = {
-    // machine-readable output contract (★r19 default-locale
-    // sweep): the f"" interpolator formats through the JVM DEFAULT
-    // locale, so a comma-decimal locale (de-DE, tr-TR) would emit
-    // "1,234" into the JSON lines the driver parses
+    // machine-readable output contract: the f"" interpolator formats
+    // through the JVM DEFAULT locale, so a comma-decimal locale (de-DE,
+    // tr-TR) would emit "1,234" into the lines a caller parses
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -65,7 +68,7 @@ object PerfProbe {
     }
     if (on("ivfpqsteps")) {
       import graft.llm.{Clustering, IvfPq, Pq, Similarity}
-      // stage attribution INSIDE IvfPq.train (★r21): which of the
+      // stage attribution INSIDE IvfPq.train: which of the
       // driver-sequenced steps carries the cost — dimension probe,
       // seed sample, coarse Lloyd rounds, or the residual PQ fit.
       (1 to 2).foreach { round =>
@@ -84,178 +87,6 @@ object PerfProbe {
           Pq.trainPrefilteredForProbe(resid, "vec_id", "embedding",
             4, 8, 3, d) }
       }
-    }
-    if (on("forgettask")) {
-      // per-object cost attribution of the forget rewrite task body
-      // (★r21): stage ONE small lineitem object, then loop the task's
-      // phases sequentially (no Spark job) — footer read, record
-      // transcode, commit+marker — so the soak rungs' per-object cpu
-      // has a phase budget.
-      import graft.catalog.TableDef
-      import graft.find.Finder
-      import graft.forget.DistributedRewrite
-      import graft.model._
-      import org.apache.hadoop.fs.{Path => HPath}
-      val stage = java.nio.file.Files.createTempDirectory("graft-probe-")
-      val li = spark.read.parquet(s"$dir/lineitem.parquet")
-      val master = s"$stage/master"
-      li.limit(600000).repartition(2048).write.mode("overwrite")
-        .parquet(master)
-      val table = TableDef("li", master, DataFormat.Parquet, li.schema)
-      val mapper = DataMapper("li", "li", Seq("l_returnflag"))
-      val groups = Finder.plan(mapper, table,
-        Seq(DeletionQueueItem("q", MatchId.Simple("R"))))
-      val specs = DistributedRewrite.buildSpecs(spark, groups)
-      val conf = spark.sparkContext.hadoopConfiguration
-      val files = java.nio.file.Files.list(java.nio.file.Paths.get(master))
-        .iterator()
-      val buf = scala.collection.mutable.ArrayBuffer.empty[String]
-      while (files.hasNext) {
-        val p = files.next().toString
-        if (p.endsWith(".parquet")) buf += p
-      }
-      val n = math.min(400, buf.size)
-      (1 to 2).foreach { round =>
-        // fresh copies (the rewrite mutates)
-        val work = buf.take(n).zipWithIndex.map { case (f, i) =>
-          val dst = java.nio.file.Paths.get(s"$stage/r$round-$i.parquet")
-          java.nio.file.Files.copy(java.nio.file.Paths.get(f), dst)
-          dst.toString
-        }
-        time(s"forgettask_${n}obj_seq_$round") {
-          work.foreach { f =>
-            DistributedRewrite.probeTaskBody(conf, f, specs)
-          }
-        }
-      }
-      DistributedRewrite.probeTimers.foreach { case (k, v) =>
-        println(f"PROBE   phase $k%-22s ${v / 1e9}%8.3f s")
-      }
-      // ★r22 (ADVICE r21): the standalone `footer` and `reader_only`
-      // phases are ALSO paid again inside `rewrite` (the task body
-      // re-opens the footer and re-scans the records), so the phases
-      // do NOT sum to per-object cost — read `rewrite`+`commit`+
-      // `marker_write` as the task budget and the standalone phases
-      // as isolation probes.
-      println("PROBE   note: footer/reader_only are double-counted " +
-        "inside rewrite; phases do not sum to per-object cost")
-      // poor-man's sampler over the hot phase: histogram the main
-      // thread's deepest interesting frame while footer opens loop
-      val main = Thread.currentThread()
-      val hist = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
-      @volatile var sampling = true
-      val sampler = new Thread(() => {
-        while (sampling) {
-          val st = main.getStackTrace
-          val interesting = st.find(f =>
-            f.getClassName.startsWith("org.apache.parquet") ||
-            f.getClassName.startsWith("org.apache.hadoop") ||
-            f.getClassName.startsWith("java.util.zip") ||
-            f.getClassName.startsWith("sun.nio") ||
-            f.getClassName.startsWith("shaded"))
-          val key = interesting.map(f =>
-            f.getClassName + "." + f.getMethodName).getOrElse(
-            st.drop(2).headOption.map(f =>
-              f.getClassName + "." + f.getMethodName).getOrElse("?"))
-          hist.merge(key, 1, (a, b) => a + b)
-          Thread.sleep(2)
-        }
-      })
-      sampler.setDaemon(true)
-      sampler.start()
-      val f0 = buf.head
-      val probeFile = java.nio.file.Paths.get(s"$stage/sampler.parquet")
-      java.nio.file.Files.copy(java.nio.file.Paths.get(f0), probeFile)
-      time("sampler_4000_footer_opens") {
-        (1 to 4000).foreach { _ =>
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-            DistributedRewrite.probeParquetInput(conf,
-              new HPath(probeFile.toString)))
-          try r.getFooter finally r.close()
-        }
-      }
-      sampling = false
-      sampler.join(200)
-      import scala.jdk.CollectionConverters._
-      hist.asScala.toSeq.sortBy(-_._2).take(15).foreach { case (k, v) =>
-        println(f"PROBE   sample $v%5d  $k")
-      }
-    }
-    if (on("forgetdispatch")) {
-      // paired same-JVM A/B of the forget job's task granularity
-      // (★r22, VERDICT r21 #1): alternate objectsPerTask=1 (the former
-      // one-task-per-object dispatch) and the auto batch size over
-      // fresh staged copies of an N-object table, so the comparison is
-      // immune to machine epoch. `SPARK_GRAFT_PROBE_OBJ` sets N
-      // (default 10240).
-      import graft.catalog.TableDef
-      import graft.find.Finder
-      import graft.forget.DistributedRewrite
-      import graft.model._
-      val nObj = sys.env.getOrElse("SPARK_GRAFT_PROBE_OBJ", "10240").toInt
-      val stage = java.nio.file.Files.createTempDirectory("graft-dispatch-")
-      val li = spark.read.parquet(s"$dir/lineitem.parquet")
-      val master = s"$stage/master"
-      li.repartition(nObj).write.mode("overwrite").parquet(master)
-      val table = TableDef("li", master, DataFormat.Parquet, li.schema)
-      val groups = Finder.plan(DataMapper("li", "li", Seq("l_returnflag")),
-        table, Seq(DeletionQueueItem("q", MatchId.Simple("R"))))
-      val matched = Finder.matchedFiles(spark,
-          spark.read.parquet(master), groups).collect()
-        .map(r => new java.io.File(
-          graft.forget.Forget.stripScheme(r.getString(0))).getName).toSet
-      def listPq(d: String): Seq[String] = {
-        val s = java.nio.file.Files.list(java.nio.file.Paths.get(d))
-        try {
-          val it = s.iterator()
-          val buf = scala.collection.mutable.ArrayBuffer.empty[String]
-          while (it.hasNext) {
-            val p = it.next().toString
-            if (p.endsWith(".parquet")) buf += p
-          }
-          buf.toSeq
-        } finally s.close()
-      }
-      def copyDir(src: String, dst: String): Unit = {
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dst))
-        val s = java.nio.file.Files.list(java.nio.file.Paths.get(src))
-        try {
-          val it = s.iterator()
-          while (it.hasNext) {
-            val p = it.next()
-            if (java.nio.file.Files.isRegularFile(p))
-              java.nio.file.Files.copy(p,
-                java.nio.file.Paths.get(dst, p.getFileName.toString))
-          }
-        } finally s.close()
-      }
-      val osBean = java.lang.management.ManagementFactory
-        .getOperatingSystemMXBean
-        .asInstanceOf[com.sun.management.OperatingSystemMXBean]
-      var runNo = 0
-      def once(k: String): Unit = {
-        runNo += 1
-        val d = s"$stage/run-$runNo/lineitem"
-        copyDir(master, d)
-        if (k.isEmpty) spark.conf.unset("graft.forget.objectsPerTask")
-        else spark.conf.set("graft.forget.objectsPerTask", k)
-        val units = listPq(d)
-          .filter(p => matched(new java.io.File(p).getName))
-          .map(f => ObjectWorkUnit(s"probe-$runNo", f, "li",
-            DataFormat.Parquet, true))
-        val c0 = osBean.getProcessCpuTime
-        val t0 = System.nanoTime()
-        val events = DistributedRewrite.run(spark, s"probe-$runNo",
-          units, groups)
-        val wall = (System.nanoTime() - t0) / 1e9
-        val cpu = (osBean.getProcessCpuTime - c0) / 1e9
-        val okN = events.count(_.eventName == JobEventName.ObjectUpdated)
-        val kLbl = if (k.isEmpty) "auto" else k
-        println(f"PROBE forgetdispatch_${nObj}obj_k$kLbl%-5s " +
-          f"wall $wall%8.3f s  cpu $cpu%8.3f s  ok $okN")
-      }
-      once("1") // warmup, discard ordering effects
-      Seq("1", "", "1", "", "1", "").foreach(once)
     }
     if (on("bpe")) {
       val merges = time("bpe_learn_cold") {
@@ -298,11 +129,9 @@ object PerfProbe {
       time("jaccard_exact_warm") {
         graft.llm.Dedup.jaccardPairsExact(docs, "doc_id", "text",
           shingleLen = 16, threshold = 0.8).count() }
-      // stage attribution for the q29 pipeline (★r18): candidates
-      // WITHOUT the exact-verify stage vs the full pipeline — the
-      // difference prices the per-pair string re-shingling the verify
-      // UDF pays, the piece VERDICT r17 #1 asks to reconcile with the
-      // 8 s budget.
+      // stage attribution for the q29 pipeline: candidates WITHOUT the
+      // exact-verify stage vs the full pipeline — the difference prices
+      // the per-pair string re-shingling the verify UDF pays.
       time("jaccard_census_only") {
         graft.llm.Dedup.censusForProbe(docs, "text", 16) }
       time("jaccard_prefix_index") {

@@ -98,12 +98,12 @@ class ApiSpec extends SparkSpec {
     val api = new GraftApi(spark)
     assert(api.listSettings == JobSettings()) // defaults listed
     api.putSettings(JobSettings(findQueryMaxRetries = 5,
-      deletionTasksMaxNumber = 4, jobDetailsRetentionDays = 30))
+      findConcurrencyLimit = 4, jobDetailsRetentionDays = 30))
     assert(api.listSettings.findQueryMaxRetries == 5)
     intercept[IllegalArgumentException] {
-      api.putSettings(JobSettings(deletionTasksMaxNumber = 0))
+      api.putSettings(JobSettings(findConcurrencyLimit = 0))
     }
-    assert(api.listSettings.deletionTasksMaxNumber == 4) // rejected put kept old
+    assert(api.listSettings.findConcurrencyLimit == 4) // rejected put kept old
     // snapshot: the job carries the settings at start
     val (_, table) = freshLake()
     api.putDataMapper(DataMapper("m1", "t", Seq("customer_id")), table)

@@ -3,6 +3,8 @@ package graft.driver
 import graft.SparkSpec
 import graft.catalog.TableDef
 import graft.model._
+import org.apache.spark.sql.functions.{col, struct}
+import scala.jdk.CollectionConverters._
 
 /** Driver orchestration semantics: phase-event ordering, fail-fast on a
   * broken Find query (work_query_queue.py:37-46: finish nothing more,
@@ -365,5 +367,68 @@ class JobRunnerSpec extends SparkSpec {
         JobRunner.readTable(spark, t), groups).count() == 0,
         s"$mid survivors")
     }
+  }
+
+  /** A parquet lake of three objects with a nested identifier
+    * (`user.id`), written one object per append so the test knows which
+    * ids each object holds. Returns the table and the object holding
+    * each batch, in write order. */
+  private def nestedLake(): (TableDef, Seq[String]) = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-jrn-").toString
+    val loc = s"$dir/t"
+    def objects(): Set[String] = {
+      val f = new java.io.File(loc)
+      if (!f.exists()) Set.empty
+      else f.listFiles().map(_.getPath).filter(_.endsWith(".parquet")).toSet
+    }
+    val written = Seq(Seq(1L, 2L), Seq(3L, 4L), Seq(5L, 6L)).map { ids =>
+      val before = objects()
+      ids.map(i => (i, s"name$i", s"payload-$i" * 20))
+        .toDF("id", "name", "payload")
+        .select(struct(col("id"), col("name")).as("user"), col("payload"))
+        .coalesce(1).write.mode("append").parquet(loc)
+      val added = objects() -- before
+      assert(added.size == 1, added)
+      added.head
+    }
+    (TableDef("t", loc, DataFormat.Parquet, spark.read.parquet(loc).schema),
+      written)
+  }
+
+  test("Find reports the identifier column-chunk bytes of every " +
+    "matched object (nested identifier path)") {
+    val (table, objs) = nestedLake()
+    // ids 1 and 3 live in the first two objects; sum their `user.id`
+    // chunk sizes straight from the footers, before Forget rewrites them
+    val conf = new org.apache.hadoop.conf.Configuration()
+    val (want, whole) = objs.take(2).map { f =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(f), conf))
+      try {
+        val chunks = r.getFooter.getBlocks.asScala.toSeq
+          .flatMap(_.getColumns.asScala)
+        (chunks.filter(_.getPath.toDotString == "user.id")
+          .map(_.getTotalSize).sum, chunks.map(_.getTotalSize).sum)
+      } finally r.close()
+    }.unzip match { case (a, b) => (a.sum, b.sum) }
+    assert(want > 0 && want < whole, s"want=$want whole=$whole")
+    val run = JobRunner.run(spark, "jrb",
+      Seq(DataMapper("m", "t", Seq("user.id")) -> table),
+      Seq(DeletionQueueItem("q1", MatchId.Simple("1")),
+        DeletionQueueItem("q3", MatchId.Simple("3"))))
+    assert(run.state.status == JobStatus.Completed, run.state.status)
+    assert(run.foundPaths("m").size == 2)
+    val reported = run.events
+      .filter(_.eventName == JobEventName.QuerySucceeded).map(_.bytesScanned)
+    assert(reported == Seq(want))
+  }
+
+  test("ParquetStats.rowCount of a multi-object directory equals " +
+    "Spark's count") {
+    val (table, _) = nestedLake() // three objects
+    assert(graft.tools.ParquetStats.rowCount(
+      spark.sparkContext.hadoopConfiguration, table.location) ==
+      spark.read.parquet(table.location).count())
   }
 }

@@ -4,12 +4,12 @@ import graft.SparkSpec
 import graft.catalog.TableDef
 import graft.find.Finder
 import graft.model._
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
-/** Parquet Forget semantics on BOTH backends — the driver-side
-  * [[Forget.rewriteParquet]] (spark.write) and the task-side
-  * [[DistributedRewrite]] (parquet-mr Group I/O) — porting the reference
+/** Parquet Forget semantics of the task-side [[DistributedRewrite]]
+  * (parquet-mr Group I/O), each rewrite checked against the
+  * DataFrame-filter oracle [[Finder.survivors]] — porting the reference
   * edge inventory from tests/unit/ecs_tasks/test_parquet.py (:77 correct
   * rows, :111 lower-cased columns, :151 struct types, :180-:254 composite
   * variants, :319-:372 decimals) plus the engine invariants (zero-deletion,
@@ -23,36 +23,33 @@ class ForgetSpec extends SparkSpec {
     Finder.plan(DataMapper("m", "t", cols),
       TableDef("t", "", DataFormat.Parquet, d.schema), queue)
 
-  /** Run one file through a backend; returns (survivorDf, processed,
-    * deleted). */
-  private def rewrite(file: String, groups: Seq[Finder.GroupMatches],
-                      distributed: Boolean): (DataFrame, Long, Long) = {
-    if (distributed) {
-      val events = DistributedRewrite.run(spark, "j",
-        Seq(ObjectWorkUnit("j", file, "m", DataFormat.Parquet, true)), groups)
-      assert(events.map(_.eventName) == Seq(JobEventName.ObjectUpdated),
-        s"unexpected events: $events")
-      (spark.read.parquet(file),
-        events.head.statsProcessed, events.head.statsDeleted)
-    } else {
-      val r = Forget.rewriteParquet(spark, file, groups)
-      (spark.read.parquet(file), r.processedRows, r.deletedRows)
-    }
-  }
+  private def sortedRows(df: DataFrame): Seq[Row] =
+    df.collect().toSeq.sortBy(_.toString)
 
-  private def bothBackends(name: String)(body: Boolean => Unit): Unit = {
-    test(s"$name [driver]")(body(false))
-    test(s"$name [distributed]")(body(true))
+  /** Run one file through [[DistributedRewrite]]; returns (survivorDf,
+    * processed, deleted). The rewritten object must hold exactly the
+    * rows [[Finder.survivors]] keeps of the original. */
+  private def rewrite(file: String, groups: Seq[Finder.GroupMatches])
+      : (DataFrame, Long, Long) = {
+    val expected =
+      sortedRows(Finder.survivors(spark, spark.read.parquet(file), groups))
+    val events = DistributedRewrite.run(spark, "j",
+      Seq(ObjectWorkUnit("j", file, "m", DataFormat.Parquet, true)), groups)
+    assert(events.map(_.eventName) == Seq(JobEventName.ObjectUpdated),
+      s"unexpected events: $events")
+    val out = spark.read.parquet(file)
+    assert(sortedRows(out) == expected, "rewrite disagrees with the oracle")
+    (out, events.head.statsProcessed, events.head.statsDeleted)
   }
 
   // ---- test_parquet.py:77 — delete correct rows ---------------------
 
-  bothBackends("deletes exactly the matching rows") { dist =>
+  test("deletes exactly the matching rows [distributed]") {
     val d = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("customer_id", "x")
     val file = stageParquetFile(d)
     val groups = plan(d, Seq("customer_id"),
       Seq(DeletionQueueItem("q", MatchId.Simple("2"))))
-    val (out, processed, deleted) = rewrite(file, groups, dist)
+    val (out, processed, deleted) = rewrite(file, groups)
     assert((processed, deleted) == (3L, 1L))
     assert(out.select("customer_id").as[Long].collect().sorted.toSeq ==
       Seq(1L, 3L))
@@ -60,19 +57,19 @@ class ForgetSpec extends SparkSpec {
 
   // ---- test_parquet.py:111 — lower-cased (mismatched-case) columns --
 
-  bothBackends("column lookup is case-insensitive") { dist =>
+  test("column lookup is case-insensitive [distributed]") {
     val d = Seq((1L, "a"), (2L, "b")).toDF("customerId", "x")
     val file = stageParquetFile(d)
     val groups = plan(d, Seq("CUSTOMERID"),
       Seq(DeletionQueueItem("q", MatchId.Simple("1"))))
-    val (out, _, deleted) = rewrite(file, groups, dist)
+    val (out, _, deleted) = rewrite(file, groups)
     assert(deleted == 1L)
     assert(out.select("customerId").as[Long].collect().toSeq == Seq(2L))
   }
 
   // ---- test_parquet.py:151 — complex (struct) types -----------------
 
-  bothBackends("deletes rows matched through nested struct dot paths") { dist =>
+  test("deletes rows matched through nested struct dot paths [distributed]") {
     val d = spark.read.json(Seq(
       """{"id":1,"user":{"info":{"email":"x@y.z"},"age":30}}""",
       """{"id":2,"user":{"info":{"email":"a@b.c"},"age":40}}""",
@@ -80,14 +77,14 @@ class ForgetSpec extends SparkSpec {
     val file = stageParquetFile(d)
     val groups = plan(d, Seq("user.info.email"),
       Seq(DeletionQueueItem("q", MatchId.Simple("x@y.z"))))
-    val (out, processed, deleted) = rewrite(file, groups, dist)
+    val (out, processed, deleted) = rewrite(file, groups)
     assert((processed, deleted) == (3L, 1L))
     assert(out.select("id").as[Long].collect().sorted.toSeq == Seq(2L, 3L))
   }
 
   // ---- test_parquet.py:180,:208,:230,:254 — composite variants ------
 
-  bothBackends("composite match deletes only full-tuple matches") { dist =>
+  test("composite match deletes only full-tuple matches [distributed]") {
     val d = Seq(("john", "doe", 1L), ("john", "smith", 2L),
       ("jane", "doe", 3L)).toDF("first_name", "last_name", "n")
     val file = stageParquetFile(d)
@@ -95,24 +92,24 @@ class ForgetSpec extends SparkSpec {
       Seq(DeletionQueueItem("q", MatchId.Composite(
         Map("first_name" -> "john", "last_name" -> "doe")),
         dataMappers = Seq("m"))))
-    val (out, _, deleted) = rewrite(file, groups, dist)
+    val (out, _, deleted) = rewrite(file, groups)
     assert(deleted == 1L)
     assert(out.select("n").as[Long].collect().sorted.toSeq == Seq(2L, 3L))
   }
 
-  bothBackends("single-column composite behaves like a scoped simple") { dist =>
+  test("single-column composite behaves like a scoped simple [distributed]") {
     val d = Seq(("john", 1L), ("jane", 2L)).toDF("first_name", "n")
     val file = stageParquetFile(d)
     val groups = plan(d, Seq("first_name"),
       Seq(DeletionQueueItem("q",
         MatchId.Composite(Map("first_name" -> "jane")),
         dataMappers = Seq("m"))))
-    val (out, _, deleted) = rewrite(file, groups, dist)
+    val (out, _, deleted) = rewrite(file, groups)
     assert(deleted == 1L)
     assert(out.select("n").as[Long].collect().toSeq == Seq(1L))
   }
 
-  bothBackends("composite over nested struct paths") { dist =>
+  test("composite over nested struct paths [distributed]") {
     val d = spark.read.json(Seq(
       """{"n":1,"user":{"first":"john","last":"doe"}}""",
       """{"n":2,"user":{"first":"john","last":"smith"}}""").toDS)
@@ -121,38 +118,39 @@ class ForgetSpec extends SparkSpec {
       Seq(DeletionQueueItem("q", MatchId.Composite(
         Map("user.first" -> "john", "user.last" -> "doe")),
         dataMappers = Seq("m"))))
-    val (out, _, deleted) = rewrite(file, groups, dist)
+    val (out, _, deleted) = rewrite(file, groups)
     assert(deleted == 1L)
     assert(out.select("n").as[Long].collect().toSeq == Seq(2L))
   }
 
   // ---- test_parquet.py:319-:372 — decimal handling ------------------
 
-  bothBackends("decimal match ids coerce to column scale (int64-backed)") { dist =>
+  test("decimal match ids coerce to column scale (int64-backed) " +
+    "[distributed]") {
     val d = Seq((1L, "12.34"), (2L, "56.70"), (3L, "99.99"))
       .toDF("id", "s")
       .withColumn("bal", col("s").cast("decimal(12,2)")).drop("s")
     val file = stageParquetFile(d)
     val groups = plan(d, Seq("bal"),
       Seq(DeletionQueueItem("q", MatchId.Simple("56.7"))))
-    val (out, _, deleted) = rewrite(file, groups, dist)
+    val (out, _, deleted) = rewrite(file, groups)
     assert(deleted == 1L)
     assert(out.select("id").as[Long].collect().sorted.toSeq == Seq(1L, 3L))
   }
 
-  bothBackends("wide decimals (binary-backed, precision>18) match") { dist =>
+  test("wide decimals (binary-backed, precision>18) match [distributed]") {
     val d = Seq((1L, "123456789012345.6789"), (2L, "5.5"))
       .toDF("id", "s")
       .withColumn("bal", col("s").cast("decimal(38,4)")).drop("s")
     val file = stageParquetFile(d)
     val groups = plan(d, Seq("bal"),
       Seq(DeletionQueueItem("q", MatchId.Simple("123456789012345.6789"))))
-    val (out, _, deleted) = rewrite(file, groups, dist)
+    val (out, _, deleted) = rewrite(file, groups)
     assert(deleted == 1L)
     assert(out.select("id").as[Long].collect().toSeq == Seq(2L))
   }
 
-  bothBackends("decimal component inside a composite coerces too") { dist =>
+  test("decimal component inside a composite coerces too [distributed]") {
     val d = Seq((1L, "a", "12.34"), (2L, "a", "99.99"))
       .toDF("id", "k", "s")
       .withColumn("bal", col("s").cast("decimal(12,2)")).drop("s")
@@ -160,25 +158,25 @@ class ForgetSpec extends SparkSpec {
     val groups = plan(d, Seq("k", "bal"),
       Seq(DeletionQueueItem("q", MatchId.Composite(
         Map("k" -> "a", "bal" -> "12.340")), dataMappers = Seq("m"))))
-    val (out, _, deleted) = rewrite(file, groups, dist)
+    val (out, _, deleted) = rewrite(file, groups)
     assert(deleted == 1L)
     assert(out.select("id").as[Long].collect().toSeq == Seq(2L))
   }
 
   // ---- engine invariants --------------------------------------------
 
-  bothBackends("null identifier rows always survive") { dist =>
+  test("null identifier rows always survive [distributed]") {
     val d = Seq((Some(1L), "a"), (None, "b"), (Some(2L), "c"))
       .toDF("id", "x")
     val file = stageParquetFile(d)
     val groups = plan(d, Seq("id"),
       Seq(DeletionQueueItem("q", MatchId.Simple("1"))))
-    val (out, processed, deleted) = rewrite(file, groups, dist)
+    val (out, processed, deleted) = rewrite(file, groups)
     assert((processed, deleted) == (3L, 1L))
     assert(out.select("x").as[String].collect().sorted.toSeq == Seq("b", "c"))
   }
 
-  bothBackends("schema is preserved by the rewrite") { dist =>
+  test("schema is preserved by the rewrite [distributed]") {
     val d = Seq((1L, "a", 1.5, true)).toDF("id", "s", "d", "b")
       .withColumn("dec", col("d").cast("decimal(10,3)"))
       .withColumn("arr", array(lit(1), lit(2)))
@@ -189,7 +187,7 @@ class ForgetSpec extends SparkSpec {
     val before = spark.read.parquet(file).schema
     val groups = plan(withMatch, Seq("id"),
       Seq(DeletionQueueItem("q", MatchId.Simple("2"))))
-    val (out, _, _) = rewrite(file, groups, dist)
+    val (out, _, _) = rewrite(file, groups)
     assert(out.schema == before)
     assert(out.count() == 1)
   }
@@ -206,17 +204,9 @@ class ForgetSpec extends SparkSpec {
     val groups = plan(d, Seq("id"), Seq(
       DeletionQueueItem("a", MatchId.Simple("5")),
       DeletionQueueItem("b", MatchId.Simple("1999"))))
-    val (out, processed, deleted) = rewrite(file, groups, distributed = true)
+    val (out, processed, deleted) = rewrite(file, groups)
     assert((processed, deleted) == (2000L, 2L))
     assert(out.count() == 1998)
-  }
-
-  test("zero-deletion on a found object is an error (driver backend)") {
-    val d = Seq((1L, "a")).toDF("id", "x")
-    val file = stageParquetFile(d)
-    val groups = plan(d, Seq("id"),
-      Seq(DeletionQueueItem("q", MatchId.Simple("999"))))
-    intercept[ZeroDeletionError](Forget.rewriteParquet(spark, file, groups))
   }
 
   test("zero-deletion emits ObjectUpdateFailed (distributed backend)") {
@@ -245,17 +235,6 @@ class ForgetSpec extends SparkSpec {
     assert(skipped.map(_.eventName) == Seq(JobEventName.ObjectUpdateSkipped))
     val failed = DistributedRewrite.run(spark, "j", Seq(unit(false)), groups)
     assert(failed.map(_.eventName) == Seq(JobEventName.ObjectUpdateFailed))
-  }
-
-  test("driver-pool Forget.run also skips missing objects with the flag") {
-    val d = Seq((1L, "a")).toDF("id", "x")
-    val table = graft.catalog.TableDef("t", "", DataFormat.Parquet, d.schema)
-    val groups = Finder.plan(DataMapper("m", "t", Seq("id")), table,
-      Seq(DeletionQueueItem("q", MatchId.Simple("1"))))
-    val events = Forget.run(spark, "j", Seq(
-      ObjectWorkUnit("j", "/nope/missing.parquet", "m", DataFormat.Parquet,
-        deleteOldVersions = true, ignoreObjectNotFound = true)), groups)
-    assert(events.map(_.eventName) == Seq(JobEventName.ObjectUpdateSkipped))
   }
 
   test("CatalogPartitions enumerates hive partition combinations (S4) " +
@@ -300,7 +279,7 @@ class ForgetSpec extends SparkSpec {
       == Seq(Map("p1" -> "a/b:c")))
   }
 
-  // ---- unsigned parquet logical types (ADVICE r3: task must widen
+  // ---- unsigned parquet logical types (the task must widen
   // UINT32/UINT64 like Spark's reader, or upper-range ids match in Find
   // but not in the rewrite) ------------------------------------------
 
@@ -346,7 +325,7 @@ class ForgetSpec extends SparkSpec {
     assert(d.where(col("u32") === 4294967295L).count() == 1)
     val groups = plan(d, Seq("u32"),
       Seq(DeletionQueueItem("q", MatchId.Simple("4294967295"))))
-    val (out, processed, deleted) = rewrite(file, groups, distributed = true)
+    val (out, processed, deleted) = rewrite(file, groups)
     assert((processed, deleted) == (2L, 1L))
     assert(out.select("x").as[String].collect().toSeq == Seq("small"))
   }
@@ -361,12 +340,12 @@ class ForgetSpec extends SparkSpec {
     assert(d.where(col("u64") === new java.math.BigDecimal(big)).count() == 1)
     val groups = plan(d, Seq("u64"),
       Seq(DeletionQueueItem("q", MatchId.Simple(big))))
-    val (out, processed, deleted) = rewrite(file, groups, distributed = true)
+    val (out, processed, deleted) = rewrite(file, groups)
     assert((processed, deleted) == (2L, 1L))
     assert(out.select("x").as[String].collect().toSeq == Seq("small"))
   }
 
-  // ---- task idempotency under retry/speculation (ADVICE r3) ---------
+  // ---- task idempotency under retry/speculation --------------------
 
   test("a retry whose predecessor already committed replays the marker " +
     "outcome instead of failing with ZeroDeletionError") {
@@ -413,7 +392,7 @@ class ForgetSpec extends SparkSpec {
     val file = stageParquetFile(d)
     val groups = plan(d, Seq("f"),
       Seq(DeletionQueueItem("q", MatchId.Simple("NaN"))))
-    val (out, _, deleted) = rewrite(file, groups, distributed = true)
+    val (out, _, deleted) = rewrite(file, groups)
     assert(deleted == 1L)
     assert(out.select("id").as[Long].collect().toSeq == Seq(1L))
   }
