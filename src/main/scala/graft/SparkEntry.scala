@@ -1797,8 +1797,8 @@ object SparkEntry {
     // LLM §text-analysis — per-doc n-gram NOVELTY profile (the
     // complement of q95's duplication coverage): distinct 8-gram
     // count, corpus-unique (df=1) gram count, and their micro ratio.
-    // The df=1 filter runs BEFORE the join back, so the join has no
-    // hot keys by construction.
+    // The (doc, gram) rows explode and shuffle once; a df=1 gram's
+    // holder rides the gram aggregation, so no gram rows are joined.
     "q110_gram_novelty" -> ((s, dir) =>
       graft.llm.TextStats.gramNovelty(t(s, dir, "documents"),
         "doc_id", "text", n = 8)),
@@ -2349,7 +2349,9 @@ object SparkEntry {
     * same parity-by-construction move as q42 (detector regexes) and
     * q48 (MD5 preimages). Learning is deterministic (lexicographic
     * argmax tie-break, spec-pinned), so this re-learn yields the
-    * identical list the q54 entry used. */
+    * identical list the q54 entry used. q04/q27 read a file directly,
+    * so their oracles name the objects of THIS run: `dir`'s lineitem
+    * and the [[graft.catalog.Staging]] JSON-lines copy. */
   // q120/q121's stored-fingerprint collections (one (id, dhash) tuple
   // per document — bounded by the gate corpus): collected from the
   // SAME stored artifact the entries band (★r19), so the oracle
@@ -2400,6 +2402,13 @@ object SparkEntry {
     // gate flag; deterministic re-learn otherwise)
     val centroids = kmeansCentroids(s, dir)
     Map(
+      // the two oracles that read a file directly: this run's lineitem
+      // object and the JSON-lines copy the q27 entry staged
+      "q04_find_files" -> findFilesOracleSql(
+        java.nio.file.Paths.get(dir, "lineitem.parquet").toAbsolutePath
+          .normalize.toString),
+      "q27_json_scan" -> jsonScanOracleSql(
+        graft.catalog.Staging.jsonCustomerFile(dir)),
       // banding + Hamming replay over the SAME collected fingerprints
       // the entries banded (decode stays engine-side — q54 parity)
       "q120_image_near_dedup" -> fingerprintPairsOracleSql(
@@ -2479,12 +2488,31 @@ object SparkEntry {
         kRrf = 60, scale = 1000000000L, k = 10))
   }
 
+  /** `s` as a SQL string literal. */
+  private def sq(s: String): String = "'" + s.replace("'", "''") + "'"
+
+  /** q04's oracle over the lineitem object at `file`. */
+  private def findFilesOracleSql(file: String): String =
+    s"""SELECT regexp_extract(filename, '[^/]+$$', 0) AS file_name,
+      | COUNT(*) AS n_rows, COUNT(DISTINCT l_orderkey) AS n_keys
+      | FROM parquet_scan(${sq(file)}, filename=true)
+      | WHERE CAST(l_orderkey AS VARCHAR) IN ('7','23','99')
+      | GROUP BY 1""".stripMargin.replace("\n", " ")
+
+  /** q27's oracle over the staged JSON-lines object at `file`. */
+  private def jsonScanOracleSql(file: String): String =
+    s"""SELECT c_custkey, c_name, c_nationkey,
+      | CAST(c_acctbal AS DOUBLE) AS c_acctbal_dbl, c_mktsegment
+      | FROM read_json_auto(${sq(file)})
+      | WHERE CAST(c_custkey AS VARCHAR) IN ('7','23','99')
+      |    OR CAST(c_nationkey AS VARCHAR) IN ('7','23','99')"""
+      .stripMargin.replace("\n", " ")
+
   /** q97's oracle: [[graft.llm.Bpe.encodeOracleSql]]'s word-level
     * merge replay (vocabulary-sized) producing per-doc BPE counts,
     * feeding q37's prefix-sum pack window verbatim (seqLen 256). */
   private def tokenizePackOracleSql(
       merges: Seq[graft.llm.Bpe.Merge]): String = {
-    def sq(s: String) = "'" + s.replace("'", "''") + "'"
     val wrapped = merges.foldLeft(
       "regexp_replace(w, '(.)', ' \\1 ', 'g')") { (acc, m) =>
       s"replace($acc, ${sq(" " + m.a + "  " + m.b + " ")}," +
@@ -2594,12 +2622,6 @@ object SparkEntry {
       """SELECT doc_id, LENGTH(text) AS text_chars,
         | LENGTH(text) - LENGTH(REPLACE(text, ' ', '')) AS n_spaces
         | FROM documents""".stripMargin.replace("\n", " "),
-    "q04_find_files" ->
-      """SELECT regexp_extract(filename, '[^/]+$', 0) AS file_name,
-        | COUNT(*) AS n_rows, COUNT(DISTINCT l_orderkey) AS n_keys
-        | FROM parquet_scan('/root/testdata/sf0.01/lineitem.parquet', filename=true)
-        | WHERE CAST(l_orderkey AS VARCHAR) IN ('7','23','99')
-        | GROUP BY 1""".stripMargin.replace("\n", " "),
     "q18_find_dup" ->
       """SELECT c_custkey, c_name, c_nationkey, c_acctbal, c_mktsegment
         | FROM (SELECT * FROM customer UNION ALL SELECT * FROM customer)
@@ -2774,14 +2796,6 @@ object SparkEntry {
         |    AS n_frames,
         |  CAST(octet_length(encode(text)) AS BIGINT) AS frame_bytes
         | FROM documents""".stripMargin.replace("\n", " "),
-    "q27_json_scan" ->
-      """SELECT c_custkey, c_name, c_nationkey,
-        | CAST(c_acctbal AS DOUBLE) AS c_acctbal_dbl, c_mktsegment
-        | FROM read_json_auto(
-        |  '/tmp/graft-staged/sf0.01/customer_json/customer.json')
-        | WHERE CAST(c_custkey AS VARCHAR) IN ('7','23','99')
-        |    OR CAST(c_nationkey AS VARCHAR) IN ('7','23','99')"""
-        .stripMargin.replace("\n", " "),
     "q28_cos_pairs" ->
       """SELECT a.vec_id AS id_a, b.vec_id AS id_b,
         | list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),

@@ -30,10 +30,8 @@ object Staging {
     * storage format). Returns the file path. */
   def jsonCustomer(spark: SparkSession, sfDir: String): String =
     synchronized {
-      val sfName = Paths.get(sfDir).getFileName.toString
-      val dir = s"${sys.props("java.io.tmpdir")}/graft-staged/$sfName/" +
-        "customer_json"
-      val file = s"$dir/customer.json"
+      val file = jsonCustomerFile(sfDir)
+      val dir = Paths.get(file).getParent.toString
       if (!Files.exists(Paths.get(file))) {
         spark.read.parquet(s"$sfDir/customer.parquet")
           .orderBy("c_custkey")
@@ -50,4 +48,12 @@ object Staging {
       }
       file
     }
+
+  /** Where [[jsonCustomer]] stages the object for `sfDir`; stages
+    * nothing itself. */
+  def jsonCustomerFile(sfDir: String): String = {
+    val sfName = Paths.get(sfDir).getFileName.toString
+    s"${sys.props("java.io.tmpdir")}/graft-staged/$sfName/customer_json/" +
+      "customer.json"
+  }
 }

@@ -543,8 +543,8 @@ object Dedup {
     * key's full entry list; its size is what caps a task's
     * enumeration). Output: (_g, _ns, _salt, load) with the SAME salt
     * assignment as [[selfJoinCandidates]]'s left side. The
-    * adversarial-skew soak asserts max(load) stays ~saltBlock no
-    * matter how hot the planted key is (★r19, VERDICT r18 #4). */
+    * adversarial-skew soak ([[graft.tools.DedupSoak]]) asserts
+    * max(load) stays ~saltBlock however hot the planted key is. */
   private[graft] def saltLoadForProbe(df: DataFrame, idCol: String,
                                       textCol: String, shingleLen: Int,
                                       threshold: Double,
@@ -954,6 +954,13 @@ object Dedup {
     * edge frame to the checkpoint dir and a lost executor recomputes
     * from there instead of failing the operator.)
     *
+    * Termination: the loop stops once the checkpointed edge set is a
+    * STAR FOREST (no node is the src of two edges or both a src and a
+    * dst), tested on the initial edges and after every round. A
+    * distinct, strictly oriented star forest is a fixpoint of
+    * large-star/small-star and IS the output contract (one edge per
+    * member, to its component minimum), so no round confirms it.
+    *
     * Output: (<aCol>, cluster_id) — one row per id that appears in at
     * least one pair (singletons never enter a pair frame), cluster_id =
     * min id of its component. Works for any orderable id type.
@@ -974,10 +981,10 @@ object Dedup {
       reliableCheckpoint)._1
 
   /** [[duplicateClusters]] plus the number of large-star/small-star
-    * rounds it took to converge (the loop is eager — each round ends in
-    * a driver-side signature — so the count is exact, not an estimate).
-    * O(log n) rounds is the scale guarantee; soak harnesses assert it
-    * stays flat as the corpus grows ([[graft.tools.DedupSoak]]). */
+    * rounds run before the edge set was a star forest (exact: each
+    * round ends in the driver-side star-forest test; a star-forest
+    * input reports 0). O(log n) rounds is the scale guarantee; soak
+    * harnesses assert it stays flat as the corpus grows ([[graft.tools.DedupSoak]]). */
   def duplicateClustersWithRounds(pairs: DataFrame, aCol: String,
                                   bCol: String, maxIter: Int = 64,
                                   reliableCheckpoint: Boolean = false)
@@ -993,30 +1000,24 @@ object Dedup {
     // LOOP INVARIANT: `edges` is distinct and strictly ORIENTED
     // (src > dst). The symmetric neighbor list each large-star needs is
     // then a plain union with the reversed frame — the two orientations
-    // are disjoint by construction, so no per-round distinct shuffle is
-    // spent re-deduplicating it (it used to be the round's 4th wide
-    // exchange; the small-star output already satisfies the invariant).
+    // are disjoint by construction, so the union needs no distinct
+    // shuffle (the small-star output already satisfies the invariant).
     var edges = pairs
       .select(greatest(col(aCol), col(bCol)).as("src"),
         least(col(aCol), col(bCol)).as("dst"))
       .filter(col("src") =!= col("dst"))
       .distinct()
     edges = cp(edges)
-    // order-independent edge-set signature: (count, sum of per-edge
-    // 64-bit hashes, accumulated in decimal(38,0) — a raw long sum
-    // overflows under ANSI mode). Equal signatures gate a single EXACT
-    // except-confirm — two anti-join jobs total per call instead of two
-    // per round.
-    def signature(e: DataFrame): (Long, java.math.BigDecimal) = {
-      val r = e.agg(count(lit(1)),
-        sum(xxhash64(col("src"), col("dst"))
-          .cast(org.apache.spark.sql.types.DecimalType(38, 0))))
-        .collect()(0)
-      (r.getLong(0),
-        if (r.isNullAt(1)) java.math.BigDecimal.ZERO else r.getDecimal(1))
-    }
-    var edgeSig = signature(edges)
-    var converged = false
+    // the star-forest test: one aggregation over (node, is_src, is_dst)
+    def starForest(e: DataFrame): Boolean =
+      e.select(col("src").as("_v"), lit(1).as("_s"), lit(0).as("_d"))
+        .union(e.select(col("dst").as("_v"), lit(0).as("_s"),
+          lit(1).as("_d")))
+        .groupBy("_v").agg(sum(col("_s")).as("_s"), max(col("_d")).as("_d"))
+        .agg(count(when(col("_s") > 1 || (col("_s") > 0 &&
+          col("_d") > 0), 1)))
+        .collect()(0).getLong(0) == 0L
+    var converged = starForest(edges)
     var iter = 0
     while (!converged && iter < maxIter) {
       // LARGE-STAR: every neighbor v > u links to m = min(N(u) ∪ {u}).
@@ -1036,16 +1037,12 @@ object Dedup {
       // Output rows are (v, m_u) / (u, m_u) with m_u <= every dst — the
       // equality filter restores strict orientation for the invariant.
       val smins = large.groupBy("src").agg(min(col("dst")).as("_m"))
-      val small = cp(large.join(smins, "src")
+      edges = cp(large.join(smins, "src")
         .select(col("dst").as("src"), col("_m").as("dst"))
         .union(smins.select(col("src"), col("_m").as("dst")))
         .filter(col("src") =!= col("dst"))
         .distinct())
-      val smallSig = signature(small)
-      converged = smallSig == edgeSig &&
-        small.except(edges).isEmpty && edges.except(small).isEmpty
-      edges = small
-      edgeSig = smallSig
+      converged = starForest(edges)
       iter += 1
     }
     if (!converged)

@@ -19,9 +19,8 @@ object TextStats {
     * on (which `spark.sql.ansi.enabled=false` implies), and that −1
     * poisons every count/ratio/score built on it — a null-text doc
     * would carry qualityScore −1.408 on an ANSI-off cluster and NULL
-    * on an ANSI-on one (the r16 bm25ScalarsCdc bug class, pinned
-    * batch-side by AnsiParitySpec). `array_size`, not a
-    * `when(arr.isNull)` wrapper: ArraySize hard-codes the non-legacy
+    * on an ANSI-on one (the bug class AnsiParitySpec pins batch-side).
+    * `array_size`, not a `when(arr.isNull)` wrapper: ArraySize hard-codes the non-legacy
     * null-in-null-out semantics in ONE branch-free expression — the
     * when-form references the (often expensive, split/filter-derived)
     * array twice, once unconditionally and once inside a CaseWhen
@@ -994,29 +993,32 @@ object TextStats {
     * `n_grams` counts the doc's DISTINCT grams and `n_unique` those
     * with corpus document-frequency exactly 1.
     *
-    * Shape: one distinct (doc, gram) frame (`array_distinct` folds
-    * within-doc repeats map-side, BEFORE the shuffle), one gram-keyed
-    * hash aggregation for document frequency, and one join of the
-    * (doc, gram) frame against the df=1 gram set — a join with NO
-    * skew by construction: a df=1 gram appears in exactly ONE (doc,
-    * gram) row, so every join key matches at most once on each side
-    * (the hot stopword-gram keys a df-agnostic join-back would hit
-    * are filtered out before the join). Gram-less documents (shorter
-    * than n tokens) keep their row with a 0/0/0 profile.
+    * Shape: the (doc, distinct gram) rows (`array_distinct` folds
+    * within-doc repeats map-side) are built and shuffled ONCE, into
+    * one gram-keyed aggregation of df and `max(id)`: a df=1 gram's
+    * max is its one holder, so `n_unique` counts by holder with no
+    * join of (doc, gram) rows. `n_grams` sums each row's
+    * distinct-gram array size per id, shuffling no gram rows. The
+    * generator explodes the gram EXPRESSION over the projected token
+    * column ([[gramsOf]]): exploding a projected gram column lets the
+    * optimizer push an inferred `size(..) > 0` filter, a second gram
+    * evaluation, into the scan. Gram-less documents (shorter than n
+    * tokens) keep their row with a 0/0/0 profile.
     *
     * Output: (idCol, `n_grams`, `n_unique`, `novelty_micro`), one row
     * per input document. */
   def gramNovelty(df: org.apache.spark.sql.DataFrame, idCol: String,
                   textCol: String, n: Int)
       : org.apache.spark.sql.DataFrame = {
-    val dg = df.select(col(idCol), tokenArray(textCol).as("_ts"))
-      .select(col(idCol),
-        explode(array_distinct(gramsOf(col("_ts"), n))).as("_g"))
-    val uniq = dg.groupBy(col("_g")).agg(count(lit(1)).as("_df"))
-      .filter(col("_df") === 1).select(col("_g"))
-    val total = dg.groupBy(col(idCol)).agg(count(lit(1)).as("_ng"))
-    val nuniq = dg.join(uniq, "_g")
-      .groupBy(col(idCol)).agg(count(lit(1)).as("_nu"))
+    val ts = df.select(col(idCol), tokenArray(textCol).as("_ts"))
+    val grams = array_distinct(gramsOf(col("_ts"), n))
+    val nuniq = ts.select(col(idCol), explode(grams).as("_g"))
+      .groupBy(col("_g"))
+      .agg(count(lit(1)).as("_df"), max(col(idCol)).as("_h"))
+      .filter(col("_df") === 1)
+      .groupBy(col("_h").as(idCol)).agg(count(lit(1)).as("_nu"))
+    val total = ts.select(col(idCol), size(grams).as("_n"))
+      .groupBy(col(idCol)).agg(sum(col("_n")).as("_ng"))
     df.select(col(idCol))
       .join(total, Seq(idCol), "left")
       .join(nuniq, Seq(idCol), "left")
@@ -1088,11 +1090,10 @@ object TextStats {
     * pairs, marks runs of length ≥ 2 via shifted-array equality
     * (`zip_with` against a slice — NEVER a lookup into a derived
     * array from inside a lambda, which CollapseProject is free to
-    * inline and re-evaluate PER ELEMENT, the superquadratic trap the
-    * r14 version fell into), restores start order, and folds the
-    * fixed-width interval union in one linear pass. NO explode, NO
-    * shuffle, NO per-doc aggregation state (plan-audited
-    * shuffle-free). Higher-order-function lambdas are interpreted
+    * inline and re-evaluate PER ELEMENT — a superquadratic plan),
+    * restores start order, and folds the fixed-width interval union
+    * in one linear pass. NO explode, NO shuffle, NO per-doc
+    * aggregation state (plan-audited shuffle-free). Higher-order-function lambdas are interpreted
     * (not codegen'd) — each does O(1) work per element, so the
     * interpretation overhead is a constant factor, not a complexity
     * term. Docs with fewer than n tokens score 0 on that signal.
@@ -1924,8 +1925,8 @@ object TextStats {
     * through to other signals — the [[dsirScore]] gramless
     * convention, applied to the stratum axis); an EMPTY target map
     * (no stratum learned a target — e.g. the targets were derived
-    * from a pruned-to-empty corpus, ★r18 empty-corpus sweep) scores
-    * EVERY document the neutral 0 by the same rule, not an error.
+    * from a pruned-to-empty corpus) scores EVERY document the neutral
+    * 0 by the same rule, not an error.
     *
     * Output: (idCol, stratumCol, `n_grams`, `dsir_micro`). */
   def dsirScoreStratified(df: org.apache.spark.sql.DataFrame,

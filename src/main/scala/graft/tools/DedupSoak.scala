@@ -23,7 +23,10 @@ import org.apache.spark.sql.functions._
   *     every 50 docs, giving clusters whose COUNT grows linearly with
   *     the corpus while each stays constant-size — duplicateClusters'
   *     round count must stay flat (O(log n) bound, measured exactly
-  *     via [[Dedup.duplicateClustersWithRounds]]).
+  *     via [[Dedup.duplicateClustersWithRounds]], which counts the
+  *     large-star/small-star rounds run before the edge set is a star
+  *     forest: no confirmation round, 0 for an input already in star
+  *     form).
   *
   * Sub-quadratic growth criterion: all-pairs Jaccard over k× docs has
   * k² naive pairs, so wall-time ratio t(k×)/t(1×) well under k² (and
@@ -72,9 +75,9 @@ object DedupSoak {
     (r, (System.nanoTime() - t0) / 1e9)
   }
 
-  /** Adversarial VALUE-skew corpus (★r19, VERDICT r18 #4): 10% of
-    * docs are BYTE-IDENTICAL (the 100 TB reality of licenses and
-    * boilerplate pages), the rest random. Every shingle of the clone
+  /** Adversarial VALUE-skew corpus: 10% of docs are BYTE-IDENTICAL
+    * (the 100 TB reality of licenses and boilerplate pages), the rest
+    * random. Every shingle of the clone
     * text is an ultra-hot key whose census df equals the clone count —
     * the shape that melts an unsalted prefix self-join into one
     * p²-enumerating task. */
@@ -190,10 +193,10 @@ object DedupSoak {
   }
 
   def main(args: Array[String]): Unit = {
-    // machine-readable output contract (★r19 default-locale
-    // sweep): the f"" interpolator formats through the JVM DEFAULT
-    // locale, so a comma-decimal locale (de-DE, tr-TR) would emit
-    // "1,234" into the JSON lines the driver parses
+    // machine-readable output contract: the f"" interpolator formats
+    // through the JVM DEFAULT locale, so a comma-decimal locale
+    // (de-DE, tr-TR) would emit "1,234" into the JSON lines a reader
+    // parses
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     val scales = args.headOption.getOrElse("1,10")
       .split(",").map(_.trim.toInt).toSeq
@@ -211,7 +214,7 @@ object DedupSoak {
       .format("noop").mode(SaveMode.Overwrite).save()
 
     // `DedupSoak <scales> hotkey` runs ONLY the adversarial value-skew
-    // tier (★r19) — its quadratic-output candidate stage is priced
+    // tier — its quadratic-output candidate stage is priced
     // separately from the standard growth-curve tiers
     if (args.length > 1 && args(1) == "hotkey") {
       hotKeyTier(spark, scales, baseDocs)
@@ -262,8 +265,9 @@ object DedupSoak {
     }
 
     // CC round-count growth on the ADVERSARIAL cluster shape: one long
-    // CHAIN (diameter n-1, the worst case for star-contraction; the
-    // family corpus above converges in 2 rounds regardless of scale).
+    // CHAIN (diameter n-1, the worst case for star-contraction; each
+    // family above is a triangle, one round away from a star, so the
+    // family corpus reports 1 round regardless of scale).
     // Expect rounds ~ O(log n): doubling the chain adds ~1 round.
     val chainRounds = Seq(1000, 10000, 100000).map { n =>
       val pairs = spark.range(n - 1)

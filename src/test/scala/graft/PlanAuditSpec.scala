@@ -334,6 +334,48 @@ class PlanAuditSpec extends SparkSpec {
     assert(p105.contains("partial_"), s"q105: no partial agg in:\n$p105")
   }
 
+  test("gram novelty (q110) builds and shuffles the exploded (doc, " +
+    "gram) rows ONCE: one Generate, one gram-keyed exchange, no gram " +
+    "expression pushed into the scan") {
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.GenerateExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    object Aqe extends AdaptiveSparkPlanHelper
+    // a synthetic documents table with unique AND shared grams (docs
+    // 151..200 copy 1..50), so no branch is empty and AQE prunes none
+    val dir = java.nio.file.Files.createTempDirectory("graft-q110-").toString
+    (1L to 200L).map { i =>
+      val r = new scala.util.Random(i % 150)
+      (i, Seq.fill(20)(s"w${r.nextInt(30)}").mkString(" "))
+    }.toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+    val df = SparkEntry.queries("q110_gram_novelty")(spark, dir)
+    df.collect()
+    val plan = df.queryExecution.executedPlan
+    val gens = Aqe.collect(plan) { case g: GenerateExec => g }
+    assert(gens.size == 1, s"${gens.size} Generate nodes in:\n$plan")
+    // the generator grams the projected token column: a tokenizer
+    // inlined into the gram lambda re-tokenizes per gram
+    assert(!gens.head.generator.toString.contains("split("),
+      s"generator re-tokenizes: ${gens.head.generator}")
+    // a pushed `size(grams) > 0` filter would evaluate the gram
+    // lambda a second time inside the scan
+    val pushed = Aqe.collect(plan) { case s: FileSourceScanExec => s }
+      .flatMap(_.dataFilters).map(_.toString)
+    assert(!pushed.exists(_.contains("transform(")),
+      s"gram expression in scan data filters: $pushed")
+    val gramKeyed = Aqe.collect(plan) {
+      case e: ShuffleExchangeExec => e.outputPartitioning
+    }.collect { case h: HashPartitioning => h }
+      .filter(_.expressions.exists {
+        case a: Attribute => a.name == "_g"
+        case _ => false
+      })
+    assert(gramKeyed.size == 1,
+      s"${gramKeyed.size} gram-keyed exchanges in:\n$plan")
+  }
+
   test("collocations (q108) rank via TakeOrdered over vocab-sized " +
     "equi-joins — no window, no cartesian; novelty (q110) joins " +
     "without windows and aggregates with map-side partials") {

@@ -362,6 +362,46 @@ class CorpusProfileSpec extends SparkSpec {
       (4L, 3L, 3L, 1000000L)))
   }
 
+  test("gram novelty == a driver-side reference on seeded random " +
+    "corpora (null ids, null texts, repeated ids, short texts, " +
+    "within-doc repeats)") {
+    val rnd = new scala.util.Random(110)
+    val vocab = Seq("a", "b", "c", "d", "e", "f")
+    (1 to 6).foreach { trial =>
+      val n = 1 + trial % 3
+      val rows: Seq[(Option[Long], Option[String])] = Seq.fill(40) {
+        val id = if (rnd.nextInt(10) == 0) None
+          else Some(rnd.nextInt(25).toLong)
+        val text = if (rnd.nextInt(10) == 0) None
+          else Some(Seq.fill(rnd.nextInt(9))(vocab(rnd.nextInt(vocab.size)))
+            .mkString(if (rnd.nextInt(5) == 0) "  " else " "))
+        (id, text)
+      }
+      // reference: a row's distinct grams, df over ALL rows (null ids
+      // included), per-id sums; a null-id row profiles 0/0/0
+      def grams(t: Option[String]): Seq[String] = {
+        val ts = t.toSeq.flatMap(_.split(" ")).filter(_.nonEmpty)
+        if (ts.size < n) Nil else ts.sliding(n).map(_.mkString(" ")).toSeq
+          .distinct
+      }
+      val gs = rows.map { case (id, t) => id -> grams(t) }
+      val df = gs.flatMap(_._2).groupBy(identity).map(e => e._1 -> e._2.size)
+      val expected = rows.map { case (id, _) =>
+        val mine = gs.filter(g => id.isDefined && g._1 == id).flatMap(_._2)
+        val (ng, nu) = (mine.size.toLong, mine.count(df(_) == 1).toLong)
+        (id, ng, nu, if (ng > 0) nu * 1000000L / ng else 0L)
+      }.sortBy(_.toString)
+      val got = TextStats.gramNovelty(rows.toDF("doc_id", "text"),
+          "doc_id", "text", n)
+        .collect().map(r => (Option(r.get(0)).map(_.asInstanceOf[Long]),
+          r.getLong(1), r.getLong(2), r.getLong(3)))
+        .toSeq.sortBy(_.toString)
+      assert(got == expected, s"trial $trial (n = $n): " +
+        s"diff=${got.diff(expected).take(5)} " +
+        s"missing=${expected.diff(got).take(5)}")
+    }
+  }
+
   test("gram novelty: within-doc repeats fold before the df count — " +
     "a gram repeated in ONE doc is still corpus-unique") {
     val docs = Seq(

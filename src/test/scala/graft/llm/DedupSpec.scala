@@ -256,37 +256,80 @@ class DedupSpec extends SparkSpec {
     // component 2: a triangle with ids above the chain
     val tri = Seq((100L, 101L), (101L, 102L), (100L, 102L))
     val pairs = (chain ++ tri).toDF("id_a", "id_b")
-    val out = Dedup.duplicateClusters(pairs, "id_a", "id_b", maxIter = 14)
-      .as[(Long, Long)].collect().toMap
+    val (clusters, rounds) =
+      Dedup.duplicateClustersWithRounds(pairs, "id_a", "id_b", maxIter = 14)
+    val out = clusters.as[(Long, Long)].collect().toMap
+    // the loop stops on the star-forest test, with no confirmation
+    // round: 6 large-star/small-star rounds (a fixpoint-confirming
+    // loop needs a 7th)
+    assert(rounds == 6, s"64-chain took $rounds rounds")
     assert(out.size == 64 + 3)
     assert((1L to 64L).forall(out(_) == 1L),
       s"chain not fully collapsed: ${out.filter(_._2 != 1L).take(5)}")
     assert(Seq(100L, 101L, 102L).forall(out(_) == 100L))
   }
 
+  test("duplicateClusters on an input that already is a star forest " +
+    "returns after 0 rounds with the same clusters") {
+    // every member has one edge, to its component minimum, in either
+    // column order and with a repeated and a reversed copy
+    val pairs = Seq((5L, 1L), (1L, 7L), (9L, 1L), (9L, 1L), (1L, 9L),
+      (20L, 11L), (11L, 12L), (31L, 30L)).toDF("id_a", "id_b")
+    val (clusters, rounds) =
+      Dedup.duplicateClustersWithRounds(pairs, "id_a", "id_b")
+    assert(rounds == 0, s"star forest took $rounds rounds")
+    assert(clusters.as[(Long, Long)].collect().sorted.toSeq == Seq(
+      1L -> 1L, 5L -> 1L, 7L -> 1L, 9L -> 1L, 11L -> 11L, 12L -> 11L,
+      20L -> 11L, 30L -> 30L, 31L -> 30L))
+  }
+
+  // random graphs plus stars, chains and cliques, each edge with
+  // random duplicate, reversed and self-pair copies
   test("duplicateClusters == local union-find on seeded random graphs") {
     val rnd = new scala.util.Random(11)
-    (1 to 4).foreach { trial =>
+    // each shape over a fresh random id set, so component minima land
+    // anywhere in the shape (a star's hub is not always its minimum)
+    def star(ids: Seq[Long]) = ids.tail.map(v => (ids.head, v))
+    def chain(ids: Seq[Long]) = ids.sliding(2).map(p => (p(0), p(1))).toSeq
+    def clique(ids: Seq[Long]) =
+      for (a <- ids; b <- ids if a < b) yield (a, b)
+    def noisy(edges: Seq[(Long, Long)]) = edges.flatMap { case e @ (a, b) =>
+      Seq(e) ++ (if (rnd.nextInt(4) == 0) Seq((b, a)) else Nil) ++
+        (if (rnd.nextInt(4) == 0) Seq(e) else Nil) ++
+        (if (rnd.nextInt(6) == 0) Seq((a, a)) else Nil)
+    }
+    (1 to 6).foreach { trial =>
       val n = 20 + trial * 10
-      val edges = Seq.fill(n)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
-        .filter { case (a, b) => a != b }
+      val random = Seq.fill(n)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
+      val pool = rnd.shuffle((0L until 4L * n).map(_ + 1000L))
+      val shaped = Seq(star _, chain _, clique _).zipWithIndex.flatMap {
+        case (shape, i) =>
+          shape(pool.slice(i * n, i * n + 3 + rnd.nextInt(n / 2)))
+      }
+      val edges = noisy(random ++ shaped)
       val expected = {
-        val parent = Array.tabulate(n)(identity)
-        def find(x: Int): Int = {
+        val nodes = edges.flatMap(e => Seq(e._1, e._2)).distinct
+        val parent = scala.collection.mutable.Map(nodes.map(v => v -> v): _*)
+        def find(x: Long): Long = {
           var r = x
           while (parent(r) != r) r = parent(r)
           r
         }
         edges.foreach { case (a, b) =>
-          val (ra, rb) = (find(a.toInt), find(b.toInt))
+          val (ra, rb) = (find(a), find(b))
           if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
         }
-        val nodes = edges.flatMap(e => Seq(e._1, e._2)).distinct
-        nodes.map(v => v -> find(v.toInt).toLong).toMap
+        nodes.filter(v => edges.exists(e => e._1 != e._2 &&
+          (e._1 == v || e._2 == v))).map(v => v -> find(v)).toMap
       }
-      val got = Dedup.duplicateClusters(
+      val rows = Dedup.duplicateClusters(
         edges.toDF("id_a", "id_b"), "id_a", "id_b")
-        .as[(Long, Long)].collect().toMap
+        .as[(Long, Long)].collect().toSeq
+      // every member gets exactly ONE cluster_id
+      val repeated = rows.groupBy(_._1).filter(_._2.size > 1)
+      assert(repeated.isEmpty, s"trial $trial: members with several " +
+        s"cluster ids: ${repeated.take(5)}")
+      val got = rows.toMap
       assert(got == expected,
         s"trial $trial: diff=${(got.toSet diff expected.toSet).take(5)} " +
           s"missing=${(expected.toSet diff got.toSet).take(5)}")
