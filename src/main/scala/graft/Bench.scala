@@ -4,8 +4,9 @@ import graft.catalog.TableDef
 import graft.find.Finder
 import graft.forget.DistributedRewrite
 import graft.model._
-import graft.tools.ParquetStats
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import graft.tools.{ParquetStats, Session}
+import graft.tools.Session.{Timed, timed}
+import org.apache.spark.sql.SaveMode
 import scala.util.control.NonFatal
 
 /** Benchmark main. Reports, on ONE JSON line:
@@ -44,26 +45,12 @@ object Bench {
     Set("forget_rewrite_10240obj", "forget_rewrite_40960obj")
 
   def main(args: Array[String]): Unit = {
-    // machine-readable output contract (★r19 default-locale
-    // sweep): the f"" interpolator formats through the JVM DEFAULT
-    // locale, so a comma-decimal locale (de-DE, tr-TR) would emit
-    // "1,234" into the JSON lines the driver parses
-    java.util.Locale.setDefault(java.util.Locale.ROOT)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session(defaultCpus = 32)
 
     // untimed warmup: JVM/codegen/writer paths + the q21 partitioned
     // staging (a one-time layout cost, not query time)
-    spark.range(1000000).selectExpr("sum(id)").write
-      .format("noop").mode(SaveMode.Overwrite).save()
+    Session.warmup(spark)
     spark.read.parquet(s"$sfDir/region.parquet").write
       .format("noop").mode(SaveMode.Overwrite).save()
     graft.catalog.Staging.partitionedCustomer(spark, sfDir)
@@ -71,37 +58,13 @@ object Bench {
     val times = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     val ok = scala.collection.mutable.LinkedHashMap.empty[String, Boolean]
     val errors = scala.collection.mutable.ArrayBuffer.empty[String]
-    // Per-entry process-CPU and GC attribution (★r19, VERDICT r18 #1):
-    // wall time alone cannot distinguish ambient machine contention
-    // from a real regression — the r18 driver run had five entries
-    // 3-10× over their same-code floors with every other entry at the
-    // global epoch, unadjudicable either way. Each sample now records
-    // the JVM's process-CPU-time and collector-time deltas; the entry
-    // reports the MEDIAN-WALL sample's cpu and gc (a coherent triple,
-    // not three independent medians). Reading it: cpu/wall ≈ effective
-    // parallelism when the JVM owns its cores — an entry whose wall
-    // inflates while cpu holds the ledger's level (ratio collapsing)
-    // is contention; wall AND cpu inflating together is real work.
+    // Per-entry process-CPU and GC attribution: wall time alone cannot
+    // tell ambient machine contention from a real regression, so each
+    // sample is a [[Session.Timed]] (wall, process-CPU and collector
+    // deltas); the entry reports the MEDIAN-WALL sample's cpu and gc (a
+    // coherent triple, not three independent medians).
     val entryCpu = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     val entryGc = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    val osBean = java.lang.management.ManagementFactory
-      .getOperatingSystemMXBean
-      .asInstanceOf[com.sun.management.OperatingSystemMXBean]
-    def cpuNow(): Double = osBean.getProcessCpuTime / 1e9
-    def gcNow(): Double = {
-      var ms = 0L
-      val it = java.lang.management.ManagementFactory
-        .getGarbageCollectorMXBeans.iterator()
-      while (it.hasNext) ms += math.max(0L, it.next().getCollectionTime)
-      ms / 1e3
-    }
-    case class Timed(wall: Double, cpu: Double, gc: Double)
-    def timed[A](body: => A): (A, Timed) = {
-      val c0 = cpuNow(); val g0 = gcNow(); val t0 = System.nanoTime()
-      val a = body
-      val w = (System.nanoTime() - t0) / 1e9
-      (a, Timed(w, cpuNow() - c0, gcNow() - g0))
-    }
     def medianTimed(samples: Seq[Timed]): Timed =
       samples.sortBy(_.wall).apply(samples.size / 2)
     def record(name: String, t: Timed): Unit = {
@@ -719,7 +682,7 @@ object Bench {
     // soak at ~1/4 the rows per object — so obj/min flat vs the
     // 10,240 reading pins the per-object overhead (footer read,
     // staging commit, version capture) as the scaling direction, the
-    // way the CdcSoak 10× tier pinned state flatness. Deliberately
+    // way the `cdc` soak tier pins state flatness. Deliberately
     // long; reported under `soak_entries`, not `n_over_budget`.
     var (forget40960Sec, forget40960Objects, rows40960) = (0.0, 0, 0L)
     if (wanted("forget_rewrite_40960obj")) {

@@ -2018,9 +2018,9 @@ object SparkEntry {
     // oracle.
     "q83_pq_refined_tuned" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      // ★r14 warm start: seed the knob walk at the corpus-size growth
-      // rule the AnnSoak/bench series measured for THIS near-uniform
-      // corpus (paid shortlist ≈ n/5 at target 1.0) instead of
+      // Warm start: seed the knob walk at the corpus-size growth
+      // rule the `ann` soak tier and the bench measured for THIS
+      // near-uniform corpus (paid shortlist ≈ n/5 at target 1.0) instead of
       // re-walking from cold every run. Exactness is untouched — the
       // tuner still measures recall on the full query sample and the
       // cap logic is unchanged; the seed only skips the provably-

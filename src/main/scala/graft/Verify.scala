@@ -1,30 +1,15 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    // machine-readable output contract (★r19 default-locale
-    // sweep): the f"" interpolator formats through the JVM DEFAULT
-    // locale, so a comma-decimal locale (de-DE, tr-TR) would emit
-    // "1,234" into the JSON lines the driver parses
-    java.util.Locale.setDefault(java.util.Locale.ROOT)
     // optional 3rd arg (local iteration only; the driver passes two):
     // comma-separated name substrings — run just the matching queries
     val Array(sfDir, outDir) = args.take(2)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // testdata events.ts is TIMESTAMP(NANOS): read as bigint nanos
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.tools.Session(defaultCpus = 4)
     // gate-only: let q29/q31/q53 share one materialization of the
     // jaccard-pairs/cluster pipeline (Bench never sets this, so its
     // per-query timings keep their standalone definition)

@@ -454,6 +454,35 @@ object Dedup {
     // Jaccard. A collision can only ADD a candidate the verify rejects.
     // The payoff: 8-byte join/shuffle keys, per-doc prefix sorts compare
     // longs not 16-char strings, and nothing is ever re-hashed.
+    val (prefix, cleanup) = censusPrefixIndex(df, idCol, textCol,
+      shingleLen, threshold, commonShingleCap, censusSampleFraction,
+      saltBlock, maxSalts)
+    val candidates = selfJoinCandidates(prefix, threshold)
+    val texts = df.select(col(idCol), col(textCol))
+    val out = candidates
+      .join(texts.select(col(idCol).as("id_a"), col(textCol).as("_txt_a")),
+        "id_a")
+      .join(texts.select(col(idCol).as("id_b"), col(textCol).as("_txt_b")),
+        "id_b")
+      .withColumn("jaccard",
+        textJaccard(shingleLen)(col("_txt_a"), col("_txt_b")))
+      .filter(col("jaccard") >= threshold)
+      .select(col("id_a"), col("id_b"), col("jaccard"))
+    (out, cleanup)
+  }
+
+  /** The candidate stage's input: the census, its broadcast lookup and
+    * the persisted prefix index built over them, plus a cleanup that
+    * unpersists ONLY that index. [[jaccardPairsExactReleasable]] runs
+    * exactly this stage; the hot-key soak reads the index's
+    * per-(key, salt) loads off it. */
+  private[graft] def censusPrefixIndex(df: DataFrame, idCol: String,
+                                       textCol: String, shingleLen: Int,
+                                       threshold: Double,
+                                       commonShingleCap: Int,
+                                       censusSampleFraction: Double,
+                                       saltBlock: Int, maxSalts: Int)
+      : (DataFrame, () => Unit) = {
     // Global order for the prefix filter. Correctness needs only a
     // TOTAL order shared by every document; frequency-accuracy is a
     // pruning heuristic. So: SAMPLED document frequencies for the top
@@ -467,7 +496,6 @@ object Dedup {
     val dfMap = censusDfMap(df, textCol, shingleLen, commonShingleCap,
       censusSampleFraction)
     val dfB = df.sparkSession.sparkContext.broadcast(censusLookup(dfMap))
-    val t = threshold
     // The candidate stage self-joins the prefix index; without a persist
     // the whole shingle→sort→posexplode subtree executes TWICE (once per
     // join side — Spark reuses no mid-plan scan across differently
@@ -478,20 +506,9 @@ object Dedup {
     // returned frame's lifetime; released per-call via the returned
     // cleanup, or session-wide via [[releaseCaches]] (a blanket
     // clearCache() would evict unrelated caches).
-    val prefix = prefixIndex(df, idCol, textCol, shingleLen, t, dfB,
-      saltBlock, maxSalts)
-    val candidates = selfJoinCandidates(prefix, t)
-    val texts = df.select(col(idCol), col(textCol))
-    val out = candidates
-      .join(texts.select(col(idCol).as("id_a"), col(textCol).as("_txt_a")),
-        "id_a")
-      .join(texts.select(col(idCol).as("id_b"), col(textCol).as("_txt_b")),
-        "id_b")
-      .withColumn("jaccard",
-        textJaccard(shingleLen)(col("_txt_a"), col("_txt_b")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
-    (out, () => { prefix.unpersist(false); () })
+    val prefix = prefixIndex(df, idCol, textCol, shingleLen, threshold,
+      dfB, saltBlock, maxSalts)
+    (prefix, () => { prefix.unpersist(false); () })
   }
 
   /** The salted prefix-index self-join producing distinct candidate
@@ -499,7 +516,7 @@ object Dedup {
     * exact verify. Hot-key salting: entry → (key, salt); left picks
     * one salt by id hash, right replicates to all of the key's
     * salts — every pair meets in exactly one (key, salt) group. */
-  private def selfJoinCandidates(prefix: DataFrame, t: Double)
+  private[graft] def selfJoinCandidates(prefix: DataFrame, t: Double)
       : DataFrame = {
     val a = prefix.select(col("_g").as("_ga"), col("_id").as("id_a"),
       col("_sz").as("_sza"), (col("_pos0") + 1).as("_pa"),
@@ -516,63 +533,6 @@ object Dedup {
           lit(1) + least(col("_sza") - col("_pa"),
             col("_szb") - col("_pb")) >= alpha)
       .select(col("id_a"), col("id_b")).distinct()
-  }
-
-  /** Dev-probe seam: the sampled-census stage alone (returns the map
-    * size so the driver work is forced). */
-  private[graft] def censusForProbe(df: DataFrame, textCol: String,
-                                    shingleLen: Int): Int =
-    censusDfMap(df, textCol, shingleLen, 100000, 1.0).size
-
-  /** Dev-probe seam: census + prefix-index build alone (count forces
-    * the persist; released via [[releaseCaches]]). */
-  private[graft] def prefixIndexForProbe(df: DataFrame, idCol: String,
-                                         textCol: String, shingleLen: Int,
-                                         threshold: Double): Long = {
-    val dfMap = censusDfMap(df, textCol, shingleLen, 100000, 1.0)
-    val dfB = df.sparkSession.sparkContext.broadcast(censusLookup(dfMap))
-    val prefix = prefixIndex(df, idCol, textCol, shingleLen, threshold,
-      dfB, 2048, 64)
-    registerCleanup(() => { prefix.unpersist(false); () })
-    prefix.count()
-  }
-
-  /** Dev-probe seam: the per-(key, salt) LEFT-side load of the
-    * candidate self-join — the quantity the hot-key salting bounds
-    * (the left side of a (key, salt) group enumerates against the
-    * key's full entry list; its size is what caps a task's
-    * enumeration). Output: (_g, _ns, _salt, load) with the SAME salt
-    * assignment as [[selfJoinCandidates]]'s left side. The
-    * adversarial-skew soak ([[graft.tools.DedupSoak]]) asserts
-    * max(load) stays ~saltBlock however hot the planted key is. */
-  private[graft] def saltLoadForProbe(df: DataFrame, idCol: String,
-                                      textCol: String, shingleLen: Int,
-                                      threshold: Double,
-                                      saltBlock: Int = 2048,
-                                      maxSalts: Int = 64): DataFrame = {
-    val dfMap = censusDfMap(df, textCol, shingleLen, 100000, 1.0)
-    val dfB = df.sparkSession.sparkContext.broadcast(censusLookup(dfMap))
-    val prefix = prefixIndex(df, idCol, textCol, shingleLen, threshold,
-      dfB, saltBlock, maxSalts)
-    registerCleanup(() => { prefix.unpersist(false); () })
-    prefix.groupBy(col("_g"), col("_ns"),
-        pmod(xxhash64(col("_id")), col("_ns")).cast("int").as("_salt"))
-      .agg(count(lit(1)).as("load"))
-  }
-
-  /** Dev-probe seam: the candidate stage of [[jaccardPairsExact]]
-    * WITHOUT the exact-verify join — timing (full − candidates)
-    * attributes the verify stage's cost. Registers its prefix-index
-    * release with [[releaseCaches]] like the public overload. */
-  private[graft] def jaccardCandidatesForProbe(
-      df: DataFrame, idCol: String, textCol: String,
-      shingleLen: Int, threshold: Double): DataFrame = {
-    val dfMap = censusDfMap(df, textCol, shingleLen, 100000, 1.0)
-    val dfB = df.sparkSession.sparkContext.broadcast(censusLookup(dfMap))
-    val prefix = prefixIndex(df, idCol, textCol, shingleLen, threshold,
-      dfB, 2048, 64)
-    registerCleanup(() => { prefix.unpersist(false); () })
-    selfJoinCandidates(prefix, threshold)
   }
 
   /** Persisted prefix index of one corpus: (_id, _sz, _pos0, _g, _ns)
@@ -891,9 +851,9 @@ object Dedup {
     * would both mis-rank it into prefixes and silently disable its
     * salt fan-out — exactly the keys the census exists to protect — so
     * every sampled sighting is kept and scaled by 1/fraction. */
-  private[llm] def censusDfMap(df: DataFrame, textCol: String,
-                               shingleLen: Int, commonShingleCap: Int,
-                               censusSampleFraction: Double)
+  private[graft] def censusDfMap(df: DataFrame, textCol: String,
+                                 shingleLen: Int, commonShingleCap: Int,
+                                 censusSampleFraction: Double)
       : Map[Long, Long] = {
     val censusRows =
       if (censusSampleFraction >= 1.0) df
@@ -983,8 +943,9 @@ object Dedup {
   /** [[duplicateClusters]] plus the number of large-star/small-star
     * rounds run before the edge set was a star forest (exact: each
     * round ends in the driver-side star-forest test; a star-forest
-    * input reports 0). O(log n) rounds is the scale guarantee; soak
-    * harnesses assert it stays flat as the corpus grows ([[graft.tools.DedupSoak]]). */
+    * input reports 0). O(log n) rounds is the scale guarantee; the
+    * `dedup` soak tier ([[graft.tools.DedupSoak.run]]) reports it as
+    * the corpus grows. */
   def duplicateClustersWithRounds(pairs: DataFrame, aCol: String,
                                   bCol: String, maxIter: Int = 64,
                                   reliableCheckpoint: Boolean = false)

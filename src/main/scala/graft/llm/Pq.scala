@@ -45,8 +45,8 @@ object Pq {
     * [[Similarity.ivfTopK]] sampled-centroid move as a shared helper
     * (a single TakeOrdered job; order depends only on ids, so it is
     * identical for any partitioning). */
-  private[llm] def seedSample(data: DataFrame, idCol: String,
-                              vecCol: String, n: Int): Seq[Array[Float]] = {
+  private[graft] def seedSample(data: DataFrame, idCol: String,
+                                vecCol: String, n: Int): Seq[Array[Float]] = {
     val seeds: Array[Array[Float]] = data
       .select(col(idCol), col(vecCol))
       // null / non-finite vectors can't seed (★r18 numeric-pathology
@@ -152,18 +152,9 @@ object Pq {
     * and the sums are exact decimals, so the learned codebooks are
     * bit-identical for any partitioning (PqSpec + the q79/q81 oracle
     * literals pin this). */
-  /** Dev-probe shims ([[graft.tools.PerfProbe]] stage attribution). */
-  private[graft] def seedSampleForProbe(data: DataFrame, idCol: String,
-      vecCol: String, n: Int): Seq[Array[Float]] =
-    seedSample(data, idCol, vecCol, n)
-  private[graft] def trainPrefilteredForProbe(usable: DataFrame,
-      idCol: String, vecCol: String, m: Int, ksub: Int, iters: Int,
-      dim: Int): Seq[Seq[Array[Float]]] =
-    trainPrefiltered(usable, idCol, vecCol, m, ksub, iters, dim)
-
-  private[llm] def trainPrefiltered(usable: DataFrame, idCol: String,
-                                    vecCol: String, m: Int, ksub: Int,
-                                    iters: Int, dim: Int)
+  private[graft] def trainPrefiltered(usable: DataFrame, idCol: String,
+                                      vecCol: String, m: Int, ksub: Int,
+                                      iters: Int, dim: Int)
       : Seq[Seq[Array[Float]]] = {
     require(ksub >= 1 && iters >= 0,
       s"need ksub >= 1, iters >= 0; got $ksub, $iters")

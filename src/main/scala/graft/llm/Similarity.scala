@@ -89,7 +89,7 @@ object Similarity {
     * encoder batch, a schema-drifted shard) is as corrupt as a NaN —
     * it has no cosine against the rest of the corpus, so it seeds
     * nothing, contributes to no fit, and ranks nowhere. */
-  private[llm] def usableVecCol(c: Column, dim: Int): Column =
+  private[graft] def usableVecCol(c: Column, dim: Int): Column =
     size(c) === lit(dim) && finiteVecCol(c)
 
   /** Closure twin of [[usableVecCol]] (same truth table). */
@@ -108,13 +108,7 @@ object Similarity {
     * multi-scan fits that call it. Loud on an empty/all-null frame
     * (the fit-class contract: an empty training frame means a
     * mis-pointed path). */
-  /** Dev-probe shims ([[graft.tools.PerfProbe]] stage attribution). */
-  private[graft] def modalDimForProbe(data: DataFrame, vecCol: String): Int =
-    modalDim(data, vecCol)
-  private[graft] def usableVecColForProbe(c: Column, dim: Int): Column =
-    usableVecCol(c, dim)
-
-  private[llm] def modalDim(data: DataFrame, vecCol: String): Int =
+  private[graft] def modalDim(data: DataFrame, vecCol: String): Int =
     data.filter(col(vecCol).isNotNull)
       .groupBy(size(col(vecCol)).as("_d")).agg(count(lit(1)).as("_n"))
       .orderBy(col("_n").desc, col("_d").asc)

@@ -1,7 +1,8 @@
 package graft.tools
 
 import graft.llm.{IvfPq, Pq, Similarity, SimilarityEval}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import graft.tools.Session.timed
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Scale-margin soak for the compressed-ANN family (q79-q84: PQ and
@@ -12,8 +13,8 @@ import org.apache.spark.sql.functions._
   *
   *   - codebook size m·ksub is corpus-independent (the whole point of
   *     PQ: m bytes/vector no matter n) — FIXED across scales, which
-  *     also soaks the m·ksub codegen'd projection the way the r11
-  *     cluster soak caught the k=240 blowup;
+  *     also soaks the m·ksub codegen'd projection (a k=240
+  *     projection once blew up codegen on the cluster soak);
   *   - IVF-PQ's coarse `nlist` grows ~sqrt(n) (the IVFADC sizing that
   *     keeps cells near sqrt(n) so probe cost nprobe·n/nlist and cell
   *     count balance);
@@ -34,39 +35,15 @@ import org.apache.spark.sql.functions._
   *
   * Success criteria: tuned min-recall@10 >= target at EVERY scale
   * (flat under growth), and train/encode/search time ratios at k×
-  * scale well under k² (sub-quadratic). One JSON line per scale + a
-  * final ratios line. */
+  * scale well under k² (sub-quadratic). Scales are multipliers of the
+  * 2,000-vector sf0.1 embeddings shape. */
 object AnnSoak {
 
-  private def timed[A](body: => A): (A, Double) = {
-    val t0 = System.nanoTime()
-    val r = body
-    (r, (System.nanoTime() - t0) / 1e9)
-  }
-
-  def main(args: Array[String]): Unit = {
-    // machine-readable output contract (★r19 default-locale
-    // sweep): the f"" interpolator formats through the JVM DEFAULT
-    // locale, so a comma-decimal locale (de-DE, tr-TR) would emit
-    // "1,234" into the JSON lines the driver parses
-    java.util.Locale.setDefault(java.util.Locale.ROOT)
-    val scales = args.headOption.getOrElse("1,10")
-      .split(",").map(_.trim.toInt).toSeq
+  def run(spark: SparkSession, scales: Seq[Int], args: Seq[String]): Unit = {
     val baseVecs = 2000L
     val target = 0.95
     val k = 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000000).selectExpr("sum(id)").write
-      .format("noop").mode(SaveMode.Overwrite).save()
-
-    val results = scala.collection.mutable.LinkedHashMap
-      .empty[Int, Map[String, Double]]
+    val report = new Soak.Report("ann")
     scales.foreach { s =>
       val n = baseVecs * s
       val data = ClusterSoak.corpus(spark, n).persist()
@@ -122,39 +99,16 @@ object AnnSoak {
       require(ivfRecall >= target - 0.05,
         s"scale $s: IVF-PQ tuned recall $ivfRecall eroded below " +
           s"target $target (held-out slack 0.05)")
-      results(s) = Map("vecs" -> n.toDouble,
-        "pq_train_sec" -> tTrainPq, "pq_encode_sec" -> tEncodePq,
-        "pq_search_sec" -> tSearchPq,
-        "ivfpq_train_sec" -> tTrainIvf,
-        "ivfpq_encode_sec" -> tEncodeIvf,
-        "ivfpq_search_sec" -> tSearchIvf)
-      println(s"""{"scale":$s,"vecs":$n,"nlist":$nlist,""" +
-        s""""pq_train_sec":${f"$tTrainPq%.2f"},""" +
-        s""""pq_encode_sec":${f"$tEncodePq%.2f"},""" +
-        s""""pq_search_sec":${f"$tSearchPq%.2f"},""" +
-        s""""pq_recall":${f"$pqRecall%.3f"},""" +
-        s""""pq_shortlist":$paidShortlist,""" +
-        s""""ivfpq_train_sec":${f"$tTrainIvf%.2f"},""" +
-        s""""ivfpq_encode_sec":${f"$tEncodeIvf%.2f"},""" +
-        s""""ivfpq_search_sec":${f"$tSearchIvf%.2f"},""" +
-        s""""ivfpq_recall":${f"$ivfRecall%.3f"},""" +
-        s""""ivfpq_nprobe":$paidNprobe,""" +
-        s""""ivfpq_shortlist":$paidSl}""")
+      report.scale(s, Map("vecs" -> n.toDouble, "nlist" -> nlist.toDouble,
+        "pq_train_sec" -> tTrainPq.wall, "pq_encode_sec" -> tEncodePq.wall,
+        "pq_search_sec" -> tSearchPq.wall, "pq_recall" -> pqRecall,
+        "pq_shortlist" -> paidShortlist.toDouble,
+        "ivfpq_train_sec" -> tTrainIvf.wall,
+        "ivfpq_encode_sec" -> tEncodeIvf.wall,
+        "ivfpq_search_sec" -> tSearchIvf.wall, "ivfpq_recall" -> ivfRecall,
+        "ivfpq_nprobe" -> paidNprobe.toDouble,
+        "ivfpq_shortlist" -> paidSl.toDouble))
     }
-
-    if (scales.size >= 2) {
-      val lo = results(scales.head); val hi = results(scales.last)
-      val kRatio = hi("vecs") / lo("vecs")
-      def ratio(m: String) = hi(m) / math.max(lo(m), 1e-9)
-      println(s"""{"metric":"ann_soak_ratios",""" +
-        s""""scale_ratio":$kRatio,""" +
-        s""""pq_train_ratio":${f"${ratio("pq_train_sec")}%.2f"},""" +
-        s""""pq_encode_ratio":${f"${ratio("pq_encode_sec")}%.2f"},""" +
-        s""""pq_search_ratio":${f"${ratio("pq_search_sec")}%.2f"},""" +
-        s""""ivfpq_train_ratio":${f"${ratio("ivfpq_train_sec")}%.2f"},""" +
-        s""""ivfpq_encode_ratio":${f"${ratio("ivfpq_encode_sec")}%.2f"},""" +
-        s""""ivfpq_search_ratio":${f"${ratio("ivfpq_search_sec")}%.2f"}}""")
-    }
-    spark.stop()
+    report.ratios()
   }
 }

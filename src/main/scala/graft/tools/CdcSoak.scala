@@ -1,8 +1,11 @@
 package graft.tools
 
-import graft.llm.TextStats
+import graft.llm.{IndexMaintain, TextStats}
 import graft.streaming.StreamingIndex
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import graft.tools.Session.timed
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Scale soak for the streaming CDC index loop — the missing scale
@@ -10,9 +13,9 @@ import org.apache.spark.sql.functions._
   * insert are soaked by [[IndexForgetSoak]], the CDC operator was
   * spec-and-gate only): drive the [[DedupSoak]] adversarial corpus
   * through [[StreamingIndex.invertedIndexCdc]] — ingest everything,
-  * then forget HALF the hot-boilerplate carriers (10% of the corpus) — and require the
-  * max-seq snapshot to equal the batch index built FROM SCRATCH on
-  * the net corpus, at every scale.
+  * then forget HALF the hot-boilerplate carriers (10% of the corpus)
+  * — and require the max-seq snapshot to equal the batch index built
+  * FROM SCRATCH on the net corpus, at every scale.
   *
   * The corpus's ~20 boilerplate tokens are census-scale hot keys
   * (df = n/5): they overflow immediately (maxDf = 200), exercise the
@@ -28,7 +31,7 @@ import org.apache.spark.sql.functions._
   * the scale criterion (state is vocabulary-keyed; per-batch work is
   * batch-sized).
   *
-  * A CHURN tier (★r16) follows the scale runs: a production CDC feed
+  * A CHURN tier follows the scale runs: a production CDC feed
   * cycles forget→re-ingest on the same keys for months, so one
   * long-lived query drives N cycles over the base corpus, asserting
   * after EVERY half-cycle that the snapshot equals the batch build on
@@ -37,232 +40,169 @@ import org.apache.spark.sql.functions._
   * seq-only, they never leave), which is the operator's core memory
   * claim; this verifies it empirically.
   *
-  * Usage: `runMain graft.tools.CdcSoak [scales] [churnCycles]`
+  * Usage: `runMain graft.tools.Soak cdc [scales] [churnCycles]`
   * (defaults "1,10" — multiples of the 5,000-doc sf0.1 documents
   * shape — and 4 cycles). */
 object CdcSoak {
 
-  def main(args: Array[String]): Unit = {
-    // machine-readable output contract (★r19 default-locale
-    // sweep): the f"" interpolator formats through the JVM DEFAULT
-    // locale, so a comma-decimal locale (de-DE, tr-TR) would emit
-    // "1,234" into the JSON lines the driver parses
-    java.util.Locale.setDefault(java.util.Locale.ROOT)
-    val scales = args.headOption.getOrElse("1,10")
-      .split(",").map(_.trim.toInt).toSeq
-    val churnCycles = args.lift(1).map(_.trim.toInt).getOrElse(4)
-    val baseDocs = 5000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state." +
-          "HDFSBackedStateStoreProvider")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import spark.implicits._
-    spark.range(1000000).selectExpr("sum(id)").write
-      .format("noop").mode(SaveMode.Overwrite).save()
+  private val MaxDf = 200
 
-    val results = scala.collection.mutable.LinkedHashMap
-      .empty[Int, Double]
+  /** (token, df) over a corpus: each token's document frequency. */
+  private def tokenDf(corpus: DataFrame): DataFrame =
+    corpus.select(col("doc_id"), explode(array_distinct(
+        filter(TextStats.tokens(col("text")), t => length(t) > 0)))
+        .as("token"))
+      .groupBy("token").agg(count(lit(1)).as("_dff"))
+
+  /** The max-seq snapshot of a CDC memory sink, tombstones dropped by
+    * the reader rule. */
+  private def latest(spark: SparkSession, queryName: String): DataFrame =
+    spark.table(queryName)
+      .withColumn("_rn", row_number().over(Window
+        .partitionBy("token").orderBy(col("seq").desc)))
+      .filter(col("_rn") === 1 && col("df") > 0)
+
+  // Canonical (token, df, p) rows of each index shape. concat_ws over a
+  // NULL array yields "" (never NULL), so the marker branch tests the
+  // array itself. The batch truths mark a token as overflow when its
+  // FULL-corpus df exceeds maxDf (`_dff`, joined from [[tokenDf]]):
+  // ingests precede forgets, so peak df = full df.
+  private def invCanon(snap: DataFrame): DataFrame = snap
+    .select(col("token"), col("df"),
+      when(col("postings").isNull, lit("<overflow>"))
+        .otherwise(concat_ws(",", transform(col("postings"),
+          _.cast("string")))).as("p"))
+
+  private def invTruth(corpus: DataFrame, dfFull: DataFrame): DataFrame =
+    TextStats.invertedIndex(corpus, "doc_id", "text",
+        minDf = 1, maxDf = Int.MaxValue)
+      .join(dfFull, "token")
+      .select(col("token"), col("df"),
+        when(col("_dff") > MaxDf, lit("<overflow>"))
+          .otherwise(concat_ws(",", transform(col("postings"),
+            _.cast("string")))).as("p"))
+
+  private def posCanon(snap: DataFrame): DataFrame = snap
+    .select(col("token"), col("df"),
+      when(col("docs").isNull, lit("<overflow>"))
+        .otherwise(concat_ws(";", transform(col("docs"), e =>
+          concat_ws(":", e.getField("doc_id").cast("string"),
+            concat_ws(",", transform(e.getField("positions"),
+              _.cast("string"))))))).as("p"))
+
+  private def posTruth(corpus: DataFrame, dfFull: DataFrame): DataFrame =
+    IndexMaintain
+      .positionalIndexWithOverflow(corpus, "doc_id", "text",
+        minDf = 1, maxDf = Int.MaxValue)
+      .join(dfFull, "token")
+      .groupBy(col("token"))
+      .agg(max(col("df")).as("df"), max(col("_dff")).as("_dff"),
+        sort_array(collect_list(when(col("doc_id").isNotNull,
+          struct(col("doc_id"), col("positions"))))).as("_rows"))
+      .select(col("token"), col("df"),
+        when(col("_dff") > MaxDf, lit("<overflow>"))
+          .otherwise(concat_ws(";", transform(col("_rows"), e =>
+            concat_ws(":", e.getField("doc_id").cast("string"),
+              concat_ws(",", transform(e.getField("positions"),
+                _.cast("string"))))))).as("p"))
+
+  private def symDiff(a: DataFrame, b: DataFrame): Long =
+    a.exceptAll(b).unionAll(b.exceptAll(a)).count()
+
+  /** The two CDC index shapes: name, operator, canonical snapshot rows
+    * and batch truth. */
+  private val shapes: Seq[(String, DataFrame => Dataset[_],
+      DataFrame => DataFrame, (DataFrame, DataFrame) => DataFrame)] = Seq(
+    ("inverted", df => StreamingIndex.invertedIndexCdc(
+      df, "op", "doc_id", "text", maxDf = MaxDf), invCanon, invTruth),
+    ("positional", df => StreamingIndex.positionalIndexCdc(
+      df, "op", "doc_id", "text", maxDf = MaxDf), posCanon, posTruth))
+
+  def run(spark: SparkSession, scales: Seq[Int], args: Seq[String]): Unit = {
+    import spark.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val churnCycles = args.headOption.map(_.trim.toInt).getOrElse(4)
+    val baseDocs = 5000L
+    // starts `shape` on a fresh memory stream: (stream, running query)
+    def start(shape: DataFrame => Dataset[_], queryName: String) = {
+      val stream = MemoryStream[(Int, Long, String)]
+      val query = shape(stream.toDF().toDF("op", "doc_id", "text"))
+        .writeStream.format("memory").queryName(queryName)
+        .outputMode("update").start()
+      (stream, query)
+    }
+
+    val report = new Soak.Report("cdc")
     scales.foreach { k =>
       val n = baseDocs * k
       // driver-side feed rows (bounded: ~50 tokens/doc of 6 chars)
       val docs = DedupSoak.corpus(spark, n)
         .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
-      val dead = docs.filter(_._1 % 10 == 3).map(_._1).toSet // HALF the
-      // boilerplate carriers: hot tokens stay hot (net df = n/10 >
-      // maxDf) so the marker path is exercised at census scale
+      // HALF the boilerplate carriers: hot tokens stay hot (net df =
+      // n/10 > maxDf) so the marker path is exercised at census scale
+      val dead = docs.filter(_._1 % 10 == 3).map(_._1).toSet
       val feed =
         docs.map { case (i, x) => (1, i, x) }.grouped(2000).toSeq ++
           docs.filter(d => dead(d._1))
             .map { case (i, x) => (-1, i, x) }.grouped(2000).toSeq
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext =
-        spark.sqlContext
-      val stream = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Int, Long, String)]
-      val qn = s"cdc_soak_$k"
-      val query = StreamingIndex.invertedIndexCdc(
-          stream.toDF().toDF("op", "doc_id", "text"),
-          "op", "doc_id", "text", maxDf = 200)
-        .writeStream.format("memory").queryName(qn)
-        .outputMode("update").start()
-      val t0 = System.nanoTime()
-      try feed.foreach { b => stream.addData(b); query.processAllAvailable() }
-      finally query.stop()
-      val sec = (System.nanoTime() - t0) / 1e9
-      // max-seq snapshot, tombstones dropped by the reader rule
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("token").orderBy(col("seq").desc)
-      val snap = spark.table(qn)
-        .withColumn("_rn", row_number().over(w))
-        .filter(col("_rn") === 1 && col("df") > 0)
-        .select(col("token"), col("df"),
-          // concat_ws over a NULL array yields "" (never NULL), so
-          // the marker branch must test the array itself
-          when(col("postings").isNull, lit("<overflow>"))
-            .otherwise(concat_ws(",", transform(col("postings"),
-              _.cast("string")))).as("p"))
-        .persist()
-      val nSnap = snap.count()
-      val nMarkers = snap.filter(col("p") === "<overflow>").count()
-      // batch truth on the net corpus: ever-overflow = FULL-corpus
-      // df > maxDf (ingests precede forgets, so peak df = full df)
       val full = DedupSoak.corpus(spark, n)
       val net = full.filter(!(col("doc_id") % 10 === 3))
-      val dfFull = full.select(col("doc_id"), explode(array_distinct(
-          filter(TextStats.tokens(col("text")), t => length(t) > 0)))
-          .as("token"))
-        .groupBy("token").agg(count(lit(1)).as("_dff"))
-      val batch = TextStats.invertedIndex(net, "doc_id", "text",
-          minDf = 1, maxDf = Int.MaxValue)
-        .join(dfFull, "token")
-        .select(col("token"), col("df"),
-          when(col("_dff") > 200, lit("<overflow>"))
-            .otherwise(concat_ws(",", transform(col("postings"),
-              _.cast("string")))).as("p"))
-      val diff = snap.exceptAll(batch)
-        .unionAll(batch.exceptAll(snap)).count()
-      require(diff == 0,
-        s"scale $k: CDC snapshot != batch net-corpus index " +
-          s"($diff rows differ)")
+      val dfFull = tokenDf(full)
+      // each shape drives the whole feed through one query; its
+      // snapshot must equal the batch build on the net corpus
+      val Seq((sec, nSnap, nMarkers), (psec, _, _)) =
+        shapes.map { case (shape, mk, canon, truth) =>
+          val qn = s"cdc_soak_${shape}_$k"
+          val (stream, query) = start(mk, qn)
+          val (_, t) = timed {
+            try feed.foreach { b =>
+              stream.addData(b); query.processAllAvailable()
+            } finally query.stop()
+          }
+          val snap = canon(latest(spark, qn)).persist()
+          val diff = symDiff(snap, truth(net, dfFull))
+          require(diff == 0,
+            s"scale $k: $shape CDC snapshot != batch net-corpus index " +
+              s"($diff rows differ)")
+          val counts = (snap.count(),
+            snap.filter(col("p") === "<overflow>").count())
+          snap.unpersist()
+          (t.wall, counts._1, counts._2)
+        }
       require(nMarkers > 0 || k == 0,
         s"scale $k: no marker rows — hot tokens failed to overflow")
-      snap.unpersist()
-      // ---- the POSITIONAL shape through the same feed: heavier
-      // state (per-doc position lists), same contract
-      val pstream = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Int, Long, String)]
-      val pqn = s"cdc_soak_pos_$k"
-      val pquery = StreamingIndex.positionalIndexCdc(
-          pstream.toDF().toDF("op", "doc_id", "text"),
-          "op", "doc_id", "text", maxDf = 200)
-        .writeStream.format("memory").queryName(pqn)
-        .outputMode("update").start()
-      val pt0 = System.nanoTime()
-      try feed.foreach { b =>
-        pstream.addData(b); pquery.processAllAvailable()
-      } finally pquery.stop()
-      val psec = (System.nanoTime() - pt0) / 1e9
-      val psnap = spark.table(pqn)
-        .withColumn("_rn", row_number().over(w))
-        .filter(col("_rn") === 1 && col("df") > 0)
-        .select(col("token"), col("df"),
-          when(col("docs").isNull, lit("<overflow>"))
-            .otherwise(concat_ws(";", transform(col("docs"), e =>
-              concat_ws(":", e.getField("doc_id").cast("string"),
-                concat_ws(",", transform(e.getField("positions"),
-                  _.cast("string"))))))).as("p"))
-        .persist()
-      val pBatch = graft.llm.IndexMaintain
-        .positionalIndexWithOverflow(net, "doc_id", "text",
-          minDf = 1, maxDf = Int.MaxValue)
-        .join(dfFull, "token")
-        .groupBy(col("token"))
-        .agg(max(col("df")).as("df"), max(col("_dff")).as("_dff"),
-          sort_array(collect_list(when(col("doc_id").isNotNull,
-            struct(col("doc_id"), col("positions"))))).as("_rows"))
-        .select(col("token"), col("df"),
-          when(col("_dff") > 200, lit("<overflow>"))
-            .otherwise(concat_ws(";", transform(col("_rows"), e =>
-              concat_ws(":", e.getField("doc_id").cast("string"),
-                concat_ws(",", transform(e.getField("positions"),
-                  _.cast("string"))))))).as("p"))
-      val pdiff = psnap.exceptAll(pBatch)
-        .unionAll(pBatch.exceptAll(psnap)).count()
-      require(pdiff == 0,
-        s"scale $k: positional CDC snapshot != batch net-corpus " +
-          s"index ($pdiff rows differ)")
-      psnap.unpersist()
-      results(k) = sec
-      val dpm = (docs.size + dead.size) / sec * 60.0
-      val pdpm = (docs.size + dead.size) / psec * 60.0
-      println(s"""{"scale":$k,"docs":$n,"cdc_sec":${f"$sec%.2f"},""" +
-        s""""docs_per_min":${f"$dpm%.0f"},"snapshot_tokens":$nSnap,""" +
-        s""""marker_tokens":$nMarkers,""" +
-        s""""pos_cdc_sec":${f"$psec%.2f"},""" +
-        s""""pos_docs_per_min":${f"$pdpm%.0f"},""" +
-        s""""maintained_eq_rebuilt":true}""")
+      val ops = docs.size + dead.size
+      report.scale(k, Map("docs" -> n.toDouble, "cdc_sec" -> sec,
+        "docs_per_min" -> math.rint(ops / sec * 60.0),
+        "snapshot_tokens" -> nSnap.toDouble,
+        "marker_tokens" -> nMarkers.toDouble, "pos_cdc_sec" -> psec,
+        "pos_docs_per_min" -> math.rint(ops / psec * 60.0)))
     }
-    if (scales.size >= 2) {
-      val r = results(scales.last) / math.max(results(scales.head), 1e-9)
-      val kR = scales.last.toDouble / scales.head
-      println(s"""{"metric":"cdc_soak_ratios","scale_ratio":$kR,""" +
-        s""""time_ratio":${f"$r%.2f"},"near_linear":${r < 2.5 * kR}}""")
-    }
+    val r = report.ratios()
+    if (r.nonEmpty) println(Soak.line("tier" -> "cdc",
+      "near_linear" -> (r("cdc_sec") < 2.5 * r("docs"))))
 
-    // ---- CHURN tier (★r16; positional shape ★r17): one long-lived
-    // query PER CDC index shape, `churnCycles` forget→re-ingest
-    // rounds on the same dead set. Snapshot must equal the batch
-    // build after EVERY half-cycle; state rows must be FLAT
-    // (vocabulary-keyed — tombstones shrink, never leave).
+    // CHURN: a production CDC feed cycles forget→re-ingest on the same
+    // keys for months. One long-lived query PER CDC index shape runs
+    // `churnCycles` forget→re-ingest rounds on the same dead set. The
+    // snapshot must equal the batch build after EVERY half-cycle, and
+    // state rows must be FLAT (vocabulary-keyed — tombstones shrink to
+    // seq-only, they never leave).
     if (churnCycles > 0) {
       val n = baseDocs * scales.head
       val docs = DedupSoak.corpus(spark, n)
         .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
       val dead = docs.filter(_._1 % 10 == 3)
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext =
-        spark.sqlContext
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("token").orderBy(col("seq").desc)
       // ever-overflow is stable across cycles: peak df = full-corpus
       // df (no token with full df > maxDf ever nets to 0 in this
       // corpus — hot boilerplate keeps half its carriers), so the
-      // batch marker condition stays "full df > 200" all soak long
+      // batch marker condition stays "full df > maxDf" all soak long
       val full = DedupSoak.corpus(spark, n)
       val net = full.filter(!(col("doc_id") % 10 === 3))
-      val dfFull = full.select(col("doc_id"), explode(array_distinct(
-          filter(TextStats.tokens(col("text")), t => length(t) > 0)))
-          .as("token"))
-        .groupBy("token").agg(count(lit(1)).as("_dff"))
-      def invCanon(snap: DataFrame): DataFrame = snap
-        .select(col("token"), col("df"),
-          when(col("postings").isNull, lit("<overflow>"))
-            .otherwise(concat_ws(",", transform(col("postings"),
-              _.cast("string")))).as("p"))
-      def invTruth(corpus: DataFrame): DataFrame =
-        TextStats.invertedIndex(corpus, "doc_id", "text",
-            minDf = 1, maxDf = Int.MaxValue)
-          .join(dfFull, "token")
-          .select(col("token"), col("df"),
-            when(col("_dff") > 200, lit("<overflow>"))
-              .otherwise(concat_ws(",", transform(col("postings"),
-                _.cast("string")))).as("p"))
-      def posCanon(snap: DataFrame): DataFrame = snap
-        .select(col("token"), col("df"),
-          when(col("docs").isNull, lit("<overflow>"))
-            .otherwise(concat_ws(";", transform(col("docs"), e =>
-              concat_ws(":", e.getField("doc_id").cast("string"),
-                concat_ws(",", transform(e.getField("positions"),
-                  _.cast("string"))))))).as("p"))
-      def posTruth(corpus: DataFrame): DataFrame =
-        graft.llm.IndexMaintain
-          .positionalIndexWithOverflow(corpus, "doc_id", "text",
-            minDf = 1, maxDf = Int.MaxValue)
-          .join(dfFull, "token")
-          .groupBy(col("token"))
-          .agg(max(col("df")).as("df"), max(col("_dff")).as("_dff"),
-            sort_array(collect_list(when(col("doc_id").isNotNull,
-              struct(col("doc_id"), col("positions"))))).as("_rows"))
-          .select(col("token"), col("df"),
-            when(col("_dff") > 200, lit("<overflow>"))
-              .otherwise(concat_ws(";", transform(col("_rows"), e =>
-                concat_ws(":", e.getField("doc_id").cast("string"),
-                  concat_ws(",", transform(e.getField("positions"),
-                    _.cast("string"))))))).as("p"))
-      def churnRun(shape: String,
-          mk: DataFrame => org.apache.spark.sql.Dataset[_],
-          canon: DataFrame => DataFrame,
-          truth: DataFrame => DataFrame): Unit = {
-        val stream = org.apache.spark.sql.execution.streaming.runtime
-          .MemoryStream[(Int, Long, String)]
+      val dfFull = tokenDf(full)
+      shapes.foreach { case (shape, mk, canon, truth) =>
         val qn = s"cdc_churn_$shape"
-        val query = mk(stream.toDF().toDF("op", "doc_id", "text"))
-          .writeStream.format("memory").queryName(qn)
-          .outputMode("update").start()
+        val (stream, query) = start(mk, qn)
         def drive(rows: Seq[(Int, Long, String)]): Unit =
           rows.grouped(2000).foreach { b =>
             stream.addData(b); query.processAllAvailable()
@@ -270,49 +210,34 @@ object CdcSoak {
         def stateRows(): Long =
           Option(query.lastProgress).toSeq
             .flatMap(_.stateOperators).map(_.numRowsTotal).sum
-        def snapshotDiff(corpus: DataFrame): Long = {
-          val snap = canon(spark.table(qn)
-            .withColumn("_rn", row_number().over(w))
-            .filter(col("_rn") === 1 && col("df") > 0))
-          val t = truth(corpus)
-          snap.exceptAll(t).unionAll(t.exceptAll(snap)).count()
-        }
+        def snapshotDiff(corpus: DataFrame): Long =
+          symDiff(canon(latest(spark, qn)), truth(corpus, dfFull))
         try {
           drive(docs.map { case (i, x) => (1, i, x) })
           val states = scala.collection.mutable.ArrayBuffer(stateRows())
           (1 to churnCycles).foreach { c =>
-            val t0 = System.nanoTime()
-            drive(dead.map { case (i, x) => (-1, i, x) })
-            val dForget = snapshotDiff(net)
-            drive(dead.map { case (i, x) => (1, i, x) })
-            val dBack = snapshotDiff(full)
-            val sec = (System.nanoTime() - t0) / 1e9
+            val ((dForget, dBack), t) = timed {
+              drive(dead.map { case (i, x) => (-1, i, x) })
+              val dForget = snapshotDiff(net)
+              drive(dead.map { case (i, x) => (1, i, x) })
+              (dForget, snapshotDiff(full))
+            }
             val sr = stateRows()
             states += sr
             require(dForget == 0 && dBack == 0,
               s"$shape churn cycle $c: snapshot != batch (forget diff " +
                 s"$dForget, re-ingest diff $dBack)")
-            println(s"""{"churn_cycle":$c,"shape":"$shape",""" +
-              s""""sec":${f"$sec%.2f"},"state_rows":$sr,""" +
-              s""""forget_eq":true,"reingest_eq":true}""")
+            println(Soak.line("tier" -> "cdc", "churn_cycle" -> c,
+              "shape" -> shape, "sec" -> t.wall, "state_rows" -> sr))
           }
           require(states.max == states.min,
             s"$shape state-store rows must be FLAT across churn cycles " +
               s"(vocabulary-bounded), got $states")
-          println(s"""{"metric":"cdc_churn","shape":"$shape",""" +
-            s""""cycles":$churnCycles,"docs":$n,"state_rows_flat":true,""" +
-            s""""state_rows":${states.max}}""")
+          println(Soak.line("tier" -> "cdc", "churn" -> shape,
+            "cycles" -> churnCycles, "docs" -> n, "state_rows_flat" -> true,
+            "state_rows" -> states.max))
         } finally query.stop()
       }
-      churnRun("inverted",
-        df => StreamingIndex.invertedIndexCdc(
-          df, "op", "doc_id", "text", maxDf = 200),
-        invCanon, invTruth)
-      churnRun("positional",
-        df => StreamingIndex.positionalIndexCdc(
-          df, "op", "doc_id", "text", maxDf = 200),
-        posCanon, posTruth)
     }
-    spark.stop()
   }
 }

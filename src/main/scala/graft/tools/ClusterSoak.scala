@@ -1,7 +1,8 @@
 package graft.tools
 
 import graft.llm.Clustering
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import graft.tools.Session.timed
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Scale-margin soak for the clustering family (q57 k-means, q58
@@ -29,7 +30,7 @@ import org.apache.spark.sql.functions._
   * boundary assignment), and time ratios at k× scale well under k²
   * (near-linear) for both the k-means fit and the end-to-end dedup.
   * Scales are multipliers of the 2,000-vector sf0.1 embeddings shape
-  * (default "1,10"). One JSON line per scale + a final ratios line. */
+  * (default "1,10"). */
 object ClusterSoak {
 
   val Dim = 64
@@ -62,33 +63,9 @@ object ClusterSoak {
     }.toDF("vec_id", "embedding")
   }
 
-  private def timed[A](body: => A): (A, Double) = {
-    val t0 = System.nanoTime()
-    val r = body
-    (r, (System.nanoTime() - t0) / 1e9)
-  }
-
-  def main(args: Array[String]): Unit = {
-    // machine-readable output contract (★r19 default-locale
-    // sweep): the f"" interpolator formats through the JVM DEFAULT
-    // locale, so a comma-decimal locale (de-DE, tr-TR) would emit
-    // "1,234" into the JSON lines the driver parses
-    java.util.Locale.setDefault(java.util.Locale.ROOT)
-    val scales = args.headOption.getOrElse("1,10")
-      .split(",").map(_.trim.toInt).toSeq
+  def run(spark: SparkSession, scales: Seq[Int], args: Seq[String]): Unit = {
     val baseVecs = 2000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000000).selectExpr("sum(id)").write
-      .format("noop").mode(SaveMode.Overwrite).save()
-
-    val results = scala.collection.mutable.LinkedHashMap
-      .empty[Int, Map[String, Double]]
+    val report = new Soak.Report("cluster")
     scales.foreach { s =>
       val n = baseVecs * s
       val data = corpus(spark, n).persist()
@@ -118,24 +95,10 @@ object ClusterSoak {
       require(math.abs(dropped - planted) <= planted / 20 + 1,
         s"scale $s: dropped $dropped, planted $planted — output not " +
           "invariant under growth")
-      results(s) = Map("vecs" -> n.toDouble, "k" -> k.toDouble,
-        "fit_sec" -> tFit, "dedup_sec" -> tDedup,
-        "dropped" -> dropped.toDouble)
-      println(s"""{"scale":$s,"vecs":$n,"k":$k,""" +
-        s""""fit_sec":${f"$tFit%.2f"},""" +
-        s""""dedup_sec":${f"$tDedup%.2f"},""" +
-        s""""dropped":$dropped,"planted":$planted}""")
+      report.scale(s, Map("vecs" -> n.toDouble, "k" -> k.toDouble,
+        "fit_sec" -> tFit.wall, "dedup_sec" -> tDedup.wall,
+        "dropped" -> dropped.toDouble, "planted" -> planted.toDouble))
     }
-
-    if (scales.size >= 2) {
-      val lo = results(scales.head); val hi = results(scales.last)
-      val kRatio = hi("vecs") / lo("vecs")
-      def ratio(m: String) = hi(m) / math.max(lo(m), 1e-9)
-      println(s"""{"metric":"cluster_soak_ratios",""" +
-        s""""scale_ratio":$kRatio,""" +
-        s""""fit_time_ratio":${f"${ratio("fit_sec")}%.2f"},""" +
-        s""""dedup_time_ratio":${f"${ratio("dedup_sec")}%.2f"}}""")
-    }
-    spark.stop()
+    report.ratios()
   }
 }

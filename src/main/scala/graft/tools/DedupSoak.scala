@@ -1,7 +1,8 @@
 package graft.tools
 
 import graft.llm.Dedup
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import graft.tools.Session.timed
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Scale-margin soak for the three heavy dedup shapes (q29 all-pairs
@@ -31,11 +32,14 @@ import org.apache.spark.sql.functions._
   * Sub-quadratic growth criterion: all-pairs Jaccard over k× docs has
   * k² naive pairs, so wall-time ratio t(k×)/t(1×) well under k² (and
   * near k) demonstrates the candidate pruning holds; flat CC rounds
-  * demonstrate convergence does not degrade. Scales come from arg 1
-  * (comma-separated multipliers of the 5,000-doc sf0.1 documents
-  * shape, default "1,10"). Prints one JSON line per scale and a final
-  * `ratios` line. */
+  * demonstrate convergence does not degrade. Scales are multipliers
+  * of the 5,000-doc sf0.1 documents shape (default "1,10"). The
+  * `dedup-hotkey` tier ([[runHotKey]]) prices the value-skew corpus's
+  * quadratic-output candidate stage separately. */
 object DedupSoak {
+
+  /** The 5,000-doc sf0.1 documents shape every scale multiplies. */
+  private val BaseDocs = 5000L
 
   /** Deterministic skewed corpus: `n` docs of ~50 six-char tokens.
     * Docs `f, f+1, f+2` for `f % 50 == 0` form a near-dup family
@@ -67,12 +71,6 @@ object DedupSoak {
         (id, text)
       }
     }.toDF("doc_id", "text")
-  }
-
-  private def timed[A](body: => A): (A, Double) = {
-    val t0 = System.nanoTime()
-    val r = body
-    (r, (System.nanoTime() - t0) / 1e9)
   }
 
   /** Adversarial VALUE-skew corpus: 10% of docs are BYTE-IDENTICAL
@@ -111,19 +109,26 @@ object DedupSoak {
     * [[Dedup.exactDuplicates]] path collapses the clone mass into one
     * bounded-roster cluster, (b) the salted prefix index keeps every
     * (key, salt) LEFT-side group ~saltBlock regardless of the clone
-    * count (max load + the hottest key's salt fan-out, via
-    * [[Dedup.saltLoadForProbe]]), and (c) the candidate stage's time
-    * scales with its OUTPUT (clone pairs are quadratic in the clone
-    * count BY DEFINITION of all-pairs semantics — the claim is
-    * per-candidate flatness and bounded groups, not sub-quadratic
-    * output). Hard `require`s — a violated bound kills the soak. */
-  def hotKeyTier(spark: SparkSession, scales: Seq[Int],
-                 baseDocs: Long): Unit = {
+    * count (max load + the hottest key's salt fan-out, read off
+    * [[Dedup.censusPrefixIndex]] with the salt assignment of
+    * [[Dedup.selfJoinCandidates]]' left side — a left group enumerates
+    * against the key's full entry list, so its size caps a task's
+    * enumeration), and (c) the candidate stage's time scales with its
+    * OUTPUT (clone pairs are quadratic in the clone count BY DEFINITION
+    * of all-pairs semantics — the claim is per-candidate flatness and
+    * bounded groups, not sub-quadratic output). Hard `require`s — a
+    * violated bound kills the soak. */
+  def runHotKey(spark: SparkSession, scales: Seq[Int],
+                args: Seq[String]): Unit = {
     val saltBlock = 2048
-    val results = scala.collection.mutable.LinkedHashMap
-      .empty[Int, Map[String, Double]]
+    val report = new Soak.Report("dedup-hotkey")
+    // the census → prefix-index stage of jaccardPairsExact's defaults
+    def prefixStage(docs: DataFrame) = Dedup.censusPrefixIndex(docs,
+      "doc_id", "text", shingleLen = 16, threshold = 0.8,
+      commonShingleCap = 100000, censusSampleFraction = 1.0,
+      saltBlock = saltBlock, maxSalts = 64)
     scales.foreach { k =>
-      val n = baseDocs * k
+      val n = BaseDocs * k
       val clones = n / 10
       val docs = hotCorpus(spark, n).persist()
       docs.count()
@@ -137,17 +142,19 @@ object DedupSoak {
         s"hotkey($k): exactDuplicates saw $biggest copies, want $clones")
 
       // (b) salted-group bound: max LEFT load and hottest fan-out
-      val (saltRow, tSalt) = timed {
-        Dedup.saltLoadForProbe(docs, "doc_id", "text",
-            shingleLen = 16, threshold = 0.8, saltBlock = saltBlock)
+      val ((saltRow, releaseSalt), tSalt) = timed {
+        val (prefix, cleanup) = prefixStage(docs)
+        (prefix.groupBy(col("_g"), col("_ns"),
+            pmod(xxhash64(col("_id")), col("_ns")).cast("int").as("_salt"))
+          .agg(count(lit(1)).as("load"))
           .agg(max(col("load")).as("maxload"),
             max(col("_ns")).as("maxns"))
-          .head()
+          .head(), cleanup)
       }
+      releaseSalt()
       val maxLoad = saltRow.getLong(0)
       val maxNs = saltRow.getInt(1)
       val expNs = math.min(64L, 1L + clones / saltBlock).toInt
-      Dedup.releaseCaches()
       require(maxNs == expNs,
         s"hotkey($k): hottest salt fan-out $maxNs, want $expNs")
       require(maxLoad <= 2L * saltBlock,
@@ -155,77 +162,35 @@ object DedupSoak {
           s"2*saltBlock=${2 * saltBlock}")
 
       // (c) candidate stage over the skewed corpus
-      val (nCand, tCand) = timed {
-        Dedup.jaccardCandidatesForProbe(docs, "doc_id", "text",
-          shingleLen = 16, threshold = 0.8).count()
+      val ((nCand, releaseCand), tCand) = timed {
+        val (prefix, cleanup) = prefixStage(docs)
+        (Dedup.selfJoinCandidates(prefix, 0.8).count(), cleanup)
       }
-      Dedup.releaseCaches()
+      releaseCand()
       val clonePairs = clones * (clones - 1) / 2
       require(nCand >= clonePairs && nCand <= clonePairs + n,
         s"hotkey($k): $nCand candidates, want ~$clonePairs")
 
       docs.unpersist()
-      results(k) = Map("docs" -> n.toDouble, "exact_sec" -> tExact,
-        "salt_sec" -> tSalt, "max_salt_load" -> maxLoad.toDouble,
-        "max_ns" -> maxNs.toDouble, "cand_sec" -> tCand,
-        "cand_rows" -> nCand.toDouble)
-      println(s"""{"metric":"hotkey","scale":$k,"docs":$n,""" +
-        s""""clones":$clones,"exact_sec":${f"$tExact%.2f"},""" +
-        s""""dup_clusters":$dupClusters,""" +
-        s""""max_salt_load":$maxLoad,"max_ns":$maxNs,""" +
-        s""""salt_sec":${f"$tSalt%.2f"},""" +
-        s""""cand_rows":$nCand,"cand_sec":${f"$tCand%.2f"}}""")
+      report.scale(k, Map("docs" -> n.toDouble, "clones" -> clones.toDouble,
+        "exact_sec" -> tExact.wall, "dup_clusters" -> dupClusters.toDouble,
+        "max_salt_load" -> maxLoad.toDouble, "max_ns" -> maxNs.toDouble,
+        "salt_sec" -> tSalt.wall, "cand_rows" -> nCand.toDouble,
+        "cand_sec" -> tCand.wall))
     }
-    if (scales.size >= 2) {
-      val lo = results(scales.head); val hi = results(scales.last)
-      val candRatio = hi("cand_rows") / math.max(lo("cand_rows"), 1.0)
-      val timeRatio = hi("cand_sec") / math.max(lo("cand_sec"), 1e-9)
-      // per-candidate flatness: time grows no faster than ~1.5x the
-      // output growth (the output IS quadratic in clones by all-pairs
-      // semantics; a salted-group failure would show up as
-      // time >> output growth when one task serializes the hot key)
-      println(s"""{"metric":"hotkey_ratios","cand_ratio":""" +
-        s"""${f"$candRatio%.2f"},"time_ratio":${f"$timeRatio%.2f"},""" +
-        s""""exact_time_ratio":${
-          f"${hi("exact_sec") / math.max(lo("exact_sec"), 1e-9)}%.2f"},""" +
-        s""""per_candidate_flat":${timeRatio <= 1.5 * candRatio}}""")
-    }
+    val r = report.ratios()
+    // per-candidate flatness: time grows no faster than ~1.5x the
+    // output growth (the output IS quadratic in clones by all-pairs
+    // semantics; a salted-group failure would show up as
+    // time >> output growth when one task serializes the hot key)
+    if (r.nonEmpty) println(Soak.line("tier" -> "dedup-hotkey",
+      "per_candidate_flat" -> (r("cand_sec") <= 1.5 * r("cand_rows"))))
   }
 
-  def main(args: Array[String]): Unit = {
-    // machine-readable output contract: the f"" interpolator formats
-    // through the JVM DEFAULT locale, so a comma-decimal locale
-    // (de-DE, tr-TR) would emit "1,234" into the JSON lines a reader
-    // parses
-    java.util.Locale.setDefault(java.util.Locale.ROOT)
-    val scales = args.headOption.getOrElse("1,10")
-      .split(",").map(_.trim.toInt).toSeq
-    val baseDocs = 5000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    // warmup: codegen + noop sink
-    spark.range(1000000).selectExpr("sum(id)").write
-      .format("noop").mode(SaveMode.Overwrite).save()
-
-    // `DedupSoak <scales> hotkey` runs ONLY the adversarial value-skew
-    // tier — its quadratic-output candidate stage is priced
-    // separately from the standard growth-curve tiers
-    if (args.length > 1 && args(1) == "hotkey") {
-      hotKeyTier(spark, scales, baseDocs)
-      spark.stop()
-      return
-    }
-
-    val results = scala.collection.mutable.LinkedHashMap
-      .empty[Int, Map[String, Double]]
+  def run(spark: SparkSession, scales: Seq[Int], args: Seq[String]): Unit = {
+    val report = new Soak.Report("dedup")
     scales.foreach { k =>
-      val n = baseDocs * k
+      val n = BaseDocs * k
       val docs = corpus(spark, n).persist()
       docs.count() // materialize OUTSIDE the timed sections
 
@@ -251,17 +216,12 @@ object DedupSoak {
       docs.unpersist()
       Dedup.releaseCaches()
 
-      results(k) = Map(
-        "docs" -> n.toDouble, "pairs_sec" -> tPairs,
+      report.scale(k, Map(
+        "docs" -> n.toDouble, "pairs_sec" -> tPairs.wall,
         "pairs_rows" -> nPairs.toDouble,
-        "cc_sec" -> tCc, "cc_rounds" -> rounds.toDouble,
-        "cc_clusters_rows" -> nClusters.toDouble,
-        "cross_sec" -> tCross, "cross_rows" -> nCross.toDouble)
-      println(s"""{"scale":$k,"docs":$n,""" +
-        s""""pairs_sec":${f"$tPairs%.2f"},"pairs_rows":$nPairs,""" +
-        s""""cc_sec":${f"$tCc%.2f"},"cc_rounds":$rounds,""" +
-        s""""cc_rows":$nClusters,""" +
-        s""""cross_sec":${f"$tCross%.2f"},"cross_rows":$nCross}""")
+        "cc_sec" -> tCc.wall, "cc_rounds" -> rounds.toDouble,
+        "cc_rows" -> nClusters.toDouble,
+        "cross_sec" -> tCross.wall, "cross_rows" -> nCross.toDouble))
     }
 
     // CC round-count growth on the ADVERSARIAL cluster shape: one long
@@ -278,26 +238,18 @@ object DedupSoak {
         (cc.count(), r)
       }
       require(rows == n, s"chain($n) lost members: $rows")
-      println(s"""{"metric":"cc_chain","n":$n,"rounds":$rounds,""" +
-        s""""sec":${f"$sec%.2f"}}""")
+      println(Soak.line("tier" -> "dedup", "cc_chain" -> n,
+        "rounds" -> rounds, "sec" -> sec.wall))
       rounds
     }
-    println(s"""{"metric":"cc_chain_rounds","series":""" +
-      s"""[${chainRounds.mkString(",")}]}""")
+    println(Soak.line("tier" -> "dedup", "cc_chain_rounds" -> chainRounds))
 
-    if (scales.size >= 2) {
-      val lo = results(scales.head); val hi = results(scales.last)
-      val kRatio = hi("docs") / lo("docs")
-      def ratio(m: String) = hi(m) / math.max(lo(m), 1e-9)
-      println(s"""{"metric":"soak_ratios","scale_ratio":$kRatio,""" +
-        s""""pairs_time_ratio":${f"${ratio("pairs_sec")}%.2f"},""" +
-        s""""cross_time_ratio":${f"${ratio("cross_sec")}%.2f"},""" +
-        s""""cc_time_ratio":${f"${ratio("cc_sec")}%.2f"},""" +
-        s""""cc_rounds_lo":${lo("cc_rounds").toInt},""" +
-        s""""cc_rounds_hi":${hi("cc_rounds").toInt},""" +
-        s""""subquadratic":${ratio("pairs_sec") < kRatio * kRatio &&
-          ratio("cross_sec") < kRatio * kRatio}}""")
+    val r = report.ratios()
+    if (r.nonEmpty) {
+      val kRatio = r("docs")
+      println(Soak.line("tier" -> "dedup",
+        "subquadratic" -> (r("pairs_sec") < kRatio * kRatio &&
+          r("cross_sec") < kRatio * kRatio)))
     }
-    spark.stop()
   }
 }

@@ -5,7 +5,7 @@ import graft.driver.JobRunner
 import graft.find.Finder
 import graft.forget.DistributedRewrite
 import graft.model._
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
@@ -23,19 +23,8 @@ import scala.jdk.CollectionConverters._
   */
 object E2EDemo {
   def main(args: Array[String]): Unit = {
-    // machine-readable output contract (★r19 default-locale
-    // sweep): the f"" interpolator formats through the JVM DEFAULT
-    // locale, so a comma-decimal locale (de-DE, tr-TR) would emit
-    // "1,234" into the JSON lines the driver parses
-    java.util.Locale.setDefault(java.util.Locale.ROOT)
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session(defaultCpus = 8)
     var failures = List.empty[String]
     def check(ok: Boolean, what: String): Unit = {
       println(s"== ${if (ok) "OK " else "FAIL"} $what")
@@ -238,7 +227,7 @@ object E2EDemo {
         .unionAll(rBi.exceptAll(mBi)).count()
       check(biDiff == 0,
         s"forgotten bigram counts == rebuilt ($biDiff grams differ)")
-      // PROBE 3c (★r14): the INSERT direction closes the loop — re-
+      // PROBE 3c: the INSERT direction closes the loop — re-
       // ingesting the very rows the forget removed must bring the
       // maintained index back to the pre-forget artifact (the
       // insert-then-forget round trip, driven end-to-end: the index

@@ -3,7 +3,8 @@ package graft.tools
 import graft.catalog.TableDef
 import graft.find.Finder
 import graft.model._
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import graft.tools.Session.timed
+import org.apache.spark.sql.SparkSession
 
 /** Micro-bench behind the [[Finder.InSetMaxKeys]] threshold: times the
   * SAME Find (matched rows, full materialization) under BOTH strategies
@@ -13,43 +14,25 @@ import org.apache.spark.sql.{SaveMode, SparkSession}
   * the right value is wherever the curves cross; run this to re-derive
   * it on new hardware instead of trusting the constant.
   *
-  * Usage: runMain graft.tools.FindStrategyBench [sfDir] [sizes]
-  * (sizes comma-separated; default 1000,10000,100000,200000) */
+  * Usage: `runMain graft.tools.Soak find-strategy [sizes]` with
+  * `SPARK_GRAFT_SF_DIR` (sizes are queue sizes; default
+  * 1000,10000,100000,200000). */
 object FindStrategyBench {
-  def main(args: Array[String]): Unit = {
-    // machine-readable output contract (★r19 default-locale
-    // sweep): the f"" interpolator formats through the JVM DEFAULT
-    // locale, so a comma-decimal locale (de-DE, tr-TR) would emit
-    // "1,234" into the JSON lines the driver parses
-    java.util.Locale.setDefault(java.util.Locale.ROOT)
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val sizes = args.lift(1).getOrElse("1000,10000,100000,200000")
-      .split(",").map(_.trim.toInt).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000000).selectExpr("sum(id)").write
-      .format("noop").mode(SaveMode.Overwrite).save() // warmup
-
+  def run(spark: SparkSession, sizes: Seq[Int], args: Seq[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val data = spark.read.parquet(s"$sfDir/lineitem.parquet")
     val table = TableDef("lineitem", s"$sfDir/lineitem.parquet",
       DataFormat.Parquet, data.schema)
     val mapper = DataMapper("m", "lineitem", Seq("l_orderkey"))
     val maxKey = data.selectExpr("max(l_orderkey)").head().getLong(0)
 
+    // (median wall of 3 runs, row count of the first)
     def timeMedian3(body: => Long): (Double, Long) = {
-      val runs = (1 to 3).map { _ =>
-        val t0 = System.nanoTime()
-        val n = body
-        ((System.nanoTime() - t0) / 1e9, n)
-      }
-      (runs.map(_._1).sorted.apply(1), runs.head._2)
+      val runs = (1 to 3).map(_ => timed(body))
+      (runs.map(_._2.wall).sorted.apply(1), runs.head._1)
     }
 
+    val report = new Soak.Report("find-strategy")
     sizes.foreach { k =>
       // every 'step'-th key: spread across the table, ~uniform hit rate
       val step = math.max(1L, maxKey / k)
@@ -62,10 +45,10 @@ object FindStrategyBench {
       val (tJoin, nJoin) = timeMedian3(
         Finder.matchedRows(spark, data, groups, inSetMaxKeys = 0).count())
       require(nPred == nJoin, s"strategy results differ: $nPred vs $nJoin")
-      println(s"""{"keys":$k,"rows_matched":$nPred,""" +
-        s""""predicate_sec":${f"$tPred%.2f"},""" +
-        s""""semijoin_sec":${f"$tJoin%.2f"}}""")
+      report.scale(k, Map("keys" -> k.toDouble,
+        "rows_matched" -> nPred.toDouble, "predicate_sec" -> tPred,
+        "semijoin_sec" -> tJoin))
     }
-    spark.stop()
+    report.ratios()
   }
 }

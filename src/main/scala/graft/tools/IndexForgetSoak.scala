@@ -1,6 +1,7 @@
 package graft.tools
 
-import graft.llm.{IndexMaintain, Sketch}
+import graft.llm.{IndexMaintain, Pq, Sketch, TextStats}
+import graft.tools.Session.timed
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -34,31 +35,18 @@ import org.apache.spark.sql.functions._
   * before the clock starts: maintenance reads the stored artifact
   * (the q99 claim), never re-derives it.
   *
-  * Usage: `runMain graft.tools.IndexForgetSoak [scales]` (default
+  * Usage: `runMain graft.tools.Soak indexforget [scales]` (default
   * "1,10,30" — multiples of the 5,000-doc sf0.1 documents shape).
-  * One JSON line per scale, then a `ratios` line. With all eight
-  * regimes the 30× scale wants `SPARK_DRIVER_MEM=16g` (the 8g
+  * With all eight regimes the 30× scale wants `SPARK_DRIVER_MEM=16g` (the 8g
   * default ran out of execution memory once the insert regimes
   * joined the session). */
 object IndexForgetSoak {
-
-  private def timed[A](body: => A): (A, Double) = {
-    val t0 = System.nanoTime()
-    val r = body
-    (r, (System.nanoTime() - t0) / 1e9)
-  }
 
   /** Stringified canonical rows for null-safe index comparison. */
   private def canon(ix: DataFrame): DataFrame =
     ix.select(col("token"), col("df"),
       coalesce(concat_ws(",", transform(col("postings"),
         _.cast("string"))), lit("<overflow>")).as("p"))
-
-  private def assertSame(a: DataFrame, b: DataFrame, what: String): Unit = {
-    val diff = canon(a).exceptAll(canon(b))
-      .unionAll(canon(b).exceptAll(canon(a))).count()
-    require(diff == 0, s"$what: maintained != rebuilt ($diff rows differ)")
-  }
 
   /** Canonical rows for the positional shape (null-safe). */
   private def pcanon(ix: DataFrame): DataFrame =
@@ -67,38 +55,14 @@ object IndexForgetSoak {
       coalesce(concat_ws(",", transform(col("positions"),
         _.cast("string"))), lit("<overflow>")).as("p"))
 
-  private def assertSameP(a: DataFrame, b: DataFrame, what: String): Unit = {
-    val diff = pcanon(a).exceptAll(pcanon(b))
-      .unionAll(pcanon(b).exceptAll(pcanon(a))).count()
-    require(diff == 0, s"$what: maintained != rebuilt ($diff rows differ)")
-  }
-
-  private def assertSameAny(a: DataFrame, b: DataFrame, what: String): Unit = {
+  private def assertSame(a: DataFrame, b: DataFrame, what: String): Unit = {
     val diff = a.exceptAll(b).unionAll(b.exceptAll(a)).count()
     require(diff == 0, s"$what: maintained != rebuilt ($diff rows differ)")
   }
 
-  def main(args: Array[String]): Unit = {
-    // machine-readable output contract (★r19 default-locale
-    // sweep): the f"" interpolator formats through the JVM DEFAULT
-    // locale, so a comma-decimal locale (de-DE, tr-TR) would emit
-    // "1,234" into the JSON lines the driver parses
-    java.util.Locale.setDefault(java.util.Locale.ROOT)
-    val scales = args.headOption.getOrElse("1,10,30")
-      .split(",").map(_.trim.toInt).toSeq
+  def run(spark: SparkSession, scales: Seq[Int], args: Seq[String]): Unit = {
     val baseDocs = 5000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000000).selectExpr("sum(id)").write
-      .format("noop").mode(SaveMode.Overwrite).save()
-
-    val results = scala.collection.mutable.LinkedHashMap
-      .empty[Int, Map[String, Double]]
+    val report = new Soak.Report("indexforget")
     scales.foreach { k =>
       val n = baseDocs * k
       val docs = DedupSoak.corpus(spark, n).persist()
@@ -133,13 +97,13 @@ object IndexForgetSoak {
             .write.format("noop").mode(SaveMode.Overwrite).save()
         }
         assertSame(
-          IndexMaintain.forgetFromIndex(ix, forgotten, remaining,
-            "doc_id", "text", minDf = 2, maxDf = maxDf),
-          IndexMaintain.indexWithOverflow(remaining, "doc_id", "text",
-            minDf = 2, maxDf = maxDf),
+          canon(IndexMaintain.forgetFromIndex(ix, forgotten, remaining,
+            "doc_id", "text", minDf = 2, maxDf = maxDf)),
+          canon(IndexMaintain.indexWithOverflow(remaining, "doc_id",
+            "text", minDf = 2, maxDf = maxDf)),
           s"$label@${k}x")
         ix.unpersist()
-        (tMaint, tRebuild)
+        (tMaint.wall, tRebuild.wall)
       }
 
       val (mNo, rNo) = soakIndex(maxDfStay, "nocross")
@@ -165,12 +129,11 @@ object IndexForgetSoak {
       require(cdiff == 0, s"cms@${k}x: subtract != rebuilt ($cdiff)")
       counters.unpersist()
 
-      // ★r14: the other three artifact shapes, same session, same
+      // The other three artifact shapes, same session, same
       // adversarial corpus — maintained ≡ rebuilt asserted at every
       // scale, maintain-vs-rebuild ratio recorded per shape.
       // (a) POSITIONAL index, no-crossing regime (the common case —
       // maintain cost must stay O(batch + index) as n grows)
-      import graft.llm.{IndexMaintain, TextStats, Pq}
       val pix = IndexMaintain.positionalIndexWithOverflow(docs,
         "doc_id", "text", minDf = 2, maxDf = maxDfStay).persist()
       pix.count()
@@ -184,11 +147,11 @@ object IndexForgetSoak {
             "text", minDf = 2, maxDf = maxDfStay)
           .write.format("noop").mode(SaveMode.Overwrite).save()
       }
-      assertSameP(
-        IndexMaintain.forgetFromPositionalIndex(pix, forgotten,
-          remaining, "doc_id", "text", minDf = 2, maxDf = maxDfStay),
-        IndexMaintain.positionalIndexWithOverflow(remaining, "doc_id",
-          "text", minDf = 2, maxDf = maxDfStay),
+      assertSame(
+        pcanon(IndexMaintain.forgetFromPositionalIndex(pix, forgotten,
+          remaining, "doc_id", "text", minDf = 2, maxDf = maxDfStay)),
+        pcanon(IndexMaintain.positionalIndexWithOverflow(remaining,
+          "doc_id", "text", minDf = 2, maxDf = maxDfStay)),
         s"positional@${k}x")
       pix.unpersist()
 
@@ -215,9 +178,9 @@ object IndexForgetSoak {
       val (mtf, mdl, mnl) = TextStats.bm25StatsForget(tfP, dlP, nlP,
         fids, "doc_id")
       val (rtf, rdl, rnl) = TextStats.bm25Stats(remaining, "doc_id", "text")
-      assertSameAny(mtf, rtf, s"bm25_tf@${k}x")
-      assertSameAny(mdl, rdl, s"bm25_dl@${k}x")
-      assertSameAny(mnl, rnl, s"bm25_nl@${k}x")
+      assertSame(mtf, rtf, s"bm25_tf@${k}x")
+      assertSame(mdl, rdl, s"bm25_dl@${k}x")
+      assertSame(mnl, rnl, s"bm25_nl@${k}x")
       tfP.unpersist(); dlP.unpersist(); nlP.unpersist()
 
       // (c) per-row code frames (the PQ-codes artifact): forget is
@@ -248,7 +211,7 @@ object IndexForgetSoak {
       def codeCanon(d: DataFrame) = d.select(col("doc_id"),
         concat_ws(",", transform(col("codes"), _.cast("string")))
           .as("c"))
-      assertSameAny(codeCanon(IndexMaintain.forgetRows(codes, fids,
+      assertSame(codeCanon(IndexMaintain.forgetRows(codes, fids,
           "doc_id")),
         codeCanon(Pq.encode(remaining.select(col("doc_id"),
           expr("transform(sequence(0, 7), j -> " +
@@ -259,7 +222,7 @@ object IndexForgetSoak {
       codes.unpersist()
       docs.unpersist()
 
-      // ★r14 INSERT direction (the q118/q119 ingestion half): the
+      // INSERT direction (the q118/q119 ingestion half): the
       // artifact is built on the 9/10 remainder, the former forget
       // batch becomes the INSERT batch, and maintenance races a
       // rebuild on the full corpus. Hot tokens are already overflow
@@ -280,10 +243,10 @@ object IndexForgetSoak {
           .write.format("noop").mode(SaveMode.Overwrite).save()
       }
       assertSame(
-        IndexMaintain.insertIntoIndex(iix, forgotten, docs,
-          "doc_id", "text", minDf = 2, maxDf = maxDfStay),
-        IndexMaintain.indexWithOverflow(docs, "doc_id", "text",
-          minDf = 2, maxDf = maxDfStay),
+        canon(IndexMaintain.insertIntoIndex(iix, forgotten, docs,
+          "doc_id", "text", minDf = 2, maxDf = maxDfStay)),
+        canon(IndexMaintain.indexWithOverflow(docs, "doc_id", "text",
+          minDf = 2, maxDf = maxDfStay)),
         s"insert@${k}x")
       iix.unpersist()
       val pix2 = IndexMaintain.positionalIndexWithOverflow(remaining,
@@ -299,49 +262,30 @@ object IndexForgetSoak {
             "text", minDf = 2, maxDf = maxDfStay)
           .write.format("noop").mode(SaveMode.Overwrite).save()
       }
-      assertSameP(
-        IndexMaintain.insertIntoPositionalIndex(pix2, forgotten, docs,
-          "doc_id", "text", minDf = 2, maxDf = maxDfStay),
-        IndexMaintain.positionalIndexWithOverflow(docs, "doc_id",
-          "text", minDf = 2, maxDf = maxDfStay),
+      assertSame(
+        pcanon(IndexMaintain.insertIntoPositionalIndex(pix2, forgotten,
+          docs, "doc_id", "text", minDf = 2, maxDf = maxDfStay)),
+        pcanon(IndexMaintain.positionalIndexWithOverflow(docs, "doc_id",
+          "text", minDf = 2, maxDf = maxDfStay)),
         s"positional_insert@${k}x")
       pix2.unpersist()
 
-      results(k) = Map("m_no" -> mNo, "r_no" -> rNo, "m_cr" -> mCr,
-        "r_cr" -> rCr, "sub" -> tSub, "resk" -> tResk,
-        "m_pos" -> mPos, "r_pos" -> rPos, "m_bm" -> mBm, "r_bm" -> rBm,
-        "m_row" -> mRow, "r_row" -> rRow,
-        "m_ins" -> mIns, "r_ins" -> rIns,
-        "m_pins" -> mPIns, "r_pins" -> rPIns)
-      println(s"""{"scale":$k,"docs":$n,""" +
-        s""""maintain_nocross_sec":${f"$mNo%.2f"},""" +
-        s""""rebuild_nocross_sec":${f"$rNo%.2f"},""" +
-        s""""maintain_cross_sec":${f"$mCr%.2f"},""" +
-        s""""rebuild_cross_sec":${f"$rCr%.2f"},""" +
-        s""""cms_subtract_sec":${f"$tSub%.2f"},""" +
-        s""""cms_resketch_sec":${f"$tResk%.2f"},""" +
-        s""""positional_maintain_sec":${f"$mPos%.2f"},""" +
-        s""""positional_rebuild_sec":${f"$rPos%.2f"},""" +
-        s""""bm25_maintain_sec":${f"$mBm%.2f"},""" +
-        s""""bm25_rebuild_sec":${f"$rBm%.2f"},""" +
-        s""""rowframe_maintain_sec":${f"$mRow%.2f"},""" +
-        s""""rowframe_rebuild_sec":${f"$rRow%.2f"},""" +
-        s""""insert_maintain_sec":${f"$mIns%.2f"},""" +
-        s""""insert_rebuild_sec":${f"$rIns%.2f"},""" +
-        s""""positional_insert_maintain_sec":${f"$mPIns%.2f"},""" +
-        s""""positional_insert_rebuild_sec":${f"$rPIns%.2f"}}""")
+      report.scale(k, Map("docs" -> n.toDouble,
+        "maintain_nocross_sec" -> mNo, "rebuild_nocross_sec" -> rNo,
+        "maintain_cross_sec" -> mCr, "rebuild_cross_sec" -> rCr,
+        "cms_subtract_sec" -> tSub.wall,
+        "cms_resketch_sec" -> tResk.wall,
+        "positional_maintain_sec" -> mPos.wall,
+        "positional_rebuild_sec" -> rPos.wall,
+        "bm25_maintain_sec" -> mBm.wall,
+        "bm25_rebuild_sec" -> rBm.wall,
+        "rowframe_maintain_sec" -> mRow.wall,
+        "rowframe_rebuild_sec" -> rRow.wall,
+        "insert_maintain_sec" -> mIns.wall,
+        "insert_rebuild_sec" -> rIns.wall,
+        "positional_insert_maintain_sec" -> mPIns.wall,
+        "positional_insert_rebuild_sec" -> rPIns.wall))
     }
-    val base = results(scales.head)
-    val ratios = scales.tail.map { k =>
-      val r = results(k)
-      s""""${k}x":{""" +
-        Seq("m_no", "r_no", "m_cr", "r_cr", "sub", "resk",
-            "m_pos", "r_pos", "m_bm", "r_bm", "m_row", "r_row",
-            "m_ins", "r_ins", "m_pins", "r_pins")
-          .map(m => s""""$m":${f"${r(m) / base(m)}%.1f"}""")
-          .mkString(",") + "}"
-    }.mkString(",")
-    println(s"""{"ratios":{$ratios}}""")
-    spark.stop()
+    report.ratios()
   }
 }

@@ -1,13 +1,14 @@
 package graft.tools
 
 import graft.llm.{Bpe, Dedup, Packing, TextStats}
+import graft.tools.Session.timed
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Per-document LENGTH soak for the map-side text operators — the
   * missing axis of [[DedupSoak]] (which grows doc COUNT): a per-row
-  * complexity bug is invisible on the 54-token sf fixtures (q125's
-  * r14 superquadratic counter sailed through the sf0.01 gate green)
+  * complexity bug is invisible on the 54-token sf fixtures (a
+  * superquadratic q125 counter passes the sf0.01 gate green)
   * and fatal on a real pre-training corpus, where single documents
   * run 10k–100k tokens. Fixed doc count, token length grows by the
   * scale arg; each operator's wall must grow near-linearly in LENGTH.
@@ -28,8 +29,8 @@ import org.apache.spark.sql.functions._
   * requirement) and near `k` (reported as `near_linear`, time ratio
   * ≤ 2.5·k — slack for job overhead at the small end and log
   * factors). Scales are LENGTH multipliers of the 1,000-token base
-  * (arg 1, default "1,10,30"). Prints one JSON line per scale and a
-  * final per-operator `ratios` line. */
+  * (default "1,10,30"); `SPARK_GRAFT_SOAK_DOCS` sets the doc count
+  * (default 960). */
 object LongDocSoak {
 
   private val vocab: IndexedSeq[String] = (0 until 40).map { i =>
@@ -65,34 +66,12 @@ object LongDocSoak {
     }.toDF("doc_id", "text")
   }
 
-  private def timed(body: => Unit): Double = {
-    val t0 = System.nanoTime()
-    body
-    (System.nanoTime() - t0) / 1e9
-  }
-
   private def noop(df: DataFrame): Unit =
     df.write.format("noop").mode(SaveMode.Overwrite).save()
 
-  def main(args: Array[String]): Unit = {
-    // machine-readable output contract (★r19 default-locale
-    // sweep): the f"" interpolator formats through the JVM DEFAULT
-    // locale, so a comma-decimal locale (de-DE, tr-TR) would emit
-    // "1,234" into the JSON lines the driver parses
-    java.util.Locale.setDefault(java.util.Locale.ROOT)
-    val scales = args.headOption.getOrElse("1,10,30")
-      .split(",").map(_.trim.toInt).toSeq
+  def run(spark: SparkSession, scales: Seq[Int], args: Seq[String]): Unit = {
     val nDocs = sys.env.getOrElse("SPARK_GRAFT_SOAK_DOCS", "960").toLong
     val baseTokens = 1000
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000000).selectExpr("sum(id)").write
-      .format("noop").mode(SaveMode.Overwrite).save()
 
     // FIXED merge list (learning is corpus-iterative and not the
     // per-doc path under test; literals keep encode+pack the timed
@@ -137,19 +116,7 @@ object LongDocSoak {
           shingleLen = 16))))
     val fewer = Set("span_coverage", "span_surgery")
 
-    // INDEX-SEARCH tier (★r16): the three index-query operators'
-    // cost driver is positions-per-token, which grows with doc
-    // length — build the positional + inverted indexes per scale
-    // (outside the timed window: build cost is the exploded-positions
-    // aggregation, soaked elsewhere) and run the searches with
-    // deliberately HOT terms: 'the' ≈ 16% of all tokens (proximity's
-    // sweep sees ~0.2·L events/doc), the boilerplate trigram recurs
-    // every ~500 tokens (phrase's intersection lists grow ∝ L).
-    val idxOpNames =
-      Seq("proximity_search", "phrase_search", "conjunctive_search")
-
-    val results = scala.collection.mutable.LinkedHashMap
-      .empty[Int, Map[String, Double]]
+    val report = new Soak.Report("longdoc")
     scales.foreach { k =>
       val toks = baseTokens * k
       val docs = corpus(spark, nDocs, toks).persist()
@@ -159,8 +126,16 @@ object LongDocSoak {
       val times = ops.map { case (name, run) =>
         val d = if (fewer(name)) small else docs
         run(d) // warm (codegen, broadcast)
-        name -> (timed(run(d)) min timed(run(d)))
+        name -> (timed(run(d))._2.wall min timed(run(d))._2.wall)
       }.toMap
+      // INDEX-SEARCH tier: the three index-query operators'
+      // cost driver is positions-per-token, which grows with doc
+      // length — build the positional + inverted indexes per scale
+      // (outside the timed window: build cost is the exploded-positions
+      // aggregation, soaked elsewhere) and run the searches with
+      // deliberately HOT terms: 'the' ≈ 16% of all tokens (proximity's
+      // sweep sees ~0.2·L events/doc), the boilerplate trigram recurs
+      // every ~500 tokens (phrase's intersection lists grow ∝ L).
       val posIdx = TextStats.positionalIndex(docs, "doc_id", "text")
         .persist()
       posIdx.count() // index build OUTSIDE the timed sections
@@ -176,35 +151,28 @@ object LongDocSoak {
           invIdx, nTerms = 3))))
       val idxTimes = idxRuns.map { case (name, run) =>
         run() // warm
-        name -> (timed(run()) min timed(run()))
+        name -> (timed(run())._2.wall min timed(run())._2.wall)
       }.toMap
       posIdx.unpersist(); invIdx.unpersist()
       docs.unpersist(); small.unpersist()
-      results(k) = times ++ idxTimes
-      println(s"""{"scale":$k,"tokens_per_doc":$toks,"docs":$nDocs,""" +
-        (ops.map(_._1) ++ idxOpNames).map { n =>
-          s""""${n}_sec":${f"${results(k)(n)}%.2f"}""" }
-          .mkString(",") + "}")
+      report.scale(k, Map("tokens_per_doc" -> toks.toDouble,
+          "docs" -> nDocs.toDouble) ++
+        (times ++ idxTimes).map { case (n, t) => s"${n}_sec" -> t })
     }
 
-    if (scales.size >= 2) {
-      val lo = results(scales.head); val hi = results(scales.last)
-      val kRatio = scales.last.toDouble / scales.head
-      val ratios = (ops.map(_._1) ++ idxOpNames).map { name =>
-        name -> hi(name) / math.max(lo(name), 1e-9)
-      }
-      val superlinear = ratios.filter(_._2 > 2.5 * kRatio).map(_._1)
-      ratios.foreach { case (name, r) =>
+    val ratios = report.ratios()
+    if (ratios.nonEmpty) {
+      val kRatio = ratios("tokens_per_doc")
+      val opRatios = ratios.toSeq.filter(_._1.endsWith("_sec")).sortBy(_._1)
+      val superlinear = opRatios.filter(_._2 > 2.5 * kRatio).map(_._1)
+      opRatios.foreach { case (name, r) =>
         require(r < kRatio * kRatio,
           s"$name grew QUADRATICALLY in doc length: ${f"$r%.1f"}× " +
             s"wall at ${kRatio.toInt}× tokens")
       }
-      println(s"""{"metric":"longdoc_ratios","length_ratio":$kRatio,""" +
-        ratios.map { case (n, r) => s""""${n}_time_ratio":${f"$r%.2f"}""" }
-          .mkString(",") +
-        s""","near_linear":${superlinear.isEmpty},""" +
-        s""""superlinear_ops":[${superlinear.map("\"" + _ + "\"").mkString(",")}]}""")
+      println(Soak.line("tier" -> "longdoc",
+        "near_linear" -> superlinear.isEmpty,
+        "superlinear_ops" -> superlinear))
     }
-    spark.stop()
   }
 }

@@ -1,5 +1,7 @@
 package graft.tools
 
+import graft.llm.Dedup
+import graft.tools.Session.timed
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -8,8 +10,8 @@ import org.apache.spark.sql.functions._
   * (cold then warm, same JVM), so perf work knows whether the cost is
   * model fitting (driver-sequenced Lloyd/GD/BPE rounds), codegen, or
   * the scoring scan before touching anything. Not part of the gate —
-  * `runMain graft.tools.PerfProbe [probe ...]` with the Bench env
-  * (`SPARK_GRAFT_SF_DIR`); no args = all probes.
+  * `runMain graft.tools.Soak probe [probe ...]` with the Bench env
+  * (`SPARK_GRAFT_SF_DIR`); no probe names = all probes.
   *
   * Probes: `classifier`, `ivfpq`, `ivfpqsteps` (the steps inside
   * IvfPq.train), `bpe`, `kmeans`, `jaccard` (the q29 pipeline's
@@ -17,28 +19,13 @@ import org.apache.spark.sql.functions._
 object PerfProbe {
 
   private def time[A](name: String)(f: => A): A = {
-    val t0 = System.nanoTime()
-    val r = f
-    val sec = (System.nanoTime() - t0) / 1e9
-    println(f"PROBE $name%-28s $sec%8.3f s")
-    r
+    val (a, t) = timed(f)
+    println(Soak.line("tier" -> "probe", "probe" -> name, "sec" -> t.wall))
+    a
   }
 
-  def main(args: Array[String]): Unit = {
-    // machine-readable output contract: the f"" interpolator formats
-    // through the JVM DEFAULT locale, so a comma-decimal locale (de-DE,
-    // tr-TR) would emit "1,234" into the lines a caller parses
-    java.util.Locale.setDefault(java.util.Locale.ROOT)
+  def run(spark: SparkSession, scales: Seq[Int], args: Seq[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     val want: Set[String] = args.toSet
     def on(p: String): Boolean = want.isEmpty || want(p)
 
@@ -73,18 +60,18 @@ object PerfProbe {
       // seed sample, coarse Lloyd rounds, or the residual PQ fit.
       (1 to 2).foreach { round =>
         val d = time(s"ivfpq_modalDim_$round") {
-          val m = Similarity.modalDimForProbe(emb, "embedding"); m }
+          Similarity.modalDim(emb, "embedding") }
         val clean = emb.filter(
-          Similarity.usableVecColForProbe(col("embedding"), d))
+          Similarity.usableVecCol(col("embedding"), d))
         val seeds = time(s"ivfpq_seedSample_$round") {
-          Pq.seedSampleForProbe(clean, "vec_id", "embedding", 4) }
+          Pq.seedSample(clean, "vec_id", "embedding", 4) }
         val coarse = time(s"ivfpq_coarse_kmeans_$round") {
           Clustering.kmeans(clean, "vec_id", "embedding", 4,
             3, init = seeds)._2 }
         val resid = IvfPq.residuals(clean, "vec_id", "embedding", coarse)
           .select(col("vec_id"), col("embedding"))
         time(s"ivfpq_pq_fit_$round") {
-          Pq.trainPrefilteredForProbe(resid, "vec_id", "embedding",
+          Pq.trainPrefiltered(resid, "vec_id", "embedding",
             4, 8, 3, d) }
       }
     }
@@ -124,28 +111,34 @@ object PerfProbe {
     }
     if (on("jaccard")) {
       time("jaccard_exact_cold") {
-        graft.llm.Dedup.jaccardPairsExact(docs, "doc_id", "text",
+        Dedup.jaccardPairsExact(docs, "doc_id", "text",
           shingleLen = 16, threshold = 0.8).count() }
       time("jaccard_exact_warm") {
-        graft.llm.Dedup.jaccardPairsExact(docs, "doc_id", "text",
+        Dedup.jaccardPairsExact(docs, "doc_id", "text",
           shingleLen = 16, threshold = 0.8).count() }
       // stage attribution for the q29 pipeline: candidates WITHOUT the
       // exact-verify stage vs the full pipeline — the difference prices
       // the per-pair string re-shingling the verify UDF pays.
+      // (the census and prefix stage at jaccardPairsExact's defaults)
+      def prefixStage() = Dedup.censusPrefixIndex(docs, "doc_id", "text",
+        shingleLen = 16, threshold = 0.8, commonShingleCap = 100000,
+        censusSampleFraction = 1.0, saltBlock = 2048, maxSalts = 64)
       time("jaccard_census_only") {
-        graft.llm.Dedup.censusForProbe(docs, "text", 16) }
+        Dedup.censusDfMap(docs, "text", shingleLen = 16,
+          commonShingleCap = 100000, censusSampleFraction = 1.0).size }
       time("jaccard_prefix_index") {
-        graft.llm.Dedup.prefixIndexForProbe(docs, "doc_id", "text",
-          16, 0.8) }
-      graft.llm.Dedup.releaseCaches()
+        val (prefix, cleanup) = prefixStage()
+        Dedup.registerCleanup(cleanup)
+        prefix.count() }
+      Dedup.releaseCaches()
       time("jaccard_candidates_only") {
-        graft.llm.Dedup.jaccardCandidatesForProbe(docs, "doc_id",
-          "text", shingleLen = 16, threshold = 0.8).count() }
-      graft.llm.Dedup.releaseCaches()
+        val (prefix, cleanup) = prefixStage()
+        Dedup.registerCleanup(cleanup)
+        Dedup.selfJoinCandidates(prefix, 0.8).count() }
+      Dedup.releaseCaches()
       time("jaccard_full_again") {
-        graft.llm.Dedup.jaccardPairsExact(docs, "doc_id", "text",
+        Dedup.jaccardPairsExact(docs, "doc_id", "text",
           shingleLen = 16, threshold = 0.8).count() }
     }
-    spark.stop()
   }
 }

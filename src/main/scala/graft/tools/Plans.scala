@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only plan dumper for the optimization rounds: writes each named
   * gate query's `explain("formatted")` output to
   * `<outDir>/<name>_<suffix>.txt` so before/after plan shapes can be
@@ -16,20 +14,11 @@ import org.apache.spark.sql.SparkSession
   */
 object Plans {
   def main(args: Array[String]): Unit = {
-    java.util.Locale.setDefault(java.util.Locale.ROOT)
     require(args.length >= 2, "usage: Plans <outDir> <suffix> [query ...]")
     val outDir = java.nio.file.Paths.get(args(0))
     val suffix = args(1)
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session(defaultCpus = 32)
     java.nio.file.Files.createDirectories(outDir)
     // shared artifacts staged exactly like the bench, so consumer
     // entries plan over the same stored frames the bench times

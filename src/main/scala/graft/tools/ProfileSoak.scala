@@ -1,15 +1,17 @@
 package graft.tools
 
 import graft.llm.{Sketch, TextStats}
+import graft.tools.Session.timed
 import org.apache.spark.sql.{SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Scale-margin soak for the corpus-profiling family — collocations
   * (q108), the histogram percentile sketch (q109), gram novelty
   * (q110), and per-group top-k tokens (q111) — on the [[DedupSoak]]
-  * adversarial corpus (the growth CURVE is the evidence, the r11
-  * lesson). The corpus is adversarial for exactly these operators:
-  * the 1-in-5 boilerplate prefix makes ~16 adjacent pairs
+  * adversarial corpus (the growth CURVE is the evidence: one
+  * fixed-size point hides super-linear growth). The corpus is
+  * adversarial for exactly these operators: the 1-in-5 boilerplate
+  * prefix makes ~16 adjacent pairs
   * census-hot (each n/5 occurrences — the collocation join's heavy
   * keys), and the same prefix is the novelty audit's worst case
   * (a gram shared by n/5 documents must NOT reach the df=1 join).
@@ -32,38 +34,13 @@ import org.apache.spark.sql.functions._
   * exactly 1e6 on isolated random docs and strictly below on family
   * members; the group report emits k rows per group.
   *
-  * Usage: `runMain graft.tools.ProfileSoak [scales]` (default
-  * "1,10,30" — multiples of the 5,000-doc sf0.1 documents shape).
-  * One JSON line per scale, then a `ratios` line. */
+  * Usage: `runMain graft.tools.Soak profile [scales]` (default
+  * "1,10,30" — multiples of the 5,000-doc sf0.1 documents shape). */
 object ProfileSoak {
 
-  private def timed[A](body: => A): (A, Double) = {
-    val t0 = System.nanoTime()
-    val r = body
-    (r, (System.nanoTime() - t0) / 1e9)
-  }
-
-  def main(args: Array[String]): Unit = {
-    // machine-readable output contract (★r19 default-locale
-    // sweep): the f"" interpolator formats through the JVM DEFAULT
-    // locale, so a comma-decimal locale (de-DE, tr-TR) would emit
-    // "1,234" into the JSON lines the driver parses
-    java.util.Locale.setDefault(java.util.Locale.ROOT)
-    val scales = args.headOption.getOrElse("1,10,30")
-      .split(",").map(_.trim.toInt).toSeq
+  def run(spark: SparkSession, scales: Seq[Int], args: Seq[String]): Unit = {
     val baseDocs = 5000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000000).selectExpr("sum(id)").write
-      .format("noop").mode(SaveMode.Overwrite).save()
-
-    val results = scala.collection.mutable.LinkedHashMap
-      .empty[Int, Map[String, Double]]
+    val report = new Soak.Report("profile")
     scales.foreach { k =>
       val n = baseDocs * k
       val docs = DedupSoak.corpus(spark, n)
@@ -168,26 +145,11 @@ object ProfileSoak {
         s"a non-boilerplate token surfaced: ${hh.mkString(";")}")
 
       docs.unpersist()
-      results(k) = Map("colloc" -> tColloc, "hist" -> tHist,
-        "novel" -> tNovel, "group" -> tGroup, "pairs" -> tPairs,
-        "hh" -> tHh)
-      println(s"""{"scale":$k,"docs":$n,""" +
-        s""""colloc_sec":${f"$tColloc%.2f"},""" +
-        s""""hist_sec":${f"$tHist%.2f"},""" +
-        s""""novel_sec":${f"$tNovel%.2f"},""" +
-        s""""group_sec":${f"$tGroup%.2f"},""" +
-        s""""pairs_sec":${f"$tPairs%.2f"},""" +
-        s""""hh_sec":${f"$tHh%.2f"}}""")
+      report.scale(k, Map("docs" -> n.toDouble,
+        "colloc_sec" -> tColloc.wall, "hist_sec" -> tHist.wall,
+        "novel_sec" -> tNovel.wall, "group_sec" -> tGroup.wall,
+        "pairs_sec" -> tPairs.wall, "hh_sec" -> tHh.wall))
     }
-    val base = results(scales.head)
-    val ratios = scales.tail.map { k =>
-      val r = results(k)
-      s""""${k}x":{""" +
-        Seq("colloc", "hist", "novel", "group", "pairs", "hh")
-          .map(m => s""""$m":${f"${r(m) / base(m)}%.1f"}""")
-          .mkString(",") + "}"
-    }.mkString(",")
-    println(s"""{"ratios":{$ratios}}""")
-    spark.stop()
+    report.ratios()
   }
 }

@@ -1,16 +1,17 @@
 package graft.tools
 
 import graft.llm.{Dedup, Packing, Sampling, TextStats}
+import graft.tools.Session.timed
 import org.apache.spark.sql.{SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Scale-margin soak for the round-13 selection/layout family —
+/** Scale-margin soak for the selection/layout family —
   * duplicated-span coverage (q95), temperature rebalancing (q94),
   * DSIR learn + score (q92), and the epoch shuffle (q96) — on the
   * [[DedupSoak]] adversarial corpus (20% boilerplate-prefixed docs:
   * a census-scale hot shingle set, exactly the coverage audit's
   * worst case) at growing scale, so the growth CURVE is the
-  * evidence, the r11 lesson.
+  * evidence: one fixed-size point hides super-linear growth.
   *
   * What linear-ish ratios demonstrate per operator:
   *   - coverage: the gram aggregation + occurrence join + per-doc
@@ -29,38 +30,13 @@ import org.apache.spark.sql.functions._
   * (every stratum abundant); the epoch shuffle emits a perfect
   * 0..n-1 rank partition.
   *
-  * Usage: `runMain graft.tools.SelectSoak [scales]` (default
-  * "1,10,30" — multiples of the 5,000-doc sf0.1 documents shape).
-  * One JSON line per scale, then a `ratios` line. */
+  * Usage: `runMain graft.tools.Soak select [scales]` (default
+  * "1,10,30" — multiples of the 5,000-doc sf0.1 documents shape). */
 object SelectSoak {
 
-  private def timed[A](body: => A): (A, Double) = {
-    val t0 = System.nanoTime()
-    val r = body
-    (r, (System.nanoTime() - t0) / 1e9)
-  }
-
-  def main(args: Array[String]): Unit = {
-    // machine-readable output contract (★r19 default-locale
-    // sweep): the f"" interpolator formats through the JVM DEFAULT
-    // locale, so a comma-decimal locale (de-DE, tr-TR) would emit
-    // "1,234" into the JSON lines the driver parses
-    java.util.Locale.setDefault(java.util.Locale.ROOT)
-    val scales = args.headOption.getOrElse("1,10,30")
-      .split(",").map(_.trim.toInt).toSeq
+  def run(spark: SparkSession, scales: Seq[Int], args: Seq[String]): Unit = {
     val baseDocs = 5000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000000).selectExpr("sum(id)").write
-      .format("noop").mode(SaveMode.Overwrite).save()
-
-    val results = scala.collection.mutable.LinkedHashMap
-      .empty[Int, Map[String, Double]]
+    val report = new Soak.Report("select")
     scales.foreach { k =>
       val n = baseDocs * k
       val docs = DedupSoak.corpus(spark, n)
@@ -153,24 +129,11 @@ object SelectSoak {
         s"epoch shuffle is not a perfect rank partition: $rankOk")
 
       docs.unpersist()
-      results(k) = Map("cov" -> tCov, "span" -> tSpan, "mix" -> tMix,
-        "learn" -> tLearn, "score" -> tScore, "shuffle" -> tShuffle)
-      println(s"""{"scale":$k,"docs":$n,""" +
-        s""""cov_sec":${f"$tCov%.2f"},"span_sec":${f"$tSpan%.2f"},""" +
-        s""""mix_sec":${f"$tMix%.2f"},""" +
-        s""""dsir_learn_sec":${f"$tLearn%.2f"},""" +
-        s""""dsir_score_sec":${f"$tScore%.2f"},""" +
-        s""""shuffle_sec":${f"$tShuffle%.2f"}}""")
+      report.scale(k, Map("docs" -> n.toDouble,
+        "cov_sec" -> tCov.wall, "span_sec" -> tSpan.wall,
+        "mix_sec" -> tMix.wall, "dsir_learn_sec" -> tLearn.wall,
+        "dsir_score_sec" -> tScore.wall, "shuffle_sec" -> tShuffle.wall))
     }
-    val base = results(scales.head)
-    val ratios = scales.tail.map { k =>
-      val r = results(k)
-      s""""${k}x":{""" +
-        Seq("cov", "span", "mix", "learn", "score", "shuffle")
-          .map(m => s""""$m":${f"${r(m) / base(m)}%.1f"}""")
-          .mkString(",") + "}"
-    }.mkString(",")
-    println(s"""{"ratios":{$ratios}}""")
-    spark.stop()
+    report.ratios()
   }
 }

@@ -6,7 +6,7 @@ import graft.catalog.{Catalog, TableDef}
 import graft.model.DataFormat
 import org.apache.spark.sql.functions._
 
-/** Default-locale independence sweep (★r19 — the Turkish-I class). A
+/** Default-locale independence sweep (the Turkish-I class). A
   * JVM's default locale is cluster-operator state, not data: under
   * `tr-TR`, `"ID".toLowerCase` is `"ıd"` (dotless ı) and
   * `"i".toUpperCase` is `"İ"`, so any identifier/keyword/config
@@ -23,8 +23,10 @@ import org.apache.spark.sql.functions._
   * (`ParquetStats.columnBytes` identifier matching — an UPPERCASE
   * column argument selected ZERO chunks on a tr-TR JVM;
   * `Catalog.validateSerde` config-value compare; `GateLint` SQL
-  * keyword scan); and every `main` entry (`Bench`, `Verify`, the soak
-  * tools) pins the default locale to ROOT before its first `f""`.
+  * keyword scan); and every `main` entry (`Bench`, `Verify`, `E2EDemo`,
+  * `Plans`, `Soak`) pins the default locale to ROOT through
+  * `graft.tools.Session` before its first `f""`, while the soak
+  * reporter formats under an explicit `Locale.ROOT` (checked below).
   */
 class DefaultLocaleSpec extends SparkSpec {
   import spark.implicits._
@@ -95,6 +97,43 @@ class DefaultLocaleSpec extends SparkSpec {
       // "customerid" vs field "CustomerId" — contains 'I'/'i'
       val dt = Catalog.resolveIdentifier(schema, "CUSTOMERID")
       assert(dt.typeName == "long")
+    }
+  }
+
+  test("the soak reporter's per-scale and ratio lines use '.' decimals " +
+    "and parse as JSON under tr-TR") {
+    val out = new java.io.ByteArrayOutputStream()
+    underLocale("tr-TR") {
+      Console.withOut(out) {
+        val report = new graft.tools.Soak.Report("t")
+        report.scale(1, Map("a_sec" -> 1.5, "rows" -> 10.0))
+        report.scale(2, Map("a_sec" -> 3.25, "rows" -> 20.0))
+        report.ratios()
+      }
+    }
+    val lines = out.toString("UTF-8").split("\n").toSeq
+    assert(lines.size == 3, s"want 2 scale lines + 1 ratio line: $lines")
+    val json = lines.map(new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(_))
+    assert(lines(0).contains("\"a_sec\":1.500"), lines(0))
+    assert(json.map(_.get("tier").asText) == Seq("t", "t", "t"))
+    assert(json.take(2).map(_.get("scale").asInt) == Seq(1, 2))
+    assert(json.take(2).map(_.get("a_sec").asDouble) == Seq(1.5, 3.25))
+    assert(json(2).get("ratios").asText == "2/1")
+    assert(json(2).get("a_sec").asDouble == 2.167)
+    assert(json(2).get("rows").asDouble == 2.0)
+  }
+
+  test("Soak rejects a missing or unknown tier with a usage line that " +
+    "lists every tier") {
+    Seq(Array.empty[String], Array("no-such-tier")).foreach { args =>
+      val e = intercept[IllegalArgumentException] {
+        graft.tools.Soak.main(args)
+      }
+      assert(e.getMessage.startsWith("usage: Soak <tier>"), e.getMessage)
+      graft.tools.Soak.tiers.keys.foreach { tier =>
+        assert(e.getMessage.contains(tier), s"$tier missing: ${e.getMessage}")
+      }
     }
   }
 }

@@ -536,6 +536,12 @@ class PlanAuditSpec extends SparkSpec {
         (d, read.get())
       } finally spark.sparkContext.removeSparkListener(listener)
     }
+    // The stored cluster artifact is write-once per corpus, staged
+    // before any timing by Bench and Plans: build it here with one
+    // untimed run of the entry, so the fused side reads the same stored
+    // frame whether or not an earlier test already built it.
+    SparkEntry.queries("q117_curation_v2")(spark, sfDir).collect()
+    graft.llm.Dedup.releaseCaches()
     val (df, fusedBytes) =
       measure(SparkEntry.queries("q117_curation_v2")(spark, sfDir))
     graft.llm.Dedup.releaseCaches()

@@ -53,11 +53,11 @@ class PqSpec extends SparkSpec {
     val batched = Pq.train(data, "vec_id", "embedding", m, ksub, iters)
     // the former implementation, re-expressed: one shared seed sample,
     // then m separate kmeans fits over the slice projections
-    val d = Similarity.modalDimForProbe(data, "embedding")
+    val d = Similarity.modalDim(data, "embedding")
     val usable = data.filter(
-      Similarity.usableVecColForProbe(
+      Similarity.usableVecCol(
         org.apache.spark.sql.functions.col("embedding"), d))
-    val seeds = Pq.seedSampleForProbe(usable, "vec_id", "embedding", ksub)
+    val seeds = Pq.seedSample(usable, "vec_id", "embedding", ksub)
     val separate = (0 until m).map { j =>
       Clustering.kmeans(
         usable.select(org.apache.spark.sql.functions.col("vec_id"),
