@@ -121,9 +121,9 @@ object Catalog {
     if (lib == JsonOpenxSerde) {
       Seq("ignore.malformed.json", "dots.in.keys").foreach { p =>
         // Locale.ROOT: config-value comparison, not linguistic case
-        // (★r19 default-locale sweep — "true" happens to survive a
-        // tr-TR uppercase today, but the contract must not hinge on
-        // which letters the value contains)
+        // ("true" happens to survive a tr-TR uppercase, but the
+        // contract must not hinge on which letters the value
+        // contains; DefaultLocaleSpec pins it)
         require(!table.serdeParams.get(p)
             .map(_.toUpperCase(java.util.Locale.ROOT))
             .contains("TRUE"),

@@ -112,8 +112,7 @@ object JobRunner {
             Finder.writeManifestAudit(spark, jobId, m.id, groups, d))
           if (groups.nonEmpty) {
             val data = Finder.scoped(readTableFn(spark, table), m)
-            val paths = Finder.matchedFiles(spark, data, groups,
-                inSetMaxKeys = settings.inSetMaxKeys)
+            val paths = Finder.matchedFiles(spark, data, groups)
               .collect().map(r => r.getString(0)).toSeq
             found(m.id) = paths
             val bytes = table.format match {

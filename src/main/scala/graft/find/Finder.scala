@@ -293,10 +293,9 @@ object Finder {
     * source rows are preserved (Athena's `WHERE a OR b` keeps them). Falls
     * back to the semi-join strategy above [[InSetMaxKeys]]. */
   def matchedRows(spark: SparkSession, data: DataFrame,
-                  groups: Seq[GroupMatches],
-                  inSetMaxKeys: Int = InSetMaxKeys): DataFrame = {
+                  groups: Seq[GroupMatches]): DataFrame = {
     require(groups.nonEmpty, "no match groups — nothing to find")
-    if (totalKeys(groups) > inSetMaxKeys)
+    if (totalKeys(groups) > InSetMaxKeys)
       matchedRowsViaJoin(spark, data, groups)
     else data.filter(matchPredicate(spark, groups))
   }
@@ -311,10 +310,9 @@ object Finder {
     *             partition-filtered if the mapper scopes partitions)
     */
   def matchedFiles(spark: SparkSession, data: DataFrame,
-                   groups: Seq[GroupMatches],
-                   inSetMaxKeys: Int = InSetMaxKeys): DataFrame = {
+                   groups: Seq[GroupMatches]): DataFrame = {
     require(groups.nonEmpty, "no match groups — nothing to find")
-    if (totalKeys(groups) > inSetMaxKeys)
+    if (totalKeys(groups) > InSetMaxKeys)
       matchedFilesViaJoin(spark, data, groups)
     else
       data.filter(matchPredicate(spark, groups))
@@ -402,8 +400,7 @@ object Finder {
   /** One `(columns_key, match_key)` struct per column group, computed from
     * the row's own columns — exploding this array turns the k-way
     * per-group join into ONE broadcast hash equi-join over a single scan
-    * (VERDICT r2 "What's wrong" #5: the per-group union rescanned the
-    * table k times). */
+    * (a per-group union would rescan the table once per group). */
   private def groupKeyStructs(groups: Seq[GroupMatches]): Column =
     array(groups.map(gm => struct(
       lit(gm.group.key).as("ck"), dataKey(gm.group).as("mk"))): _*)

@@ -1,15 +1,19 @@
 package graft.forget
 
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import graft.find.Finder
 import graft.find.Finder.GroupMatches
+import graft.forget.VersionedStore.localPath
 import graft.model._
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.parquet.example.data.Group
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader, ParquetWriter}
-import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
+import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetWriter}
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.ColumnIOFactory
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.{GroupType, PrimitiveType, Type => PType}
 import org.apache.parquet.schema.LogicalTypeAnnotation.{DecimalLogicalTypeAnnotation, IntLogicalTypeAnnotation}
@@ -31,17 +35,26 @@ import scala.util.control.NonFatal
   * replace containers, and the per-object counts flow back through
   * accumulators + the collected task outcomes instead of DynamoDB events.
   *
+  * This object holds the only per-format rewrite loops: one for parquet
+  * and one for JSON lines. A [[RecordRewrite]] strategy supplies only
+  * what becomes of each record (a [[Disposition]]: keep, drop or
+  * replace) and its zero-change wording. Deletion ([[DeleteRewrite]])
+  * and PII redaction ([[graft.llm.PiiForget]]) are two such strategies,
+  * so format I/O (local-nio vs Hadoop endpoints, codec, gzip, line
+  * framing, error wording) is decided here alone.
+  *
   * Per-task semantics mirror the reference engine exactly:
-  *   - parquet: stream rows, drop any row where a match group hits
+  *   - parquet: one footer read per object; stream its row groups and
+  *     drop any row where a match group hits
   *     (parquet_handler.py:133-177), native-typed comparison with decimal
   *     coercion (parquet_handler.py:102-130) and case-insensitive
   *     dot-path resolution (parquet_handler.py:24-33,45-61); the output
   *     writer reuses the source schema and compression codec. Row-group
   *     boundaries are the writer's choice — documented deviation
   *     (SURVEY.md §7.4 risk 1).
-  *   - JSON-lines: parse each line for the predicate only; survivors are
-  *     written as the ORIGINAL line + '\n' (json_handler.py:49-72),
-  *     gzip in/out by extension (main.py:172).
+  *   - JSON-lines: parse each line once, for the disposition only;
+  *     kept lines are written as the ORIGINAL line + '\n'
+  *     (json_handler.py:49-72), gzip in/out by extension (main.py:172).
   *   - commit protocol: capture source (length, mtime) before reading,
   *     write survivors to a staging sibling, verify the source is
   *     unchanged, then swap — the local-FS analog of the reference's
@@ -130,8 +143,8 @@ object DistributedRewrite {
   // ChecksumFileSystem: each open VERIFIES a .crc sidecar (re-reading
   // and CRC-ing the whole file), each create WRITES one, and
   // delete/rename double their syscalls to keep sidecars in step. The
-  // rewrite task would pay that tax ~6× per object (footer open, record
-  // read, staged write, stat, swap, version copy) — pure overhead on a
+  // rewrite task would pay that tax ~5× per object (read, staged
+  // write, stat, swap, version copy) — pure overhead on a
   // many-small-object forget job, and the dominant per-object cost at
   // the 10k/40k soak rungs. Where the filesystem is local the task
   // uses java.nio / parquet's LocalInputFile|LocalOutputFile
@@ -141,12 +154,6 @@ object DistributedRewrite {
   // Hadoop path. A swap must also drop a PRE-EXISTING stale sidecar
   // (e.g. the source object was written through ChecksumFileSystem):
   // content changed, so a later checksummed read would fail on it.
-
-  /** The object's java.nio path when (and only when) its FileSystem is
-    * the local one — the [[VersionedStore.localPath]] rule. */
-  private def nioPath(fs: org.apache.hadoop.fs.FileSystem,
-                      p: HPath): Option[java.nio.file.Path] =
-    VersionedStore.localPath(fs, p)
 
   /** ChecksumFileSystem sidecar sibling (`.<name>.crc`). */
   private def crcSidecar(p: java.nio.file.Path): java.nio.file.Path =
@@ -343,7 +350,7 @@ object DistributedRewrite {
                               m: HPath, processed: Long,
                               deleted: Long): Unit = {
     val bytes = s"$processed,$deleted".getBytes("UTF-8")
-    VersionedStore.localPath(fs, m) match {
+    localPath(fs, m) match {
       case Some(p) =>
         // java.nio for local paths: a Hadoop LocalFileSystem create costs
         // ~25 ms (crc sidecar + permission bookkeeping) — pure overhead
@@ -393,8 +400,8 @@ object DistributedRewrite {
         s"$src changed during rewrite (len ${st.getLen}!=$srcLen or mtime " +
           s"${st.getModificationTime}!=$srcMtime) — rolled back")
     }
-    val nioDest = nioPath(fs, dest)
-    val nioStaged = nioPath(fs, staged)
+    val nioDest = localPath(fs, dest)
+    val nioStaged = localPath(fs, staged)
     // Version capture: when the swap below is the ATOMIC local-FS
     // rename AND the mapper purges versions anyway (deleteOldVersions),
     // the capture→swap→purge sequence nets to NOTHING on success — the
@@ -478,32 +485,59 @@ object DistributedRewrite {
   // The one-job driver entry
   // ------------------------------------------------------------------
 
-  /** Task-side per-object rewrite strategy: how ONE object's records
-    * are turned into its staged replacement. The surrounding machinery
-    * — staging paths, CSE envelope, versioned commit, idempotency
-    * markers, marker sweep, events — is identical for every strategy;
-    * [[run]] (row deletion) and a text-redaction rewrite
-    * ([[graft.llm.PiiForget]]) differ ONLY here. Implementations must
-    * be Serializable (they ship to executors). Returns
+  /** Task-side per-object rewrite: how ONE object becomes its staged
+    * replacement. The surrounding machinery — staging paths, CSE
+    * envelope, versioned commit, idempotency markers, marker sweep,
+    * events — is identical for every strategy. Implementations must be
+    * Serializable (they ship to executors). Returns
     * (rowsProcessed, rowsChanged); `rowsChanged == 0` on a Found object
     * is the Find/rewrite-inconsistency hard error (reference
-    * main.py:182-187), worded by [[zeroChangeMessage]]. */
+    * main.py:182-187), worded by [[zeroChangeMessage]].
+    *
+    * The file-level methods are the seam failure injection wraps; a
+    * real strategy is a [[RecordRewrite]], which runs this object's
+    * shared loops. */
   private[graft] trait TaskRewrite extends Serializable {
     def parquet(conf: Configuration, src: HPath, staged: HPath): (Long, Long)
     def json(conf: Configuration, src: HPath, staged: HPath): (Long, Long)
     def zeroChangeMessage(path: String): String
   }
 
-  /** The deletion strategy behind [[run]] (`private[forget]` so the
-    * crash-recovery spec can wrap it with an injected post-staging
-    * failure). */
+  /** What the shared loops do with one parquet record or one JSON line. */
+  private[graft] sealed trait Disposition[+A]
+  /** Write the record unchanged; a JSON line keeps its raw bytes. */
+  private[graft] case object Keep extends Disposition[Nothing]
+  /** Leave the record out of the rewritten object. */
+  private[graft] case object Drop extends Disposition[Nothing]
+  /** Write `value` in the record's place; a JSON node is re-serialized. */
+  private[graft] final case class Replace[A](value: A) extends Disposition[A]
+
+  /** The disposition seam: a strategy says what becomes of each parquet
+    * record ([[record]]) and each parsed JSON line ([[line]]); the one
+    * parquet loop and the one JSON-lines loop do every byte of format
+    * I/O. `rowsChanged` counts the records dropped or replaced. A
+    * disposition may mutate and return the record it was given. */
+  private[graft] abstract class RecordRewrite extends TaskRewrite {
+    def record(g: Group): Disposition[Group]
+    def line(node: JsonNode): Disposition[JsonNode]
+    final def parquet(conf: Configuration, src: HPath,
+                      staged: HPath): (Long, Long) =
+      rewriteParquet(conf, src, staged, this)
+    final def json(conf: Configuration, src: HPath,
+                   staged: HPath): (Long, Long) =
+      rewriteJson(conf, src, staged, this)
+  }
+
+  /** The deletion strategy behind [[run]]: drop every matching record
+    * (`private[forget]` so the crash-recovery spec can wrap it with an
+    * injected post-staging failure). */
   private[forget] final class DeleteRewrite(pqSpecs: Seq[TaskGroupSpec],
                                             jsonEval: JsonMatch.Evaluator)
-      extends TaskRewrite {
-    def parquet(conf: Configuration, src: HPath, staged: HPath): (Long, Long) =
-      rewriteParquetTaskTo(conf, src, staged, pqSpecs)
-    def json(conf: Configuration, src: HPath, staged: HPath): (Long, Long) =
-      rewriteJsonTaskTo(conf, src, staged, jsonEval)
+      extends RecordRewrite {
+    def record(g: Group): Disposition[Group] =
+      if (recordMatches(g, pqSpecs)) Drop else Keep
+    def line(node: JsonNode): Disposition[JsonNode] =
+      if (jsonEval.matches(node)) Drop else Keep
     def zeroChangeMessage(path: String): String =
       s"$path was found by Find but Forget deleted 0 rows"
   }
@@ -583,7 +617,7 @@ object DistributedRewrite {
             catch { case _: java.io.FileNotFoundException => None }
           val mfs = dest.getFileSystem(conf)
           val marker = doneMarker(dest, jobId)
-          val markerExists = nioPath(mfs, marker) match {
+          val markerExists = localPath(mfs, marker) match {
             case Some(p) => java.nio.file.Files.exists(p)
             case None => mfs.exists(marker)
           }
@@ -598,8 +632,7 @@ object DistributedRewrite {
             // (executor lost before reporting / speculative duplicate):
             // replay its recorded counts instead of re-rewriting —
             // Spark dropped the lost attempt's accumulator updates
-            val (p0, d0) =
-              readDoneMarker(dest.getFileSystem(conf), doneMarker(dest, jobId))
+            val (p0, d0) = readDoneMarker(mfs, marker)
             accProcessed.add(p0)
             accDeleted.add(d0)
             TaskOutcome(u.path, ok = true, p0, d0,
@@ -652,8 +685,7 @@ object DistributedRewrite {
             }
             commitTask(conf, src, dest, staged, srcLen, srcMtime,
               u.deleteOldVersions)
-            writeDoneMarker(dest.getFileSystem(conf),
-              doneMarker(dest, jobId), processed, deleted)
+            writeDoneMarker(mfs, marker, processed, deleted)
             accProcessed.add(processed)
             accDeleted.add(deleted)
             TaskOutcome(u.path, ok = true, processed, deleted,
@@ -750,44 +782,37 @@ object DistributedRewrite {
     * path: java.nio-backed LocalInputFile/LocalOutputFile on a local
     * FileSystem (no ChecksumFileSystem sidecar verify/write — see the
     * fast-path note above), the Hadoop file abstractions anywhere
-    * else. Shared with [[graft.llm.PiiForget]]'s scrub rewrite. */
-  private[graft] def parquetInput(conf: Configuration,
-                                  src: HPath): org.apache.parquet.io.InputFile =
-    nioPath(src.getFileSystem(conf), src) match {
+    * else. */
+  private def parquetInput(conf: Configuration,
+                           src: HPath): org.apache.parquet.io.InputFile =
+    localPath(src.getFileSystem(conf), src) match {
       case Some(p) => new org.apache.parquet.io.LocalInputFile(p)
       case None => HadoopInputFile.fromPath(src, conf)
     }
 
-  /** Every ParquetReader.Builder ctor except (InputFile,
-    * ParquetConfiguration) — and the footer reader's no-options open
-    * overload — eagerly constructs a FRESH `new Configuration()`,
-    * which re-parses core-default.xml/core-site.xml out of the jars
-    * (~8 ms of Inflater + woodstox XML work, not parquet). On a
-    * many-small-object job that tax would land on every footer read;
-    * both helpers below thread the caller's existing conf instead. */
-  private[graft] def groupReader(conf: Configuration,
-                                 src: HPath): ParquetReader[Group] =
-    new ParquetReader.Builder[Group](parquetInput(conf, src),
-        new org.apache.parquet.conf.HadoopParquetConfiguration(conf)) {
-      override def getReadSupport()
-          : org.apache.parquet.hadoop.api.ReadSupport[Group] =
-        new GroupReadSupport()
-    }.build()
+  /** The one parquet open in the engine, with the caller's conf: the
+    * no-options open overload (like every ParquetReader.Builder ctor
+    * but the ParquetConfiguration one) eagerly constructs a FRESH
+    * `new Configuration()`, which re-parses core-default.xml and
+    * core-site.xml out of the jars (~8 ms of Inflater + woodstox XML
+    * work, not parquet) — a tax a many-small-object job would pay per
+    * object. */
+  private def openParquet(conf: Configuration,
+                          src: HPath): ParquetFileReader =
+    ParquetFileReader.open(parquetInput(conf, src),
+      org.apache.parquet.HadoopReadOptions.builder(conf).build())
 
-  /** Footer read reusing the caller's conf (see [[groupReader]]) — the
-    * one parquet footer-open in the engine: the rewrite task and the
-    * Find phase's scan-bytes stat ([[graft.tools.ParquetStats]]) both
-    * go through it. */
+  /** Footer read through [[openParquet]]; the Find phase's scan-bytes
+    * stat ([[graft.tools.ParquetStats]]) uses it. */
   private[graft] def readFooter(conf: Configuration, src: HPath)
       : org.apache.parquet.hadoop.metadata.ParquetMetadata = {
-    val r = ParquetFileReader.open(parquetInput(conf, src),
-      org.apache.parquet.HadoopReadOptions.builder(conf).build())
+    val r = openParquet(conf, src)
     try r.getFooter finally r.close()
   }
 
-  private[graft] def groupWriterBuilder(conf: Configuration, staged: HPath)
+  private def groupWriterBuilder(conf: Configuration, staged: HPath)
       : org.apache.parquet.hadoop.example.ExampleParquetWriter.Builder =
-    (nioPath(staged.getFileSystem(conf), staged) match {
+    (localPath(staged.getFileSystem(conf), staged) match {
       case Some(p) =>
         ExampleParquetWriter.builder(new org.apache.parquet.io.LocalOutputFile(p))
       case None => ExampleParquetWriter.builder(staged)
@@ -795,9 +820,9 @@ object DistributedRewrite {
       .withWriteMode(org.apache.parquet.hadoop.ParquetFileWriter.Mode.OVERWRITE)
 
   /** Best-effort staged-file cleanup (error paths). */
-  private[graft] def deleteStaged(conf: Configuration, staged: HPath): Unit = {
+  private def deleteStaged(conf: Configuration, staged: HPath): Unit = {
     val fs = staged.getFileSystem(conf)
-    nioPath(fs, staged) match {
+    localPath(fs, staged) match {
       case Some(p) => java.nio.file.Files.deleteIfExists(p); ()
       case None => fs.delete(staged, false); ()
     }
@@ -812,33 +837,50 @@ object DistributedRewrite {
       catch { case _: java.net.URISyntaxException => p.stripPrefix("file:") }
     else p
 
-  /** Variants writing directly to a given staging path (no commit). */
-  private def rewriteParquetTaskTo(conf: Configuration, src: HPath,
-                                   staged: HPath,
-                                   specs: Seq[TaskGroupSpec]): (Long, Long) = {
-    val footer = readFooter(conf, src)
-    val schema = footer.getFileMetaData.getSchema
-    val codec =
-      if (footer.getBlocks.isEmpty || footer.getBlocks.get(0).getColumns.isEmpty)
-        CompressionCodecName.SNAPPY
-      else footer.getBlocks.get(0).getColumns.get(0).getCodec
+  /** The one parquet rewrite loop, writing to a given staging path (no
+    * commit). ONE open per object: the schema and compression codec
+    * come from that reader's footer, and the same reader then streams
+    * its row groups, `getRowCount` records each. Every record goes to
+    * `rw.record`; the writer reuses the source schema and codec.
+    * Partial staged output is deleted on failure. */
+  private def rewriteParquet(conf: Configuration, src: HPath, staged: HPath,
+                             rw: RecordRewrite): (Long, Long) = {
     var processed = 0L
-    var deleted = 0L
-    val reader: ParquetReader[Group] = groupReader(conf, src)
+    var changed = 0L
+    val reader = openParquet(conf, src)
     try {
+      val footer = reader.getFooter
+      val meta = footer.getFileMetaData
+      val schema = meta.getSchema
+      val codec =
+        if (footer.getBlocks.isEmpty || footer.getBlocks.get(0).getColumns.isEmpty)
+          CompressionCodecName.SNAPPY
+        else footer.getBlocks.get(0).getColumns.get(0).getCodec
+      val columnIO = new ColumnIOFactory(meta.getCreatedBy).getColumnIO(schema)
       val writer: ParquetWriter[Group] = groupWriterBuilder(conf, staged)
         .withType(schema)
         .withCompressionCodec(codec)
         .build()
       try {
-        var g = reader.read()
-        while (g != null) {
-          processed += 1
-          if (recordMatches(g, specs)) deleted += 1 else writer.write(g)
-          g = reader.read()
+        var pages = reader.readNextRowGroup()
+        while (pages != null) {
+          val records = columnIO.getRecordReader(pages,
+            new GroupRecordConverter(schema))
+          var left = pages.getRowCount
+          while (left > 0) {
+            val g = records.read()
+            processed += 1
+            rw.record(g) match {
+              case Keep => writer.write(g)
+              case Drop => changed += 1
+              case Replace(r) => changed += 1; writer.write(r)
+            }
+            left -= 1
+          }
+          pages = reader.readNextRowGroup()
         }
       } finally writer.close()
-      (processed, deleted)
+      (processed, changed)
     } catch {
       case NonFatal(e) =>
         deleteStaged(conf, staged) // no partial staging
@@ -846,36 +888,43 @@ object DistributedRewrite {
     } finally reader.close()
   }
 
-  /** Streaming line-at-a-time JSON rewrite: constant memory regardless of
-    * (decompressed) object size — one pass splitting on '\n' bytes, the
-    * raw line bytes written through verbatim + '\n' (json_handler.py:70;
-    * the final unterminated line still counts, boto_utils.py:251-256).
-    * Partial staged output is deleted on failure. */
   /** Raw byte stream endpoints on the fastest correct IO path (the
     * [[parquetInput]] rule for line-format rewrites); the nio output
     * is buffered because line rewrites issue many small writes. */
-  private[graft] def byteSource(conf: Configuration,
-                                src: HPath): java.io.InputStream =
-    nioPath(src.getFileSystem(conf), src) match {
+  private def byteSource(conf: Configuration,
+                         src: HPath): java.io.InputStream =
+    localPath(src.getFileSystem(conf), src) match {
       case Some(p) => java.nio.file.Files.newInputStream(p)
       case None => src.getFileSystem(conf).open(src)
     }
 
-  private[graft] def byteSink(conf: Configuration,
-                              staged: HPath): java.io.OutputStream =
-    nioPath(staged.getFileSystem(conf), staged) match {
+  private def byteSink(conf: Configuration,
+                       staged: HPath): java.io.OutputStream =
+    localPath(staged.getFileSystem(conf), staged) match {
       case Some(p) => new java.io.BufferedOutputStream(
         java.nio.file.Files.newOutputStream(p), 1 << 16)
       case None => staged.getFileSystem(conf).create(staged, true)
     }
 
-  private def rewriteJsonTaskTo(conf: Configuration, src: HPath,
-                                staged: HPath,
-                                ev: JsonMatch.Evaluator): (Long, Long) = {
+  /** One mapper per JVM parses and re-serializes every JSON line
+    * (thread-safe once built). */
+  private lazy val jsonMapper = new ObjectMapper()
+
+  /** The one JSON-lines rewrite loop: constant memory regardless of
+    * (decompressed) object size — one pass splitting on '\n' bytes,
+    * each line parsed ONCE and its node handed to `rw.line`. A kept
+    * line is written as its raw bytes + '\n' (json_handler.py:70), a
+    * replacement as the re-serialized node + '\n'; the final
+    * unterminated line still counts (boto_utils.py:251-256). A line
+    * that does not parse fails the object with its line number
+    * (boto_utils.py:255-263). Partial staged output is deleted on
+    * failure. */
+  private def rewriteJson(conf: Configuration, src: HPath, staged: HPath,
+                          rw: RecordRewrite): (Long, Long) = {
     import java.util.zip.{GZIPInputStream, GZIPOutputStream}
     val gz = src.getName.endsWith(".gz")
     var processed = 0L
-    var deleted = 0L
+    var changed = 0L
     val in = {
       val raw = byteSource(conf, src)
       if (gz) new GZIPInputStream(raw, 1 << 16) else raw
@@ -890,19 +939,22 @@ object DistributedRewrite {
           val bytes = line.toByteArray
           line.reset()
           processed += 1
-          val s = new String(bytes, java.nio.charset.StandardCharsets.UTF_8)
-          val isMatch =
-            try ev.matches(s)
+          val node =
+            try jsonMapper.readTree(
+              new String(bytes, java.nio.charset.StandardCharsets.UTF_8))
             catch {
-              case e: IllegalArgumentException =>
-                // reference error carries the line number
-                // (boto_utils.py:255-263)
+              case e: Exception =>
                 throw new IllegalArgumentException(
                   s"Serialization error when parsing JSON lines: " +
                     s"line $processed: ${e.getMessage}", e)
             }
-          if (isMatch) deleted += 1
-          else { out.write(bytes); out.write('\n') }
+          rw.line(node) match {
+            case Keep => out.write(bytes); out.write('\n')
+            case Drop => changed += 1
+            case Replace(n) =>
+              changed += 1
+              out.write(jsonMapper.writeValueAsBytes(n)); out.write('\n')
+          }
         }
         var n = in.read(buf)
         while (n >= 0) {
@@ -921,7 +973,7 @@ object DistributedRewrite {
         }
         if (line.size() > 0) flushLine() // no trailing newline
       } finally out.close()
-      (processed, deleted)
+      (processed, changed)
     } catch {
       case NonFatal(e) => deleteStaged(conf, staged); throw e
     } finally in.close()

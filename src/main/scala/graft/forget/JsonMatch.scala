@@ -1,8 +1,10 @@
 package graft.forget
 
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.node.ObjectNode
 import graft.find.Finder.GroupMatches
 import org.apache.spark.sql.types._
+import scala.jdk.CollectionConverters._
 
 /** Raw-JSON match evaluation for the JSON-lines Forget path.
   *
@@ -18,9 +20,10 @@ import org.apache.spark.sql.types._
   *     NOT JSON string "1234"; numeric cross-type compares numerically,
   *     mirroring Python `==` — generate_queries.py:102-109).
   *
-  * [[Evaluator]] runs inside the rewrite task
-  * ([[DistributedRewrite]]), one parse per line — the reference pays the
-  * same parse per line.
+  * [[Evaluator]] runs inside the rewrite task ([[DistributedRewrite]])
+  * on the line the shared JSON-lines loop parsed once — the reference
+  * pays the same parse per line. [[resolve]] is also the PII scrub's
+  * path lookup ([[graft.llm.PiiForget]]).
   */
 object JsonMatch {
 
@@ -59,20 +62,23 @@ object JsonMatch {
       vals.zip(gm.group.types).map { case (v, t) => cast(v, t) }
     }.toSet)
 
-  /** Case-insensitive dot-path lookup over a parsed JSON node; None when
-    * any segment is missing or a non-object is traversed. */
-  def getValue(node: JsonNode, path: Seq[String]): Option[JsonNode] =
-    path.foldLeft(Option(node)) {
-      case (Some(n), seg) if n.isObject =>
-        val it = n.properties().iterator()
-        var found: Option[JsonNode] = None
-        while (found.isEmpty && it.hasNext) {
-          val e = it.next()
-          if (e.getKey.equalsIgnoreCase(seg)) found = Some(e.getValue)
-        }
-        found
+  /** Case-insensitive dot-path resolution over a parsed JSON node: the
+    * object holding the path's last segment and that segment's concrete
+    * key (the first key equal to it ignoring case, so a replacement
+    * lands on the original field name). None when any segment is
+    * missing or a non-object is traversed. */
+  def resolve(node: JsonNode, path: Seq[String]): Option[(ObjectNode, String)] =
+    (node, path) match {
+      case (o: ObjectNode, seg +: rest) =>
+        o.fieldNames().asScala.find(_.equalsIgnoreCase(seg)).flatMap(key =>
+          if (rest.isEmpty) Some((o, key)) else resolve(o.get(key), rest))
       case _ => None
-    }.filter(n => !n.isNull && !n.isMissingNode)
+    }
+
+  /** The non-null value at a dot path ([[resolve]] semantics). */
+  def getValue(node: JsonNode, path: Seq[String]): Option[JsonNode] =
+    resolve(node, path).map { case (o, k) => o.get(k) }
+      .filter(n => !n.isNull && !n.isMissingNode)
 
   /** Python-`==`-style comparison between a JSON leaf and a typed match
     * value: numerics compare numerically across types; strings compare as
@@ -86,21 +92,15 @@ object JsonMatch {
 
   private def decimalOf(n: JsonNode): BigDecimal = BigDecimal(n.decimalValue())
 
+  /** Match evaluation over a parsed line; the rewrite loop parses each
+    * line once and hands the node here. */
   final class Evaluator(specs: Seq[GroupSpec]) extends Serializable {
-    @transient private lazy val mapper = new ObjectMapper()
-    def matches(line: String): Boolean = {
-      val node =
-        try mapper.readTree(line)
-        catch { case e: Exception =>
-          throw new IllegalArgumentException(
-            s"Malformed JSON line: ${line.take(200)}", e)
-        }
+    def matches(node: JsonNode): Boolean =
       specs.exists { g =>
         val values = g.paths.map(getValue(node, _))
         values.forall(_.isDefined) && g.tuples.exists(t =>
           t.zip(values).forall { case (m, Some(v)) => valueEquals(v, m)
                                  case _            => false })
       }
-    }
   }
 }

@@ -41,14 +41,12 @@ object VersionedStore {
   def capture(fs: FileSystem, obj: HPath): Option[HPath] = {
     localPath(fs, obj) match {
       case Some(src) =>
-        // ONE stat answers existence + mtime (the former exists +
-        // getFileStatus pair, ★r21). Only the MISSING-object case maps
-        // to None (★r22, ADVICE r21): a transient stat failure on an
-        // existing object (permissions, I/O error) must propagate and
-        // abort the commit BEFORE any destructive action — swallowing
-        // it would skip the rollback snapshot and weaken the
-        // capture-check-swap guarantee the old exists+getFileStatus
-        // pair enforced by throwing.
+        // ONE stat answers existence + mtime (no separate exists
+        // call). Only the MISSING-object case maps to None: a transient
+        // stat failure on an existing object (permissions, I/O error)
+        // must propagate and abort the commit BEFORE any destructive
+        // action — swallowing it would skip the rollback snapshot and
+        // weaken the capture-check-swap guarantee.
         val mtime =
           try java.nio.file.Files
             .getLastModifiedTime(src).toMillis
@@ -108,7 +106,7 @@ object VersionedStore {
     val versions = listVersions(fs, obj) // sorted before bulk delete (O4)
     // version files are sidecar-free (written via java.nio on local
     // FS), so a plain nio delete skips ChecksumFileSystem's per-delete
-    // sidecar stat (★r21)
+    // sidecar stat
     versions.foreach(v => localPath(fs, v.path) match {
       case Some(p) => java.nio.file.Files.deleteIfExists(p); ()
       case None => fs.delete(v.path, false); ()

@@ -286,6 +286,26 @@ object Dedup {
       }
     }
 
+  /** The exact-verify tail every Jaccard family ends in: join the
+    * candidate `(id_a, id_b)` pairs back to the raw TEXT of both sides
+    * (far lighter to shuffle than shingle arrays), shingle only the
+    * candidate rows in one linear pass per text, and keep
+    * `(id_a, id_b, jaccard)` with J >= threshold. A self-join passes
+    * the same frame as `left` and `right`. */
+  private def verifyExact(candidates: DataFrame, left: DataFrame,
+                          right: DataFrame, idCol: String,
+                          textCol: String, shingleLen: Int,
+                          threshold: Double): DataFrame =
+    candidates
+      .join(left.select(col(idCol).as("id_a"), col(textCol).as("_txt_a")),
+        "id_a")
+      .join(right.select(col(idCol).as("id_b"), col(textCol).as("_txt_b")),
+        "id_b")
+      .withColumn("jaccard",
+        textJaccard(shingleLen)(col("_txt_a"), col("_txt_b")))
+      .filter(col("jaccard") >= threshold)
+      .select(col("id_a"), col("id_b"), col("jaccard"))
+
   /** MinHash-LSH near-duplicate pairs with exact Jaccard verification.
     * Output: (id_a, id_b, jaccard) with id_a < id_b, J >= threshold.
     * Band buckets larger than `maxBucket` (boilerplate clusters) are
@@ -300,19 +320,7 @@ object Dedup {
       explode(textBandKeys(shingleLen, bands, rows, seed)(col(textCol)))
         .as("_band"))
     val candidates = Banding.guardedPairs(banded, maxBucket)
-    // exact verify: join the (few) candidates back to the raw TEXT — far
-    // lighter to shuffle than shingle arrays — and shingle only the
-    // candidate rows, in one linear pass per text
-    val docs = df.select(col(idCol), col(textCol))
-    candidates
-      .join(docs.select(col(idCol).as("id_a"), col(textCol).as("_txt_a")),
-        "id_a")
-      .join(docs.select(col(idCol).as("id_b"), col(textCol).as("_txt_b")),
-        "id_b")
-      .withColumn("jaccard",
-        textJaccard(shingleLen)(col("_txt_a"), col("_txt_b")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
+    verifyExact(candidates, df, df, idCol, textCol, shingleLen, threshold)
   }
 
   /** CROSS-corpus MinHash near-join — the LSH-approximate sibling of
@@ -339,15 +347,8 @@ object Dedup {
         explode(keys(col(textCol))).as("_band"))
     val candidates =
       Banding.guardedCrossPairs(banded(left), banded(right), maxBucket)
-    candidates
-      .join(left.select(col(idCol).as("id_a"),
-        col(textCol).as("_txt_a")), "id_a")
-      .join(right.select(col(idCol).as("id_b"),
-        col(textCol).as("_txt_b")), "id_b")
-      .withColumn("jaccard",
-        textJaccard(shingleLen)(col("_txt_a"), col("_txt_b")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
+    verifyExact(candidates, left, right, idCol, textCol, shingleLen,
+      threshold)
   }
 
   /** EXACT n-gram Jaccard pairs via a prefix-filtered set-similarity
@@ -458,17 +459,8 @@ object Dedup {
       shingleLen, threshold, commonShingleCap, censusSampleFraction,
       saltBlock, maxSalts)
     val candidates = selfJoinCandidates(prefix, threshold)
-    val texts = df.select(col(idCol), col(textCol))
-    val out = candidates
-      .join(texts.select(col(idCol).as("id_a"), col(textCol).as("_txt_a")),
-        "id_a")
-      .join(texts.select(col(idCol).as("id_b"), col(textCol).as("_txt_b")),
-        "id_b")
-      .withColumn("jaccard",
-        textJaccard(shingleLen)(col("_txt_a"), col("_txt_b")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
-    (out, cleanup)
+    (verifyExact(candidates, df, df, idCol, textCol, shingleLen, threshold),
+      cleanup)
   }
 
   /** The candidate stage's input: the census, its broadcast lookup and
@@ -512,22 +504,32 @@ object Dedup {
   }
 
   /** The salted prefix-index self-join producing distinct candidate
-    * (id_a, id_b) pairs — the stage between the index build and the
-    * exact verify. Hot-key salting: entry → (key, salt); left picks
-    * one salt by id hash, right replicates to all of the key's
-    * salts — every pair meets in exactly one (key, salt) group. */
+    * (id_a, id_b) pairs, id_a < id_b — the stage between the index
+    * build and the exact verify. */
   private[graft] def selfJoinCandidates(prefix: DataFrame, t: Double)
+      : DataFrame =
+    prefixJoinCandidates(prefix, prefix, t, col("id_a") < col("id_b"))
+
+  /** Distinct candidate (id_a from `left`, id_b from `right`) pairs of
+    * two prefix indexes built over the SAME census, with `pairFilter`
+    * (the self-join's id order) beside the length and positional
+    * filters. Hot-key salting: entry → (key, salt); left picks one
+    * salt by id hash, right replicates to all of the key's salts —
+    * both sides derive `_ns` from the same census, so every pair meets
+    * in exactly one (key, salt) group. */
+  private def prefixJoinCandidates(left: DataFrame, right: DataFrame,
+                                   t: Double, pairFilter: Column)
       : DataFrame = {
-    val a = prefix.select(col("_g").as("_ga"), col("_id").as("id_a"),
+    val a = left.select(col("_g").as("_ga"), col("_id").as("id_a"),
       col("_sz").as("_sza"), (col("_pos0") + 1).as("_pa"),
       pmod(xxhash64(col("_id")), col("_ns")).cast("int").as("_salt_a"))
-    val b = prefix.select(col("_g").as("_gb"), col("_id").as("id_b"),
+    val b = right.select(col("_g").as("_gb"), col("_id").as("id_b"),
       col("_sz").as("_szb"), (col("_pos0") + 1).as("_pb"),
       explode(sequence(lit(0), col("_ns") - 1)).as("_salt_b"))
     val alpha = ceil(lit(t) * (col("_sza") + col("_szb")) / (1.0 + t))
     a.join(b,
         col("_ga") === col("_gb") && col("_salt_a") === col("_salt_b") &&
-          col("id_a") < col("id_b") &&
+          pairFilter &&
           col("_szb") >= lit(t) * col("_sza") &&
           col("_sza") >= lit(t) * col("_szb") &&
           lit(1) + least(col("_sza") - col("_pa"),
@@ -665,32 +667,10 @@ object Dedup {
     // to every salt of their key (both sides derive `_ns` from the SAME
     // broadcast census, so the salt spaces agree and each cross pair
     // meets exactly once per shared prefix key)
-    val a = lIdx.select(col("_g").as("_ga"), col("_id").as("id_a"),
-      col("_sz").as("_sza"), (col("_pos0") + 1).as("_pa"),
-      pmod(xxhash64(col("_id")), col("_ns")).cast("int").as("_salt_a"))
-    val b = rIdx.select(col("_g").as("_gb"), col("_id").as("id_b"),
-      col("_sz").as("_szb"), (col("_pos0") + 1).as("_pb"),
-      explode(sequence(lit(0), col("_ns") - 1)).as("_salt_b"))
-    val alpha = ceil(lit(t) * (col("_sza") + col("_szb")) / (1.0 + t))
-    val candidates = a.join(b,
-        col("_ga") === col("_gb") && col("_salt_a") === col("_salt_b") &&
-          col("_szb") >= lit(t) * col("_sza") &&
-          col("_sza") >= lit(t) * col("_szb") &&
-          lit(1) + least(col("_sza") - col("_pa"),
-            col("_szb") - col("_pb")) >= alpha)
-      .select(col("id_a"), col("id_b")).distinct()
-    val lTexts = left.select(col(idCol).as("id_a"),
-      col(textCol).as("_txt_a"))
-    val rTexts = right.select(col(idCol).as("id_b"),
-      col(textCol).as("_txt_b"))
-    val out = candidates
-      .join(lTexts, "id_a")
-      .join(rTexts, "id_b")
-      .withColumn("jaccard",
-        textJaccard(shingleLen)(col("_txt_a"), col("_txt_b")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
-    (out, () => { lIdx.unpersist(false); rIdx.unpersist(false); () })
+    val candidates = prefixJoinCandidates(lIdx, rIdx, t, lit(true))
+    (verifyExact(candidates, left, right, idCol, textCol, shingleLen,
+        threshold),
+      () => { lIdx.unpersist(false); rIdx.unpersist(false); () })
   }
 
   /** TOKEN-WINDOW collision decontamination join — the n-gram-overlap

@@ -31,11 +31,11 @@ object DedupForget {
 
   /** Ids per batch. Each batch's queue drives one deletion job. At the
     * default (100k > [[graft.find.Finder.InSetMaxKeys]] = 32,768) a
-    * batch Finds via the broadcast semi-join strategy — the measured
-    * crossover (STATUS r10: InSet pushdown wins below ~32k keys,
-    * semi-join above) makes that the RIGHT plan at this size; shrink
-    * below `InSetMaxKeys` only if a workload wants the pushed-down
-    * InSet predicate path instead. */
+    * full batch Finds via the broadcast semi-join strategy — the
+    * measured crossover (InSet predicate wins below ≈20k keys,
+    * semi-join above; see `InSetMaxKeys`) makes that the RIGHT plan at
+    * this size; a batch of at most `InSetMaxKeys` ids (a small corpus,
+    * or the last batch) takes the pushed-down InSet predicate. */
   val DefaultBatchSize = 100000
 
   /** Aggregate result of a (possibly multi-batch) dedup-forget run.

@@ -1,20 +1,15 @@
 package graft.llm
 
-import graft.forget.{DistributedRewrite, PayloadCodec}
+import com.fasterxml.jackson.databind.JsonNode
+import graft.forget.{DistributedRewrite, JsonMatch, PayloadCodec}
+import graft.forget.DistributedRewrite.{Disposition, Keep, Replace}
 import graft.model._
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroup
-import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
-import org.apache.parquet.hadoop.metadata.CompressionCodecName
-import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader, ParquetWriter}
 import org.apache.parquet.schema.{GroupType, LogicalTypeAnnotation}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import scala.util.control.NonFatal
 
 /** PII-driven forget: [[PiiScrub]] composed onto the engine's
   * distributed rewrite machinery, exactly as [[DedupForget]] composes
@@ -25,7 +20,7 @@ import scala.util.control.NonFatal
   *     list — `input_file_name` distinct, the [[graft.find.Finder]] P2
   *     shape (the object list is bounded and driver-safe, the same
   *     collect the reference's driver performs on Athena results).
-  *   - FORGET ([[scrubObjects]]): ONE Spark job, one task per object,
+  *   - FORGET ([[scrubObjects]]): ONE Spark job, k objects per task,
   *     through [[DistributedRewrite.runWith]] — staging, CSE envelope,
   *     versioned commit, idempotency markers, marker sweep and events
   *     are the SAME code the deletion path runs; only the record
@@ -42,14 +37,19 @@ import scala.util.control.NonFatal
   * compiles, so a corpus scrubbed by either path converges
   * (differential-tested in PiiForgetSpec).
   *
-  *   - parquet: records stream through parquet-mr as on the deletion
-  *     path; each record is deep-copied with the (dot-path-resolved,
-  *     case-insensitive) string leaf scrubbed — schema and codec
-  *     preserved, every other field copied bit-exact.
-  *   - JSON-lines (+gzip): lines whose resolved text field contains no
-  *     PII pass through as RAW BYTES (byte-identical, the S10
-  *     contract); a line with PII is parsed, its field replaced, and
-  *     re-serialized by jackson.
+  * The scrub is a [[DistributedRewrite.RecordRewrite]]: it runs the
+  * SAME parquet and JSON-lines loops the deletion path runs (one
+  * footer read per object, gzip by extension, line framing, parse-error
+  * wording) and supplies only each record's disposition:
+  *   - parquet: a record whose (dot-path-resolved, case-insensitive)
+  *     string leaf holds PII is replaced by a deep copy with that leaf
+  *     scrubbed, every other field copied bit-exact; any other record
+  *     is kept. Schema and codec are the loop's: preserved.
+  *   - JSON-lines (+gzip): a line whose text field (resolved by
+  *     [[JsonMatch.resolve]]) holds PII is replaced by the parsed node
+  *     with that field redacted, re-serialized by jackson; every other
+  *     line is kept as its RAW BYTES (byte-identical, the S10
+  *     contract).
   */
 object PiiForget {
 
@@ -111,51 +111,28 @@ object PiiForget {
       }
   }
 
-  private final class ScrubRewrite(textPath: Seq[String])
-      extends DistributedRewrite.TaskRewrite {
+  private[llm] final class ScrubRewrite(textPath: Seq[String])
+      extends DistributedRewrite.RecordRewrite {
     private val redactor = new Redactor
 
     def zeroChangeMessage(path: String): String =
       s"$path was found by the PII scan but the scrub changed 0 rows"
 
-    def parquet(conf: Configuration, src: HPath,
-                staged: HPath): (Long, Long) = {
-      // reader/writer endpoints via the shared local-FS fast path
-      // (★r21 — see DistributedRewrite's fast-path note)
-      val footer = DistributedRewrite.readFooter(conf, src)
-      val schema = footer.getFileMetaData.getSchema
-      val codec =
-        if (footer.getBlocks.isEmpty ||
-            footer.getBlocks.get(0).getColumns.isEmpty)
-          CompressionCodecName.SNAPPY
-        else footer.getBlocks.get(0).getColumns.get(0).getCodec
-      var processed = 0L
-      var changed = 0L
-      val reader: ParquetReader[Group] =
-        DistributedRewrite.groupReader(conf, src)
-      try {
-        val writer: ParquetWriter[Group] = DistributedRewrite
-          .groupWriterBuilder(conf, staged)
-          .withType(schema)
-          .withCompressionCodec(codec)
-          .build()
-        try {
-          var g = reader.read()
-          while (g != null) {
-            processed += 1
-            val out = new SimpleGroup(schema)
-            if (copyScrubbed(g, out, schema, textPath)) changed += 1
-            writer.write(out)
-            g = reader.read()
-          }
-        } finally writer.close()
-        (processed, changed)
-      } catch {
-        case NonFatal(e) =>
-          DistributedRewrite.deleteStaged(conf, staged)
-          throw e
-      } finally reader.close()
+    def record(g: Group): Disposition[Group] = {
+      val out = new SimpleGroup(g.getType)
+      if (copyScrubbed(g, out, g.getType, textPath)) Replace(out) else Keep
     }
+
+    /** Redact the string at `textPath` in place; the concrete key keeps
+      * the line's own spelling of the field name. */
+    def line(node: JsonNode): Disposition[JsonNode] =
+      JsonMatch.resolve(node, textPath) match {
+        case Some((o, key)) if o.get(key).isTextual =>
+          val s0 = o.get(key).asText()
+          val s1 = redactor(s0)
+          if (s1 == s0) Keep else { o.put(key, s1); Replace(node) }
+        case _ => Keep
+      }
 
     /** Deep copy `src` into `dst`, scrubbing the string leaf at `path`
       * (case-insensitive per segment). Returns true when a value
@@ -202,108 +179,6 @@ object PiiForget {
         i += 1
       }
       changed
-    }
-
-    def json(conf: Configuration, src: HPath,
-             staged: HPath): (Long, Long) = {
-      import java.util.zip.{GZIPInputStream, GZIPOutputStream}
-      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-      val gz = src.getName.endsWith(".gz")
-      var processed = 0L
-      var changed = 0L
-      val in = {
-        val raw = DistributedRewrite.byteSource(conf, src)
-        if (gz) new GZIPInputStream(raw, 1 << 16) else raw
-      }
-      try {
-        val outRaw = DistributedRewrite.byteSink(conf, staged)
-        val out = if (gz) new GZIPOutputStream(outRaw, 1 << 16) else outRaw
-        try {
-          val buf = new Array[Byte](1 << 16)
-          val line = new java.io.ByteArrayOutputStream(1 << 12)
-          def flushLine(): Unit = {
-            val bytes = line.toByteArray
-            line.reset()
-            processed += 1
-            val s =
-              new String(bytes, java.nio.charset.StandardCharsets.UTF_8)
-            val node =
-              try mapper.readTree(s)
-              catch {
-                case e: Exception =>
-                  throw new IllegalArgumentException(
-                    s"Serialization error when parsing JSON lines: " +
-                      s"line $processed: ${e.getMessage}", e)
-              }
-            // resolve the CONTAINING object + concrete key
-            // (case-insensitive) so the replacement lands on the
-            // original field name
-            var cur: com.fasterxml.jackson.databind.JsonNode = node
-            var ok = true
-            var k = 0
-            var parent: com.fasterxml.jackson.databind.node.ObjectNode = null
-            var key: String = null
-            while (ok && k < textPath.length) {
-              cur match {
-                case o: com.fasterxml.jackson.databind.node.ObjectNode =>
-                  val it = o.properties().iterator()
-                  var found: String = null
-                  while (found == null && it.hasNext) {
-                    val e = it.next()
-                    if (e.getKey.equalsIgnoreCase(textPath(k)))
-                      found = e.getKey
-                  }
-                  if (found == null) ok = false
-                  else {
-                    parent = o; key = found; cur = o.get(found)
-                    k += 1
-                  }
-                case _ => ok = false
-              }
-            }
-            val redacted =
-              if (ok && cur != null && cur.isTextual) {
-                val s0 = cur.asText()
-                val s1 = redactor(s0)
-                if (s1 != s0) {
-                  parent.put(key, s1)
-                  true
-                } else false
-              } else false
-            if (redacted) {
-              changed += 1
-              out.write(mapper.writeValueAsBytes(node))
-              out.write('\n')
-            } else {
-              // byte-identical passthrough for untouched lines — the
-              // S10 contract the deletion path also honors
-              out.write(bytes)
-              out.write('\n')
-            }
-          }
-          var n = in.read(buf)
-          while (n >= 0) {
-            var start = 0
-            var i = 0
-            while (i < n) {
-              if (buf(i) == '\n') {
-                line.write(buf, start, i - start)
-                flushLine()
-                start = i + 1
-              }
-              i += 1
-            }
-            if (start < n) line.write(buf, start, n - start)
-            n = in.read(buf)
-          }
-          if (line.size() > 0) flushLine()
-        } finally out.close()
-        (processed, changed)
-      } catch {
-        case NonFatal(e) =>
-          DistributedRewrite.deleteStaged(conf, staged)
-          throw e
-      } finally in.close()
     }
   }
 }

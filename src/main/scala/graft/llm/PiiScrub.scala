@@ -34,11 +34,12 @@ object PiiScrub {
 
   /** (kind, pattern, replacement) in application order.
     *
-    * Every quantifier is BOUNDED (★r19 pathological-input sweep): the
-    * original email detector's `[class]+@` shape is the textbook
-    * backtracking bomb — on a 200k-char run of email-charset bytes
-    * with no `@` (a base64 blob, minified JS: the 100 TB reality)
-    * Java's engine re-scans the `+` from every start position,
+    * Every quantifier is BOUNDED (pinned by PiiScrubSpec's
+    * pathological-input cases): an unbounded `[class]+@` email
+    * detector is the textbook backtracking bomb — on a 200k-char run
+    * of email-charset bytes with no `@` (a base64 blob, minified JS:
+    * the 100 TB reality), Java's engine re-scans the `+` from every
+    * start position,
     * measured at 403 s for ONE value vs 0.23 s bounded (1,750×).
     * The bounds are the RFC 5321 limits (local part ≤ 64, domain
     * ≤ 253, label ≤ 63), so no real email's match changes — an

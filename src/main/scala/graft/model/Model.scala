@@ -126,9 +126,6 @@ object JobStatus {
   *        reference's dispatcher keeps up to 15 Athena executions in
   *        flight against a 20-query account limit,
   *        backend/lambdas/tasks/work_query_queue.py:17-74)
-  * @param inSetMaxKeys            Find switches from the native InSet
-  *        predicate to the broadcast semi-join above this many match keys
-  *        (engine-specific; mirrors `Finder.InSetMaxKeys`)
   * @param jobDetailsRetentionDays job events expire this many days after
   *        job start; 0 = keep forever (`JobDetailsRetentionDays`,
   *        queue/handlers.py:138-139)
@@ -136,12 +133,10 @@ object JobStatus {
 final case class JobSettings(
     findQueryMaxRetries: Int = 2,
     findConcurrencyLimit: Int = 15,
-    inSetMaxKeys: Int = 100000,
     jobDetailsRetentionDays: Int = 0) {
   def validate(): JobSettings = {
     require(findQueryMaxRetries >= 0, "findQueryMaxRetries must be >= 0")
     require(findConcurrencyLimit >= 1, "findConcurrencyLimit must be >= 1")
-    require(inSetMaxKeys >= 1, "inSetMaxKeys must be >= 1")
     require(jobDetailsRetentionDays >= 0,
       "jobDetailsRetentionDays must be >= 0")
     this

@@ -40,10 +40,9 @@ object FindStrategyBench {
         DeletionQueueItem(s"q$i", MatchId.Simple((1L + i * step).toString)))
       val groups = Finder.plan(mapper, table, queue)
       val (tPred, nPred) = timeMedian3(
-        Finder.matchedRows(spark, data, groups,
-          inSetMaxKeys = Int.MaxValue).count())
+        data.filter(Finder.matchPredicate(spark, groups)).count())
       val (tJoin, nJoin) = timeMedian3(
-        Finder.matchedRows(spark, data, groups, inSetMaxKeys = 0).count())
+        Finder.matchedRowsViaJoin(spark, data, groups).count())
       require(nPred == nJoin, s"strategy results differ: $nPred vs $nJoin")
       report.scale(k, Map("keys" -> k.toDouble,
         "rows_matched" -> nPred.toDouble, "predicate_sec" -> tPred,

@@ -2,6 +2,7 @@ package graft.driver
 
 import graft.SparkSpec
 import graft.catalog.TableDef
+import graft.find.Finder
 import graft.model._
 import org.apache.spark.sql.functions.{col, struct}
 import scala.jdk.CollectionConverters._
@@ -173,14 +174,17 @@ class JobRunnerSpec extends SparkSpec {
         s"got ${run.state.stats.totalQueryScannedInBytes}")
   }
 
-  test("per-job inSetMaxKeys override drives the semi-join fallback and " +
-    "still deletes correctly") {
+  test("queue above InSetMaxKeys takes the semi-join path, deletes " +
+    "correctly") {
     val (_, table) = lake()
+    // 2 present keys + absent ones: InSetMaxKeys + 1 keys → join path
+    val absent = (1 until Finder.InSetMaxKeys).map(i =>
+      DeletionQueueItem(s"a$i", MatchId.Simple((1000000L + i).toString)))
+    val queue = Seq(DeletionQueueItem("q1", MatchId.Simple("7")),
+      DeletionQueueItem("q2", MatchId.Simple("9"))) ++ absent
+    assert(queue.size == Finder.InSetMaxKeys + 1)
     val run = JobRunner.run(spark, "jr9",
-      Seq(DataMapper("m", "t", Seq("customer_id")) -> table),
-      Seq(DeletionQueueItem("q1", MatchId.Simple("7")),
-        DeletionQueueItem("q2", MatchId.Simple("9"))),
-      settings = JobSettings(inSetMaxKeys = 1)) // 2 keys > 1 → join path
+      Seq(DataMapper("m", "t", Seq("customer_id")) -> table), queue)
     assert(run.state.status == JobStatus.Completed)
     assert(run.state.stats.totalRowsDeletedCount == 2)
   }
