@@ -44,8 +44,11 @@ object JobRunner {
       settings: JobSettings = JobSettings(),
       expiresAt: Option[Long] = None)
 
-  /** Run a full deletion job. The Forget phase is one
-    * [[DistributedRewrite]] job per mapper with found objects. */
+  /** Run a full deletion job. Each mapper's match values are cast once,
+    * in its Find query ([[Finder.typedGroups]]); the Forget phase is one
+    * [[DistributedRewrite]] call over every mapper's found objects, so
+    * one rewrite job and one marker sweep job whatever the mapper
+    * count. */
   def run(spark: SparkSession, jobId: String,
           mappers: Seq[(DataMapper, TableDef)],
           queue: Seq[DeletionQueueItem],
@@ -85,8 +88,8 @@ object JobRunner {
     val findFailed = new java.util.concurrent.atomic.AtomicBoolean(false)
     val found =
       scala.collection.concurrent.TrieMap.empty[String, Seq[String]]
-    val groupsByMapper = scala.collection.concurrent.TrieMap
-      .empty[String, Seq[Finder.GroupMatches]]
+    val typedByMapper = scala.collection.concurrent.TrieMap
+      .empty[String, Seq[Finder.TypedGroup]]
     def emit(name: String, bytesScanned: Long = 0L, timeTakenMs: Long = 0L,
              error: String = ""): Unit = events.synchronized {
       events += ev(name, bytesScanned = bytesScanned,
@@ -106,13 +109,13 @@ object JobRunner {
       while (!done && !findFailed.get()) {
         val t0 = System.currentTimeMillis()
         try {
-          val groups = Finder.plan(m, table, queue)
-          groupsByMapper(m.id) = groups
+          val typed = Finder.typedGroups(spark, Finder.plan(m, table, queue))
+          typedByMapper(m.id) = typed
           manifestAuditDir.foreach(d =>
-            Finder.writeManifestAudit(spark, jobId, m.id, groups, d))
-          if (groups.nonEmpty) {
+            Finder.writeManifestAudit(spark, jobId, m.id, typed, d))
+          if (typed.nonEmpty) {
             val data = Finder.scoped(readTableFn(spark, table), m)
-            val paths = Finder.matchedFiles(spark, data, groups)
+            val paths = Finder.findFiles(spark, data, typed)
               .collect().map(r => r.getString(0)).toSeq
             found(m.id) = paths
             val bytes = table.format match {
@@ -179,22 +182,19 @@ object JobRunner {
       events += ev(JobEventName.FindPhaseEnded)
       events += ev(JobEventName.ForgetPhaseStarted)
 
-      // ---- Forget phase: ONE distributed job across every found object.
+      // ---- Forget phase: ONE distributed job across every found object
+      // of every mapper, each matched against its mapper's typed groups.
       // A Spark-level failure here (lost executors, driver I/O) must still
       // land in the event log: the reference's Fargate SM failure maps to
       // ForgetPhaseFailed → FORGET_FAILED (status_updater.py:20).
       try {
-        mappers.foreach { case (m, table) =>
-          val paths = found.getOrElse(m.id, Nil)
-          if (paths.nonEmpty) {
-            val units = paths.map(p =>
-              ObjectWorkUnit(jobId, p, m.id, table.format,
-                m.deleteOldVersions, m.ignoreObjectNotFound))
-            val groups = groupsByMapper(m.id)
-            events ++= DistributedRewrite.run(spark, jobId, units, groups,
-              outPathFor)
-          }
+        val units = mappers.flatMap { case (m, table) =>
+          found.getOrElse(m.id, Nil).map(p =>
+            ObjectWorkUnit(jobId, p, m.id, table.format,
+              m.deleteOldVersions, m.ignoreObjectNotFound))
         }
+        events ++= DistributedRewrite.runTyped(spark, jobId, units,
+          typedByMapper.toMap, outPathFor)
         events += ev(JobEventName.ForgetPhaseEnded)
       } catch {
         case NonFatal(e) =>

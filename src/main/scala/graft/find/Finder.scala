@@ -2,7 +2,7 @@ package graft.find
 
 import graft.catalog.TableDef
 import graft.model._
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -103,9 +103,10 @@ object Finder {
   /** A column group with its match values cast-validated and rendered by
     * Spark: `native(i)(j)` is the j-th column's value of tuple i with the
     * column's type applied; `stringKeys` is the token-joined string form
-    * (the reference's manifest `queryablematchid`). */
-  final case class TypedGroup(
-      group: ColumnGroup, native: Seq[Seq[Any]], stringKeys: Seq[String])
+    * (the reference's manifest `queryablematchid`); `ids(i)` is tuple
+    * i's queue item id. */
+  final case class TypedGroup(group: ColumnGroup, ids: Seq[String],
+                              native: Seq[Seq[Any]], stringKeys: Seq[String])
 
   /** Scope queue items to a mapper and group them by canonical column
     * group (reference: generate_queries.py:167-215). Simple matches fan
@@ -171,41 +172,46 @@ object Finder {
     * agrees byte-for-byte with the data side (one cast engine — the
     * reference pre-stringifies in Python, generate_queries.py:93-113).
     *
-    * The projection runs over a `LocalRelation`, which Catalyst collapses
-    * driver-side (`ConvertToLocalRelation`) — no cluster job is launched.
+    * Each value is evaluated directly through the resolved Catalyst
+    * expressions a `try_cast(…)` / `cast(… AS STRING)` projection would
+    * run — the same ones `ConvertToLocalRelation` evaluates on the
+    * driver for a local projection — without planning a query per
+    * group. A job casts once and keeps the result for both phases.
     *
     * @throws MatchIdCastingError when a value does not cast to its
     *         column's type (generate_queries.py:516-519)
     */
   def typedGroups(spark: SparkSession,
                   groups: Seq[GroupMatches]): Seq[TypedGroup] = {
-    import spark.implicits._
+    import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, EvalMode}
+    import org.apache.spark.sql.catalyst.util.CharVarcharUtils
+    import org.apache.spark.unsafe.types.UTF8String
+    val tz = Some(spark.conf.get("spark.sql.session.timeZone"))
     groups.map { gm =>
       val g = gm.group
-      val raw = gm.rows.toDF("item_id", "vals")
-      val native = g.types.zipWithIndex.map { case (t, i) =>
-        element_at($"vals", i + 1).try_cast(t.sql).as(s"_n$i")
+      val casts = g.types.map { declared =>
+        val t = CharVarcharUtils.replaceCharVarcharWithStringForCast(declared)
+        (Cast(BoundReference(0, StringType, nullable = true), t, tz,
+          EvalMode.TRY),
+          Cast(BoundReference(0, t, nullable = true), StringType, tz),
+          CatalystTypeConverters.createToScalaConverter(t))
       }
-      val strings = g.types.indices.map(i => col(s"_n$i").cast(StringType))
-      val key =
-        if (strings.size == 1) strings.head
-        else concat(interleave(strings, lit(CompositeToken)): _*)
-      val rows: Array[Row] = raw
-        .select((col("item_id") +: col("vals") +: native): _*)
-        .withColumn("_key", key)
-        .collect()
-      rows.foreach { r =>
-        val rawVals = r.getSeq[String](1)
-        g.types.indices.foreach { i =>
-          if (rawVals(i) != null && r.isNullAt(2 + i))
-            throw new MatchIdCastingError(
-              s"Match id ${rawVals.mkString(",")} (item ${r.getString(0)}) " +
-                s"cannot be cast to types ${g.types.mkString(",")}")
+      val typed = gm.rows.map { case (id, rawVals) =>
+        val cast = casts.lazyZip(rawVals).map {
+          case ((toType, render, toScala), raw) =>
+            val v = toType.eval(InternalRow(UTF8String.fromString(raw)))
+            if (raw != null && v == null)
+              throw new MatchIdCastingError(
+                s"Match id ${rawVals.mkString(",")} (item $id) " +
+                  s"cannot be cast to types ${g.types.mkString(",")}")
+            (toScala(v), render.eval(InternalRow(v)))
         }
+        val parts = cast.map(_._2)
+        (cast.map(_._1),
+          if (parts.contains(null)) null else parts.mkString(CompositeToken))
       }
-      TypedGroup(g,
-        rows.toSeq.map(r => g.types.indices.map(i => r.get(2 + i))),
-        rows.toSeq.map(_.getAs[String]("_key")))
+      TypedGroup(g, gm.rows.map(_._1), typed.map(_._1), typed.map(_._2))
     }
   }
 
@@ -286,8 +292,10 @@ object Finder {
   /** OR of all groups' Find predicates (null ⇒ no match, like the
     * reference's SQL equality). */
   def matchPredicate(spark: SparkSession, groups: Seq[GroupMatches]): Column =
-    typedGroups(spark, groups).map(findPredicate)
-      .reduceOption(_ || _).getOrElse(lit(false))
+    anyFind(typedGroups(spark, groups))
+
+  private def anyFind(typed: Seq[TypedGroup]): Column =
+    typed.map(findPredicate).reduceOption(_ || _).getOrElse(lit(false))
 
   /** Matched ROWS — ONE scan, OR of group predicates; genuinely duplicate
     * source rows are preserved (Athena's `WHERE a OR b` keeps them). Falls
@@ -295,10 +303,15 @@ object Finder {
   def matchedRows(spark: SparkSession, data: DataFrame,
                   groups: Seq[GroupMatches]): DataFrame = {
     require(groups.nonEmpty, "no match groups — nothing to find")
-    if (totalKeys(groups) > InSetMaxKeys)
-      matchedRowsViaJoin(spark, data, groups)
-    else data.filter(matchPredicate(spark, groups))
+    val typed = typedGroups(spark, groups)
+    if (totalKeys(typed) > InSetMaxKeys) rowsViaJoin(spark, data, typed)
+    else data.filter(anyFind(typed))
   }
+
+  /** [[findFiles]] over groups cast here. */
+  def matchedFiles(spark: SparkSession, data: DataFrame,
+                   groups: Seq[GroupMatches]): DataFrame =
+    findFiles(spark, data, typedGroups(spark, groups))
 
   /** The Find query for one mapper: DISTINCT file paths containing ≥1
     * matching row. ONE pruned-projection scan (identifier columns only) +
@@ -306,16 +319,15 @@ object Finder {
     * reference's UNION ALL of per-group subqueries
     * (execute_query.py:105-137), minus the per-group rescans.
     *
-    * @param data the mapper's table as a DataFrame (already
-    *             partition-filtered if the mapper scopes partitions)
-    */
-  def matchedFiles(spark: SparkSession, data: DataFrame,
-                   groups: Seq[GroupMatches]): DataFrame = {
-    require(groups.nonEmpty, "no match groups — nothing to find")
-    if (totalKeys(groups) > InSetMaxKeys)
-      matchedFilesViaJoin(spark, data, groups)
+    * @param data  the mapper's table as a DataFrame (already
+    *              partition-filtered if the mapper scopes partitions)
+    * @param typed the mapper's groups, cast by [[typedGroups]] */
+  def findFiles(spark: SparkSession, data: DataFrame,
+                typed: Seq[TypedGroup]): DataFrame = {
+    require(typed.nonEmpty, "no match groups — nothing to find")
+    if (totalKeys(typed) > InSetMaxKeys) filesViaJoin(spark, data, typed)
     else
-      data.filter(matchPredicate(spark, groups))
+      data.filter(anyFind(typed))
         .select(input_file_name().as(PathCol))
         .distinct()
   }
@@ -332,8 +344,8 @@ object Finder {
     fileDf.filter(!coalesce(pred, lit(false)))
   }
 
-  private def totalKeys(groups: Seq[GroupMatches]): Long =
-    groups.map(_.rows.size.toLong).sum
+  private def totalKeys(typed: Seq[TypedGroup]): Long =
+    typed.map(_.native.size.toLong).sum
 
   // --------------------------------------------------------------------
   // Semi-join strategy — the reference's own plan shape, used when the
@@ -342,17 +354,14 @@ object Finder {
   // 100 TB probe side).
   // --------------------------------------------------------------------
 
-  /** Build the manifest DataFrame for one column group:
-    * `(item_id, columns_key, match_key)` with `match_key` computed by
-    * casting each raw value to the column's type and back to string —
-    * Spark-rendered, so it agrees byte-for-byte with the data-side key.
-    * Fails with [[MatchIdCastingError]] when a value does not cast
-    * (reference: generate_queries.py:495-519). */
-  def manifest(spark: SparkSession, gm: GroupMatches): DataFrame = {
+  /** Build the manifest DataFrame for one cast-validated column group:
+    * `(item_id, columns_key, match_key)` with `match_key` the group's
+    * Spark-rendered string key ([[typedGroups]]), so it agrees
+    * byte-for-byte with the data-side key. */
+  def manifest(spark: SparkSession, tg: TypedGroup): DataFrame = {
     import spark.implicits._
-    val tg = typedGroups(spark, Seq(gm)).head // cast validation included
-    tg.stringKeys.zip(gm.rows.map(_._1))
-      .map { case (k, id) => (id, gm.group.key, k) }
+    tg.stringKeys.zip(tg.ids)
+      .map { case (k, id) => (id, tg.group.key, k) }
       .toDF("item_id", "columns_key", "match_key")
   }
 
@@ -362,10 +371,10 @@ object Finder {
     * templates/manifests.yaml:60-88). Broadcast joins read the in-memory
     * manifest; this copy is the audit trail. */
   def writeManifestAudit(spark: SparkSession, jobId: String,
-                         mapperId: String, groups: Seq[GroupMatches],
+                         mapperId: String, typed: Seq[TypedGroup],
                          auditDir: String): Unit = {
     import org.apache.spark.sql.SaveMode
-    val dfs = groups.map(manifest(spark, _))
+    val dfs = typed.map(manifest(spark, _))
     if (dfs.nonEmpty)
       dfs.reduce(_ union _)
         .withColumn("job_id", lit(jobId))
@@ -389,9 +398,9 @@ object Finder {
   /** Union of every group's manifest, keyed `(columns_key, match_key)`,
     * with null match keys dropped (a null key never equals anything). */
   private def manifestUnion(spark: SparkSession,
-                            groups: Seq[GroupMatches]): DataFrame = {
+                            typed: Seq[TypedGroup]): DataFrame = {
     import spark.implicits._
-    groups.map(manifest(spark, _)).reduce(_ union _)
+    typed.map(manifest(spark, _)).reduce(_ union _)
       .select($"columns_key", $"match_key")
       .filter($"match_key".isNotNull)
       .distinct()
@@ -401,21 +410,24 @@ object Finder {
     * the row's own columns — exploding this array turns the k-way
     * per-group join into ONE broadcast hash equi-join over a single scan
     * (a per-group union would rescan the table once per group). */
-  private def groupKeyStructs(groups: Seq[GroupMatches]): Column =
-    array(groups.map(gm => struct(
-      lit(gm.group.key).as("ck"), dataKey(gm.group).as("mk"))): _*)
+  private def groupKeyStructs(typed: Seq[TypedGroup]): Column =
+    array(typed.map(tg => struct(
+      lit(tg.group.key).as("ck"), dataKey(tg.group).as("mk"))): _*)
 
   /** Semi-join form of [[matchedFiles]]: one scan (identifier columns +
     * path only), per-group keys exploded, single broadcast left-semi join
     * on `(columns_key, match_key)`, DISTINCT over paths only. */
   def matchedFilesViaJoin(spark: SparkSession, data: DataFrame,
-                          groups: Seq[GroupMatches]): DataFrame = {
+                          groups: Seq[GroupMatches]): DataFrame =
+    filesViaJoin(spark, data, typedGroups(spark, groups))
+
+  private def filesViaJoin(spark: SparkSession, data: DataFrame,
+                           typed: Seq[TypedGroup]): DataFrame = {
     import spark.implicits._
-    val m = manifestUnion(spark, groups)
     data
       .select(input_file_name().as(PathCol),
-        explode(groupKeyStructs(groups)).as("_k"))
-      .join(broadcast(m),
+        explode(groupKeyStructs(typed)).as("_k"))
+      .join(broadcast(manifestUnion(spark, typed)),
         $"_k.ck" === $"columns_key" && $"_k.mk" === $"match_key",
         "left_semi")
       .select(col(PathCol))
@@ -428,13 +440,16 @@ object Finder {
     * single broadcast hash join; the only shuffle is the dedup over the
     * (small) matched output. */
   def matchedRowsViaJoin(spark: SparkSession, data: DataFrame,
-                         groups: Seq[GroupMatches]): DataFrame = {
+                         groups: Seq[GroupMatches]): DataFrame =
+    rowsViaJoin(spark, data, typedGroups(spark, groups))
+
+  private def rowsViaJoin(spark: SparkSession, data: DataFrame,
+                          typed: Seq[TypedGroup]): DataFrame = {
     import spark.implicits._
-    val m = manifestUnion(spark, groups)
     data
       .withColumn("_rid", monotonically_increasing_id())
-      .withColumn("_k", explode(groupKeyStructs(groups)))
-      .join(broadcast(m),
+      .withColumn("_k", explode(groupKeyStructs(typed)))
+      .join(broadcast(manifestUnion(spark, typed)),
         $"_k.ck" === $"columns_key" && $"_k.mk" === $"match_key",
         "left_semi")
       .dropDuplicates("_rid")

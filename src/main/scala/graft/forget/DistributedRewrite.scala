@@ -2,7 +2,7 @@ package graft.forget
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import graft.find.Finder
-import graft.find.Finder.GroupMatches
+import graft.find.Finder.{GroupMatches, TypedGroup}
 import graft.forget.VersionedStore.localPath
 import graft.model._
 import org.apache.hadoop.conf.Configuration
@@ -15,19 +15,21 @@ import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.ColumnIOFactory
 import org.apache.parquet.io.api.Binary
-import org.apache.parquet.schema.{GroupType, PrimitiveType, Type => PType}
+import org.apache.parquet.schema.{GroupType, MessageType, PrimitiveType, Type => PType}
 import org.apache.parquet.schema.LogicalTypeAnnotation.{DecimalLogicalTypeAnnotation, IntLogicalTypeAnnotation}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
 import org.apache.spark.sql.SparkSession
 import java.util.UUID
 import scala.util.control.NonFatal
 
-/** The Forget engine: ONE Spark job over the whole object queue, each
-  * object rewritten INSIDE a task with parquet-mr / raw streams — no
-  * per-object driver-scheduled Spark actions, so the driver's job count
-  * is independent of the queue (the reference's scenario 4, 45,300
-  * objects, docs/COST_OVERVIEW.md:288-290, is one job here, not one or
-  * more driver jobs per object).
+/** The Forget engine: ONE Spark job over the whole object queue of a
+  * deletion job — every mapper's objects together — plus one marker
+  * sweep job, each object rewritten INSIDE a task with parquet-mr / raw
+  * streams. No per-object or per-mapper driver-scheduled Spark actions,
+  * so the driver's job count is independent of the queue and of the
+  * mapper count (the reference's scenario 4, 45,300 objects,
+  * docs/COST_OVERVIEW.md:288-290, is one job here, not one or more
+  * driver jobs per object).
   *
   * This is the Spark analog of the reference's Fargate fleet
   * (backend/ecs_tasks/delete_files/main.py:288-306: N containers × process
@@ -38,20 +40,27 @@ import scala.util.control.NonFatal
   * This object holds the only per-format rewrite loops: one for parquet
   * and one for JSON lines. A [[RecordRewrite]] strategy supplies only
   * what becomes of each record (a [[Disposition]]: keep, drop or
-  * replace) and its zero-change wording. Deletion ([[DeleteRewrite]])
-  * and PII redaction ([[graft.llm.PiiForget]]) are two such strategies,
-  * so format I/O (local-nio vs Hadoop endpoints, codec, gzip, line
-  * framing, error wording) is decided here alone.
+  * replace) and its zero-change wording; a job picks each object's
+  * strategy by the object's mapper. Deletion ([[DeleteRewrite]]) and PII
+  * redaction ([[graft.llm.PiiForget]]) are two such strategies, so
+  * format I/O (local-nio vs Hadoop endpoints, codec, gzip, line framing,
+  * error wording) is decided here alone.
   *
   * Per-task semantics mirror the reference engine exactly:
+  *   - match: the reference's hand-written hash semi-join
+  *     (parquet_handler.py:66-81, json_handler.py:52-64). The match
+  *     values arrive cast once per job ([[Finder.typedGroups]]); per
+  *     object each group's leaves are resolved once from the schema
+  *     (case-insensitive dot paths, parquet_handler.py:24-33,45-61) and
+  *     its tuples become one hash set of normalized keys, so a record
+  *     costs one lookup per group whatever the queue size. Native-typed
+  *     comparison with decimal coercion (parquet_handler.py:102-130);
+  *     see [[LeafKind]] and [[JsonMatch]] for the key semantics.
   *   - parquet: one footer read per object; stream its row groups and
   *     drop any row where a match group hits
-  *     (parquet_handler.py:133-177), native-typed comparison with decimal
-  *     coercion (parquet_handler.py:102-130) and case-insensitive
-  *     dot-path resolution (parquet_handler.py:24-33,45-61); the output
-  *     writer reuses the source schema and compression codec. Row-group
-  *     boundaries are the writer's choice — documented deviation
-  *     (SURVEY.md §7.4 risk 1).
+  *     (parquet_handler.py:133-177); the output writer reuses the source
+  *     schema and compression codec. Row-group boundaries are the
+  *     writer's choice — documented deviation (SURVEY.md §7.4 risk 1).
   *   - JSON-lines: parse each line once, for the disposition only;
   *     kept lines are written as the ORIGINAL line + '\n'
   *     (json_handler.py:49-72), gzip in/out by extension (main.py:172).
@@ -86,9 +95,9 @@ object DistributedRewrite {
   // Serializable match spec (built driver-side, shipped to tasks)
   // ------------------------------------------------------------------
 
-  /** Native-typed match value, aligned with the declared column type the
-    * same way Finder.typedGroups casts (one cast engine driver-side; the
-    * task only compares). */
+  /** Native-typed match value, aligned with the declared column type by
+    * [[Finder.typedGroups]] (one cast engine driver-side; the task only
+    * compares). */
   sealed trait PVal extends Serializable
   final case class PLong(v: Long) extends PVal
   final case class PFloat(v: Float) extends PVal
@@ -102,11 +111,10 @@ object DistributedRewrite {
   final case class TaskGroupSpec(paths: Seq[Seq[String]],
                                  tuples: Seq[Seq[PVal]]) extends Serializable
 
-  /** Build task specs from cast-validated groups.
-    * @throws MatchIdCastingError via Finder.typedGroups on bad match ids */
-  def buildSpecs(spark: SparkSession,
-                 groups: Seq[GroupMatches]): Seq[TaskGroupSpec] =
-    Finder.typedGroups(spark, groups).map { tg =>
+  /** Task specs from groups [[Finder.typedGroups]] already cast: no
+    * value is cast again here. */
+  def buildSpecs(typed: Seq[TypedGroup]): Seq[TaskGroupSpec] =
+    typed.map { tg =>
       val tuples = tg.native.flatMap { tuple =>
         val pvals = tuple.map {
           case null => null
@@ -131,9 +139,223 @@ object DistributedRewrite {
       TaskGroupSpec(tg.group.columns.map(_.split('.').toSeq), tuples)
     }
 
+  /** One hash set per group: each tuple's parts mapped by `part(value,
+    * column)` — a bare part for a one-column group, a `java.util.List`
+    * of parts for a composite (element-wise equality). A tuple with a
+    * part no stored value can equal (`null`) is left out. */
+  private[forget] def keySet(tuples: Seq[Seq[PVal]],
+                             part: (PVal, Int) => AnyRef)
+      : java.util.HashSet[AnyRef] = {
+    val keys = new java.util.HashSet[AnyRef]
+    tuples.foreach { t =>
+      val parts = t.indices.map(c => part(t(c), c))
+      if (!parts.contains(null))
+        keys.add(if (parts.size == 1) parts.head
+                 else java.util.Arrays.asList(parts: _*))
+    }
+    keys
+  }
+
   // ------------------------------------------------------------------
-  // Task-side parquet value extraction + comparison
+  // Task-side parquet match: one hash probe per column group
   // ------------------------------------------------------------------
+
+  /** Case-insensitive field index lookup (parquet_handler.py:24-33). */
+  private def fieldIndex(gt: GroupType, name: String): Int = {
+    var i = 0
+    while (i < gt.getFieldCount) {
+      if (gt.getType(i).getName.equalsIgnoreCase(name)) return i
+      i += 1
+    }
+    -1
+  }
+
+  /** Field indexes from the record root to the leaf at `path`, with the
+    * leaf's type. None when a segment is missing or repeated, crosses a
+    * primitive or ends on a group: such a column is never present, so
+    * its group cannot match in this object. */
+  private def leafSteps(schema: GroupType,
+                        path: Seq[String]): Option[(Array[Int], PrimitiveType)] = {
+    val steps = new Array[Int](path.length)
+    var cur = schema
+    var i = 0
+    while (i < path.length) {
+      val idx = fieldIndex(cur, path(i))
+      if (idx < 0) return None
+      val f = cur.getType(idx)
+      if (f.isRepetition(PType.Repetition.REPEATED)) return None
+      steps(i) = idx
+      if (i == path.length - 1)
+        return if (f.isPrimitive) Some((steps, f.asPrimitiveType())) else None
+      if (f.isPrimitive) return None
+      cur = f.asGroupType()
+      i += 1
+    }
+    None
+  }
+
+  /** The one boxing of an integer key: Long when it fits, else the
+    * BigInteger, so keys built from either side agree. */
+  private def intKey(b: java.math.BigInteger): AnyRef =
+    if (b.bitLength < 64) java.lang.Long.valueOf(b.longValue) else b
+
+  /** How one parquet leaf type meets a match value: `row` reads the
+    * stored value as a hash key; `key` maps a match value into the same
+    * key space, or to null when no stored value of this leaf can equal
+    * it. Equal keys ⇔ Spark's `col === lit(v)` on the value Spark's
+    * reader yields, with the reference's numeric semantics
+    * (parquet_handler.py:102-130):
+    *   - ints widen to Long; UINT32/UINT64 read unsigned, as Spark
+    *     widens them (to Long / Decimal(20,0)) on the Find side;
+    *   - decimals compare by value at the column's scale, so the key is
+    *     the unscaled integer (Decimal('2547.4') == Decimal('2547.40')),
+    *     and a match value that does not fit the scale never matches;
+    *   - float/double compare as Double with NaN equal to NaN and -0.0
+    *     equal to 0.0 (Spark SQL semantics, as in
+    *     [[Finder.forgetPredicate]]);
+    *   - strings compare as their UTF-8 bytes, never decoded per row
+    *     (byte equality is also what Spark's Find compares). */
+  private sealed trait LeafKind {
+    def row(g: Group, idx: Int): AnyRef
+    def key(m: PVal): AnyRef
+  }
+
+  private final case class IntLeaf(unsigned: Boolean) extends LeafKind {
+    def row(g: Group, idx: Int): AnyRef = {
+      val v = g.getInteger(idx, 0)
+      java.lang.Long.valueOf(if (unsigned) v & 0xffffffffL else v.toLong)
+    }
+    def key(m: PVal): AnyRef = m match {
+      case PLong(v) => java.lang.Long.valueOf(v)
+      case _ => null
+    }
+  }
+
+  private final case class LongLeaf(unsigned: Boolean) extends LeafKind {
+    def row(g: Group, idx: Int): AnyRef = {
+      val v = g.getLong(idx, 0)
+      if (v >= 0 || !unsigned) java.lang.Long.valueOf(v)
+      else new java.math.BigInteger(java.lang.Long.toUnsignedString(v))
+    }
+    def key(m: PVal): AnyRef = (m, unsigned) match {
+      case (PLong(v), _) => java.lang.Long.valueOf(v)
+      case (PDecimal(d), true) =>
+        // UINT64 is Decimal(20,0) in Spark: any integral value
+        val s = d.stripTrailingZeros
+        if (s.scale > 0) null else intKey(s.toBigIntegerExact)
+      case _ => null
+    }
+  }
+
+  private final case class DecimalLeaf(physical: PrimitiveType.PrimitiveTypeName,
+                                       scale: Int) extends LeafKind {
+    def row(g: Group, idx: Int): AnyRef = physical match {
+      case INT32 => java.lang.Long.valueOf(g.getInteger(idx, 0).toLong)
+      case INT64 => java.lang.Long.valueOf(g.getLong(idx, 0))
+      case _ => intKey(new java.math.BigInteger(g.getBinary(idx, 0).getBytes))
+    }
+    def key(m: PVal): AnyRef = m match {
+      case PDecimal(d) =>
+        try intKey(d.setScale(scale, java.math.RoundingMode.UNNECESSARY)
+          .unscaledValue)
+        catch { case _: ArithmeticException => null }
+      case _ => null
+    }
+  }
+
+  private final case class FloatingLeaf(single: Boolean) extends LeafKind {
+    // + 0.0 turns -0.0 into 0.0; java.lang.Double equality already
+    // treats every NaN as equal
+    def row(g: Group, idx: Int): AnyRef = java.lang.Double.valueOf(
+      (if (single) g.getFloat(idx, 0).toDouble else g.getDouble(idx, 0)) + 0.0)
+    def key(m: PVal): AnyRef = m match {
+      case PFloat(v) => java.lang.Double.valueOf(v.toDouble + 0.0)
+      case PDouble(v) => java.lang.Double.valueOf(v + 0.0)
+      case _ => null
+    }
+  }
+
+  private case object StringLeaf extends LeafKind {
+    def row(g: Group, idx: Int): AnyRef = g.getBinary(idx, 0)
+    def key(m: PVal): AnyRef = m match {
+      case PString(v) => Binary.fromConstantByteArray(
+        v.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      case _ => null
+    }
+  }
+
+  /** None for BOOLEAN/INT96, which are not identifier types. */
+  private def leafKind(pt: PrimitiveType): Option[LeafKind] = {
+    val name = pt.getPrimitiveTypeName
+    (name, pt.getLogicalTypeAnnotation) match {
+      case (INT32 | INT64 | BINARY | FIXED_LEN_BYTE_ARRAY,
+            d: DecimalLogicalTypeAnnotation) =>
+        Some(DecimalLeaf(name, d.getScale))
+      case (INT32 | INT64, i: IntLogicalTypeAnnotation) =>
+        Some(if (name == INT32) IntLeaf(!i.isSigned) else LongLeaf(!i.isSigned))
+      case (INT32, _) => Some(IntLeaf(unsigned = false))
+      case (INT64, _) => Some(LongLeaf(unsigned = false))
+      case (FLOAT, _) => Some(FloatingLeaf(single = true))
+      case (DOUBLE, _) => Some(FloatingLeaf(single = false))
+      case (BINARY | FIXED_LEN_BYTE_ARRAY, _) => Some(StringLeaf)
+      case _ => None
+    }
+  }
+
+  /** A column group bound to one schema: per column, the field indexes
+    * to its leaf and the leaf's kind; `keys` holds the group's tuples
+    * in that key space. */
+  private final class BoundGroup(steps: Array[Array[Int]],
+                                 kinds: Array[LeafKind],
+                                 keys: java.util.HashSet[AnyRef]) {
+    /** The leaf's key, or null when any level is null (never matches). */
+    private def rowKey(g: Group, c: Int): AnyRef = {
+      val path = steps(c)
+      var cur = g
+      var i = 0
+      while (i < path.length - 1) {
+        if (cur.getFieldRepetitionCount(path(i)) == 0) return null
+        cur = cur.getGroup(path(i), 0)
+        i += 1
+      }
+      if (cur.getFieldRepetitionCount(path(i)) == 0) null
+      else kinds(c).row(cur, path(i))
+    }
+
+    def matches(g: Group): Boolean =
+      if (steps.length == 1) {
+        val k = rowKey(g, 0)
+        k != null && keys.contains(k)
+      } else {
+        val parts = new Array[AnyRef](steps.length)
+        var c = 0
+        while (c < parts.length) {
+          parts(c) = rowKey(g, c)
+          if (parts(c) == null) return false
+          c += 1
+        }
+        keys.contains(java.util.Arrays.asList(parts: _*))
+      }
+  }
+
+  /** The record match for objects with `schema`: true when all of a
+    * group's columns are present and their values form one of its
+    * tuples. */
+  private[forget] def parquetMatcher(specs: Seq[TaskGroupSpec],
+                                     schema: GroupType): Group => Boolean = {
+    val bound = specs.flatMap { spec =>
+      val leaves = spec.paths.map(leafSteps(schema, _))
+      val kinds = leaves.flatMap(_.flatMap(l => leafKind(l._2)))
+      if (kinds.size < spec.paths.size) None
+      else {
+        val keys = keySet(spec.tuples, (m, c) => kinds(c).key(m))
+        if (keys.isEmpty) None
+        else Some(new BoundGroup(leaves.map(_.get._1).toArray,
+          kinds.toArray, keys))
+      }
+    }.toArray
+    g => bound.exists(_.matches(g))
+  }
 
   // ------------------------------------------------------------------
   // Local-filesystem fast path
@@ -158,141 +380,6 @@ object DistributedRewrite {
   /** ChecksumFileSystem sidecar sibling (`.<name>.crc`). */
   private def crcSidecar(p: java.nio.file.Path): java.nio.file.Path =
     p.getParent.resolve("." + p.getFileName.toString + ".crc")
-
-  /** Case-insensitive field index lookup (parquet_handler.py:24-33). */
-  private def fieldIndex(gt: GroupType, name: String): Int = {
-    var i = 0
-    while (i < gt.getFieldCount) {
-      if (gt.getType(i).getName.equalsIgnoreCase(name)) return i
-      i += 1
-    }
-    -1
-  }
-
-  /** Resolve a dot path on a record; None when any segment is missing,
-    * null, repeated, or crosses a non-group. */
-  private def resolveLeaf(g: Group, path: Seq[String]): Option[(PrimitiveType, Group, Int)] = {
-    var cur = g
-    var i = 0
-    while (i < path.length) {
-      val gt = cur.getType
-      val idx = fieldIndex(gt, path(i))
-      if (idx < 0) return None
-      val f = gt.getType(idx)
-      if (f.isRepetition(PType.Repetition.REPEATED)) return None
-      if (cur.getFieldRepetitionCount(idx) == 0) return None // null
-      if (i == path.length - 1) {
-        if (!f.isPrimitive) return None
-        return Some((f.asPrimitiveType(), cur, idx))
-      }
-      if (f.isPrimitive) return None
-      cur = cur.getGroup(idx, 0)
-      i += 1
-    }
-    None
-  }
-
-  private def decimalScale(pt: PrimitiveType): Option[Int] =
-    pt.getLogicalTypeAnnotation match {
-      case d: DecimalLogicalTypeAnnotation => Some(d.getScale)
-      case _ => None
-    }
-
-  /** Parquet UINT32/UINT64 logical types (Spark widens these to Long /
-    * Decimal(20,0) on the driver-side Find; the task must widen the raw
-    * signed storage the same way or upper-range ids match in Find but
-    * not here). */
-  private def isUnsignedInt(pt: PrimitiveType): Boolean =
-    pt.getLogicalTypeAnnotation match {
-      case i: IntLogicalTypeAnnotation => !i.isSigned
-      case _ => false
-    }
-
-  private def binaryDecimal(b: Binary, scale: Int): java.math.BigDecimal =
-    new java.math.BigDecimal(new java.math.BigInteger(b.getBytes), scale)
-
-  /** Native comparison of a parquet leaf against a match value — the task
-    * analog of Spark's `col === lit(v)` with the reference's numeric
-    * semantics: decimals compare by value regardless of scale
-    * (Decimal('2547.4') == Decimal('2547.40'), parquet_handler.py:102-130);
-    * float/double NaN equals NaN (Spark SQL NaN semantics, which the
-    * Find predicate, [[Finder.forgetPredicate]], also uses). */
-  private def leafEquals(pt: PrimitiveType, g: Group, idx: Int, m: PVal): Boolean = {
-    val scaleOpt = decimalScale(pt)
-    pt.getPrimitiveTypeName match {
-      case INT32 =>
-        // UINT32 stores the unsigned value in signed INT32 bits; widen
-        // exactly like Spark's vectorized reader (& 0xffffffffL) so the
-        // task agrees with the driver-side Find on upper-range ids
-        val widened =
-          if (isUnsignedInt(pt)) g.getInteger(idx, 0) & 0xffffffffL
-          else g.getInteger(idx, 0).toLong
-        (m, scaleOpt) match {
-          case (PDecimal(d), Some(s)) =>
-            java.math.BigDecimal.valueOf(widened, s).compareTo(d) == 0
-          case (PLong(v), None) => widened == v
-          case _ => false
-        }
-      case INT64 =>
-        val raw = g.getLong(idx, 0)
-        val unsigned = isUnsignedInt(pt)
-        (m, scaleOpt) match {
-          case (PDecimal(d), Some(s)) =>
-            java.math.BigDecimal.valueOf(raw, s).compareTo(d) == 0
-          case (PDecimal(d), None) if unsigned =>
-            // UINT64 surfaces as Decimal(20,0) in Spark; compare on the
-            // unsigned reading of the raw signed long
-            new java.math.BigDecimal(java.lang.Long.toUnsignedString(raw))
-              .compareTo(d) == 0
-          case (PLong(v), None) =>
-            // an unsigned value > Long.MaxValue can never equal a PLong
-            if (unsigned) raw >= 0 && raw == v else raw == v
-          case _ => false
-        }
-      case FLOAT => m match {
-        case PFloat(v) =>
-          val x = g.getFloat(idx, 0)
-          (x.isNaN && v.isNaN) || x == v
-        case PDouble(v) =>
-          val x = g.getFloat(idx, 0)
-          (x.isNaN && v.isNaN) || x.toDouble == v
-        case _ => false
-      }
-      case DOUBLE => m match {
-        case PDouble(v) =>
-          val x = g.getDouble(idx, 0)
-          (x.isNaN && v.isNaN) || x == v
-        case PFloat(v) =>
-          val x = g.getDouble(idx, 0)
-          (x.isNaN && v.isNaN) || x == v.toDouble
-        case _ => false
-      }
-      case BINARY | FIXED_LEN_BYTE_ARRAY => (m, scaleOpt) match {
-        case (PDecimal(d), Some(s)) =>
-          binaryDecimal(g.getBinary(idx, 0), s).compareTo(d) == 0
-        case (PString(v), None) => g.getString(idx, 0) == v
-        case _ => false
-      }
-      case _ => false // BOOLEAN/INT96 are not identifier types
-    }
-  }
-
-  /** True when the record matches any group (all of the group's columns
-    * present AND some tuple equal on every column). */
-  private[forget] def recordMatches(g: Group, specs: Seq[TaskGroupSpec]): Boolean =
-    specs.exists { spec =>
-      val leaves = spec.paths.map(resolveLeaf(g, _))
-      leaves.forall(_.isDefined) && spec.tuples.exists { tuple =>
-        var i = 0
-        var all = true
-        while (all && i < tuple.length) {
-          val (pt, grp, idx) = leaves(i).get
-          all = leafEquals(pt, grp, idx, tuple(i))
-          i += 1
-        }
-        all
-      }
-    }
 
   // ------------------------------------------------------------------
   // Task-side file rewrites
@@ -513,12 +600,13 @@ object DistributedRewrite {
   private[graft] final case class Replace[A](value: A) extends Disposition[A]
 
   /** The disposition seam: a strategy says what becomes of each parquet
-    * record ([[record]]) and each parsed JSON line ([[line]]); the one
-    * parquet loop and the one JSON-lines loop do every byte of format
-    * I/O. `rowsChanged` counts the records dropped or replaced. A
-    * disposition may mutate and return the record it was given. */
+    * record ([[records]], bound once per object to its schema) and each
+    * parsed JSON line ([[line]]); the one parquet loop and the one
+    * JSON-lines loop do every byte of format I/O. `rowsChanged` counts
+    * the records dropped or replaced. A disposition may mutate and
+    * return the record it was given. */
   private[graft] abstract class RecordRewrite extends TaskRewrite {
-    def record(g: Group): Disposition[Group]
+    def records(schema: MessageType): Group => Disposition[Group]
     def line(node: JsonNode): Disposition[JsonNode]
     final def parquet(conf: Configuration, src: HPath,
                       staged: HPath): (Long, Long) =
@@ -528,45 +616,75 @@ object DistributedRewrite {
       rewriteJson(conf, src, staged, this)
   }
 
-  /** The deletion strategy behind [[run]]: drop every matching record
-    * (`private[forget]` so the crash-recovery spec can wrap it with an
-    * injected post-staging failure). */
-  private[forget] final class DeleteRewrite(pqSpecs: Seq[TaskGroupSpec],
-                                            jsonEval: JsonMatch.Evaluator)
+  /** The deletion strategy: drop every record one of `specs`' groups
+    * matches (`private[forget]` so the crash-recovery spec can wrap it
+    * with an injected post-staging failure). The matchers are built
+    * task-side — the parquet one once per distinct schema a task meets,
+    * the JSON one once per task. */
+  private[forget] final class DeleteRewrite(specs: Seq[TaskGroupSpec])
       extends RecordRewrite {
-    def record(g: Group): Disposition[Group] =
-      if (recordMatches(g, pqSpecs)) Drop else Keep
+    @transient private lazy val bySchema =
+      new java.util.concurrent.ConcurrentHashMap[MessageType, Group => Boolean]
+    @transient private lazy val jsonMatches = JsonMatch.matcher(specs)
+    def records(schema: MessageType): Group => Disposition[Group] = {
+      val matches = bySchema.computeIfAbsent(schema,
+        s => parquetMatcher(specs, s))
+      g => if (matches(g)) Drop else Keep
+    }
     def line(node: JsonNode): Disposition[JsonNode] =
-      if (jsonEval.matches(node)) Drop else Keep
+      if (jsonMatches(node)) Drop else Keep
     def zeroChangeMessage(path: String): String =
       s"$path was found by Find but Forget deleted 0 rows"
   }
 
-  /** Rewrite every work unit in ONE Spark job (k objects per task).
-    * Returns the job events (sorted by sk); live progress is visible on
-    * the two accumulators (`graft.forget.rowsProcessed|rowsDeleted`).
-    * Match-group cast validation ([[buildSpecs]]) runs BEFORE the
-    * empty-units short-circuit — intentionally fail-fast: an
-    * uncastable match id is a configuration error worth surfacing
-    * even when the queue is empty (so `run(_, _, Nil, badGroups)`
-    * throws [[graft.model.MatchIdCastingError]], not Nil). */
+  /** Delete the matches of `groups` from one mapper's `units`: casts the
+    * groups, then runs [[runTyped]]. The cast runs BEFORE the
+    * empty-units short-circuit — intentionally fail-fast: an uncastable
+    * match id is a configuration error worth surfacing even when the
+    * queue is empty (so `run(_, _, Nil, badGroups)` throws
+    * [[graft.model.MatchIdCastingError]], not Nil). */
   def run(spark: SparkSession, jobId: String, units: Seq[ObjectWorkUnit],
           groups: Seq[GroupMatches],
           outPathFor: String => Option[String] = _ => None,
           codec: PayloadCodec = PayloadCodec.Identity): Seq[JobEvent] = {
-    val pqSpecs = buildSpecs(spark, groups) // driver-side cast validation
-    val jsonEval = new JsonMatch.Evaluator(groups.map(JsonMatch.spec))
-    runWith(spark, jobId, units, new DeleteRewrite(pqSpecs, jsonEval),
-      outPathFor, codec)
+    val typed = Finder.typedGroups(spark, groups)
+    runTyped(spark, jobId, units,
+      units.map(_.mapperId).distinct.map(_ -> typed).toMap, outPathFor, codec)
   }
 
-  /** Generic job body shared by every [[TaskRewrite]] strategy. */
+  /** Delete from every work unit the records its own mapper's groups
+    * match (`typedByMapper(unit.mapperId)`, cast once by the caller) in
+    * ONE rewrite job and ONE marker sweep, however many mappers the
+    * units span. Returns the job events (sorted by sk); live progress is
+    * visible on the two accumulators
+    * (`graft.forget.rowsProcessed|rowsDeleted`). */
+  def runTyped(spark: SparkSession, jobId: String, units: Seq[ObjectWorkUnit],
+               typedByMapper: Map[String, Seq[TypedGroup]],
+               outPathFor: String => Option[String] = _ => None,
+               codec: PayloadCodec = PayloadCodec.Identity): Seq[JobEvent] =
+    rewriteAll(spark, jobId, units,
+      typedByMapper.map { case (m, typed) =>
+        m -> (new DeleteRewrite(buildSpecs(typed)): TaskRewrite)
+      }, outPathFor, codec)
+
+  /** Rewrite every work unit with one strategy in ONE Spark job. */
   private[graft] def runWith(spark: SparkSession, jobId: String,
                              units: Seq[ObjectWorkUnit],
                              rewrite: TaskRewrite,
                              outPathFor: String => Option[String] = _ => None,
                              codec: PayloadCodec = PayloadCodec.Identity)
-      : Seq[JobEvent] = {
+      : Seq[JobEvent] =
+    rewriteAll(spark, jobId, units,
+      units.map(_.mapperId -> rewrite).toMap, outPathFor, codec)
+
+  /** The job body shared by every [[TaskRewrite]] strategy: ONE rewrite
+    * job (k objects per task), each unit rewritten by
+    * `rewriteOf(unit.mapperId)`, then ONE marker sweep job. */
+  private def rewriteAll(spark: SparkSession, jobId: String,
+                         units: Seq[ObjectWorkUnit],
+                         rewriteOf: Map[String, TaskRewrite],
+                         outPathFor: String => Option[String],
+                         codec: PayloadCodec): Seq[JobEvent] = {
     if (units.isEmpty) return Nil
     val accProcessed = spark.sparkContext.longAccumulator("graft.forget.rowsProcessed")
     val accDeleted = spark.sparkContext.longAccumulator("graft.forget.rowsDeleted")
@@ -662,6 +780,7 @@ object DistributedRewrite {
           try {
             val plainSrc =
               plainLocal.map(f => new HPath(f.toURI)).getOrElse(src)
+            val rewrite = rewriteOf(u.mapperId)
             val (processed, deleted) = u.format match {
               case DataFormat.Parquet =>
                 rewrite.parquet(conf, plainSrc, staged)
@@ -841,7 +960,8 @@ object DistributedRewrite {
     * commit). ONE open per object: the schema and compression codec
     * come from that reader's footer, and the same reader then streams
     * its row groups, `getRowCount` records each. Every record goes to
-    * `rw.record`; the writer reuses the source schema and codec.
+    * the disposition `rw.records` binds to the footer's schema; the
+    * writer reuses the source schema and codec.
     * Partial staged output is deleted on failure. */
   private def rewriteParquet(conf: Configuration, src: HPath, staged: HPath,
                              rw: RecordRewrite): (Long, Long) = {
@@ -857,6 +977,7 @@ object DistributedRewrite {
           CompressionCodecName.SNAPPY
         else footer.getBlocks.get(0).getColumns.get(0).getCodec
       val columnIO = new ColumnIOFactory(meta.getCreatedBy).getColumnIO(schema)
+      val disposition = rw.records(schema)
       val writer: ParquetWriter[Group] = groupWriterBuilder(conf, staged)
         .withType(schema)
         .withCompressionCodec(codec)
@@ -870,7 +991,7 @@ object DistributedRewrite {
           while (left > 0) {
             val g = records.read()
             processed += 1
-            rw.record(g) match {
+            disposition(g) match {
               case Keep => writer.write(g)
               case Drop => changed += 1
               case Replace(r) => changed += 1; writer.write(r)

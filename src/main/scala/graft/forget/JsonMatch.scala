@@ -2,8 +2,7 @@ package graft.forget
 
 import com.fasterxml.jackson.databind.JsonNode
 import com.fasterxml.jackson.databind.node.ObjectNode
-import graft.find.Finder.GroupMatches
-import org.apache.spark.sql.types._
+import graft.forget.DistributedRewrite.{PDecimal, PDouble, PFloat, PLong, PString, PVal, TaskGroupSpec}
 import scala.jdk.CollectionConverters._
 
 /** Raw-JSON match evaluation for the JSON-lines Forget path.
@@ -20,47 +19,14 @@ import scala.jdk.CollectionConverters._
   *     NOT JSON string "1234"; numeric cross-type compares numerically,
   *     mirroring Python `==` — generate_queries.py:102-109).
   *
-  * [[Evaluator]] runs inside the rewrite task ([[DistributedRewrite]])
-  * on the line the shared JSON-lines loop parsed once — the reference
-  * pays the same parse per line. [[resolve]] is also the PII scrub's
-  * path lookup ([[graft.llm.PiiForget]]).
+  * The match values are the ones [[graft.find.Finder.typedGroups]] cast
+  * for the whole job, so Find and Forget accept the same queue. The
+  * [[matcher]] runs inside the rewrite task ([[DistributedRewrite]]) on
+  * the line the shared JSON-lines loop parsed once — the reference pays
+  * the same parse per line. [[resolve]] is also the PII scrub's path
+  * lookup ([[graft.llm.PiiForget]]).
   */
 object JsonMatch {
-
-  /** A match value with the declared column type applied (planning cast,
-    * generate_queries.py:495-513): int-family → Long, float-family →
-    * Double, decimal → BigDecimal, else String. */
-  sealed trait TypedVal extends Serializable
-  final case class LongVal(v: Long) extends TypedVal
-  final case class DoubleVal(v: Double) extends TypedVal
-  final case class DecimalVal(v: BigDecimal) extends TypedVal
-  final case class StringVal(v: String) extends TypedVal
-
-  /** @throws graft.model.MatchIdCastingError on unparseable values —
-    *         unified with the planner contract
-    *         (generate_queries.py:495-519). */
-  def cast(raw: String, t: DataType): TypedVal =
-    try t match {
-      case ByteType | ShortType | IntegerType | LongType => LongVal(raw.toLong)
-      case FloatType | DoubleType                        => DoubleVal(raw.toDouble)
-      case d: DecimalType =>
-        DecimalVal(BigDecimal(raw).setScale(d.scale, BigDecimal.RoundingMode.HALF_UP))
-      case _                                             => StringVal(raw)
-    } catch {
-      case e: NumberFormatException =>
-        throw new graft.model.MatchIdCastingError(
-          s"Match id '$raw' cannot be cast to $t: ${e.getMessage}")
-    }
-
-  /** One group's data, fully serializable for executor-side evaluation. */
-  final case class GroupSpec(paths: Seq[Seq[String]],
-                             tuples: Set[Seq[TypedVal]]) extends Serializable
-
-  def spec(gm: GroupMatches): GroupSpec = GroupSpec(
-    gm.group.columns.map(_.split('.').toSeq),
-    gm.rows.map { case (_, vals) =>
-      vals.zip(gm.group.types).map { case (v, t) => cast(v, t) }
-    }.toSet)
 
   /** Case-insensitive dot-path resolution over a parsed JSON node: the
     * object holding the path's last segment and that segment's concrete
@@ -80,27 +46,46 @@ object JsonMatch {
     resolve(node, path).map { case (o, k) => o.get(k) }
       .filter(n => !n.isNull && !n.isMissingNode)
 
-  /** Python-`==`-style comparison between a JSON leaf and a typed match
-    * value: numerics compare numerically across types; strings compare as
-    * strings; anything else is unequal. */
-  def valueEquals(node: JsonNode, m: TypedVal): Boolean = (m match {
-    case LongVal(v)    => node.isNumber && decimalOf(node).compare(BigDecimal(v)) == 0
-    case DoubleVal(v)  => node.isNumber && decimalOf(node).compare(BigDecimal(v)) == 0
-    case DecimalVal(v) => node.isNumber && decimalOf(node).compare(v) == 0
-    case StringVal(v)  => node.isTextual && node.asText() == v
-  })
+  /** A JSON leaf as a hash key: a number as its value (a BigDecimal with
+    * trailing zeros stripped, so 1234, 1234.0 and 1.234e3 are one key);
+    * a string as itself; null — never matching — for anything else,
+    * including a non-finite double. Numbers and strings never share a
+    * key, which is the native-typed contract above. */
+  def nodeKey(n: JsonNode): AnyRef =
+    if (n.isTextual) n.asText()
+    else if (!n.isNumber) null
+    else if ((n.isDouble || n.isFloat) && !java.lang.Double.isFinite(n.doubleValue))
+      null
+    else n.decimalValue().stripTrailingZeros
 
-  private def decimalOf(n: JsonNode): BigDecimal = BigDecimal(n.decimalValue())
+  /** A match value in [[nodeKey]]'s key space, compared the Python-`==`
+    * way: numerics by value across types — a float or double by its
+    * shortest decimal rendering, which is the literal the queue held —
+    * and strings as strings. NaN and infinities are no JSON number, so
+    * they never match. */
+  def valueKey(m: PVal): AnyRef = m match {
+    case PLong(v) => java.math.BigDecimal.valueOf(v).stripTrailingZeros
+    case PFloat(v) =>
+      if (v.isNaN || v.isInfinite) null
+      else new java.math.BigDecimal(java.lang.Float.toString(v)).stripTrailingZeros
+    case PDouble(v) =>
+      if (v.isNaN || v.isInfinite) null
+      else new java.math.BigDecimal(java.lang.Double.toString(v)).stripTrailingZeros
+    case PDecimal(d) => d.stripTrailingZeros
+    case PString(s) => s
+  }
 
-  /** Match evaluation over a parsed line; the rewrite loop parses each
-    * line once and hands the node here. */
-  final class Evaluator(specs: Seq[GroupSpec]) extends Serializable {
-    def matches(node: JsonNode): Boolean =
-      specs.exists { g =>
-        val values = g.paths.map(getValue(node, _))
-        values.forall(_.isDefined) && g.tuples.exists(t =>
-          t.zip(values).forall { case (m, Some(v)) => valueEquals(v, m)
-                                 case _            => false })
-      }
+  /** The line match: per group, one hash set of [[valueKey]] tuples,
+    * probed once per line with the [[nodeKey]]s at the group's paths. */
+  def matcher(specs: Seq[TaskGroupSpec]): JsonNode => Boolean = {
+    val groups = specs
+      .map(s => (s.paths, DistributedRewrite.keySet(s.tuples, (m, _) => valueKey(m))))
+      .filterNot(_._2.isEmpty)
+    node => groups.exists { case (paths, keys) =>
+      val parts = paths.map(p => getValue(node, p).map(nodeKey).orNull)
+      !parts.contains(null) &&
+        keys.contains(if (parts.size == 1) parts.head
+                      else java.util.Arrays.asList(parts: _*))
+    }
   }
 }

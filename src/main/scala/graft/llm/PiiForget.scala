@@ -6,7 +6,7 @@ import graft.forget.DistributedRewrite.{Disposition, Keep, Replace}
 import graft.model._
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroup
-import org.apache.parquet.schema.{GroupType, LogicalTypeAnnotation}
+import org.apache.parquet.schema.{GroupType, LogicalTypeAnnotation, MessageType}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -44,7 +44,8 @@ import org.apache.spark.sql.functions._
   *   - parquet: a record whose (dot-path-resolved, case-insensitive)
   *     string leaf holds PII is replaced by a deep copy with that leaf
   *     scrubbed, every other field copied bit-exact; any other record
-  *     is kept. Schema and codec are the loop's: preserved.
+  *     is kept, uncopied (the leaf is redacted before anything is
+  *     copied). Schema and codec are the loop's: preserved.
   *   - JSON-lines (+gzip): a line whose text field (resolved by
   *     [[JsonMatch.resolve]]) holds PII is replaced by the parsed node
   *     with that field redacted, re-serialized by jackson; every other
@@ -118,10 +119,15 @@ object PiiForget {
     def zeroChangeMessage(path: String): String =
       s"$path was found by the PII scan but the scrub changed 0 rows"
 
-    def record(g: Group): Disposition[Group] = {
-      val out = new SimpleGroup(g.getType)
-      if (copyScrubbed(g, out, g.getType, textPath)) Replace(out) else Keep
-    }
+    /** A record is copied only when [[redacts]] finds a leaf the scrub
+      * changes; every clean record is kept as it was read. */
+    def records(schema: MessageType): Group => Disposition[Group] = g =>
+      if (!redacts(g, schema, textPath)) Keep
+      else {
+        val out = new SimpleGroup(g.getType)
+        copyScrubbed(g, out, g.getType, textPath)
+        Replace(out)
+      }
 
     /** Redact the string at `textPath` in place; the concrete key keeps
       * the line's own spelling of the field name. */
@@ -134,12 +140,46 @@ object PiiForget {
         case _ => Keep
       }
 
+    /** True when a string leaf at `path` (case-insensitive per segment,
+      * every field and repetition [[copyScrubbed]] would scrub) holds
+      * text the redactor changes. Walks only the fields on the path. */
+    private def redacts(g: Group, gt: GroupType, path: Seq[String]): Boolean = {
+      var i = 0
+      while (i < gt.getFieldCount) {
+        val ft = gt.getType(i)
+        if (ft.getName.equalsIgnoreCase(path.head)) {
+          val reps = g.getFieldRepetitionCount(i)
+          var j = 0
+          while (j < reps) {
+            if (path.length == 1) {
+              if (isString(ft)) {
+                val s = g.getString(i, j)
+                if (redactor(s) != s) return true
+              }
+            } else if (!ft.isPrimitive &&
+                       redacts(g.getGroup(i, j), ft.asGroupType(), path.tail))
+              return true
+            j += 1
+          }
+        }
+        i += 1
+      }
+      false
+    }
+
+    private def isString(ft: org.apache.parquet.schema.Type): Boolean =
+      ft.isPrimitive && (ft.asPrimitiveType().getPrimitiveTypeName match {
+        case BINARY | FIXED_LEN_BYTE_ARRAY =>
+          ft.getLogicalTypeAnnotation
+            .isInstanceOf[LogicalTypeAnnotation.StringLogicalTypeAnnotation]
+        case _ => false
+      })
+
     /** Deep copy `src` into `dst`, scrubbing the string leaf at `path`
-      * (case-insensitive per segment). Returns true when a value
-      * actually changed. Fields not on the path are copied verbatim. */
+      * (case-insensitive per segment). Fields not on the path are
+      * copied verbatim. */
     private def copyScrubbed(src: Group, dst: Group, gt: GroupType,
-                             path: Seq[String]): Boolean = {
-      var changed = false
+                             path: Seq[String]): Unit = {
       var i = 0
       while (i < gt.getFieldCount) {
         val ft = gt.getType(i)
@@ -149,17 +189,10 @@ object PiiForget {
         var j = 0
         while (j < reps) {
           if (ft.isPrimitive) {
-            val pt = ft.asPrimitiveType()
-            val isString = pt.getLogicalTypeAnnotation != null &&
-              pt.getLogicalTypeAnnotation.isInstanceOf[
-                LogicalTypeAnnotation.StringLogicalTypeAnnotation]
-            pt.getPrimitiveTypeName match {
+            ft.asPrimitiveType().getPrimitiveTypeName match {
               case BINARY | FIXED_LEN_BYTE_ARRAY
-                  if onPath && path.length == 1 && isString =>
-                val s = src.getString(i, j)
-                val s2 = redactor(s)
-                if (s2 != s) changed = true
-                dst.add(i, s2)
+                  if onPath && path.length == 1 && isString(ft) =>
+                dst.add(i, redactor(src.getString(i, j)))
               case BINARY | FIXED_LEN_BYTE_ARRAY =>
                 dst.add(i, src.getBinary(i, j))
               case INT32   => dst.add(i, src.getInteger(i, j))
@@ -170,15 +203,13 @@ object PiiForget {
               case BOOLEAN => dst.add(i, src.getBoolean(i, j))
             }
           } else {
-            val sub = dst.addGroup(i)
-            if (copyScrubbed(src.getGroup(i, j), sub, ft.asGroupType(),
-                if (onPath) path.tail else Nil)) changed = true
+            copyScrubbed(src.getGroup(i, j), dst.addGroup(i),
+              ft.asGroupType(), if (onPath) path.tail else Nil)
           }
           j += 1
         }
         i += 1
       }
-      changed
     }
   }
 }

@@ -98,8 +98,8 @@ object SqlFind {
     val dataView = s"graft_data_$suffix"
     val manView = s"graft_manifest_$suffix"
     data.createOrReplaceTempView(dataView)
-    groups.map { gm =>
-      Finder.manifest(spark, gm).select(
+    Finder.typedGroups(spark, groups).map { tg =>
+      Finder.manifest(spark, tg).select(
         lit(jobId).as("jobid"),
         lit(mapperId).as("datamapperid"),
         col("match_key").as("queryablematchid"),

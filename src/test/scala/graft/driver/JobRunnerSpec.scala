@@ -189,6 +189,95 @@ class JobRunnerSpec extends SparkSpec {
     assert(run.state.stats.totalRowsDeletedCount == 2)
   }
 
+  test("a queue value Spark's cast accepts (' 12 ') deletes from a " +
+    "parquet AND a JSON-lines mapper: Find and Forget share one cast") {
+    val (dir, table) = lake()
+    Seq((12L, "p"), (1L, "q")).toDF("customer_id", "x")
+      .coalesce(1).write.mode("append").parquet(table.location)
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/j.json"),
+      ("{\"customer_id\":12}\n{\"customer_id\":3}\n").getBytes("UTF-8"))
+    val jsonTable = TableDef("j", s"$dir/j.json", DataFormat.JsonLines,
+      table.schema)
+    val run = JobRunner.run(spark, "jr-ws",
+      Seq(DataMapper("mp", "t", Seq("customer_id")) -> table,
+        DataMapper("mj", "j", Seq("customer_id"),
+          format = DataFormat.JsonLines) -> jsonTable),
+      Seq(DeletionQueueItem("q", MatchId.Simple(" 12 "))))
+    assert(run.state.status == JobStatus.Completed, run.events)
+    assert(run.state.stats.totalRowsDeletedCount == 2)
+    assert(spark.read.parquet(table.location)
+      .where(col("customer_id") === 12L).count() == 0)
+    assert(new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(s"$dir/j.json")), "UTF-8") ==
+      "{\"customer_id\":3}\n")
+  }
+
+  test("the Forget phase of a three-mapper job (two parquet, one JSON " +
+    "lines) is ONE rewrite Spark job and ONE sweep Spark job") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-1job-").toString
+    Seq(Seq((1L, "a"), (7L, "b")), Seq((7L, "c"), (7L, "d"), (9L, "e")))
+      .foreach(rows => rows.toDF("customer_id", "x").coalesce(1)
+        .write.mode("append").parquet(s"$dir/a"))
+    Seq((9L, 100L), (3L, 101L)).toDF("o_custkey", "o_id").coalesce(1)
+      .write.parquet(s"$dir/b")
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$dir/j"))
+    Seq("p1.json" -> "{\"user_id\":7}\n{\"user_id\":2}\n",
+      "p2.json" -> "{\"user_id\":9}\n{\"user_id\":9}\n{\"user_id\":4}\n")
+      .foreach { case (n, c) => java.nio.file.Files.write(
+        java.nio.file.Paths.get(s"$dir/j/$n"), c.getBytes("UTF-8")) }
+    def pq(n: String) = TableDef(n, s"$dir/$n", DataFormat.Parquet,
+      spark.read.parquet(s"$dir/$n").schema)
+    val jsonSchema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("user_id",
+        org.apache.spark.sql.types.LongType)))
+    val mappers = Seq(
+      DataMapper("ma", "a", Seq("customer_id")) -> pq("a"),
+      DataMapper("mb", "b", Seq("o_custkey")) -> pq("b"),
+      DataMapper("mj", "j", Seq("user_id"), format = DataFormat.JsonLines) ->
+        TableDef("j", s"$dir/j", DataFormat.JsonLines, jsonSchema))
+    // expected deletions per object, read without the engine
+    val expected = mappers.flatMap { case (m, t) =>
+      JobRunner.readTable(spark, t)
+        .where(col(m.columns.head).isin(7L, 9L))
+        .groupBy(org.apache.spark.sql.functions.input_file_name()).count()
+        .collect().map(r => graft.forget.DistributedRewrite
+          .stripScheme(r.getString(0)) -> r.getLong(1))
+    }.toMap
+    assert(expected.size == 5 && expected.values.sum == 8L, expected)
+
+    val starts = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        e.stageInfos.maxByOption(_.stageId).foreach { st =>
+          // the innermost engine frame of the job's call site
+          st.details.split('\n').map(_.trim).find(_.contains("graft."))
+            .filter(_.contains("graft.forget."))
+            .foreach(_ => starts.add(st.name))
+        }
+    }
+    Thread.sleep(300) // let earlier tests' listener events drain
+    spark.sparkContext.addSparkListener(listener)
+    val run =
+      try {
+        val r = JobRunner.run(spark, "jr-1job", mappers,
+          Seq(DeletionQueueItem("q7", MatchId.Simple("7")),
+            DeletionQueueItem("q9", MatchId.Simple("9")),
+            DeletionQueueItem("qx", MatchId.Simple("123456"))))
+        Thread.sleep(700) // listener bus is async
+        r
+      } finally spark.sparkContext.removeSparkListener(listener)
+    assert(run.state.status == JobStatus.Completed, run.state.status)
+    val forgetJobs = starts.asScala.toSeq
+    assert(forgetJobs.count(_.startsWith("collect")) == 1, forgetJobs)
+    assert(forgetJobs.count(_.startsWith("foreach")) == 1, forgetJobs)
+    assert(forgetJobs.size == 2, forgetJobs)
+    val updated = run.events.filter(_.eventName == JobEventName.ObjectUpdated)
+      .map(e => graft.forget.DistributedRewrite.stripScheme(e.path) ->
+        e.statsDeleted).toMap
+    assert(updated == expected)
+  }
+
   test("concurrent Find dispatch: wall-clock tracks the slowest mapper, " +
     "not the sum; event log stays sk-ordered") {
     // six mappers over six disjoint lakes, each Find artificially held

@@ -89,6 +89,84 @@ class FinderSpec extends SparkSpec {
     intercept[MatchIdCastingError](Finder.matchedRows(spark, df, groups))
   }
 
+  /** The Dataset route `typedGroups` took before it evaluated the cast
+    * expressions directly: one `try_cast` + string-cast projection per
+    * group over a local relation, collected. Kept as the oracle. */
+  private def typedViaDataset(groups: Seq[Finder.GroupMatches])
+      : Seq[(Seq[Seq[Any]], Seq[String])] = groups.map { gm =>
+    val g = gm.group
+    val native = g.types.zipWithIndex.map { case (t, i) =>
+      element_at($"vals", i + 1).try_cast(t.sql).as(s"_n$i")
+    }
+    val strings = g.types.indices.map(i => col(s"_n$i").cast(StringType))
+    val key =
+      if (strings.size == 1) strings.head
+      else concat(strings.flatMap(c => Seq(c, lit(Finder.CompositeToken)))
+        .dropRight(1): _*)
+    val rows = gm.rows.toDF("item_id", "vals")
+      .select((col("item_id") +: col("vals") +: native): _*)
+      .withColumn("_key", key).collect()
+    rows.foreach { r =>
+      val raw = r.getSeq[String](1)
+      g.types.indices.foreach { i =>
+        if (raw(i) != null && r.isNullAt(2 + i))
+          throw new MatchIdCastingError(s"${raw(i)} -> ${g.types(i)}")
+      }
+    }
+    (rows.toSeq.map(r => g.types.indices.map(i => r.get(2 + i))),
+      rows.toSeq.map(_.getAs[String]("_key")))
+  }
+
+  /** NaN == NaN, so two cast results compare as values. */
+  private def sameValue(a: Any, b: Any): Boolean = (a, b) match {
+    case (x: Double, y: Double) => java.lang.Double.compare(x, y) == 0
+    case (x: Float, y: Float) => java.lang.Float.compare(x, y) == 0
+    case _ => a == b
+  }
+
+  test("typedGroups' direct cast evaluation equals the Dataset route, " +
+    "value for value, and fails on the same inputs") {
+    val types = Seq[DataType](ByteType, ShortType, IntegerType, LongType,
+      FloatType, DoubleType, DecimalType(5, 2), DecimalType(20, 0),
+      DecimalType(38, 10), StringType)
+    val inputs = Seq("12", " 12 ", "\t-7\n", "+3", "1e3", "1.5E2", "-0",
+      "0.005", "0.004", "999.995", "1000", "-999.99", "127", "128",
+      "-129", "32768", "2147483648", "9223372036854775807",
+      "9223372036854775808", "18446744073709551615", "1e40", "inf",
+      "-Infinity", "NaN", "nan", "-0.0", "3.4028236e38", "1.5", "1.",
+      ".5", "0x1F", "", "  ", "12abc", "caf\u00e9")
+    var compared = 0
+    var failures = 0
+    for (t <- types; v <- inputs) {
+      val gm = Finder.GroupMatches(Finder.ColumnGroup(Seq("c"), Seq(t)),
+        Seq(("q", Seq(v))))
+      val direct = scala.util.Try(Finder.typedGroups(spark, Seq(gm)).head)
+      val oracle = scala.util.Try(typedViaDataset(Seq(gm)).head)
+      (direct.toOption, oracle.toOption) match {
+        case (Some(d), Some((n, k))) =>
+          assert(d.native.size == 1 && n.size == 1)
+          assert(sameValue(d.native.head.head, n.head.head),
+            s"$t '$v': ${d.native.head.head} vs ${n.head.head}")
+          assert(d.stringKeys == k, s"$t '$v'")
+          compared += 1
+        case (None, None) =>
+          assert(direct.failed.get.isInstanceOf[MatchIdCastingError], s"$t '$v'")
+          assert(oracle.failed.get.isInstanceOf[MatchIdCastingError], s"$t '$v'")
+          failures += 1
+        case _ => fail(s"$t '$v': direct $direct, Dataset route $oracle")
+      }
+    }
+    assert(compared > 100 && failures > 50, s"$compared / $failures")
+    // composites: the token-joined key, a null component, the item ids
+    val comp = Finder.GroupMatches(
+      Finder.ColumnGroup(Seq("a", "b"), Seq(LongType, DecimalType(12, 2))),
+      Seq(("x", Seq(" 1 ", "2.345")), ("y", Seq("2", null))))
+    val d = Finder.typedGroups(spark, Seq(comp)).head
+    val (n, k) = typedViaDataset(Seq(comp)).head
+    assert(d.native == n && d.stringKeys == k && d.ids == Seq("x", "y"))
+    assert(k == Seq("1" + Finder.CompositeToken + "2.35", null))
+  }
+
   test("uncastable composite component raises MatchIdCastingError") {
     val mapper = DataMapper("m", "t", Seq("id", "name"))
     val groups = Finder.plan(mapper, tableOf(df),

@@ -24,10 +24,9 @@ import org.apache.spark.sql.DataFrame
   * re-dispatches the object and reclaims the orphan. Top-level class
   * so the task closure serializes without an outer spec reference. */
 private class CrashAfterStaging(specs: Seq[DistributedRewrite.TaskGroupSpec],
-                                jsonEval: JsonMatch.Evaluator,
                                 victimName: String)
     extends DistributedRewrite.TaskRewrite {
-  private val inner = new DistributedRewrite.DeleteRewrite(specs, jsonEval)
+  private val inner = new DistributedRewrite.DeleteRewrite(specs)
   def parquet(conf: Configuration, src: HPath,
               staged: HPath): (Long, Long) = {
     val r = inner.parquet(conf, src, staged)
@@ -104,14 +103,14 @@ class CrashRecoverySpec extends SparkSpec {
       Seq((7L, "m2"), (3L, "k2")).toDF("customer_id", "x"))
     val schema = spark.read.parquet(o2).schema
     val groups = groupsFor(schema)
-    val specs = DistributedRewrite.buildSpecs(spark, groups)
-    val eval = new JsonMatch.Evaluator(groups.map(JsonMatch.spec))
+    val specs =
+      DistributedRewrite.buildSpecs(Finder.typedGroups(spark, groups))
     val before = readFileBytes(o2)
 
     intercept[Exception] {
       DistributedRewrite.runWith(spark, "jcrash",
         Seq(ObjectWorkUnit("jcrash", o2, "m", DataFormat.Parquet, false)),
-        new CrashAfterStaging(specs, eval, "o2.parquet"))
+        new CrashAfterStaging(specs, "o2.parquet"))
     }
 
     // the victim never swapped: byte-identical source
@@ -134,13 +133,13 @@ class CrashRecoverySpec extends SparkSpec {
     val (lake, o1, o2) = freshLake()
     val schema = spark.read.parquet(o1).schema
     val groups = groupsFor(schema)
-    val specs = DistributedRewrite.buildSpecs(spark, groups)
-    val eval = new JsonMatch.Evaluator(groups.map(JsonMatch.spec))
+    val specs =
+      DistributedRewrite.buildSpecs(Finder.typedGroups(spark, groups))
     intercept[Exception] {
       DistributedRewrite.runWith(spark, "jcrash",
         Seq(ObjectWorkUnit("jcrash", o1, "m", DataFormat.Parquet, false),
           ObjectWorkUnit("jcrash", o2, "m", DataFormat.Parquet, false)),
-        new CrashAfterStaging(specs, eval, "o2.parquet"))
+        new CrashAfterStaging(specs, "o2.parquet"))
     }
     assert(stagingSiblings(lake).nonEmpty)
 

@@ -412,4 +412,218 @@ class ForgetSpec extends SparkSpec {
       Seq(("q1", Seq("42")))))
     assert(DistributedRewrite.run(spark, "j-empty2", Nil, good) == Nil)
   }
+
+  // ---- the hash probe equals the queue scan it replaced -------------
+
+  test("seeded property: the per-object hash probe matches exactly the " +
+    "records the per-tuple scan matched, over every identifier leaf kind") {
+    import ForgetSpec._
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    val factory = new SimpleGroupFactory(PropSchema)
+    var hits = 0
+    var records = 0
+    (1 to 40).foreach { seed =>
+      val rnd = new scala.util.Random(seed)
+      def pick[A](xs: Seq[A]): A = xs(rnd.nextInt(xs.size))
+      val specs = Seq.fill(1 + rnd.nextInt(3)) {
+        val cols = rnd.shuffle(PropColumns).take(1 + rnd.nextInt(3))
+        val paths = cols.map { c =>
+          val p = if (rnd.nextInt(10) == 0) "nope" else c
+          p.split('.').toSeq.map(seg =>
+            if (rnd.nextBoolean()) seg.toUpperCase else seg)
+        }
+        DistributedRewrite.TaskGroupSpec(paths,
+          Seq.fill(1 + rnd.nextInt(20))(cols.map(_ => pick(PropValues))))
+      }
+      val probe = DistributedRewrite.parquetMatcher(specs, PropSchema)
+      (1 to 200).foreach { _ =>
+        val g = factory.newGroup()
+        def maybe(f: => Unit): Unit = if (rnd.nextInt(5) > 0) f
+        maybe(g.append("i32", pick(Seq(-2, -1, 0, 1, 2, 7, Int.MaxValue,
+          Int.MinValue))))
+        maybe(g.append("u32", pick(Seq(-1, 0, 1, 7, Int.MinValue))))
+        maybe(g.append("i64", pick(Seq(-1L, 0L, 1L, 7L, Long.MaxValue,
+          Long.MinValue))))
+        maybe(g.append("u64", pick(Seq(-1L, 0L, 1L, 7L, Long.MinValue))))
+        maybe(g.append("d32", pick(Seq(-100, 0, 1, 1234, 999999999))))
+        maybe(g.append("d64", pick(Seq(0L, 1L, 123400L, -10000L))))
+        maybe(g.append("dbin", org.apache.parquet.io.api.Binary
+          .fromConstantByteArray(pick(Seq(BigInt(0), BigInt(1),
+            BigInt(10).pow(25), -(BigInt(10).pow(25) - 1))).toByteArray)))
+        maybe(g.append("f", pick(Seq(0f, -0f, Float.NaN, 1.5f, 0.1f,
+          Float.PositiveInfinity))))
+        maybe(g.append("d", pick(Seq(0.0, -0.0, Double.NaN, 1.5, 0.1,
+          0.1f.toDouble))))
+        maybe(g.append("s", pick(Seq("a", "b", "caf\u00e9", "", "1"))))
+        maybe {
+          val u = g.addGroup("user")
+          maybe(u.append("email", pick(Seq("x@y", "z"))))
+          maybe(u.append("id", pick(Seq(0L, 7L, -1L))))
+        }
+        val want = ScanOracle.recordMatches(g, specs)
+        assert(probe(g) == want, s"seed $seed: $specs on\n$g")
+        if (want) hits += 1
+        records += 1
+      }
+    }
+    assert(hits > records / 20, s"only $hits of $records records matched")
+  }
+}
+
+object ForgetSpec {
+  import DistributedRewrite._
+  import org.apache.parquet.schema.{LogicalTypeAnnotation => L, Types}
+  import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+
+  /** One optional leaf of every identifier kind, plus a nested group. */
+  val PropSchema: org.apache.parquet.schema.MessageType = Types.buildMessage()
+    .addField(Types.optional(INT32).named("i32"))
+    .addField(Types.optional(INT32).as(L.intType(32, false)).named("u32"))
+    .addField(Types.optional(INT64).named("i64"))
+    .addField(Types.optional(INT64).as(L.intType(64, false)).named("u64"))
+    .addField(Types.optional(INT32).as(L.decimalType(2, 9)).named("d32"))
+    .addField(Types.optional(INT64).as(L.decimalType(4, 18)).named("d64"))
+    .addField(Types.optional(BINARY).as(L.decimalType(6, 30)).named("dbin"))
+    .addField(Types.optional(FLOAT).named("f"))
+    .addField(Types.optional(DOUBLE).named("d"))
+    .addField(Types.optional(BINARY).as(L.stringType()).named("s"))
+    .addField(Types.optionalGroup()
+      .addField(Types.optional(BINARY).as(L.stringType()).named("email"))
+      .addField(Types.optional(INT64).named("id"))
+      .named("user"))
+    .named("row")
+
+  val PropColumns: Seq[String] = Seq("i32", "u32", "i64", "u64", "d32",
+    "d64", "dbin", "f", "d", "s", "user.email", "user.id")
+
+  /** Match values of every kind, each the cast form of some stored
+    * value above or of a near miss (other scale, other type, NaN, -0.0,
+    * unsigned upper range, decimals that do not fit a column's scale). */
+  val PropValues: Seq[PVal] =
+    Seq(-2L, -1L, 0L, 1L, 2L, 7L, Int.MaxValue.toLong, Int.MinValue.toLong,
+      4294967295L, 2147483648L, Long.MaxValue, Long.MinValue).map(PLong) ++
+    Seq("0", "0.00", "0.01", "0.0001", "12.34", "12.340", "12.345", "-1.00",
+      "1", "7", "7.0", "4294967295", "18446744073709551615",
+      "9223372036854775808", "0.000001", "10000000000000000000",
+      "-9999999999999999999.999999", "9999999.99")
+      .map(v => PDecimal(new java.math.BigDecimal(v))) ++
+    Seq(0f, -0f, Float.NaN, 1.5f, 0.1f, Float.PositiveInfinity).map(PFloat) ++
+    Seq(0.0, -0.0, Double.NaN, 1.5, 0.1, 0.1f.toDouble, 7.0).map(PDouble) ++
+    Seq("a", "b", "caf\u00e9", "", "1", "x@y", "z").map(PString)
+
+  /** The queue scan the hash probe replaced: every record resolves its
+    * leaves and compares them against every tuple. Kept as the oracle. */
+  object ScanOracle {
+    import org.apache.parquet.example.data.Group
+    import org.apache.parquet.io.api.Binary
+    import org.apache.parquet.schema.{GroupType, PrimitiveType, Type => PType}
+    import org.apache.parquet.schema.LogicalTypeAnnotation.{DecimalLogicalTypeAnnotation, IntLogicalTypeAnnotation}
+
+    private def fieldIndex(gt: GroupType, name: String): Int =
+      (0 until gt.getFieldCount).find(i =>
+        gt.getType(i).getName.equalsIgnoreCase(name)).getOrElse(-1)
+
+    private def resolveLeaf(g: Group, path: Seq[String])
+        : Option[(PrimitiveType, Group, Int)] = {
+      var cur = g
+      var i = 0
+      while (i < path.length) {
+        val gt = cur.getType
+        val idx = fieldIndex(gt, path(i))
+        if (idx < 0) return None
+        val f = gt.getType(idx)
+        if (f.isRepetition(PType.Repetition.REPEATED)) return None
+        if (cur.getFieldRepetitionCount(idx) == 0) return None
+        if (i == path.length - 1) {
+          if (!f.isPrimitive) return None
+          return Some((f.asPrimitiveType(), cur, idx))
+        }
+        if (f.isPrimitive) return None
+        cur = cur.getGroup(idx, 0)
+        i += 1
+      }
+      None
+    }
+
+    private def decimalScale(pt: PrimitiveType): Option[Int] =
+      pt.getLogicalTypeAnnotation match {
+        case d: DecimalLogicalTypeAnnotation => Some(d.getScale)
+        case _ => None
+      }
+
+    private def isUnsignedInt(pt: PrimitiveType): Boolean =
+      pt.getLogicalTypeAnnotation match {
+        case i: IntLogicalTypeAnnotation => !i.isSigned
+        case _ => false
+      }
+
+    private def binaryDecimal(b: Binary, scale: Int): java.math.BigDecimal =
+      new java.math.BigDecimal(new java.math.BigInteger(b.getBytes), scale)
+
+    private def leafEquals(pt: PrimitiveType, g: Group, idx: Int,
+                           m: PVal): Boolean = {
+      val scaleOpt = decimalScale(pt)
+      pt.getPrimitiveTypeName match {
+        case INT32 =>
+          val widened =
+            if (isUnsignedInt(pt)) g.getInteger(idx, 0) & 0xffffffffL
+            else g.getInteger(idx, 0).toLong
+          (m, scaleOpt) match {
+            case (PDecimal(d), Some(s)) =>
+              java.math.BigDecimal.valueOf(widened, s).compareTo(d) == 0
+            case (PLong(v), None) => widened == v
+            case _ => false
+          }
+        case INT64 =>
+          val raw = g.getLong(idx, 0)
+          val unsigned = isUnsignedInt(pt)
+          (m, scaleOpt) match {
+            case (PDecimal(d), Some(s)) =>
+              java.math.BigDecimal.valueOf(raw, s).compareTo(d) == 0
+            case (PDecimal(d), None) if unsigned =>
+              new java.math.BigDecimal(java.lang.Long.toUnsignedString(raw))
+                .compareTo(d) == 0
+            case (PLong(v), None) =>
+              if (unsigned) raw >= 0 && raw == v else raw == v
+            case _ => false
+          }
+        case FLOAT => m match {
+          case PFloat(v) =>
+            val x = g.getFloat(idx, 0)
+            (x.isNaN && v.isNaN) || x == v
+          case PDouble(v) =>
+            val x = g.getFloat(idx, 0)
+            (x.isNaN && v.isNaN) || x.toDouble == v
+          case _ => false
+        }
+        case DOUBLE => m match {
+          case PDouble(v) =>
+            val x = g.getDouble(idx, 0)
+            (x.isNaN && v.isNaN) || x == v
+          case PFloat(v) =>
+            val x = g.getDouble(idx, 0)
+            (x.isNaN && v.isNaN) || x == v.toDouble
+          case _ => false
+        }
+        case BINARY | FIXED_LEN_BYTE_ARRAY => (m, scaleOpt) match {
+          case (PDecimal(d), Some(s)) =>
+            binaryDecimal(g.getBinary(idx, 0), s).compareTo(d) == 0
+          case (PString(v), None) => g.getString(idx, 0) == v
+          case _ => false
+        }
+        case _ => false
+      }
+    }
+
+    def recordMatches(g: Group, specs: Seq[TaskGroupSpec]): Boolean =
+      specs.exists { spec =>
+        val leaves = spec.paths.map(resolveLeaf(g, _))
+        leaves.forall(_.isDefined) && spec.tuples.exists { tuple =>
+          tuple.indices.forall { i =>
+            val (pt, grp, idx) = leaves(i).get
+            leafEquals(pt, grp, idx, tuple(i))
+          }
+        }
+      }
+  }
 }

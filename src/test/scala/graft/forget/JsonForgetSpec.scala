@@ -233,4 +233,92 @@ class JsonForgetSpec extends SparkSpec {
     assert(new String(readFileBytes(f), "UTF-8") ==
       "{\"customer_id\":1,\"name\":\"caf\u00e9 \uD83D\uDE00\"}\n")
   }
+
+  // ---- the hash probe equals the queue scan it replaced -------------
+
+  test("seeded property: the per-line hash probe matches exactly the " +
+    "lines the per-tuple scan matched (numbers by value, strings by " +
+    "text, nested and composite paths, null and missing components)") {
+    import DistributedRewrite._
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val numbers = Seq("0", "-0", "0.0", "1", "1.0", "1.5", "1.50", "15e-1",
+      "7", "7.000", "12.34", "12.340", "1234e-2", "0.1",
+      "9223372036854775807", "9223372036854775808",
+      "18446744073709551615", "1e400", "-1", "10", "10.0", "1e1", "1000",
+      "1E+3", "1.000e3")
+    val others = Seq("\"a\"", "\"1\"", "\"caf\u00e9\"", "\"\"", "true",
+      "null", "{}", "[1]")
+    val values: Seq[PVal] =
+      Seq(0L, 1L, 7L, -1L, 10L, 1000L, Long.MaxValue).map(PLong) ++
+      Seq("1.5", "12.34", "0", "0.10", "10.00", "18446744073709551615",
+        "9223372036854775808").map(v => PDecimal(new java.math.BigDecimal(v))) ++
+      Seq(1.5, 0.1, 7.0, 1000.0, -0.0, Double.NaN, Double.PositiveInfinity)
+        .map(PDouble) ++
+      Seq(1.5f, 0.1f, Float.NaN).map(PFloat) ++
+      Seq("a", "1", "caf\u00e9", "").map(PString)
+    // the scan the probe replaced, over the same cast values: numerics
+    // compare by value (a float or double by its decimal rendering),
+    // strings by text; a non-finite value matches nothing
+    def scanEquals(n: com.fasterxml.jackson.databind.JsonNode,
+                   m: PVal): Boolean = {
+      def num(d: => BigDecimal) = n.isNumber &&
+        !((n.isDouble || n.isFloat) && n.doubleValue.isInfinite) &&
+        BigDecimal(n.decimalValue()).compare(d) == 0
+      m match {
+        case PLong(v) => num(BigDecimal(v))
+        case PDouble(v) => !v.isNaN && !v.isInfinite && num(BigDecimal(v))
+        case PFloat(v) => !v.isNaN && !v.isInfinite && num(BigDecimal.decimal(v))
+        case PDecimal(d) => num(BigDecimal(d))
+        case PString(v) => n.isTextual && n.asText() == v
+      }
+    }
+    def scan(node: com.fasterxml.jackson.databind.JsonNode,
+             specs: Seq[TaskGroupSpec]): Boolean = specs.exists { g =>
+      val vs = g.paths.map(JsonMatch.getValue(node, _))
+      vs.forall(_.isDefined) && g.tuples.exists(t =>
+        t.zip(vs).forall { case (m, v) => scanEquals(v.get, m) })
+    }
+    var hits = 0
+    var lines = 0
+    (1 to 40).foreach { seed =>
+      val rnd = new scala.util.Random(seed)
+      def pick[A](xs: Seq[A]): A = xs(rnd.nextInt(xs.size))
+      def key(k: String) = if (rnd.nextBoolean()) k.toUpperCase else k
+      def value = if (rnd.nextInt(4) == 0) pick(others) else pick(numbers)
+      val paths = Seq("id", "name", "user.id", "user.email", "nope")
+      val specs = Seq.fill(1 + rnd.nextInt(3)) {
+        val cols = rnd.shuffle(paths).take(1 + rnd.nextInt(3))
+        TaskGroupSpec(cols.map(_.split('.').toSeq),
+          Seq.fill(1 + rnd.nextInt(15))(cols.map(_ => pick(values))))
+      }
+      val probe = JsonMatch.matcher(specs)
+      (1 to 200).foreach { _ =>
+        val fields = Seq(
+          Some(s""""${key("id")}":$value"""),
+          Some(s""""${key("name")}":${pick(others ++ numbers)}"""),
+          Some(s""""${key("user")}":{"${key("id")}":$value,""" +
+            s""""${key("email")}":${pick(others)}}""")).flatten
+          .filter(_ => rnd.nextInt(6) > 0)
+        val node = mapper.readTree(rnd.shuffle(fields).mkString("{", ",", "}"))
+        val want = scan(node, specs)
+        assert(probe(node) == want, s"seed $seed: $specs on $node")
+        if (want) hits += 1
+        lines += 1
+      }
+    }
+    assert(hits > lines / 20, s"only $hits of $lines lines matched")
+  }
+
+  test("a JSON number matches a long key however it is written, and the " +
+    "queue's spacing is Spark's cast: ' 12 ' deletes user 12") {
+    val content = Seq("""{"customer_id":12}""", """{"customer_id":12.0}""",
+      """{"customer_id":1.2e1}""", """{"customer_id":"12"}""",
+      """{"customer_id":13}""").mkString("", "\n", "\n")
+    val f = stageTextFile(content)
+    val e = rewriteFile(f, groupsFor(Seq("customer_id"),
+      Seq(DeletionQueueItem("q", MatchId.Simple(" 12 ")))))
+    assert((e.eventName, e.statsDeleted) == (JobEventName.ObjectUpdated, 3L))
+    assert(new String(readFileBytes(f), "UTF-8") ==
+      """{"customer_id":"12"}""" + "\n" + """{"customer_id":13}""" + "\n")
+  }
 }

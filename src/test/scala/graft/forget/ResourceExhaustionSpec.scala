@@ -15,10 +15,9 @@ import org.apache.spark.sql.DataFrame
   * midway with an IOException AFTER a partial staged file landed.
   * NonFatal → the task catches it, fails the OBJECT, the job goes on. */
 private class DiskFullDuringStaging(
-    specs: Seq[DistributedRewrite.TaskGroupSpec],
-    jsonEval: JsonMatch.Evaluator, victimName: String)
+    specs: Seq[DistributedRewrite.TaskGroupSpec], victimName: String)
     extends DistributedRewrite.TaskRewrite {
-  private val inner = new DistributedRewrite.DeleteRewrite(specs, jsonEval)
+  private val inner = new DistributedRewrite.DeleteRewrite(specs)
   def parquet(conf: Configuration, src: HPath,
               staged: HPath): (Long, Long) = {
     if (src.getName == victimName) {
@@ -42,10 +41,9 @@ private class DiskFullDuringStaging(
   * (docs/LIMITS.md: objects must fit the Fargate task's memory) and
   * survives a worker death via SQS redelivery. */
 private class FatalTaskDeath(
-    specs: Seq[DistributedRewrite.TaskGroupSpec],
-    jsonEval: JsonMatch.Evaluator, victimName: String)
+    specs: Seq[DistributedRewrite.TaskGroupSpec], victimName: String)
     extends DistributedRewrite.TaskRewrite {
-  private val inner = new DistributedRewrite.DeleteRewrite(specs, jsonEval)
+  private val inner = new DistributedRewrite.DeleteRewrite(specs)
   def parquet(conf: Configuration, src: HPath,
               staged: HPath): (Long, Long) = {
     if (src.getName == victimName)
@@ -112,14 +110,14 @@ class ResourceExhaustionSpec extends SparkSpec {
     val (lake, o1, o2) = freshLake()
     val schema = spark.read.parquet(o1).schema
     val groups = groupsFor(schema)
-    val specs = DistributedRewrite.buildSpecs(spark, groups)
-    val eval = new JsonMatch.Evaluator(groups.map(JsonMatch.spec))
+    val specs =
+      DistributedRewrite.buildSpecs(Finder.typedGroups(spark, groups))
     val before = readFileBytes(o2)
 
     val events = DistributedRewrite.runWith(spark, "jfull",
       Seq(ObjectWorkUnit("jfull", o1, "m", DataFormat.Parquet, false),
         ObjectWorkUnit("jfull", o2, "m", DataFormat.Parquet, false)),
-      new DiskFullDuringStaging(specs, eval, "o2.parquet"))
+      new DiskFullDuringStaging(specs, "o2.parquet"))
 
     val byPath = events.map(e => e.path -> e).toMap
     assert(byPath(o1).eventName == JobEventName.ObjectUpdated)
@@ -137,8 +135,8 @@ class ResourceExhaustionSpec extends SparkSpec {
     val (lake, o1, o2) = freshLake()
     val schema = spark.read.parquet(o1).schema
     val groups = groupsFor(schema)
-    val specs = DistributedRewrite.buildSpecs(spark, groups)
-    val eval = new JsonMatch.Evaluator(groups.map(JsonMatch.spec))
+    val specs =
+      DistributedRewrite.buildSpecs(Finder.typedGroups(spark, groups))
 
     // the abort path at the DistributedRewrite layer: a fatal error is
     // invisible to the task's NonFatal isolation, so collect() throws —
@@ -147,7 +145,7 @@ class ResourceExhaustionSpec extends SparkSpec {
       DistributedRewrite.runWith(spark, "jkill",
         Seq(ObjectWorkUnit("jkill", o1, "m", DataFormat.Parquet, false),
           ObjectWorkUnit("jkill", o2, "m", DataFormat.Parquet, false)),
-        new FatalTaskDeath(specs, eval, "o2.parquet"))
+        new FatalTaskDeath(specs, "o2.parquet"))
     }
     def chain(t: Throwable): Seq[String] =
       Iterator.iterate(t)(_.getCause).takeWhile(_ != null)

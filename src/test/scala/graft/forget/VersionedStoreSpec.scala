@@ -119,7 +119,8 @@ class VersionedStoreSpec extends SparkSpec {
       Seq(DeletionQueueItem("q1", MatchId.Simple("1")),
         DeletionQueueItem("q2", MatchId.Simple("2"))))
     val dir = Files.createTempDirectory("graft-audit-").toString
-    Finder.writeManifestAudit(spark, "jobX", "m", groups, dir)
+    Finder.writeManifestAudit(spark, "jobX", "m",
+      Finder.typedGroups(spark, groups), dir)
     val back = spark.read.parquet(dir)
     assert(back.count() == 2)
     assert(back.select("job_id").distinct().as[String].collect().toSeq ==
