@@ -118,7 +118,7 @@ if ledger_path.exists():
     # "unmeasured", while an entry whose oracle FAILED to generate
     # (NO_ORACLE) still hits the ledger check instead of silently
     # bypassing both gates; GateLintSpec separately enforces
-    # ledger == SparkEntry.queries 1:1 at sbt-test time
+    # ledger == SparkEntry.entries 1:1 at sbt-test time
     ran = (set(p.name for p in outdir.iterdir() if p.is_dir())
            & (set(oracle) | ledger))
     unmeasured = sorted(ran - ledger)

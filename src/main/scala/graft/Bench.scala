@@ -12,8 +12,8 @@ import scala.util.control.NonFatal
 /** Benchmark main. Reports, on ONE JSON line:
   *
   *   - per-query wall time with FULL materialization (noop sink — a bare
-  *     `count()` lets Catalyst prune every projection, VERDICT r2 "What's
-  *     wrong" #3) and a per-query `ok` flag; any failure exits non-zero.
+  *     `count()` lets Catalyst prune every projection) and a per-query
+  *     `ok` flag; any failure exits non-zero.
   *   - BASELINE facet (a): the Find column-scan ratio — bytes of the
   *     identifier column chunks vs the whole table (the reference's
   *     1.3-7% Athena scan claim, docs/COST_OVERVIEW.md:219,241).
@@ -22,30 +22,67 @@ import scala.util.control.NonFatal
   *     [[DistributedRewrite]] job; objects/min + rows/s.
   */
 object Bench {
-  /** Non-query facet keys allowed to carry readings in
-    * scripts/bench_ledger.json alongside the gate queries (GateLint's
-    * stale-key check consults this — a ledger key must be either a
-    * SparkEntry.queries entry or one of these). */
-  val LedgerFacets: Set[String] =
-    Set("find_join_fallback", "model_load_search",
-      "forget_rewrite_64obj", "forget_rewrite_1024obj",
-      "forget_rewrite_10240obj", "forget_rewrite_40960obj",
-      "forget_json_1024obj", "pii_scrub_64obj",
-      "media_decode", "dsir_strat_fit")
+  /** A bench reading that is not a gate entry. `ledger`: it carries an
+    * entry-seconds reading in scripts/bench_ledger.json (GateLint's
+    * stale-key check accepts a ledger key that is a gate entry or a
+    * ledger facet). `soak`: long-running by design — it sits far above
+    * the noise floor and, for the forget rungs, pins obj/min flatness
+    * against object count — so the budget lint reports it under
+    * `soak_entries`, not `n_over_budget`, which counts unexpected
+    * overruns only, and `epoch_ratio` and `total_ex_soak` leave it
+    * out. */
+  final case class Facet(name: String, ledger: Boolean = true,
+                         soak: Boolean = false)
 
-  /** Entries that are DELIBERATELY long-running scale soaks — they
-    * exist to sit far above the noise floor (and, for the forget
-    * rungs, to pin obj/min flatness against object count), so they
-    * exceed the 8 s per-entry budget BY DESIGN. The budget lint
-    * reports them separately (`soak_entries`) instead of counting
-    * them in `n_over_budget`, which tracks UNEXPECTED overruns only
-    * (★r18: with two soak rungs the old total-count would read 2 on
-    * every healthy run and stop signalling anything). */
-  val SoakFacets: Set[String] =
-    Set("forget_rewrite_10240obj", "forget_rewrite_40960obj")
+  private val Forget64 = Facet("forget_rewrite_64obj")
+  private val Forget1024 = Facet("forget_rewrite_1024obj")
+  private val ForgetJson = Facet("forget_json_1024obj")
+  private val PiiScrub = Facet("pii_scrub_64obj")
+  private val FindJoinFallback = Facet("find_join_fallback")
+  private val ModelLoadSearch = Facet("model_load_search")
+  private val MediaDecode = Facet("media_decode")
+  private val DsirStratFit = Facet("dsir_strat_fit")
+  private val AnnRecall = Facet("ann_recall", ledger = false)
+  private val Forget10240 = Facet("forget_rewrite_10240obj", soak = true)
+  private val Forget40960 = Facet("forget_rewrite_40960obj", soak = true)
+
+  val Facets: Seq[Facet] = Seq(Forget64, Forget1024, ForgetJson, PiiScrub,
+    FindJoinFallback, ModelLoadSearch, MediaDecode, DsirStratFit, AnnRecall,
+    Forget10240, Forget40960)
+
+  private val soakNames: Set[String] =
+    Facets.filter(_.soak).map(_.name).toSet
+
+  /** A sampled facet's timed body and its untimed result check. */
+  private final case class Sample(body: () => Unit,
+                                  check: () => Boolean = () => true)
+
+  /** One staged-rewrite facet's reading: the matched objects, the
+    * median run's seconds and the rows processed and deleted (or
+    * redacted) per run. */
+  private final case class Rewrite(objects: Int, sec: Double, rows: Long,
+                                   deleted: Long) {
+    def objectsPerMin: Double = rate(objects * 60.0, sec)
+    def rowsPerSec: Double = rate(rows.toDouble, sec)
+  }
+
+  // throughputs derive from the MEDIAN time (the published number) and
+  // the per-run-identical row/object counts; 0 when a facet was
+  // filtered out by SPARK_GRAFT_ONLY
+  private def rate(n: Double, sec: Double): Double =
+    if (sec > 0) n / sec else 0.0
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    // Dev filter for back-to-back A/B timing of one entry (the measured
+    // round-over-round noise floor is ±24% — cross-round comparisons
+    // cannot attribute small deltas, so perf work times the one entry
+    // it touched, twice, in the same JVM state): comma-separated gate
+    // entry or facet names; unset = run everything (the driver's mode).
+    val wanted = SparkEntry.only(
+      sys.env.get("SPARK_GRAFT_ONLY").toSeq.flatMap(_.split(",")),
+      SparkEntry.entries.map(_.name).toSet ++ Facets.map(_.name))
+    def wants(f: Facet): Boolean = wanted(f.name)
     val spark = Session(defaultCpus = 32)
 
     // untimed warmup: JVM/codegen/writer paths + the q21 partitioned
@@ -70,28 +107,15 @@ object Bench {
     def record(name: String, t: Timed): Unit = {
       times(name) = t.wall; entryCpu(name) = t.cpu; entryGc(name) = t.gc
     }
-    // Dev filter for back-to-back A/B timing of one entry (the measured
-    // round-over-round noise floor is ±24% — cross-round comparisons
-    // cannot attribute small deltas, so perf work times the one entry
-    // it touched, twice, in the same JVM state): comma-separated query
-    // or facet names; unset = run everything (the driver's mode).
-    val only: Set[String] = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .getOrElse(Set.empty)
-    def wanted(name: String): Boolean = only.isEmpty || only(name)
     // Throughput facets (forget rewrite, PII scrub) run FIRST — before
-    // the 117-entry query loop — so their round-over-round readings are
-    // immune to in-run contention (r13: pii_scrub_objects_per_min halved
-    // with zero code change purely from heap/page-cache pressure of the
-    // preceding entries). Their own warm-run protocol (untimed run 0)
-    // still covers JIT/writer warmup.
-    // facet (b): distributed forget throughput. The rewrite MUTATES its
-    // staged objects (rows purged, versions superseded), so every run —
-    // warm-up included — gets a FRESH copy of the staged table: a rerun
-    // over already-purged objects would measure a no-op job (and replay
-    // idempotency markers), which is how the r5-r7 single-shot numbers
-    // swung ±2.5x on unchanged code. Protocol per object count: stage
-    // once, one untimed warm run, then median of `timedRuns` timed runs.
+    // the query loop — so their readings are immune to in-run
+    // contention (heap and page-cache pressure of the preceding entries
+    // once halved pii_scrub_objects_per_min with no code change). Their
+    // own warm-run protocol (untimed run 0) still covers JIT/writer
+    // warmup.
+    // facet (b): distributed forget throughput. Protocol per object
+    // count: stage once, one untimed warm run, then median of
+    // `timedRuns` timed runs, each over a fresh copy (see stagedRewrite).
     val stage = java.nio.file.Files.createTempDirectory("graft-bench-")
     val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
     val table = TableDef("li", s"$stage/master64", DataFormat.Parquet,
@@ -100,14 +124,14 @@ object Bench {
     val groups = Finder.plan(mapper, table,
       Seq(DeletionQueueItem("q", MatchId.Simple("R"))))
 
-    def listParquet(dir: String): Seq[String] = {
+    def listFiles(dir: String, suffix: String): Seq[String] = {
       val s = java.nio.file.Files.list(java.nio.file.Paths.get(dir))
       try {
         val it = s.iterator()
         val buf = scala.collection.mutable.ArrayBuffer.empty[String]
         while (it.hasNext) {
           val p = it.next().toString
-          if (p.endsWith(".parquet")) buf += p
+          if (p.endsWith(suffix)) buf += p
         }
         buf.toSeq
       } finally s.close()
@@ -126,94 +150,90 @@ object Bench {
         }
       } finally s.close()
     }
+    def fileName(p: String): String = new java.io.File(p).getName
 
-    /** One staged-forget facet: returns (median sec, objects, rowsProcessed,
-      * rowsDeleted, allOk) — rows are identical across runs by
-      * construction (every run starts from the same master copy).
-      *
-      * Work units are the staged objects a Find pass MATCHES (untimed,
-      * once per staging) — the real pipeline shape: Forget only ever
-      * receives Find's matched-file list, and the engine treats a
+    /** Runs one staged-rewrite facet and records its median reading.
+      * The rewrite MUTATES its objects (rows purged or redacted,
+      * versions superseded) and a rerun over them would time a no-op
+      * job (a second scrub pass is even a zero-change hard error), so
+      * every run — the untimed warm-up run 0 included, when `warm` —
+      * rewrites a FRESH copy of `master`. Work units are the `matched`
+      * objects of a Find pass (untimed, once per staging): Forget only
+      * ever receives Find's matched-file list, and the engine treats a
       * zero-deletion work unit as a hard error by design (reference
-      * main.py:182-187). At sf0.1+ every staged object contains an 'R'
-      * row so matched == staged; at tiny SFs a few-row object may
-      * legitimately hold none, and feeding it would measure (and flag)
-      * fictitious failures. The returned object count is the MATCHED
-      * count, and throughputs derive from it. */
-    def forgetFacet(nObjects: Int, timedRuns: Int,
-                    warm: Boolean = true): (Timed, Int, Long, Long, Boolean) = {
-      val master = s"$stage/master$nObjects"
-      li.repartition(nObjects).write.mode(SaveMode.Overwrite).parquet(master)
-      val matchedNames = Finder.matchedFiles(spark,
-          spark.read.parquet(master), groups)
-        .collect()
-        .map(r => new java.io.File(
-          DistributedRewrite.stripScheme(r.getString(0))).getName)
-        .toSet
-      val nFiles = matchedNames.size
+      * main.py:182-187). Rows are identical across runs by
+      * construction; the count of matched objects is what throughputs
+      * derive from. */
+    def stagedRewrite(f: Facet, master: String, matched: Set[String],
+                      mapperId: String, format: DataFormat,
+                      timedRuns: Int = 3, warm: Boolean = true)
+                     (rewrite: (String, Seq[ObjectWorkUnit]) => Seq[JobEvent])
+        : Rewrite = {
+      val suffix = if (format == DataFormat.Parquet) ".parquet" else ".json.gz"
       var allOk = true
-      var rowsProcessed = 0L
-      var rowsDeleted = 0L
+      var rows, deleted = 0L
       val samples = scala.collection.mutable.ArrayBuffer.empty[Timed]
-      // run 0 is the untimed warm-up (JIT, writer pools, commit paths)
       for (run <- (if (warm) 0 else 1) to timedRuns) {
-        val dir = s"$stage/run-$nObjects-$run/lineitem"
+        val jobId = s"${f.name}-$run"
+        val dir = s"$stage/$jobId/$mapperId"
         copyDir(master, dir)
-        val units = listParquet(dir)
-          .filter(p => matchedNames(new java.io.File(p).getName))
-          .map(f =>
-            ObjectWorkUnit(s"bench-$nObjects-$run", f, "li",
-              DataFormat.Parquet, true))
-        val (events, tm) = timed(DistributedRewrite.run(spark,
-          s"bench-$nObjects-$run", units, groups))
+        val units = listFiles(dir, suffix)
+          .filter(p => matched(fileName(p)))
+          .map(ObjectWorkUnit(jobId, _, mapperId, format, true))
+        val (events, tm) = timed(rewrite(jobId, units))
         val updated = events.count(_.eventName == JobEventName.ObjectUpdated)
-        if (updated != nFiles) {
+        if (updated != units.size) {
           allOk = false
-          errors += s"forget_bench_$nObjects(run $run): " +
-            s"only $updated/$nFiles objects updated"
+          errors += s"${f.name}(run $run): " +
+            s"only $updated/${units.size} objects updated"
         }
         if (run > 0) samples += tm
-        rowsProcessed = events.map(_.statsProcessed).sum
-        rowsDeleted = events.map(_.statsDeleted).sum
+        rows = events.map(_.statsProcessed).sum
+        deleted = events.map(_.statsDeleted).sum
       }
-      (medianTimed(samples.toSeq), nFiles,
-        rowsProcessed, rowsDeleted, allOk)
+      val med = medianTimed(samples.toSeq)
+      record(f.name, med)
+      ok(f.name) = allOk
+      Rewrite(matched.size, med.wall, rows, deleted)
     }
 
-    var (forgetSec, forgetObjects, rowsProcessed, rowsDeleted) =
-      (0.0, 0, 0L, 0L)
-    if (wanted("forget_rewrite_64obj")) {
-      val (tm, n, rp, rd, okAll) = forgetFacet(64, timedRuns = 3)
-      forgetSec = tm.wall; forgetObjects = n
-      rowsProcessed = rp; rowsDeleted = rd
-      record("forget_rewrite_64obj", tm)
-      ok("forget_rewrite_64obj") = okAll
-    }
+    val rewrites = scala.collection.mutable.Map.empty[Facet, Rewrite]
+      .withDefaultValue(Rewrite(0, 0.0, 0L, 0L))
+    /** Facet (b) at `nObjects` lineitem objects, matched by a Find pass
+      * over the staged copy. */
+    def forgetRung(f: Facet, nObjects: Int, timedRuns: Int,
+                   warm: Boolean): Unit =
+      if (wants(f)) {
+        val master = s"$stage/master$nObjects"
+        li.repartition(nObjects).write.mode(SaveMode.Overwrite)
+          .parquet(master)
+        val matched = Finder.matchedFiles(spark,
+            spark.read.parquet(master), groups)
+          .collect()
+          .map(r => fileName(DistributedRewrite.stripScheme(r.getString(0))))
+          .toSet
+        rewrites(f) = stagedRewrite(f, master, matched, "li",
+          DataFormat.Parquet, timedRuns, warm) { (jobId, units) =>
+          DistributedRewrite.run(spark, jobId, units, groups)
+        }
+      }
 
+    forgetRung(Forget64, 64, timedRuns = 3, warm = true)
     // at-scale forget: 1,024 objects in ONE job (the reference's
     // scenario-4 shape — 45k objects through a worker fleet,
     // docs/COST_OVERVIEW.md:288-290 — scaled to the bench box; exercises
     // per-task overhead: footer read, staging commit, version capture)
-    var (forget1024Sec, forget1024Objects, rows1024) = (0.0, 0, 0L)
-    if (wanted("forget_rewrite_1024obj")) {
-      val (tm, n, rp, _, okAll) = forgetFacet(1024, timedRuns = 3)
-      forget1024Sec = tm.wall; forget1024Objects = n; rows1024 = rp
-      record("forget_rewrite_1024obj", tm)
-      ok("forget_rewrite_1024obj") = okAll
-    }
+    forgetRung(Forget1024, 1024, timedRuns = 3, warm = true)
 
-    // JSON-lines forget rung (★r18, VERDICT r17 #6): the reference's
-    // scenario 5 — gzip JSON objects, row-format table, full-scan
-    // Find, byte-preserving raw-line rewrite (159 obj/min on their
-    // fleet, docs/COST_OVERVIEW.md:302-322) — previously had NO bench
-    // analog, so a regression in the text-mode rewrite path
-    // (DistributedRewrite raw-line + gzip in/out) was invisible to
-    // the ledger. Stage lineitem as 1,024 gzip JSON-lines objects,
-    // Find pass untimed (row-format Find is a full scan by design),
-    // fresh staged copy per run (the rewrite mutates its objects).
-    var (forgetJsonSec, forgetJsonObjects, rowsJson, rowsJsonDeleted) =
-      (0.0, 0, 0L, 0L)
-    if (wanted("forget_json_1024obj")) {
+    // JSON-lines forget rung: the reference's scenario 5 — gzip JSON
+    // objects, row-format table, full-scan Find, byte-preserving
+    // raw-line rewrite (159 obj/min on their fleet,
+    // docs/COST_OVERVIEW.md:302-322) — so a regression in the
+    // text-mode rewrite path (DistributedRewrite raw-line + gzip
+    // in/out) shows in the ledger. Lineitem staged as 1,024 gzip
+    // JSON-lines objects, Find pass untimed (row-format Find is a full
+    // scan by design).
+    if (wants(ForgetJson)) {
       import org.apache.spark.sql.functions.{col, input_file_name}
       val master = s"$stage/json-master1024"
       li.repartition(1024).write.mode(SaveMode.Overwrite)
@@ -226,63 +246,24 @@ object Bench {
         jsonTable, Seq(DeletionQueueItem("q", MatchId.Simple("R"))))
       // full-scan Find (scenario-5 semantics), untimed: declared
       // schema + the json reader, distinct containing files
-      val matchedJson = spark.read.schema(li.schema).json(master)
+      val matched = spark.read.schema(li.schema).json(master)
         .withColumn("_f", input_file_name())
         .filter(col("l_returnflag") === "R")
         .select(col("_f")).distinct().collect()
-        .map(r => new java.io.File(
-          DistributedRewrite.stripScheme(r.getString(0))).getName)
+        .map(r => fileName(DistributedRewrite.stripScheme(r.getString(0))))
         .toSet
-      forgetJsonObjects = matchedJson.size
-      def listJsonGz(dir: String): Seq[String] = {
-        val s = java.nio.file.Files.list(java.nio.file.Paths.get(dir))
-        try {
-          val it = s.iterator()
-          val buf = scala.collection.mutable.ArrayBuffer.empty[String]
-          while (it.hasNext) {
-            val p = it.next().toString
-            if (p.endsWith(".json.gz")) buf += p
-          }
-          buf.toSeq
-        } finally s.close()
+      rewrites(ForgetJson) = stagedRewrite(ForgetJson, master, matched,
+        "lij", DataFormat.JsonLines) { (jobId, units) =>
+        DistributedRewrite.run(spark, jobId, units, jsonGroups)
       }
-      var allOk = true
-      val samples = scala.collection.mutable.ArrayBuffer.empty[Timed]
-      for (run <- 0 to 3) { // run 0 is the untimed warm-up
-        val dir = s"$stage/json-run-$run/lineitem"
-        copyDir(master, dir)
-        val units = listJsonGz(dir)
-          .filter(p => matchedJson(new java.io.File(p).getName))
-          .map(f => ObjectWorkUnit(s"json-bench-$run", f, "lij",
-            DataFormat.JsonLines, true))
-        val (events, tm) = timed(DistributedRewrite.run(spark,
-          s"json-bench-$run", units, jsonGroups))
-        val updated = events.count(_.eventName == JobEventName.ObjectUpdated)
-        if (updated != units.size) {
-          allOk = false
-          errors += s"forget_json_1024obj(run $run): " +
-            s"only $updated/${units.size} objects updated"
-        }
-        if (run > 0) samples += tm
-        rowsJson = events.map(_.statsProcessed).sum
-        rowsJsonDeleted = events.map(_.statsDeleted).sum
-      }
-      val med = medianTimed(samples.toSeq)
-      forgetJsonSec = med.wall
-      record("forget_json_1024obj", med)
-      ok("forget_json_1024obj") = allOk
     }
 
     // facet (c): PII scrub throughput — the redaction counterpart of
     // facet (b), through the same distributed rewrite machinery. The
     // documents corpus is staged as 64 objects with identifiers
-    // planted on ~10% of rows (the corpus itself is PII-free); the
-    // scrub is NOT idempotent as a benchmark (a second pass over
-    // redacted text is a zero-change hard error by design), so every
-    // run — warm-up included — takes a fresh staged copy, and work
+    // planted on ~10% of rows (the corpus itself is PII-free); work
     // units come from the Find pass exactly like facet (b).
-    var (piiSec, piiObjects, piiRows, piiRedacted) = (0.0, 0, 0L, 0L)
-    if (wanted("pii_scrub_64obj")) {
+    if (wants(PiiScrub)) {
       import graft.llm.PiiForget
       import org.apache.spark.sql.functions.{col, concat, lit, when}
       val master = s"$stage/pii-master"
@@ -295,54 +276,29 @@ object Bench {
         .repartition(64).write.mode(SaveMode.Overwrite).parquet(master)
       val matched = PiiForget
         .findObjects(spark.read.parquet(master), "text")
-        .map(p => new java.io.File(p).getName).toSet
-      piiObjects = matched.size
-      var allOk = true
-      val samples = scala.collection.mutable.ArrayBuffer.empty[Timed]
-      for (run <- 0 to 3) {
-        val dir = s"$stage/pii-run-$run/documents"
-        copyDir(master, dir)
-        val units = listParquet(dir)
-          .filter(p => matched(new java.io.File(p).getName))
-          .map(f => ObjectWorkUnit(s"pii-bench-$run", f, "docs",
-            DataFormat.Parquet, true))
-        val (events, tm) = timed(graft.llm.PiiForget.scrubObjects(spark,
-          s"pii-bench-$run", units, Seq("text")))
-        val updated = events.count(_.eventName == JobEventName.ObjectUpdated)
-        if (updated != units.size) {
-          allOk = false
-          errors += s"pii_scrub_64obj(run $run): " +
-            s"only $updated/${units.size} objects updated"
-        }
-        if (run > 0) samples += tm // run 0 is the untimed warm-up
-        piiRows = events.map(_.statsProcessed).sum
-        piiRedacted = events.map(_.statsDeleted).sum
+        .map(fileName).toSet
+      rewrites(PiiScrub) = stagedRewrite(PiiScrub, master, matched,
+        "docs", DataFormat.Parquet) { (jobId, units) =>
+        PiiForget.scrubObjects(spark, jobId, units, Seq("text"))
       }
-      val med = medianTimed(samples.toSeq)
-      piiSec = med.wall
-      record("pii_scrub_64obj", med)
-      ok("pii_scrub_64obj") = allOk
     }
-
 
     // Eager-stage the write-once shared artifacts (pairs/cluster/span
     // frames, serialized models, CDC feed files) BEFORE any timed
-    // sample (★r18, VERDICT r17 #1): a consumer entry's first sample
-    // must never pay another entry's one-time artifact build — that is
-    // how q31's median read 8.07 s against a 1.79 s floor in r17.
-    // Untimed by design (a 100 TB pipeline writes these once, outside
-    // any query's cost); skipped when SPARK_GRAFT_ONLY selects no gate
-    // query (e.g. forget-facet-only A/B runs).
-    if (only.isEmpty || SparkEntry.queries.keySet.exists(only)) {
+    // sample: a consumer entry's first sample must never pay another
+    // entry's one-time artifact build. Untimed by design (a 100 TB
+    // pipeline writes these once, outside any query's cost); skipped
+    // when SPARK_GRAFT_ONLY selects no gate entry (e.g. forget-facet-
+    // only A/B runs).
+    val gate = SparkEntry.entries.filter(e => wanted(e.name)).sortBy(_.name)
+    if (gate.nonEmpty) {
       val t0 = System.nanoTime()
       SparkEntry.stageSharedArtifacts(spark, sfDir)
       System.err.println(f"[bench] artifact staging (untimed): " +
         f"${(System.nanoTime() - t0) / 1e9}%.1f s")
       // start the timed loop from a settled heap: the staging pass
       // just churned allocation across every artifact builder, and
-      // residue-GC inside a first sample reads as query time (★r19,
-      // the soak-isolation discipline of VERDICT r18 #2 applied to
-      // the staging pass too)
+      // residue-GC inside a first sample reads as query time
       System.gc()
     }
 
@@ -351,18 +307,17 @@ object Bench {
     // regressions unattributable). The median absorbs a one-off slow
     // run without hiding a real slowdown the way min would.
     //
-    // Drift convention (★r17, VERDICT r16 #3): entries whose 3-sample
-    // median lands under ~2 s are dominated by FIXED overhead (job
-    // submit, codegen, file listing), where proportional variance is
-    // largest — r16 saw untouched sub-2 s entries read 3× with zero
-    // code change. Those entries take 2 extra samples (median-of-5);
-    // the per-entry MINIMUM is additionally recorded in the detail
-    // file (`query_mins`) as the noise floor — a real regression moves
-    // the min, ambient contention only moves the median.
+    // Drift convention: entries whose 3-sample median lands under
+    // ~2 s are dominated by FIXED overhead (job submit, codegen, file
+    // listing), where proportional variance is largest — untouched
+    // sub-2 s entries have read 3× with zero code change. Those
+    // entries take 2 extra samples (median-of-5); the per-entry
+    // MINIMUM is additionally recorded in the detail file
+    // (`query_mins`) as the noise floor — a real regression moves the
+    // min, ambient contention only moves the median.
     val mins = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     val cheapEntrySec = 2.0
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter(q => wanted(q._1)).foreach { case (name, fn) =>
+    gate.foreach { e =>
       val samples = scala.collection.mutable.ArrayBuffer.empty[Timed]
       var failed = false
       var attempts = 0
@@ -386,24 +341,24 @@ object Bench {
           // only SUCCESSFUL runs enter the median: a failed attempt's
           // duration measures the failure, not the query, and would
           // contaminate `total` with fictitious work
-          samples += timed(fn(spark, sfDir).write.format("noop")
-            .mode(SaveMode.Overwrite).save())._2
+          samples += e.inGroup(spark)(timed(e.run(spark, sfDir)
+            .write.format("noop").mode(SaveMode.Overwrite).save()))._2
         } catch {
-          case NonFatal(e) =>
+          case NonFatal(ex) =>
             failed = true
             lastElapsed = (System.nanoTime() - t0) / 1e9
-            errors += s"$name: ${String.valueOf(e.getMessage).take(200)}"
+            errors += s"${e.name}: ${String.valueOf(ex.getMessage).take(200)}"
         }
         attempts += 1
         // q29's cached prefix index must not accumulate across
         // iterations (or leak into the next query's timing)
         graft.llm.Dedup.releaseCaches()
       }
-      ok(name) = !failed
+      ok(e.name) = !failed
       if (samples.nonEmpty) {
-        record(name, medianTimed(samples.toSeq))
-        mins(name) = samples.map(_.wall).min
-      } else times(name) = lastElapsed
+        record(e.name, medianTimed(samples.toSeq))
+        mins(e.name) = samples.map(_.wall).min
+      } else times(e.name) = lastElapsed
     }
 
     // facet (a): identifier-column scan ratio — (i) plan-side from the
@@ -442,12 +397,27 @@ object Bench {
         math.max(1L, new java.io.File(s"$sfDir/lineitem.parquet").length())
     }
 
+    /** Median-of-3 reading of `f`, same rationale as the query loop.
+      * `prepare` runs once, untimed, and returns the timed body and its
+      * untimed result check; a failure anywhere reads 0 s and not ok. */
+    def sampled(f: Facet)(prepare: => Sample): Unit =
+      if (wants(f)) try {
+        val p = prepare
+        record(f.name, medianTimed((1 to 3).map(_ => timed(p.body())._2)))
+        ok(f.name) = p.check()
+      } catch {
+        case NonFatal(e) =>
+          times(f.name) = 0.0
+          ok(f.name) = false
+          errors += s"${f.name}: ${String.valueOf(e.getMessage).take(200)}"
+      }
+
     // at-scale Find fallback: a queue larger than InSetMaxKeys forces the
     // broadcast semi-join strategy (ONE scan + exploded keys + broadcast
     // left-semi — FinderSpec pins the plan shape; this facet times it on
     // real sf data). Keys 1..InSetMaxKeys+1 over l_orderkey guarantee
-    // real matches.
-    if (wanted("find_join_fallback")) {
+    // real matches; the check is that the fallback actually finds files.
+    sampled(FindJoinFallback) {
       val liTable = spark.read.parquet(s"$sfDir/lineitem.parquet")
       val queue = (1 to Finder.InSetMaxKeys + 1).map(i =>
         DeletionQueueItem(s"q$i", MatchId.Simple(i.toString)))
@@ -456,100 +426,53 @@ object Bench {
         TableDef("lifb", s"$sfDir/lineitem.parquet", DataFormat.Parquet,
           liTable.schema),
         queue)
-      try {
-        // median-of-3, same rationale as the query loop
-        val samples = (1 to 3).map { _ =>
-          timed(Finder.matchedFiles(spark, liTable, g)
-            .write.format("noop").mode(SaveMode.Overwrite).save())._2
-        }
-        record("find_join_fallback", medianTimed(samples))
-        // untimed sanity count: the fallback must actually find files
-        ok("find_join_fallback") =
-          Finder.matchedFiles(spark, liTable, g).count() > 0
-      } catch {
-        case NonFatal(e) =>
-          times("find_join_fallback") = 0.0
-          ok("find_join_fallback") = false
-          errors += s"find_join_fallback: ${String.valueOf(e.getMessage).take(200)}"
-      }
+      Sample(
+        () => Finder.matchedFiles(spark, liTable, g)
+          .write.format("noop").mode(SaveMode.Overwrite).save(),
+        () => Finder.matchedFiles(spark, liTable, g).count() > 0)
     }
 
-    // production model-load path (★r17, VERDICT r16 #4): load the
-    // STORED IVF-PQ model frame from disk (the ModelIo round trip,
-    // bypassing the in-JVM memo) and run the q82 search on the loaded
-    // copy. Training + store are q81's price and happen untimed; the
-    // timed span is load + search — the per-run cost of a pipeline
-    // that trains once and serves many, previously exercised only
-    // under Verify.
-    if (wanted("model_load_search")) {
+    // production model-load path: load the STORED IVF-PQ model frame
+    // from disk (the ModelIo round trip, bypassing the in-JVM memo) and
+    // run the q82 search on the loaded copy. Training + store are q81's
+    // price and happen untimed; the timed span is load + search — the
+    // per-run cost of a pipeline that trains once and serves many.
+    sampled(ModelLoadSearch) {
       import org.apache.spark.sql.functions.col
-      try {
-        SparkEntry.ivfPqModelCached(spark, sfDir) // untimed: train+store
-        val path = graft.tools.ArtifactStore.pathOf(s"ivfpq:$sfDir").get
-        val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-        val samples = (1 to 3).map { _ =>
-          timed {
-            val m = graft.llm.ModelIo.loadIvfPq(spark.read.parquet(path))
-            graft.llm.IvfPq.search(emb, emb.filter(col("vec_id") < 3),
-              "vec_id", "embedding", m, nprobe = 2, k = 10)
-              .write.format("noop").mode(SaveMode.Overwrite).save()
-          }._2
-        }
-        record("model_load_search", medianTimed(samples))
-        ok("model_load_search") = true
-      } catch {
-        case NonFatal(e) =>
-          times("model_load_search") = 0.0
-          ok("model_load_search") = false
-          errors += s"model_load_search: ${String.valueOf(e.getMessage).take(200)}"
+      SparkEntry.ivfPqModelCached(spark, sfDir) // untimed: train+store
+      val path = graft.tools.ArtifactStore.pathOf(s"ivfpq:$sfDir").get
+      val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+      Sample { () =>
+        val m = graft.llm.ModelIo.loadIvfPq(spark.read.parquet(path))
+        graft.llm.IvfPq.search(emb, emb.filter(col("vec_id") < 3),
+          "vec_id", "embedding", m, nprobe = 2, k = 10)
+          .write.format("noop").mode(SaveMode.Overwrite).save()
       }
     }
 
-    // media-decode facet (★r19, VERDICT r18 #3): the LIVE
-    // synthesis + javax.imageio/javax.sound decode + dHash64
-    // fingerprint pass over both modalities — the ingest-time cost
-    // q120/q121 no longer carry now that they band the STORED
-    // fingerprint artifact (a pipeline fingerprints each media object
-    // once, on ingest; the near-dup pass reads the store). One facet
-    // prices both codecs so a decoder regression stays ledger-visible.
-    if (wanted("media_decode")) {
-      try {
-        val samples = (1 to 3).map { _ =>
-          timed {
-            SparkEntry.mkMediaFingerprints(spark, sfDir, "image")
-              .write.format("noop").mode(SaveMode.Overwrite).save()
-            SparkEntry.mkMediaFingerprints(spark, sfDir, "audio")
-              .write.format("noop").mode(SaveMode.Overwrite).save()
-          }._2
-        }
-        record("media_decode", medianTimed(samples))
-        ok("media_decode") = true
-      } catch {
-        case NonFatal(e) =>
-          times("media_decode") = 0.0
-          ok("media_decode") = false
-          errors += s"media_decode: ${String.valueOf(e.getMessage).take(200)}"
+    // media-decode facet: the LIVE synthesis + javax.imageio/javax.sound
+    // decode + dHash64 fingerprint pass over both modalities — the
+    // ingest-time cost q120/q121 do not carry because they band the
+    // STORED fingerprint artifact (a pipeline fingerprints each media
+    // object once, on ingest; the near-dup pass reads the store). One
+    // facet prices both codecs so a decoder regression stays
+    // ledger-visible.
+    sampled(MediaDecode) {
+      Sample { () =>
+        SparkEntry.mkMediaFingerprints(spark, sfDir, "image")
+          .write.format("noop").mode(SaveMode.Overwrite).save()
+        SparkEntry.mkMediaFingerprints(spark, sfDir, "audio")
+          .write.format("noop").mode(SaveMode.Overwrite).save()
       }
     }
 
-    // stratified-DSIR fit facet (★r19, VERDICT r18 #3): the LIVE
-    // per-language target fits + raw background fit q122 no longer
-    // re-pays per sample (write-once models, memoized like the other
-    // learned artifacts; q122 prices the scoring projection). Driver-
-    // side result, so the timed span is exactly the two fit jobs.
-    if (wanted("dsir_strat_fit")) {
-      try {
-        val samples = (1 to 3).map { _ =>
-          timed(SparkEntry.mkDsirStratModels(spark, sfDir))._2
-        }
-        record("dsir_strat_fit", medianTimed(samples))
-        ok("dsir_strat_fit") = true
-      } catch {
-        case NonFatal(e) =>
-          times("dsir_strat_fit") = 0.0
-          ok("dsir_strat_fit") = false
-          errors += s"dsir_strat_fit: ${String.valueOf(e.getMessage).take(200)}"
-      }
+    // stratified-DSIR fit facet: the LIVE per-language target fits + raw
+    // background fit that q122 does not re-pay per sample (write-once
+    // models, memoized like the other learned artifacts; q122 prices
+    // the scoring projection). Driver-side result, so the timed span
+    // is exactly the two fit jobs.
+    sampled(DsirStratFit) {
+      Sample(() => SparkEntry.mkDsirStratModels(spark, sfDir))
     }
 
     // facet (d): ANN recall at the BENCH sf. The q23/q30 oracles pin
@@ -562,7 +485,7 @@ object Bench {
     // production index runs — target 0.95, nprobe raised until the
     // probe sample hits it), so the facet holds ≥0.95 at any sf by
     // construction; ann_recall_ivf_fixed14_min keeps the raw
-    // fixed-nprobe reading (the r10 erosion signal, 1.0 at sf0.01 →
+    // fixed-nprobe reading (it erodes with scale: 1.0 at sf0.01 →
     // 0.9 at sf0.1) and ann_ivf_nprobe reports what the tuner paid.
     var (recallLsh, recallIvf, recallIvfFixed) = (-1.0, -1.0, -1.0)
     var recallPq = -1.0
@@ -574,7 +497,7 @@ object Bench {
     var pqShortlist = -1
     var ivfPqNprobe = -1
     var ivfPqShortlist = -1
-    if (wanted("ann_recall")) {
+    if (wants(AnnRecall)) {
       import graft.llm.{RandomHyperplaneLsh, Similarity, SimilarityEval}
       import org.apache.spark.sql.functions.col
       try {
@@ -610,19 +533,19 @@ object Bench {
           m = 16, ksub = 16, iters = 3)
         recallPq = minRecall(graft.llm.Pq.reconstructTopK(emb, queries,
           "vec_id", "embedding", cb, 10))
-        // fixed shortlist=100: the r12 erosion signal (0.9 at sf0.01
-        // → 0.5 at sf0.1) kept as the raw reading; the headline
-        // refined facet is now the AUTO-TUNED operator (target 0.95,
+        // fixed shortlist=100: the raw reading, which erodes as the
+        // corpus grows (0.9 at sf0.01 → 0.5 at sf0.1); the headline
+        // refined facet is the AUTO-TUNED operator (target 0.95,
         // shortlist doubled until the probe sample hits it — ≥0.95 at
         // any sf by construction), with ann_pq_shortlist reporting
-        // what the tuner paid — the r12 verdict's "close the loop".
+        // what the tuner paid.
         recallPqRefinedFixed = minRecall(graft.llm.Pq.refinedTopK(emb,
           queries, "vec_id", "embedding", cb, shortlist = 100, k = 10))
-        // ★r14 warm start: seed the walks at the growth rule this
-        // corpus' own A/B series measured (paid shortlist ≈ n/5,
-        // nprobe ≈ nlist at sf0.1) — the tuner still measures recall,
-        // so the facets keep their ≥target guarantee; cold-start
-        // doublings were pure re-derivation of a known knob.
+        // warm start: seed the walks at the growth rule this corpus'
+        // own A/B series measured (paid shortlist ≈ n/5, nprobe ≈
+        // nlist at sf0.1) — the tuner still measures recall, so the
+        // facets keep their ≥target guarantee; cold-start doublings
+        // would re-derive a known knob.
         val nEmb = emb.count()
         val seedShortlist = math.max(40L, nEmb / 5).toInt
         val (pqTuned, paidShortlist) = graft.llm.Pq.refinedTopKAutoTuned(
@@ -652,53 +575,32 @@ object Bench {
       }
     }
 
-    // ---- soak rungs run LAST (★r19, VERDICT r18 #2): the 10,240- and
-    // 40,960-object rewrites push 50k+ tasks and gigabytes of staging
-    // churn through the shared JVM — run FIRST (the r13-r18 order)
-    // their heap/GC residue was the prime suspect for the five
-    // fit/codec/streaming entries that breached budget ONLY in the
-    // driver's recorded runs. Every timed query and facet sample now
-    // completes before the first soak task is scheduled; the soaks'
-    // own readings are single-shot and 30-100 s by design, far above
-    // any residue the query loop could leave in return.
+    // ---- soak rungs run LAST: the 10,240- and 40,960-object rewrites
+    // push 50k+ tasks and gigabytes of staging churn through the
+    // shared JVM, and their heap/GC residue must not land inside any
+    // timed query or facet sample. Every such sample completes before
+    // the first soak task is scheduled; the soaks' own readings are
+    // single-shot and 30-100 s by design, far above any residue the
+    // query loop could leave in return.
     // soak: 10,240 objects in ONE job — the reference's scenario-3 scale
     // (10k objects, docs/COST_OVERVIEW.md:265-267) run directly. Long
     // enough (~10x the 1024 facet) that a single timed run sits above
     // the noise floor; the smaller facets already warmed every code
     // path, so one run, fresh staging, no median.
-    var (forget10240Sec, forget10240Objects, rows10240) = (0.0, 0, 0L)
-    if (wanted("forget_rewrite_10240obj")) {
-      val (tm, n, rp, _, okAll) =
-        forgetFacet(10240, timedRuns = 1, warm = false)
-      forget10240Sec = tm.wall; forget10240Objects = n; rows10240 = rp
-      record("forget_rewrite_10240obj", tm)
-      ok("forget_rewrite_10240obj") = okAll
-    }
-
-    // scale rung: 40,960 objects in ONE job (★r18, VERDICT r17 #5 —
-    // the shape the reference runs at 45,300 objects,
-    // docs/COST_OVERVIEW.md:288). Same total row math as every other
-    // rung (the full lineitem), 4× the object count of the 10,240
-    // soak at ~1/4 the rows per object — so obj/min flat vs the
-    // 10,240 reading pins the per-object overhead (footer read,
-    // staging commit, version capture) as the scaling direction, the
-    // way the `cdc` soak tier pins state flatness. Deliberately
-    // long; reported under `soak_entries`, not `n_over_budget`.
-    var (forget40960Sec, forget40960Objects, rows40960) = (0.0, 0, 0L)
-    if (wanted("forget_rewrite_40960obj")) {
-      val (tm, n, rp, _, okAll) =
-        forgetFacet(40960, timedRuns = 1, warm = false)
-      forget40960Sec = tm.wall; forget40960Objects = n; rows40960 = rp
-      record("forget_rewrite_40960obj", tm)
-      ok("forget_rewrite_40960obj") = okAll
-    }
+    forgetRung(Forget10240, 10240, timedRuns = 1, warm = false)
+    // scale rung: 40,960 objects in ONE job — the shape the reference
+    // runs at 45,300 objects (docs/COST_OVERVIEW.md:288). Same total
+    // row math as every other rung (the full lineitem), 4× the object
+    // count of the 10,240 soak at ~1/4 the rows per object — so obj/min
+    // flat vs the 10,240 reading pins the per-object overhead (footer
+    // read, staging commit, version capture) as the scaling direction,
+    // the way the `cdc` soak tier pins state flatness.
+    forgetRung(Forget40960, 40960, timedRuns = 1, warm = false)
 
     def jd(d: Double): String = f"$d%.4f"
-    // ---- self-adjudication against the committed ledger (★r21,
-    // VERDICT r20 #6): three rounds running, the round-close ledger vs
-    // driver-run wobble has been adjudicated by hand with scripts/
-    // check.py's epoch-normalized instrument. The bench now carries
-    // the instrument itself, so BENCH_rN arrives pre-adjudicated:
+    // ---- self-adjudication against the committed ledger: the bench
+    // carries scripts/check.py's epoch-normalized instrument itself, so
+    // a bench report arrives pre-adjudicated:
     // `epoch_ratio` (median of per-entry latest/ledger over non-soak
     // entries — robust to any single regressed entry), and per-entry
     // flags with BOTH signals (normalized median vs 1.3x/1.4x, the
@@ -723,10 +625,9 @@ object Bench {
     val ledger = readLedger("bench_ledger.json")
     val ledgerMins = readLedger("bench_ledger_mins.json")
     val ledgerCpu = readLedger("bench_ledger_cpu.json")
-    // Content fingerprint of the ledger the flags were computed against
-    // (★r22, ADVICE r21): check.py used file mtimes to decide whether
-    // the embedded adjudication is current, but git checkouts rewrite
-    // mtimes arbitrarily. The fingerprint pins the CONTENT.
+    // Content fingerprint of the ledger the flags were computed against:
+    // it tells check.py whether the embedded adjudication is current
+    // (file mtimes cannot, git checkouts rewrite them arbitrarily).
     val ledgerFingerprint: String =
       try {
         val f = java.nio.file.Paths.get("scripts/bench_ledger.json")
@@ -736,7 +637,7 @@ object Bench {
           .take(8).map(b => f"$b%02x").mkString
       } catch { case NonFatal(_) => "" }
     val epochKeys = times.keys.toSeq.filter(k =>
-      !SoakFacets(k) && times(k) > 0 &&
+      !soakNames(k) && times(k) > 0 &&
         ledger.get(k).exists(_ > 0)).sorted
     val epochRatio: Double =
       if (epochKeys.isEmpty) -1.0
@@ -790,54 +691,41 @@ object Bench {
     val perfFailNames = perfFlags.filter(_._2 == 2).map(f =>
       "\"" + f._1 + "\"").mkString("[", ",", "]")
 
-    // throughputs derive from the MEDIAN time (the published number) and
-    // the per-run-identical row/object counts; 0 when a facet was
-    // filtered out by SPARK_GRAFT_ONLY
-    def rate(n: Double, sec: Double): Double = if (sec > 0) n / sec else 0.0
-    val qs = times.map { case (k, v) => s""""$k":${jd(v)}""" }
-      .mkString("{", ",", "}")
-    val qMins = mins.map { case (k, v) => s""""$k":${jd(v)}""" }
-      .mkString("{", ",", "}")
-    val qCpus = entryCpu.map { case (k, v) => s""""$k":${jd(v)}""" }
-      .mkString("{", ",", "}")
-    val qGcs = entryGc.map { case (k, v) => s""""$k":${jd(v)}""" }
-      .mkString("{", ",", "}")
+    def obj(kvs: Iterable[(String, Double)]): String =
+      kvs.map { case (k, v) => s""""$k":${jd(v)}""" }.mkString("{", ",", "}")
+    val qs = obj(times)
+    val qMins = obj(mins)
+    val qCpus = obj(entryCpu)
+    val qGcs = obj(entryGc)
     val oks = ok.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
     val errJson = errors.map(e => "\"" +
       e.replace("\\", "\\\\").replace("\"", "\\\"")
         .replaceAll("[\\n\\r\\t]", " ") + "\"").mkString("[", ",", "]")
     val total = times.values.sum
-    // per-entry budget lint (VERDICT r13 task 7): nothing used to flag
-    // a new census-class entry quietly adding >8 s to the run — by
-    // r13 three siblings (q102/q117/q95) had drifted the total to
-    // 193 s. A listing here is a WARNING to the author, not a failure:
-    // some entries (the 10240-object forget soak) are deliberately
-    // long, and the facet makes that spend visible instead of silent.
+    // per-entry budget lint: an entry that quietly adds >8 s to the run
+    // is listed. A listing is a WARNING to the author, not a failure;
+    // deliberate soaks (Facet.soak) go to `soak_entries`, and
+    // `n_over_budget` counts UNEXPECTED overruns only.
     val entryBudgetSec = 8.0
-    // deliberate soaks (SoakFacets) are long by design — they go to
-    // `soak_entries`; `n_over_budget` counts UNEXPECTED overruns only
     val overBudget = times.toSeq
-      .filter { case (k, v) => v > entryBudgetSec && !SoakFacets(k) }
+      .filter { case (k, v) => v > entryBudgetSec && !soakNames(k) }
       .sortBy(-_._2)
-    val overBudgetJson = overBudget
-      .map { case (k, v) => s""""$k":${jd(v)}""" }.mkString("{", ",", "}")
+    val overBudgetJson = obj(overBudget)
     // cpu/wall attribution for exactly the entries the budget lint
-    // flags: the adjudication signal VERDICT r18 #1 asked for — an
-    // over-budget entry with cpu/wall far below its healthy
+    // flags: an over-budget entry with cpu/wall far below its healthy
     // parallelism was starved of CPU (ambient contention), one whose
     // cpu grew with wall did real extra work.
-    val overBudgetCpuJson = overBudget
-      .map { case (k, _) =>
-        s""""$k":${jd(entryCpu.getOrElse(k, -1.0))}""" }
-      .mkString("{", ",", "}")
-    val soakJson = times.toSeq.filter(t => SoakFacets(t._1))
-      .map { case (k, v) => s""""$k":${jd(v)}""" }.mkString("{", ",", "}")
+    val overBudgetCpuJson =
+      obj(overBudget.map { case (k, _) => k -> entryCpu.getOrElse(k, -1.0) })
+    val soakJson = obj(times.filter(t => soakNames(t._1)))
     // round-over-round comparisons need the query total SEPARATED from
-    // deliberate soak spend: adding a soak rung (e.g. the ★r18
-    // 40,960-object forget tier, ~74 s by design) moves `value` without
+    // deliberate soak spend: adding a soak rung moves `value` without
     // any query regressing — `total_ex_soak` is the comparable series
-    val totalExSoak = times.toSeq.filterNot(t => SoakFacets(t._1))
+    val totalExSoak = times.toSeq.filterNot(t => soakNames(t._1))
       .map(_._2).sum
+    val Seq(r64, r1024, r10240, r40960, rJson, rPii) =
+      Seq(Forget64, Forget1024, Forget10240, Forget40960, ForgetJson,
+        PiiScrub).map(rewrites)
     val line =
       s"""{"metric":"total","value":${jd(total)},"unit":"sec",""" +
       s""""total_ex_soak":${jd(totalExSoak)},""" +
@@ -856,22 +744,22 @@ object Bench {
       s""""find_scan_ratio_lineitem":${jd(scanLineitem.ratio)},""" +
       s""""find_scan_ratio_customer":${jd(scanCustomer.ratio)},""" +
       s""""find_runtime_scan_ratio":${jd(findRuntimeRatio)},""" +
-      s""""forget_objects":$forgetObjects,""" +
-      s""""forget_objects_per_min":${jd(rate(forgetObjects * 60.0, forgetSec))},""" +
-      s""""forget_rows_per_sec":${jd(rate(rowsProcessed.toDouble, forgetSec))},""" +
-      s""""forget_rows_deleted":$rowsDeleted,""" +
-      s""""forget_1024_objects_per_min":${jd(rate(forget1024Objects * 60.0, forget1024Sec))},""" +
-      s""""forget_1024_rows_per_sec":${jd(rate(rows1024.toDouble, forget1024Sec))},""" +
-      s""""forget_10240_objects_per_min":${jd(rate(forget10240Objects * 60.0, forget10240Sec))},""" +
-      s""""forget_10240_rows_per_sec":${jd(rate(rows10240.toDouble, forget10240Sec))},""" +
-      s""""forget_40960_objects_per_min":${jd(rate(forget40960Objects * 60.0, forget40960Sec))},""" +
-      s""""forget_40960_rows_per_sec":${jd(rate(rows40960.toDouble, forget40960Sec))},""" +
-      s""""forget_json_objects_per_min":${jd(rate(forgetJsonObjects * 60.0, forgetJsonSec))},""" +
-      s""""forget_json_rows_per_sec":${jd(rate(rowsJson.toDouble, forgetJsonSec))},""" +
-      s""""forget_json_rows_deleted":$rowsJsonDeleted,""" +
-      s""""pii_scrub_objects_per_min":${jd(rate(piiObjects * 60.0, piiSec))},""" +
-      s""""pii_scrub_rows_per_sec":${jd(rate(piiRows.toDouble, piiSec))},""" +
-      s""""pii_scrub_rows_redacted":$piiRedacted,""" +
+      s""""forget_objects":${r64.objects},""" +
+      s""""forget_objects_per_min":${jd(r64.objectsPerMin)},""" +
+      s""""forget_rows_per_sec":${jd(r64.rowsPerSec)},""" +
+      s""""forget_rows_deleted":${r64.deleted},""" +
+      s""""forget_1024_objects_per_min":${jd(r1024.objectsPerMin)},""" +
+      s""""forget_1024_rows_per_sec":${jd(r1024.rowsPerSec)},""" +
+      s""""forget_10240_objects_per_min":${jd(r10240.objectsPerMin)},""" +
+      s""""forget_10240_rows_per_sec":${jd(r10240.rowsPerSec)},""" +
+      s""""forget_40960_objects_per_min":${jd(r40960.objectsPerMin)},""" +
+      s""""forget_40960_rows_per_sec":${jd(r40960.rowsPerSec)},""" +
+      s""""forget_json_objects_per_min":${jd(rJson.objectsPerMin)},""" +
+      s""""forget_json_rows_per_sec":${jd(rJson.rowsPerSec)},""" +
+      s""""forget_json_rows_deleted":${rJson.deleted},""" +
+      s""""pii_scrub_objects_per_min":${jd(rPii.objectsPerMin)},""" +
+      s""""pii_scrub_rows_per_sec":${jd(rPii.rowsPerSec)},""" +
+      s""""pii_scrub_rows_redacted":${rPii.deleted},""" +
       s""""ann_recall_lsh_min":${jd(recallLsh)},""" +
       s""""ann_recall_ivf_min":${jd(recallIvf)},""" +
       s""""ann_recall_ivf_fixed14_min":${jd(recallIvfFixed)},""" +
@@ -887,11 +775,10 @@ object Bench {
       s""""sf":"$sfDir"}"""
     // The FULL per-query series goes to the file only: the driver
     // captures a bounded tail of stdout, and at 60 entries the full
-    // line overflows it (BENCH_r09/r10 both came back truncated →
-    // parsed:null). stdout gets a ≲1 KB summary — total, counts, the
-    // headline facets, and only the top-8 most expensive queries —
-    // printed as the BARE LAST line so the driver's JSON parse always
-    // lands.
+    // line overflows it (an overflowing line parses to null). stdout
+    // gets a ≲2 KB summary — total, counts, the headline facets, and
+    // the most expensive queries — printed as the BARE LAST line so the
+    // driver's JSON parse always lands.
     try {
       val out = java.nio.file.Paths.get("target/bench-latest.json")
       java.nio.file.Files.createDirectories(out.getParent)
@@ -901,17 +788,13 @@ object Bench {
       case NonFatal(e) =>
         System.err.println(s"[bench] could not write bench-latest.json: $e")
     }
-    // ★r22 (VERDICT r21 #2): the old fixed top-8 starved the driver's
-    // round-over-round comparison (PERF_r21: n_common=4, phantom
-    // "dropped_from_bench" rows as the top-8 window rotated). The full
-    // 140-entry map cannot arrive intact — the driver keeps only the
-    // LAST 2000 stdout chars (measured: every BENCH_rN tail is exactly
-    // 2000 chars; r09/r10 proved an overflowing line parses to null —
-    // names alone are ~4 KB) — so fill `queries` with as many entries
-    // as keep the WHOLE line inside a conservative 1900-char budget:
-    // ~40 entries in DESCENDING cost order, a strict superset of any
-    // previous round's top-8, so nothing ever "drops" between rounds
-    // and the expensive (comparison-relevant) entries always land.
+    // The full 140-entry map cannot arrive intact — the driver keeps
+    // only the LAST 2000 stdout chars, and the names alone are ~4 KB —
+    // so fill `queries` with as many entries as keep the WHOLE line
+    // inside a conservative 1900-char budget: ~40 entries in
+    // DESCENDING cost order, so the expensive (comparison-relevant)
+    // entries always land and a round-over-round comparison has many
+    // entries in common.
     val compactPrefix =
       s"""{"metric":"total","value":${jd(total)},"unit":"sec",""" +
       s""""total_ex_soak":${jd(totalExSoak)},""" +
@@ -924,10 +807,10 @@ object Bench {
       s""""n_perf_fails":$nPerfFails,"n_perf_warns":$nPerfWarns,""" +
       s""""perf_fails":$perfFailNames,""" +
       s""""find_runtime_scan_ratio":${jd(findRuntimeRatio)},""" +
-      s""""forget_10240_objects_per_min":${jd(rate(forget10240Objects * 60.0, forget10240Sec))},""" +
-      s""""forget_40960_objects_per_min":${jd(rate(forget40960Objects * 60.0, forget40960Sec))},""" +
-      s""""forget_json_objects_per_min":${jd(rate(forgetJsonObjects * 60.0, forgetJsonSec))},""" +
-      s""""pii_scrub_objects_per_min":${jd(rate(piiObjects * 60.0, piiSec))},""" +
+      s""""forget_10240_objects_per_min":${jd(r10240.objectsPerMin)},""" +
+      s""""forget_40960_objects_per_min":${jd(r40960.objectsPerMin)},""" +
+      s""""forget_json_objects_per_min":${jd(rJson.objectsPerMin)},""" +
+      s""""pii_scrub_objects_per_min":${jd(rPii.objectsPerMin)},""" +
       s""""ann_recall_lsh_min":${jd(recallLsh)},""" +
       s""""ann_recall_ivf_min":${jd(recallIvf)},""" +
       s""""ann_recall_pq_min":${jd(recallPq)},""" +

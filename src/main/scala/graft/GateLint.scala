@@ -15,7 +15,7 @@ import org.apache.spark.sql.types._
   *   - an ARRAY cell crashes pandas sort_values outright
   *     ("unhashable type: numpy.ndarray", q72 r11).
   *
-  * So: every `SparkEntry.queries` output column must be a scalar
+  * So: every [[SparkEntry.entries]] output column must be a scalar
   * hash-safe type (string / integral / boolean / date / timestamp),
   * and every `sum(` in an oracle must sit directly inside a `CAST`.
   * Exceptions require an explicit allow-list entry carrying the

@@ -6,13 +6,12 @@ import graft.model._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
-  *
-  * Each `queries` entry exercises one operator family from SURVEY.md §2 via
-  * the engine's public API; `oracleSql` holds the DuckDB-equivalent SQL the
-  * driver hash-compares against. Aggregates run on explicit DECIMAL casts so
-  * both engines produce bit-identical exact sums (double summation order
-  * differs between engines; decimal addition is exact).
+/** The correctness gate (SURVEY.md §7): one [[SparkEntry.Entry]] per
+  * operator family from SURVEY.md §2, run through the engine's public
+  * API, each with the DuckDB-equivalent SQL the driver hash-compares
+  * against. Aggregates run on explicit DECIMAL casts so both engines
+  * produce bit-identical exact sums (double summation order differs
+  * between engines; decimal addition is exact).
   */
 object SparkEntry {
 
@@ -48,15 +47,14 @@ object SparkEntry {
   private def sharingFrames: Boolean =
     sys.props.get("graft.gate.shareFrames").contains("1")
   // ONE derivation of the exact-Jaccard pairs frame — q29's live
-  // definition and the stored artifact's builder (★r18, VERDICT r17
-  // "What's wrong" #2: previously the gate path localCheckpoint'ed a
-  // second derivation; now every path flows through the same builder
-  // and the same ArtifactStore discipline).
+  // definition and the stored artifact's builder: every path flows
+  // through the same builder and the same ArtifactStore discipline,
+  // so no path holds a second derivation.
   private def mkPairs(s: SparkSession, dir: String): DataFrame =
     graft.llm.Dedup.jaccardPairsExact(t(s, dir, "documents"),
       "doc_id", "text", shingleLen = 16, threshold = 0.8)
-  // the pairs frame as a stored artifact (★r15, registry factored to
-  // ArtifactStore ★r16): q29 owns and prices the pairs census live;
+  // the pairs frame as a stored artifact: q29 owns and prices the
+  // pairs census live;
   // clustering (q31) consumes the STORED pairs — the same ownership
   // split as clusterArtifact one level down. Written once per
   // (JVM, dir).
@@ -70,7 +68,7 @@ object SparkEntry {
   // frame; doubles survive parquet bit-exactly).
   private def docPairs(s: SparkSession, dir: String): DataFrame =
     if (sharingFrames) pairsArtifact(s, dir) else mkPairs(s, dir)
-  // the duplicated-SPAN census (★r15): q129 owns and prices the
+  // the duplicated-SPAN census: q129 owns and prices the
   // census (the one char-scale aggregation of the span family); the
   // q95 coverage audit and q102 keep-first surgery consume the
   // stored, vocabulary-scale frame via their FromCensus variants.
@@ -79,8 +77,8 @@ object SparkEntry {
       "graft-span-census-")(
       graft.llm.Dedup.spanCensus(t(s, dir, "documents"),
         "doc_id", "text", shingleLen = 16))()
-  // ONE clustering derivation, ALWAYS from the stored pairs artifact
-  // (★r18 unification): q31 — the clustering OWNER — prices exactly
+  // ONE clustering derivation, ALWAYS from the stored pairs artifact:
+  // q31 — the clustering OWNER — prices exactly
   // this in bench mode (clustering over the pairs scan, never the
   // pairs build; the artifact is eager-staged untimed, see
   // [[stageSharedArtifacts]]); the gate flag reads the stored cluster
@@ -90,7 +88,7 @@ object SparkEntry {
       pairsArtifact(s, dir), "id_a", "id_b")
   private def docClusters(s: SparkSession, dir: String): DataFrame =
     if (sharingFrames) clusterArtifact(s, dir) else mkClusters(s, dir)
-  // ---- STORED-artifact reuse (★r15): the duplicate-cluster frame is
+  // ---- STORED-artifact reuse: the duplicate-cluster frame is
   // what a 100 TB pipeline WRITES once (it is already the forget-join
   // artifact DedupForget consumes) and every downstream entry READS —
   // deriving it inline re-paid the full MinHash/CC floor (~6 s at
@@ -100,7 +98,7 @@ object SparkEntry {
   // entry's bench re-runs) reads the scan. q31 — the entry that OWNS
   // the clustering — stays on the live derivation, so its bench
   // median keeps pricing the real clustering cost.
-  // ---- CDC gate plumbing (★r15; file-based feed ★r16): drive a ±1
+  // ---- CDC gate plumbing: drive a ±1
   // CDC feed of the documents table — ingest ALL docs, then forget
   // doc_id % 7 == 0 (the q118/q101 split) — through a streaming CDC
   // index operator. The feed rides the PRODUCTION data path end to
@@ -115,12 +113,11 @@ object SparkEntry {
   // df > maxDf under ANY +1 order; forgets commute). Unique
   // memory-sink names per invocation so bench re-runs don't collide.
   //
-  // Feed files STAGED once per (JVM, dir) (★r17, VERDICT r16 #1): the
-  // 8 batch files are identical bytes across all four gate entries
-  // (and across bench re-runs), but each invocation used to re-derive
-  // and re-write them with Spark jobs — ~half of every gate's cost,
-  // and q127 was riding 3% under its commit-time budget. Now the
-  // Spark writes happen once (ArtifactStore-style memoization of the
+  // Feed files STAGED once per (JVM, dir): the 8 batch files are
+  // identical bytes across all four gate entries (and across bench
+  // re-runs), so re-deriving them per invocation would re-pay ~half of
+  // every gate's cost in Spark jobs. The Spark writes happen once
+  // (ArtifactStore-style memoization of the
   // staged DIRECTORY); each gate replays its OWN drop-by-drop stream
   // by hard-linking the staged files, one batch at a time, into a
   // private watch dir — a filesystem op, not a Spark job, so the
@@ -196,9 +193,9 @@ object SparkEntry {
     // Stateful streams pin their state-store partition count at first
     // start from spark.sql.shuffle.partitions — at gate scale, 32
     // partitions means 32 state commits (each a checkpoint-file write)
-    // PER micro-batch × 8 drops. ★r21: 4 partitions (A/B'd vs the r17
-    // value 8: q127 process-cpu halved, 19.8 → 8.7-9.7 s, q126 down
-    // ~18%) — the state is vocabulary-bounded and tiny at gate scale,
+    // PER micro-batch × 8 drops. 4 partitions (A/B'd against 8: q127
+    // process-cpu halved, 19.8 → 8.7-9.7 s, q126 down ~18%) — the
+    // state is vocabulary-bounded and tiny at gate scale,
     // so fewer stores = less fixed load/commit work per batch. A
     // production deployment sizes this to its own state volume via the
     // same knob (graft.cdc.statePartitions on the session conf; the
@@ -246,7 +243,7 @@ object SparkEntry {
     graft.tools.ArtifactStore.frame(s, s"clusters:$dir",
       "graft-cluster-artifact-")(mkClusters(s, dir))()
 
-  // ---- media fingerprint artifacts (★r19, VERDICT r18 #3): the
+  // ---- media fingerprint artifacts: the
   // (id, dhash) frames are write-once per corpus — a 100 TB pipeline
   // decodes each media object ONCE and stores the 8-byte fingerprint;
   // the banded near-dup pass always reads the stored frame (re-paying
@@ -280,9 +277,8 @@ object SparkEntry {
     * frames (pairs, clusters, span census, CDC feed files) and
     * serialized models — BEFORE any timed bench sample, so no entry's
     * median ever includes another entry's one-time artifact build
-    * (★r18, VERDICT r17 #1: q31's first sample could pay the pairs
-    * artifact build q29 owns, flipping it over the per-entry budget;
-    * the staged-CDC-feed discipline of ce750be applied one level
+    * (q31's first sample could otherwise pay the pairs artifact build
+    * q29 owns — the staged-CDC-feed discipline applied one level
     * down). Owner entries are untouched: in bench (non-sharing) mode
     * q29/q129/q57/q54/q79/q81 price their LIVE derivations and never
     * read these. Idempotent and cheap after the first call. */
@@ -301,7 +297,7 @@ object SparkEntry {
     dsirStratModels(s, dir)
     ()
   }
-  // ---- learned-MODEL artifacts (★r15; SERIALIZED ★r16): each
+  // ---- learned-MODEL artifacts: each
   // deterministic fit has ONE owner entry that prices training live
   // (q57 k-means, q54 BPE, q79 PQ, q81 IVF-PQ) and a `*Cached`
   // accessor every CONSUMER entry uses — trained once per (JVM, dir),
@@ -364,108 +360,84 @@ object SparkEntry {
   private def ivfPqModel(s: SparkSession, dir: String)
       : graft.llm.IvfPq.Model =
     if (!sharingFrames) mkIvfPq(s, dir) else ivfPqModelCached(s, dir)
-  // and the q75 BM25 query terms: the 3 highest-df in-window terms
-  // with their idf in integer micro units (Lucene log1p idf — the
-  // ONE float op, folded driver-side into a shared literal so the
-  // entry and its dynamic oracle replay identical integers)
-  private val sharedBm25Terms = scala.collection.concurrent.TrieMap
-    .empty[String, Seq[(String, Long)]]
+  // ---- gate literals: small driver-side fits (BM25 terms, LM tables,
+  // classifier weights, quotas) that an entry and its oracle both fold
+  // into literals. Each fit is deterministic, so a re-learn replays
+  // the same literals; bench mode re-learns per run (the entry prices
+  // its fit), the gate flag memoizes in the ArtifactStore.
+  private def literal[T](key: String)(mk: => T): T =
+    if (sharingFrames) graft.tools.ArtifactStore.value(key)(mk) else mk
+
+  // the q75 BM25 query terms: the 3 highest-df in-window terms with
+  // their idf in integer micro units (Lucene log1p idf — the ONE float
+  // op, folded driver-side into a shared literal so the entry and its
+  // oracle replay identical integers)
   private def bm25Terms(s: SparkSession, dir: String)
-      : Seq[(String, Long)] = {
-    def mk: Seq[(String, Long)] = {
-      val docs = t(s, dir, "documents")
-      val n = docs.count()
-      graft.llm.TextStats
-        .invertedIndex(docs, "doc_id", "text", minDf = 5, maxDf = 400)
-        .orderBy(col("df").desc, col("token")).limit(3)
-        .select(col("token"), col("df")).collect()
-        .map { r =>
-          val df = r.getLong(1)
-          (r.getString(0),
-            math.round(math.log1p((n - df + 0.5) / (df + 0.5)) * 1e6))
-        }.toSeq
-    }
-    if (!sharingFrames) mk
-    else sharedBm25Terms.getOrElseUpdate(s"bm25:$dir", mk)
+      : Seq[(String, Long)] = literal(s"bm25:$dir") {
+    val docs = t(s, dir, "documents")
+    val n = docs.count()
+    graft.llm.TextStats
+      .invertedIndex(docs, "doc_id", "text", minDf = 5, maxDf = 400)
+      .orderBy(col("df").desc, col("token")).limit(3)
+      .select(col("token"), col("df")).collect()
+      .map { r =>
+        val df = r.getLong(1)
+        (r.getString(0),
+          math.round(math.log1p((n - df + 0.5) / (df + 0.5)) * 1e6))
+      }.toSeq
   }
 
   // the q88 unigram LM (entry + its oracle): top-16 vocabulary with
-  // integer micro-nat costs plus the OOV bucket — deterministic
-  // re-learn, so gate and oracle replay identical literals
-  private val sharedUnigramLm = scala.collection.concurrent.TrieMap
-    .empty[String, (Seq[(String, Long)], Long)]
+  // integer micro-nat costs plus the OOV bucket
   private def unigramLmModel(s: SparkSession, dir: String)
-      : (Seq[(String, Long)], Long) = {
-    def mk = graft.llm.TextStats.unigramLm(t(s, dir, "documents"),
+      : (Seq[(String, Long)], Long) = literal(s"unigram:$dir") {
+    graft.llm.TextStats.unigramLm(t(s, dir, "documents"),
       "text", vocabSize = 16)
-    if (!sharingFrames) mk
-    else sharedUnigramLm.getOrElseUpdate(s"unigram:$dir", mk)
   }
 
   // the q89 bigram stupid-backoff model: top-16 vocab + top-32 pairs
-  private val sharedBigramLm = scala.collection.concurrent.TrieMap
-    .empty[String, graft.llm.TextStats.BigramModel]
   private def bigramLmModel(s: SparkSession, dir: String)
-      : graft.llm.TextStats.BigramModel = {
-    def mk = graft.llm.TextStats.bigramLm(t(s, dir, "documents"),
+      : graft.llm.TextStats.BigramModel = literal(s"bigram:$dir") {
+    graft.llm.TextStats.bigramLm(t(s, dir, "documents"),
       "text", vocabSize = 16, bigramSize = 32)
-    if (!sharingFrames) mk
-    else sharedBigramLm.getOrElseUpdate(s"bigram:$dir", mk)
   }
 
   // the q90 Moore-Lewis pair: IN-DOMAIN LM on the lang='en' stratum,
   // GENERAL LM on the whole corpus (same vocab cut as q88)
   private def inDomainLmModel(s: SparkSession, dir: String)
-      : (Seq[(String, Long)], Long) = {
-    def mk = graft.llm.TextStats.unigramLm(
+      : (Seq[(String, Long)], Long) = literal(s"unigram_en:$dir") {
+    graft.llm.TextStats.unigramLm(
       t(s, dir, "documents").filter(col("lang") === "en"),
       "text", vocabSize = 16)
-    if (!sharingFrames) mk
-    else sharedUnigramLm.getOrElseUpdate(s"unigram_en:$dir", mk)
   }
 
   // the q91 linear quality classifier, distilled from the qualityKeep
   // rule teacher (the fastText-bootstrap move): bit-deterministic
   // preconditioned GD, weights fold to literals shared with the oracle
-  private val sharedClassifier = scala.collection.concurrent.TrieMap
-    .empty[String, graft.llm.Classifier.Model]
   private def classifierModel(s: SparkSession, dir: String)
-      : graft.llm.Classifier.Model = {
-    def mk = graft.llm.Classifier.train(t(s, dir, "documents"), "text",
+      : graft.llm.Classifier.Model = literal(s"clf:$dir") {
+    graft.llm.Classifier.train(t(s, dir, "documents"), "text",
       graft.llm.TextStats.qualityKeep(col("text")), iters = 60)
-    if (!sharingFrames) mk
-    else sharedClassifier.getOrElseUpdate(s"clf:$dir", mk)
   }
 
   // the q92 DSIR bucket LMs: hashed-bigram log-probs (B=64) for the
-  // lang='en' TARGET stratum and for the RAW corpus — deterministic
-  // re-learn, the delta folds to literals shared with the oracle
-  private val sharedDsir = scala.collection.concurrent.TrieMap
-    .empty[String, (IndexedSeq[Long], IndexedSeq[Long])]
+  // lang='en' TARGET stratum and for the RAW corpus; the delta folds
+  // to literals shared with the oracle
   private def dsirModels(s: SparkSession, dir: String)
-      : (IndexedSeq[Long], IndexedSeq[Long]) = {
-    def mk = {
-      val docs = t(s, dir, "documents")
-      (graft.llm.TextStats.dsirBucketLogProbs(
-        docs.filter(col("lang") === "en"), "text", buckets = 64),
-        graft.llm.TextStats.dsirBucketLogProbs(docs, "text", buckets = 64))
-    }
-    if (!sharingFrames) mk
-    else sharedDsir.getOrElseUpdate(s"dsir:$dir", mk)
+      : (IndexedSeq[Long], IndexedSeq[Long]) = literal(s"dsir:$dir") {
+    val docs = t(s, dir, "documents")
+    (graft.llm.TextStats.dsirBucketLogProbs(
+      docs.filter(col("lang") === "en"), "text", buckets = 64),
+      graft.llm.TextStats.dsirBucketLogProbs(docs, "text", buckets = 64))
   }
   // q122's stratified targets: one per-language hashed-bucket LM
   // learned from that language's IN-DOMAIN slice (doc_id % 5 == 0 —
   // the bench split doubling as the per-stratum target corpus), plus
-  // the q92 raw background. Memoized UNCONDITIONALLY (★r19, VERDICT
-  // r18 #3): the stratified fits are write-once models a pipeline
-  // trains once and scores many — re-fitting them inside every q122
-  // bench sample priced two live LM fits per sample and put the entry
-  // 1.5× over budget on a contended run. The live fit keeps a priced
-  // owner: the bench's `dsir_strat_fit` facet (and q92 still prices
-  // the unstratified pair live via [[dsirModels]]). Deterministic
-  // fit, so gate hashes are unchanged.
-  private val sharedDsirStrat = scala.collection.concurrent.TrieMap
-    .empty[String, (Map[String, IndexedSeq[Long]], IndexedSeq[Long])]
+  // the q92 raw background. Memoized in bench mode too: the stratified
+  // fits are write-once models a pipeline trains once and scores many,
+  // so q122 prices only the scoring projection. The live fit keeps a
+  // priced owner: the bench's `dsir_strat_fit` facet (and q92 still
+  // prices the unstratified pair live via [[dsirModels]]).
   private[graft] def mkDsirStratModels(s: SparkSession, dir: String)
       : (Map[String, IndexedSeq[Long]], IndexedSeq[Long]) = {
     val docs = t(s, dir, "documents")
@@ -477,21 +449,17 @@ object SparkEntry {
   }
   private def dsirStratModels(s: SparkSession, dir: String)
       : (Map[String, IndexedSeq[Long]], IndexedSeq[Long]) =
-    sharedDsirStrat.getOrElseUpdate(s"dsirStrat:$dir",
+    graft.tools.ArtifactStore.value(s"dsirStrat:$dir")(
       mkDsirStratModels(s, dir))
 
   // the q94 temperature quotas (α=0.5, budget 250 over `source`):
   // counts aggregate once, the float pow folds driver-side into the
   // integer quota literals shared with the oracle
-  private val sharedQuotas = scala.collection.concurrent.TrieMap
-    .empty[String, Map[String, Int]]
   private def temperatureQuotasModel(s: SparkSession, dir: String)
-      : Map[String, Int] = {
-    def mk = graft.llm.Sampling.temperatureRebalance(
+      : Map[String, Int] = literal(s"quotas:$dir") {
+    graft.llm.Sampling.temperatureRebalance(
       t(s, dir, "documents"), "doc_id", "source",
       alpha = 0.5, budget = 250L)._2
-    if (!sharingFrames) mk
-    else sharedQuotas.getOrElseUpdate(s"quotas:$dir", mk)
   }
 
   // ---- canonical deletion-queue fixtures used by the find/forget queries
@@ -522,34 +490,106 @@ object SparkEntry {
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0:
     * the Find semi-join (matched rows) over the customer table. */
   def entry(spark: SparkSession): DataFrame =
-    queries("q01_find_simple")(spark, "/root/testdata/sf0.001")
+    apply("q01_find_simple").run(spark, "/root/testdata/sf0.001")
+
+  /** One gate entry: the operator family it runs over an sf dir, and
+    * the DuckDB SQL over the same parquet tables that the driver
+    * hash-compares its output against.
+    *
+    * Most oracles are fixed text ([[sql]]). The rest are built from
+    * the data: q04/q27 name this run's objects (`dir`'s lineitem and
+    * the [[graft.catalog.Staging]] JSON-lines copy), and the learned
+    * ones (BPE merges, centroids, codebooks, LM tables, quotas) replay
+    * the entry's deterministic fit as literals, so both engines run
+    * the same constants — the move q42 makes with the detector regexes
+    * and q48 with MD5 preimages. */
+  final case class Entry(name: String,
+                         run: (SparkSession, String) => DataFrame,
+                         oracle: (SparkSession, String) => String) {
+    /** `body` — a run of this entry, or work done on its behalf — with
+      * every Spark job it submits from this thread in job group
+      * `name`, so a listener can attribute the jobs to the entry. Set
+      * and cleared outside any span `body` times. */
+    def inGroup[T](s: SparkSession)(body: => T): T = {
+      val sc = s.sparkContext
+      sc.setJobGroup(name, name)
+      try body finally sc.clearJobGroup()
+    }
+  }
+
+  /** A fixed oracle; evaluated on use, so it may call members declared
+    * after the table. */
+  private def sql(q: => String): (SparkSession, String) => String =
+    (_, _) => q
+
+  /** The table from a Seq, rejecting a duplicate name (a Map literal
+    * would silently keep only the last). */
+  private[graft] def table(es: Entry*): Seq[Entry] = {
+    val dups = es.groupBy(_.name).collect { case (n, g) if g.size > 1 => n }
+    require(dups.isEmpty,
+      s"duplicate gate entry: ${dups.toSeq.sorted.mkString(", ")}")
+    es
+  }
+
+  private lazy val byName: Map[String, Entry] =
+    entries.map(e => e.name -> e).toMap
+
+  def apply(name: String): Entry = byName.getOrElse(name,
+    throw new NoSuchElementException(s"no gate entry named $name"))
+
+  /** The one rule that picks entries and bench facets by name: exact
+    * names, none picks all of `known`. A name outside `known` fails,
+    * so a typo cannot select nothing. */
+  def only(names: Seq[String], known: Set[String]): String => Boolean = {
+    val picked = names.map(_.trim).filter(_.nonEmpty).toSet
+    val unknown = picked -- known
+    require(unknown.isEmpty,
+      s"unknown entry: ${unknown.toSeq.sorted.mkString(", ")}")
+    if (picked.isEmpty) _ => true else picked
+  }
+
+  /** The entries `names` picks ([[only]]), in name order. */
+  def selected(names: Seq[String]): Seq[Entry] = {
+    val pick = only(names, byName.keySet)
+    entries.filter(e => pick(e.name)).sortBy(_.name)
+  }
 
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val entries: Seq[Entry] = table(
     // §2.3 J1/J2/J5 — simple-match Find: broadcast semi-join, string-cast
     // keys, value fanned across every identifier column of the mapper
-    "q01_find_simple" -> ((s, dir) => {
+    Entry("q01_find_simple", (s, dir) => {
       val groups = customerGroups(s, dir, simpleQueue,
         Seq("c_custkey", "c_name"))
       Finder.matchedRows(s, t(s, dir, "customer"), groups)
-    }),
+    }, sql("""SELECT c_custkey, c_name, c_nationkey, c_acctbal, c_mktsegment
+        | FROM customer
+        | WHERE CAST(c_custkey AS VARCHAR) IN ('7','23','99')
+        |    OR c_name IN ('7','23','99')""".stripMargin.replace("\n", " "))),
     // §2.3 J3/J4 — composite (tuple) match with canonical sorted columns
-    "q02_find_composite" -> ((s, dir) => {
+    Entry("q02_find_composite", (s, dir) => {
       val groups = customerGroups(s, dir, compositeQueue,
         Seq("c_mktsegment", "c_nationkey"))
       Finder.matchedRows(s, t(s, dir, "customer"), groups)
-    }),
+    }, sql("""SELECT c_custkey, c_name, c_nationkey, c_acctbal, c_mktsegment
+        | FROM customer
+        | WHERE (c_mktsegment = 'FURNITURE' AND c_nationkey = 2)
+        |    OR (c_mktsegment = 'MACHINERY' AND c_nationkey = 16)"""
+        .stripMargin.replace("\n", " "))),
     // §2.2 P5 — Forget anti-filter: surviving rows (left_anti, native types)
-    "q03_forget_anti" -> ((s, dir) => {
+    Entry("q03_forget_anti", (s, dir) => {
       val groups = customerGroups(s, dir, simpleQueue,
         Seq("c_custkey", "c_name"))
       Finder.survivors(s, t(s, dir, "customer"), groups)
-    }),
+    }, sql("""SELECT c_custkey, c_name, c_nationkey, c_acctbal, c_mktsegment
+        | FROM customer
+        | WHERE NOT (CAST(c_custkey AS VARCHAR) IN ('7','23','99')
+        |         OR c_name IN ('7','23','99'))""".stripMargin.replace("\n", " "))),
     // §2.2 P1/P2 — DISTINCT matched file paths (input_file_name),
     // normalized to the basename, plus per-file matched-row and
     // matched-key counts so the check is non-vacuous even though the
     // testdata table is a single file (ADVICE r2 on the q04 oracle).
-    "q04_find_files" -> ((s, dir) => {
+    Entry("q04_find_files", (s, dir) => {
       val cat = new Catalog(s, dir)
       val table = cat.table("lineitem")
       val mapper = DataMapper("li", "lineitem", Seq("l_orderkey"))
@@ -560,13 +600,18 @@ object SparkEntry {
         .groupBy(col("file_name"))
         .agg(count(lit(1)).as("n_rows"),
           countDistinct(col("l_orderkey")).as("n_keys"))
-    }),
+    },
+      // the two oracles that read a file directly: this run's lineitem
+      // object and the JSON-lines copy the q27 entry staged
+      (_, dir) => findFilesOracleSql(
+        java.nio.file.Paths.get(dir, "lineitem.parquet").toAbsolutePath
+          .normalize.toString)),
     // §2.4 A1-A4 — grouped aggregation (TPC-H Q1 shape), exact decimals
-    "q05_agg_stats" -> ((s, dir) => {
+    Entry("q05_agg_stats", (s, dir) => {
       t(s, dir, "lineitem")
         // explicit +00:00 so the boundary is the same INSTANT under
-        // any spark.sql.session.timeZone (★r19 timezone-parity sweep:
-        // a bare date literal parses to the SESSION zone's midnight —
+        // any spark.sql.session.timeZone (TimezoneParitySpec: a bare
+        // date literal parses to the SESSION zone's midnight —
         // rows shipped inside the offset window silently flip in and
         // out of the aggregate on a non-UTC cluster)
         .filter(col("l_shipdate") <=
@@ -582,30 +627,41 @@ object SparkEntry {
                 col("l_discount").cast("decimal(12,2)"))))
             .cast("double").as("sum_disc_price"),
           count(lit(1)).as("count_order"))
-    }),
+    }, sql("""SELECT l_returnflag, l_linestatus,
+        | CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS sum_qty,
+        | CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))) AS DOUBLE) AS sum_base_price,
+        | CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2)) * (CAST(1 AS DECIMAL(12,2)) - CAST(l_discount AS DECIMAL(12,2)))) AS DOUBLE) AS sum_disc_price,
+        | COUNT(*) AS count_order
+        | FROM lineitem
+        | WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
+        | GROUP BY l_returnflag, l_linestatus""".stripMargin.replace("\n", " "))),
     // §2.7 U1 — union + distinct across branches
-    "q06_union_distinct" -> ((s, dir) => {
+    Entry("q06_union_distinct", (s, dir) => {
       t(s, dir, "customer").select(col("c_custkey").as("key"))
         .union(t(s, dir, "orders").select(col("o_custkey").as("key")))
         .distinct()
-    }),
+    }, sql("SELECT c_custkey AS key FROM customer UNION SELECT o_custkey AS key FROM orders")),
     // §2.6 O2 — order-by + limit (deterministic tiebreak)
-    "q07_sort_limit" -> ((s, dir) => {
+    Entry("q07_sort_limit", (s, dir) => {
       t(s, dir, "orders")
         .select(col("o_orderkey"), col("o_totalprice"))
         .orderBy(col("o_totalprice").desc, col("o_orderkey"))
         .limit(10)
-    }),
+    }, sql("""SELECT o_orderkey, o_totalprice FROM orders
+        | ORDER BY o_totalprice DESC, o_orderkey LIMIT 10"""
+        .stripMargin.replace("\n", " "))),
     // §2.6 O5 — keyset pagination: filter key > cursor, order, page
-    "q08_keyset_page" -> ((s, dir) => {
+    Entry("q08_keyset_page", (s, dir) => {
       t(s, dir, "orders")
         .filter(col("o_orderkey") > 1000)
         .orderBy(col("o_orderkey"))
         .limit(50)
         .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"))
-    }),
+    }, sql("""SELECT o_orderkey, o_custkey, o_orderstatus FROM orders
+        | WHERE o_orderkey > 1000 ORDER BY o_orderkey LIMIT 50"""
+        .stripMargin.replace("\n", " "))),
     // §2.3 — multi-way broadcast star join + grouped decimal agg
-    "q09_join_star" -> ((s, dir) => {
+    Entry("q09_join_star", (s, dir) => {
       val li = t(s, dir, "lineitem")
       val o = t(s, dir, "orders")
       val c = t(s, dir, "customer")
@@ -620,23 +676,34 @@ object SparkEntry {
                 col("l_discount").cast("decimal(12,2)"))))
             .cast("double").as("revenue"),
           count(lit(1)).as("n_items"))
-    }),
+    }, sql("""SELECT n_name,
+        | CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2)) * (CAST(1 AS DECIMAL(12,2)) - CAST(l_discount AS DECIMAL(12,2)))) AS DOUBLE) AS revenue,
+        | COUNT(*) AS n_items
+        | FROM lineitem
+        | JOIN orders   ON l_orderkey = o_orderkey
+        | JOIN customer ON o_custkey  = c_custkey
+        | JOIN nation   ON c_nationkey = n_nationkey
+        | GROUP BY n_name""".stripMargin.replace("\n", " "))),
     // §2.3 J1 — left-semi as EXISTS
-    "q10_semi_exists" -> ((s, dir) => {
+    Entry("q10_semi_exists", (s, dir) => {
       t(s, dir, "customer")
         .join(t(s, dir, "orders"),
           col("c_custkey") === col("o_custkey"), "left_semi")
         .select(col("c_custkey"), col("c_name"))
-    }),
+    }, sql("""SELECT c_custkey, c_name FROM customer
+        | WHERE c_custkey IN (SELECT o_custkey FROM orders)"""
+        .stripMargin.replace("\n", " "))),
     // §2.7 U3 — set difference via left_anti (queue-cleanup semantics)
-    "q11_anti_cleanup" -> ((s, dir) => {
+    Entry("q11_anti_cleanup", (s, dir) => {
       t(s, dir, "customer")
         .join(t(s, dir, "orders"),
           col("c_custkey") === col("o_custkey"), "left_anti")
         .select(col("c_custkey"), col("c_name"))
-    }),
+    }, sql("""SELECT c_custkey, c_name FROM customer
+        | WHERE c_custkey NOT IN (SELECT o_custkey FROM orders)"""
+        .stripMargin.replace("\n", " "))),
     // §2.4 A4 — job-stats fold shape over the events table
-    "q12_events_stats" -> ((s, dir) => {
+    Entry("q12_events_stats", (s, dir) => {
       t(s, dir, "events")
         .groupBy(col("event_type"))
         .agg(
@@ -644,23 +711,29 @@ object SparkEntry {
           sum(col("value").cast("decimal(12,2)"))
             .cast("double").as("sum_value"),
           countDistinct(col("user_id")).as("n_users"))
-    }),
+    }, sql("""SELECT event_type, COUNT(*) AS n_events,
+        | CAST(SUM(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS sum_value,
+        | COUNT(DISTINCT user_id) AS n_users
+        | FROM events GROUP BY event_type""".stripMargin.replace("\n", " "))),
     // §2.4 A6 — group events by key with deterministic reduction
-    "q13_events_by_user" -> ((s, dir) => {
+    Entry("q13_events_by_user", (s, dir) => {
       t(s, dir, "events")
         .groupBy(col("user_id"))
         .agg(count(lit(1)).as("n_events"),
           max(col("event_id")).as("max_event_id"))
-    }),
+    }, sql("""SELECT user_id, COUNT(*) AS n_events, MAX(event_id) AS max_event_id
+        | FROM events GROUP BY user_id""".stripMargin.replace("\n", " "))),
     // §2.8 F10 — JSON field extraction from a string column
-    "q14_json_extract" -> ((s, dir) => {
+    Entry("q14_json_extract", (s, dir) => {
       t(s, dir, "events")
         .groupBy(col("event_type"))
         .agg(sum(get_json_object(col("props"), "$.k").cast("bigint"))
           .cast("bigint").as("sum_k"))
-    }),
+    }, sql("""SELECT event_type,
+        | CAST(SUM(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k
+        | FROM events GROUP BY event_type""".stripMargin.replace("\n", " "))),
     // §2.5-analog — windowed top-k per group (rank with tiebreak)
-    "q15_window_rank" -> ((s, dir) => {
+    Entry("q15_window_rank", (s, dir) => {
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy(col("user_id"))
         .orderBy(col("value").desc, col("event_id"))
@@ -668,38 +741,46 @@ object SparkEntry {
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") <= 3)
         .select(col("user_id"), col("event_id"), col("rn"))
-    }),
+    }, sql("""SELECT user_id, event_id, rn FROM (
+        | SELECT user_id, event_id,
+        |  ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY value DESC, event_id) AS rn
+        | FROM events) WHERE rn <= 3""".stripMargin.replace("\n", " "))),
     // dedup §exact — hash-groupBy exact dedup over documents
-    "q16_dedup_exact" -> ((s, dir) => {
+    Entry("q16_dedup_exact", (s, dir) => {
       t(s, dir, "documents")
         .groupBy(md5(col("text")).as("h"))
         .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("copies"))
-    }),
+    }, sql("""SELECT md5(text) AS h, MIN(doc_id) AS keep_id, COUNT(*) AS copies
+        | FROM documents GROUP BY md5(text)""".stripMargin.replace("\n", " "))),
     // text analysis — portable char/token stats
-    "q17_text_stats" -> ((s, dir) => {
+    Entry("q17_text_stats", (s, dir) => {
       t(s, dir, "documents").select(
         col("doc_id"),
         length(col("text")).as("text_chars"),
         (length(col("text")) -
           length(regexp_replace(col("text"), " ", "")))
           .as("n_spaces"))
-    }),
+    }, sql("""SELECT doc_id, LENGTH(text) AS text_chars,
+        | LENGTH(text) - LENGTH(REPLACE(text, ' ', '')) AS n_spaces
+        | FROM documents""".stripMargin.replace("\n", " "))),
     // §2.3 — duplicate-row preservation: the Find predicate is a single
     // scan (WHERE a OR b), so genuinely duplicate source rows are KEPT
-    // (VERDICT r1 "What's wrong" #1 regression guard)
-    "q18_find_dup" -> ((s, dir) => {
+    Entry("q18_find_dup", (s, dir) => {
       val base = t(s, dir, "customer")
       val groups = customerGroups(s, dir, simpleQueue,
         Seq("c_custkey", "c_name"))
       Finder.matchedRows(s, base.union(base), groups)
-    }),
+    }, sql("""SELECT c_custkey, c_name, c_nationkey, c_acctbal, c_mktsegment
+        | FROM (SELECT * FROM customer UNION ALL SELECT * FROM customer)
+        | WHERE CAST(c_custkey AS VARCHAR) IN ('7','23','99')
+        |    OR c_name IN ('7','23','99')""".stripMargin.replace("\n", " "))),
     // §2.8 F9 — decimal identifier columns with scale coercion of match
     // ids ('2547.4' → 2547.40; reference parquet_handler.py:102-130). The
     // decimal coercion under test stays in the PREDICATE; the output
     // projects the decimal column as DOUBLE so both engines render the
-    // value identically (r2 driver hash mismatched on decimal rendering —
-    // VERDICT r2 "What's wrong" #1; q05/q09 use the same convention).
-    "q19_find_decimal" -> ((s, dir) => {
+    // value identically (the driver hash does not match on decimal
+    // rendering; q05/q09 use the same convention).
+    Entry("q19_find_decimal", (s, dir) => {
       import graft.catalog.TableDef
       val df = t(s, dir, "customer").select(col("c_custkey"),
         col("c_acctbal").cast("decimal(12,2)").as("c_acctbal_dec"))
@@ -712,13 +793,18 @@ object SparkEntry {
       Finder.matchedRows(s, df, Finder.plan(mapper, table, queue))
         .select(col("c_custkey"),
           col("c_acctbal_dec").cast("double").as("c_acctbal_dbl"))
-    }),
+    }, sql("""SELECT c_custkey,
+        | CAST(CAST(c_acctbal AS DECIMAL(12,2)) AS DOUBLE) AS c_acctbal_dbl
+        | FROM customer
+        | WHERE CAST(c_acctbal AS DECIMAL(12,2)) IN
+        |  (CAST('1863.84' AS DECIMAL(12,2)), CAST('2547.4' AS DECIMAL(12,2)),
+        |   CAST('9234.22' AS DECIMAL(12,2)))""".stripMargin.replace("\n", " "))),
     // §2.9 T2/T3 — event-sourced job fold: status transition map with
     // terminal lock + stats sums (status_updater.py:19-104,
     // stats_updater.py:27-72), run distributed via graft.jobs.Jobs.report
     // over a synthetic job log derived deterministically from the events
     // table (event_id is the total-order sk).
-    "q20_jobs_fold" -> ((s, dir) => {
+    Entry("q20_jobs_fold", (s, dir) => {
       import graft.jobs.Jobs
       val ev = t(s, dir, "events").select(
         col("user_id").cast("string").as("jobId"),
@@ -738,1904 +824,7 @@ object SparkEntry {
         col("total_query_succeeded_count").as("n_query_succeeded"),
         col("total_object_updated_count").as("n_object_updated"),
         col("total_object_update_failed_count").as("n_object_failed"))
-    }),
-    // §2.2 P6 — partition pruning: Find over a Hive-partitioned copy of
-    // customer with a partition-literal scope; Catalyst prunes the scan to
-    // the two named segment directories (the reference's per-partition
-    // query literals, execute_query.py:97-103). Plan assertion lives in
-    // PartitionPruneSpec.
-    "q21_partition_prune" -> ((s, dir) => {
-      import graft.catalog.{Catalog, Staging, TableDef}
-      val loc = Staging.partitionedCustomer(s, dir)
-      // The CATALOG owns the schema (the reference reads it from Glue,
-      // never from data-file inference — generate_queries.py:264-265)
-      // — so read the staged layout with the source table's schema.
-      // Schema inference dies on a pruned-to-empty partitioned table
-      // (zero data files to infer from, ★r18 empty-corpus sweep);
-      // a catalog-declared schema reads it as zero rows, correctly.
-      val declared = t(s, dir, "customer").schema
-      val data = s.read.schema(declared).parquet(loc)
-      val table = TableDef("customer_part", loc, DataFormat.Parquet,
-        data.schema, partitionKeys = Seq("c_mktsegment"))
-      val mapper = DataMapper("cp", "customer_part", Seq("c_custkey"),
-        partitionFilter =
-          Map("c_mktsegment" -> Seq("FURNITURE", "MACHINERY")))
-      Catalog.validateMapper(mapper, table)
-      val groups = Finder.plan(mapper, table, simpleQueue)
-      Finder.matchedRows(s, Finder.scoped(data, mapper), groups)
-        .select(col("c_custkey"), col("c_name"), col("c_nationkey"),
-          col("c_acctbal"), col("c_mktsegment"))
-    }),
-    // LLM §similarity — exact cosine top-10 per query vector: one scan of
-    // the data side against a BROADCAST query set (no data×data cartesian)
-    "q22_ann_brute" -> ((s, dir) => {
-      import graft.llm.Similarity
-      val emb = t(s, dir, "embeddings")
-      Similarity.bruteForceTopK(emb, emb.filter(col("vec_id") < 5),
-        "vec_id", "embedding", 10)
-    }),
-    // LLM §similarity — LSH-bucketed ANN with exact re-scoring. bits=2 /
-    // tables=32 is recall-tuned for the near-uniform synthetic vectors
-    // (neighbor cosine ~0.3); clustered real embeddings would use more
-    // bits for pruning at the same recall. Verified exact-equal to the
-    // brute-force oracle at sf0.01.
-    "q23_ann_lsh" -> ((s, dir) => {
-      import graft.llm.RandomHyperplaneLsh
-      val emb = t(s, dir, "embeddings")
-      RandomHyperplaneLsh(dim = 64, bits = 2, tables = 32)
-        .topK(emb, emb.filter(col("vec_id") < 5), "vec_id", "embedding", 10)
-    }),
-    // LLM §near-dedup — MinHash-LSH banding over 8-char shingles with
-    // exact Jaccard verification; the oracle computes exact all-pairs
-    // shingle Jaccard, so the hash-match also proves the banding found
-    // every >=0.6 pair (recall 1.0 on this data; 16 bands x 4 rows).
-    "q24_near_dedup" -> ((s, dir) => {
-      import graft.llm.Dedup
-      Dedup.nearDuplicates(t(s, dir, "documents"), "doc_id", "text",
-        shingleLen = 8, bands = 16, rows = 4, threshold = 0.6)
-        .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"),
-          col("jaccard"))
-    }),
-    // LLM §text-analysis — token counting, lexical quality scoring,
-    // marker-word language ID, content fingerprint: one codegen'd
-    // projection, no shuffle (graft.llm.TextStats)
-    "q25_text_quality" -> ((s, dir) => {
-      import graft.llm.TextStats._
-      val txt = col("text")
-      t(s, dir, "documents").select(
-        col("doc_id"),
-        tokenCount(txt).as("n_tokens"),
-        subwordCount(txt).as("n_subwords"),
-        distinctTokenRatio(txt).as("distinct_ratio"),
-        stopwordRatio(txt).as("stopword_ratio"),
-        qualityScore(txt).as("quality"),
-        languageId(txt).as("lang_guess"),
-        fingerprint(txt).as("fingerprint"))
-    }),
-    // LLM §text-analysis — the corpus REPORT: per-language doc counts,
-    // token/subword volumes and quality extrema in one map-side
-    // projection + one shuffle (the pre-training "what's in this
-    // corpus" summary). Only exact aggregates: long sums and
-    // min/max over the identical per-row doubles q25 hash-verifies —
-    // no float mean whose summation order differs across engines.
-    "q36_corpus_stats" -> ((s, dir) => {
-      import graft.llm.TextStats._
-      val txt = col("text")
-      t(s, dir, "documents")
-        .select(languageId(txt).as("lang_guess"),
-          tokenCount(txt).as("_tc"),
-          subwordCount(txt).as("_sw"),
-          qualityScore(txt).as("_q"))
-        .groupBy(col("lang_guess"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("_tc").cast("long")).as("total_tokens"),
-          sum(col("_sw").cast("long")).as("total_subwords"),
-          min(col("_q")).as("min_quality"),
-          max(col("_q")).as("max_quality"))
-    }),
-    // LLM §multimodal — binary payload plumbing: metadata struct + frame
-    // sampling over byte windows (decode kernels are deterministic stubs;
-    // the schema/partition/explode shape is the real contract)
-    "q26_multimodal_frames" -> ((s, dir) => {
-      import graft.llm.Multimodal
-      val media = Multimodal.withPayload(
-        t(s, dir, "documents"), "doc_id", "text")
-      Multimodal.sampleFrames(media, frameBytes = 64)
-        .groupBy(col("id").as("doc_id"))
-        .agg(max(col("meta.n_bytes")).as("n_bytes"),
-          count(lit(1)).as("n_frames"),
-          sum(length(col("frame"))).as("frame_bytes"))
-    }),
-    // §2.1 S2 — JSON-lines scan with DECLARED schema (no inference pass)
-    // + Find over the row format: matches fan across both identifier
-    // columns; the staged file is deterministic per sf dir. The schema
-    // is declared CATALOG-STYLE from Glue-type DDL strings
-    // (Catalog.tableFromDdl) — no parquet footer borrowed, exactly how
-    // the reference registers a JSON table from its Glue entry.
-    "q27_json_scan" -> ((s, dir) => {
-      import graft.catalog.{Catalog, Staging}
-      val file = Staging.jsonCustomer(s, dir)
-      val table = Catalog.tableFromDdl("customer_json", file,
-        DataFormat.JsonLines,
-        Seq("c_custkey" -> "bigint", "c_name" -> "string",
-          "c_nationkey" -> "int", "c_acctbal" -> "double",
-          "c_mktsegment" -> "string"))
-      val data = s.read.schema(table.schema).json(file)
-      val mapper = DataMapper("cj", "customer_json",
-        Seq("c_custkey", "c_nationkey"), format = DataFormat.JsonLines)
-      val groups = Finder.plan(mapper, table, simpleQueue)
-      Finder.matchedRows(s, data, groups)
-        .select(col("c_custkey"), col("c_name"), col("c_nationkey"),
-          col("c_acctbal").cast("double").as("c_acctbal_dbl"),
-          col("c_mktsegment"))
-    }),
-    // LLM §near-dedup (embedding) — cosine near-pairs via LSH buckets +
-    // exact re-score. Bit width is AUTO-TUNED from the corpus size
-    // (bits ≈ log2(n/64)), so candidate volume stays ~tables·n·64/2 —
-    // linear in n — instead of degenerating to all-pairs at a fixed low
-    // bit width. Recall on the near-uniform synthetic vectors (every
-    // oracle pair within 0.11 of the 0.4 threshold — the hardest LSH
-    // regime) is verified exact at the sf0.01 gate; at larger SFs the
-    // pruning is real and any capped hot bucket is audited (Banding).
-    "q28_cos_pairs" -> ((s, dir) => {
-      import graft.llm.RandomHyperplaneLsh
-      val emb = t(s, dir, "embeddings")
-      // corpus size for the bit width comes from the parquet FOOTERS
-      // (driver-side metadata, no job) — an emb.count() here paid a
-      // full scan stage per invocation just to size a knob
-      val n = graft.tools.ParquetStats.rowCount(
-        new org.apache.hadoop.conf.Configuration(),
-        s"$dir/embeddings.parquet")
-      RandomHyperplaneLsh.auto(dim = 64, n = n,
-          targetBucket = 64, tables = 16)
-        .nearPairs(emb, "vec_id", "embedding", threshold = 0.4)
-        .select(col("id_a"), col("id_b"), col("cosine"))
-    }),
-    // LLM §decontamination (embeddings) — cross-corpus cosine
-    // near-JOIN: the embedding-level contamination screen. Same
-    // hyperplane signatures as q28; candidates pair the train slice's
-    // buckets against the benchmark slice's only, then re-score
-    // exactly. Recall at this (bits, tables) is verified exact against
-    // the all-pairs oracle at the sf0.01 gate, like q28.
-    "q35_emb_decontaminate" -> ((s, dir) => {
-      import graft.llm.RandomHyperplaneLsh
-      val emb = t(s, dir, "embeddings")
-      val n = graft.tools.ParquetStats.rowCount(
-        new org.apache.hadoop.conf.Configuration(),
-        s"$dir/embeddings.parquet")
-      RandomHyperplaneLsh.auto(dim = 64, n = n,
-          targetBucket = 64, tables = 16)
-        .nearJoin(emb.filter(col("vec_id") % 5 =!= 0),
-          emb.filter(col("vec_id") % 5 === 0),
-          "vec_id", "embedding", threshold = 0.4)
-        .select(col("id_a").as("train_id"), col("id_b").as("bench_id"),
-          col("cosine"))
-    }),
-    // LLM §near-dedup — EXACT n-gram Jaccard pairs via the
-    // prefix-filtered set-similarity join (AllPairs + PPJoin positional
-    // filter): no hashing, recall 1 by construction; prefix, length,
-    // and positional filters keep the inverted-index self-join bounded.
-    // threshold=0.8 matches the corpus: every true near-dup pair here
-    // has J >= 0.8 (verified against the all-pairs oracle at 0.5-0.9
-    // and shingle lengths 8-16 — identical pair sets). shingleLen=16:
-    // 8-char windows over these small-vocabulary texts yield only ~13k
-    // distinct shingles with document frequencies in the hundreds,
-    // which starves ANY exact prefix scheme of rare shingles; 16-char
-    // windows restore a discriminative vocabulary, and the filters'
-    // pruning power also scales with t.
-    "q29_jaccard_exact" -> ((s, dir) =>
-      docPairs(s, dir)
-        .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"),
-          col("jaccard"))),
-    // LLM §decontamination — EXACT cross-corpus Jaccard JOIN: the
-    // train/test contamination screen. The 1-in-5 doc_id slice plays
-    // the benchmark corpus; the rest is the training corpus. Same
-    // AllPairs/PPJoin machinery as q29 (shared census over both sides),
-    // but candidates pair LEFT prefixes against RIGHT prefixes only —
-    // within-corpus pairs are never enumerated, the dominant saving
-    // when the train side dwarfs the benchmark side.
-    "q34_decontaminate" -> ((s, dir) => {
-      import graft.llm.Dedup
-      val docs = t(s, dir, "documents")
-      Dedup.jaccardJoinExact(
-        docs.filter(col("doc_id") % 5 =!= 0),
-        docs.filter(col("doc_id") % 5 === 0),
-        "doc_id", "text", shingleLen = 16, threshold = 0.8)
-        .select(col("id_a").as("train_id"), col("id_b").as("bench_id"),
-          col("jaccard"))
-    }),
-    // LLM §similarity — IVF coarse-quantizer ANN: data assigned once to
-    // nlist sampled-centroid lists, each query probes its nprobe nearest
-    // lists only. nprobe=14/16 and the centroid-sample seed are
-    // recall-tuned for the near-uniform synthetic vectors (verified
-    // exact-equal to the brute oracle at sf0.01, with margin: exact at
-    // nprobe=13 too); clustered real embeddings concentrate neighbors in
-    // few lists and probe far fewer.
-    "q30_ann_ivf" -> ((s, dir) => {
-      import graft.llm.Similarity
-      val emb = t(s, dir, "embeddings")
-      Similarity.ivfTopK(emb, emb.filter(col("vec_id") < 5),
-        "vec_id", "embedding", 10, nlist = 16, nprobe = 14, sampleSeed = 6)
-    }),
-    // LLM §dedup — transitive duplicate CLUSTERS over the exact-Jaccard
-    // pairs: connected components via alternating large-star/small-star
-    // (O(log n) rounds — never diameter-many), cluster label = min
-    // doc_id of the component. The oracle recomputes the same pairs in
-    // SQL and closes them transitively with a recursive CTE.
-    "q31_dedup_clusters" -> ((s, dir) =>
-      docClusters(s, dir)
-        .select(col("id_a").as("doc_id"), col("cluster_id"))),
-    // LLM §dedup — the duplication PROFILE (the audit artifact a dedup
-    // run reports): cluster-size histogram over the q31 components —
-    // (size, how many clusters, how many docs they hold). Two hash
-    // aggregations with map-side partials; reads the stored cluster
-    // artifact.
-    "q65_dup_profile" -> ((s, dir) =>
-      clusterArtifact(s, dir)
-        .groupBy(col("cluster_id"))
-        .agg(count(lit(1)).as("cluster_size"))
-        .groupBy(col("cluster_size"))
-        .agg(count(lit(1)).as("n_clusters"))
-        .select(col("cluster_size"), col("n_clusters"),
-          (col("cluster_size") * col("n_clusters")).as("n_docs"))),
-    // LLM §sampling — deterministic md5-keyed subsample: map-only,
-    // shuffle-free, reproducible across engines/runs/partitionings
-    // (rand(seed) is none of those); the oracle states the identical
-    // predicate
-    "q32_det_sample" -> ((s, dir) => {
-      import graft.llm.Sampling
-      Sampling.deterministicSample(t(s, dir, "documents"), "doc_id", 0.25)
-        .select(col("doc_id"), length(col("text")).as("text_chars"))
-    }),
-    // LLM §text — corpus vocabulary top-k by token frequency, ties by
-    // token: partial per-partition top-k via TakeOrderedAndProject, no
-    // global sort of the vocabulary
-    "q33_vocab_topk" -> ((s, dir) => {
-      import graft.llm.TextStats
-      TextStats.topTokens(t(s, dir, "documents"), "text", 100)
-    }),
-    // LLM §packing — concat-and-chunk the corpus into 256-token
-    // training sequences: distributed prefix sum (range repartition +
-    // per-partition scan + broadcast bases — NO single-partition
-    // window), then map-side explode of each doc's overlapped sequence
-    // range. Output is the exact pack manifest.
-    "q37_seq_pack" -> ((s, dir) => {
-      import graft.llm.{Packing, TextStats}
-      Packing.packSequences(t(s, dir, "documents"), "doc_id",
-        TextStats.tokenCount(col("text")), seqLen = 256)
-    }),
-    // LLM §chunking — overlapping 96-char windows every 64 chars (the
-    // retrieval-index shape): length arithmetic + explode + substring,
-    // codegen'd and shuffle-free
-    "q38_chunking" -> ((s, dir) => {
-      import graft.llm.Packing
-      Packing.chunk(t(s, dir, "documents"), "doc_id", "text",
-        width = 96, stride = 64)
-    }),
-    // §events — 30-minute-gap sessionization: every window is
-    // PARTITIONED BY user_id (lag → gap flag → per-user running sum),
-    // so the scan shuffles once on the key and sessions build in
-    // parallel across users — no global window, the shape that holds
-    // when one table has a billion users. Ties broken by event_id and
-    // an explicit ROWS frame: identical rows on both engines.
-    // Timestamps are truncated to MICROSECONDS up front: the events
-    // parquet stores TIMESTAMP(NANOS) and DuckDB 1.0 reads that column
-    // at micro precision, so sessioning over raw nanos would disagree
-    // with the oracle in the last three digits on ~every row. Both
-    // engines therefore session over identical micro-truncated values
-    // (a <1 µs delta never flips a 30-minute gap in practice).
-    "q39_sessionize" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val byUser = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts"), col("event_id"))
-      val gapNs = 30L * 60 * 1000000000L
-      t(s, dir, "events")
-        .withColumn("ts", col("ts") - col("ts") % 1000L)
-        .withColumn("_prev", lag(col("ts"), 1).over(byUser))
-        .withColumn("_new",
-          when(col("_prev").isNull || col("ts") - col("_prev") > gapNs, 1L)
-            .otherwise(0L))
-        .withColumn("session_id", sum(col("_new")).over(
-          byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-        .groupBy(col("user_id"), col("session_id"))
-        .agg(count(lit(1)).as("n_events"),
-          min(col("ts")).as("start_ns"),
-          max(col("ts")).as("end_ns"))
-    }),
-    // §streaming — the [[graft.streaming.Sessionize]] operator's BATCH
-    // path (the q39 window shape re-expressed as the streaming
-    // operator's differential oracle), gated here on the same events
-    // table in epoch-millis units. The raw int64 nanos convert to a
-    // micros timestamp up front (ns div 1000 — exactly the precision
-    // DuckDB reads this NANOS parquet column at), and the operator
-    // emits millisecond extents: both engines truncate identically.
-    "q40_sessions_ms" -> ((s, dir) => {
-      import graft.streaming.Sessionize
-      Sessionize.sessions(
-        t(s, dir, "events")
-          .withColumn("ts", timestamp_micros(expr("ts div 1000"))),
-        "user_id", "ts", gapMs = 30L * 60 * 1000, "10 minutes")
-    }),
-    // LLM §quality — common-word ratio (Gopher-style cheap filter
-    // signal): per doc, the fraction of tokens inside the corpus
-    // top-100 vocabulary. Pass 1 is the q33 vocabulary cut
-    // (TakeOrderedAndProject); pass 2 is a pure map against the
-    // 100-entry literal vocab — the exploded tokens NEVER shuffle
-    // (plan-asserted in SamplingSpec).
-    "q41_common_ratio" -> ((s, dir) => {
-      import graft.llm.TextStats
-      TextStats.commonWordRatio(t(s, dir, "documents"),
-        "doc_id", "text", 100)
-    }),
-    // LLM §compliance — PII audit: the Find phase extended to
-    // unstructured text (per-doc detector counts; the same regexes run
-    // verbatim in the DuckDB oracle — the SQL is BUILT from
-    // PiiScrub.Detectors, so engine parity is by construction). One
-    // codegen'd projection, no shuffle (PiiScrubSpec).
-    "q42_pii_audit" -> ((s, dir) => {
-      import graft.llm.PiiScrub
-      val counts = t(s, dir, "documents")
-        .select(col("doc_id") +: PiiScrub.countColumns(col("text")): _*)
-      val total = PiiScrub.Detectors
-        .map { case (k, _, _) => col(s"n_$k") }.reduce(_ + _)
-      counts.withColumn("n_pii", total)
-    }),
-    // LLM §embeddings — ANN over the QUANTIZED shard (q45's output
-    // ranked without dequantizing): the per-vector scales cancel in
-    // the cosine, so scoring is exact integer dots/norms — the same
-    // broadcast + two-phase-rank plan as q22 with none of q22's
-    // float-summation sensitivity.
-    "q47_ann_int8" -> ((s, dir) => {
-      import graft.llm.Similarity
-      val emb = t(s, dir, "embeddings")
-      Similarity.quantizedTopK(emb, emb.filter(col("vec_id") < 5),
-        "vec_id", "embedding", k = 10)
-        .select(col("q_id"), col("vec_id"), col("rank"))
-    }),
-    // LLM §decontamination — the SimHash fingerprint screen, oracle-
-    // gated: same train/bench split as q34, pairs within Hamming<=3 of
-    // the 64-bit majority-vote fingerprint. The per-token hash is MD5
-    // precisely so the DuckDB oracle replays the ENTIRE pipeline
-    // (tokenize -> per-bit majority -> Hamming) in plain SQL from the
-    // same constants (Dedup.SimhashTokenRe, seed, nibble bit order) —
-    // the q42 parity-by-construction trick applied to a hash. The
-    // banding is the scale path (left×right buckets only); the oracle
-    // is the brute-force definition, so the gate also proves the
-    // pigeonhole banding loses no pair.
-    "q48_simhash_join" -> ((s, dir) => {
-      import graft.llm.Dedup
-      val docs = t(s, dir, "documents")
-      Dedup.simhashNearJoin(
-        docs.filter(col("doc_id") % 5 =!= 0),
-        docs.filter(col("doc_id") % 5 === 0),
-        "doc_id", "text", maxDistance = 3)
-        .select(col("id_a").as("train_id"), col("id_b").as("bench_id"),
-          col("hamming"))
-    }),
-    // LLM §text-analysis — the quality-filter DECISION stage
-    // (Gopher/C4 shape): keep/drop per doc with one auditable flag per
-    // rule, thresholds compared as integer cross-products (no float
-    // anywhere) — one codegen'd map-side projection.
-    "q49_quality_filter" -> ((s, dir) => {
-      import graft.llm.TextStats
-      TextStats.qualityFilter(t(s, dir, "documents"), "doc_id", "text")
-    }),
-    // LLM §similarity — recall@k of the QUANTIZED ranking (q47) vs the
-    // exact full-precision ranking (q22): the measurement every ANN
-    // tuning loop turns on, here also quantifying what int8
-    // compression costs in retrieval quality. Both rankings are
-    // SQL-replayable, so the metric itself is oracle-gated.
-    "q50_ann_recall" -> ((s, dir) => {
-      import graft.llm.{Similarity, SimilarityEval}
-      val emb = t(s, dir, "embeddings")
-      val queries = emb.filter(col("vec_id") < 5)
-      SimilarityEval.recallAtK(
-        Similarity.quantizedTopK(emb, queries, "vec_id", "embedding", 10),
-        Similarity.bruteForceTopK(emb, queries, "vec_id", "embedding", 10),
-        "vec_id", 10)
-    }),
-    // LLM §similarity — recall-driven IVF auto-tuning (the production
-    // re-probe loop as an operator): nprobe doubles until measured
-    // recall@k on the probe sample reaches the target. At target 1.0
-    // with the full query set as sample, the tuned output provably
-    // EQUALS the exact ranking (candidates re-score by exact cosine,
-    // same id tie-break) — which is what lets an adaptive-approximate
-    // operator be hash-gated against the exact SQL oracle.
-    "q56_ann_autotune" -> ((s, dir) => {
-      import graft.llm.Similarity
-      val emb = t(s, dir, "embeddings")
-      val queries = emb.filter(col("vec_id") < 5)
-      Similarity.ivfTopKAutoTuned(emb, queries, "vec_id", "embedding",
-        10, nlist = 16, targetRecall = 1.0, initialNprobe = 2)._1
-    }),
-    // LLM §clustering — deterministic Lloyd k-means over the embedding
-    // column (the coarse-structure pass behind semantic dedup and
-    // mixture balancing): seeded-sample init, codegen'd cosine argmax
-    // assignment, EXACT-decimal mean updates (order-independent, so
-    // centroids are identical for any partitioning). The oracle
-    // replays the final assignment from the learned centroid literals
-    // (dynamicOracleSql — the q54 parity-by-construction move).
-    "q57_kmeans" -> ((s, dir) => {
-      import graft.llm.Clustering
-      Clustering.assignClusters(t(s, dir, "embeddings"), "vec_id",
-        "embedding", kmeansCentroids(s, dir))
-    }),
-    // LLM §dedup — SemDeDup-style semantic dedup (Abbas et al. 2023):
-    // within each k-means cluster drop every row with a lower-id
-    // member at cosine >= tau; pairs never leave a cluster. tau=0.42
-    // is corpus-tuned to the near-uniform synthetic vectors (max pair
-    // cosine 0.51 — real embedding corpora sit at 0.9+); the full
-    // pipeline (clustering + in-cluster dominance) replays in SQL
-    // from the centroid literals.
-    "q58_semantic_dedup" -> ((s, dir) => {
-      import graft.llm.Clustering
-      // learned centroids as init + iters=0 ≡ the full k=8/iters=4 fit
-      // (learning is deterministic); under the gate flag the fit runs
-      // once for q57/q58/q61 + the dynamic oracles
-      Clustering.semanticDedup(t(s, dir, "embeddings"), "vec_id",
-        "embedding", k = 8, iters = 0, tau = 0.42,
-        init = kmeansCentroidsCached(s, dir))
-    }),
-    // LLM §text-analysis — distinctive-keyword extraction: tf-idf's
-    // ranking with NO floats (tf desc, corpus doc-freq asc, token asc
-    // — integer lexicographic, bit-identical in any engine); per-doc
-    // top-3 via the two-phase rankTopK pattern, no per-doc window.
-    "q59_keywords" -> ((s, dir) => {
-      import graft.llm.TextStats
-      TextStats.keywords(t(s, dir, "documents"), "doc_id", "text", k = 3)
-    }),
-    // LLM §sampling — per-stratum CAP sampling (the mixture builder's
-    // "exactly n docs per domain"): deterministic md5 order, two-phase
-    // per-partition cap + merge — a hot stratum never serializes
-    // through one task the way ROW_NUMBER OVER (PARTITION BY) would.
-    "q60_cap_sample" -> ((s, dir) => {
-      import graft.llm.Sampling
-      Sampling.capSample(t(s, dir, "documents"), "doc_id", "lang",
-        n = 10)
-    }),
-    // LLM §packing — length-grouped batching (the padding minimizer):
-    // docs sorted by (token count, id), cut into 32-doc batches —
-    // global rank via the q37 prefix-sum machinery over a packed
-    // (len<<40)|id key, one range shuffle, no global window.
-    "q64_length_batches" -> ((s, dir) => {
-      import graft.llm.{Packing, TextStats}
-      Packing.lengthGroupedBatches(t(s, dir, "documents"), "doc_id",
-        TextStats.tokenCount(col("text")), batchSize = 32)
-        .orderBy("doc_id")
-    }),
-    // LLM §fingerprinting — winnowing (MOSS) fingerprints: per-window
-    // min gram hash, the guaranteed-coverage sparse fingerprint set
-    // (any ≥ w+k-1-token shared run shares a fingerprint) at ~2/(w+1)
-    // storage; entirely map-side/codegen'd, shuffle-free.
-    "q62_winnow" -> ((s, dir) => {
-      import graft.llm.TextStats
-      TextStats.winnow(t(s, dir, "documents"), "doc_id", "text",
-        k = 4, w = 4)
-    }),
-    // LLM §decontamination — the winnowed overlap screen: q43's
-    // contamination join over the SPARSE fingerprint set (~2/(w+1) of
-    // the windows ever shuffle), with the coverage guarantee that any
-    // ≥ w+k-1-token shared run still collides. Same 1-in-5 bench
-    // split as q34/q43.
-    "q63_winnow_overlap" -> ((s, dir) => {
-      import graft.llm.TextStats
-      val docs = t(s, dir, "documents")
-      TextStats.winnowOverlapJoin(
-        docs.filter(col("doc_id") % 5 =!= 0),
-        docs.filter(col("doc_id") % 5 === 0),
-        "doc_id", "text", k = 4, w = 4, minShared = 2)
-        .select(col("id_l").as("train_id"), col("id_r").as("bench_id"),
-          col("n_shared"))
-    }),
-    // LLM §mixing — the lang × embedding-cluster mixture matrix (the
-    // table a data-mixture rebalancer reads): q57's deterministic
-    // clusters joined onto documents (doc_id = vec_id on the shared
-    // synthetic keyspace), counted per cell. Oracle replays the
-    // clustering from centroid literals + the same join/group.
-    "q61_mixture_matrix" -> ((s, dir) => {
-      import graft.llm.Clustering
-      val assigned = Clustering.assignClusters(t(s, dir, "embeddings"),
-        "vec_id", "embedding", kmeansCentroidsCached(s, dir))
-      t(s, dir, "documents")
-        .join(assigned.withColumnRenamed("vec_id", "doc_id"), "doc_id")
-        .groupBy(col("lang"), col("cluster_id"))
-        .agg(count(lit(1)).as("n_docs"))
-    }),
-    // LLM §retrieval — inverted-index build (posting lists): sorted
-    // distinct doc lists per token inside a [5, 400] df window (the
-    // two knobs that bound every posting list); deterministic
-    // postings for any partitioning; stopword-scale lists never
-    // enter an aggregation buffer (df filter BEFORE collect). The
-    // gate row stringifies the sorted list (the comparator can't
-    // sort array cells); the operator API keeps the typed array.
-    "q72_inverted_index" -> ((s, dir) => {
-      import graft.llm.TextStats
-      TextStats.invertedIndex(t(s, dir, "documents"), "doc_id", "text",
-          minDf = 5, maxDf = 400)
-        .select(col("token"), col("df"),
-          concat_ws(",", transform(col("postings"), _.cast("string")))
-            .as("postings"))
-    }),
-    // LLM §retrieval + §forget — FORGET-AWARE index maintenance: the
-    // maintainable index (q72's build + the streaming overflow
-    // contract: exact df always, NULL postings past maxDf) has a
-    // forget batch (doc_id % 7 == 0) applied INCREMENTALLY — touched
-    // tokens update via array_except, overflow tokens that CROSS into
-    // the window ("batch", df 402 → 341 at sf0.01) rebuild via one
-    // targeted remaining-corpus pass — and the oracle builds the
-    // index on the remaining corpus FROM SCRATCH: the hash match IS
-    // the maintained ≡ rebuilt proof under driver conditions.
-    "q99_index_forget" -> ((s, dir) => {
-      import graft.llm.IndexMaintain
-      val docs = t(s, dir, "documents")
-      // the maintained index is MATERIALIZED before the maintenance
-      // pass (★r21): production maintenance reads the STORED index
-      // artifact, and the maintenance operators consume their index
-      // argument several times (untouched/touched/crossing legs) — a
-      // lazy build subtree re-derives the whole corpus aggregation
-      // per leg (the q119 plan carried 38 corpus scans), where the
-      // stored shape scans the materialized rows. Same rows either
-      // way; the build itself stays priced (it executes into the
-      // checkpoint inside the timed body).
-      val idx = IndexMaintain.indexWithOverflow(docs, "doc_id", "text",
-        minDf = 5, maxDf = 400).localCheckpoint(true)
-      IndexMaintain.forgetFromIndex(idx,
-          docs.filter(col("doc_id") % 7 === 0),
-          docs.filter(col("doc_id") % 7 =!= 0),
-          "doc_id", "text", minDf = 5, maxDf = 400)
-        .select(col("token"), col("df"),
-          when(col("postings").isNull, lit("<overflow>"))
-            .otherwise(concat_ws(",",
-              transform(col("postings"), _.cast("string"))))
-            .as("postings"))
-    }),
-    // LLM §dedup — ONE-COPY span dedup (Lee 2022's "remove all but
-    // one occurrence of duplicated training text" — the REMOVAL the
-    // q95 coverage audit measures, with a copy kept, unlike q55's
-    // strip-everywhere boilerplate cut): canonical first occurrence
-    // per duplicated 16-char shingle survives (min(struct) pick — no
-    // per-gram window ever sorts a hot shingle's occurrence list),
-    // other occurrences' chars excised via per-DOC interval merge +
-    // one aggregate fold rebuild. Whole pipeline integer/string
-    // exact → full SQL replay.
-    "q102_span_dedup" -> ((s, dir) =>
-      graft.llm.Dedup.dedupSpansKeepFirstFromCensus(
-        t(s, dir, "documents"), spanCensusArtifact(s, dir),
-        "doc_id", "text", shingleLen = 16)),
-    // LLM §dedup — the duplicated-span CENSUS itself (★r15): the one
-    // char-scale aggregation of the span family, priced here and
-    // WRITTEN once; q95/q102 read the stored, vocabulary-scale frame
-    // (duplication is rare relative to corpus chars). Canonical pick
-    // is min(struct) with map-side partials — no per-gram window.
-    "q129_span_census" -> ((s, dir) =>
-      graft.llm.Dedup.spanCensus(t(s, dir, "documents"),
-        "doc_id", "text", shingleLen = 16)),
-    // LLM §retrieval + §forget — POSITIONAL-index maintenance (q99's
-    // move on the q85 structure): per-doc position rows of forgotten
-    // docs drop via one anti-join, surviving rows of touched tokens
-    // decrement their df, and overflow MARKER rows (the variant's one
-    // extra row per excluded token — what makes deletion detectable)
-    // cross back into the window via the targeted rebuild. Oracle =
-    // from-scratch build on the remaining corpus.
-    "q101_positional_forget" -> ((s, dir) => {
-      import graft.llm.IndexMaintain
-      val docs = t(s, dir, "documents")
-      // NOT materialized (★r21): unlike its q119 insert sibling, the
-      // full-corpus positional build here measured FASTER lazy (A/B
-      // 1.53 → 3.18 s with a localCheckpoint) — the forget path's
-      // index references prune columns the checkpoint would pin rows
-      // for; left alone on measurement.
-      val idx = IndexMaintain.positionalIndexWithOverflow(docs,
-        "doc_id", "text", minDf = 5, maxDf = 400)
-      IndexMaintain.forgetFromPositionalIndex(idx,
-          docs.filter(col("doc_id") % 7 === 0),
-          docs.filter(col("doc_id") % 7 =!= 0),
-          "doc_id", "text", minDf = 5, maxDf = 400)
-        .select(col("token"), col("df"),
-          coalesce(col("doc_id"), lit(-1L)).as("doc_id"),
-          when(col("positions").isNull, lit("<overflow>"))
-            .otherwise(concat_ws(",",
-              transform(col("positions"), _.cast("string"))))
-            .as("positions"))
-    }),
-    // LLM §sketch + §forget — CMS maintenance under deletion: the
-    // counters are LINEAR in (token, freq), so the forget batch's own
-    // sketch SUBTRACTS register-wise (one pass over the batch, the
-    // surviving corpus untouched). The oracle builds the sketch on
-    // the remaining corpus from scratch — the hash match proves
-    // subtracted ≡ rebuilt, register for register.
-    "q100_cms_forget" -> ((s, dir) => {
-      import graft.llm.Sketch
-      val docs = t(s, dir, "documents")
-      Sketch.cmsSubtract(
-        Sketch.countMinCounters(docs, "text", depth = 4, width = 1024),
-        Sketch.countMinCounters(docs.filter(col("doc_id") % 7 === 0),
-          "text", depth = 4, width = 1024))
-    }),
-    // LLM §retrieval — conjunctive (AND) query over the q72 index:
-    // the two highest-df in-window terms (deterministic pick), docs
-    // holding BOTH via explode + count — posting-list intersection as
-    // one aggregation, the index's query-side counterpart.
-    "q73_conjunctive_search" -> ((s, dir) => {
-      import graft.llm.TextStats
-      val idx = TextStats.invertedIndex(t(s, dir, "documents"),
-        "doc_id", "text", minDf = 5, maxDf = 400)
-      val terms = idx.orderBy(col("df").desc, col("token")).limit(2)
-        .select("token")
-      idx.join(terms, "token")
-        .select(col("token"), explode(col("postings")).as("doc_id"))
-        .groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("n_matched")) // postings are distinct
-        .filter(col("n_matched") === 2)
-    }),
-    // LLM §retrieval — k-term conjunctive search (the q73 pick
-    // generalized to k = 4 via the library operator): intersection of
-    // the 4 largest in-window posting lists as one aggregation, the
-    // exploded frame bounded by 4·maxDf rows whatever the corpus.
-    "q74_conjunctive_k" -> ((s, dir) => {
-      import graft.llm.TextStats
-      TextStats.conjunctiveSearch(
-        TextStats.invertedIndex(t(s, dir, "documents"), "doc_id", "text",
-          minDf = 5, maxDf = 400), nTerms = 4)
-    }),
-    // LLM §retrieval — BM25-scored top-20 over the q72 term pick:
-    // disjunctive scoring of the 3 highest-df in-window terms,
-    // k1 = 1.2, b = 0.75. Float-free under the gate contract: idf is
-    // a driver-folded integer micro literal (shared with the dynamic
-    // oracle), tf saturation is an exact BIGINT rational, the doc
-    // score a sum of exact integers — the q59 integer-rank move
-    // extended to a real scoring function.
-    "q75_bm25" -> ((s, dir) => {
-      import graft.llm.TextStats
-      TextStats.bm25TopKMicro(t(s, dir, "documents"), "doc_id", "text",
-        bm25Terms(s, dir), k = 20)
-    }),
-    // LLM §text-analysis — corpus top-k BIGRAM table (the n-gram
-    // counterpart of the q33 vocabulary cut): per-doc gram arrays are
-    // a pure codegen'd expression, one explode + one hash aggregation,
-    // TakeOrdered cut at (freq desc, gram asc) — never a global sort
-    // of the n-gram vocabulary.
-    "q76_top_bigrams" -> ((s, dir) =>
-      graft.llm.TextStats.topNgrams(t(s, dir, "documents"), "text",
-        n = 2, k = 15)),
-    // LLM §retrieval — exact-PHRASE search (the adjacency query an
-    // inverted index alone cannot answer): per-doc occurrence count of
-    // the corpus's most frequent bigram (deterministic (freq desc,
-    // gram) pick, a bounded 1-row collect). The count itself is pure
-    // map — one filtered gram array against a literal, no shuffle.
-    "q77_phrase_search" -> ((s, dir) => {
-      import graft.llm.TextStats
-      val docs = t(s, dir, "documents")
-      val top = TextStats.topNgrams(docs, "text", n = 2, k = 1)
-        .collect().headOption.map(_.getString(0))
-        .getOrElse(throw new IllegalArgumentException(
-          "q77: corpus has no multi-token documents to pick a top " +
-            "bigram from"))
-      TextStats.phraseCount(docs, "doc_id", "text",
-        top.split(" ").toIndexedSeq)
-    }),
-    // LLM §retrieval — POSITIONAL inverted index (q72 + within-doc
-    // 1-based positions, the structure phrase/proximity queries
-    // need): one row per qualifying (token, doc) — buffers hold one
-    // document's positions, never a term's corpus-wide list. Same
-    // [5, 400] df window as q72; positions stringified per the q72
-    // rule (the comparator can't sort array cells).
-    "q85_positional_index" -> ((s, dir) => {
-      graft.llm.TextStats.positionalIndex(t(s, dir, "documents"),
-          "doc_id", "text", minDf = 5, maxDf = 400)
-        .select(col("token"), col("df"), col("doc_id"),
-          concat_ws(",", transform(col("positions"), _.cast("string")))
-            .as("positions"))
-    }),
-    // LLM §retrieval — arbitrary-phrase search FROM the positional
-    // index (posting intersection + position adjacency — what q77's
-    // gram scan can't do without rebuilding a gram table per phrase
-    // length): the q77 top-bigram pick answered from the index
-    // alone, one bounded posting frame per phrase offset, k-1
-    // equi-joins on doc_id, occurrence count as a pure array
-    // expression. Unbounded df window so the phrase vocabulary is
-    // complete; result provably equals q77's gram count.
-    "q86_phrase_indexed" -> ((s, dir) => {
-      import graft.llm.TextStats
-      val docs = t(s, dir, "documents")
-      val top = TextStats.topNgrams(docs, "text", n = 2, k = 1)
-        .collect().headOption.map(_.getString(0))
-        .getOrElse(throw new IllegalArgumentException(
-          "q86: corpus has no multi-token documents to pick a top " +
-            "bigram from"))
-      TextStats.phraseSearchIndexed(
-        TextStats.positionalIndex(docs, "doc_id", "text"),
-        "doc_id", top.split(" ").toIndexedSeq)
-    }),
-    // LLM §retrieval — PROXIMITY search from the positional index
-    // (the relaxed cousin of q86: order-free co-occurrence within a
-    // token window, counted per anchor occurrence): the 2 highest-df
-    // in-window terms (deterministic pick, bounded 2-row collect),
-    // window = 3. Same bounded plan as phrase search — one posting
-    // frame per term, one equi-join, zero corpus scans.
-    "q87_proximity_search" -> ((s, dir) => {
-      import graft.llm.TextStats
-      val idx = TextStats.positionalIndex(t(s, dir, "documents"),
-        "doc_id", "text", minDf = 5, maxDf = 400)
-      val terms = idx.select(col("token"), col("df")).distinct()
-        .orderBy(col("df").desc, col("token")).limit(2)
-        .collect().map(_.getString(0)).toIndexedSeq
-      TextStats.proximitySearch(idx, "doc_id", terms, window = 3)
-    }),
-    // LLM §quality — unigram-LM mean surprisal (the CCNet perplexity
-    // filter's score, integer micro-nats): top-16 vocab + OOV bucket
-    // learned from the corpus (ln folded driver-side into literals
-    // shared with the oracle — the q75-idf move); the 31-token
-    // synthetic vocabulary leaves 15 tokens genuinely OOV, so both
-    // cost paths are exercised. One tokenization, one broadcast join,
-    // one doc-id aggregation.
-    "q88_unigram_surprisal" -> ((s, dir) => {
-      val (vocab, oov) = unigramLmModel(s, dir)
-      graft.llm.TextStats.unigramSurprisal(t(s, dir, "documents"),
-        "doc_id", "text", vocab, oov)
-    }),
-    // LLM §quality — bigram stupid-backoff surprisal (Brants 2007):
-    // q88 one order up — position 1 at unigram cost, later positions
-    // at the top-32 pair table's conditional cost else the flat
-    // -ln(0.4) penalty + unigram backoff. One tokenization into
-    // (prev, cur) rows, two broadcast joins, one doc-id aggregation;
-    // the 31-token vocabulary leaves most of the 900-odd observed
-    // pairs out-of-table, so the backoff path dominates and both
-    // branches are exercised at gate scale.
-    "q89_bigram_surprisal" -> ((s, dir) =>
-      graft.llm.TextStats.bigramSurprisal(t(s, dir, "documents"),
-        "doc_id", "text", bigramLmModel(s, dir))),
-    // LLM §quality — Moore-Lewis contrastive selection (Moore & Lewis
-    // 2010): per-doc mean surprisal under the lang='en' IN-DOMAIN LM
-    // minus under the whole-corpus GENERAL LM; negative = looks
-    // English relative to background. ONE tokenization, two broadcast
-    // cost joins, one aggregation — not two scoring passes.
-    "q90_moore_lewis" -> ((s, dir) => {
-      val (iv, io) = inDomainLmModel(s, dir)
-      val (gv, go) = unigramLmModel(s, dir)
-      graft.llm.TextStats.lmContrastScore(t(s, dir, "documents"),
-        "doc_id", "text", iv, io, gv, go)
-    }),
-    // LLM §quality — model-based scoring (the fastText/CCNet stage
-    // after the rule pass): a linear classifier DISTILLED from the
-    // qualityKeep rule teacher by bit-deterministic preconditioned
-    // GD (integer micro-unit gradients — every distributed sum is a
-    // Long sum), then the corpus scored by a shuffle-free integer
-    // projection; weights fold to literals shared with the oracle.
-    "q91_quality_classifier" -> ((s, dir) =>
-      graft.llm.Classifier.score(t(s, dir, "documents"),
-        "doc_id", "text", classifierModel(s, dir))),
-    // LLM §selection — DSIR importance weights (Xie 2023): hashed-
-    // bigram bucket LMs (target = lang='en' stratum, raw = corpus),
-    // log importance weight in integer micro-nats. Where q90 contrasts
-    // open-vocabulary LMs via broadcast joins, the hashed feature
-    // space folds to a 64-long delta literal — scoring is a pure
-    // shuffle-free projection (spec-asserted), one corpus scan at any
-    // scale.
-    "q92_dsir" -> ((s, dir) => {
-      val (tgt, raw) = dsirModels(s, dir)
-      graft.llm.TextStats.dsirScore(t(s, dir, "documents"),
-        "doc_id", "text", tgt, raw)
-    }),
-    // LLM §selection — STRATIFIED DSIR (★r14, the q92/q94 closure):
-    // one shared raw background, one target LM per LANGUAGE (learned
-    // from the bench slice), every document priced against ITS
-    // stratum's target. The per-stratum delta vectors ride one
-    // literal CASE over `lang` — scoring stays a pure shuffle-free
-    // projection (spec-asserted), one corpus scan at any scale.
-    "q122_dsir_stratified" -> ((s, dir) => {
-      val (byLang, raw) = dsirStratModels(s, dir)
-      graft.llm.TextStats.dsirScoreStratified(t(s, dir, "documents"),
-        "doc_id", "text", "lang", byLang, raw)
-    }),
-    // LLM §decontamination — SPAN-level cross-corpus scrub (★r14):
-    // cut from every train doc exactly the 8-token windows that
-    // appear verbatim in the bench split, keep the rest — the
-    // surgical completion of the q43/q113 screens (which tell you
-    // WHICH/HOW MUCH) and the q66 doc-level drop (which wastes the
-    // clean remainder). Ref gram set ≤1 row per key (no fan-out),
-    // covered indices fold to ONE bounded per-doc array, and the
-    // text surgery is a map-side indexed filter — the corpus text
-    // never shuffles.
-    "q123_ref_span_scrub" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      graft.llm.Dedup.scrubRefSpans(
-        docs.filter(col("doc_id") % 5 =!= 0),
-        docs.filter(col("doc_id") % 5 === 0),
-        "doc_id", "text", n = 8)
-    }),
-    // LLM §quality — Gopher repetition signals (★r14, Rae 2021
-    // §A1.1): top-2/3-gram token share and duplicated-4-gram token
-    // COVERAGE per document — the screens that catch phrase-stuffed
-    // spam the q25/q49 length/distinct/stopword gates pass. Pure
-    // map-side sort + run-length folds — O(L log L) per doc (no
-    // explode, no shuffle — spec-asserted), one corpus scan at any
-    // scale and safe at real pre-training doc lengths (long-doc soak
-    // in STATUS).
-    "q125_repetition" -> ((s, dir) =>
-      graft.llm.TextStats.repetitionSignals(
-        t(s, dir, "documents"), "doc_id", "text")),
-    // LLM §streaming — the CDC ingest/forget loop GATED (★r15, the
-    // q118 pattern on the streaming axis): feed the documents table
-    // as +1 rows, then forget doc_id % 7 == 0 as −1 rows, through
-    // positionalIndexCdc; the max-seq snapshot must hash-equal the
-    // positional index DuckDB builds FROM SCRATCH on the net corpus.
-    // Ever-overflowed tokens keep the honest marker — and since df
-    // only grows during the ingest phase, peak df = full-corpus df,
-    // so the marker condition is SQL-expressible (dfull > maxDf).
-    // df >= 5 is the reader-side window, applied identically on the
-    // snapshot and in the oracle's HAVING.
-    "q126_positional_cdc" -> ((s, dir) => {
-      val snap = runCdcGate(s, dir, "pos_cdc_gate")(df =>
-        graft.streaming.StreamingIndex.positionalIndexCdc(
-          df, "op", "doc_id", "text", maxDf = 400).toDF())
-        .filter(col("df") >= 5)
-      val live = snap.filter(col("docs").isNotNull)
-        .select(col("token"), col("df"), explode(col("docs")).as("_e"))
-        .select(col("token"), col("df"),
-          col("_e.doc_id").as("doc_id"),
-          concat_ws(",", transform(col("_e.positions"),
-            p => p.cast("string"))).as("positions"))
-      val marker = snap.filter(col("docs").isNull)
-        .select(col("token"), col("df"),
-          lit(-1L).as("doc_id"), lit("<overflow>").as("positions"))
-      live.unionByName(marker)
-    }),
-    // ... the BM25 (L, N) scalars through the same feed: the signed
-    // one-row aggregation must equal the batch scalars of the net
-    // corpus — token-less docs count in N only, both engines.
-    "q128_bm25_cdc" -> ((s, dir) => {
-      runCdcFeed(s, dir, "bm25_cdc_gate", "complete")(df =>
-        graft.streaming.StreamingIndex.bm25ScalarsCdc(df, "op", "text"))
-        .select(col("_L").as("corpus_tokens"),
-          col("_N").as("corpus_docs"))
-    }),
-    // ... the signed GRAM table through the same feed: net bigram
-    // counts (freq > 0 reader cut) ≡ DuckDB bigram counts on the net
-    // corpus.
-    "q130_ngram_cdc" -> ((s, dir) => {
-      runCdcFeed(s, dir, "ngram_cdc_gate", "complete")(df =>
-        graft.streaming.StreamingIndex.ngramCountsCdc(df, "op", "text",
-          n = 2))
-        .filter(col("freq") > 0)
-    }),
-    // ... and the inverted sibling through the same feed: snapshot ≡
-    // DuckDB inverted build on the net corpus, '<overflow>' on
-    // ever-overflowed tokens (exact net df either way).
-    "q127_inverted_cdc" -> ((s, dir) => {
-      runCdcGate(s, dir, "inv_cdc_gate")(df =>
-        graft.streaming.StreamingIndex.invertedIndexCdc(
-          df, "op", "doc_id", "text", maxDf = 400).toDF())
-        .filter(col("df") >= 5)
-        .select(col("token"), col("df"),
-          when(col("postings").isNull, lit("<overflow>"))
-            .otherwise(concat_ws(",", transform(col("postings"),
-              p => p.cast("string"))))
-            .as("postings"))
-    }),
-    // LLM §pipeline — curation v3 (★r14): v2 with the contamination
-    // screen replaced by contamination SURGERY — scrub the bench-
-    // verbatim spans out (q123) instead of dropping whole docs, then
-    // quality-gate and novelty-screen the SCRUBBED text, still ONE
-    // declarative plan. The scrubbed frame rides one repartition
-    // exchange every consumer reuses (quality filter, novelty
-    // census, roster — the q117 census move applied to the derived
-    // frame, which would otherwise re-execute the scrub per
-    // consumer); novelty serves from one census exchange with an
-    // EMPTY ref side (the fused screen's contamination leg priced at
-    // zero — post-surgery overlap is zero by construction).
-    "q124_curation_v3" -> ((s, dir) => {
-      import graft.llm.{Dedup, TextStats}
-      val docs = t(s, dir, "documents")
-      val bench = docs.filter(col("doc_id") % 5 === 0)
-      // PARTIAL-contamination fixture: the corpus' only contamination
-      // is whole-doc near-copies, whose post-scrub husks fail the
-      // quality gate — the surgery would be output-invisible. Plant
-      // one 8-token bench window (the lowest-id ≥8-token bench doc's
-      // prefix — SQL-derivable, so the oracle replays it) onto every
-      // 11th train doc: those docs now carry REAL partial
-      // contamination, survive the scrub, and show n_removed > 0.
-      val snip = bench
-        .select(col("doc_id"), split(col("text"), " ").as("_ts"))
-        .filter(size(filter(col("_ts"), t => length(t) > 0)) >= 8)
-        .orderBy(col("doc_id")).limit(1)
-        .select(array_join(slice(filter(col("_ts"),
-          t => length(t) > 0), 1, 8), " ").as("_snip"))
-      val train = docs.filter(col("doc_id") % 5 =!= 0)
-        .crossJoin(broadcast(snip))
-        .withColumn("text",
-          when(col("doc_id") % 11 === 0,
-            concat(col("text"), lit(" "), col("_snip")))
-            .otherwise(col("text")))
-        .drop("_snip")
-      val losers = clusterArtifact(s, dir)
-        .filter(col("id_a") =!= col("cluster_id"))
-        .select(col("id_a").as("doc_id"))
-      // the scrubbed corpus is the pipeline's stored intermediate —
-      // materialized (★r21): four consumers (two censuses, the screen,
-      // the quality gate) otherwise re-derive the whole scrub subtree
-      // (40 corpus scans in the static plan)
-      val scrubbed = Dedup.scrubRefSpans(train, bench,
-          "doc_id", "text", n = 8)
-        .repartition(col("doc_id"))
-        .localCheckpoint(true)
-      val novel = TextStats.gramScreensFromCensus(
-          scrubbed,
-          TextStats.gramCensus(scrubbed, "doc_id", "text_clean", 8),
-          TextStats.gramCensus(scrubbed.limit(0), "doc_id",
-            "text_clean", 8), "doc_id")
-        .filter(col("novelty_micro") >= 250000)
-        .select("doc_id")
-      scrubbed.filter(TextStats.qualityKeep(col("text_clean")))
-        .join(losers, Seq("doc_id"), "left_anti")
-        .join(novel, Seq("doc_id"), "left_semi")
-        .join(train.select(col("doc_id"), col("lang")), Seq("doc_id"))
-        .select(col("doc_id"), col("lang"), col("n_removed"))
-    }),
-    // LLM §splitting — LEAKAGE-SAFE train/valid split (the dedup-aware
-    // eval guard): every q31 near-dup cluster moves as one block keyed
-    // on its representative's md5, so no valid doc has a near-copy in
-    // train; singletons split by their own id. One left equi-join +
-    // a map-side hash predicate — reads the stored cluster artifact.
-    "q93_leakage_split" -> ((s, dir) =>
-      graft.llm.Sampling.leakageSafeSplit(
-        t(s, dir, "documents").select(col("doc_id")), "doc_id",
-        clusterArtifact(s, dir), "id_a", "cluster_id",
-        validFraction = 0.15)),
-    // LLM §mixture — temperature rebalancing (sample stratum ∝ n^α,
-    // α=0.5 upweights small sources): ONE counts aggregation, quotas
-    // fold driver-side (largest-remainder, deterministic), execution
-    // is the q60 bounded-heap cap sampler with per-stratum caps. The
-    // oracle replays the selection from the SAME quota literals.
-    "q94_temperature_mix" -> ((s, dir) =>
-      graft.llm.Sampling.capSampleQuotas(t(s, dir, "documents"),
-        "doc_id", "source", temperatureQuotasModel(s, dir))),
-    // LLM §dedup — duplicated-span coverage AUDIT (the "fraction of
-    // each doc that is duplicated text" report): exact interval union
-    // of corpus-duplicated 16-char shingles per doc — the exact
-    // number q62's winnowing samples. One gram hash agg + a PER-DOC
-    // window (never global) + integer micro-unit division.
-    "q95_dup_coverage" -> ((s, dir) =>
-      graft.llm.Dedup.dupSpanCoverageFromCensus(
-        t(s, dir, "documents"), spanCensusArtifact(s, dir),
-        "doc_id", "text", shingleLen = 16)),
-    // LLM §layout — deterministic EPOCH SHUFFLE (epoch 1, 64-doc
-    // shards): md5(epoch#id)-ordered permutation ranked by the q64
-    // packed-key prefix sum (ONE range shuffle, never a global
-    // window); reruns and single-shard recomputes are identical.
-    "q96_epoch_shuffle" -> ((s, dir) =>
-      graft.llm.Packing.epochShuffle(t(s, dir, "documents"),
-        "doc_id", epoch = 1, shardSize = 64)),
-    // LLM §pipeline — TOKENIZE→PACK as ONE declarative plan (the last
-    // leg of the training-data path, the q66 move applied to layout):
-    // q54's learned-BPE subword counts feed q37's prefix-sum packing
-    // directly — the map-side encode fuses into the pack's range
-    // shuffle, no intermediate materialization. The oracle composes
-    // the two replays (merge literals → counts CTE → pack window).
-    "q97_tokenize_pack" -> ((s, dir) => {
-      val encoded = graft.llm.Bpe.encode(t(s, dir, "documents"),
-        "text", bpeMergesCached(s, dir))
-      graft.llm.Packing.packSequences(encoded, "doc_id",
-        col("n_bpe_tokens").cast("long"), seqLen = 256)
-    }),
-    // LLM §retrieval — HYBRID search: the q75 BM25-micro ranking and
-    // the q22 exact-cosine ranking (query vector 0; documents and
-    // embeddings share the synthetic keyspace, the q61 move) fused by
-    // integer reciprocal-rank fusion (Cormack 2009). Both rankings
-    // are the stored top-20 shards; the fusion itself is a union of
-    // queries×k rows + one hash agg — it never re-reads the corpus.
-    "q98_hybrid_rrf" -> ((s, dir) => {
-      import graft.llm.{Similarity, TextStats}
-      val txt = TextStats.bm25TopKMicro(t(s, dir, "documents"),
-          "doc_id", "text", bm25Terms(s, dir), k = 20)
-        .select(col("doc_id"), col("rank"))
-      val vec = Similarity.bruteForceTopK(t(s, dir, "embeddings"),
-          t(s, dir, "embeddings").filter(col("vec_id") === 0),
-          "vec_id", "embedding", 20)
-        .select(col("vec_id").as("doc_id"), col("rank"))
-      TextStats.rrfFuse(Seq(txt, vec), "doc_id", kRrf = 60,
-        scale = 1000000000L, k = 10)
-    }),
-    // LLM §corpus-stats — EXACT length percentiles (what
-    // percentile_approx approximates): value at 1-based rank
-    // ceil(p·n/100) of the (tokens, id) total order, via the q64
-    // packed-key prefix sum — one range shuffle, never a single-task
-    // global window, all-integer so any engine agrees bit-for-bit.
-    "q78_length_percentiles" -> ((s, dir) =>
-      graft.llm.Packing.orderStatistics(t(s, dir, "documents"),
-        "doc_id", size(split(col("text"), " ")).cast("long"),
-        Seq(5, 25, 50, 75, 95, 99))),
-    // LLM §sampling — systematic PPS: exactly 100 draws proportional
-    // to token count, via the q37 prefix sum + the k-point grid (one
-    // range shuffle, no window, no floats — the draw count is a
-    // telescoping ceil difference, so any engine replays it).
-    "q106_pps_sample" -> ((s, dir) =>
-      graft.llm.Sampling.systematicPps(t(s, dir, "documents"),
-        "doc_id",
-        size(filter(split(col("text"), " "),
-          t => length(t) > 0)).cast("long"),
-        k = 100)),
-    // LLM §corpus-stats — PER-GROUP exact length percentiles (q78 per
-    // language — the mixture-builder's report): a KEYED row_number
-    // window (right shape here: the skew ceiling is the largest
-    // group, never the corpus through one task), integer rank
-    // arithmetic, (value, id) tie-break.
-    "q104_group_percentiles" -> ((s, dir) =>
-      graft.llm.Packing.orderStatisticsByGroup(t(s, dir, "documents"),
-        "lang", "doc_id", size(split(col("text"), " ")).cast("long"),
-        Seq(25, 50, 75, 95))),
-    // LLM §corpus-stats — ROLLUP corpus report: (lang, source) doc
-    // counts and char totals with subtotal and grand-total rows —
-    // one aggregation with map-side partials at every grouping
-    // level; rollup nulls named '<all>' so both engines emit
-    // identical scalar cells.
-    "q105_corpus_rollup" -> ((s, dir) =>
-      t(s, dir, "documents")
-        .rollup(col("lang"), col("source"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_chars")).as("total_chars"))
-        .select(coalesce(col("lang"), lit("<all>")).as("lang"),
-          coalesce(col("source"), lit("<all>")).as("source"),
-          col("n_docs"), col("total_chars"))),
-    // LLM §text-analysis — top-20 COLLOCATIONS by exact integer lift
-    // (PMI-monotone: lift_micro = c12·T·1e6 div (c1·c2), float-free —
-    // the q75 integer-div parity move). Vocabulary-sized joins only
-    // after the two hash aggregations; min-count 5 noise gate.
-    "q108_collocations" -> ((s, dir) =>
-      graft.llm.TextStats.collocations(t(s, dir, "documents"), "text",
-        minCount = 5, k = 20)),
-    // LLM §corpus-stats — ONE-PASS bounded-state percentile SKETCH
-    // (the scale path next to q78's exact range shuffle): bit-length
-    // buckets (≤ 65 counters of state), each percentile reports the
-    // [lo, hi] power-of-two bracket holding the exact order statistic
-    // at the q78 ceil-rank. Same value column as q78, so the bracket
-    // is checkable against the exact row.
-    "q109_hist_percentiles" -> ((s, dir) =>
-      graft.llm.Sketch.logHistogramPercentiles(t(s, dir, "documents"),
-        size(split(col("text"), " ")).cast("long"),
-        Seq(5, 25, 50, 75, 95, 99))),
-    // LLM §text-analysis — per-doc n-gram NOVELTY profile (the
-    // complement of q95's duplication coverage): distinct 8-gram
-    // count, corpus-unique (df=1) gram count, and their micro ratio.
-    // The (doc, gram) rows explode and shuffle once; a df=1 gram's
-    // holder rides the gram aggregation, so no gram rows are joined.
-    "q110_gram_novelty" -> ((s, dir) =>
-      graft.llm.TextStats.gramNovelty(t(s, dir, "documents"),
-        "doc_id", "text", n = 8)),
-    // LLM §corpus-stats — per-GROUP top-k tokens (the q33 vocabulary
-    // cut per language): exact two-phase partial top-k — per-partition
-    // sorted-slice partials merge per group, NO window anywhere.
-    "q111_top_tokens_by_group" -> ((s, dir) =>
-      graft.llm.TextStats.topTokensByGroup(t(s, dir, "documents"),
-        "lang", "text", k = 5)),
-    // LLM §similarity — tf-idf-weighted sparse dot-product top-k doc
-    // pairs (the q29 AllPairs candidate machinery with weighted
-    // scoring — the lexical sibling of q28's embedding cosine):
-    // BIGRAM terms (the token vocabulary here is stopword-dominated),
-    // df window [2, 50] bounding the per-term pair fan-out, idf as
-    // the exact integer rational 1e6 div df.
-    "q112_tfidf_pairs" -> ((s, dir) =>
-      graft.llm.TextStats.tfidfDotPairs(t(s, dir, "documents"),
-        "doc_id", "text", maxDf = 50, k = 20, n = 2)),
-    // LLM §decontamination — per-TRAIN-doc contamination SHARE vs the
-    // bench split (q43 reports WHICH bench doc was hit; this is the
-    // per-doc ratio a decontamination run thresholds): distinct
-    // 8-gram overlap in exact micro units; the ref side collapses to
-    // a distinct gram set, so the join cannot fan out.
-    "q113_ref_overlap" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      graft.llm.TextStats.refGramOverlap(
-        docs.filter(col("doc_id") % 5 =!= 0),
-        docs.filter(col("doc_id") % 5 === 0),
-        "doc_id", "text", n = 8)
-    }),
-    // LLM §sketches — KMV set-overlap screen (Beyer 2007 bottom-k):
-    // Jaccard + distinct estimates for the train/bench 8-gram sets
-    // from two 512-row sketches — the integer-exact cheap pass a
-    // 100 TB decontamination runs before q34/q113 shuffle a gram.
-    "q114_kmv_overlap" -> ((s, dir) => {
-      import graft.llm.{Sketch, TextStats}
-      val docs = t(s, dir, "documents")
-      // project the token array BEFORE gramming — the gramsOf
-      // higher-order-lambda inlining trap (TextStats.scala) costs
-      // ~10× here at n=8 (measured 15.6 → 1.7 s at sf0.1)
-      def grams(side: DataFrame) = side
-        .select(filter(split(col("text"), " "),
-          t => length(t) > 0).as("_ts"))
-        .select(explode(TextStats.gramsOf(col("_ts"), 8)).as("g"))
-      Sketch.kmvOverlap(
-        Sketch.kmvSketch(grams(docs.filter(col("doc_id") % 5 =!= 0)),
-          col("g"), 512),
-        Sketch.kmvSketch(grams(docs.filter(col("doc_id") % 5 === 0)),
-          col("g"), 512),
-        512)
-    }),
-    // LLM §corpus-stats — EXACT heavy hitters via the two-phase
-    // pigeonhole scan (no full-vocabulary shuffle: per-partition
-    // local counts gate candidates at ceil(T/P) — a provable
-    // superset — then only candidate occurrences shuffle for the
-    // exact recount). The oracle is the plain exact query the
-    // output provably equals.
-    "q115_heavy_hitters" -> ((s, dir) =>
-      graft.llm.TextStats.exactHeavyHitters(t(s, dir, "documents"),
-        "text", threshold = 500)),
-    // LLM §corpus-stats — per-GROUP histogram percentile sketch (q109
-    // keyed by language; the bounded-state sibling of q104's exact
-    // keyed ranks): |groups|·≤65 counters, KEYED cumulative window.
-    "q116_group_hist" -> ((s, dir) =>
-      graft.llm.Sketch.logHistogramPercentilesByGroup(
-        t(s, dir, "documents"), "lang",
-        size(split(col("text"), " ")).cast("long"),
-        Seq(25, 50, 75, 95))),
-    // LLM §pipeline — curation v2: the q66 composition extended with
-    // per-doc screens, still ONE declarative plan over the TRAIN
-    // split — quality gate ∧ not-a-near-dup-loser ∧ contamination
-    // share < 0.5 vs the bench split (q113) ∧ novelty ≥ 0.25 within
-    // train (q110). Every stage bites at sf0.01 (400 train → 176
-    // quality → −14 contaminated / −22 low-novelty before the loser
-    // anti-join). ★r14: both gram screens are served from ONE shared
-    // gram census (gramScreensFromCensus — its repartition(gram)
-    // exchange is materialized once by ReuseExchange, the bm25Frames
-    // trick), and their two semi-joins fused into one conjunctive
-    // filter, so the train text is tokenized ONCE for grams (+ once
-    // inside the MinHash cluster pass) instead of ~5×; at 100 TB the
-    // census is the artifact a run writes once and every screen
-    // reads.
-    "q117_curation_v2" -> ((s, dir) => {
-      import graft.llm.TextStats
-      val docs = t(s, dir, "documents")
-      val train = docs.filter(col("doc_id") % 5 =!= 0)
-      val bench = docs.filter(col("doc_id") % 5 === 0)
-      val losers = clusterArtifact(s, dir)
-        .filter(col("id_a") =!= col("cluster_id"))
-        .select(col("id_a").as("doc_id"))
-      val keep = TextStats.gramScreensFromCensus(
-          train, TextStats.gramCensus(train, "doc_id", "text", n = 8),
-          TextStats.gramCensus(bench, "doc_id", "text", n = 8), "doc_id")
-        .filter(col("overlap_micro") < 500000 &&
-          col("novelty_micro") >= 250000)
-        .select("doc_id")
-      train.filter(TextStats.qualityKeep(col("text")))
-        .join(losers, Seq("doc_id"), "left_anti")
-        .join(keep, Seq("doc_id"), "left_semi")
-        .select(col("doc_id"), col("lang"))
-    }),
-    // LLM §forget-propagation, INSERT direction (★r14): maintain the
-    // stored inverted index under an INGEST batch — build on ~6/7 of
-    // the corpus, insert the rest, compare against a from-scratch
-    // build on everything. Exercises the full crossing story: df only
-    // grows, so in-window tokens crossing maxDf drop to markers (pure
-    // projection), and batch tokens absent from the index (old df <
-    // minDf) enter via the one targeted corpus pass.
-    "q118_index_insert" -> ((s, dir) => {
-      import graft.llm.IndexMaintain
-      val docs = t(s, dir, "documents")
-      // stored-index seam materialized before maintenance — q99's
-      // ★r21 note
-      val idx = IndexMaintain.indexWithOverflow(
-        docs.filter(col("doc_id") % 7 =!= 0), "doc_id", "text",
-        minDf = 5, maxDf = 400).localCheckpoint(true)
-      IndexMaintain.insertIntoIndex(idx,
-          docs.filter(col("doc_id") % 7 === 0), docs,
-          "doc_id", "text", minDf = 5, maxDf = 400)
-        .select(col("token"), col("df"),
-          when(col("postings").isNull, lit("<overflow>"))
-            .otherwise(concat_ws(",",
-              transform(col("postings"), _.cast("string"))))
-            .as("postings"))
-    }),
-    // the q118 move on the positional shape: batch docs' position
-    // rows come from the batch alone, markers only ever increment
-    "q119_positional_insert" -> ((s, dir) => {
-      import graft.llm.IndexMaintain
-      val docs = t(s, dir, "documents")
-      // stored-index seam materialized before maintenance — q99's
-      // ★r21 note
-      val idx = IndexMaintain.positionalIndexWithOverflow(
-        docs.filter(col("doc_id") % 7 =!= 0), "doc_id", "text",
-        minDf = 5, maxDf = 400).localCheckpoint(true)
-      IndexMaintain.insertIntoPositionalIndex(idx,
-          docs.filter(col("doc_id") % 7 === 0), docs,
-          "doc_id", "text", minDf = 5, maxDf = 400)
-        .select(col("token"), col("df"),
-          coalesce(col("doc_id"), lit(-1L)).as("doc_id"),
-          when(col("positions").isNull, lit("<overflow>"))
-            .otherwise(concat_ws(",",
-              transform(col("positions"), _.cast("string"))))
-            .as("positions"))
-    }),
-    // LLM §multimodal (★r14): the perceptual image near-dedup family,
-    // hash-GATED — deterministic synthetic PNGs derive from doc ids
-    // (real bytes through the real javax.imageio decode; only the
-    // camera is synthetic), dHash64 fingerprints feed the SAME banded
-    // Hamming engine as SimHash (q48). The decode stays engine-side
-    // but runs ONCE into the stored fingerprint artifact (★r19 —
-    // priced by the bench's `media_decode` facet); this entry prices
-    // the banded pair pass over the stored frame, the per-query cost
-    // of a pipeline that fingerprints on ingest. The DuckDB oracle
-    // replays banding + bit_count verification over the same stored
-    // fingerprints (the q54 parity move).
-    "q120_image_near_dedup" -> ((s, dir) =>
-      graft.llm.Dedup.fingerprintNearPairs(
-        mediaFpArtifact(s, dir, "image"),
-        "id", "dhash", maxDistance = 3)),
-    // the audio sibling: RMS-envelope dHash over deterministic PCM16
-    // WAVs through the real javax.sound decode, same banded engine
-    // over the same stored-fingerprint discipline
-    "q121_audio_near_dedup" -> ((s, dir) =>
-      graft.llm.Dedup.fingerprintNearPairs(
-        mediaFpArtifact(s, dir, "audio"),
-        "id", "dhash", maxDistance = 3)),
-    // LLM §similarity — product-quantization ENCODE (Jégou 2011, the
-    // engine's angular geometry): 64-dim embeddings → 4 codes, each
-    // the per-subspace cosine argmax against 8 learned centroids —
-    // the m-bytes-per-vector compressed index a 100 TB ANN corpus
-    // actually stores. Codegen'd projection, no shuffle; codebooks are
-    // deterministic per-slice k-means fits shared with the oracle.
-    "q79_pq_encode" -> ((s, dir) =>
-      graft.llm.Pq.encode(t(s, dir, "embeddings"), "vec_id",
-          "embedding", pqCodebooks(s, dir))
-        .select(col("vec_id"),
-          posexplode(col("codes")).as(Seq("sub", "code")))),
-    // LLM §similarity — asymmetric PQ top-k: exact queries scored
-    // against RECONSTRUCTED database vectors (code ↦ centroid,
-    // concatenated map-side from the codebook literal — the original
-    // vectors are never re-read), ranked by the shared two-phase
-    // top-k with the (sim desc, id) tie-break reconstruction demands.
-    "q80_pq_search" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      graft.llm.Pq.reconstructTopK(emb, emb.filter(col("vec_id") < 3),
-        "vec_id", "embedding", pqCodebooksCached(s, dir), k = 10)
-    }),
-    // LLM §similarity — IVF-PQ ENCODE (IVFADC, Jégou 2011 §IV): the
-    // composed index a production vector store persists at 100 TB —
-    // 4 bytes of cell + m codes per vector, quantizing the RESIDUAL
-    // v − coarse(v) so codebook resolution is spent inside the cell.
-    // One codegen'd projection (assignment argmax + zip_with
-    // subtraction + per-subspace argmax), no shuffle.
-    "q81_ivfpq_encode" -> ((s, dir) =>
-      graft.llm.IvfPq.encode(t(s, dir, "embeddings"), "vec_id",
-          "embedding", ivfPqModel(s, dir))
-        .select(col("vec_id"), col("cell"),
-          posexplode(col("codes")).as(Seq("sub", "code")))),
-    // LLM §similarity — IVF-PQ ADC search: queries probe their
-    // nprobe=2 (of 4) nearest cells, candidates meet the broadcast
-    // probe list in ONE equi-join on cell (the scan shrinks to
-    // ~nprobe/nlist of the corpus), reconstruction
-    // coarse(cell) + decode(codes) is map-side from the model
-    // literals, ranking the shared two-phase top-k.
-    "q82_ivfpq_search" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      graft.llm.IvfPq.search(emb, emb.filter(col("vec_id") < 3),
-        "vec_id", "embedding", ivfPqModelCached(s, dir), nprobe = 2, k = 10)
-    }),
-    // LLM §similarity — recall-driven PQ refine (the r12 verdict's
-    // "close the loop": shortlist doubles until measured recall@k on
-    // the probe sample reaches the target, capped at the corpus size
-    // where refine ≡ brute). At target 1.0 with the full query set as
-    // sample the output provably equals the exact ranking (the q56
-    // argument), hash-gating the adaptive path against the exact
-    // oracle.
-    "q83_pq_refined_tuned" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      // Warm start: seed the knob walk at the corpus-size growth
-      // rule the `ann` soak tier and the bench measured for THIS
-      // near-uniform corpus (paid shortlist ≈ n/5 at target 1.0) instead of
-      // re-walking from cold every run. Exactness is untouched — the
-      // tuner still measures recall on the full query sample and the
-      // cap logic is unchanged; the seed only skips the provably-
-      // insufficient early doublings.
-      val n = emb.count()
-      graft.llm.Pq.refinedTopKAutoTuned(emb,
-        emb.filter(col("vec_id") < 5), "vec_id", "embedding",
-        pqCodebooksCached(s, dir), k = 10, targetRecall = 1.0,
-        initialShortlist = math.max(40L, n / 5).toInt)._1
-    }),
-    // LLM §similarity — recall-driven IVF-PQ refine: nprobe and
-    // shortlist walk in lockstep (caps nlist / corpus size, where the
-    // composed index provably equals brute force) until the probe
-    // sample hits the target; same q56 hash-gate argument.
-    "q84_ivfpq_refined_tuned" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      // ★r14 warm start (the q83 rule, both knobs): near-uniform
-      // vectors scatter true neighbors across cells, so target 1.0
-      // historically pays nprobe = nlist and shortlist ≈ n/5 — seed
-      // there; the tuner still verifies recall on the full sample.
-      val model = ivfPqModelCached(s, dir)
-      val n = emb.count()
-      graft.llm.IvfPq.refinedSearchAutoTuned(emb,
-        emb.filter(col("vec_id") < 5), "vec_id", "embedding",
-        model, k = 10, targetRecall = 1.0,
-        initialNprobe = model.nlist,
-        initialShortlist = math.max(40L, n / 5).toInt)._1
-    }),
-    // LLM §sketching — Bloom-filter join prune: the bench side's
-    // head-gram keys build a 4096-bit bitmap (bit_or aggregation →
-    // broadcastable literal), and the train side probes it MAP-SIDE
-    // before any shuffle — never a false negative (oracle-checked:
-    // every is_actual=1 row has might_contain=1), false positives at
-    // the standard rate. The prune a 100 TB contamination join runs
-    // first.
-    "q71_bloom_prune" -> ((s, dir) => {
-      import graft.llm.Sketch
-      val docs = t(s, dir, "documents").withColumn("_key",
-        concat_ws(" ", slice(split(col("text"), " "), 1, 3)))
-      val bench = docs.filter(col("doc_id") % 5 === 0)
-      val bm = Sketch.bloomBuild(bench, "_key", k = 3, mBits = 4096)
-      val probed = Sketch.bloomProbe(
-        docs.filter(col("doc_id") % 5 =!= 0), "_key", bm, k = 3)
-      probed
-        .join(bench.select(col("_key")).distinct()
-          .withColumn("_hit", lit(1)), Seq("_key"), "left")
-        .select(col("doc_id"),
-          col("might_contain").cast("int").as("might_contain"),
-          coalesce(col("_hit"), lit(0)).as("is_actual"))
-    }),
-    // LLM §sketching — HyperLogLog distinct-token estimate: integer
-    // registers (bin()-length leading zeros — no float log), exact
-    // scaled harmonic sum. The gate row carries the estimate in
-    // integer MICRO units (round(est·1e6) as BIGINT) — both engines
-    // divide the same double numerator by the same integer, so the
-    // micro value is bit-identical and no raw float is hashed. True
-    // distinct count rides along.
-    "q70_hll" -> ((s, dir) => {
-      import graft.llm.{Bpe, Sketch}
-      val docs = t(s, dir, "documents")
-      val truth = Bpe.wordFrequencies(docs, "text")
-        .agg(count(lit(1)).as("n_distinct_true"))
-      Sketch.hllDistinct(docs, "text", b = 6)
-        .withColumn("hll_est_micro",
-          round(col("hll_estimate") * lit(1e6)).cast("long"))
-        .drop("hll_estimate")
-        .crossJoin(truth)
-    }),
-    // LLM §sketching — PER-GROUP HLL (q70 grouped): distinct-token
-    // estimate per source next to the true count — |groups|·m
-    // register rows of state, the grouped reporting shape; identical
-    // integer register arithmetic, estimate in micro units.
-    "q107_hll_by_group" -> ((s, dir) => {
-      import graft.llm.Sketch
-      val docs = t(s, dir, "documents")
-      val truth = docs
-        .select(col("source"),
-          explode(split(col("text"), "\\s+")).as("w"))
-        .filter(length(col("w")) > 0)
-        .distinct()
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_distinct_true"))
-      Sketch.hllDistinctByGroup(docs, "source", "text", b = 6)
-        .withColumn("hll_est_micro",
-          round(col("hll_estimate") * lit(1e6)).cast("long"))
-        .drop("hll_estimate")
-        .join(truth, "source")
-    }),
-    // LLM §sketching — Count-Min frequency sketch (the sub-linear
-    // vocabulary summary): depth×width exact-integer counters over
-    // md5-derived buckets, point estimate = min over rows; the true
-    // top-20 tokens get (true freq, CMS estimate) side by side —
-    // estimates can never undercount, and the whole construction
-    // hash-replays in SQL from the same md5 arithmetic.
-    "q69_cms" -> ((s, dir) => {
-      import graft.llm.{Bpe, Sketch}
-      val docs = t(s, dir, "documents")
-      val counters = Sketch.countMinCounters(docs, "text",
-        depth = 4, width = 1024)
-      val top = Bpe.wordFrequencies(docs, "text")
-        .orderBy(col("freq").desc, col("w")).limit(20)
-      Sketch.cmsEstimates(counters, top.select("w"), depth = 4,
-          width = 1024)
-        .join(top, "w")
-        .select(col("w").as("token"), col("freq"),
-          col("cms_estimate"))
-    }),
-    // §events — RANGE JOIN (the interval lookup Spark compiles to a
-    // nested loop): every 100th event joined to ALL concurrent q39
-    // sessions (cross-user, no equi-key) via the bucketed shape — 1-h
-    // buckets, intervals exploded to covered buckets, one hash
-    // equi-join, exact re-check; a pair meets only in the point's
-    // bucket so no dedup.
-    "q68_range_join" -> ((s, dir) => {
-      import graft.operators.RangeJoin
-      val sessions = queries("q39_sessionize")(s, dir)
-        .select(col("user_id"), col("session_id"),
-          col("start_ns"), col("end_ns"))
-      val points = t(s, dir, "events")
-        .filter(col("event_id") % 100 === 0)
-        .select(col("event_id").as("point_id"),
-          (col("ts") - col("ts") % 1000L).as("pt"))
-      RangeJoin.pointInInterval(points, "pt", sessions,
-        "start_ns", "end_ns", bucketWidth = 3600L * 1000000000L)
-        .select(col("point_id"), col("pt"), col("user_id"),
-          col("session_id"), col("start_ns"), col("end_ns"))
-    }),
-    // §events — INTERVAL-OVERLAP JOIN (the interval×interval sibling
-    // of q68, which Spark also compiles to a nested loop): all
-    // cross-user pairs of CONCURRENT q39 sessions via the bucketed
-    // shape — both sides explode to covered 1-h buckets, ONE hash
-    // equi-join, exact re-check, and the max-start bucket rule emits
-    // each pair exactly once (the overlap's first bucket — both
-    // sides cover it, and there is exactly one). Output adds the
-    // exact overlap length in ns — all integers.
-    "q103_interval_join" -> ((s, dir) => {
-      import graft.operators.RangeJoin
-      val sess = queries("q39_sessionize")(s, dir)
-        .select(col("user_id"), col("session_id"),
-          col("start_ns"), col("end_ns"))
-      val a = sess.select(col("user_id").as("user_a"),
-        col("session_id").as("session_a"),
-        col("start_ns").as("start_a"), col("end_ns").as("end_a"))
-      val b = sess.select(col("user_id").as("user_b"),
-        col("session_id").as("session_b"),
-        col("start_ns").as("start_b"), col("end_ns").as("end_b"))
-      RangeJoin.intervalOverlap(a, "start_a", "end_a", b,
-          "start_b", "end_b", bucketWidth = 3600L * 1000000000L)
-        .filter(col("user_a") < col("user_b"))
-        .select(col("user_a"), col("session_a"), col("user_b"),
-          col("session_b"),
-          (least(col("end_a"), col("end_b")) -
-            greatest(col("start_a"), col("start_b"))).as("overlap_ns"))
-    }),
-    // §events — AS-OF JOIN (the temporal-state lookup Spark lacks,
-    // composed from union + one per-key window): for each probe (every
-    // 10th event), the latest event at-or-before its timestamp by the
-    // (ts, event_id) total order, plus how many preceded it. ts is
-    // micro-truncated on both engines (the q39 NANOS-read parity rule).
-    "q67_asof_join" -> ((s, dir) => {
-      import graft.operators.AsofJoin
-      val ev = t(s, dir, "events")
-        .withColumn("ts", col("ts") - col("ts") % 1000L)
-        .select(col("user_id"), col("ts"), col("event_id"),
-          col("event_type"))
-      val probes = ev.filter(col("event_id") % 10 === 0)
-        .select(col("user_id"), col("ts"),
-          col("event_id").as("probe_id"))
-      AsofJoin.lastEventAsOf(ev, probes, "user_id", "ts",
-        tieCols = Seq("event_id"),
-        payload = Seq("event_id", "event_type"),
-        probeCols = Seq("probe_id"))
-    }),
-    // LLM §pipeline — the CURATION PIPELINE as ONE declarative plan
-    // (what the whole llm package exists for): quality gate ∧ dedup
-    // keeper-or-unclustered ∧ deterministic 50% sample, composed as
-    // joins/anti-joins so Catalyst fuses the stages — no
-    // materialization between "filter", "dedup" and "sample".
-    "q66_curation_pipeline" -> ((s, dir) => {
-      import graft.llm.{Sampling, TextStats}
-      val docs = t(s, dir, "documents")
-      val losers = clusterArtifact(s, dir)
-        .filter(col("id_a") =!= col("cluster_id"))
-        .select(col("id_a").as("doc_id"))
-      // quality gate INLINE on the one scan (a join against the
-      // qualityFilter frame would scan the corpus twice)
-      val kept = docs.filter(TextStats.qualityKeep(col("text")))
-        .join(losers, Seq("doc_id"), "left_anti")
-      Sampling.deterministicSample(kept, "doc_id", fraction = 0.5)
-        .select(col("doc_id"), col("lang"))
-    }),
-    // LLM §packing — token-budget shard assignment (the balanced
-    // export planner): ascending-id docs split at every `target`
-    // cumulative tokens via the q37 distributed prefix sum — one range
-    // shuffle, exact integer div, deterministic across partitionings.
-    // Hardened after the r10 driver-gate hash mismatch (locally
-    // unreproducible): every column pinned to non-null BIGINT and rows
-    // emitted pre-sorted by doc_id, so no type/nullability/order
-    // latitude is left for the comparator.
-    "q51_shard_assign" -> ((s, dir) => {
-      import graft.llm.{Packing, TextStats}
-      Packing.shardAssignments(t(s, dir, "documents"), "doc_id",
-        TextStats.tokenCount(col("text")), targetTokens = 2048)
-        .select(
-          col("doc_id").cast("bigint").as("doc_id"),
-          col("n_tokens").cast("bigint").as("n_tokens"),
-          col("tok_offset").cast("bigint").as("tok_offset"),
-          col("shard_id").cast("bigint").as("shard_id"))
-        .orderBy("doc_id")
-    }),
-    // LLM §dedup — quality-aware KEEPER selection (the dedup policy
-    // knob): within each q31 cluster keep the longest member (token
-    // count, ties to smallest id) — aggregation argmax via
-    // max(struct(score, -id)), no per-cluster window.
-    "q53_quality_keeper" -> ((s, dir) => {
-      import graft.llm.{Dedup, TextStats}
-      val docs = t(s, dir, "documents")
-      val clusters = clusterArtifact(s, dir)
-        .select(col("id_a").as("doc_id"), col("cluster_id"))
-      val scores = docs.select(col("doc_id"),
-        TextStats.tokenCount(col("text")).as("score"))
-      Dedup.qualityKeepers(clusters, "doc_id", scores, "score")
-    }),
-    // LLM §text-analysis — distributed BPE tokenizer TRAINING + encode
-    // (vocabulary induction, the step before token counting): the
-    // corpus collapses ONCE to a word-frequency table, then each of
-    // the 24 merge rounds is a vocabulary-sized job (weighted pair
-    // counts with map-side partials + a top-1 argmax), and encode is
-    // pure map-side against the broadcast merge list. Merge LEARNING
-    // is iterative — not SQL-expressible — but encode IS: the oracle
-    // is generated from the learned merge literals (dynamicOracleSql →
-    // Bpe.encodeOracleSql) and replays the full greedy inference in
-    // DuckDB, so this row is hash-gated like every other; learning
-    // itself stays pinned by BpeSpec's merge-for-merge differential
-    // against an independent single-node reference implementation.
-    "q54_bpe_encode" -> ((s, dir) => {
-      import graft.llm.Bpe
-      val docs = t(s, dir, "documents")
-      Bpe.encode(docs, "text", bpeMerges(s, dir))
-        .select(col("doc_id"), col("n_bpe_tokens"))
-    }),
-    // LLM §dedup — repeated-span REMOVAL (the excision counterpart of
-    // q43's detection; RefinedWeb-style boilerplate strip): 8-token
-    // windows in more than 2 distinct docs are cut everywhere they
-    // appear; docs rebuild map-side from surviving tokens. Integer
-    // positions + exact strings end to end — the oracle replays the
-    // whole pipeline.
-    "q55_span_removal" -> ((s, dir) => {
-      import graft.llm.Dedup
-      Dedup.removeRepeatedSpans(t(s, dir, "documents"), "doc_id", "text",
-        windowTokens = 8, docFreqCap = 2)
-    }),
-    // T-family — TUMBLING time-window aggregation (the q39/q40 gap
-    // sessions' fixed-window sibling, and the shape Structured
-    // Streaming's window() aggregations take): 1-hour buckets by
-    // integer division of the micro-truncated epoch (the q39
-    // precision contract — DuckDB reads TIMESTAMP(NANOS) at micros),
-    // one hash aggregation with map-side partials.
-    "q52_tumbling" -> ((s, dir) => {
-      t(s, dir, "events")
-        .withColumn("win",
-          expr("(ts - ts % 1000) div 3600000000000"))
-        .groupBy(col("win"), col("event_type"))
-        .agg(count(lit(1)).as("n_events"),
-          countDistinct(col("user_id")).as("n_users"))
-    }),
-    // LLM §mixing — per-language data-mixing recipe via deterministic
-    // stratified sampling: keep all German, half the English, a quarter
-    // of French/Spanish, drop Chinese — the md5-prefix predicate is
-    // map-only, engine-portable, and stable across partitionings (the
-    // q32 machinery with a per-stratum cutoff).
-    "q46_mix_sample" -> ((s, dir) => {
-      import graft.llm.Sampling
-      Sampling.stratifiedSample(t(s, dir, "documents"), "doc_id", "lang",
-        Map("en" -> 0.5, "de" -> 1.0, "zh" -> 0.0),
-        defaultFraction = 0.25)
-        .select(col("doc_id"), col("lang"))
-    }),
-    // LLM §embeddings — symmetric int8 scalar quantization (the 4×
-    // vector-store compression): per vec, scale = max|x|/127 and
-    // q = clamp(floor(x/scale + 0.5)) — floor-form so both engines'
-    // ints agree bit-exactly (round()'s tie behavior is
-    // engine-specific). Summarized as integer aggregates (+ the scale)
-    // so the oracle compares exactly.
-    "q45_quantize" -> ((s, dir) => {
-      import graft.llm.Similarity
-      Similarity.quantizeInt8(t(s, dir, "embeddings"),
-          "vec_id", "embedding")
-        .select(col("vec_id"), col("scale"),
-          expr("aggregate(q, 0L, (a, x) -> a + x)").as("q_sum"),
-          size(filter(col("q"), x => abs(x) === 127)).as("n_sat"))
-    }),
-    // LLM §quality — intra-doc repetition (the Gopher duplicate/top
-    // n-gram fraction filters): per doc over its bigram windows,
-    // repeated-phrasing and single-phrase-dominance fractions. Two
-    // hash aggregations (map-side partial counts), fractions divide
-    // exactly-agreed ints.
-    "q44_repetition" -> ((s, dir) => {
-      import graft.llm.TextStats
-      TextStats.repetitionStats(t(s, dir, "documents"),
-        "doc_id", "text", n = 2)
-    }),
-    // LLM §decontamination — token-window collision join (the GPT-3
-    // "13-gram dedup" shape, here 8-token windows on the synthetic
-    // corpus): contiguous-span contamination that whole-document
-    // Jaccard (q34) can miss. Same train/bench split as q34; join on
-    // 8-byte window hashes, exact string verify post-join, boilerplate
-    // windows (combined doc-freq > 1000) anti-joined out pre-join.
-    "q43_ngram_overlap" -> ((s, dir) => {
-      import graft.llm.Dedup
-      val docs = t(s, dir, "documents")
-      Dedup.ngramOverlapJoin(
-        docs.filter(col("doc_id") % 5 =!= 0),
-        docs.filter(col("doc_id") % 5 === 0),
-        "doc_id", "text", windowTokens = 8, minShared = 2)
-        .select(col("id_a").as("train_id"), col("id_b").as("bench_id"),
-          col("n_shared"))
-    }))
-
-  /** Oracles that must be GENERATED from the data, merged into
-    * oracle_sql.json by Verify after the static [[oracleSql]] map.
-    * q54: merge learning is iterative (not SQL-expressible), but once
-    * the merges are learned they are constants — so the oracle is
-    * built from the learned merge literals and replays the entire
-    * greedy encode in DuckDB ([[graft.llm.Bpe.encodeOracleSql]]), the
-    * same parity-by-construction move as q42 (detector regexes) and
-    * q48 (MD5 preimages). Learning is deterministic (lexicographic
-    * argmax tie-break, spec-pinned), so this re-learn yields the
-    * identical list the q54 entry used. q04/q27 read a file directly,
-    * so their oracles name the objects of THIS run: `dir`'s lineitem
-    * and the [[graft.catalog.Staging]] JSON-lines copy. */
-  // q120/q121's stored-fingerprint collections (one (id, dhash) tuple
-  // per document — bounded by the gate corpus): collected from the
-  // SAME stored artifact the entries band (★r19), so the oracle
-  // literals replay the exact frame by construction — deterministic
-  // integer-arithmetic payloads + lossless PNG/PCM round trips, and
-  // longs survive the parquet trip bit-exactly.
-  private def mediaFingerprints(s: SparkSession, dir: String,
-                                kind: String): Seq[(Long, Long)] =
-    mediaFpArtifact(s, dir, kind).collect()
-      .map(r => (r.getLong(r.fieldIndex("id")),
-        r.getLong(r.fieldIndex("dhash"))))
-      .sortBy(_._1).toSeq
-
-  /** The [[graft.llm.Dedup.fingerprintNearPairs]] arithmetic replayed
-    * over stored 64-bit fingerprints: pigeonhole chunks (maxDistance+1
-    * bands — candidates matching on ≥ 1 band, provably no miss),
-    * DISTINCT ordered pairs, exact `bit_count(xor)` verification.
-    * DuckDB's `>>` is arithmetic but the band mask truncates to the
-    * chunk's bits, and its bit_count/xor are two's-complement exact —
-    * probed to match Java Long semantics on negative fingerprints. */
-  private def fingerprintPairsOracleSql(fps: Seq[(Long, Long)],
-                                        maxDistance: Int): String = {
-    val chunks = maxDistance + 1
-    val width = 64 / chunks
-    val mask = (1L << width) - 1L
-    val values = fps.map { case (i, f) => s"($i, CAST($f AS BIGINT))" }
-      .mkString(", ")
-    s"""WITH fp(id, f) AS (VALUES $values),
-       | b AS (SELECT unnest(range($chunks)) AS b),
-       | bands AS (SELECT id, f, b.b AS b,
-       |     (f >> CAST(b.b * $width AS INT)) & $mask AS v
-       |   FROM fp CROSS JOIN b),
-       | cand AS (SELECT DISTINCT a.id AS ia, x.id AS ib
-       |   FROM bands a JOIN bands x
-       |   ON a.b = x.b AND a.v = x.v AND a.id < x.id)
-       | SELECT c.ia AS id_a, c.ib AS id_b,
-       |   CAST(bit_count(xor(fa.f, fb.f)) AS INT) AS hamming
-       | FROM cand c JOIN fp fa ON fa.id = c.ia
-       | JOIN fp fb ON fb.id = c.ib
-       | WHERE bit_count(xor(fa.f, fb.f)) <= $maxDistance"""
-      .stripMargin.replace("\n", " ")
-  }
-
-  def dynamicOracleSql(s: SparkSession, dir: String): Map[String, String] = {
-    import graft.llm.{Bpe, Clustering}
-    val merges = bpeMerges(s, dir)
-    // identical centroids to the q57/q58/q61 runs (memoized under the
-    // gate flag; deterministic re-learn otherwise)
-    val centroids = kmeansCentroids(s, dir)
-    Map(
-      // the two oracles that read a file directly: this run's lineitem
-      // object and the JSON-lines copy the q27 entry staged
-      "q04_find_files" -> findFilesOracleSql(
-        java.nio.file.Paths.get(dir, "lineitem.parquet").toAbsolutePath
-          .normalize.toString),
-      "q27_json_scan" -> jsonScanOracleSql(
-        graft.catalog.Staging.jsonCustomerFile(dir)),
-      // banding + Hamming replay over the SAME collected fingerprints
-      // the entries banded (decode stays engine-side — q54 parity)
-      "q120_image_near_dedup" -> fingerprintPairsOracleSql(
-        mediaFingerprints(s, dir, "image"), maxDistance = 3),
-      "q121_audio_near_dedup" -> fingerprintPairsOracleSql(
-        mediaFingerprints(s, dir, "audio"), maxDistance = 3),
-      "q54_bpe_encode" -> Bpe.encodeOracleSql(merges),
-      "q57_kmeans" -> Clustering.kmeansOracleSql(centroids),
-      "q58_semantic_dedup" ->
-        Clustering.semanticDedupOracleSql(centroids, tau = 0.42),
-      "q61_mixture_matrix" ->
-        Clustering.mixtureMatrixOracleSql(centroids),
-      // same (term, idf_micro) literals as the q75 entry — the q54
-      // parity-by-construction move applied to the one float BM25 has
-      "q75_bm25" ->
-        graft.llm.TextStats.bm25OracleSql(bm25Terms(s, dir), k = 20),
-      // q57's centroid-literal move per subspace: codes, then the
-      // reconstruction-ranked search, from the SAME learned codebooks
-      "q79_pq_encode" -> {
-        val cb = pqCodebooks(s, dir)
-        graft.llm.Pq.encodeOracleSql(cb, dsub = cb.head.head.length)
-      },
-      "q80_pq_search" -> {
-        val cb = pqCodebooks(s, dir)
-        graft.llm.Pq.searchOracleSql(cb, dsub = cb.head.head.length,
-          k = 10, queryPred = "q.vec_id < 3")
-      },
-      // both IVF-PQ levels replay from the learned model literals:
-      // coarse assignment, float-rounded residuals, per-subspace
-      // codes, reconstruction, probe ranking
-      "q81_ivfpq_encode" ->
-        graft.llm.IvfPq.encodeOracleSql(ivfPqModel(s, dir)),
-      "q82_ivfpq_search" ->
-        graft.llm.IvfPq.searchOracleSql(ivfPqModel(s, dir),
-          k = 10, nprobe = 2, queryPred = "a.vec_id < 3"),
-      // same (token, cost_micro) + OOV literals as the q88 entry
-      "q88_unigram_surprisal" -> {
-        val (vocab, oov) = unigramLmModel(s, dir)
-        graft.llm.TextStats.unigramSurprisalOracleSql(vocab, oov)
-      },
-      // same vocab + pair-table + backoff literals as the q89 entry
-      "q89_bigram_surprisal" ->
-        graft.llm.TextStats.bigramSurprisalOracleSql(bigramLmModel(s, dir)),
-      // same two (token, cost_micro) + OOV literal tables as q90
-      "q90_moore_lewis" -> {
-        val (iv, io) = inDomainLmModel(s, dir)
-        val (gv, go) = unigramLmModel(s, dir)
-        graft.llm.TextStats.lmContrastOracleSql(iv, io, gv, go)
-      },
-      // same micro-unit weight literals as the q91 entry's fit —
-      // the oracle replays only the (all-BIGINT) scoring projection
-      "q91_quality_classifier" ->
-        graft.llm.Classifier.scoreOracleSql(classifierModel(s, dir)),
-      // same per-bucket delta literals as the q92 entry's two learned
-      // bucket LMs — the oracle replays the per-row list fold
-      "q92_dsir" -> {
-        val (tgt, raw) = dsirModels(s, dir)
-        graft.llm.TextStats.dsirOracleSql(tgt, raw)
-      },
-      // same per-stratum delta literals as the q122 entry's learned
-      // per-language targets — the oracle replays the CASE + list fold
-      "q122_dsir_stratified" -> {
-        val (byLang, raw) = dsirStratModels(s, dir)
-        graft.llm.TextStats.dsirStratifiedOracleSql("lang", byLang, raw)
-      },
-      // same integer quota literals as the q94 entry's driver fold
-      "q94_temperature_mix" ->
-        graft.llm.Sampling.capSampleQuotasOracleSql("documents",
-          "doc_id", "source", temperatureQuotasModel(s, dir)),
-      // the q54 merge-literal count replay composed with the q37 pack
-      // window — one oracle for the fused tokenize→pack plan
-      "q97_tokenize_pack" -> tokenizePackOracleSql(bpeMerges(s, dir)),
-      // same (term, idf_micro) literals as the q75/q98 entries; the
-      // vec ranking replays q22's cosine, the fusion integer RRF
-      "q98_hybrid_rrf" -> graft.llm.TextStats.rrfOracleSql(
-        bm25Terms(s, dir), qVecId = 0L, kText = 20, kVec = 20,
-        kRrf = 60, scale = 1000000000L, k = 10))
-  }
-
-  /** `s` as a SQL string literal. */
-  private def sq(s: String): String = "'" + s.replace("'", "''") + "'"
-
-  /** q04's oracle over the lineitem object at `file`. */
-  private def findFilesOracleSql(file: String): String =
-    s"""SELECT regexp_extract(filename, '[^/]+$$', 0) AS file_name,
-      | COUNT(*) AS n_rows, COUNT(DISTINCT l_orderkey) AS n_keys
-      | FROM parquet_scan(${sq(file)}, filename=true)
-      | WHERE CAST(l_orderkey AS VARCHAR) IN ('7','23','99')
-      | GROUP BY 1""".stripMargin.replace("\n", " ")
-
-  /** q27's oracle over the staged JSON-lines object at `file`. */
-  private def jsonScanOracleSql(file: String): String =
-    s"""SELECT c_custkey, c_name, c_nationkey,
-      | CAST(c_acctbal AS DOUBLE) AS c_acctbal_dbl, c_mktsegment
-      | FROM read_json_auto(${sq(file)})
-      | WHERE CAST(c_custkey AS VARCHAR) IN ('7','23','99')
-      |    OR CAST(c_nationkey AS VARCHAR) IN ('7','23','99')"""
-      .stripMargin.replace("\n", " ")
-
-  /** q97's oracle: [[graft.llm.Bpe.encodeOracleSql]]'s word-level
-    * merge replay (vocabulary-sized) producing per-doc BPE counts,
-    * feeding q37's prefix-sum pack window verbatim (seqLen 256). */
-  private def tokenizePackOracleSql(
-      merges: Seq[graft.llm.Bpe.Merge]): String = {
-    val wrapped = merges.foldLeft(
-      "regexp_replace(w, '(.)', ' \\1 ', 'g')") { (acc, m) =>
-      s"replace($acc, ${sq(" " + m.a + "  " + m.b + " ")}," +
-        s" ${sq(" " + m.a + m.b + " ")})"
-    }
-    s"""WITH dw AS (SELECT doc_id,
-      |    unnest(regexp_extract_all(text, '\\S+')) AS w FROM documents),
-      | wd AS (SELECT DISTINCT w FROM dw),
-      | enc AS (SELECT w, CAST(len(regexp_extract_all($wrapped,
-      |    '[^ ]+')) AS BIGINT) AS n FROM wd),
-      | agg AS (SELECT doc_id, CAST(sum(n) AS BIGINT) AS n
-      |   FROM dw JOIN enc USING (w) GROUP BY doc_id),
-      | c AS (SELECT d.doc_id,
-      |    CAST(COALESCE(a.n, 0) AS BIGINT) AS toks,
-      |    CAST(COALESCE(sum(COALESCE(a.n, 0)) OVER (ORDER BY d.doc_id
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-      |      AS BIGINT) AS off
-      |   FROM documents d LEFT JOIN agg a USING (doc_id)),
-      | g AS (SELECT unnest(generate_series(0,
-      |    (SELECT CAST(sum(toks) // 256 AS BIGINT) FROM c))) AS seq_id)
-      | SELECT c.doc_id, g.seq_id,
-      |   greatest(c.off, g.seq_id * 256) - c.off AS doc_from,
-      |   least(c.off + c.toks, (g.seq_id + 1) * 256) -
-      |     greatest(c.off, g.seq_id * 256) AS n_toks
-      | FROM c JOIN g
-      |   ON g.seq_id BETWEEN c.off // 256 AND (c.off + c.toks - 1) // 256
-      | WHERE c.toks > 0""".stripMargin.replace("\n", " ")
-  }
-
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted for non-SQL-expressible ops (the
-    * driver records a weaker rows-only check). */
-  def oracleSql: Map[String, String] = Map(
-    "q01_find_simple" ->
-      """SELECT c_custkey, c_name, c_nationkey, c_acctbal, c_mktsegment
-        | FROM customer
-        | WHERE CAST(c_custkey AS VARCHAR) IN ('7','23','99')
-        |    OR c_name IN ('7','23','99')""".stripMargin.replace("\n", " "),
-    "q02_find_composite" ->
-      """SELECT c_custkey, c_name, c_nationkey, c_acctbal, c_mktsegment
-        | FROM customer
-        | WHERE (c_mktsegment = 'FURNITURE' AND c_nationkey = 2)
-        |    OR (c_mktsegment = 'MACHINERY' AND c_nationkey = 16)"""
-        .stripMargin.replace("\n", " "),
-    "q03_forget_anti" ->
-      """SELECT c_custkey, c_name, c_nationkey, c_acctbal, c_mktsegment
-        | FROM customer
-        | WHERE NOT (CAST(c_custkey AS VARCHAR) IN ('7','23','99')
-        |         OR c_name IN ('7','23','99'))""".stripMargin.replace("\n", " "),
-    "q05_agg_stats" ->
-      """SELECT l_returnflag, l_linestatus,
-        | CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS sum_qty,
-        | CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))) AS DOUBLE) AS sum_base_price,
-        | CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2)) * (CAST(1 AS DECIMAL(12,2)) - CAST(l_discount AS DECIMAL(12,2)))) AS DOUBLE) AS sum_disc_price,
-        | COUNT(*) AS count_order
-        | FROM lineitem
-        | WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-        | GROUP BY l_returnflag, l_linestatus""".stripMargin.replace("\n", " "),
-    "q06_union_distinct" ->
-      "SELECT c_custkey AS key FROM customer UNION SELECT o_custkey AS key FROM orders",
-    "q07_sort_limit" ->
-      """SELECT o_orderkey, o_totalprice FROM orders
-        | ORDER BY o_totalprice DESC, o_orderkey LIMIT 10"""
-        .stripMargin.replace("\n", " "),
-    "q08_keyset_page" ->
-      """SELECT o_orderkey, o_custkey, o_orderstatus FROM orders
-        | WHERE o_orderkey > 1000 ORDER BY o_orderkey LIMIT 50"""
-        .stripMargin.replace("\n", " "),
-    "q09_join_star" ->
-      """SELECT n_name,
-        | CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2)) * (CAST(1 AS DECIMAL(12,2)) - CAST(l_discount AS DECIMAL(12,2)))) AS DOUBLE) AS revenue,
-        | COUNT(*) AS n_items
-        | FROM lineitem
-        | JOIN orders   ON l_orderkey = o_orderkey
-        | JOIN customer ON o_custkey  = c_custkey
-        | JOIN nation   ON c_nationkey = n_nationkey
-        | GROUP BY n_name""".stripMargin.replace("\n", " "),
-    "q10_semi_exists" ->
-      """SELECT c_custkey, c_name FROM customer
-        | WHERE c_custkey IN (SELECT o_custkey FROM orders)"""
-        .stripMargin.replace("\n", " "),
-    "q11_anti_cleanup" ->
-      """SELECT c_custkey, c_name FROM customer
-        | WHERE c_custkey NOT IN (SELECT o_custkey FROM orders)"""
-        .stripMargin.replace("\n", " "),
-    "q12_events_stats" ->
-      """SELECT event_type, COUNT(*) AS n_events,
-        | CAST(SUM(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS sum_value,
-        | COUNT(DISTINCT user_id) AS n_users
-        | FROM events GROUP BY event_type""".stripMargin.replace("\n", " "),
-    "q13_events_by_user" ->
-      """SELECT user_id, COUNT(*) AS n_events, MAX(event_id) AS max_event_id
-        | FROM events GROUP BY user_id""".stripMargin.replace("\n", " "),
-    "q14_json_extract" ->
-      """SELECT event_type,
-        | CAST(SUM(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k
-        | FROM events GROUP BY event_type""".stripMargin.replace("\n", " "),
-    "q15_window_rank" ->
-      """SELECT user_id, event_id, rn FROM (
-        | SELECT user_id, event_id,
-        |  ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY value DESC, event_id) AS rn
-        | FROM events) WHERE rn <= 3""".stripMargin.replace("\n", " "),
-    "q16_dedup_exact" ->
-      """SELECT md5(text) AS h, MIN(doc_id) AS keep_id, COUNT(*) AS copies
-        | FROM documents GROUP BY md5(text)""".stripMargin.replace("\n", " "),
-    "q17_text_stats" ->
-      """SELECT doc_id, LENGTH(text) AS text_chars,
-        | LENGTH(text) - LENGTH(REPLACE(text, ' ', '')) AS n_spaces
-        | FROM documents""".stripMargin.replace("\n", " "),
-    "q18_find_dup" ->
-      """SELECT c_custkey, c_name, c_nationkey, c_acctbal, c_mktsegment
-        | FROM (SELECT * FROM customer UNION ALL SELECT * FROM customer)
-        | WHERE CAST(c_custkey AS VARCHAR) IN ('7','23','99')
-        |    OR c_name IN ('7','23','99')""".stripMargin.replace("\n", " "),
-    "q19_find_decimal" ->
-      """SELECT c_custkey,
-        | CAST(CAST(c_acctbal AS DECIMAL(12,2)) AS DOUBLE) AS c_acctbal_dbl
-        | FROM customer
-        | WHERE CAST(c_acctbal AS DECIMAL(12,2)) IN
-        |  (CAST('1863.84' AS DECIMAL(12,2)), CAST('2547.4' AS DECIMAL(12,2)),
-        |   CAST('9234.22' AS DECIMAL(12,2)))""".stripMargin.replace("\n", " "),
-    "q20_jobs_fold" ->
-      """WITH ev AS (
+    }, sql("""WITH ev AS (
         |  SELECT user_id AS job_id, event_id,
         |    CASE event_type
         |      WHEN 'signup' THEN 'JobStarted'
@@ -2679,22 +868,68 @@ object SparkEntry {
         |    AS n_object_updated,
         |  CAST(SUM(CASE WHEN name = 'ObjectUpdateFailed' THEN 1 ELSE 0 END) AS BIGINT)
         |    AS n_object_failed
-        | FROM lk GROUP BY job_id""".stripMargin.replace("\n", " "),
-    "q21_partition_prune" ->
-      """SELECT c_custkey, c_name, c_nationkey, c_acctbal, c_mktsegment
+        | FROM lk GROUP BY job_id""".stripMargin.replace("\n", " "))),
+    // §2.2 P6 — partition pruning: Find over a Hive-partitioned copy of
+    // customer with a partition-literal scope; Catalyst prunes the scan to
+    // the two named segment directories (the reference's per-partition
+    // query literals, execute_query.py:97-103). Plan assertion lives in
+    // PartitionPruneSpec.
+    Entry("q21_partition_prune", (s, dir) => {
+      import graft.catalog.{Catalog, Staging, TableDef}
+      val loc = Staging.partitionedCustomer(s, dir)
+      // The CATALOG owns the schema (the reference reads it from Glue,
+      // never from data-file inference — generate_queries.py:264-265)
+      // — so read the staged layout with the source table's schema.
+      // Schema inference dies on a pruned-to-empty partitioned table
+      // (zero data files to infer from; EmptyInputSpec);
+      // a catalog-declared schema reads it as zero rows, correctly.
+      val declared = t(s, dir, "customer").schema
+      val data = s.read.schema(declared).parquet(loc)
+      val table = TableDef("customer_part", loc, DataFormat.Parquet,
+        data.schema, partitionKeys = Seq("c_mktsegment"))
+      val mapper = DataMapper("cp", "customer_part", Seq("c_custkey"),
+        partitionFilter =
+          Map("c_mktsegment" -> Seq("FURNITURE", "MACHINERY")))
+      Catalog.validateMapper(mapper, table)
+      val groups = Finder.plan(mapper, table, simpleQueue)
+      Finder.matchedRows(s, Finder.scoped(data, mapper), groups)
+        .select(col("c_custkey"), col("c_name"), col("c_nationkey"),
+          col("c_acctbal"), col("c_mktsegment"))
+    }, sql("""SELECT c_custkey, c_name, c_nationkey, c_acctbal, c_mktsegment
         | FROM customer
         | WHERE c_mktsegment IN ('FURNITURE', 'MACHINERY')
         |   AND CAST(c_custkey AS VARCHAR) IN ('7','23','99')"""
-        .stripMargin.replace("\n", " "),
-    "q22_ann_brute" -> annOracleSql,
-    "q23_ann_lsh" -> annOracleSql,
-    // auto-tuned to recall 1.0 over the full query sample ≡ exact
-    "q56_ann_autotune" -> annOracleSql,
-    // tuned refines at target 1.0 + full query sample ≡ exact (q56)
-    "q83_pq_refined_tuned" -> annOracleSql,
-    "q84_ivfpq_refined_tuned" -> annOracleSql,
-    "q24_near_dedup" ->
-      """WITH d AS (SELECT doc_id, text, len(text) AS lt FROM documents),
+        .stripMargin.replace("\n", " "))),
+    // LLM §similarity — exact cosine top-10 per query vector: one scan of
+    // the data side against a BROADCAST query set (no data×data cartesian)
+    Entry("q22_ann_brute", (s, dir) => {
+      import graft.llm.Similarity
+      val emb = t(s, dir, "embeddings")
+      Similarity.bruteForceTopK(emb, emb.filter(col("vec_id") < 5),
+        "vec_id", "embedding", 10)
+    }, sql(annOracleSql)),
+    // LLM §similarity — LSH-bucketed ANN with exact re-scoring. bits=2 /
+    // tables=32 is recall-tuned for the near-uniform synthetic vectors
+    // (neighbor cosine ~0.3); clustered real embeddings would use more
+    // bits for pruning at the same recall. Verified exact-equal to the
+    // brute-force oracle at sf0.01.
+    Entry("q23_ann_lsh", (s, dir) => {
+      import graft.llm.RandomHyperplaneLsh
+      val emb = t(s, dir, "embeddings")
+      RandomHyperplaneLsh(dim = 64, bits = 2, tables = 32)
+        .topK(emb, emb.filter(col("vec_id") < 5), "vec_id", "embedding", 10)
+    }, sql(annOracleSql)),
+    // LLM §near-dedup — MinHash-LSH banding over 8-char shingles with
+    // exact Jaccard verification; the oracle computes exact all-pairs
+    // shingle Jaccard, so the hash-match also proves the banding found
+    // every >=0.6 pair (recall 1.0 on this data; 16 bands x 4 rows).
+    Entry("q24_near_dedup", (s, dir) => {
+      import graft.llm.Dedup
+      Dedup.nearDuplicates(t(s, dir, "documents"), "doc_id", "text",
+        shingleLen = 8, bands = 16, rows = 4, threshold = 0.6)
+        .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"),
+          col("jaccard"))
+    }, sql("""WITH d AS (SELECT doc_id, text, len(text) AS lt FROM documents),
         | idx AS (SELECT unnest(range(1, 2000)) AS i),
         | sh AS (SELECT doc_id, substr(text, CAST(i AS INT), 8) AS g
         |   FROM d JOIN idx ON i <= lt - 7 GROUP BY 1, 2),
@@ -2706,9 +941,23 @@ object SparkEntry {
         |   i * 1.0 / (x.n + y.n - i) AS jaccard
         | FROM inter JOIN sz x ON x.doc_id = da JOIN sz y ON y.doc_id = db
         | WHERE i * 1.0 / (x.n + y.n - i) >= 0.6"""
-        .stripMargin.replace("\n", " "),
-    "q25_text_quality" ->
-      """WITH s AS (
+        .stripMargin.replace("\n", " "))),
+    // LLM §text-analysis — token counting, lexical quality scoring,
+    // marker-word language ID, content fingerprint: one codegen'd
+    // projection, no shuffle (graft.llm.TextStats)
+    Entry("q25_text_quality", (s, dir) => {
+      import graft.llm.TextStats._
+      val txt = col("text")
+      t(s, dir, "documents").select(
+        col("doc_id"),
+        tokenCount(txt).as("n_tokens"),
+        subwordCount(txt).as("n_subwords"),
+        distinctTokenRatio(txt).as("distinct_ratio"),
+        stopwordRatio(txt).as("stopword_ratio"),
+        qualityScore(txt).as("quality"),
+        languageId(txt).as("lang_guess"),
+        fingerprint(txt).as("fingerprint"))
+    }, sql("""WITH s AS (
         |  SELECT doc_id, text,
         |    len(string_split(text, ' ')) AS n_tokens,
         |    len(list_distinct(string_split(text, ' '))) AS n_distinct,
@@ -2744,10 +993,30 @@ object SparkEntry {
         |         greatest(h_en, h_de, h_fr, h_es) > 0 THEN 'es'
         |    ELSE 'und' END AS lang_guess,
         |  md5(regexp_replace(lower(text), '\s+', ' ', 'g')) AS fingerprint
-        | FROM r""".stripMargin.replace("\n", " "),
-    // q25's per-row CTEs, folded per language with exact aggregates
-    "q36_corpus_stats" ->
-      """WITH s AS (
+        | FROM r""".stripMargin.replace("\n", " "))),
+    // LLM §text-analysis — the corpus REPORT: per-language doc counts,
+    // token/subword volumes and quality extrema in one map-side
+    // projection + one shuffle (the pre-training "what's in this
+    // corpus" summary). Only exact aggregates: long sums and
+    // min/max over the identical per-row doubles q25 hash-verifies —
+    // no float mean whose summation order differs across engines.
+    Entry("q36_corpus_stats", (s, dir) => {
+      import graft.llm.TextStats._
+      val txt = col("text")
+      t(s, dir, "documents")
+        .select(languageId(txt).as("lang_guess"),
+          tokenCount(txt).as("_tc"),
+          subwordCount(txt).as("_sw"),
+          qualityScore(txt).as("_q"))
+        .groupBy(col("lang_guess"))
+        .agg(count(lit(1)).as("n_docs"),
+          sum(col("_tc").cast("long")).as("total_tokens"),
+          sum(col("_sw").cast("long")).as("total_subwords"),
+          min(col("_q")).as("min_quality"),
+          max(col("_q")).as("max_quality"))
+    },
+      // q25's per-row CTEs, folded per language with exact aggregates
+      sql("""WITH s AS (
         |  SELECT doc_id, text,
         |    len(string_split(text, ' ')) AS n_tokens,
         |    len(list_distinct(string_split(text, ' '))) AS n_distinct,
@@ -2788,28 +1057,127 @@ object SparkEntry {
         |  CAST(sum(n_subwords) AS BIGINT) AS total_subwords,
         |  min(quality) AS min_quality,
         |  max(quality) AS max_quality
-        | FROM p GROUP BY 1""".stripMargin.replace("\n", " "),
-    "q26_multimodal_frames" ->
-      """SELECT doc_id,
+        | FROM p GROUP BY 1""".stripMargin.replace("\n", " "))),
+    // LLM §multimodal — binary payload plumbing: metadata struct + frame
+    // sampling over byte windows (decode kernels are deterministic stubs;
+    // the schema/partition/explode shape is the real contract)
+    Entry("q26_multimodal_frames", (s, dir) => {
+      import graft.llm.Multimodal
+      val media = Multimodal.withPayload(
+        t(s, dir, "documents"), "doc_id", "text")
+      Multimodal.sampleFrames(media, frameBytes = 64)
+        .groupBy(col("id").as("doc_id"))
+        .agg(max(col("meta.n_bytes")).as("n_bytes"),
+          count(lit(1)).as("n_frames"),
+          sum(length(col("frame"))).as("frame_bytes"))
+    }, sql("""SELECT doc_id,
         |  CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
         |  CAST(ceil(octet_length(encode(text)) * 1.0 / 64) AS BIGINT)
         |    AS n_frames,
         |  CAST(octet_length(encode(text)) AS BIGINT) AS frame_bytes
-        | FROM documents""".stripMargin.replace("\n", " "),
-    "q28_cos_pairs" ->
-      """SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+        | FROM documents""".stripMargin.replace("\n", " "))),
+    // §2.1 S2 — JSON-lines scan with DECLARED schema (no inference pass)
+    // + Find over the row format: matches fan across both identifier
+    // columns; the staged file is deterministic per sf dir. The schema
+    // is declared CATALOG-STYLE from Glue-type DDL strings
+    // (Catalog.tableFromDdl) — no parquet footer borrowed, exactly how
+    // the reference registers a JSON table from its Glue entry.
+    Entry("q27_json_scan", (s, dir) => {
+      import graft.catalog.{Catalog, Staging}
+      val file = Staging.jsonCustomer(s, dir)
+      val table = Catalog.tableFromDdl("customer_json", file,
+        DataFormat.JsonLines,
+        Seq("c_custkey" -> "bigint", "c_name" -> "string",
+          "c_nationkey" -> "int", "c_acctbal" -> "double",
+          "c_mktsegment" -> "string"))
+      val data = s.read.schema(table.schema).json(file)
+      val mapper = DataMapper("cj", "customer_json",
+        Seq("c_custkey", "c_nationkey"), format = DataFormat.JsonLines)
+      val groups = Finder.plan(mapper, table, simpleQueue)
+      Finder.matchedRows(s, data, groups)
+        .select(col("c_custkey"), col("c_name"), col("c_nationkey"),
+          col("c_acctbal").cast("double").as("c_acctbal_dbl"),
+          col("c_mktsegment"))
+    }, (_, dir) => jsonScanOracleSql(
+      graft.catalog.Staging.jsonCustomerFile(dir))),
+    // LLM §near-dedup (embedding) — cosine near-pairs via LSH buckets +
+    // exact re-score. Bit width is AUTO-TUNED from the corpus size
+    // (bits ≈ log2(n/64)), so candidate volume stays ~tables·n·64/2 —
+    // linear in n — instead of degenerating to all-pairs at a fixed low
+    // bit width. Recall on the near-uniform synthetic vectors (every
+    // oracle pair within 0.11 of the 0.4 threshold — the hardest LSH
+    // regime) is verified exact at the sf0.01 gate; at larger SFs the
+    // pruning is real and any capped hot bucket is audited (Banding).
+    Entry("q28_cos_pairs", (s, dir) => {
+      import graft.llm.RandomHyperplaneLsh
+      val emb = t(s, dir, "embeddings")
+      // corpus size for the bit width comes from the parquet FOOTERS
+      // (driver-side metadata, no job) — an emb.count() here paid a
+      // full scan stage per invocation just to size a knob
+      val n = graft.tools.ParquetStats.rowCount(
+        new org.apache.hadoop.conf.Configuration(),
+        s"$dir/embeddings.parquet")
+      RandomHyperplaneLsh.auto(dim = 64, n = n,
+          targetBucket = 64, tables = 16)
+        .nearPairs(emb, "vec_id", "embedding", threshold = 0.4)
+        .select(col("id_a"), col("id_b"), col("cosine"))
+    }, sql("""SELECT a.vec_id AS id_a, b.vec_id AS id_b,
         | list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
         |                        CAST(b.embedding AS DOUBLE[])) AS cosine
         | FROM embeddings a, embeddings b
         | WHERE a.vec_id < b.vec_id AND
         |  list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
         |                         CAST(b.embedding AS DOUBLE[])) >= 0.4"""
-        .stripMargin.replace("\n", " "),
-    // exact all-pairs shingle Jaccard at 0.8 — the q24 ground truth with
-    // the q29 threshold; the engine side must reproduce it EXACTLY
-    // (prefix/positional filters are lossless), not approximately
-    "q29_jaccard_exact" ->
-      """WITH d AS (SELECT doc_id, text, len(text) AS lt FROM documents),
+        .stripMargin.replace("\n", " "))),
+    // LLM §decontamination (embeddings) — cross-corpus cosine
+    // near-JOIN: the embedding-level contamination screen. Same
+    // hyperplane signatures as q28; candidates pair the train slice's
+    // buckets against the benchmark slice's only, then re-score
+    // exactly. Recall at this (bits, tables) is verified exact against
+    // the all-pairs oracle at the sf0.01 gate, like q28.
+    Entry("q35_emb_decontaminate", (s, dir) => {
+      import graft.llm.RandomHyperplaneLsh
+      val emb = t(s, dir, "embeddings")
+      val n = graft.tools.ParquetStats.rowCount(
+        new org.apache.hadoop.conf.Configuration(),
+        s"$dir/embeddings.parquet")
+      RandomHyperplaneLsh.auto(dim = 64, n = n,
+          targetBucket = 64, tables = 16)
+        .nearJoin(emb.filter(col("vec_id") % 5 =!= 0),
+          emb.filter(col("vec_id") % 5 === 0),
+          "vec_id", "embedding", threshold = 0.4)
+        .select(col("id_a").as("train_id"), col("id_b").as("bench_id"),
+          col("cosine"))
+    },
+      // exact all-pairs CROSS cosine between the vec_id slices
+      sql("""SELECT a.vec_id AS train_id, b.vec_id AS bench_id,
+        | list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
+        |                        CAST(b.embedding AS DOUBLE[])) AS cosine
+        | FROM embeddings a, embeddings b
+        | WHERE a.vec_id % 5 <> 0 AND b.vec_id % 5 = 0 AND
+        |  list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
+        |                         CAST(b.embedding AS DOUBLE[])) >= 0.4"""
+        .stripMargin.replace("\n", " "))),
+    // LLM §near-dedup — EXACT n-gram Jaccard pairs via the
+    // prefix-filtered set-similarity join (AllPairs + PPJoin positional
+    // filter): no hashing, recall 1 by construction; prefix, length,
+    // and positional filters keep the inverted-index self-join bounded.
+    // threshold=0.8 matches the corpus: every true near-dup pair here
+    // has J >= 0.8 (verified against the all-pairs oracle at 0.5-0.9
+    // and shingle lengths 8-16 — identical pair sets). shingleLen=16:
+    // 8-char windows over these small-vocabulary texts yield only ~13k
+    // distinct shingles with document frequencies in the hundreds,
+    // which starves ANY exact prefix scheme of rare shingles; 16-char
+    // windows restore a discriminative vocabulary, and the filters'
+    // pruning power also scales with t.
+    Entry("q29_jaccard_exact", (s, dir) =>
+      docPairs(s, dir)
+        .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"),
+          col("jaccard")),
+      // exact all-pairs shingle Jaccard at 0.8 — the q24 ground truth with
+      // the q29 threshold; the engine side must reproduce it EXACTLY
+      // (prefix/positional filters are lossless), not approximately
+      sql("""WITH d AS (SELECT doc_id, text, len(text) AS lt FROM documents),
         | idx AS (SELECT unnest(range(1, 2000)) AS i),
         | sh AS (SELECT doc_id, substr(text, CAST(i AS INT), 16) AS g
         |   FROM d JOIN idx ON i <= lt - 15 GROUP BY 1, 2),
@@ -2821,22 +1189,28 @@ object SparkEntry {
         |   i * 1.0 / (x.n + y.n - i) AS jaccard
         | FROM inter JOIN sz x ON x.doc_id = da JOIN sz y ON y.doc_id = db
         | WHERE i * 1.0 / (x.n + y.n - i) >= 0.8"""
-        .stripMargin.replace("\n", " "),
-    // exact all-pairs CROSS cosine between the vec_id slices
-    "q35_emb_decontaminate" ->
-      """SELECT a.vec_id AS train_id, b.vec_id AS bench_id,
-        | list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-        |                        CAST(b.embedding AS DOUBLE[])) AS cosine
-        | FROM embeddings a, embeddings b
-        | WHERE a.vec_id % 5 <> 0 AND b.vec_id % 5 = 0 AND
-        |  list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-        |                         CAST(b.embedding AS DOUBLE[])) >= 0.4"""
-        .stripMargin.replace("\n", " "),
-    // q29's shingle CTEs restricted to the two doc_id slices — exact
-    // all-pairs CROSS jaccard between train (doc_id%5!=0) and bench
-    // (doc_id%5=0) sides
-    "q34_decontaminate" ->
-      """WITH d AS (SELECT doc_id, text, len(text) AS lt FROM documents),
+        .stripMargin.replace("\n", " "))),
+    // LLM §decontamination — EXACT cross-corpus Jaccard JOIN: the
+    // train/test contamination screen. The 1-in-5 doc_id slice plays
+    // the benchmark corpus; the rest is the training corpus. Same
+    // AllPairs/PPJoin machinery as q29 (shared census over both sides),
+    // but candidates pair LEFT prefixes against RIGHT prefixes only —
+    // within-corpus pairs are never enumerated, the dominant saving
+    // when the train side dwarfs the benchmark side.
+    Entry("q34_decontaminate", (s, dir) => {
+      import graft.llm.Dedup
+      val docs = t(s, dir, "documents")
+      Dedup.jaccardJoinExact(
+        docs.filter(col("doc_id") % 5 =!= 0),
+        docs.filter(col("doc_id") % 5 === 0),
+        "doc_id", "text", shingleLen = 16, threshold = 0.8)
+        .select(col("id_a").as("train_id"), col("id_b").as("bench_id"),
+          col("jaccard"))
+    },
+      // q29's shingle CTEs restricted to the two doc_id slices — exact
+      // all-pairs CROSS jaccard between train (doc_id%5!=0) and bench
+      // (doc_id%5=0) sides
+      sql("""WITH d AS (SELECT doc_id, text, len(text) AS lt FROM documents),
         | idx AS (SELECT unnest(range(1, 2000)) AS i),
         | sh AS (SELECT doc_id, substr(text, CAST(i AS INT), 16) AS g
         |   FROM d JOIN idx ON i <= lt - 15 GROUP BY 1, 2),
@@ -2849,143 +1223,542 @@ object SparkEntry {
         |   i * 1.0 / (x.n + y.n - i) AS jaccard
         | FROM inter JOIN sz x ON x.doc_id = da JOIN sz y ON y.doc_id = db
         | WHERE i * 1.0 / (x.n + y.n - i) >= 0.8"""
-        .stripMargin.replace("\n", " "),
-    "q30_ann_ivf" -> annOracleSql,
-    // q29's exact pair set, transitively closed by a recursive CTE:
-    // every (node, reachable root) pair enumerates, min root wins
-    "q31_dedup_clusters" ->
-      s"""$clusterOracleCtes
+        .stripMargin.replace("\n", " "))),
+    // LLM §similarity — IVF coarse-quantizer ANN: data assigned once to
+    // nlist sampled-centroid lists, each query probes its nprobe nearest
+    // lists only. nprobe=14/16 and the centroid-sample seed are
+    // recall-tuned for the near-uniform synthetic vectors (verified
+    // exact-equal to the brute oracle at sf0.01, with margin: exact at
+    // nprobe=13 too); clustered real embeddings concentrate neighbors in
+    // few lists and probe far fewer.
+    Entry("q30_ann_ivf", (s, dir) => {
+      import graft.llm.Similarity
+      val emb = t(s, dir, "embeddings")
+      Similarity.ivfTopK(emb, emb.filter(col("vec_id") < 5),
+        "vec_id", "embedding", 10, nlist = 16, nprobe = 14, sampleSeed = 6)
+    }, sql(annOracleSql)),
+    // LLM §dedup — transitive duplicate CLUSTERS over the exact-Jaccard
+    // pairs: connected components via alternating large-star/small-star
+    // (O(log n) rounds — never diameter-many), cluster label = min
+    // doc_id of the component. The oracle recomputes the same pairs in
+    // SQL and closes them transitively with a recursive CTE.
+    Entry("q31_dedup_clusters", (s, dir) =>
+      docClusters(s, dir)
+        .select(col("id_a").as("doc_id"), col("cluster_id")),
+      // q29's exact pair set, transitively closed by a recursive CTE:
+      // every (node, reachable root) pair enumerates, min root wins
+      sql(s"""$clusterOracleCtes
         | SELECT id AS doc_id, cluster_id FROM cl"""
-        .stripMargin.replace("\n", " "),
-    // q31's cluster CTEs aggregated twice: the duplication PROFILE
-    "q65_dup_profile" ->
-      s"""$clusterOracleCtes,
+        .stripMargin.replace("\n", " "))),
+    // LLM §dedup — the duplication PROFILE (the audit artifact a dedup
+    // run reports): cluster-size histogram over the q31 components —
+    // (size, how many clusters, how many docs they hold). Two hash
+    // aggregations with map-side partials; reads the stored cluster
+    // artifact.
+    Entry("q65_dup_profile", (s, dir) =>
+      clusterArtifact(s, dir)
+        .groupBy(col("cluster_id"))
+        .agg(count(lit(1)).as("cluster_size"))
+        .groupBy(col("cluster_size"))
+        .agg(count(lit(1)).as("n_clusters"))
+        .select(col("cluster_size"), col("n_clusters"),
+          (col("cluster_size") * col("n_clusters")).as("n_docs")),
+      // q31's cluster CTEs aggregated twice: the duplication PROFILE
+      sql(s"""$clusterOracleCtes,
         | csize AS (SELECT cluster_id, count(*) AS cluster_size
         |   FROM cl GROUP BY 1)
         | SELECT cluster_size, count(*) AS n_clusters,
         |   cluster_size * count(*) AS n_docs
-        | FROM csize GROUP BY 1""".stripMargin.replace("\n", " "),
-    // the oracle may global-sort: ROW_NUMBER over (23-bit md5 fold,
-    // id) — the engine side is the range-shuffle prefix sum
-    "q96_epoch_shuffle" ->
-      """WITH h AS (SELECT doc_id,
-        |    ('0x' || substr(md5('1#' || CAST(doc_id AS VARCHAR)), 1, 6))
-        |      ::BIGINT % 8388608 AS hb
-        |   FROM documents),
-        | r AS (SELECT doc_id,
-        |    ROW_NUMBER() OVER (ORDER BY hb, doc_id) - 1 AS rank0
-        |   FROM h)
-        | SELECT doc_id, rank0 // 64 AS shard, rank0 % 64 AS pos
-        | FROM r""".stripMargin.replace("\n", " "),
-    // the q29 shingle CTEs (positions kept, no GROUP BY dedup) + a
-    // HAVING>=2 dup cut + the standard running-max interval union
-    "q95_dup_coverage" ->
-      """WITH d AS (SELECT doc_id, text, len(text) AS lt FROM documents
-        |   WHERE doc_id IS NOT NULL),
-        | idx AS (SELECT unnest(range(1, 2000)) AS i),
-        | sh AS (SELECT doc_id, CAST(i AS BIGINT) AS i,
-        |    substr(text, CAST(i AS INT), 16) AS g
-        |   FROM d JOIN idx ON i <= lt - 15),
-        | dup AS (SELECT g FROM sh GROUP BY g HAVING count(*) >= 2),
-        | hit AS (SELECT doc_id, i FROM sh JOIN dup USING (g)),
-        | cov AS (SELECT doc_id, greatest(CAST(0 AS BIGINT), (i + 15) -
-        |    greatest(i - 1, COALESCE(max(i + 15) OVER (
-        |      PARTITION BY doc_id ORDER BY i
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-        |      CAST(0 AS BIGINT)))) AS c FROM hit),
-        | agg AS (SELECT doc_id, CAST(sum(c) AS BIGINT) AS dup_chars
-        |   FROM cov GROUP BY doc_id)
-        | SELECT d.doc_id, CAST(d.lt AS BIGINT) AS n_chars,
-        |   COALESCE(agg.dup_chars, CAST(0 AS BIGINT)) AS dup_chars,
-        |   CASE WHEN d.lt > 0 THEN
-        |     COALESCE(agg.dup_chars, CAST(0 AS BIGINT)) * 1000000
-        |       // CAST(d.lt AS BIGINT)
-        |     ELSE CAST(0 AS BIGINT) END AS dup_micro
-        | FROM d LEFT JOIN agg ON agg.doc_id = d.doc_id"""
-        .stripMargin.replace("\n", " "),
-    // q31's cluster CTEs + the same quantized md5 predicate on the
-    // cluster representative (0.15 → 9830/65536 → hex '2666')
-    "q93_leakage_split" ->
-      s"""$clusterOracleCtes
-        | SELECT d.doc_id,
-        |   COALESCE(cl.cluster_id, d.doc_id) AS cluster_rep,
-        |   CASE WHEN substr(md5(CAST(COALESCE(cl.cluster_id, d.doc_id)
-        |       AS VARCHAR)), 1, 4) < '2666'
-        |     THEN 'valid' ELSE 'train' END AS split
-        | FROM documents d LEFT JOIN cl ON cl.id = d.doc_id"""
-        .stripMargin.replace("\n", " "),
-    // the q72 CTEs + the same deterministic 2-term pick + intersection
-    "q73_conjunctive_search" ->
-      """WITH dt AS (SELECT DISTINCT doc_id, t AS token FROM (
-        |    SELECT doc_id, unnest(list_filter(
-        |      string_split(text, ' '), x -> x <> '')) AS t
-        |    FROM documents)),
-        | dfs AS (SELECT token, count(*) AS df FROM dt GROUP BY 1
-        |   HAVING count(*) >= 5 AND count(*) <= 400),
-        | terms AS (SELECT token FROM dfs
-        |   ORDER BY df DESC, token LIMIT 2)
-        | SELECT dt.doc_id, count(*) AS n_matched
-        | FROM dt JOIN terms USING (token)
-        | GROUP BY 1 HAVING count(*) = 2"""
-        .stripMargin.replace("\n", " "),
-    // the q73 replay with the pick widened to 4 terms (AND of 4 lists)
-    "q74_conjunctive_k" ->
-      """WITH dt AS (SELECT DISTINCT doc_id, t AS token FROM (
-        |    SELECT doc_id, unnest(list_filter(
-        |      string_split(text, ' '), x -> x <> '')) AS t
-        |    FROM documents)),
-        | dfs AS (SELECT token, count(*) AS df FROM dt GROUP BY 1
-        |   HAVING count(*) >= 5 AND count(*) <= 400),
-        | terms AS (SELECT token FROM dfs
-        |   ORDER BY df DESC, token LIMIT 4)
-        | SELECT dt.doc_id, count(*) AS n_matched
-        | FROM dt JOIN terms USING (token)
-        | GROUP BY 1 HAVING count(*) = 4"""
-        .stripMargin.replace("\n", " "),
-    // bigram table replay: 1-based list slices (the q62 idiom), same
-    // (freq desc, gram asc) deterministic cut
-    "q76_top_bigrams" ->
-      """WITH d AS (SELECT list_filter(
-        |     string_split(text, ' '), x -> x <> '') AS ts
-        |   FROM documents),
-        | g AS (SELECT unnest(list_transform(range(1, len(ts)),
-        |     i -> ts[i] || ' ' || ts[i+1])) AS ngram
-        |   FROM d WHERE len(ts) >= 2)
-        | SELECT ngram, CAST(count(*) AS BIGINT) AS freq
-        | FROM g GROUP BY 1 ORDER BY freq DESC, ngram LIMIT 15"""
-        .stripMargin.replace("\n", " "),
-    // the q76 grams + the same deterministic top-1 pick, then the
-    // per-doc adjacency count as a gram-table join
-    "q77_phrase_search" ->
-      """WITH d AS (SELECT doc_id, list_filter(
-        |     string_split(text, ' '), x -> x <> '') AS ts
-        |   FROM documents),
-        | g AS (SELECT doc_id, unnest(list_transform(range(1, len(ts)),
-        |     i -> ts[i] || ' ' || ts[i+1])) AS ngram
-        |   FROM d WHERE len(ts) >= 2),
-        | top AS (SELECT ngram, count(*) AS c FROM g GROUP BY 1
-        |   ORDER BY c DESC, ngram LIMIT 1)
-        | SELECT g.doc_id, CAST(count(*) AS BIGINT) AS n_occurrences
-        | FROM g JOIN top USING (ngram) GROUP BY 1"""
-        .stripMargin.replace("\n", " "),
-    // the q64 (len, id) rank + integer ceil target ranks
-    "q78_length_percentiles" ->
-      """WITH s AS (SELECT doc_id,
-        |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
+        | FROM csize GROUP BY 1""".stripMargin.replace("\n", " "))),
+    // LLM §sampling — deterministic md5-keyed subsample: map-only,
+    // shuffle-free, reproducible across engines/runs/partitionings
+    // (rand(seed) is none of those); the oracle states the identical
+    // predicate
+    Entry("q32_det_sample", (s, dir) => {
+      import graft.llm.Sampling
+      Sampling.deterministicSample(t(s, dir, "documents"), "doc_id", 0.25)
+        .select(col("doc_id"), length(col("text")).as("text_chars"))
+    },
+      // same md5-prefix predicate verbatim; 0.25 * 65536 = 16384 = 0x4000
+      sql("""SELECT doc_id, LENGTH(text) AS text_chars FROM documents
+        | WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) < '4000'"""
+        .stripMargin.replace("\n", " "))),
+    // LLM §text — corpus vocabulary top-k by token frequency, ties by
+    // token: partial per-partition top-k via TakeOrderedAndProject, no
+    // global sort of the vocabulary
+    Entry("q33_vocab_topk", (s, dir) => {
+      import graft.llm.TextStats
+      TextStats.topTokens(t(s, dir, "documents"), "text", 100)
+    }, sql("""SELECT token, count(*) AS freq FROM (
+        | SELECT unnest(string_split_regex(text, '\s+')) AS token
+        | FROM documents)
+        | WHERE token <> ''
+        | GROUP BY token ORDER BY freq DESC, token LIMIT 100"""
+        .stripMargin.replace("\n", " "))),
+    // LLM §packing — concat-and-chunk the corpus into 256-token
+    // training sequences: distributed prefix sum (range repartition +
+    // per-partition scan + broadcast bases — NO single-partition
+    // window), then map-side explode of each doc's overlapped sequence
+    // range. Output is the exact pack manifest.
+    Entry("q37_seq_pack", (s, dir) => {
+      import graft.llm.{Packing, TextStats}
+      Packing.packSequences(t(s, dir, "documents"), "doc_id",
+        TextStats.tokenCount(col("text")), seqLen = 256)
+    },
+      // q37: the window ORDER BY prefix sum is the oracle's luxury — the
+      // Spark side computes the same offsets distributed. The series
+      // theta-join replicates the explode over overlapped sequences.
+      sql("""WITH c AS (
+        |  SELECT doc_id,
+        |    CAST(len(string_split(text,' ')) AS BIGINT) AS toks,
+        |    CAST(COALESCE(sum(len(string_split(text,' '))) OVER (
+        |      ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND
+        |      1 PRECEDING), 0) AS BIGINT) AS off
         |  FROM documents),
-        | r AS (SELECT n_tokens,
-        |    ROW_NUMBER() OVER (ORDER BY n_tokens, doc_id) - 1 AS rank0
-        |  FROM s),
-        | n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM s)
-        | SELECT p, n_tokens
-        | FROM (VALUES (5),(25),(50),(75),(95),(99)) ps(p), r, n
-        | WHERE r.rank0 = (p * n.n + 99) // 100 - 1"""
-        .stripMargin.replace("\n", " "),
-    // postings replay: DISTINCT (token, doc) + df window + a sorted
-    // list STRINGIFIED (comma-joined) — scalar cells the comparator
-    // can sort; identical sorted lists stringify identically
-    "q72_inverted_index" ->
-      """WITH dt AS (SELECT DISTINCT doc_id, t AS token FROM (
+        | g AS (
+        |  SELECT unnest(generate_series(0,
+        |    (SELECT CAST(sum(len(string_split(text,' ')))//256 AS BIGINT)
+        |     FROM documents))) AS seq_id)
+        | SELECT c.doc_id, g.seq_id,
+        |   greatest(c.off, g.seq_id*256) - c.off AS doc_from,
+        |   least(c.off+c.toks, (g.seq_id+1)*256) -
+        |     greatest(c.off, g.seq_id*256) AS n_toks
+        | FROM c JOIN g
+        |   ON g.seq_id BETWEEN c.off//256 AND (c.off+c.toks-1)//256
+        | WHERE c.toks > 0""".stripMargin.replace("\n", " "))),
+    // LLM §chunking — overlapping 96-char windows every 64 chars (the
+    // retrieval-index shape): length arithmetic + explode + substring,
+    // codegen'd and shuffle-free
+    Entry("q38_chunking", (s, dir) => {
+      import graft.llm.Packing
+      Packing.chunk(t(s, dir, "documents"), "doc_id", "text",
+        width = 96, stride = 64)
+    }, sql("""WITH d AS (
+        |  SELECT doc_id, text,
+        |    greatest(CAST(ceil((len(text)-96)/64.0) AS BIGINT), 0)
+        |      AS last_chunk
+        |  FROM documents),
+        | g AS (
+        |  SELECT unnest(generate_series(0,
+        |    (SELECT max(greatest(CAST(ceil((len(text)-96)/64.0) AS
+        |     BIGINT), 0)) FROM documents))) AS chunk_id)
+        | SELECT d.doc_id, g.chunk_id,
+        |   substr(d.text, CAST(g.chunk_id*64 + 1 AS INTEGER), 96)
+        |     AS chunk
+        | FROM d JOIN g ON g.chunk_id <= d.last_chunk"""
+        .stripMargin.replace("\n", " "))),
+    // §events — 30-minute-gap sessionization: every window is
+    // PARTITIONED BY user_id (lag → gap flag → per-user running sum),
+    // so the scan shuffles once on the key and sessions build in
+    // parallel across users — no global window, the shape that holds
+    // when one table has a billion users. Ties broken by event_id and
+    // an explicit ROWS frame: identical rows on both engines.
+    // Timestamps are truncated to MICROSECONDS up front: the events
+    // parquet stores TIMESTAMP(NANOS) and DuckDB 1.0 reads that column
+    // at micro precision, so sessioning over raw nanos would disagree
+    // with the oracle in the last three digits on ~every row. Both
+    // engines therefore session over identical micro-truncated values
+    // (a <1 µs delta never flips a 30-minute gap in practice).
+    Entry("q39_sessionize", (s, dir) => {
+      import org.apache.spark.sql.expressions.Window
+      val byUser = Window.partitionBy(col("user_id"))
+        .orderBy(col("ts"), col("event_id"))
+      val gapNs = 30L * 60 * 1000000000L
+      t(s, dir, "events")
+        .withColumn("ts", col("ts") - col("ts") % 1000L)
+        .withColumn("_prev", lag(col("ts"), 1).over(byUser))
+        .withColumn("_new",
+          when(col("_prev").isNull || col("ts") - col("_prev") > gapNs, 1L)
+            .otherwise(0L))
+        .withColumn("session_id", sum(col("_new")).over(
+          byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+        .groupBy(col("user_id"), col("session_id"))
+        .agg(count(lit(1)).as("n_events"),
+          min(col("ts")).as("start_ns"),
+          max(col("ts")).as("end_ns"))
+    },
+      // DuckDB 1.0 reads the TIMESTAMP(NANOS) column at MICRO precision,
+      // so epoch_ns(ts) here is nanos-truncated-to-micros; the Spark side
+      // truncates its raw int64 nanos the same way (ts - ts % 1000) —
+      // both engines session over identical micro-truncated values
+      sql("""WITH o AS (
+        |  SELECT user_id, event_id, epoch_ns(ts) AS tns,
+        |    lag(epoch_ns(ts)) OVER (PARTITION BY user_id
+        |      ORDER BY ts, event_id) AS prev
+        |  FROM events),
+        | f AS (
+        |  SELECT *, CASE WHEN prev IS NULL OR tns - prev > 1800000000000
+        |    THEN 1 ELSE 0 END AS nw FROM o),
+        | s2 AS (
+        |  SELECT user_id, tns, CAST(sum(nw) OVER (
+        |    PARTITION BY user_id ORDER BY tns, event_id
+        |    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_id
+        |  FROM f)
+        | SELECT user_id, session_id, count(*) AS n_events,
+        |   min(tns) AS start_ns, max(tns) AS end_ns
+        | FROM s2 GROUP BY 1, 2""".stripMargin.replace("\n", " "))),
+    // §streaming — the [[graft.streaming.Sessionize]] operator's BATCH
+    // path (the q39 window shape re-expressed as the streaming
+    // operator's differential oracle), gated here on the same events
+    // table in epoch-millis units. The raw int64 nanos convert to a
+    // micros timestamp up front (ns div 1000 — exactly the precision
+    // DuckDB reads this NANOS parquet column at), and the operator
+    // emits millisecond extents: both engines truncate identically.
+    Entry("q40_sessions_ms", (s, dir) => {
+      import graft.streaming.Sessionize
+      Sessionize.sessions(
+        t(s, dir, "events")
+          .withColumn("ts", timestamp_micros(expr("ts div 1000"))),
+        "user_id", "ts", gapMs = 30L * 60 * 1000, "10 minutes")
+    },
+      // millis sessionization (the streaming operator's batch path):
+      // epoch_ms truncates DuckDB's micro TIMESTAMP the same way the
+      // Spark side's unix_millis truncates its ns-div-1000 micros
+      sql("""WITH o AS (
+        |  SELECT CAST(user_id AS VARCHAR) AS user_id,
+        |    epoch_ms(ts) AS tms,
+        |    lag(epoch_ms(ts)) OVER (PARTITION BY user_id
+        |      ORDER BY epoch_ms(ts)) AS prev
+        |  FROM events),
+        | f AS (
+        |  SELECT *, CASE WHEN prev IS NULL OR tms - prev > 1800000
+        |    THEN 1 ELSE 0 END AS nw FROM o),
+        | s2 AS (
+        |  SELECT user_id, tms, CAST(sum(nw) OVER (
+        |    PARTITION BY user_id ORDER BY tms
+        |    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS sid
+        |  FROM f)
+        | SELECT user_id, min(tms) AS start_ms, max(tms) AS end_ms,
+        |   count(*) AS n_events
+        | FROM s2 GROUP BY user_id, sid""".stripMargin.replace("\n", " "))),
+    // LLM §quality — common-word ratio (Gopher-style cheap filter
+    // signal): per doc, the fraction of tokens inside the corpus
+    // top-100 vocabulary. Pass 1 is the q33 vocabulary cut
+    // (TakeOrderedAndProject); pass 2 is a pure map against the
+    // 100-entry literal vocab — the exploded tokens NEVER shuffle
+    // (plan-asserted in SamplingSpec).
+    Entry("q41_common_ratio", (s, dir) => {
+      import graft.llm.TextStats
+      TextStats.commonWordRatio(t(s, dir, "documents"),
+        "doc_id", "text", 100)
+    },
+      // ratio = m*1.0/n over two exactly-agreed BIGINTs — the same IEEE
+      // division the Spark side performs, no rounding epsilon needed
+      sql("""WITH toks AS (
+        |  SELECT doc_id, token FROM (
+        |    SELECT doc_id,
+        |      unnest(string_split_regex(text, '\s+')) AS token
+        |    FROM documents)
+        |  WHERE token <> ''),
+        | vocab AS (
+        |  SELECT token FROM toks GROUP BY token
+        |  ORDER BY count(*) DESC, token LIMIT 100),
+        | per AS (
+        |  SELECT doc_id, count(*) AS n_tokens,
+        |    count(*) FILTER (WHERE token IN (SELECT token FROM vocab))
+        |      AS n_common
+        |  FROM toks GROUP BY doc_id)
+        | SELECT d.doc_id, coalesce(p.n_tokens, 0) AS n_tokens,
+        |   coalesce(p.n_common, 0) AS n_common,
+        |   CASE WHEN coalesce(p.n_tokens, 0) = 0 THEN 0.0
+        |        ELSE p.n_common * 1.0 / p.n_tokens END AS common_ratio
+        | FROM documents d LEFT JOIN per p USING (doc_id)"""
+        .stripMargin.replace("\n", " "))),
+    // LLM §compliance — PII audit: the Find phase extended to
+    // unstructured text (per-doc detector counts; the same regexes run
+    // verbatim in the DuckDB oracle — the SQL is BUILT from
+    // PiiScrub.Detectors, so engine parity is by construction). One
+    // codegen'd projection, no shuffle (PiiScrubSpec).
+    Entry("q42_pii_audit", (s, dir) => {
+      import graft.llm.PiiScrub
+      val counts = t(s, dir, "documents")
+        .select(col("doc_id") +: PiiScrub.countColumns(col("text")): _*)
+      val total = PiiScrub.Detectors
+        .map { case (k, _, _) => col(s"n_$k") }.reduce(_ + _)
+      counts.withColumn("n_pii", total)
+    }, sql(piiAuditOracleSql)),
+    // LLM §embeddings — ANN over the QUANTIZED shard (q45's output
+    // ranked without dequantizing): the per-vector scales cancel in
+    // the cosine, so scoring is exact integer dots/norms — the same
+    // broadcast + two-phase-rank plan as q22 with none of q22's
+    // float-summation sensitivity.
+    Entry("q47_ann_int8", (s, dir) => {
+      import graft.llm.Similarity
+      val emb = t(s, dir, "embeddings")
+      Similarity.quantizedTopK(emb, emb.filter(col("vec_id") < 5),
+        "vec_id", "embedding", k = 10)
+        .select(col("q_id"), col("vec_id"), col("rank"))
+    },
+      // quantized cosine = integer dots/norms (scales cancel): every
+      // number is an exactly-representable int before one double
+      // division — rank order agrees exactly, ties by vec_id
+      sql(quantizedAnnOracleSql)),
+    // LLM §decontamination — the SimHash fingerprint screen, oracle-
+    // gated: same train/bench split as q34, pairs within Hamming<=3 of
+    // the 64-bit majority-vote fingerprint. The per-token hash is MD5
+    // precisely so the DuckDB oracle replays the ENTIRE pipeline
+    // (tokenize -> per-bit majority -> Hamming) in plain SQL from the
+    // same constants (Dedup.SimhashTokenRe, seed, nibble bit order) —
+    // the q42 parity-by-construction trick applied to a hash. The
+    // banding is the scale path (left×right buckets only); the oracle
+    // is the brute-force definition, so the gate also proves the
+    // pigeonhole banding loses no pair.
+    Entry("q48_simhash_join", (s, dir) => {
+      import graft.llm.Dedup
+      val docs = t(s, dir, "documents")
+      Dedup.simhashNearJoin(
+        docs.filter(col("doc_id") % 5 =!= 0),
+        docs.filter(col("doc_id") % 5 === 0),
+        "doc_id", "text", maxDistance = 3)
+        .select(col("id_a").as("train_id"), col("id_b").as("bench_id"),
+          col("hamming"))
+    }, sql(simhashOracleSql)),
+    // LLM §text-analysis — the quality-filter DECISION stage
+    // (Gopher/C4 shape): keep/drop per doc with one auditable flag per
+    // rule, thresholds compared as integer cross-products (no float
+    // anywhere) — one codegen'd map-side projection.
+    Entry("q49_quality_filter", (s, dir) => {
+      import graft.llm.TextStats
+      TextStats.qualityFilter(t(s, dir, "documents"), "doc_id", "text")
+    },
+      // the q25 token-count fragments + integer cross-product thresholds:
+      // 30<=n<=400 tokens, distinct fraction >= 40%, stopword fraction
+      // >= 20 permille — all-int comparisons, flags as 0/1 ints
+      sql("""WITH s AS (
+        |  SELECT doc_id,
+        |    len(string_split(text, ' ')) AS n_tokens,
+        |    len(list_distinct(string_split(text, ' '))) AS n_distinct,
+        |    len(list_filter(string_split(text, ' '), t -> list_contains(
+        |      ['the','a','of','and','to','in','is','it','on','for'], t)))
+        |      AS n_stop
+        |  FROM documents)
+        | SELECT doc_id, n_tokens, n_distinct, n_stop,
+        |  CAST(n_tokens >= 30 AND n_tokens <= 400 AS INT) AS ok_length,
+        |  CAST(n_distinct * 100 >= n_tokens * 40 AS INT) AS ok_distinct,
+        |  CAST(n_stop * 1000 >= n_tokens * 20 AS INT) AS ok_stopwords,
+        |  CAST((n_tokens >= 30 AND n_tokens <= 400) AND
+        |       n_distinct * 100 >= n_tokens * 40 AND
+        |       n_stop * 1000 >= n_tokens * 20 AS INT) AS keep
+        | FROM s""".stripMargin.replace("\n", " "))),
+    // LLM §similarity — recall@k of the QUANTIZED ranking (q47) vs the
+    // exact full-precision ranking (q22): the measurement every ANN
+    // tuning loop turns on, here also quantifying what int8
+    // compression costs in retrieval quality. Both rankings are
+    // SQL-replayable, so the metric itself is oracle-gated.
+    Entry("q50_ann_recall", (s, dir) => {
+      import graft.llm.{Similarity, SimilarityEval}
+      val emb = t(s, dir, "embeddings")
+      val queries = emb.filter(col("vec_id") < 5)
+      SimilarityEval.recallAtK(
+        Similarity.quantizedTopK(emb, queries, "vec_id", "embedding", 10),
+        Similarity.bruteForceTopK(emb, queries, "vec_id", "embedding", 10),
+        "vec_id", 10)
+    },
+      // both rankings replayed as CTEs (q22's exact + q47's quantized),
+      // joined per query: hits is an int count, recall one exact division
+      sql(s"""WITH ex AS ($annOracleSql),
+         | ap AS ($quantizedAnnOracleSql),
+         | h AS (SELECT ex.q_id, count(*) AS hits
+         |   FROM ex JOIN ap ON ex.q_id = ap.q_id AND ex.vec_id = ap.vec_id
+         |   GROUP BY 1)
+         | SELECT q.q_id, COALESCE(h.hits, 0) AS hits,
+         |   CAST(COALESCE(h.hits, 0) AS DOUBLE) / 10.0 AS recall
+         | FROM (SELECT DISTINCT q_id FROM ex) q
+         | LEFT JOIN h ON h.q_id = q.q_id"""
+      .stripMargin.replace("\n", " "))),
+    // LLM §similarity — recall-driven IVF auto-tuning (the production
+    // re-probe loop as an operator): nprobe doubles until measured
+    // recall@k on the probe sample reaches the target. At target 1.0
+    // with the full query set as sample, the tuned output provably
+    // EQUALS the exact ranking (candidates re-score by exact cosine,
+    // same id tie-break) — which is what lets an adaptive-approximate
+    // operator be hash-gated against the exact SQL oracle.
+    Entry("q56_ann_autotune", (s, dir) => {
+      import graft.llm.Similarity
+      val emb = t(s, dir, "embeddings")
+      val queries = emb.filter(col("vec_id") < 5)
+      Similarity.ivfTopKAutoTuned(emb, queries, "vec_id", "embedding",
+        10, nlist = 16, targetRecall = 1.0, initialNprobe = 2)._1
+    },
+      // auto-tuned to recall 1.0 over the full query sample ≡ exact
+      sql(annOracleSql)),
+    // LLM §clustering — deterministic Lloyd k-means over the embedding
+    // column (the coarse-structure pass behind semantic dedup and
+    // mixture balancing): seeded-sample init, codegen'd cosine argmax
+    // assignment, EXACT-decimal mean updates (order-independent, so
+    // centroids are identical for any partitioning). The oracle
+    // replays the final assignment from the learned centroid literals
+    // (dynamicOracleSql — the q54 parity-by-construction move).
+    Entry("q57_kmeans", (s, dir) => {
+      import graft.llm.Clustering
+      Clustering.assignClusters(t(s, dir, "embeddings"), "vec_id",
+        "embedding", kmeansCentroids(s, dir))
+    }, (s, dir) => graft.llm.Clustering.kmeansOracleSql(kmeansCentroids(s, dir))),
+    // LLM §dedup — SemDeDup-style semantic dedup (Abbas et al. 2023):
+    // within each k-means cluster drop every row with a lower-id
+    // member at cosine >= tau; pairs never leave a cluster. tau=0.42
+    // is corpus-tuned to the near-uniform synthetic vectors (max pair
+    // cosine 0.51 — real embedding corpora sit at 0.9+); the full
+    // pipeline (clustering + in-cluster dominance) replays in SQL
+    // from the centroid literals.
+    Entry("q58_semantic_dedup", (s, dir) => {
+      import graft.llm.Clustering
+      // learned centroids as init + iters=0 ≡ the full k=8/iters=4 fit
+      // (learning is deterministic); under the gate flag the fit runs
+      // once for q57/q58/q61 + the dynamic oracles
+      Clustering.semanticDedup(t(s, dir, "embeddings"), "vec_id",
+        "embedding", k = 8, iters = 0, tau = 0.42,
+        init = kmeansCentroidsCached(s, dir))
+    }, (s, dir) => 
+      graft.llm.Clustering.semanticDedupOracleSql(kmeansCentroids(s, dir), tau = 0.42)),
+    // LLM §text-analysis — distinctive-keyword extraction: tf-idf's
+    // ranking with NO floats (tf desc, corpus doc-freq asc, token asc
+    // — integer lexicographic, bit-identical in any engine); per-doc
+    // top-3 via the two-phase rankTopK pattern, no per-doc window.
+    Entry("q59_keywords", (s, dir) => {
+      import graft.llm.TextStats
+      TextStats.keywords(t(s, dir, "documents"), "doc_id", "text", k = 3)
+    },
+      // tf-idf's ranking as pure integers: tf desc, doc-freq asc, token
+      // asc — df counts rows of the per-doc-distinct tf table
+      sql("""WITH tk AS (SELECT doc_id,
+        |    unnest(list_filter(string_split(text, ' '),
+        |      x -> x <> '')) AS t FROM documents),
+        | tf AS (SELECT doc_id, t, count(*) AS tf FROM tk GROUP BY 1, 2),
+        | df AS (SELECT t, count(*) AS df FROM tf GROUP BY 1)
+        | SELECT tf.doc_id, tf.t AS token, tf.tf, df.df,
+        |   CAST(ROW_NUMBER() OVER (PARTITION BY tf.doc_id
+        |     ORDER BY tf.tf DESC, df.df, tf.t) AS INTEGER) AS rank
+        | FROM tf JOIN df USING (t)
+        | QUALIFY rank <= 3""".stripMargin.replace("\n", " "))),
+    // LLM §sampling — per-stratum CAP sampling (the mixture builder's
+    // "exactly n docs per domain"): deterministic md5 order, two-phase
+    // per-partition cap + merge — a hot stratum never serializes
+    // through one task the way ROW_NUMBER OVER (PARTITION BY) would.
+    Entry("q60_cap_sample", (s, dir) => {
+      import graft.llm.Sampling
+      Sampling.capSample(t(s, dir, "documents"), "doc_id", "lang",
+        n = 10)
+    },
+      // the same md5(stratum#key) order as q46's fraction path, capped
+      // at n per stratum (the window here is the ORACLE's luxury — the
+      // engine side runs the two-phase cap instead)
+      sql("""SELECT lang, doc_id,
+        |   CAST(ROW_NUMBER() OVER (PARTITION BY lang
+        |     ORDER BY md5(lang || '#' || CAST(doc_id AS VARCHAR)),
+        |       doc_id) AS INTEGER) AS rank
+        | FROM documents
+        | QUALIFY rank <= 10""".stripMargin.replace("\n", " "))),
+    // LLM §packing — length-grouped batching (the padding minimizer):
+    // docs sorted by (token count, id), cut into 32-doc batches —
+    // global rank via the q37 prefix-sum machinery over a packed
+    // (len<<40)|id key, one range shuffle, no global window.
+    Entry("q64_length_batches", (s, dir) => {
+      import graft.llm.{Packing, TextStats}
+      Packing.lengthGroupedBatches(t(s, dir, "documents"), "doc_id",
+        TextStats.tokenCount(col("text")), batchSize = 32)
+        .orderBy("doc_id")
+    },
+      // global (len, id) rank → integer div; all BIGINT
+      sql("""WITH s AS (SELECT doc_id,
+        |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
+        |  FROM documents)
+        | SELECT CAST(doc_id AS BIGINT) AS doc_id, n_tokens,
+        |   CAST((ROW_NUMBER() OVER (ORDER BY n_tokens, doc_id) - 1)
+        |     // 32 AS BIGINT) AS batch_id
+        | FROM s ORDER BY doc_id""".stripMargin.replace("\n", " "))),
+    // LLM §fingerprinting — winnowing (MOSS) fingerprints: per-window
+    // min gram hash, the guaranteed-coverage sparse fingerprint set
+    // (any ≥ w+k-1-token shared run shares a fingerprint) at ~2/(w+1)
+    // storage; entirely map-side/codegen'd, shuffle-free.
+    Entry("q62_winnow", (s, dir) => {
+      import graft.llm.TextStats
+      TextStats.winnow(t(s, dir, "documents"), "doc_id", "text",
+        k = 4, w = 4)
+    },
+      // winnowing replayed with list comprehension primitives: same
+      // 1-based inclusive slices, same md5 grams, same per-window min
+      // (lexicographic over hex = the same total order both engines)
+      sql("""WITH d AS (SELECT doc_id,
+        |    list_filter(string_split(text, ' '), x -> x <> '') AS ts
+        |  FROM documents),
+        | g AS (SELECT doc_id,
+        |    list_transform(range(1, len(ts) - 2),
+        |      i -> md5(array_to_string(ts[i:i+3], ' '))) AS gh
+        |  FROM d WHERE len(ts) >= 4)
+        | SELECT doc_id,
+        |   unnest(list_distinct(list_transform(
+        |     range(1, greatest(len(gh) - 3, 1) + 1),
+        |     j -> list_min(gh[j:j+3])))) AS fp
+        | FROM g""".stripMargin.replace("\n", " "))),
+    // LLM §decontamination — the winnowed overlap screen: q43's
+    // contamination join over the SPARSE fingerprint set (~2/(w+1) of
+    // the windows ever shuffle), with the coverage guarantee that any
+    // ≥ w+k-1-token shared run still collides. Same 1-in-5 bench
+    // split as q34/q43.
+    Entry("q63_winnow_overlap", (s, dir) => {
+      import graft.llm.TextStats
+      val docs = t(s, dir, "documents")
+      TextStats.winnowOverlapJoin(
+        docs.filter(col("doc_id") % 5 =!= 0),
+        docs.filter(col("doc_id") % 5 === 0),
+        "doc_id", "text", k = 4, w = 4, minShared = 2)
+        .select(col("id_l").as("train_id"), col("id_r").as("bench_id"),
+          col("n_shared"))
+    },
+      // the q62 winnow CTE on both split sides + one fp equi-join
+      sql("""WITH d AS (SELECT doc_id,
+        |    list_filter(string_split(text, ' '), x -> x <> '') AS ts
+        |  FROM documents),
+        | g AS (SELECT doc_id,
+        |    list_transform(range(1, len(ts) - 2),
+        |      i -> md5(array_to_string(ts[i:i+3], ' '))) AS gh
+        |  FROM d WHERE len(ts) >= 4),
+        | f AS (SELECT doc_id,
+        |   unnest(list_distinct(list_transform(
+        |     range(1, greatest(len(gh) - 3, 1) + 1),
+        |     j -> list_min(gh[j:j+3])))) AS fp
+        | FROM g)
+        | SELECT l.doc_id AS train_id, r.doc_id AS bench_id,
+        |   count(*) AS n_shared
+        | FROM f l JOIN f r ON l.fp = r.fp
+        |   AND l.doc_id % 5 <> 0 AND r.doc_id % 5 = 0
+        | GROUP BY 1, 2 HAVING count(*) >= 2"""
+        .stripMargin.replace("\n", " "))),
+    // LLM §mixing — the lang × embedding-cluster mixture matrix (the
+    // table a data-mixture rebalancer reads): q57's deterministic
+    // clusters joined onto documents (doc_id = vec_id on the shared
+    // synthetic keyspace), counted per cell. Oracle replays the
+    // clustering from centroid literals + the same join/group.
+    Entry("q61_mixture_matrix", (s, dir) => {
+      import graft.llm.Clustering
+      val assigned = Clustering.assignClusters(t(s, dir, "embeddings"),
+        "vec_id", "embedding", kmeansCentroidsCached(s, dir))
+      t(s, dir, "documents")
+        .join(assigned.withColumnRenamed("vec_id", "doc_id"), "doc_id")
+        .groupBy(col("lang"), col("cluster_id"))
+        .agg(count(lit(1)).as("n_docs"))
+    }, (s, dir) => 
+      graft.llm.Clustering.mixtureMatrixOracleSql(kmeansCentroids(s, dir))),
+    // LLM §retrieval — inverted-index build (posting lists): sorted
+    // distinct doc lists per token inside a [5, 400] df window (the
+    // two knobs that bound every posting list); deterministic
+    // postings for any partitioning; stopword-scale lists never
+    // enter an aggregation buffer (df filter BEFORE collect). The
+    // gate row stringifies the sorted list (the comparator can't
+    // sort array cells); the operator API keeps the typed array.
+    Entry("q72_inverted_index", (s, dir) => {
+      import graft.llm.TextStats
+      TextStats.invertedIndex(t(s, dir, "documents"), "doc_id", "text",
+          minDf = 5, maxDf = 400)
+        .select(col("token"), col("df"),
+          concat_ws(",", transform(col("postings"), _.cast("string")))
+            .as("postings"))
+    },
+      // postings replay: DISTINCT (token, doc) + df window + a sorted
+      // list STRINGIFIED (comma-joined) — scalar cells the comparator
+      // can sort; identical sorted lists stringify identically
+      sql("""WITH dt AS (SELECT DISTINCT doc_id, t AS token FROM (
         |    SELECT doc_id, unnest(list_filter(
         |      string_split(text, ' '), x -> x <> '')) AS t
         |    FROM documents)),
@@ -2995,13 +1768,45 @@ object SparkEntry {
         |   array_to_string(list(dt.doc_id ORDER BY dt.doc_id), ',')
         |     AS postings
         | FROM dt JOIN dfs USING (token)
-        | GROUP BY 1, 2""".stripMargin.replace("\n", " "),
-    // maintained ≡ rebuilt: the oracle builds the overflow-contract
-    // index on the REMAINING corpus from scratch — matching it proves
-    // the incremental forget path (array_except + targeted crossing
-    // rebuild) byte-equivalent to a full rebuild
-    "q99_index_forget" ->
-      """WITH d AS (SELECT doc_id, text FROM documents
+        | GROUP BY 1, 2""".stripMargin.replace("\n", " "))),
+    // LLM §retrieval + §forget — FORGET-AWARE index maintenance: the
+    // maintainable index (q72's build + the streaming overflow
+    // contract: exact df always, NULL postings past maxDf) has a
+    // forget batch (doc_id % 7 == 0) applied INCREMENTALLY — touched
+    // tokens update via array_except, overflow tokens that CROSS into
+    // the window ("batch", df 402 → 341 at sf0.01) rebuild via one
+    // targeted remaining-corpus pass — and the oracle builds the
+    // index on the remaining corpus FROM SCRATCH: the hash match IS
+    // the maintained ≡ rebuilt proof under driver conditions.
+    Entry("q99_index_forget", (s, dir) => {
+      import graft.llm.IndexMaintain
+      val docs = t(s, dir, "documents")
+      // the maintained index is MATERIALIZED before the maintenance
+      // pass: production maintenance reads the STORED index
+      // artifact, and the maintenance operators consume their index
+      // argument several times (untouched/touched/crossing legs) — a
+      // lazy build subtree re-derives the whole corpus aggregation
+      // per leg (the q119 plan carried 38 corpus scans), where the
+      // stored shape scans the materialized rows. Same rows either
+      // way; the build itself stays priced (it executes into the
+      // checkpoint inside the timed body).
+      val idx = IndexMaintain.indexWithOverflow(docs, "doc_id", "text",
+        minDf = 5, maxDf = 400).localCheckpoint(true)
+      IndexMaintain.forgetFromIndex(idx,
+          docs.filter(col("doc_id") % 7 === 0),
+          docs.filter(col("doc_id") % 7 =!= 0),
+          "doc_id", "text", minDf = 5, maxDf = 400)
+        .select(col("token"), col("df"),
+          when(col("postings").isNull, lit("<overflow>"))
+            .otherwise(concat_ws(",",
+              transform(col("postings"), _.cast("string"))))
+            .as("postings"))
+    },
+      // maintained ≡ rebuilt: the oracle builds the overflow-contract
+      // index on the REMAINING corpus from scratch — matching it proves
+      // the incremental forget path (array_except + targeted crossing
+      // rebuild) byte-equivalent to a full rebuild
+      sql("""WITH d AS (SELECT doc_id, text FROM documents
         |   WHERE doc_id % 7 <> 0),
         | dt AS (SELECT DISTINCT doc_id, t AS token FROM (
         |    SELECT doc_id, unnest(list_filter(
@@ -3014,193 +1819,539 @@ object SparkEntry {
         |     ELSE array_to_string(list(dt.doc_id ORDER BY dt.doc_id), ',')
         |   END AS postings
         | FROM dt JOIN dfs USING (token)
-        | GROUP BY 1, 2""".stripMargin.replace("\n", " "),
-    // prefix-sum replay in id order + the same telescoping ceil
-    // difference — BIGINT `//` end to end
-    "q106_pps_sample" ->
-      """WITH s AS (SELECT doc_id,
-        |    CAST(len(list_filter(string_split(text, ' '),
-        |      x -> x <> '')) AS BIGINT) AS w
+        | GROUP BY 1, 2""".stripMargin.replace("\n", " "))),
+    // LLM §dedup — ONE-COPY span dedup (Lee 2022's "remove all but
+    // one occurrence of duplicated training text" — the REMOVAL the
+    // q95 coverage audit measures, with a copy kept, unlike q55's
+    // strip-everywhere boilerplate cut): canonical first occurrence
+    // per duplicated 16-char shingle survives (min(struct) pick — no
+    // per-gram window ever sorts a hot shingle's occurrence list),
+    // other occurrences' chars excised via per-DOC interval merge +
+    // one aggregate fold rebuild. Whole pipeline integer/string
+    // exact → full SQL replay.
+    Entry("q102_span_dedup", (s, dir) =>
+      graft.llm.Dedup.dedupSpansKeepFirstFromCensus(
+        t(s, dir, "documents"), spanCensusArtifact(s, dir),
+        "doc_id", "text", shingleLen = 16),
+      sql("""WITH d AS (SELECT doc_id, text, len(text) AS lt
+        |   FROM documents WHERE doc_id IS NOT NULL),
+        | idx AS (SELECT unnest(range(1, 2000)) AS i),
+        | occ AS (SELECT doc_id, CAST(i AS BIGINT) AS i,
+        |     substr(text, CAST(i AS INT), 16) AS g
+        |   FROM d JOIN idx ON i <= lt - 15),
+        | od AS (SELECT doc_id, i,
+        |     row_number() OVER (PARTITION BY g ORDER BY doc_id, i) AS rn,
+        |     count(*) OVER (PARTITION BY g) AS cnt
+        |   FROM occ),
+        | rem AS (SELECT doc_id, i FROM od WHERE cnt >= 2 AND rn >= 2),
+        | m AS (SELECT doc_id, i,
+        |     CASE WHEN i > COALESCE(max(i + 15) OVER (PARTITION BY doc_id
+        |       ORDER BY i ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
+        |       0) + 1 THEN 1 ELSE 0 END AS brk FROM rem),
+        | grp AS (SELECT doc_id, i,
+        |     CAST(sum(brk) OVER (PARTITION BY doc_id ORDER BY i)
+        |       AS BIGINT) AS gid FROM m),
+        | ivs AS (SELECT doc_id, min(i) AS s, max(i) + 15 AS e
+        |   FROM grp GROUP BY doc_id, gid),
+        | segs AS (SELECT doc_id, s, e,
+        |     COALESCE(lag(e) OVER (PARTITION BY doc_id ORDER BY s), 0) + 1
+        |       AS ks FROM ivs),
+        | head AS (SELECT doc_id,
+        |     string_agg(substr(text, CAST(ks AS INT), CAST(s - ks AS INT)),
+        |       '' ORDER BY s) AS h,
+        |     CAST(max(e) AS BIGINT) AS me,
+        |     CAST(sum(e - s + 1) AS BIGINT) AS nrm
+        |   FROM segs JOIN d USING (doc_id) GROUP BY doc_id)
+        | SELECT d.doc_id,
+        |   CASE WHEN h.doc_id IS NULL THEN d.text
+        |     ELSE h.h || substr(d.text, CAST(h.me + 1 AS INT)) END
+        |     AS text_clean,
+        |   COALESCE(h.nrm, 0) AS n_chars_removed
+        | FROM d LEFT JOIN head h USING (doc_id)"""
+        .stripMargin.replace("\n", " "))),
+    // LLM §dedup — the duplicated-span CENSUS itself: the one
+    // char-scale aggregation of the span family, priced here and
+    // WRITTEN once; q95/q102 read the stored, vocabulary-scale frame
+    // (duplication is rare relative to corpus chars). Canonical pick
+    // is min(struct) with map-side partials — no per-gram window.
+    Entry("q129_span_census", (s, dir) =>
+      graft.llm.Dedup.spanCensus(t(s, dir, "documents"),
+        "doc_id", "text", shingleLen = 16),
+      // full replay of the one-copy span dedup: the oracle may use
+      // per-gram windows (rn = 1 ⇔ the engine's min(struct) canonical —
+      // same (doc_id, i) total order), per-doc interval merge, then
+      // string_agg of the kept segments + the tail
+      // the span-census artifact replay: q102's occ/od CTEs, cut at
+      // the canonical row
+      sql("""WITH d AS (SELECT doc_id, text, len(text) AS lt
+        |   FROM documents WHERE doc_id IS NOT NULL),
+        | idx AS (SELECT unnest(range(1, 2000)) AS i),
+        | occ AS (SELECT doc_id, CAST(i AS BIGINT) AS i,
+        |     substr(text, CAST(i AS INT), 16) AS g
+        |   FROM d JOIN idx ON i <= lt - 15),
+        | od AS (SELECT g, doc_id, i,
+        |     row_number() OVER (PARTITION BY g ORDER BY doc_id, i) AS rn,
+        |     count(*) OVER (PARTITION BY g) AS cnt
+        |   FROM occ)
+        | SELECT g AS gram, CAST(cnt AS BIGINT) AS n_occ,
+        |   doc_id AS keep_id, i AS keep_pos
+        | FROM od WHERE cnt >= 2 AND rn = 1""".stripMargin
+        .replace("\n", " "))),
+    // LLM §retrieval + §forget — POSITIONAL-index maintenance (q99's
+    // move on the q85 structure): per-doc position rows of forgotten
+    // docs drop via one anti-join, surviving rows of touched tokens
+    // decrement their df, and overflow MARKER rows (the variant's one
+    // extra row per excluded token — what makes deletion detectable)
+    // cross back into the window via the targeted rebuild. Oracle =
+    // from-scratch build on the remaining corpus.
+    Entry("q101_positional_forget", (s, dir) => {
+      import graft.llm.IndexMaintain
+      val docs = t(s, dir, "documents")
+      // NOT materialized: unlike its q119 insert sibling, the
+      // full-corpus positional build here measured FASTER lazy (A/B
+      // 1.53 → 3.18 s with a localCheckpoint) — the forget path's
+      // index references prune columns the checkpoint would pin rows
+      // for; left alone on measurement.
+      val idx = IndexMaintain.positionalIndexWithOverflow(docs,
+        "doc_id", "text", minDf = 5, maxDf = 400)
+      IndexMaintain.forgetFromPositionalIndex(idx,
+          docs.filter(col("doc_id") % 7 === 0),
+          docs.filter(col("doc_id") % 7 =!= 0),
+          "doc_id", "text", minDf = 5, maxDf = 400)
+        .select(col("token"), col("df"),
+          coalesce(col("doc_id"), lit(-1L)).as("doc_id"),
+          when(col("positions").isNull, lit("<overflow>"))
+            .otherwise(concat_ws(",",
+              transform(col("positions"), _.cast("string"))))
+            .as("positions"))
+    }, sql("""WITH d AS (SELECT doc_id, list_filter(
+        |     string_split(text, ' '), x -> x <> '') AS ts
+        |   FROM documents WHERE doc_id % 7 <> 0),
+        | pt AS (SELECT doc_id, unnest(ts) AS token,
+        |     unnest(range(1, len(ts) + 1)) AS pos FROM d),
+        | dfs AS (SELECT token, count(DISTINCT doc_id) AS df
+        |   FROM pt GROUP BY 1
+        |   HAVING count(DISTINCT doc_id) >= 5)
+        | SELECT pt.token, dfs.df, pt.doc_id,
+        |   array_to_string(list(pt.pos ORDER BY pt.pos), ',')
+        |     AS positions
+        | FROM pt JOIN dfs USING (token) WHERE dfs.df <= 400
+        | GROUP BY 1, 2, 3
+        | UNION ALL
+        | SELECT token, df, CAST(-1 AS BIGINT) AS doc_id,
+        |   '<overflow>' AS positions
+        | FROM dfs WHERE df > 400""".stripMargin.replace("\n", " "))),
+    // LLM §sketch + §forget — CMS maintenance under deletion: the
+    // counters are LINEAR in (token, freq), so the forget batch's own
+    // sketch SUBTRACTS register-wise (one pass over the batch, the
+    // surviving corpus untouched). The oracle builds the sketch on
+    // the remaining corpus from scratch — the hash match proves
+    // subtracted ≡ rebuilt, register for register.
+    Entry("q100_cms_forget", (s, dir) => {
+      import graft.llm.Sketch
+      val docs = t(s, dir, "documents")
+      Sketch.cmsSubtract(
+        Sketch.countMinCounters(docs, "text", depth = 4, width = 1024),
+        Sketch.countMinCounters(docs.filter(col("doc_id") % 7 === 0),
+          "text", depth = 4, width = 1024))
+    },
+      // subtracted ≡ rebuilt: q69's counter construction replayed on
+      // the REMAINING corpus only — register-identical to the engine's
+      // full-minus-forgotten subtraction by CMS linearity
+      sql("""WITH tf AS (SELECT t AS w, count(*) AS freq FROM (
+        |    SELECT unnest(string_split_regex(text, '\s+')) AS t
+        |    FROM documents WHERE doc_id % 7 <> 0)
+        |   WHERE t <> '' GROUP BY 1),
+        | r AS (SELECT unnest([0, 1, 2, 3]) AS row),
+        | c AS (SELECT row,
+        |    ('0x' || substr(md5(row::VARCHAR || '#' || w), 1, 8))::BIGINT
+        |      % 1024 AS bucket,
+        |    CAST(sum(freq) AS BIGINT) AS cnt
+        |   FROM tf, r GROUP BY 1, 2)
+        | SELECT row, bucket, cnt FROM c WHERE cnt > 0"""
+        .stripMargin.replace("\n", " "))),
+    // LLM §retrieval — conjunctive (AND) query over the q72 index:
+    // the two highest-df in-window terms (deterministic pick), docs
+    // holding BOTH via explode + count — posting-list intersection as
+    // one aggregation, the index's query-side counterpart.
+    Entry("q73_conjunctive_search", (s, dir) => {
+      import graft.llm.TextStats
+      val idx = TextStats.invertedIndex(t(s, dir, "documents"),
+        "doc_id", "text", minDf = 5, maxDf = 400)
+      val terms = idx.orderBy(col("df").desc, col("token")).limit(2)
+        .select("token")
+      idx.join(terms, "token")
+        .select(col("token"), explode(col("postings")).as("doc_id"))
+        .groupBy(col("doc_id"))
+        .agg(count(lit(1)).as("n_matched")) // postings are distinct
+        .filter(col("n_matched") === 2)
+    },
+      // the q72 CTEs + the same deterministic 2-term pick + intersection
+      sql("""WITH dt AS (SELECT DISTINCT doc_id, t AS token FROM (
+        |    SELECT doc_id, unnest(list_filter(
+        |      string_split(text, ' '), x -> x <> '')) AS t
+        |    FROM documents)),
+        | dfs AS (SELECT token, count(*) AS df FROM dt GROUP BY 1
+        |   HAVING count(*) >= 5 AND count(*) <= 400),
+        | terms AS (SELECT token FROM dfs
+        |   ORDER BY df DESC, token LIMIT 2)
+        | SELECT dt.doc_id, count(*) AS n_matched
+        | FROM dt JOIN terms USING (token)
+        | GROUP BY 1 HAVING count(*) = 2"""
+        .stripMargin.replace("\n", " "))),
+    // LLM §retrieval — k-term conjunctive search (the q73 pick
+    // generalized to k = 4 via the library operator): intersection of
+    // the 4 largest in-window posting lists as one aggregation, the
+    // exploded frame bounded by 4·maxDf rows whatever the corpus.
+    Entry("q74_conjunctive_k", (s, dir) => {
+      import graft.llm.TextStats
+      TextStats.conjunctiveSearch(
+        TextStats.invertedIndex(t(s, dir, "documents"), "doc_id", "text",
+          minDf = 5, maxDf = 400), nTerms = 4)
+    },
+      // the q73 replay with the pick widened to 4 terms (AND of 4 lists)
+      sql("""WITH dt AS (SELECT DISTINCT doc_id, t AS token FROM (
+        |    SELECT doc_id, unnest(list_filter(
+        |      string_split(text, ' '), x -> x <> '')) AS t
+        |    FROM documents)),
+        | dfs AS (SELECT token, count(*) AS df FROM dt GROUP BY 1
+        |   HAVING count(*) >= 5 AND count(*) <= 400),
+        | terms AS (SELECT token FROM dfs
+        |   ORDER BY df DESC, token LIMIT 4)
+        | SELECT dt.doc_id, count(*) AS n_matched
+        | FROM dt JOIN terms USING (token)
+        | GROUP BY 1 HAVING count(*) = 4"""
+        .stripMargin.replace("\n", " "))),
+    // LLM §retrieval — BM25-scored top-20 over the q72 term pick:
+    // disjunctive scoring of the 3 highest-df in-window terms,
+    // k1 = 1.2, b = 0.75. Float-free under the gate contract: idf is
+    // a driver-folded integer micro literal (shared with the dynamic
+    // oracle), tf saturation is an exact BIGINT rational, the doc
+    // score a sum of exact integers — the q59 integer-rank move
+    // extended to a real scoring function.
+    Entry("q75_bm25", (s, dir) => {
+      import graft.llm.TextStats
+      TextStats.bm25TopKMicro(t(s, dir, "documents"), "doc_id", "text",
+        bm25Terms(s, dir), k = 20)
+    },
+      // same (term, idf_micro) literals as the q75 entry — the q54
+      // parity-by-construction move applied to the one float BM25 has
+      (s, dir) => 
+        graft.llm.TextStats.bm25OracleSql(bm25Terms(s, dir), k = 20)),
+    // LLM §text-analysis — corpus top-k BIGRAM table (the n-gram
+    // counterpart of the q33 vocabulary cut): per-doc gram arrays are
+    // a pure codegen'd expression, one explode + one hash aggregation,
+    // TakeOrdered cut at (freq desc, gram asc) — never a global sort
+    // of the n-gram vocabulary.
+    Entry("q76_top_bigrams", (s, dir) =>
+      graft.llm.TextStats.topNgrams(t(s, dir, "documents"), "text",
+        n = 2, k = 15),
+      // bigram table replay: 1-based list slices (the q62 idiom), same
+      // (freq desc, gram asc) deterministic cut
+      sql("""WITH d AS (SELECT list_filter(
+        |     string_split(text, ' '), x -> x <> '') AS ts
         |   FROM documents),
-        | o AS (SELECT doc_id, w,
-        |    COALESCE(CAST(sum(w) OVER (ORDER BY doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-        |      AS BIGINT), 0) AS off FROM s),
-        | t AS (SELECT CAST(sum(w) AS BIGINT) AS tw FROM s)
-        | SELECT doc_id, w AS weight,
-        |   ((off + w) * 100 + tw - 1) // tw -
-        |     (off * 100 + tw - 1) // tw AS n_picks
-        | FROM o, t
-        | WHERE ((off + w) * 100 + tw - 1) // tw -
-        |   (off * 100 + tw - 1) // tw > 0"""
-        .stripMargin.replace("\n", " "),
-    // per-group rank replay — same (value, id) order, same
-    // ceil-rank arithmetic
-    "q104_group_percentiles" ->
-      """WITH s AS (SELECT lang, doc_id,
-        |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
-        |   FROM documents),
-        | r AS (SELECT lang, n_tokens,
-        |    CAST(ROW_NUMBER() OVER (PARTITION BY lang
-        |      ORDER BY n_tokens, doc_id) AS BIGINT) AS rnk FROM s),
-        | n AS (SELECT lang, CAST(count(*) AS BIGINT) AS n
-        |   FROM s GROUP BY 1)
-        | SELECT r.lang, ps.p, r.n_tokens
-        | FROM r JOIN n USING (lang)
-        | CROSS JOIN (VALUES (25), (50), (75), (95)) ps(p)
-        | WHERE r.rnk = (CAST(ps.p AS BIGINT) * n.n + 99) // 100"""
-        .stripMargin.replace("\n", " "),
-    // rollup replay with the same '<all>' naming of subtotal rows
-    "q105_corpus_rollup" ->
-      """SELECT COALESCE(lang, '<all>') AS lang,
-        |  COALESCE(source, '<all>') AS source,
-        |  CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(n_chars) AS BIGINT) AS total_chars
-        | FROM documents GROUP BY ROLLUP(lang, source)"""
-        .stripMargin.replace("\n", " "),
-    // collocation replay: unigram + pair-gram counts, the exact
-    // integer lift (// ≡ Spark div for positive operands)
-    "q108_collocations" ->
-      """WITH d AS (SELECT list_filter(string_split(text, ' '),
-        |     x -> x <> '') AS ts FROM documents),
-        | u AS (SELECT unnest(ts) AS t FROM d),
-        | uc AS (SELECT t, CAST(count(*) AS BIGINT) AS c
-        |   FROM u GROUP BY 1),
-        | tot AS (SELECT CAST(sum(c) AS BIGINT) AS T FROM uc),
         | g AS (SELECT unnest(list_transform(range(1, len(ts)),
         |     i -> ts[i] || ' ' || ts[i+1])) AS ngram
-        |   FROM d WHERE len(ts) >= 2),
-        | pc AS (SELECT ngram, CAST(count(*) AS BIGINT) AS pair_count
-        |   FROM g GROUP BY 1 HAVING count(*) >= 5),
-        | p AS (SELECT string_split(ngram, ' ')[1] AS w1,
-        |     string_split(ngram, ' ')[2] AS w2, pair_count FROM pc)
-        | SELECT p.w1, p.w2, p.pair_count, u1.c AS c1, u2.c AS c2,
-        |   (p.pair_count * tot.T * 1000000) // (u1.c * u2.c)
-        |     AS lift_micro
-        | FROM p CROSS JOIN tot JOIN uc u1 ON p.w1 = u1.t
-        |   JOIN uc u2 ON p.w2 = u2.t
-        | ORDER BY lift_micro DESC, w1, w2 LIMIT 20"""
-        .stripMargin.replace("\n", " "),
-    // histogram-sketch replay: the same bit-length buckets
-    // (length(bin(v)) strips leading zeros identically, the q70
-    // trick), the q78 ceil-rank pick over the <= 65-row frame
-    "q109_hist_percentiles" ->
-      """WITH s AS (SELECT CAST(len(string_split(text, ' '))
-        |     AS BIGINT) AS v FROM documents),
-        | b AS (SELECT CASE WHEN v = 0 THEN CAST(0 AS BIGINT)
-        |     ELSE CAST(length(bin(v)) AS BIGINT) END AS bucket,
-        |     CAST(count(*) AS BIGINT) AS n FROM s GROUP BY 1),
-        | c AS (SELECT bucket, CAST(sum(n) OVER (ORDER BY bucket)
-        |     AS BIGINT) AS cum FROM b),
-        | t AS (SELECT CAST(sum(n) AS BIGINT) AS N FROM b),
-        | ch AS (SELECT p, min(bucket) AS bucket
-        |   FROM (VALUES (5),(25),(50),(75),(95),(99)) ps(p)
-        |   CROSS JOIN t CROSS JOIN c
-        |   WHERE c.cum >= (CAST(ps.p AS BIGINT) * t.N + 99) // 100
-        |   GROUP BY p)
-        | SELECT CAST(ch.p AS BIGINT) AS p, ch.bucket,
-        |   CASE WHEN ch.bucket = 0 THEN CAST(0 AS BIGINT)
-        |     ELSE CAST(1 AS BIGINT) << CAST(ch.bucket - 1 AS INT)
-        |     END AS lo,
-        |   CASE WHEN ch.bucket = 0 THEN CAST(0 AS BIGINT)
-        |     WHEN ch.bucket >= 63
-        |       THEN CAST(9223372036854775807 AS BIGINT)
-        |     ELSE (CAST(1 AS BIGINT) << CAST(ch.bucket AS INT)) - 1
-        |     END AS hi,
-        |   c2.cum AS n_le
-        | FROM ch JOIN c c2 ON ch.bucket = c2.bucket"""
-        .stripMargin.replace("\n", " "),
-    // novelty replay: distinct (doc, 8-gram) frame, df=1 gram set,
-    // join back, gram-less docs kept at 0/0/0
-    "q110_gram_novelty" ->
-      ("""WITH d AS (SELECT doc_id, list_filter(string_split(text, ' '),
-        |     x -> x <> '') AS ts FROM documents),
-        | raw AS (SELECT doc_id, unnest(list_transform(
-        |     range(1, len(ts) - 6), i -> """.stripMargin +
-        (0 until 8).map(o => if (o == 0) "ts[i]" else s"ts[i+$o]")
-          .mkString(" || ' ' || ") + """)) AS g
-        |   FROM d WHERE len(ts) >= 8),
-        | dg AS (SELECT DISTINCT doc_id, g FROM raw),
-        | u AS (SELECT g FROM dg GROUP BY g HAVING count(*) = 1),
-        | tot AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_grams
-        |   FROM dg GROUP BY 1),
-        | nu AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_unique
-        |   FROM dg JOIN u USING (g) GROUP BY 1)
-        | SELECT d0.doc_id,
-        |   COALESCE(tot.n_grams, CAST(0 AS BIGINT)) AS n_grams,
-        |   COALESCE(nu.n_unique, CAST(0 AS BIGINT)) AS n_unique,
-        |   CASE WHEN COALESCE(tot.n_grams, CAST(0 AS BIGINT)) > 0
-        |     THEN (COALESCE(nu.n_unique, CAST(0 AS BIGINT)) * 1000000)
-        |       // tot.n_grams
-        |     ELSE CAST(0 AS BIGINT) END AS novelty_micro
-        | FROM documents d0 LEFT JOIN tot USING (doc_id)
-        |   LEFT JOIN nu USING (doc_id)""".stripMargin)
-        .replace("\n", " "),
-    // per-group top-k replay: the keyed ROW_NUMBER the engine's
-    // two-phase partials deliberately avoid
-    "q111_top_tokens_by_group" ->
-      """WITH d AS (SELECT lang, unnest(list_filter(
-        |     string_split(text, ' '), x -> x <> '')) AS t
+        |   FROM d WHERE len(ts) >= 2)
+        | SELECT ngram, CAST(count(*) AS BIGINT) AS freq
+        | FROM g GROUP BY 1 ORDER BY freq DESC, ngram LIMIT 15"""
+        .stripMargin.replace("\n", " "))),
+    // LLM §retrieval — exact-PHRASE search (the adjacency query an
+    // inverted index alone cannot answer): per-doc occurrence count of
+    // the corpus's most frequent bigram (deterministic (freq desc,
+    // gram) pick, a bounded 1-row collect). The count itself is pure
+    // map — one filtered gram array against a literal, no shuffle.
+    Entry("q77_phrase_search", (s, dir) => {
+      import graft.llm.TextStats
+      val docs = t(s, dir, "documents")
+      val top = TextStats.topNgrams(docs, "text", n = 2, k = 1)
+        .collect().headOption.map(_.getString(0))
+        .getOrElse(throw new IllegalArgumentException(
+          "q77: corpus has no multi-token documents to pick a top " +
+            "bigram from"))
+      TextStats.phraseCount(docs, "doc_id", "text",
+        top.split(" ").toIndexedSeq)
+    },
+      // the q76 grams + the same deterministic top-1 pick, then the
+      // per-doc adjacency count as a gram-table join
+      sql("""WITH d AS (SELECT doc_id, list_filter(
+        |     string_split(text, ' '), x -> x <> '') AS ts
         |   FROM documents),
-        | tf AS (SELECT lang, t, CAST(count(*) AS BIGINT) AS freq
-        |   FROM d GROUP BY 1, 2),
-        | r AS (SELECT lang, t, freq,
-        |     CAST(row_number() OVER (PARTITION BY lang
-        |       ORDER BY freq DESC, t) AS INT) AS rank FROM tf)
-        | SELECT lang, t AS token, freq, rank FROM r WHERE rank <= 5"""
-        .stripMargin.replace("\n", " "),
-    // weighted-pair replay: same bigram terms, same integer idf
-    // rational, same (dot desc, id_a, id_b) cut
-    "q112_tfidf_pairs" ->
-      """WITH d AS (SELECT doc_id, list_filter(string_split(text, ' '),
-        |     x -> x <> '') AS ts FROM documents),
         | g AS (SELECT doc_id, unnest(list_transform(range(1, len(ts)),
-        |     i -> ts[i] || ' ' || ts[i+1])) AS t
+        |     i -> ts[i] || ' ' || ts[i+1])) AS ngram
         |   FROM d WHERE len(ts) >= 2),
-        | tf AS (SELECT doc_id, t, CAST(count(*) AS BIGINT) AS tf
-        |   FROM g GROUP BY 1, 2),
-        | w AS (SELECT t, CAST(1000000 AS BIGINT) //
-        |     CAST(count(*) AS BIGINT) AS w
-        |   FROM tf GROUP BY t HAVING count(*) BETWEEN 2 AND 50),
-        | p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |     CAST(count(*) AS BIGINT) AS n_terms,
-        |     CAST(sum(a.tf * b.tf * w.w) AS BIGINT) AS dot_micro
-        |   FROM tf a JOIN w USING (t) JOIN tf b USING (t)
-        |   WHERE a.doc_id < b.doc_id GROUP BY 1, 2)
-        | SELECT id_a, id_b, n_terms, dot_micro FROM p
-        | ORDER BY dot_micro DESC, id_a, id_b LIMIT 20"""
-        .stripMargin.replace("\n", " "),
-    // contamination-share replay: the q110 gram frames split
-    // train/bench, ref side distinct, same left joins
-    "q113_ref_overlap" ->
-      ("""WITH d AS (SELECT doc_id, list_filter(string_split(text, ' '),
+        | top AS (SELECT ngram, count(*) AS c FROM g GROUP BY 1
+        |   ORDER BY c DESC, ngram LIMIT 1)
+        | SELECT g.doc_id, CAST(count(*) AS BIGINT) AS n_occurrences
+        | FROM g JOIN top USING (ngram) GROUP BY 1"""
+        .stripMargin.replace("\n", " "))),
+    // LLM §retrieval — POSITIONAL inverted index (q72 + within-doc
+    // 1-based positions, the structure phrase/proximity queries
+    // need): one row per qualifying (token, doc) — buffers hold one
+    // document's positions, never a term's corpus-wide list. Same
+    // [5, 400] df window as q72; positions stringified per the q72
+    // rule (the comparator can't sort array cells).
+    Entry("q85_positional_index", (s, dir) => {
+      graft.llm.TextStats.positionalIndex(t(s, dir, "documents"),
+          "doc_id", "text", minDf = 5, maxDf = 400)
+        .select(col("token"), col("df"), col("doc_id"),
+          concat_ws(",", transform(col("positions"), _.cast("string")))
+            .as("positions"))
+    },
+      // q72's replay + zipped unnest positions (1-based, the same
+      // empty-filtered token stream), positions list stringified
+      sql("""WITH d AS (SELECT doc_id, list_filter(
+        |     string_split(text, ' '), x -> x <> '') AS ts
+        |   FROM documents),
+        | pt AS (SELECT doc_id, unnest(ts) AS token,
+        |     unnest(range(1, len(ts) + 1)) AS pos FROM d),
+        | dfs AS (SELECT token, count(DISTINCT doc_id) AS df
+        |   FROM pt GROUP BY 1
+        |   HAVING count(DISTINCT doc_id) >= 5
+        |      AND count(DISTINCT doc_id) <= 400)
+        | SELECT pt.token, dfs.df, pt.doc_id,
+        |   array_to_string(list(pt.pos ORDER BY pt.pos), ',')
+        |     AS positions
+        | FROM pt JOIN dfs USING (token)
+        | GROUP BY 1, 2, 3""".stripMargin.replace("\n", " "))),
+    // LLM §retrieval — arbitrary-phrase search FROM the positional
+    // index (posting intersection + position adjacency — what q77's
+    // gram scan can't do without rebuilding a gram table per phrase
+    // length): the q77 top-bigram pick answered from the index
+    // alone, one bounded posting frame per phrase offset, k-1
+    // equi-joins on doc_id, occurrence count as a pure array
+    // expression. Unbounded df window so the phrase vocabulary is
+    // complete; result provably equals q77's gram count.
+    Entry("q86_phrase_indexed", (s, dir) => {
+      import graft.llm.TextStats
+      val docs = t(s, dir, "documents")
+      val top = TextStats.topNgrams(docs, "text", n = 2, k = 1)
+        .collect().headOption.map(_.getString(0))
+        .getOrElse(throw new IllegalArgumentException(
+          "q86: corpus has no multi-token documents to pick a top " +
+            "bigram from"))
+      TextStats.phraseSearchIndexed(
+        TextStats.positionalIndex(docs, "doc_id", "text"),
+        "doc_id", top.split(" ").toIndexedSeq)
+    },
+      // the q77 top-bigram pick, answered POSITIONALLY: per-offset
+      // posting frames joined on (doc, adjacency) — the honest replay
+      // of intersection + adjacency, not a gram-table rebuild
+      sql("""WITH d AS (SELECT doc_id, list_filter(
+        |     string_split(text, ' '), x -> x <> '') AS ts
+        |   FROM documents),
+        | pt AS (SELECT doc_id, unnest(ts) AS token,
+        |     unnest(range(1, len(ts) + 1)) AS pos FROM d),
+        | g AS (SELECT doc_id, unnest(list_transform(range(1, len(ts)),
+        |     i -> ts[i] || ' ' || ts[i+1])) AS ngram
+        |   FROM d WHERE len(ts) >= 2),
+        | top AS (SELECT ngram, count(*) AS c FROM g GROUP BY 1
+        |   ORDER BY c DESC, ngram LIMIT 1),
+        | w AS (SELECT string_split(ngram, ' ')[1] AS w0,
+        |     string_split(ngram, ' ')[2] AS w1 FROM top),
+        | p0 AS (SELECT pt.doc_id, pt.pos FROM pt, w
+        |   WHERE pt.token = w.w0),
+        | p1 AS (SELECT pt.doc_id, pt.pos FROM pt, w
+        |   WHERE pt.token = w.w1)
+        | SELECT p0.doc_id, CAST(count(*) AS BIGINT) AS n_occurrences
+        | FROM p0 JOIN p1 ON p0.doc_id = p1.doc_id
+        |   AND p1.pos = p0.pos + 1
+        | GROUP BY 1""".stripMargin.replace("\n", " "))),
+    // LLM §retrieval — PROXIMITY search from the positional index
+    // (the relaxed cousin of q86: order-free co-occurrence within a
+    // token window, counted per anchor occurrence): the 2 highest-df
+    // in-window terms (deterministic pick, bounded 2-row collect),
+    // window = 3. Same bounded plan as phrase search — one posting
+    // frame per term, one equi-join, zero corpus scans.
+    Entry("q87_proximity_search", (s, dir) => {
+      import graft.llm.TextStats
+      val idx = TextStats.positionalIndex(t(s, dir, "documents"),
+        "doc_id", "text", minDf = 5, maxDf = 400)
+      val terms = idx.select(col("token"), col("df")).distinct()
+        .orderBy(col("df").desc, col("token")).limit(2)
+        .collect().map(_.getString(0)).toIndexedSeq
+      TextStats.proximitySearch(idx, "doc_id", terms, window = 3)
+    },
+      // the q85 positions + the same deterministic top-2 df pick; the
+      // anchor-window count as a correlated EXISTS per anchor position
+      sql("""WITH d AS (SELECT doc_id, list_filter(
+        |     string_split(text, ' '), x -> x <> '') AS ts
+        |   FROM documents),
+        | pt AS (SELECT doc_id, unnest(ts) AS token,
+        |     unnest(range(1, len(ts) + 1)) AS pos FROM d),
+        | dfs AS (SELECT token, count(DISTINCT doc_id) AS df
+        |   FROM pt GROUP BY 1
+        |   HAVING count(DISTINCT doc_id) >= 5
+        |      AND count(DISTINCT doc_id) <= 400),
+        | w AS (SELECT list(token ORDER BY df DESC, token) AS t2
+        |   FROM (SELECT token, df FROM dfs
+        |     ORDER BY df DESC, token LIMIT 2)),
+        | p0 AS (SELECT pt.doc_id, pt.pos FROM pt, w
+        |   WHERE pt.token = w.t2[1]),
+        | p1 AS (SELECT pt.doc_id, pt.pos FROM pt, w
+        |   WHERE pt.token = w.t2[2])
+        | SELECT p0.doc_id, CAST(count(*) AS BIGINT) AS n_anchors
+        | FROM p0
+        | WHERE EXISTS (SELECT 1 FROM p1
+        |   WHERE p1.doc_id = p0.doc_id
+        |     AND abs(p1.pos - p0.pos) <= 3)
+        | GROUP BY 1""".stripMargin.replace("\n", " "))),
+    // LLM §quality — unigram-LM mean surprisal (the CCNet perplexity
+    // filter's score, integer micro-nats): top-16 vocab + OOV bucket
+    // learned from the corpus (ln folded driver-side into literals
+    // shared with the oracle — the q75-idf move); the 31-token
+    // synthetic vocabulary leaves 15 tokens genuinely OOV, so both
+    // cost paths are exercised. One tokenization, one broadcast join,
+    // one doc-id aggregation.
+    Entry("q88_unigram_surprisal", (s, dir) => {
+      val (vocab, oov) = unigramLmModel(s, dir)
+      graft.llm.TextStats.unigramSurprisal(t(s, dir, "documents"),
+        "doc_id", "text", vocab, oov)
+    },
+      // same (token, cost_micro) + OOV literals as the q88 entry
+      (s, dir) => {
+        val (vocab, oov) = unigramLmModel(s, dir)
+        graft.llm.TextStats.unigramSurprisalOracleSql(vocab, oov)
+      }),
+    // LLM §quality — bigram stupid-backoff surprisal (Brants 2007):
+    // q88 one order up — position 1 at unigram cost, later positions
+    // at the top-32 pair table's conditional cost else the flat
+    // -ln(0.4) penalty + unigram backoff. One tokenization into
+    // (prev, cur) rows, two broadcast joins, one doc-id aggregation;
+    // the 31-token vocabulary leaves most of the 900-odd observed
+    // pairs out-of-table, so the backoff path dominates and both
+    // branches are exercised at gate scale.
+    Entry("q89_bigram_surprisal", (s, dir) =>
+      graft.llm.TextStats.bigramSurprisal(t(s, dir, "documents"),
+        "doc_id", "text", bigramLmModel(s, dir)),
+      // same vocab + pair-table + backoff literals as the q89 entry
+      (s, dir) => 
+        graft.llm.TextStats.bigramSurprisalOracleSql(bigramLmModel(s, dir))),
+    // LLM §quality — Moore-Lewis contrastive selection (Moore & Lewis
+    // 2010): per-doc mean surprisal under the lang='en' IN-DOMAIN LM
+    // minus under the whole-corpus GENERAL LM; negative = looks
+    // English relative to background. ONE tokenization, two broadcast
+    // cost joins, one aggregation — not two scoring passes.
+    Entry("q90_moore_lewis", (s, dir) => {
+      val (iv, io) = inDomainLmModel(s, dir)
+      val (gv, go) = unigramLmModel(s, dir)
+      graft.llm.TextStats.lmContrastScore(t(s, dir, "documents"),
+        "doc_id", "text", iv, io, gv, go)
+    },
+      // same two (token, cost_micro) + OOV literal tables as q90
+      (s, dir) => {
+        val (iv, io) = inDomainLmModel(s, dir)
+        val (gv, go) = unigramLmModel(s, dir)
+        graft.llm.TextStats.lmContrastOracleSql(iv, io, gv, go)
+      }),
+    // LLM §quality — model-based scoring (the fastText/CCNet stage
+    // after the rule pass): a linear classifier DISTILLED from the
+    // qualityKeep rule teacher by bit-deterministic preconditioned
+    // GD (integer micro-unit gradients — every distributed sum is a
+    // Long sum), then the corpus scored by a shuffle-free integer
+    // projection; weights fold to literals shared with the oracle.
+    Entry("q91_quality_classifier", (s, dir) =>
+      graft.llm.Classifier.score(t(s, dir, "documents"),
+        "doc_id", "text", classifierModel(s, dir)),
+      // same micro-unit weight literals as the q91 entry's fit —
+      // the oracle replays only the (all-BIGINT) scoring projection
+      (s, dir) => 
+        graft.llm.Classifier.scoreOracleSql(classifierModel(s, dir))),
+    // LLM §selection — DSIR importance weights (Xie 2023): hashed-
+    // bigram bucket LMs (target = lang='en' stratum, raw = corpus),
+    // log importance weight in integer micro-nats. Where q90 contrasts
+    // open-vocabulary LMs via broadcast joins, the hashed feature
+    // space folds to a 64-long delta literal — scoring is a pure
+    // shuffle-free projection (spec-asserted), one corpus scan at any
+    // scale.
+    Entry("q92_dsir", (s, dir) => {
+      val (tgt, raw) = dsirModels(s, dir)
+      graft.llm.TextStats.dsirScore(t(s, dir, "documents"),
+        "doc_id", "text", tgt, raw)
+    },
+      // same per-bucket delta literals as the q92 entry's two learned
+      // bucket LMs — the oracle replays the per-row list fold
+      (s, dir) => {
+        val (tgt, raw) = dsirModels(s, dir)
+        graft.llm.TextStats.dsirOracleSql(tgt, raw)
+      }),
+    // LLM §selection — STRATIFIED DSIR (the q92/q94 closure):
+    // one shared raw background, one target LM per LANGUAGE (learned
+    // from the bench slice), every document priced against ITS
+    // stratum's target. The per-stratum delta vectors ride one
+    // literal CASE over `lang` — scoring stays a pure shuffle-free
+    // projection (spec-asserted), one corpus scan at any scale.
+    Entry("q122_dsir_stratified", (s, dir) => {
+      val (byLang, raw) = dsirStratModels(s, dir)
+      graft.llm.TextStats.dsirScoreStratified(t(s, dir, "documents"),
+        "doc_id", "text", "lang", byLang, raw)
+    },
+      // same per-stratum delta literals as the q122 entry's learned
+      // per-language targets — the oracle replays the CASE + list fold
+      (s, dir) => {
+        val (byLang, raw) = dsirStratModels(s, dir)
+        graft.llm.TextStats.dsirStratifiedOracleSql("lang", byLang, raw)
+      }),
+    // LLM §decontamination — SPAN-level cross-corpus scrub:
+    // cut from every train doc exactly the 8-token windows that
+    // appear verbatim in the bench split, keep the rest — the
+    // surgical completion of the q43/q113 screens (which tell you
+    // WHICH/HOW MUCH) and the q66 doc-level drop (which wastes the
+    // clean remainder). Ref gram set ≤1 row per key (no fan-out),
+    // covered indices fold to ONE bounded per-doc array, and the
+    // text surgery is a map-side indexed filter — the corpus text
+    // never shuffles.
+    Entry("q123_ref_span_scrub", (s, dir) => {
+      val docs = t(s, dir, "documents")
+      graft.llm.Dedup.scrubRefSpans(
+        docs.filter(col("doc_id") % 5 =!= 0),
+        docs.filter(col("doc_id") % 5 === 0),
+        "doc_id", "text", n = 8)
+    },
+      // positional 8-gram hits → covered-index set → indexed list
+      // surgery, replayed row-wise (the q113 gram idiom with the
+      // position kept)
+      sql(("""WITH d AS (SELECT doc_id, list_filter(string_split(text, ' '),
         |     x -> x <> '') AS ts FROM documents),
-        | raw AS (SELECT doc_id, unnest(list_transform(
-        |     range(1, len(ts) - 6), i -> """.stripMargin +
-        (0 until 8).map(o => if (o == 0) "ts[i]" else s"ts[i+$o]")
-          .mkString(" || ' ' || ") + """)) AS g
+        | raw AS (SELECT doc_id, ts,
+        |     unnest(range(1, len(ts) - 6)) AS i
         |   FROM d WHERE len(ts) >= 8),
-        | dg AS (SELECT DISTINCT doc_id, g FROM raw WHERE doc_id % 5 <> 0),
-        | rs AS (SELECT DISTINCT g FROM raw WHERE doc_id % 5 = 0),
-        | tot AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_grams
-        |   FROM dg GROUP BY 1),
-        | sh AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_shared
-        |   FROM dg JOIN rs USING (g) GROUP BY 1)
-        | SELECT d0.doc_id,
-        |   COALESCE(tot.n_grams, CAST(0 AS BIGINT)) AS n_grams,
-        |   COALESCE(sh.n_shared, CAST(0 AS BIGINT)) AS n_shared,
-        |   CASE WHEN COALESCE(tot.n_grams, CAST(0 AS BIGINT)) > 0
-        |     THEN (COALESCE(sh.n_shared, CAST(0 AS BIGINT)) * 1000000)
-        |       // tot.n_grams
-        |     ELSE CAST(0 AS BIGINT) END AS overlap_micro
-        | FROM (SELECT doc_id FROM documents WHERE doc_id % 5 <> 0) d0
-        | LEFT JOIN tot USING (doc_id)
-        | LEFT JOIN sh USING (doc_id)""".stripMargin)
-        .replace("\n", " "),
-    // per-doc list arithmetic replay: same gram construction, same
-    // nested occurrence counts, same coverage windows, BIGINT //
-    "q125_repetition" ->
-      """WITH d AS (SELECT doc_id, list_filter(string_split(text, ' '),
+        | pg AS (SELECT doc_id, CAST(i AS INT) AS i, """.stripMargin +
+        (0 until 8).map(o => if (o == 0) "ts[CAST(i AS INT)]"
+          else s"ts[CAST(i AS INT) + $o]").mkString(" || ' ' || ") +
+        """ AS g FROM raw),
+        | rs AS (SELECT DISTINCT g FROM pg WHERE doc_id % 5 = 0),
+        | hits AS (SELECT DISTINCT p.doc_id, p.i FROM pg p
+        |   JOIN rs USING (g) WHERE p.doc_id % 5 <> 0),
+        | cov AS (SELECT DISTINCT doc_id, i - 1 + k.k AS idx
+        |   FROM hits, (SELECT unnest(range(8)) AS k) k),
+        | cvl AS (SELECT doc_id, list(idx) AS cv,
+        |     CAST(count(*) AS BIGINT) AS nrm FROM cov GROUP BY 1)
+        | SELECT d.doc_id, CAST(len(ts) AS BIGINT) AS n_tokens,
+        |   COALESCE(nrm, CAST(0 AS BIGINT)) AS n_removed,
+        |   COALESCE(array_to_string(list_filter(list_transform(
+        |     range(1, len(ts) + 1),
+        |     i -> CASE WHEN list_contains(cv, i - 1) THEN NULL
+        |       ELSE ts[CAST(i AS INT)] END),
+        |     x -> x IS NOT NULL), ' '), '') AS text_clean
+        | FROM d LEFT JOIN cvl USING (doc_id)
+        | WHERE d.doc_id % 5 <> 0""".stripMargin)
+        .replace("\n", " "))),
+    // LLM §quality — Gopher repetition signals (Rae 2021
+    // §A1.1): top-2/3-gram token share and duplicated-4-gram token
+    // COVERAGE per document — the screens that catch phrase-stuffed
+    // spam the q25/q49 length/distinct/stopword gates pass. Pure
+    // map-side sort + run-length folds — O(L log L) per doc (no
+    // explode, no shuffle — spec-asserted), one corpus scan at any
+    // scale and safe at real pre-training doc lengths (long-doc soak
+    // in STATUS).
+    Entry("q125_repetition", (s, dir) =>
+      graft.llm.TextStats.repetitionSignals(
+        t(s, dir, "documents"), "doc_id", "text"),
+      // per-doc list arithmetic replay: same gram construction, same
+      // nested occurrence counts, same coverage windows, BIGINT //
+      sql("""WITH d AS (SELECT doc_id, list_filter(string_split(text, ' '),
         |     x -> x <> '') AS ts FROM documents),
         | g AS (SELECT doc_id, len(ts) AS L,
         |   list_transform(range(1, len(ts)), i -> ts[CAST(i AS INT)]
@@ -3236,12 +2387,37 @@ object SparkEntry {
         |       q -> c4[CAST(q AS INT)] >= 2)) > 0)) AS BIGINT)
         |     * 1000000 // L
         |     ELSE CAST(0 AS BIGINT) END AS dup4_token_share_micro
-        | FROM c""".stripMargin.replace("\n", " "),
-    // CDC positional gate: the net-corpus positional build, with the
-    // ever-overflow condition on FULL-corpus df (peak df = full df —
-    // ingests precede forgets)
-    "q126_positional_cdc" ->
-      """WITH d AS (SELECT doc_id, list_filter(
+        | FROM c""".stripMargin.replace("\n", " "))),
+    // LLM §streaming — the CDC ingest/forget loop GATED (the q118
+    // pattern on the streaming axis): feed the documents table
+    // as +1 rows, then forget doc_id % 7 == 0 as −1 rows, through
+    // positionalIndexCdc; the max-seq snapshot must hash-equal the
+    // positional index DuckDB builds FROM SCRATCH on the net corpus.
+    // Ever-overflowed tokens keep the honest marker — and since df
+    // only grows during the ingest phase, peak df = full-corpus df,
+    // so the marker condition is SQL-expressible (dfull > maxDf).
+    // df >= 5 is the reader-side window, applied identically on the
+    // snapshot and in the oracle's HAVING.
+    Entry("q126_positional_cdc", (s, dir) => {
+      val snap = runCdcGate(s, dir, "pos_cdc_gate")(df =>
+        graft.streaming.StreamingIndex.positionalIndexCdc(
+          df, "op", "doc_id", "text", maxDf = 400).toDF())
+        .filter(col("df") >= 5)
+      val live = snap.filter(col("docs").isNotNull)
+        .select(col("token"), col("df"), explode(col("docs")).as("_e"))
+        .select(col("token"), col("df"),
+          col("_e.doc_id").as("doc_id"),
+          concat_ws(",", transform(col("_e.positions"),
+            p => p.cast("string"))).as("positions"))
+      val marker = snap.filter(col("docs").isNull)
+        .select(col("token"), col("df"),
+          lit(-1L).as("doc_id"), lit("<overflow>").as("positions"))
+      live.unionByName(marker)
+    },
+      // CDC positional gate: the net-corpus positional build, with the
+      // ever-overflow condition on FULL-corpus df (peak df = full df —
+      // ingests precede forgets)
+      sql("""WITH d AS (SELECT doc_id, list_filter(
         |     string_split(text, ' '), x -> x <> '') AS ts
         |   FROM documents),
         | pt AS (SELECT doc_id, unnest(ts) AS token,
@@ -3262,17 +2438,33 @@ object SparkEntry {
         | SELECT token, df, CAST(-1 AS BIGINT) AS doc_id,
         |   '<overflow>' AS positions
         | FROM dnet JOIN dfull USING (token)
-        | WHERE dfull.dff > 400""".stripMargin.replace("\n", " "),
-    // CDC BM25 scalars gate: the net-corpus (L, N) pair
-    "q128_bm25_cdc" ->
-      """SELECT CAST(sum(len(list_filter(string_split(text, ' '),
+        | WHERE dfull.dff > 400""".stripMargin.replace("\n", " "))),
+    // ... the BM25 (L, N) scalars through the same feed: the signed
+    // one-row aggregation must equal the batch scalars of the net
+    // corpus — token-less docs count in N only, both engines.
+    Entry("q128_bm25_cdc", (s, dir) => {
+      runCdcFeed(s, dir, "bm25_cdc_gate", "complete")(df =>
+        graft.streaming.StreamingIndex.bm25ScalarsCdc(df, "op", "text"))
+        .select(col("_L").as("corpus_tokens"),
+          col("_N").as("corpus_docs"))
+    },
+      // CDC BM25 scalars gate: the net-corpus (L, N) pair
+      sql("""SELECT CAST(sum(len(list_filter(string_split(text, ' '),
         |     x -> x <> ''))) AS BIGINT) AS corpus_tokens,
         |   CAST(count(*) AS BIGINT) AS corpus_docs
         | FROM documents WHERE doc_id % 7 <> 0""".stripMargin
-        .replace("\n", " "),
-    // CDC gram-table gate: net-corpus bigram counts
-    "q130_ngram_cdc" ->
-      """WITH d AS (SELECT list_filter(string_split(text, ' '),
+        .replace("\n", " "))),
+    // ... the signed GRAM table through the same feed: net bigram
+    // counts (freq > 0 reader cut) ≡ DuckDB bigram counts on the net
+    // corpus.
+    Entry("q130_ngram_cdc", (s, dir) => {
+      runCdcFeed(s, dir, "ngram_cdc_gate", "complete")(df =>
+        graft.streaming.StreamingIndex.ngramCountsCdc(df, "op", "text",
+          n = 2))
+        .filter(col("freq") > 0)
+    },
+      // CDC gram-table gate: net-corpus bigram counts
+      sql("""WITH d AS (SELECT list_filter(string_split(text, ' '),
         |     x -> x <> '') AS ts
         |   FROM documents WHERE doc_id % 7 <> 0),
         | g AS (SELECT unnest(list_transform(range(1, len(ts)),
@@ -3280,10 +2472,23 @@ object SparkEntry {
         |     AS ngram
         |   FROM d)
         | SELECT ngram, CAST(count(*) AS BIGINT) AS freq
-        | FROM g GROUP BY 1""".stripMargin.replace("\n", " "),
-    // CDC inverted gate: same feed, q118's formatting
-    "q127_inverted_cdc" ->
-      """WITH dt AS (SELECT DISTINCT doc_id, t AS token FROM (
+        | FROM g GROUP BY 1""".stripMargin.replace("\n", " "))),
+    // ... and the inverted sibling through the same feed: snapshot ≡
+    // DuckDB inverted build on the net corpus, '<overflow>' on
+    // ever-overflowed tokens (exact net df either way).
+    Entry("q127_inverted_cdc", (s, dir) => {
+      runCdcGate(s, dir, "inv_cdc_gate")(df =>
+        graft.streaming.StreamingIndex.invertedIndexCdc(
+          df, "op", "doc_id", "text", maxDf = 400).toDF())
+        .filter(col("df") >= 5)
+        .select(col("token"), col("df"),
+          when(col("postings").isNull, lit("<overflow>"))
+            .otherwise(concat_ws(",", transform(col("postings"),
+              p => p.cast("string"))))
+            .as("postings"))
+    },
+      // CDC inverted gate: same feed, q118's formatting
+      sql("""WITH dt AS (SELECT DISTINCT doc_id, t AS token FROM (
         |    SELECT doc_id, unnest(list_filter(
         |      string_split(text, ' '), x -> x <> '')) AS t
         |    FROM documents)),
@@ -3297,12 +2502,70 @@ object SparkEntry {
         |       ',') END AS postings
         | FROM net JOIN dnet USING (token) JOIN dfull USING (token)
         | GROUP BY net.token, dnet.df, dfull.dff""".stripMargin
-        .replace("\n", " "),
-    // curation v3 replay: cluster CTEs + the q123 scrub chain, then
-    // the q110 novelty idiom and the q49 quality fragment applied to
-    // the CLEAN text
-    "q124_curation_v3" ->
-      (s"""$clusterOracleCtes,
+        .replace("\n", " "))),
+    // LLM §pipeline — curation v3: v2 with the contamination
+    // screen replaced by contamination SURGERY — scrub the bench-
+    // verbatim spans out (q123) instead of dropping whole docs, then
+    // quality-gate and novelty-screen the SCRUBBED text, still ONE
+    // declarative plan. The scrubbed frame rides one repartition
+    // exchange every consumer reuses (quality filter, novelty
+    // census, roster — the q117 census move applied to the derived
+    // frame, which would otherwise re-execute the scrub per
+    // consumer); novelty serves from one census exchange with an
+    // EMPTY ref side (the fused screen's contamination leg priced at
+    // zero — post-surgery overlap is zero by construction).
+    Entry("q124_curation_v3", (s, dir) => {
+      import graft.llm.{Dedup, TextStats}
+      val docs = t(s, dir, "documents")
+      val bench = docs.filter(col("doc_id") % 5 === 0)
+      // PARTIAL-contamination fixture: the corpus' only contamination
+      // is whole-doc near-copies, whose post-scrub husks fail the
+      // quality gate — the surgery would be output-invisible. Plant
+      // one 8-token bench window (the lowest-id ≥8-token bench doc's
+      // prefix — SQL-derivable, so the oracle replays it) onto every
+      // 11th train doc: those docs now carry REAL partial
+      // contamination, survive the scrub, and show n_removed > 0.
+      val snip = bench
+        .select(col("doc_id"), split(col("text"), " ").as("_ts"))
+        .filter(size(filter(col("_ts"), t => length(t) > 0)) >= 8)
+        .orderBy(col("doc_id")).limit(1)
+        .select(array_join(slice(filter(col("_ts"),
+          t => length(t) > 0), 1, 8), " ").as("_snip"))
+      val train = docs.filter(col("doc_id") % 5 =!= 0)
+        .crossJoin(broadcast(snip))
+        .withColumn("text",
+          when(col("doc_id") % 11 === 0,
+            concat(col("text"), lit(" "), col("_snip")))
+            .otherwise(col("text")))
+        .drop("_snip")
+      val losers = clusterArtifact(s, dir)
+        .filter(col("id_a") =!= col("cluster_id"))
+        .select(col("id_a").as("doc_id"))
+      // the scrubbed corpus is the pipeline's stored intermediate —
+      // materialized: four consumers (two censuses, the screen,
+      // the quality gate) otherwise re-derive the whole scrub subtree
+      // (40 corpus scans in the static plan)
+      val scrubbed = Dedup.scrubRefSpans(train, bench,
+          "doc_id", "text", n = 8)
+        .repartition(col("doc_id"))
+        .localCheckpoint(true)
+      val novel = TextStats.gramScreensFromCensus(
+          scrubbed,
+          TextStats.gramCensus(scrubbed, "doc_id", "text_clean", 8),
+          TextStats.gramCensus(scrubbed.limit(0), "doc_id",
+            "text_clean", 8), "doc_id")
+        .filter(col("novelty_micro") >= 250000)
+        .select("doc_id")
+      scrubbed.filter(TextStats.qualityKeep(col("text_clean")))
+        .join(losers, Seq("doc_id"), "left_anti")
+        .join(novel, Seq("doc_id"), "left_semi")
+        .join(train.select(col("doc_id"), col("lang")), Seq("doc_id"))
+        .select(col("doc_id"), col("lang"), col("n_removed"))
+    },
+      // curation v3 replay: cluster CTEs + the q123 scrub chain, then
+      // the q110 novelty idiom and the q49 quality fragment applied to
+      // the CLEAN text
+      sql((s"""$clusterOracleCtes,
         | sn AS (SELECT array_to_string(list_filter(
         |     string_split(text, ' '), x -> x <> '')[1:8], ' ') AS snip
         |   FROM documents WHERE doc_id % 5 = 0
@@ -3366,42 +2629,432 @@ object SparkEntry {
         | JOIN cprof USING (doc_id)
         | WHERE d.doc_id NOT IN (SELECT id FROM cl WHERE id <> cluster_id)
         |   AND cprof.novelty >= 250000""".stripMargin)
-        .replace("\n", " "),
-    // positional 8-gram hits → covered-index set → indexed list
-    // surgery, replayed row-wise (the q113 gram idiom with the
-    // position kept)
-    "q123_ref_span_scrub" ->
-      ("""WITH d AS (SELECT doc_id, list_filter(string_split(text, ' '),
+        .replace("\n", " "))),
+    // LLM §splitting — LEAKAGE-SAFE train/valid split (the dedup-aware
+    // eval guard): every q31 near-dup cluster moves as one block keyed
+    // on its representative's md5, so no valid doc has a near-copy in
+    // train; singletons split by their own id. One left equi-join +
+    // a map-side hash predicate — reads the stored cluster artifact.
+    Entry("q93_leakage_split", (s, dir) =>
+      graft.llm.Sampling.leakageSafeSplit(
+        t(s, dir, "documents").select(col("doc_id")), "doc_id",
+        clusterArtifact(s, dir), "id_a", "cluster_id",
+        validFraction = 0.15),
+      // q31's cluster CTEs + the same quantized md5 predicate on the
+      // cluster representative (0.15 → 9830/65536 → hex '2666')
+      sql(s"""$clusterOracleCtes
+        | SELECT d.doc_id,
+        |   COALESCE(cl.cluster_id, d.doc_id) AS cluster_rep,
+        |   CASE WHEN substr(md5(CAST(COALESCE(cl.cluster_id, d.doc_id)
+        |       AS VARCHAR)), 1, 4) < '2666'
+        |     THEN 'valid' ELSE 'train' END AS split
+        | FROM documents d LEFT JOIN cl ON cl.id = d.doc_id"""
+        .stripMargin.replace("\n", " "))),
+    // LLM §mixture — temperature rebalancing (sample stratum ∝ n^α,
+    // α=0.5 upweights small sources): ONE counts aggregation, quotas
+    // fold driver-side (largest-remainder, deterministic), execution
+    // is the q60 bounded-heap cap sampler with per-stratum caps. The
+    // oracle replays the selection from the SAME quota literals.
+    Entry("q94_temperature_mix", (s, dir) =>
+      graft.llm.Sampling.capSampleQuotas(t(s, dir, "documents"),
+        "doc_id", "source", temperatureQuotasModel(s, dir)),
+      // same integer quota literals as the q94 entry's driver fold
+      (s, dir) => 
+        graft.llm.Sampling.capSampleQuotasOracleSql("documents",
+          "doc_id", "source", temperatureQuotasModel(s, dir))),
+    // LLM §dedup — duplicated-span coverage AUDIT (the "fraction of
+    // each doc that is duplicated text" report): exact interval union
+    // of corpus-duplicated 16-char shingles per doc — the exact
+    // number q62's winnowing samples. One gram hash agg + a PER-DOC
+    // window (never global) + integer micro-unit division.
+    Entry("q95_dup_coverage", (s, dir) =>
+      graft.llm.Dedup.dupSpanCoverageFromCensus(
+        t(s, dir, "documents"), spanCensusArtifact(s, dir),
+        "doc_id", "text", shingleLen = 16),
+      // the q29 shingle CTEs (positions kept, no GROUP BY dedup) + a
+      // HAVING>=2 dup cut + the standard running-max interval union
+      sql("""WITH d AS (SELECT doc_id, text, len(text) AS lt FROM documents
+        |   WHERE doc_id IS NOT NULL),
+        | idx AS (SELECT unnest(range(1, 2000)) AS i),
+        | sh AS (SELECT doc_id, CAST(i AS BIGINT) AS i,
+        |    substr(text, CAST(i AS INT), 16) AS g
+        |   FROM d JOIN idx ON i <= lt - 15),
+        | dup AS (SELECT g FROM sh GROUP BY g HAVING count(*) >= 2),
+        | hit AS (SELECT doc_id, i FROM sh JOIN dup USING (g)),
+        | cov AS (SELECT doc_id, greatest(CAST(0 AS BIGINT), (i + 15) -
+        |    greatest(i - 1, COALESCE(max(i + 15) OVER (
+        |      PARTITION BY doc_id ORDER BY i
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
+        |      CAST(0 AS BIGINT)))) AS c FROM hit),
+        | agg AS (SELECT doc_id, CAST(sum(c) AS BIGINT) AS dup_chars
+        |   FROM cov GROUP BY doc_id)
+        | SELECT d.doc_id, CAST(d.lt AS BIGINT) AS n_chars,
+        |   COALESCE(agg.dup_chars, CAST(0 AS BIGINT)) AS dup_chars,
+        |   CASE WHEN d.lt > 0 THEN
+        |     COALESCE(agg.dup_chars, CAST(0 AS BIGINT)) * 1000000
+        |       // CAST(d.lt AS BIGINT)
+        |     ELSE CAST(0 AS BIGINT) END AS dup_micro
+        | FROM d LEFT JOIN agg ON agg.doc_id = d.doc_id"""
+        .stripMargin.replace("\n", " "))),
+    // LLM §layout — deterministic EPOCH SHUFFLE (epoch 1, 64-doc
+    // shards): md5(epoch#id)-ordered permutation ranked by the q64
+    // packed-key prefix sum (ONE range shuffle, never a global
+    // window); reruns and single-shard recomputes are identical.
+    Entry("q96_epoch_shuffle", (s, dir) =>
+      graft.llm.Packing.epochShuffle(t(s, dir, "documents"),
+        "doc_id", epoch = 1, shardSize = 64),
+      // the oracle may global-sort: ROW_NUMBER over (23-bit md5 fold,
+      // id) — the engine side is the range-shuffle prefix sum
+      sql("""WITH h AS (SELECT doc_id,
+        |    ('0x' || substr(md5('1#' || CAST(doc_id AS VARCHAR)), 1, 6))
+        |      ::BIGINT % 8388608 AS hb
+        |   FROM documents),
+        | r AS (SELECT doc_id,
+        |    ROW_NUMBER() OVER (ORDER BY hb, doc_id) - 1 AS rank0
+        |   FROM h)
+        | SELECT doc_id, rank0 // 64 AS shard, rank0 % 64 AS pos
+        | FROM r""".stripMargin.replace("\n", " "))),
+    // LLM §pipeline — TOKENIZE→PACK as ONE declarative plan (the last
+    // leg of the training-data path, the q66 move applied to layout):
+    // q54's learned-BPE subword counts feed q37's prefix-sum packing
+    // directly — the map-side encode fuses into the pack's range
+    // shuffle, no intermediate materialization. The oracle composes
+    // the two replays (merge literals → counts CTE → pack window).
+    Entry("q97_tokenize_pack", (s, dir) => {
+      val encoded = graft.llm.Bpe.encode(t(s, dir, "documents"),
+        "text", bpeMergesCached(s, dir))
+      graft.llm.Packing.packSequences(encoded, "doc_id",
+        col("n_bpe_tokens").cast("long"), seqLen = 256)
+    },
+      // the q54 merge-literal count replay composed with the q37 pack
+      // window — one oracle for the fused tokenize→pack plan
+      (s, dir) => tokenizePackOracleSql(bpeMerges(s, dir))),
+    // LLM §retrieval — HYBRID search: the q75 BM25-micro ranking and
+    // the q22 exact-cosine ranking (query vector 0; documents and
+    // embeddings share the synthetic keyspace, the q61 move) fused by
+    // integer reciprocal-rank fusion (Cormack 2009). Both rankings
+    // are the stored top-20 shards; the fusion itself is a union of
+    // queries×k rows + one hash agg — it never re-reads the corpus.
+    Entry("q98_hybrid_rrf", (s, dir) => {
+      import graft.llm.{Similarity, TextStats}
+      val txt = TextStats.bm25TopKMicro(t(s, dir, "documents"),
+          "doc_id", "text", bm25Terms(s, dir), k = 20)
+        .select(col("doc_id"), col("rank"))
+      val vec = Similarity.bruteForceTopK(t(s, dir, "embeddings"),
+          t(s, dir, "embeddings").filter(col("vec_id") === 0),
+          "vec_id", "embedding", 20)
+        .select(col("vec_id").as("doc_id"), col("rank"))
+      TextStats.rrfFuse(Seq(txt, vec), "doc_id", kRrf = 60,
+        scale = 1000000000L, k = 10)
+    },
+      // same (term, idf_micro) literals as the q75/q98 entries; the
+      // vec ranking replays q22's cosine, the fusion integer RRF
+      (s, dir) => graft.llm.TextStats.rrfOracleSql(
+        bm25Terms(s, dir), qVecId = 0L, kText = 20, kVec = 20,
+        kRrf = 60, scale = 1000000000L, k = 10)),
+    // LLM §corpus-stats — EXACT length percentiles (what
+    // percentile_approx approximates): value at 1-based rank
+    // ceil(p·n/100) of the (tokens, id) total order, via the q64
+    // packed-key prefix sum — one range shuffle, never a single-task
+    // global window, all-integer so any engine agrees bit-for-bit.
+    Entry("q78_length_percentiles", (s, dir) =>
+      graft.llm.Packing.orderStatistics(t(s, dir, "documents"),
+        "doc_id", size(split(col("text"), " ")).cast("long"),
+        Seq(5, 25, 50, 75, 95, 99)),
+      // the q64 (len, id) rank + integer ceil target ranks
+      sql("""WITH s AS (SELECT doc_id,
+        |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
+        |  FROM documents),
+        | r AS (SELECT n_tokens,
+        |    ROW_NUMBER() OVER (ORDER BY n_tokens, doc_id) - 1 AS rank0
+        |  FROM s),
+        | n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM s)
+        | SELECT p, n_tokens
+        | FROM (VALUES (5),(25),(50),(75),(95),(99)) ps(p), r, n
+        | WHERE r.rank0 = (p * n.n + 99) // 100 - 1"""
+        .stripMargin.replace("\n", " "))),
+    // LLM §sampling — systematic PPS: exactly 100 draws proportional
+    // to token count, via the q37 prefix sum + the k-point grid (one
+    // range shuffle, no window, no floats — the draw count is a
+    // telescoping ceil difference, so any engine replays it).
+    Entry("q106_pps_sample", (s, dir) =>
+      graft.llm.Sampling.systematicPps(t(s, dir, "documents"),
+        "doc_id",
+        size(filter(split(col("text"), " "),
+          t => length(t) > 0)).cast("long"),
+        k = 100),
+      // prefix-sum replay in id order + the same telescoping ceil
+      // difference — BIGINT `//` end to end
+      sql("""WITH s AS (SELECT doc_id,
+        |    CAST(len(list_filter(string_split(text, ' '),
+        |      x -> x <> '')) AS BIGINT) AS w
+        |   FROM documents),
+        | o AS (SELECT doc_id, w,
+        |    COALESCE(CAST(sum(w) OVER (ORDER BY doc_id
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
+        |      AS BIGINT), 0) AS off FROM s),
+        | t AS (SELECT CAST(sum(w) AS BIGINT) AS tw FROM s)
+        | SELECT doc_id, w AS weight,
+        |   ((off + w) * 100 + tw - 1) // tw -
+        |     (off * 100 + tw - 1) // tw AS n_picks
+        | FROM o, t
+        | WHERE ((off + w) * 100 + tw - 1) // tw -
+        |   (off * 100 + tw - 1) // tw > 0"""
+        .stripMargin.replace("\n", " "))),
+    // LLM §corpus-stats — PER-GROUP exact length percentiles (q78 per
+    // language — the mixture-builder's report): a KEYED row_number
+    // window (right shape here: the skew ceiling is the largest
+    // group, never the corpus through one task), integer rank
+    // arithmetic, (value, id) tie-break.
+    Entry("q104_group_percentiles", (s, dir) =>
+      graft.llm.Packing.orderStatisticsByGroup(t(s, dir, "documents"),
+        "lang", "doc_id", size(split(col("text"), " ")).cast("long"),
+        Seq(25, 50, 75, 95)),
+      // per-group rank replay — same (value, id) order, same
+      // ceil-rank arithmetic
+      sql("""WITH s AS (SELECT lang, doc_id,
+        |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
+        |   FROM documents),
+        | r AS (SELECT lang, n_tokens,
+        |    CAST(ROW_NUMBER() OVER (PARTITION BY lang
+        |      ORDER BY n_tokens, doc_id) AS BIGINT) AS rnk FROM s),
+        | n AS (SELECT lang, CAST(count(*) AS BIGINT) AS n
+        |   FROM s GROUP BY 1)
+        | SELECT r.lang, ps.p, r.n_tokens
+        | FROM r JOIN n USING (lang)
+        | CROSS JOIN (VALUES (25), (50), (75), (95)) ps(p)
+        | WHERE r.rnk = (CAST(ps.p AS BIGINT) * n.n + 99) // 100"""
+        .stripMargin.replace("\n", " "))),
+    // LLM §corpus-stats — ROLLUP corpus report: (lang, source) doc
+    // counts and char totals with subtotal and grand-total rows —
+    // one aggregation with map-side partials at every grouping
+    // level; rollup nulls named '<all>' so both engines emit
+    // identical scalar cells.
+    Entry("q105_corpus_rollup", (s, dir) =>
+      t(s, dir, "documents")
+        .rollup(col("lang"), col("source"))
+        .agg(count(lit(1)).as("n_docs"),
+          sum(col("n_chars")).as("total_chars"))
+        .select(coalesce(col("lang"), lit("<all>")).as("lang"),
+          coalesce(col("source"), lit("<all>")).as("source"),
+          col("n_docs"), col("total_chars")),
+      // rollup replay with the same '<all>' naming of subtotal rows
+      sql("""SELECT COALESCE(lang, '<all>') AS lang,
+        |  COALESCE(source, '<all>') AS source,
+        |  CAST(count(*) AS BIGINT) AS n_docs,
+        |  CAST(sum(n_chars) AS BIGINT) AS total_chars
+        | FROM documents GROUP BY ROLLUP(lang, source)"""
+        .stripMargin.replace("\n", " "))),
+    // LLM §text-analysis — top-20 COLLOCATIONS by exact integer lift
+    // (PMI-monotone: lift_micro = c12·T·1e6 div (c1·c2), float-free —
+    // the q75 integer-div parity move). Vocabulary-sized joins only
+    // after the two hash aggregations; min-count 5 noise gate.
+    Entry("q108_collocations", (s, dir) =>
+      graft.llm.TextStats.collocations(t(s, dir, "documents"), "text",
+        minCount = 5, k = 20),
+      // collocation replay: unigram + pair-gram counts, the exact
+      // integer lift (// ≡ Spark div for positive operands)
+      sql("""WITH d AS (SELECT list_filter(string_split(text, ' '),
         |     x -> x <> '') AS ts FROM documents),
-        | raw AS (SELECT doc_id, ts,
-        |     unnest(range(1, len(ts) - 6)) AS i
+        | u AS (SELECT unnest(ts) AS t FROM d),
+        | uc AS (SELECT t, CAST(count(*) AS BIGINT) AS c
+        |   FROM u GROUP BY 1),
+        | tot AS (SELECT CAST(sum(c) AS BIGINT) AS T FROM uc),
+        | g AS (SELECT unnest(list_transform(range(1, len(ts)),
+        |     i -> ts[i] || ' ' || ts[i+1])) AS ngram
+        |   FROM d WHERE len(ts) >= 2),
+        | pc AS (SELECT ngram, CAST(count(*) AS BIGINT) AS pair_count
+        |   FROM g GROUP BY 1 HAVING count(*) >= 5),
+        | p AS (SELECT string_split(ngram, ' ')[1] AS w1,
+        |     string_split(ngram, ' ')[2] AS w2, pair_count FROM pc)
+        | SELECT p.w1, p.w2, p.pair_count, u1.c AS c1, u2.c AS c2,
+        |   (p.pair_count * tot.T * 1000000) // (u1.c * u2.c)
+        |     AS lift_micro
+        | FROM p CROSS JOIN tot JOIN uc u1 ON p.w1 = u1.t
+        |   JOIN uc u2 ON p.w2 = u2.t
+        | ORDER BY lift_micro DESC, w1, w2 LIMIT 20"""
+        .stripMargin.replace("\n", " "))),
+    // LLM §corpus-stats — ONE-PASS bounded-state percentile SKETCH
+    // (the scale path next to q78's exact range shuffle): bit-length
+    // buckets (≤ 65 counters of state), each percentile reports the
+    // [lo, hi] power-of-two bracket holding the exact order statistic
+    // at the q78 ceil-rank. Same value column as q78, so the bracket
+    // is checkable against the exact row.
+    Entry("q109_hist_percentiles", (s, dir) =>
+      graft.llm.Sketch.logHistogramPercentiles(t(s, dir, "documents"),
+        size(split(col("text"), " ")).cast("long"),
+        Seq(5, 25, 50, 75, 95, 99)),
+      // histogram-sketch replay: the same bit-length buckets
+      // (length(bin(v)) strips leading zeros identically, the q70
+      // trick), the q78 ceil-rank pick over the <= 65-row frame
+      sql("""WITH s AS (SELECT CAST(len(string_split(text, ' '))
+        |     AS BIGINT) AS v FROM documents),
+        | b AS (SELECT CASE WHEN v = 0 THEN CAST(0 AS BIGINT)
+        |     ELSE CAST(length(bin(v)) AS BIGINT) END AS bucket,
+        |     CAST(count(*) AS BIGINT) AS n FROM s GROUP BY 1),
+        | c AS (SELECT bucket, CAST(sum(n) OVER (ORDER BY bucket)
+        |     AS BIGINT) AS cum FROM b),
+        | t AS (SELECT CAST(sum(n) AS BIGINT) AS N FROM b),
+        | ch AS (SELECT p, min(bucket) AS bucket
+        |   FROM (VALUES (5),(25),(50),(75),(95),(99)) ps(p)
+        |   CROSS JOIN t CROSS JOIN c
+        |   WHERE c.cum >= (CAST(ps.p AS BIGINT) * t.N + 99) // 100
+        |   GROUP BY p)
+        | SELECT CAST(ch.p AS BIGINT) AS p, ch.bucket,
+        |   CASE WHEN ch.bucket = 0 THEN CAST(0 AS BIGINT)
+        |     ELSE CAST(1 AS BIGINT) << CAST(ch.bucket - 1 AS INT)
+        |     END AS lo,
+        |   CASE WHEN ch.bucket = 0 THEN CAST(0 AS BIGINT)
+        |     WHEN ch.bucket >= 63
+        |       THEN CAST(9223372036854775807 AS BIGINT)
+        |     ELSE (CAST(1 AS BIGINT) << CAST(ch.bucket AS INT)) - 1
+        |     END AS hi,
+        |   c2.cum AS n_le
+        | FROM ch JOIN c c2 ON ch.bucket = c2.bucket"""
+        .stripMargin.replace("\n", " "))),
+    // LLM §text-analysis — per-doc n-gram NOVELTY profile (the
+    // complement of q95's duplication coverage): distinct 8-gram
+    // count, corpus-unique (df=1) gram count, and their micro ratio.
+    // The (doc, gram) rows explode and shuffle once; a df=1 gram's
+    // holder rides the gram aggregation, so no gram rows are joined.
+    Entry("q110_gram_novelty", (s, dir) =>
+      graft.llm.TextStats.gramNovelty(t(s, dir, "documents"),
+        "doc_id", "text", n = 8),
+      // novelty replay: distinct (doc, 8-gram) frame, df=1 gram set,
+      // join back, gram-less docs kept at 0/0/0
+      sql(("""WITH d AS (SELECT doc_id, list_filter(string_split(text, ' '),
+        |     x -> x <> '') AS ts FROM documents),
+        | raw AS (SELECT doc_id, unnest(list_transform(
+        |     range(1, len(ts) - 6), i -> """.stripMargin +
+        (0 until 8).map(o => if (o == 0) "ts[i]" else s"ts[i+$o]")
+          .mkString(" || ' ' || ") + """)) AS g
         |   FROM d WHERE len(ts) >= 8),
-        | pg AS (SELECT doc_id, CAST(i AS INT) AS i, """.stripMargin +
-        (0 until 8).map(o => if (o == 0) "ts[CAST(i AS INT)]"
-          else s"ts[CAST(i AS INT) + $o]").mkString(" || ' ' || ") +
-        """ AS g FROM raw),
-        | rs AS (SELECT DISTINCT g FROM pg WHERE doc_id % 5 = 0),
-        | hits AS (SELECT DISTINCT p.doc_id, p.i FROM pg p
-        |   JOIN rs USING (g) WHERE p.doc_id % 5 <> 0),
-        | cov AS (SELECT DISTINCT doc_id, i - 1 + k.k AS idx
-        |   FROM hits, (SELECT unnest(range(8)) AS k) k),
-        | cvl AS (SELECT doc_id, list(idx) AS cv,
-        |     CAST(count(*) AS BIGINT) AS nrm FROM cov GROUP BY 1)
-        | SELECT d.doc_id, CAST(len(ts) AS BIGINT) AS n_tokens,
-        |   COALESCE(nrm, CAST(0 AS BIGINT)) AS n_removed,
-        |   COALESCE(array_to_string(list_filter(list_transform(
-        |     range(1, len(ts) + 1),
-        |     i -> CASE WHEN list_contains(cv, i - 1) THEN NULL
-        |       ELSE ts[CAST(i AS INT)] END),
-        |     x -> x IS NOT NULL), ' '), '') AS text_clean
-        | FROM d LEFT JOIN cvl USING (doc_id)
-        | WHERE d.doc_id % 5 <> 0""".stripMargin)
-        .replace("\n", " "),
-    // full KMV construction replay: same md5 60-bit hashes ('0x'||hex
-    // cast ≡ conv(hex,16,10), the q69 move), same bottom-k cuts,
-    // same integer estimator arithmetic
-    "q114_kmv_overlap" ->
-      ("""WITH d AS (SELECT doc_id, list_filter(string_split(text, ' '),
+        | dg AS (SELECT DISTINCT doc_id, g FROM raw),
+        | u AS (SELECT g FROM dg GROUP BY g HAVING count(*) = 1),
+        | tot AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_grams
+        |   FROM dg GROUP BY 1),
+        | nu AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_unique
+        |   FROM dg JOIN u USING (g) GROUP BY 1)
+        | SELECT d0.doc_id,
+        |   COALESCE(tot.n_grams, CAST(0 AS BIGINT)) AS n_grams,
+        |   COALESCE(nu.n_unique, CAST(0 AS BIGINT)) AS n_unique,
+        |   CASE WHEN COALESCE(tot.n_grams, CAST(0 AS BIGINT)) > 0
+        |     THEN (COALESCE(nu.n_unique, CAST(0 AS BIGINT)) * 1000000)
+        |       // tot.n_grams
+        |     ELSE CAST(0 AS BIGINT) END AS novelty_micro
+        | FROM documents d0 LEFT JOIN tot USING (doc_id)
+        |   LEFT JOIN nu USING (doc_id)""".stripMargin)
+        .replace("\n", " "))),
+    // LLM §corpus-stats — per-GROUP top-k tokens (the q33 vocabulary
+    // cut per language): exact two-phase partial top-k — per-partition
+    // sorted-slice partials merge per group, NO window anywhere.
+    Entry("q111_top_tokens_by_group", (s, dir) =>
+      graft.llm.TextStats.topTokensByGroup(t(s, dir, "documents"),
+        "lang", "text", k = 5),
+      // per-group top-k replay: the keyed ROW_NUMBER the engine's
+      // two-phase partials deliberately avoid
+      sql("""WITH d AS (SELECT lang, unnest(list_filter(
+        |     string_split(text, ' '), x -> x <> '')) AS t
+        |   FROM documents),
+        | tf AS (SELECT lang, t, CAST(count(*) AS BIGINT) AS freq
+        |   FROM d GROUP BY 1, 2),
+        | r AS (SELECT lang, t, freq,
+        |     CAST(row_number() OVER (PARTITION BY lang
+        |       ORDER BY freq DESC, t) AS INT) AS rank FROM tf)
+        | SELECT lang, t AS token, freq, rank FROM r WHERE rank <= 5"""
+        .stripMargin.replace("\n", " "))),
+    // LLM §similarity — tf-idf-weighted sparse dot-product top-k doc
+    // pairs (the q29 AllPairs candidate machinery with weighted
+    // scoring — the lexical sibling of q28's embedding cosine):
+    // BIGRAM terms (the token vocabulary here is stopword-dominated),
+    // df window [2, 50] bounding the per-term pair fan-out, idf as
+    // the exact integer rational 1e6 div df.
+    Entry("q112_tfidf_pairs", (s, dir) =>
+      graft.llm.TextStats.tfidfDotPairs(t(s, dir, "documents"),
+        "doc_id", "text", maxDf = 50, k = 20, n = 2),
+      // weighted-pair replay: same bigram terms, same integer idf
+      // rational, same (dot desc, id_a, id_b) cut
+      sql("""WITH d AS (SELECT doc_id, list_filter(string_split(text, ' '),
+        |     x -> x <> '') AS ts FROM documents),
+        | g AS (SELECT doc_id, unnest(list_transform(range(1, len(ts)),
+        |     i -> ts[i] || ' ' || ts[i+1])) AS t
+        |   FROM d WHERE len(ts) >= 2),
+        | tf AS (SELECT doc_id, t, CAST(count(*) AS BIGINT) AS tf
+        |   FROM g GROUP BY 1, 2),
+        | w AS (SELECT t, CAST(1000000 AS BIGINT) //
+        |     CAST(count(*) AS BIGINT) AS w
+        |   FROM tf GROUP BY t HAVING count(*) BETWEEN 2 AND 50),
+        | p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+        |     CAST(count(*) AS BIGINT) AS n_terms,
+        |     CAST(sum(a.tf * b.tf * w.w) AS BIGINT) AS dot_micro
+        |   FROM tf a JOIN w USING (t) JOIN tf b USING (t)
+        |   WHERE a.doc_id < b.doc_id GROUP BY 1, 2)
+        | SELECT id_a, id_b, n_terms, dot_micro FROM p
+        | ORDER BY dot_micro DESC, id_a, id_b LIMIT 20"""
+        .stripMargin.replace("\n", " "))),
+    // LLM §decontamination — per-TRAIN-doc contamination SHARE vs the
+    // bench split (q43 reports WHICH bench doc was hit; this is the
+    // per-doc ratio a decontamination run thresholds): distinct
+    // 8-gram overlap in exact micro units; the ref side collapses to
+    // a distinct gram set, so the join cannot fan out.
+    Entry("q113_ref_overlap", (s, dir) => {
+      val docs = t(s, dir, "documents")
+      graft.llm.TextStats.refGramOverlap(
+        docs.filter(col("doc_id") % 5 =!= 0),
+        docs.filter(col("doc_id") % 5 === 0),
+        "doc_id", "text", n = 8)
+    },
+      // contamination-share replay: the q110 gram frames split
+      // train/bench, ref side distinct, same left joins
+      sql(("""WITH d AS (SELECT doc_id, list_filter(string_split(text, ' '),
+        |     x -> x <> '') AS ts FROM documents),
+        | raw AS (SELECT doc_id, unnest(list_transform(
+        |     range(1, len(ts) - 6), i -> """.stripMargin +
+        (0 until 8).map(o => if (o == 0) "ts[i]" else s"ts[i+$o]")
+          .mkString(" || ' ' || ") + """)) AS g
+        |   FROM d WHERE len(ts) >= 8),
+        | dg AS (SELECT DISTINCT doc_id, g FROM raw WHERE doc_id % 5 <> 0),
+        | rs AS (SELECT DISTINCT g FROM raw WHERE doc_id % 5 = 0),
+        | tot AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_grams
+        |   FROM dg GROUP BY 1),
+        | sh AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_shared
+        |   FROM dg JOIN rs USING (g) GROUP BY 1)
+        | SELECT d0.doc_id,
+        |   COALESCE(tot.n_grams, CAST(0 AS BIGINT)) AS n_grams,
+        |   COALESCE(sh.n_shared, CAST(0 AS BIGINT)) AS n_shared,
+        |   CASE WHEN COALESCE(tot.n_grams, CAST(0 AS BIGINT)) > 0
+        |     THEN (COALESCE(sh.n_shared, CAST(0 AS BIGINT)) * 1000000)
+        |       // tot.n_grams
+        |     ELSE CAST(0 AS BIGINT) END AS overlap_micro
+        | FROM (SELECT doc_id FROM documents WHERE doc_id % 5 <> 0) d0
+        | LEFT JOIN tot USING (doc_id)
+        | LEFT JOIN sh USING (doc_id)""".stripMargin)
+        .replace("\n", " "))),
+    // LLM §sketches — KMV set-overlap screen (Beyer 2007 bottom-k):
+    // Jaccard + distinct estimates for the train/bench 8-gram sets
+    // from two 512-row sketches — the integer-exact cheap pass a
+    // 100 TB decontamination runs before q34/q113 shuffle a gram.
+    Entry("q114_kmv_overlap", (s, dir) => {
+      import graft.llm.{Sketch, TextStats}
+      val docs = t(s, dir, "documents")
+      // project the token array BEFORE gramming — the gramsOf
+      // higher-order-lambda inlining trap (TextStats.scala) costs
+      // ~10× here at n=8 (measured 15.6 → 1.7 s at sf0.1)
+      def grams(side: DataFrame) = side
+        .select(filter(split(col("text"), " "),
+          t => length(t) > 0).as("_ts"))
+        .select(explode(TextStats.gramsOf(col("_ts"), 8)).as("g"))
+      Sketch.kmvOverlap(
+        Sketch.kmvSketch(grams(docs.filter(col("doc_id") % 5 =!= 0)),
+          col("g"), 512),
+        Sketch.kmvSketch(grams(docs.filter(col("doc_id") % 5 === 0)),
+          col("g"), 512),
+        512)
+    },
+      // full KMV construction replay: same md5 60-bit hashes ('0x'||hex
+      // cast ≡ conv(hex,16,10), the q69 move), same bottom-k cuts,
+      // same integer estimator arithmetic
+      sql(("""WITH d AS (SELECT doc_id, list_filter(string_split(text, ' '),
         |     x -> x <> '') AS ts FROM documents),
         | raw AS (SELECT doc_id, unnest(list_transform(
         |     range(1, len(ts) - 6), i -> """.stripMargin +
@@ -3435,19 +3088,34 @@ object SparkEntry {
         |     ELSE CAST(0 AS BIGINT) END AS jaccard_micro,
         |   ea.distinct_est_a, eb.distinct_est_b
         | FROM ku, c, ea, eb""".stripMargin)
-        .replace("\n", " "),
-    // the heavy-hitter oracle IS the plain exact query — the
-    // pigeonhole candidate pass is certified never to lose a row
-    "q115_heavy_hitters" ->
-      """WITH d AS (SELECT unnest(list_filter(string_split(text, ' '),
+        .replace("\n", " "))),
+    // LLM §corpus-stats — EXACT heavy hitters via the two-phase
+    // pigeonhole scan (no full-vocabulary shuffle: per-partition
+    // local counts gate candidates at ceil(T/P) — a provable
+    // superset — then only candidate occurrences shuffle for the
+    // exact recount). The oracle is the plain exact query the
+    // output provably equals.
+    Entry("q115_heavy_hitters", (s, dir) =>
+      graft.llm.TextStats.exactHeavyHitters(t(s, dir, "documents"),
+        "text", threshold = 500),
+      // the heavy-hitter oracle IS the plain exact query — the
+      // pigeonhole candidate pass is certified never to lose a row
+      sql("""WITH d AS (SELECT unnest(list_filter(string_split(text, ' '),
         |     x -> x <> '')) AS t FROM documents)
         | SELECT t AS token, CAST(count(*) AS BIGINT) AS freq
         | FROM d GROUP BY 1 HAVING count(*) >= 500
         | ORDER BY freq DESC, token"""
-        .stripMargin.replace("\n", " "),
-    // the q109 replay partitioned by lang
-    "q116_group_hist" ->
-      """WITH s AS (SELECT lang, CAST(len(string_split(text, ' '))
+        .stripMargin.replace("\n", " "))),
+    // LLM §corpus-stats — per-GROUP histogram percentile sketch (q109
+    // keyed by language; the bounded-state sibling of q104's exact
+    // keyed ranks): |groups|·≤65 counters, KEYED cumulative window.
+    Entry("q116_group_hist", (s, dir) =>
+      graft.llm.Sketch.logHistogramPercentilesByGroup(
+        t(s, dir, "documents"), "lang",
+        size(split(col("text"), " ")).cast("long"),
+        Seq(25, 50, 75, 95)),
+      // the q109 replay partitioned by lang
+      sql("""WITH s AS (SELECT lang, CAST(len(string_split(text, ' '))
         |     AS BIGINT) AS v FROM documents),
         | b AS (SELECT lang, CASE WHEN v = 0 THEN CAST(0 AS BIGINT)
         |     ELSE CAST(length(bin(v)) AS BIGINT) END AS bucket,
@@ -3474,12 +3142,44 @@ object SparkEntry {
         |   c2.cum AS n_le
         | FROM ch JOIN c c2
         |   ON ch.lang = c2.lang AND ch.bucket = c2.bucket"""
-        .stripMargin.replace("\n", " "),
-    // curation v2 replay: the q66 quality block + cluster CTEs +
-    // the q113/q110 gram screens composed; gram-less docs carry no
-    // prof row, mirroring the semi-join fate on the engine side
-    "q117_curation_v2" ->
-      (s"""$clusterOracleCtes,
+        .stripMargin.replace("\n", " "))),
+    // LLM §pipeline — curation v2: the q66 composition extended with
+    // per-doc screens, still ONE declarative plan over the TRAIN
+    // split — quality gate ∧ not-a-near-dup-loser ∧ contamination
+    // share < 0.5 vs the bench split (q113) ∧ novelty ≥ 0.25 within
+    // train (q110). Every stage bites at sf0.01 (400 train → 176
+    // quality → −14 contaminated / −22 low-novelty before the loser
+    // anti-join). Both gram screens are served from ONE shared
+    // gram census (gramScreensFromCensus — its repartition(gram)
+    // exchange is materialized once by ReuseExchange, the bm25Frames
+    // trick), and their two semi-joins fused into one conjunctive
+    // filter, so the train text is tokenized ONCE for grams (+ once
+    // inside the MinHash cluster pass) instead of ~5×; at 100 TB the
+    // census is the artifact a run writes once and every screen
+    // reads.
+    Entry("q117_curation_v2", (s, dir) => {
+      import graft.llm.TextStats
+      val docs = t(s, dir, "documents")
+      val train = docs.filter(col("doc_id") % 5 =!= 0)
+      val bench = docs.filter(col("doc_id") % 5 === 0)
+      val losers = clusterArtifact(s, dir)
+        .filter(col("id_a") =!= col("cluster_id"))
+        .select(col("id_a").as("doc_id"))
+      val keep = TextStats.gramScreensFromCensus(
+          train, TextStats.gramCensus(train, "doc_id", "text", n = 8),
+          TextStats.gramCensus(bench, "doc_id", "text", n = 8), "doc_id")
+        .filter(col("overlap_micro") < 500000 &&
+          col("novelty_micro") >= 250000)
+        .select("doc_id")
+      train.filter(TextStats.qualityKeep(col("text")))
+        .join(losers, Seq("doc_id"), "left_anti")
+        .join(keep, Seq("doc_id"), "left_semi")
+        .select(col("doc_id"), col("lang"))
+    },
+      // curation v2 replay: the q66 quality block + cluster CTEs +
+      // the q113/q110 gram screens composed; gram-less docs carry no
+      // prof row, mirroring the semi-join fate on the engine side
+      sql((s"""$clusterOracleCtes,
         | d8 AS (SELECT doc_id, list_filter(string_split(text, ' '),
         |     x -> x <> '') AS ts FROM documents),
         | raw AS (SELECT doc_id, unnest(list_transform(
@@ -3522,73 +3222,37 @@ object SparkEntry {
         |   AND d.doc_id NOT IN (SELECT id FROM cl WHERE id <> cluster_id)
         |   AND prof.overlap < 500000
         |   AND prof.novelty >= 250000""".stripMargin)
-        .replace("\n", " "),
-    // full replay of the one-copy span dedup: the oracle may use
-    // per-gram windows (rn = 1 ⇔ the engine's min(struct) canonical —
-    // same (doc_id, i) total order), per-doc interval merge, then
-    // string_agg of the kept segments + the tail
-    // the span-census artifact replay: q102's occ/od CTEs, cut at
-    // the canonical row
-    "q129_span_census" ->
-      """WITH d AS (SELECT doc_id, text, len(text) AS lt
-        |   FROM documents WHERE doc_id IS NOT NULL),
-        | idx AS (SELECT unnest(range(1, 2000)) AS i),
-        | occ AS (SELECT doc_id, CAST(i AS BIGINT) AS i,
-        |     substr(text, CAST(i AS INT), 16) AS g
-        |   FROM d JOIN idx ON i <= lt - 15),
-        | od AS (SELECT g, doc_id, i,
-        |     row_number() OVER (PARTITION BY g ORDER BY doc_id, i) AS rn,
-        |     count(*) OVER (PARTITION BY g) AS cnt
-        |   FROM occ)
-        | SELECT g AS gram, CAST(cnt AS BIGINT) AS n_occ,
-        |   doc_id AS keep_id, i AS keep_pos
-        | FROM od WHERE cnt >= 2 AND rn = 1""".stripMargin
-        .replace("\n", " "),
-    "q102_span_dedup" ->
-      """WITH d AS (SELECT doc_id, text, len(text) AS lt
-        |   FROM documents WHERE doc_id IS NOT NULL),
-        | idx AS (SELECT unnest(range(1, 2000)) AS i),
-        | occ AS (SELECT doc_id, CAST(i AS BIGINT) AS i,
-        |     substr(text, CAST(i AS INT), 16) AS g
-        |   FROM d JOIN idx ON i <= lt - 15),
-        | od AS (SELECT doc_id, i,
-        |     row_number() OVER (PARTITION BY g ORDER BY doc_id, i) AS rn,
-        |     count(*) OVER (PARTITION BY g) AS cnt
-        |   FROM occ),
-        | rem AS (SELECT doc_id, i FROM od WHERE cnt >= 2 AND rn >= 2),
-        | m AS (SELECT doc_id, i,
-        |     CASE WHEN i > COALESCE(max(i + 15) OVER (PARTITION BY doc_id
-        |       ORDER BY i ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-        |       0) + 1 THEN 1 ELSE 0 END AS brk FROM rem),
-        | grp AS (SELECT doc_id, i,
-        |     CAST(sum(brk) OVER (PARTITION BY doc_id ORDER BY i)
-        |       AS BIGINT) AS gid FROM m),
-        | ivs AS (SELECT doc_id, min(i) AS s, max(i) + 15 AS e
-        |   FROM grp GROUP BY doc_id, gid),
-        | segs AS (SELECT doc_id, s, e,
-        |     COALESCE(lag(e) OVER (PARTITION BY doc_id ORDER BY s), 0) + 1
-        |       AS ks FROM ivs),
-        | head AS (SELECT doc_id,
-        |     string_agg(substr(text, CAST(ks AS INT), CAST(s - ks AS INT)),
-        |       '' ORDER BY s) AS h,
-        |     CAST(max(e) AS BIGINT) AS me,
-        |     CAST(sum(e - s + 1) AS BIGINT) AS nrm
-        |   FROM segs JOIN d USING (doc_id) GROUP BY doc_id)
-        | SELECT d.doc_id,
-        |   CASE WHEN h.doc_id IS NULL THEN d.text
-        |     ELSE h.h || substr(d.text, CAST(h.me + 1 AS INT)) END
-        |     AS text_clean,
-        |   COALESCE(h.nrm, 0) AS n_chars_removed
-        | FROM d LEFT JOIN head h USING (doc_id)"""
-        .stripMargin.replace("\n", " "),
-    // the q85 replay on the REMAINING corpus + one '<overflow>'
-    // marker row per past-maxDf token (doc_id −1) — matching the
-    // maintained frame proves the positional forget path
-    // the insert gates replay as FULL-corpus from-scratch builds: the
-    // maintained index must be indistinguishable from never having
-    // split the corpus at all
-    "q118_index_insert" ->
-      """WITH dt AS (SELECT DISTINCT doc_id, t AS token FROM (
+        .replace("\n", " "))),
+    // LLM §forget-propagation, INSERT direction: maintain the
+    // stored inverted index under an INGEST batch — build on ~6/7 of
+    // the corpus, insert the rest, compare against a from-scratch
+    // build on everything. Exercises the full crossing story: df only
+    // grows, so in-window tokens crossing maxDf drop to markers (pure
+    // projection), and batch tokens absent from the index (old df <
+    // minDf) enter via the one targeted corpus pass.
+    Entry("q118_index_insert", (s, dir) => {
+      import graft.llm.IndexMaintain
+      val docs = t(s, dir, "documents")
+      // stored-index seam materialized before maintenance — see q99
+      val idx = IndexMaintain.indexWithOverflow(
+        docs.filter(col("doc_id") % 7 =!= 0), "doc_id", "text",
+        minDf = 5, maxDf = 400).localCheckpoint(true)
+      IndexMaintain.insertIntoIndex(idx,
+          docs.filter(col("doc_id") % 7 === 0), docs,
+          "doc_id", "text", minDf = 5, maxDf = 400)
+        .select(col("token"), col("df"),
+          when(col("postings").isNull, lit("<overflow>"))
+            .otherwise(concat_ws(",",
+              transform(col("postings"), _.cast("string"))))
+            .as("postings"))
+    },
+      // the q85 replay on the REMAINING corpus + one '<overflow>'
+      // marker row per past-maxDf token (doc_id −1) — matching the
+      // maintained frame proves the positional forget path
+      // the insert gates replay as FULL-corpus from-scratch builds: the
+      // maintained index must be indistinguishable from never having
+      // split the corpus at all
+      sql("""WITH dt AS (SELECT DISTINCT doc_id, t AS token FROM (
         |    SELECT doc_id, unnest(list_filter(
         |      string_split(text, ' '), x -> x <> '')) AS t
         |    FROM documents)),
@@ -3599,9 +3263,26 @@ object SparkEntry {
         |     ELSE array_to_string(list(dt.doc_id ORDER BY dt.doc_id), ',')
         |   END AS postings
         | FROM dt JOIN dfs USING (token)
-        | GROUP BY 1, 2""".stripMargin.replace("\n", " "),
-    "q119_positional_insert" ->
-      """WITH d AS (SELECT doc_id, list_filter(
+        | GROUP BY 1, 2""".stripMargin.replace("\n", " "))),
+    // the q118 move on the positional shape: batch docs' position
+    // rows come from the batch alone, markers only ever increment
+    Entry("q119_positional_insert", (s, dir) => {
+      import graft.llm.IndexMaintain
+      val docs = t(s, dir, "documents")
+      // stored-index seam materialized before maintenance — see q99
+      val idx = IndexMaintain.positionalIndexWithOverflow(
+        docs.filter(col("doc_id") % 7 =!= 0), "doc_id", "text",
+        minDf = 5, maxDf = 400).localCheckpoint(true)
+      IndexMaintain.insertIntoPositionalIndex(idx,
+          docs.filter(col("doc_id") % 7 === 0), docs,
+          "doc_id", "text", minDf = 5, maxDf = 400)
+        .select(col("token"), col("df"),
+          coalesce(col("doc_id"), lit(-1L)).as("doc_id"),
+          when(col("positions").isNull, lit("<overflow>"))
+            .otherwise(concat_ws(",",
+              transform(col("positions"), _.cast("string"))))
+            .as("positions"))
+    }, sql("""WITH d AS (SELECT doc_id, list_filter(
         |     string_split(text, ' '), x -> x <> '') AS ts
         |   FROM documents),
         | pt AS (SELECT doc_id, unnest(ts) AS token,
@@ -3617,95 +3298,162 @@ object SparkEntry {
         | UNION ALL
         | SELECT token, df, CAST(-1 AS BIGINT) AS doc_id,
         |   '<overflow>' AS positions
-        | FROM dfs WHERE df > 400""".stripMargin.replace("\n", " "),
-    "q101_positional_forget" ->
-      """WITH d AS (SELECT doc_id, list_filter(
-        |     string_split(text, ' '), x -> x <> '') AS ts
-        |   FROM documents WHERE doc_id % 7 <> 0),
-        | pt AS (SELECT doc_id, unnest(ts) AS token,
-        |     unnest(range(1, len(ts) + 1)) AS pos FROM d),
-        | dfs AS (SELECT token, count(DISTINCT doc_id) AS df
-        |   FROM pt GROUP BY 1
-        |   HAVING count(DISTINCT doc_id) >= 5)
-        | SELECT pt.token, dfs.df, pt.doc_id,
-        |   array_to_string(list(pt.pos ORDER BY pt.pos), ',')
-        |     AS positions
-        | FROM pt JOIN dfs USING (token) WHERE dfs.df <= 400
-        | GROUP BY 1, 2, 3
-        | UNION ALL
-        | SELECT token, df, CAST(-1 AS BIGINT) AS doc_id,
-        |   '<overflow>' AS positions
-        | FROM dfs WHERE df > 400""".stripMargin.replace("\n", " "),
-    // q72's replay + zipped unnest positions (1-based, the same
-    // empty-filtered token stream), positions list stringified
-    "q85_positional_index" ->
-      """WITH d AS (SELECT doc_id, list_filter(
-        |     string_split(text, ' '), x -> x <> '') AS ts
-        |   FROM documents),
-        | pt AS (SELECT doc_id, unnest(ts) AS token,
-        |     unnest(range(1, len(ts) + 1)) AS pos FROM d),
-        | dfs AS (SELECT token, count(DISTINCT doc_id) AS df
-        |   FROM pt GROUP BY 1
-        |   HAVING count(DISTINCT doc_id) >= 5
-        |      AND count(DISTINCT doc_id) <= 400)
-        | SELECT pt.token, dfs.df, pt.doc_id,
-        |   array_to_string(list(pt.pos ORDER BY pt.pos), ',')
-        |     AS positions
-        | FROM pt JOIN dfs USING (token)
-        | GROUP BY 1, 2, 3""".stripMargin.replace("\n", " "),
-    // the q77 top-bigram pick, answered POSITIONALLY: per-offset
-    // posting frames joined on (doc, adjacency) — the honest replay
-    // of intersection + adjacency, not a gram-table rebuild
-    "q86_phrase_indexed" ->
-      """WITH d AS (SELECT doc_id, list_filter(
-        |     string_split(text, ' '), x -> x <> '') AS ts
-        |   FROM documents),
-        | pt AS (SELECT doc_id, unnest(ts) AS token,
-        |     unnest(range(1, len(ts) + 1)) AS pos FROM d),
-        | g AS (SELECT doc_id, unnest(list_transform(range(1, len(ts)),
-        |     i -> ts[i] || ' ' || ts[i+1])) AS ngram
-        |   FROM d WHERE len(ts) >= 2),
-        | top AS (SELECT ngram, count(*) AS c FROM g GROUP BY 1
-        |   ORDER BY c DESC, ngram LIMIT 1),
-        | w AS (SELECT string_split(ngram, ' ')[1] AS w0,
-        |     string_split(ngram, ' ')[2] AS w1 FROM top),
-        | p0 AS (SELECT pt.doc_id, pt.pos FROM pt, w
-        |   WHERE pt.token = w.w0),
-        | p1 AS (SELECT pt.doc_id, pt.pos FROM pt, w
-        |   WHERE pt.token = w.w1)
-        | SELECT p0.doc_id, CAST(count(*) AS BIGINT) AS n_occurrences
-        | FROM p0 JOIN p1 ON p0.doc_id = p1.doc_id
-        |   AND p1.pos = p0.pos + 1
-        | GROUP BY 1""".stripMargin.replace("\n", " "),
-    // the q85 positions + the same deterministic top-2 df pick; the
-    // anchor-window count as a correlated EXISTS per anchor position
-    "q87_proximity_search" ->
-      """WITH d AS (SELECT doc_id, list_filter(
-        |     string_split(text, ' '), x -> x <> '') AS ts
-        |   FROM documents),
-        | pt AS (SELECT doc_id, unnest(ts) AS token,
-        |     unnest(range(1, len(ts) + 1)) AS pos FROM d),
-        | dfs AS (SELECT token, count(DISTINCT doc_id) AS df
-        |   FROM pt GROUP BY 1
-        |   HAVING count(DISTINCT doc_id) >= 5
-        |      AND count(DISTINCT doc_id) <= 400),
-        | w AS (SELECT list(token ORDER BY df DESC, token) AS t2
-        |   FROM (SELECT token, df FROM dfs
-        |     ORDER BY df DESC, token LIMIT 2)),
-        | p0 AS (SELECT pt.doc_id, pt.pos FROM pt, w
-        |   WHERE pt.token = w.t2[1]),
-        | p1 AS (SELECT pt.doc_id, pt.pos FROM pt, w
-        |   WHERE pt.token = w.t2[2])
-        | SELECT p0.doc_id, CAST(count(*) AS BIGINT) AS n_anchors
-        | FROM p0
-        | WHERE EXISTS (SELECT 1 FROM p1
-        |   WHERE p1.doc_id = p0.doc_id
-        |     AND abs(p1.pos - p0.pos) <= 3)
-        | GROUP BY 1""".stripMargin.replace("\n", " "),
-    // bitmap-free replay: the SET of positions any bench key sets,
-    // probed per train key with the same md5 arithmetic
-    "q71_bloom_prune" ->
-      """WITH d AS (SELECT doc_id,
+        | FROM dfs WHERE df > 400""".stripMargin.replace("\n", " "))),
+    // LLM §multimodal: the perceptual image near-dedup family,
+    // hash-GATED — deterministic synthetic PNGs derive from doc ids
+    // (real bytes through the real javax.imageio decode; only the
+    // camera is synthetic), dHash64 fingerprints feed the SAME banded
+    // Hamming engine as SimHash (q48). The decode stays engine-side
+    // but runs ONCE into the stored fingerprint artifact (priced by
+    // the bench's `media_decode` facet); this entry prices
+    // the banded pair pass over the stored frame, the per-query cost
+    // of a pipeline that fingerprints on ingest. The DuckDB oracle
+    // replays banding + bit_count verification over the same stored
+    // fingerprints (the q54 parity move).
+    Entry("q120_image_near_dedup", (s, dir) =>
+      graft.llm.Dedup.fingerprintNearPairs(
+        mediaFpArtifact(s, dir, "image"),
+        "id", "dhash", maxDistance = 3),
+      // banding + Hamming replay over the SAME collected fingerprints
+      // the entries banded (decode stays engine-side — q54 parity)
+      (s, dir) => fingerprintPairsOracleSql(
+        mediaFingerprints(s, dir, "image"), maxDistance = 3)),
+    // the audio sibling: RMS-envelope dHash over deterministic PCM16
+    // WAVs through the real javax.sound decode, same banded engine
+    // over the same stored-fingerprint discipline
+    Entry("q121_audio_near_dedup", (s, dir) =>
+      graft.llm.Dedup.fingerprintNearPairs(
+        mediaFpArtifact(s, dir, "audio"),
+        "id", "dhash", maxDistance = 3),
+      (s, dir) => fingerprintPairsOracleSql(
+      mediaFingerprints(s, dir, "audio"), maxDistance = 3)),
+    // LLM §similarity — product-quantization ENCODE (Jégou 2011, the
+    // engine's angular geometry): 64-dim embeddings → 4 codes, each
+    // the per-subspace cosine argmax against 8 learned centroids —
+    // the m-bytes-per-vector compressed index a 100 TB ANN corpus
+    // actually stores. Codegen'd projection, no shuffle; codebooks are
+    // deterministic per-slice k-means fits shared with the oracle.
+    Entry("q79_pq_encode", (s, dir) =>
+      graft.llm.Pq.encode(t(s, dir, "embeddings"), "vec_id",
+          "embedding", pqCodebooks(s, dir))
+        .select(col("vec_id"),
+          posexplode(col("codes")).as(Seq("sub", "code"))),
+      // q57's centroid-literal move per subspace: codes, then the
+      // reconstruction-ranked search, from the SAME learned codebooks
+      (s, dir) => {
+        val cb = pqCodebooks(s, dir)
+        graft.llm.Pq.encodeOracleSql(cb, dsub = cb.head.head.length)
+      }),
+    // LLM §similarity — asymmetric PQ top-k: exact queries scored
+    // against RECONSTRUCTED database vectors (code ↦ centroid,
+    // concatenated map-side from the codebook literal — the original
+    // vectors are never re-read), ranked by the shared two-phase
+    // top-k with the (sim desc, id) tie-break reconstruction demands.
+    Entry("q80_pq_search", (s, dir) => {
+      val emb = t(s, dir, "embeddings")
+      graft.llm.Pq.reconstructTopK(emb, emb.filter(col("vec_id") < 3),
+        "vec_id", "embedding", pqCodebooksCached(s, dir), k = 10)
+    }, (s, dir) => {
+      val cb = pqCodebooks(s, dir)
+      graft.llm.Pq.searchOracleSql(cb, dsub = cb.head.head.length,
+        k = 10, queryPred = "q.vec_id < 3")
+    }),
+    // LLM §similarity — IVF-PQ ENCODE (IVFADC, Jégou 2011 §IV): the
+    // composed index a production vector store persists at 100 TB —
+    // 4 bytes of cell + m codes per vector, quantizing the RESIDUAL
+    // v − coarse(v) so codebook resolution is spent inside the cell.
+    // One codegen'd projection (assignment argmax + zip_with
+    // subtraction + per-subspace argmax), no shuffle.
+    Entry("q81_ivfpq_encode", (s, dir) =>
+      graft.llm.IvfPq.encode(t(s, dir, "embeddings"), "vec_id",
+          "embedding", ivfPqModel(s, dir))
+        .select(col("vec_id"), col("cell"),
+          posexplode(col("codes")).as(Seq("sub", "code"))),
+      // both IVF-PQ levels replay from the learned model literals:
+      // coarse assignment, float-rounded residuals, per-subspace
+      // codes, reconstruction, probe ranking
+      (s, dir) => 
+        graft.llm.IvfPq.encodeOracleSql(ivfPqModel(s, dir))),
+    // LLM §similarity — IVF-PQ ADC search: queries probe their
+    // nprobe=2 (of 4) nearest cells, candidates meet the broadcast
+    // probe list in ONE equi-join on cell (the scan shrinks to
+    // ~nprobe/nlist of the corpus), reconstruction
+    // coarse(cell) + decode(codes) is map-side from the model
+    // literals, ranking the shared two-phase top-k.
+    Entry("q82_ivfpq_search", (s, dir) => {
+      val emb = t(s, dir, "embeddings")
+      graft.llm.IvfPq.search(emb, emb.filter(col("vec_id") < 3),
+        "vec_id", "embedding", ivfPqModelCached(s, dir), nprobe = 2, k = 10)
+    }, (s, dir) => 
+      graft.llm.IvfPq.searchOracleSql(ivfPqModel(s, dir),
+        k = 10, nprobe = 2, queryPred = "a.vec_id < 3")),
+    // LLM §similarity — recall-driven PQ refine (the r12 verdict's
+    // "close the loop": shortlist doubles until measured recall@k on
+    // the probe sample reaches the target, capped at the corpus size
+    // where refine ≡ brute). At target 1.0 with the full query set as
+    // sample the output provably equals the exact ranking (the q56
+    // argument), hash-gating the adaptive path against the exact
+    // oracle.
+    Entry("q83_pq_refined_tuned", (s, dir) => {
+      val emb = t(s, dir, "embeddings")
+      // Warm start: seed the knob walk at the corpus-size growth
+      // rule the `ann` soak tier and the bench measured for THIS
+      // near-uniform corpus (paid shortlist ≈ n/5 at target 1.0) instead of
+      // re-walking from cold every run. Exactness is untouched — the
+      // tuner still measures recall on the full query sample and the
+      // cap logic is unchanged; the seed only skips the provably-
+      // insufficient early doublings.
+      val n = emb.count()
+      graft.llm.Pq.refinedTopKAutoTuned(emb,
+        emb.filter(col("vec_id") < 5), "vec_id", "embedding",
+        pqCodebooksCached(s, dir), k = 10, targetRecall = 1.0,
+        initialShortlist = math.max(40L, n / 5).toInt)._1
+    },
+      // tuned refines at target 1.0 + full query sample ≡ exact (q56)
+      sql(annOracleSql)),
+    // LLM §similarity — recall-driven IVF-PQ refine: nprobe and
+    // shortlist walk in lockstep (caps nlist / corpus size, where the
+    // composed index provably equals brute force) until the probe
+    // sample hits the target; same q56 hash-gate argument.
+    Entry("q84_ivfpq_refined_tuned", (s, dir) => {
+      val emb = t(s, dir, "embeddings")
+      // warm start (the q83 rule, both knobs): near-uniform
+      // vectors scatter true neighbors across cells, so target 1.0
+      // historically pays nprobe = nlist and shortlist ≈ n/5 — seed
+      // there; the tuner still verifies recall on the full sample.
+      val model = ivfPqModelCached(s, dir)
+      val n = emb.count()
+      graft.llm.IvfPq.refinedSearchAutoTuned(emb,
+        emb.filter(col("vec_id") < 5), "vec_id", "embedding",
+        model, k = 10, targetRecall = 1.0,
+        initialNprobe = model.nlist,
+        initialShortlist = math.max(40L, n / 5).toInt)._1
+    }, sql(annOracleSql)),
+    // LLM §sketching — Bloom-filter join prune: the bench side's
+    // head-gram keys build a 4096-bit bitmap (bit_or aggregation →
+    // broadcastable literal), and the train side probes it MAP-SIDE
+    // before any shuffle — never a false negative (oracle-checked:
+    // every is_actual=1 row has might_contain=1), false positives at
+    // the standard rate. The prune a 100 TB contamination join runs
+    // first.
+    Entry("q71_bloom_prune", (s, dir) => {
+      import graft.llm.Sketch
+      val docs = t(s, dir, "documents").withColumn("_key",
+        concat_ws(" ", slice(split(col("text"), " "), 1, 3)))
+      val bench = docs.filter(col("doc_id") % 5 === 0)
+      val bm = Sketch.bloomBuild(bench, "_key", k = 3, mBits = 4096)
+      val probed = Sketch.bloomProbe(
+        docs.filter(col("doc_id") % 5 =!= 0), "_key", bm, k = 3)
+      probed
+        .join(bench.select(col("_key")).distinct()
+          .withColumn("_hit", lit(1)), Seq("_key"), "left")
+        .select(col("doc_id"),
+          col("might_contain").cast("int").as("might_contain"),
+          coalesce(col("_hit"), lit(0)).as("is_actual"))
+    },
+      // bitmap-free replay: the SET of positions any bench key sets,
+      // probed per train key with the same md5 arithmetic
+      sql("""WITH d AS (SELECT doc_id,
         |    array_to_string((string_split(text, ' '))[1:3], ' ') AS key
         |  FROM documents),
         | bs AS (SELECT DISTINCT
@@ -3724,17 +3472,34 @@ object SparkEntry {
         |     IN (SELECT pos FROM bs) AS INT) AS might_contain,
         |  CAST(d.key IN (SELECT key FROM bk) AS INT) AS is_actual
         | FROM d WHERE d.doc_id % 5 <> 0"""
-        .stripMargin.replace("\n", " "),
-    // full HLL replay: same md5 slices, same bin()-length ranks, same
-    // exact scaled sum. The numerator literal 97491078487.97049 is the
-    // exact shortest-round-trip repr of the Scala-folded double
-    // alpha*m*m*2^25 (Sketch.scala:137,156) typed DOUBLE — both
-    // engines then run the identical IEEE divide/multiply/round, so
-    // the BIGINT micro estimate matches bit-for-bit (the q57
-    // centroid-literal trick). Every sum is CAST BIGINT (DuckDB sum
-    // widens to HUGEINT — the q51 hardening).
-    "q70_hll" ->
-      """WITH tf AS (SELECT DISTINCT t AS w FROM (
+        .stripMargin.replace("\n", " "))),
+    // LLM §sketching — HyperLogLog distinct-token estimate: integer
+    // registers (bin()-length leading zeros — no float log), exact
+    // scaled harmonic sum. The gate row carries the estimate in
+    // integer MICRO units (round(est·1e6) as BIGINT) — both engines
+    // divide the same double numerator by the same integer, so the
+    // micro value is bit-identical and no raw float is hashed. True
+    // distinct count rides along.
+    Entry("q70_hll", (s, dir) => {
+      import graft.llm.{Bpe, Sketch}
+      val docs = t(s, dir, "documents")
+      val truth = Bpe.wordFrequencies(docs, "text")
+        .agg(count(lit(1)).as("n_distinct_true"))
+      Sketch.hllDistinct(docs, "text", b = 6)
+        .withColumn("hll_est_micro",
+          round(col("hll_estimate") * lit(1e6)).cast("long"))
+        .drop("hll_estimate")
+        .crossJoin(truth)
+    },
+      // full HLL replay: same md5 slices, same bin()-length ranks, same
+      // exact scaled sum. The numerator literal 97491078487.97049 is the
+      // exact shortest-round-trip repr of the Scala-folded double
+      // alpha*m*m*2^25 (Sketch.scala:137,156) typed DOUBLE — both
+      // engines then run the identical IEEE divide/multiply/round, so
+      // the BIGINT micro estimate matches bit-for-bit (the q57
+      // centroid-literal trick). Every sum is CAST BIGINT (DuckDB sum
+      // widens to HUGEINT — the q51 hardening).
+      sql("""WITH tf AS (SELECT DISTINCT t AS w FROM (
         |    SELECT unnest(string_split_regex(text, '\s+')) AS t
         |    FROM documents) WHERE t <> ''),
         | h AS (SELECT ('0x' || substr(md5(w), 1, 8))::BIGINT AS hv
@@ -3755,11 +3520,30 @@ object SparkEntry {
         |     CAST(sum_set + (64 - n_registers_set) * 33554432
         |       AS DOUBLE) * 1e6) AS BIGINT) AS hll_est_micro,
         |   (SELECT count(*) FROM tf) AS n_distinct_true
-        | FROM agg""".stripMargin.replace("\n", " "),
-    // q70's register replay keyed by source — same constant, same
-    // micro rounding of the identical integer division
-    "q107_hll_by_group" ->
-      """WITH tf AS (SELECT DISTINCT source, t AS w FROM (
+        | FROM agg""".stripMargin.replace("\n", " "))),
+    // LLM §sketching — PER-GROUP HLL (q70 grouped): distinct-token
+    // estimate per source next to the true count — |groups|·m
+    // register rows of state, the grouped reporting shape; identical
+    // integer register arithmetic, estimate in micro units.
+    Entry("q107_hll_by_group", (s, dir) => {
+      import graft.llm.Sketch
+      val docs = t(s, dir, "documents")
+      val truth = docs
+        .select(col("source"),
+          explode(split(col("text"), "\\s+")).as("w"))
+        .filter(length(col("w")) > 0)
+        .distinct()
+        .groupBy(col("source"))
+        .agg(count(lit(1)).as("n_distinct_true"))
+      Sketch.hllDistinctByGroup(docs, "source", "text", b = 6)
+        .withColumn("hll_est_micro",
+          round(col("hll_estimate") * lit(1e6)).cast("long"))
+        .drop("hll_estimate")
+        .join(truth, "source")
+    },
+      // q70's register replay keyed by source — same constant, same
+      // micro rounding of the identical integer division
+      sql("""WITH tf AS (SELECT DISTINCT source, t AS w FROM (
         |    SELECT source, unnest(string_split_regex(text, '\s+')) AS t
         |    FROM documents) WHERE t <> ''),
         | h AS (SELECT source,
@@ -3784,11 +3568,29 @@ object SparkEntry {
         |       AS DOUBLE) * 1e6) AS BIGINT) AS hll_est_micro,
         |   n_distinct_true
         | FROM agg JOIN t2 USING (source)"""
-        .stripMargin.replace("\n", " "),
-    // full CMS replay: same md5 buckets ('0x'||hex cast ≡ conv(,16,10)),
-    // same exact-integer counters, same min-over-rows estimate
-    "q69_cms" ->
-      """WITH tf AS (SELECT t AS w, count(*) AS freq FROM (
+        .stripMargin.replace("\n", " "))),
+    // LLM §sketching — Count-Min frequency sketch (the sub-linear
+    // vocabulary summary): depth×width exact-integer counters over
+    // md5-derived buckets, point estimate = min over rows; the true
+    // top-20 tokens get (true freq, CMS estimate) side by side —
+    // estimates can never undercount, and the whole construction
+    // hash-replays in SQL from the same md5 arithmetic.
+    Entry("q69_cms", (s, dir) => {
+      import graft.llm.{Bpe, Sketch}
+      val docs = t(s, dir, "documents")
+      val counters = Sketch.countMinCounters(docs, "text",
+        depth = 4, width = 1024)
+      val top = Bpe.wordFrequencies(docs, "text")
+        .orderBy(col("freq").desc, col("w")).limit(20)
+      Sketch.cmsEstimates(counters, top.select("w"), depth = 4,
+          width = 1024)
+        .join(top, "w")
+        .select(col("w").as("token"), col("freq"),
+          col("cms_estimate"))
+    },
+      // full CMS replay: same md5 buckets ('0x'||hex cast ≡ conv(,16,10)),
+      // same exact-integer counters, same min-over-rows estimate
+      sql("""WITH tf AS (SELECT t AS w, count(*) AS freq FROM (
         |    SELECT unnest(string_split_regex(text, '\s+')) AS t
         |    FROM documents) WHERE t <> '' GROUP BY 1),
         | r AS (SELECT unnest([0, 1, 2, 3]) AS row),
@@ -3807,27 +3609,30 @@ object SparkEntry {
         |   CAST(min(COALESCE(c.cnt, 0)) AS BIGINT) AS cms_estimate
         | FROM probe LEFT JOIN c
         |   ON c.row = probe.row AND c.bucket = probe.bucket
-        | GROUP BY 1, 2""".stripMargin.replace("\n", " "),
-    // subtracted ≡ rebuilt: q69's counter construction replayed on
-    // the REMAINING corpus only — register-identical to the engine's
-    // full-minus-forgotten subtraction by CMS linearity
-    "q100_cms_forget" ->
-      """WITH tf AS (SELECT t AS w, count(*) AS freq FROM (
-        |    SELECT unnest(string_split_regex(text, '\s+')) AS t
-        |    FROM documents WHERE doc_id % 7 <> 0)
-        |   WHERE t <> '' GROUP BY 1),
-        | r AS (SELECT unnest([0, 1, 2, 3]) AS row),
-        | c AS (SELECT row,
-        |    ('0x' || substr(md5(row::VARCHAR || '#' || w), 1, 8))::BIGINT
-        |      % 1024 AS bucket,
-        |    CAST(sum(freq) AS BIGINT) AS cnt
-        |   FROM tf, r GROUP BY 1, 2)
-        | SELECT row, bucket, cnt FROM c WHERE cnt > 0"""
-        .stripMargin.replace("\n", " "),
-    // the q39 session CTEs + a plain BETWEEN join (the oracle may
-    // nested-loop; the engine side is the bucketed equi-join)
-    "q68_range_join" ->
-      """WITH o AS (
+        | GROUP BY 1, 2""".stripMargin.replace("\n", " "))),
+    // §events — RANGE JOIN (the interval lookup Spark compiles to a
+    // nested loop): every 100th event joined to ALL concurrent q39
+    // sessions (cross-user, no equi-key) via the bucketed shape — 1-h
+    // buckets, intervals exploded to covered buckets, one hash
+    // equi-join, exact re-check; a pair meets only in the point's
+    // bucket so no dedup.
+    Entry("q68_range_join", (s, dir) => {
+      import graft.operators.RangeJoin
+      val sessions = apply("q39_sessionize").run(s, dir)
+        .select(col("user_id"), col("session_id"),
+          col("start_ns"), col("end_ns"))
+      val points = t(s, dir, "events")
+        .filter(col("event_id") % 100 === 0)
+        .select(col("event_id").as("point_id"),
+          (col("ts") - col("ts") % 1000L).as("pt"))
+      RangeJoin.pointInInterval(points, "pt", sessions,
+        "start_ns", "end_ns", bucketWidth = 3600L * 1000000000L)
+        .select(col("point_id"), col("pt"), col("user_id"),
+          col("session_id"), col("start_ns"), col("end_ns"))
+    },
+      // the q39 session CTEs + a plain BETWEEN join (the oracle may
+      // nested-loop; the engine side is the bucketed equi-join)
+      sql("""WITH o AS (
         |  SELECT user_id, event_id, epoch_ns(ts) AS tns,
         |    lag(epoch_ns(ts)) OVER (PARTITION BY user_id
         |      ORDER BY ts, event_id) AS prev
@@ -3850,12 +3655,38 @@ object SparkEntry {
         |   s.start_ns, s.end_ns
         | FROM p JOIN sess s
         |   ON p.pt BETWEEN s.start_ns AND s.end_ns"""
-        .stripMargin.replace("\n", " "),
-    // the q39 session CTEs + a plain inequality overlap self-join
-    // (the oracle may nested-loop; the engine side is the bucketed
-    // exactly-once equi-join)
-    "q103_interval_join" ->
-      """WITH o AS (
+        .stripMargin.replace("\n", " "))),
+    // §events — INTERVAL-OVERLAP JOIN (the interval×interval sibling
+    // of q68, which Spark also compiles to a nested loop): all
+    // cross-user pairs of CONCURRENT q39 sessions via the bucketed
+    // shape — both sides explode to covered 1-h buckets, ONE hash
+    // equi-join, exact re-check, and the max-start bucket rule emits
+    // each pair exactly once (the overlap's first bucket — both
+    // sides cover it, and there is exactly one). Output adds the
+    // exact overlap length in ns — all integers.
+    Entry("q103_interval_join", (s, dir) => {
+      import graft.operators.RangeJoin
+      val sess = apply("q39_sessionize").run(s, dir)
+        .select(col("user_id"), col("session_id"),
+          col("start_ns"), col("end_ns"))
+      val a = sess.select(col("user_id").as("user_a"),
+        col("session_id").as("session_a"),
+        col("start_ns").as("start_a"), col("end_ns").as("end_a"))
+      val b = sess.select(col("user_id").as("user_b"),
+        col("session_id").as("session_b"),
+        col("start_ns").as("start_b"), col("end_ns").as("end_b"))
+      RangeJoin.intervalOverlap(a, "start_a", "end_a", b,
+          "start_b", "end_b", bucketWidth = 3600L * 1000000000L)
+        .filter(col("user_a") < col("user_b"))
+        .select(col("user_a"), col("session_a"), col("user_b"),
+          col("session_b"),
+          (least(col("end_a"), col("end_b")) -
+            greatest(col("start_a"), col("start_b"))).as("overlap_ns"))
+    },
+      // the q39 session CTEs + a plain inequality overlap self-join
+      // (the oracle may nested-loop; the engine side is the bucketed
+      // exactly-once equi-join)
+      sql("""WITH o AS (
         |  SELECT user_id, event_id, epoch_ns(ts) AS tns,
         |    lag(epoch_ns(ts)) OVER (PARTITION BY user_id
         |      ORDER BY ts, event_id) AS prev
@@ -3879,13 +3710,31 @@ object SparkEntry {
         | FROM sess a JOIN sess b
         |   ON a.user_id < b.user_id
         |  AND a.start_ns <= b.end_ns AND b.start_ns <= a.end_ns"""
-        .stripMargin.replace("\n", " "),
-    // the window replay: inequality join + ROW_NUMBER over
-    // (tsn DESC, event_id DESC) — the same (ts, id) total order as
-    // the Spark struct-max; probes with no prior event union in with
-    // null state
-    "q67_asof_join" ->
-      """WITH e AS (SELECT user_id,
+        .stripMargin.replace("\n", " "))),
+    // §events — AS-OF JOIN (the temporal-state lookup Spark lacks,
+    // composed from union + one per-key window): for each probe (every
+    // 10th event), the latest event at-or-before its timestamp by the
+    // (ts, event_id) total order, plus how many preceded it. ts is
+    // micro-truncated on both engines (the q39 NANOS-read parity rule).
+    Entry("q67_asof_join", (s, dir) => {
+      import graft.operators.AsofJoin
+      val ev = t(s, dir, "events")
+        .withColumn("ts", col("ts") - col("ts") % 1000L)
+        .select(col("user_id"), col("ts"), col("event_id"),
+          col("event_type"))
+      val probes = ev.filter(col("event_id") % 10 === 0)
+        .select(col("user_id"), col("ts"),
+          col("event_id").as("probe_id"))
+      AsofJoin.lastEventAsOf(ev, probes, "user_id", "ts",
+        tieCols = Seq("event_id"),
+        payload = Seq("event_id", "event_type"),
+        probeCols = Seq("probe_id"))
+    },
+      // the window replay: inequality join + ROW_NUMBER over
+      // (tsn DESC, event_id DESC) — the same (ts, id) total order as
+      // the Spark struct-max; probes with no prior event union in with
+      // null state
+      sql("""WITH e AS (SELECT user_id,
         |    epoch_ns(ts) - epoch_ns(ts) % 1000 AS tsn,
         |    event_id, event_type FROM events),
         | p AS (SELECT user_id, tsn AS probe_ts, event_id AS probe_id
@@ -3908,11 +3757,28 @@ object SparkEntry {
         |   CAST(NULL AS VARCHAR), CAST(0 AS BIGINT)
         | FROM p WHERE NOT EXISTS (SELECT 1 FROM e e2
         |   WHERE e2.user_id = p.user_id AND e2.tsn <= p.probe_ts)"""
-        .stripMargin.replace("\n", " "),
-    // the full pipeline: q49's integer quality gate ∧ NOT a q31
-    // cluster loser ∧ the q32 md5 predicate at 0.5 (0x8000)
-    "q66_curation_pipeline" ->
-      s"""$clusterOracleCtes,
+        .stripMargin.replace("\n", " "))),
+    // LLM §pipeline — the CURATION PIPELINE as ONE declarative plan
+    // (what the whole llm package exists for): quality gate ∧ dedup
+    // keeper-or-unclustered ∧ deterministic 50% sample, composed as
+    // joins/anti-joins so Catalyst fuses the stages — no
+    // materialization between "filter", "dedup" and "sample".
+    Entry("q66_curation_pipeline", (s, dir) => {
+      import graft.llm.{Sampling, TextStats}
+      val docs = t(s, dir, "documents")
+      val losers = clusterArtifact(s, dir)
+        .filter(col("id_a") =!= col("cluster_id"))
+        .select(col("id_a").as("doc_id"))
+      // quality gate INLINE on the one scan (a join against the
+      // qualityFilter frame would scan the corpus twice)
+      val kept = docs.filter(TextStats.qualityKeep(col("text")))
+        .join(losers, Seq("doc_id"), "left_anti")
+      Sampling.deterministicSample(kept, "doc_id", fraction = 0.5)
+        .select(col("doc_id"), col("lang"))
+    },
+      // the full pipeline: q49's integer quality gate ∧ NOT a q31
+      // cluster loser ∧ the q32 md5 predicate at 0.5 (0x8000)
+      sql(s"""$clusterOracleCtes,
         | q AS (SELECT doc_id FROM (
         |   SELECT doc_id,
         |     len(string_split(text, ' ')) AS n_tokens,
@@ -3929,12 +3795,61 @@ object SparkEntry {
         | JOIN q USING (doc_id)
         | WHERE d.doc_id NOT IN (SELECT id FROM cl WHERE id <> cluster_id)
         |   AND substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 4) < '8000'"""
-        .stripMargin.replace("\n", " "),
-    // q31's cluster CTEs + the longest-member argmax: ROW_NUMBER over
-    // (score DESC, doc_id) replays max(struct(score, -id)) exactly —
-    // integer score, deterministic tiebreak
-    "q53_quality_keeper" ->
-      s"""$clusterOracleCtes,
+        .stripMargin.replace("\n", " "))),
+    // LLM §packing — token-budget shard assignment (the balanced
+    // export planner): ascending-id docs split at every `target`
+    // cumulative tokens via the q37 distributed prefix sum — one range
+    // shuffle, exact integer div, deterministic across partitionings.
+    // Hardened after the r10 driver-gate hash mismatch (locally
+    // unreproducible): every column pinned to non-null BIGINT and rows
+    // emitted pre-sorted by doc_id, so no type/nullability/order
+    // latitude is left for the comparator.
+    Entry("q51_shard_assign", (s, dir) => {
+      import graft.llm.{Packing, TextStats}
+      Packing.shardAssignments(t(s, dir, "documents"), "doc_id",
+        TextStats.tokenCount(col("text")), targetTokens = 2048)
+        .select(
+          col("doc_id").cast("bigint").as("doc_id"),
+          col("n_tokens").cast("bigint").as("n_tokens"),
+          col("tok_offset").cast("bigint").as("tok_offset"),
+          col("shard_id").cast("bigint").as("shard_id"))
+        .orderBy("doc_id")
+    },
+      // the q37 prefix-sum window + integer floor-div shard id. Every
+      // output column is explicitly CAST to BIGINT (the bare `//` result
+      // type is DuckDB-version-sensitive — the one q37/q51 divergence
+      // candidate for the r10 driver hash mismatch; q37 always cast its
+      // division) and rows are emitted ordered, mirroring the entry.
+      sql("""WITH s AS (
+        |  SELECT doc_id,
+        |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
+        |  FROM documents),
+        | o AS (
+        |  SELECT doc_id, n_tokens,
+        |    CAST(COALESCE(SUM(n_tokens) OVER (ORDER BY doc_id
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+        |      AS BIGINT) AS tok_offset
+        |  FROM s)
+        | SELECT CAST(doc_id AS BIGINT) AS doc_id, n_tokens, tok_offset,
+        |   CAST(tok_offset // 2048 AS BIGINT) AS shard_id
+        | FROM o ORDER BY doc_id""".stripMargin.replace("\n", " "))),
+    // LLM §dedup — quality-aware KEEPER selection (the dedup policy
+    // knob): within each q31 cluster keep the longest member (token
+    // count, ties to smallest id) — aggregation argmax via
+    // max(struct(score, -id)), no per-cluster window.
+    Entry("q53_quality_keeper", (s, dir) => {
+      import graft.llm.{Dedup, TextStats}
+      val docs = t(s, dir, "documents")
+      val clusters = clusterArtifact(s, dir)
+        .select(col("id_a").as("doc_id"), col("cluster_id"))
+      val scores = docs.select(col("doc_id"),
+        TextStats.tokenCount(col("text")).as("score"))
+      Dedup.qualityKeepers(clusters, "doc_id", scores, "score")
+    },
+      // q31's cluster CTEs + the longest-member argmax: ROW_NUMBER over
+      // (score DESC, doc_id) replays max(struct(score, -id)) exactly —
+      // integer score, deterministic tiebreak
+      sql(s"""$clusterOracleCtes,
         | tok AS (SELECT doc_id,
         |   CAST(len(string_split(text, ' ')) AS BIGINT) AS score
         |   FROM documents),
@@ -3947,165 +3862,40 @@ object SparkEntry {
         |   FROM j)
         | SELECT cluster_id, jid AS keeper_id, score AS keeper_score,
         |   CAST(n AS BIGINT) AS n_members
-        | FROM r WHERE rn = 1""".stripMargin.replace("\n", " "),
-    // same md5-prefix predicate verbatim; 0.25 * 65536 = 16384 = 0x4000
-    "q32_det_sample" ->
-      """SELECT doc_id, LENGTH(text) AS text_chars FROM documents
-        | WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) < '4000'"""
-        .stripMargin.replace("\n", " "),
-    "q33_vocab_topk" ->
-      """SELECT token, count(*) AS freq FROM (
-        | SELECT unnest(string_split_regex(text, '\s+')) AS token
-        | FROM documents)
-        | WHERE token <> ''
-        | GROUP BY token ORDER BY freq DESC, token LIMIT 100"""
-        .stripMargin.replace("\n", " "),
-    // q37: the window ORDER BY prefix sum is the oracle's luxury — the
-    // Spark side computes the same offsets distributed. The series
-    // theta-join replicates the explode over overlapped sequences.
-    "q37_seq_pack" ->
-      """WITH c AS (
-        |  SELECT doc_id,
-        |    CAST(len(string_split(text,' ')) AS BIGINT) AS toks,
-        |    CAST(COALESCE(sum(len(string_split(text,' '))) OVER (
-        |      ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND
-        |      1 PRECEDING), 0) AS BIGINT) AS off
-        |  FROM documents),
-        | g AS (
-        |  SELECT unnest(generate_series(0,
-        |    (SELECT CAST(sum(len(string_split(text,' ')))//256 AS BIGINT)
-        |     FROM documents))) AS seq_id)
-        | SELECT c.doc_id, g.seq_id,
-        |   greatest(c.off, g.seq_id*256) - c.off AS doc_from,
-        |   least(c.off+c.toks, (g.seq_id+1)*256) -
-        |     greatest(c.off, g.seq_id*256) AS n_toks
-        | FROM c JOIN g
-        |   ON g.seq_id BETWEEN c.off//256 AND (c.off+c.toks-1)//256
-        | WHERE c.toks > 0""".stripMargin.replace("\n", " "),
-    "q38_chunking" ->
-      """WITH d AS (
-        |  SELECT doc_id, text,
-        |    greatest(CAST(ceil((len(text)-96)/64.0) AS BIGINT), 0)
-        |      AS last_chunk
-        |  FROM documents),
-        | g AS (
-        |  SELECT unnest(generate_series(0,
-        |    (SELECT max(greatest(CAST(ceil((len(text)-96)/64.0) AS
-        |     BIGINT), 0)) FROM documents))) AS chunk_id)
-        | SELECT d.doc_id, g.chunk_id,
-        |   substr(d.text, CAST(g.chunk_id*64 + 1 AS INTEGER), 96)
-        |     AS chunk
-        | FROM d JOIN g ON g.chunk_id <= d.last_chunk"""
-        .stripMargin.replace("\n", " "),
-    // DuckDB 1.0 reads the TIMESTAMP(NANOS) column at MICRO precision,
-    // so epoch_ns(ts) here is nanos-truncated-to-micros; the Spark side
-    // truncates its raw int64 nanos the same way (ts - ts % 1000) —
-    // both engines session over identical micro-truncated values
-    "q39_sessionize" ->
-      """WITH o AS (
-        |  SELECT user_id, event_id, epoch_ns(ts) AS tns,
-        |    lag(epoch_ns(ts)) OVER (PARTITION BY user_id
-        |      ORDER BY ts, event_id) AS prev
-        |  FROM events),
-        | f AS (
-        |  SELECT *, CASE WHEN prev IS NULL OR tns - prev > 1800000000000
-        |    THEN 1 ELSE 0 END AS nw FROM o),
-        | s2 AS (
-        |  SELECT user_id, tns, CAST(sum(nw) OVER (
-        |    PARTITION BY user_id ORDER BY tns, event_id
-        |    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_id
-        |  FROM f)
-        | SELECT user_id, session_id, count(*) AS n_events,
-        |   min(tns) AS start_ns, max(tns) AS end_ns
-        | FROM s2 GROUP BY 1, 2""".stripMargin.replace("\n", " "),
-    // millis sessionization (the streaming operator's batch path):
-    // epoch_ms truncates DuckDB's micro TIMESTAMP the same way the
-    // Spark side's unix_millis truncates its ns-div-1000 micros
-    "q40_sessions_ms" ->
-      """WITH o AS (
-        |  SELECT CAST(user_id AS VARCHAR) AS user_id,
-        |    epoch_ms(ts) AS tms,
-        |    lag(epoch_ms(ts)) OVER (PARTITION BY user_id
-        |      ORDER BY epoch_ms(ts)) AS prev
-        |  FROM events),
-        | f AS (
-        |  SELECT *, CASE WHEN prev IS NULL OR tms - prev > 1800000
-        |    THEN 1 ELSE 0 END AS nw FROM o),
-        | s2 AS (
-        |  SELECT user_id, tms, CAST(sum(nw) OVER (
-        |    PARTITION BY user_id ORDER BY tms
-        |    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS sid
-        |  FROM f)
-        | SELECT user_id, min(tms) AS start_ms, max(tms) AS end_ms,
-        |   count(*) AS n_events
-        | FROM s2 GROUP BY user_id, sid""".stripMargin.replace("\n", " "),
-    // ratio = m*1.0/n over two exactly-agreed BIGINTs — the same IEEE
-    // division the Spark side performs, no rounding epsilon needed
-    "q41_common_ratio" ->
-      """WITH toks AS (
-        |  SELECT doc_id, token FROM (
-        |    SELECT doc_id,
-        |      unnest(string_split_regex(text, '\s+')) AS token
-        |    FROM documents)
-        |  WHERE token <> ''),
-        | vocab AS (
-        |  SELECT token FROM toks GROUP BY token
-        |  ORDER BY count(*) DESC, token LIMIT 100),
-        | per AS (
-        |  SELECT doc_id, count(*) AS n_tokens,
-        |    count(*) FILTER (WHERE token IN (SELECT token FROM vocab))
-        |      AS n_common
-        |  FROM toks GROUP BY doc_id)
-        | SELECT d.doc_id, coalesce(p.n_tokens, 0) AS n_tokens,
-        |   coalesce(p.n_common, 0) AS n_common,
-        |   CASE WHEN coalesce(p.n_tokens, 0) = 0 THEN 0.0
-        |        ELSE p.n_common * 1.0 / p.n_tokens END AS common_ratio
-        | FROM documents d LEFT JOIN per p USING (doc_id)"""
-        .stripMargin.replace("\n", " "),
-    "q42_pii_audit" -> piiAuditOracleSql,
-    // quantized cosine = integer dots/norms (scales cancel): every
-    // number is an exactly-representable int before one double
-    // division — rank order agrees exactly, ties by vec_id
-    "q47_ann_int8" -> quantizedAnnOracleSql,
-    "q48_simhash_join" -> simhashOracleSql,
-    // the q25 token-count fragments + integer cross-product thresholds:
-    // 30<=n<=400 tokens, distinct fraction >= 40%, stopword fraction
-    // >= 20 permille — all-int comparisons, flags as 0/1 ints
-    "q49_quality_filter" ->
-      """WITH s AS (
-        |  SELECT doc_id,
-        |    len(string_split(text, ' ')) AS n_tokens,
-        |    len(list_distinct(string_split(text, ' '))) AS n_distinct,
-        |    len(list_filter(string_split(text, ' '), t -> list_contains(
-        |      ['the','a','of','and','to','in','is','it','on','for'], t)))
-        |      AS n_stop
-        |  FROM documents)
-        | SELECT doc_id, n_tokens, n_distinct, n_stop,
-        |  CAST(n_tokens >= 30 AND n_tokens <= 400 AS INT) AS ok_length,
-        |  CAST(n_distinct * 100 >= n_tokens * 40 AS INT) AS ok_distinct,
-        |  CAST(n_stop * 1000 >= n_tokens * 20 AS INT) AS ok_stopwords,
-        |  CAST((n_tokens >= 30 AND n_tokens <= 400) AND
-        |       n_distinct * 100 >= n_tokens * 40 AND
-        |       n_stop * 1000 >= n_tokens * 20 AS INT) AS keep
-        | FROM s""".stripMargin.replace("\n", " "),
-    // both rankings replayed as CTEs (q22's exact + q47's quantized),
-    // joined per query: hits is an int count, recall one exact division
-    "q50_ann_recall" ->
-      s"""WITH ex AS ($annOracleSql),
-         | ap AS ($quantizedAnnOracleSql),
-         | h AS (SELECT ex.q_id, count(*) AS hits
-         |   FROM ex JOIN ap ON ex.q_id = ap.q_id AND ex.vec_id = ap.vec_id
-         |   GROUP BY 1)
-         | SELECT q.q_id, COALESCE(h.hits, 0) AS hits,
-         |   CAST(COALESCE(h.hits, 0) AS DOUBLE) / 10.0 AS recall
-         | FROM (SELECT DISTINCT q_id FROM ex) q
-         | LEFT JOIN h ON h.q_id = q.q_id"""
-      .stripMargin.replace("\n", " "),
-    // 1-based list positions mirror the Spark side's 0-based ones;
-    // covered = every position under a hot window, rebuild =
-    // string_agg of surviving tokens in position order
-    "q55_span_removal" ->
-      """WITH t1 AS (SELECT doc_id, string_split(text, ' ') AS ts
+        | FROM r WHERE rn = 1""".stripMargin.replace("\n", " "))),
+    // LLM §text-analysis — distributed BPE tokenizer TRAINING + encode
+    // (vocabulary induction, the step before token counting): the
+    // corpus collapses ONCE to a word-frequency table, then each of
+    // the 24 merge rounds is a vocabulary-sized job (weighted pair
+    // counts with map-side partials + a top-1 argmax), and encode is
+    // pure map-side against the broadcast merge list. Merge LEARNING
+    // is iterative — not SQL-expressible — but encode IS: the oracle
+    // is generated from the learned merge literals (dynamicOracleSql →
+    // Bpe.encodeOracleSql) and replays the full greedy inference in
+    // DuckDB, so this row is hash-gated like every other; learning
+    // itself stays pinned by BpeSpec's merge-for-merge differential
+    // against an independent single-node reference implementation.
+    Entry("q54_bpe_encode", (s, dir) => {
+      import graft.llm.Bpe
+      val docs = t(s, dir, "documents")
+      Bpe.encode(docs, "text", bpeMerges(s, dir))
+        .select(col("doc_id"), col("n_bpe_tokens"))
+    }, (s, dir) => graft.llm.Bpe.encodeOracleSql(bpeMerges(s, dir))),
+    // LLM §dedup — repeated-span REMOVAL (the excision counterpart of
+    // q43's detection; RefinedWeb-style boilerplate strip): 8-token
+    // windows in more than 2 distinct docs are cut everywhere they
+    // appear; docs rebuild map-side from surviving tokens. Integer
+    // positions + exact strings end to end — the oracle replays the
+    // whole pipeline.
+    Entry("q55_span_removal", (s, dir) => {
+      import graft.llm.Dedup
+      Dedup.removeRepeatedSpans(t(s, dir, "documents"), "doc_id", "text",
+        windowTokens = 8, docFreqCap = 2)
+    },
+      // 1-based list positions mirror the Spark side's 0-based ones;
+      // covered = every position under a hot window, rebuild =
+      // string_agg of surviving tokens in position order
+      sql("""WITH t1 AS (SELECT doc_id, string_split(text, ' ') AS ts
         |   FROM documents),
         | idx AS (SELECT unnest(range(1, 2000)) AS i),
         | w AS (SELECT doc_id, CAST(i AS INT) AS s,
@@ -4128,116 +3918,66 @@ object SparkEntry {
         | SELECT d.doc_id, COALESCE(cl.text_clean, '') AS text_clean,
         |   CAST(COALESCE(nr.n, 0) AS INT) AS n_tokens_removed
         | FROM documents d LEFT JOIN cl USING (doc_id)
-        | LEFT JOIN nr USING (doc_id)""".stripMargin.replace("\n", " "),
-    // epoch_ns is micro-truncated by DuckDB's TIMESTAMP read — the
-    // same truncation the Spark side applies before the hour division
-    "q52_tumbling" ->
-      """SELECT epoch_ns(ts) // 3600000000000 AS win, event_type,
+        | LEFT JOIN nr USING (doc_id)""".stripMargin.replace("\n", " "))),
+    // T-family — TUMBLING time-window aggregation (the q39/q40 gap
+    // sessions' fixed-window sibling, and the shape Structured
+    // Streaming's window() aggregations take): 1-hour buckets by
+    // integer division of the micro-truncated epoch (the q39
+    // precision contract — DuckDB reads TIMESTAMP(NANOS) at micros),
+    // one hash aggregation with map-side partials.
+    Entry("q52_tumbling", (s, dir) => {
+      t(s, dir, "events")
+        .withColumn("win",
+          expr("(ts - ts % 1000) div 3600000000000"))
+        .groupBy(col("win"), col("event_type"))
+        .agg(count(lit(1)).as("n_events"),
+          countDistinct(col("user_id")).as("n_users"))
+    },
+      // epoch_ns is micro-truncated by DuckDB's TIMESTAMP read — the
+      // same truncation the Spark side applies before the hour division
+      sql("""SELECT epoch_ns(ts) // 3600000000000 AS win, event_type,
         |  count(*) AS n_events,
         |  count(DISTINCT user_id) AS n_users
-        | FROM events GROUP BY 1, 2""".stripMargin.replace("\n", " "),
-    // the q37 prefix-sum window + integer floor-div shard id. Every
-    // output column is explicitly CAST to BIGINT (the bare `//` result
-    // type is DuckDB-version-sensitive — the one q37/q51 divergence
-    // candidate for the r10 driver hash mismatch; q37 always cast its
-    // division) and rows are emitted ordered, mirroring the entry.
-    "q51_shard_assign" ->
-      """WITH s AS (
-        |  SELECT doc_id,
-        |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
-        |  FROM documents),
-        | o AS (
-        |  SELECT doc_id, n_tokens,
-        |    CAST(COALESCE(SUM(n_tokens) OVER (ORDER BY doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS BIGINT) AS tok_offset
-        |  FROM s)
-        | SELECT CAST(doc_id AS BIGINT) AS doc_id, n_tokens, tok_offset,
-        |   CAST(tok_offset // 2048 AS BIGINT) AS shard_id
-        | FROM o ORDER BY doc_id""".stripMargin.replace("\n", " "),
-    // tf-idf's ranking as pure integers: tf desc, doc-freq asc, token
-    // asc — df counts rows of the per-doc-distinct tf table
-    "q59_keywords" ->
-      """WITH tk AS (SELECT doc_id,
-        |    unnest(list_filter(string_split(text, ' '),
-        |      x -> x <> '')) AS t FROM documents),
-        | tf AS (SELECT doc_id, t, count(*) AS tf FROM tk GROUP BY 1, 2),
-        | df AS (SELECT t, count(*) AS df FROM tf GROUP BY 1)
-        | SELECT tf.doc_id, tf.t AS token, tf.tf, df.df,
-        |   CAST(ROW_NUMBER() OVER (PARTITION BY tf.doc_id
-        |     ORDER BY tf.tf DESC, df.df, tf.t) AS INTEGER) AS rank
-        | FROM tf JOIN df USING (t)
-        | QUALIFY rank <= 3""".stripMargin.replace("\n", " "),
-    // winnowing replayed with list comprehension primitives: same
-    // 1-based inclusive slices, same md5 grams, same per-window min
-    // (lexicographic over hex = the same total order both engines)
-    "q62_winnow" ->
-      """WITH d AS (SELECT doc_id,
-        |    list_filter(string_split(text, ' '), x -> x <> '') AS ts
-        |  FROM documents),
-        | g AS (SELECT doc_id,
-        |    list_transform(range(1, len(ts) - 2),
-        |      i -> md5(array_to_string(ts[i:i+3], ' '))) AS gh
-        |  FROM d WHERE len(ts) >= 4)
-        | SELECT doc_id,
-        |   unnest(list_distinct(list_transform(
-        |     range(1, greatest(len(gh) - 3, 1) + 1),
-        |     j -> list_min(gh[j:j+3])))) AS fp
-        | FROM g""".stripMargin.replace("\n", " "),
-    // global (len, id) rank → integer div; all BIGINT
-    "q64_length_batches" ->
-      """WITH s AS (SELECT doc_id,
-        |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
-        |  FROM documents)
-        | SELECT CAST(doc_id AS BIGINT) AS doc_id, n_tokens,
-        |   CAST((ROW_NUMBER() OVER (ORDER BY n_tokens, doc_id) - 1)
-        |     // 32 AS BIGINT) AS batch_id
-        | FROM s ORDER BY doc_id""".stripMargin.replace("\n", " "),
-    // the q62 winnow CTE on both split sides + one fp equi-join
-    "q63_winnow_overlap" ->
-      """WITH d AS (SELECT doc_id,
-        |    list_filter(string_split(text, ' '), x -> x <> '') AS ts
-        |  FROM documents),
-        | g AS (SELECT doc_id,
-        |    list_transform(range(1, len(ts) - 2),
-        |      i -> md5(array_to_string(ts[i:i+3], ' '))) AS gh
-        |  FROM d WHERE len(ts) >= 4),
-        | f AS (SELECT doc_id,
-        |   unnest(list_distinct(list_transform(
-        |     range(1, greatest(len(gh) - 3, 1) + 1),
-        |     j -> list_min(gh[j:j+3])))) AS fp
-        | FROM g)
-        | SELECT l.doc_id AS train_id, r.doc_id AS bench_id,
-        |   count(*) AS n_shared
-        | FROM f l JOIN f r ON l.fp = r.fp
-        |   AND l.doc_id % 5 <> 0 AND r.doc_id % 5 = 0
-        | GROUP BY 1, 2 HAVING count(*) >= 2"""
-        .stripMargin.replace("\n", " "),
-    // the same md5(stratum#key) order as q46's fraction path, capped
-    // at n per stratum (the window here is the ORACLE's luxury — the
-    // engine side runs the two-phase cap instead)
-    "q60_cap_sample" ->
-      """SELECT lang, doc_id,
-        |   CAST(ROW_NUMBER() OVER (PARTITION BY lang
-        |     ORDER BY md5(lang || '#' || CAST(doc_id AS VARCHAR)),
-        |       doc_id) AS INTEGER) AS rank
-        | FROM documents
-        | QUALIFY rank <= 10""".stripMargin.replace("\n", " "),
-    // thresholds are round(fraction * 65536) as 5 hex digits (1.0 →
-    // '10000', hence the '0' prefix on the 4-digit md5 slice)
-    "q46_mix_sample" ->
-      """SELECT doc_id, lang FROM documents
+        | FROM events GROUP BY 1, 2""".stripMargin.replace("\n", " "))),
+    // LLM §mixing — per-language data-mixing recipe via deterministic
+    // stratified sampling: keep all German, half the English, a quarter
+    // of French/Spanish, drop Chinese — the md5-prefix predicate is
+    // map-only, engine-portable, and stable across partitionings (the
+    // q32 machinery with a per-stratum cutoff).
+    Entry("q46_mix_sample", (s, dir) => {
+      import graft.llm.Sampling
+      Sampling.stratifiedSample(t(s, dir, "documents"), "doc_id", "lang",
+        Map("en" -> 0.5, "de" -> 1.0, "zh" -> 0.0),
+        defaultFraction = 0.25)
+        .select(col("doc_id"), col("lang"))
+    },
+      // thresholds are round(fraction * 65536) as 5 hex digits (1.0 →
+      // '10000', hence the '0' prefix on the 4-digit md5 slice)
+      sql("""SELECT doc_id, lang FROM documents
         | WHERE '0' || substr(md5(lang || '#' ||
         |     CAST(doc_id AS VARCHAR)), 1, 4) <
         |   CASE lang WHEN 'en' THEN '08000' WHEN 'de' THEN '10000'
         |     WHEN 'zh' THEN '00000' ELSE '04000' END"""
-        .stripMargin.replace("\n", " "),
-    // floor(x/scale + 0.5) quantization replayed verbatim: every op
-    // (float→double cast, abs, max, /, floor, clamp) is the same IEEE
-    // operation on both engines, so the int aggregates match exactly
-    // and `scale` matches to the comparator's 6dp float rounding
-    "q45_quantize" ->
-      """WITH e AS (
+        .stripMargin.replace("\n", " "))),
+    // LLM §embeddings — symmetric int8 scalar quantization (the 4×
+    // vector-store compression): per vec, scale = max|x|/127 and
+    // q = clamp(floor(x/scale + 0.5)) — floor-form so both engines'
+    // ints agree bit-exactly (round()'s tie behavior is
+    // engine-specific). Summarized as integer aggregates (+ the scale)
+    // so the oracle compares exactly.
+    Entry("q45_quantize", (s, dir) => {
+      import graft.llm.Similarity
+      Similarity.quantizeInt8(t(s, dir, "embeddings"),
+          "vec_id", "embedding")
+        .select(col("vec_id"), col("scale"),
+          expr("aggregate(q, 0L, (a, x) -> a + x)").as("q_sum"),
+          size(filter(col("q"), x => abs(x) === 127)).as("n_sat"))
+    },
+      // floor(x/scale + 0.5) quantization replayed verbatim: every op
+      // (float→double cast, abs, max, /, floor, clamp) is the same IEEE
+      // operation on both engines, so the int aggregates match exactly
+      // and `scale` matches to the comparator's 6dp float rounding
+      sql("""WITH e AS (
         |  SELECT vec_id,
         |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS xs
         |  FROM embeddings),
@@ -4256,11 +3996,20 @@ object SparkEntry {
         | SELECT vec_id, scale,
         |   CAST(list_sum(qs) AS BIGINT) AS q_sum,
         |   len(list_filter(qs, x -> abs(x) = 127)) AS n_sat
-        | FROM q""".stripMargin.replace("\n", " "),
-    // fractions divide exactly-agreed integers — bit-identical IEEE
-    // division on both engines, no epsilon
-    "q44_repetition" ->
-      """WITH d AS (
+        | FROM q""".stripMargin.replace("\n", " "))),
+    // LLM §quality — intra-doc repetition (the Gopher duplicate/top
+    // n-gram fraction filters): per doc over its bigram windows,
+    // repeated-phrasing and single-phrase-dominance fractions. Two
+    // hash aggregations (map-side partial counts), fractions divide
+    // exactly-agreed ints.
+    Entry("q44_repetition", (s, dir) => {
+      import graft.llm.TextStats
+      TextStats.repetitionStats(t(s, dir, "documents"),
+        "doc_id", "text", n = 2)
+    },
+      // fractions divide exactly-agreed integers — bit-identical IEEE
+      // division on both engines, no epsilon
+      sql("""WITH d AS (
         |  SELECT doc_id,
         |    list_filter(string_split_regex(text, '\s+'), t -> t <> '')
         |      AS toks
@@ -4283,14 +4032,29 @@ object SparkEntry {
         |   CASE WHEN coalesce(n_grams, 0) = 0 THEN 0.0
         |     ELSE top_c * 1.0 / n_grams END AS top_frac
         | FROM d LEFT JOIN st USING (doc_id)"""
-        .stripMargin.replace("\n", " "),
-    // same tokenizer (\s+, empties dropped), same per-doc-distinct
-    // windows, same combined-doc-freq cap — the oracle joins on the
-    // window STRING (DuckDB has no xxhash64; the Spark side's hash is
-    // only a shuffle key, string equality is verified post-join, so
-    // both engines count identical pairs)
-    "q43_ngram_overlap" ->
-      """WITH d AS (
+        .stripMargin.replace("\n", " "))),
+    // LLM §decontamination — token-window collision join (the GPT-3
+    // "13-gram dedup" shape, here 8-token windows on the synthetic
+    // corpus): contiguous-span contamination that whole-document
+    // Jaccard (q34) can miss. Same train/bench split as q34; join on
+    // 8-byte window hashes, exact string verify post-join, boilerplate
+    // windows (combined doc-freq > 1000) anti-joined out pre-join.
+    Entry("q43_ngram_overlap", (s, dir) => {
+      import graft.llm.Dedup
+      val docs = t(s, dir, "documents")
+      Dedup.ngramOverlapJoin(
+        docs.filter(col("doc_id") % 5 =!= 0),
+        docs.filter(col("doc_id") % 5 === 0),
+        "doc_id", "text", windowTokens = 8, minShared = 2)
+        .select(col("id_a").as("train_id"), col("id_b").as("bench_id"),
+          col("n_shared"))
+    },
+      // same tokenizer (\s+, empties dropped), same per-doc-distinct
+      // windows, same combined-doc-freq cap — the oracle joins on the
+      // window STRING (DuckDB has no xxhash64; the Spark side's hash is
+      // only a shuffle key, string equality is verified post-join, so
+      // both engines count identical pairs)
+      sql("""WITH d AS (
         |  SELECT doc_id,
         |    list_filter(string_split_regex(text, '\s+'), t -> t <> '')
         |      AS toks
@@ -4309,7 +4073,106 @@ object SparkEntry {
         |   count(*) AS n_shared
         | FROM wl JOIN wr USING (win)
         | GROUP BY 1, 2 HAVING count(*) >= 2"""
-        .stripMargin.replace("\n", " "))
+        .stripMargin.replace("\n", " ")))
+  )
+
+  // q120/q121's stored-fingerprint collections (one (id, dhash) tuple
+  // per document — bounded by the gate corpus): collected from the
+  // SAME stored artifact the entries band, so the oracle
+  // literals replay the exact frame by construction — deterministic
+  // integer-arithmetic payloads + lossless PNG/PCM round trips, and
+  // longs survive the parquet trip bit-exactly.
+  private def mediaFingerprints(s: SparkSession, dir: String,
+                                kind: String): Seq[(Long, Long)] =
+    mediaFpArtifact(s, dir, kind).collect()
+      .map(r => (r.getLong(r.fieldIndex("id")),
+        r.getLong(r.fieldIndex("dhash"))))
+      .sortBy(_._1).toSeq
+
+  /** The [[graft.llm.Dedup.fingerprintNearPairs]] arithmetic replayed
+    * over stored 64-bit fingerprints: pigeonhole chunks (maxDistance+1
+    * bands — candidates matching on ≥ 1 band, provably no miss),
+    * DISTINCT ordered pairs, exact `bit_count(xor)` verification.
+    * DuckDB's `>>` is arithmetic but the band mask truncates to the
+    * chunk's bits, and its bit_count/xor are two's-complement exact —
+    * probed to match Java Long semantics on negative fingerprints. */
+  private def fingerprintPairsOracleSql(fps: Seq[(Long, Long)],
+                                        maxDistance: Int): String = {
+    val chunks = maxDistance + 1
+    val width = 64 / chunks
+    val mask = (1L << width) - 1L
+    val values = fps.map { case (i, f) => s"($i, CAST($f AS BIGINT))" }
+      .mkString(", ")
+    s"""WITH fp(id, f) AS (VALUES $values),
+       | b AS (SELECT unnest(range($chunks)) AS b),
+       | bands AS (SELECT id, f, b.b AS b,
+       |     (f >> CAST(b.b * $width AS INT)) & $mask AS v
+       |   FROM fp CROSS JOIN b),
+       | cand AS (SELECT DISTINCT a.id AS ia, x.id AS ib
+       |   FROM bands a JOIN bands x
+       |   ON a.b = x.b AND a.v = x.v AND a.id < x.id)
+       | SELECT c.ia AS id_a, c.ib AS id_b,
+       |   CAST(bit_count(xor(fa.f, fb.f)) AS INT) AS hamming
+       | FROM cand c JOIN fp fa ON fa.id = c.ia
+       | JOIN fp fb ON fb.id = c.ib
+       | WHERE bit_count(xor(fa.f, fb.f)) <= $maxDistance"""
+      .stripMargin.replace("\n", " ")
+  }
+
+
+  /** `s` as a SQL string literal. */
+  private def sq(s: String): String = "'" + s.replace("'", "''") + "'"
+
+  /** q04's oracle over the lineitem object at `file`. */
+  private def findFilesOracleSql(file: String): String =
+    s"""SELECT regexp_extract(filename, '[^/]+$$', 0) AS file_name,
+      | COUNT(*) AS n_rows, COUNT(DISTINCT l_orderkey) AS n_keys
+      | FROM parquet_scan(${sq(file)}, filename=true)
+      | WHERE CAST(l_orderkey AS VARCHAR) IN ('7','23','99')
+      | GROUP BY 1""".stripMargin.replace("\n", " ")
+
+  /** q27's oracle over the staged JSON-lines object at `file`. */
+  private def jsonScanOracleSql(file: String): String =
+    s"""SELECT c_custkey, c_name, c_nationkey,
+      | CAST(c_acctbal AS DOUBLE) AS c_acctbal_dbl, c_mktsegment
+      | FROM read_json_auto(${sq(file)})
+      | WHERE CAST(c_custkey AS VARCHAR) IN ('7','23','99')
+      |    OR CAST(c_nationkey AS VARCHAR) IN ('7','23','99')"""
+      .stripMargin.replace("\n", " ")
+
+  /** q97's oracle: [[graft.llm.Bpe.encodeOracleSql]]'s word-level
+    * merge replay (vocabulary-sized) producing per-doc BPE counts,
+    * feeding q37's prefix-sum pack window verbatim (seqLen 256). */
+  private def tokenizePackOracleSql(
+      merges: Seq[graft.llm.Bpe.Merge]): String = {
+    val wrapped = merges.foldLeft(
+      "regexp_replace(w, '(.)', ' \\1 ', 'g')") { (acc, m) =>
+      s"replace($acc, ${sq(" " + m.a + "  " + m.b + " ")}," +
+        s" ${sq(" " + m.a + m.b + " ")})"
+    }
+    s"""WITH dw AS (SELECT doc_id,
+      |    unnest(regexp_extract_all(text, '\\S+')) AS w FROM documents),
+      | wd AS (SELECT DISTINCT w FROM dw),
+      | enc AS (SELECT w, CAST(len(regexp_extract_all($wrapped,
+      |    '[^ ]+')) AS BIGINT) AS n FROM wd),
+      | agg AS (SELECT doc_id, CAST(sum(n) AS BIGINT) AS n
+      |   FROM dw JOIN enc USING (w) GROUP BY doc_id),
+      | c AS (SELECT d.doc_id,
+      |    CAST(COALESCE(a.n, 0) AS BIGINT) AS toks,
+      |    CAST(COALESCE(sum(COALESCE(a.n, 0)) OVER (ORDER BY d.doc_id
+      |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+      |      AS BIGINT) AS off
+      |   FROM documents d LEFT JOIN agg a USING (doc_id)),
+      | g AS (SELECT unnest(generate_series(0,
+      |    (SELECT CAST(sum(toks) // 256 AS BIGINT) FROM c))) AS seq_id)
+      | SELECT c.doc_id, g.seq_id,
+      |   greatest(c.off, g.seq_id * 256) - c.off AS doc_from,
+      |   least(c.off + c.toks, (g.seq_id + 1) * 256) -
+      |     greatest(c.off, g.seq_id * 256) AS n_toks
+      | FROM c JOIN g
+      |   ON g.seq_id BETWEEN c.off // 256 AND (c.off + c.toks - 1) // 256
+      | WHERE c.toks > 0""".stripMargin.replace("\n", " ")
+  }
 
   /** q42's oracle is BUILT from [[graft.llm.PiiScrub.Detectors]]: both
     * engines run byte-identical patterns (the detector regexes restrict

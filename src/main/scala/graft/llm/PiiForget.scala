@@ -91,8 +91,10 @@ object PiiForget {
                  textCol: String, format: DataFormat = DataFormat.Parquet)
       : Seq[JobEvent] = {
     val paths = findObjects(data, textCol)
+    // purge the prior versions on commit, as the deletion path does by
+    // default: the pre-redaction copy is the PII the scrub removes
     val units = paths.map(p =>
-      ObjectWorkUnit(jobId, p, "pii", format, deleteOldVersions = false))
+      ObjectWorkUnit(jobId, p, "pii", format, deleteOldVersions = true))
     scrubObjects(spark, jobId, units, textCol.split("\\.").toSeq)
   }
 

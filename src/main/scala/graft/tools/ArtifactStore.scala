@@ -5,14 +5,12 @@ import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The ONE registry behind every derived artifact the gate entries
-  * share (★r16, factoring the four hand-rolled TrieMap +
-  * createTempDirectory + write-once + read-back copies that grew in
-  * `SparkEntry` over r15): a 100 TB pipeline derives each expensive
-  * frame or model ONCE, stores it, and every consumer reads the
-  * stored copy — this utility is that write-once/read-many contract
-  * with a single owner for the temp-dir lifecycle.
+  * share: a 100 TB pipeline derives each expensive frame or model
+  * ONCE, stores it, and every consumer reads the stored copy — this
+  * utility is that write-once/read-many contract with a single owner
+  * for the temp-dir lifecycle.
   *
-  * Two artifact shapes:
+  * Three artifact shapes:
   *
   *   - [[frame]]: a DataFrame artifact. First caller derives and
   *     writes parquet to a fresh temp dir; every call (including the
@@ -27,6 +25,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     where float determinism breaks silently; the round-trip spec
   *     pins bit-identity). The parquet float/double physical types
   *     store raw IEEE-754 bits, so the trip is exact by construction.
+  *   - [[value]]: a small driver-side value kept in memory only (the
+  *     gate literals: BM25 terms, LM tables, quotas).
   *
   * Keys are caller-chosen strings (convention: `"<what>:<sfDir>"`).
   * Storage is per-JVM temp space — the gate analog of the warehouse;
@@ -93,6 +93,11 @@ object ArtifactStore {
       })
       load(s.read.parquet(dir))
     }).asInstanceOf[T]
+
+  /** In-JVM memo: `mk` runs on the first call for `key`; every call
+    * returns its result. No disk copy. */
+  def value[T](key: String)(mk: => T): T =
+    models.getOrElseUpdate(key, mk).asInstanceOf[T]
 
   /** Write-once staged DIRECTORY: `build` populates a fresh temp dir
     * on the first call for `key`; every call returns the same path.

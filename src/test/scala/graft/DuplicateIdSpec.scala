@@ -78,7 +78,7 @@ class DuplicateIdSpec extends SparkSpec with SweepHarness {
   test("id-tie-sensitive derivations are run-over-run deterministic " +
     "on the conflicting corpus (seed sample, keep-min dedup)") {
     def canon(name: String): Seq[String] =
-      SparkEntry.queries(name)(spark, conflictDir).collect()
+      SparkEntry(name).run(spark, conflictDir).collect()
         .map(_.toString).sorted.toSeq
     // q57 consumes the hash-of-id-ordered k-means seed sample (two
     // rows tie on (xxhash64(id), id) when an id repeats); q16/q31 are

@@ -42,7 +42,7 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("star join broadcasts dimension sides and stays in codegen") {
-    val df = SparkEntry.queries("q09_join_star")(
+    val df = SparkEntry("q09_join_star").run(
       spark, "/root/testdata/sf0.001")
     // execute THIS queryExecution (collect, not a separate write plan)
     // so AQE finalizes stages and assigns codegen ids
@@ -67,7 +67,7 @@ class PlanAuditSpec extends SparkSpec {
 
   test("exact Jaccard join (q29) plans equi-joins only — no cartesian " +
     "and no nested-loop over the full corpus") {
-    val df = SparkEntry.queries("q29_jaccard_exact")(
+    val df = SparkEntry("q29_jaccard_exact").run(
       spark, "/root/testdata/sf0.001")
     df.collect()
     val plan = df.queryExecution.executedPlan.toString
@@ -79,7 +79,7 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("IVF top-k (q30) broadcasts the probed query side, no cartesian") {
-    val df = SparkEntry.queries("q30_ann_ivf")(
+    val df = SparkEntry("q30_ann_ivf").run(
       spark, "/root/testdata/sf0.001")
     df.collect()
     val plan = df.queryExecution.executedPlan.toString
@@ -89,7 +89,7 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("text stats run as one codegen'd projection, no shuffle") {
-    val plan = SparkEntry.queries("q25_text_quality")(
+    val plan = SparkEntry("q25_text_quality").run(
       spark, "/root/testdata/sf0.001")
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), s"unexpected shuffle in:\n$plan")
@@ -99,7 +99,7 @@ class PlanAuditSpec extends SparkSpec {
 
   test("deterministic sample (q32) is a map-only pushed filter — " +
     "no shuffle, no UDF") {
-    val plan = SparkEntry.queries("q32_det_sample")(
+    val plan = SparkEntry("q32_det_sample").run(
       spark, "/root/testdata/sf0.001")
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), s"unexpected shuffle in:\n$plan")
@@ -109,7 +109,7 @@ class PlanAuditSpec extends SparkSpec {
 
   test("vocabulary top-k (q33) ranks via TakeOrdered, never a global " +
     "sort of the vocabulary") {
-    val df = SparkEntry.queries("q33_vocab_topk")(
+    val df = SparkEntry("q33_vocab_topk").run(
       spark, "/root/testdata/sf0.001")
     df.collect()
     val plan = df.queryExecution.executedPlan.toString
@@ -124,7 +124,7 @@ class PlanAuditSpec extends SparkSpec {
   test("bm25 (q75) broadcasts the term table, reuses the dl exchange " +
     "for the L scalar, tokenizes the corpus at most twice, and cuts " +
     "top-k via TakeOrdered") {
-    val df = SparkEntry.queries("q75_bm25")(spark, "/root/testdata/sf0.001")
+    val df = SparkEntry("q75_bm25").run(spark, "/root/testdata/sf0.001")
     df.collect()
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"), s"no BHJ in:\n$plan")
@@ -146,7 +146,7 @@ class PlanAuditSpec extends SparkSpec {
 
   test("k-term conjunctive search (q74) broadcasts the k-term pick " +
     "into the postings join") {
-    val df = SparkEntry.queries("q74_conjunctive_k")(
+    val df = SparkEntry("q74_conjunctive_k").run(
       spark, "/root/testdata/sf0.001")
     df.collect()
     val plan = df.queryExecution.executedPlan.toString
@@ -157,7 +157,7 @@ class PlanAuditSpec extends SparkSpec {
   test("phrase search from the positional index (q86) joins posting " +
     "frames on the doc id — equi-joins only, no cartesian, no " +
     "per-doc window") {
-    val df = SparkEntry.queries("q86_phrase_indexed")(
+    val df = SparkEntry("q86_phrase_indexed").run(
       spark, "/root/testdata/sf0.001")
     df.collect()
     val plan = df.queryExecution.executedPlan.toString
@@ -169,7 +169,7 @@ class PlanAuditSpec extends SparkSpec {
 
   test("proximity search (q87) likewise: equi-joins on the doc id, " +
     "the occurrence count a pure array expression") {
-    val df = SparkEntry.queries("q87_proximity_search")(
+    val df = SparkEntry("q87_proximity_search").run(
       spark, "/root/testdata/sf0.001")
     df.collect()
     val plan = df.queryExecution.executedPlan.toString
@@ -181,7 +181,7 @@ class PlanAuditSpec extends SparkSpec {
   test("positional index (q85) aggregates with map-side partials and " +
     "never collects a term's corpus-wide list into one buffer row " +
     "per token (one output row per (token, doc))") {
-    val df = SparkEntry.queries("q85_positional_index")(
+    val df = SparkEntry("q85_positional_index").run(
       spark, "/root/testdata/sf0.001")
     df.collect()
     val plan = df.queryExecution.executedPlan.toString
@@ -197,7 +197,7 @@ class PlanAuditSpec extends SparkSpec {
     "partials combine map-side") {
     for (q <- Seq("q88_unigram_surprisal", "q89_bigram_surprisal",
         "q90_moore_lewis")) {
-      val df = SparkEntry.queries(q)(spark, "/root/testdata/sf0.001")
+      val df = SparkEntry(q).run(spark, "/root/testdata/sf0.001")
       df.collect()
       val plan = df.queryExecution.executedPlan.toString
       assert(plan.contains("BroadcastHashJoin"), s"$q: no BHJ in:\n$plan")
@@ -211,7 +211,7 @@ class PlanAuditSpec extends SparkSpec {
 
   test("DSIR scoring (q92) is ONE shuffle-free codegen'd projection — " +
     "no join, no explode-aggregate, no exchange of any kind") {
-    val df = SparkEntry.queries("q92_dsir")(spark, "/root/testdata/sf0.001")
+    val df = SparkEntry("q92_dsir").run(spark, "/root/testdata/sf0.001")
     df.collect()
     val plan = df.queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), s"q92: shuffle in:\n$plan")
@@ -223,7 +223,7 @@ class PlanAuditSpec extends SparkSpec {
 
   test("leakage-safe split (q93) is one equi-join + a map-side hash " +
     "predicate — no window, no cartesian") {
-    val df = SparkEntry.queries("q93_leakage_split")(
+    val df = SparkEntry("q93_leakage_split").run(
       spark, "/root/testdata/sf0.001")
     df.collect()
     val plan = df.queryExecution.executedPlan.toString
@@ -236,7 +236,7 @@ class PlanAuditSpec extends SparkSpec {
   test("temperature mix (q94) keeps the q60 two-phase shape: the ONLY " +
     "exchange is the per-stratum merge over heap-pruned rows, quotas " +
     "ride a literal CASE (no quota-table join)") {
-    val df = SparkEntry.queries("q94_temperature_mix")(
+    val df = SparkEntry("q94_temperature_mix").run(
       spark, "/root/testdata/sf0.001")
     df.collect()
     val plan = df.queryExecution.executedPlan.toString
@@ -248,7 +248,7 @@ class PlanAuditSpec extends SparkSpec {
   test("duplicated-span coverage (q95) windows PER DOCUMENT (always a " +
     "PARTITION BY), joins occurrences to dup grams hash/sort-based, " +
     "and aggregates with map-side partials") {
-    val df = SparkEntry.queries("q95_dup_coverage")(
+    val df = SparkEntry("q95_dup_coverage").run(
       spark, "/root/testdata/sf0.001")
     df.collect()
     // every Window node must carry a non-empty partition spec — a
@@ -271,7 +271,7 @@ class PlanAuditSpec extends SparkSpec {
   test("hybrid RRF fusion (q98) never re-reads the corpus after the " +
     "rankings: no cartesian, no global unkeyed aggregation of corpus " +
     "rows — the fused frame is union + one hash agg + TakeOrdered") {
-    val df = SparkEntry.queries("q98_hybrid_rrf")(
+    val df = SparkEntry("q98_hybrid_rrf").run(
       spark, "/root/testdata/sf0.001")
     df.collect()
     val plan = df.queryExecution.executedPlan.toString
@@ -291,7 +291,7 @@ class PlanAuditSpec extends SparkSpec {
   test("index forget (q99) maintains via equi-joins only (token and " +
     "df-window update), with map-side partial aggregation and no " +
     "nested loop anywhere") {
-    val df = SparkEntry.queries("q99_index_forget")(
+    val df = SparkEntry("q99_index_forget").run(
       spark, "/root/testdata/sf0.001")
     df.collect()
     val plan = df.queryExecution.executedPlan.toString
@@ -304,7 +304,7 @@ class PlanAuditSpec extends SparkSpec {
   test("PPS sample (q106) draws via the range-shuffle prefix sum — " +
     "NO window anywhere (the q37 contract); the only nested-loop " +
     "input is the broadcast 1-row totals frame") {
-    val df = SparkEntry.queries("q106_pps_sample")(
+    val df = SparkEntry("q106_pps_sample").run(
       spark, "/root/testdata/sf0.001")
     df.collect()
     val ws = df.queryExecution.optimizedPlan.collect {
@@ -318,7 +318,7 @@ class PlanAuditSpec extends SparkSpec {
 
   test("per-group percentiles (q104) rank under a KEYED window only; " +
     "rollup report (q105) is join-free with map-side partials") {
-    val d104 = SparkEntry.queries("q104_group_percentiles")(
+    val d104 = SparkEntry("q104_group_percentiles").run(
       spark, "/root/testdata/sf0.001")
     d104.collect()
     val ws = d104.queryExecution.optimizedPlan.collect {
@@ -326,7 +326,7 @@ class PlanAuditSpec extends SparkSpec {
     }
     assert(ws.nonEmpty && ws.forall(_.partitionSpec.nonEmpty),
       s"q104: unkeyed window in:\n${d104.queryExecution.optimizedPlan}")
-    val d105 = SparkEntry.queries("q105_corpus_rollup")(
+    val d105 = SparkEntry("q105_corpus_rollup").run(
       spark, "/root/testdata/sf0.001")
     d105.collect()
     val p105 = d105.queryExecution.executedPlan.toString
@@ -350,7 +350,7 @@ class PlanAuditSpec extends SparkSpec {
       val r = new scala.util.Random(i % 150)
       (i, Seq.fill(20)(s"w${r.nextInt(30)}").mkString(" "))
     }.toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
-    val df = SparkEntry.queries("q110_gram_novelty")(spark, dir)
+    val df = SparkEntry("q110_gram_novelty").run(spark, dir)
     df.collect()
     val plan = df.queryExecution.executedPlan
     val gens = Aqe.collect(plan) { case g: GenerateExec => g }
@@ -379,7 +379,7 @@ class PlanAuditSpec extends SparkSpec {
   test("collocations (q108) rank via TakeOrdered over vocab-sized " +
     "equi-joins — no window, no cartesian; novelty (q110) joins " +
     "without windows and aggregates with map-side partials") {
-    val d108 = SparkEntry.queries("q108_collocations")(
+    val d108 = SparkEntry("q108_collocations").run(
       spark, "/root/testdata/sf0.001")
     d108.collect()
     val w108 = d108.queryExecution.optimizedPlan.collect {
@@ -391,7 +391,7 @@ class PlanAuditSpec extends SparkSpec {
     assert(p108.contains("TakeOrderedAndProject"),
       s"q108: no TakeOrdered in:\n$p108")
     assert(!p108.contains("CartesianProduct"), s"q108: cartesian:\n$p108")
-    val d110 = SparkEntry.queries("q110_gram_novelty")(
+    val d110 = SparkEntry("q110_gram_novelty").run(
       spark, "/root/testdata/sf0.001")
     d110.collect()
     val w110 = d110.queryExecution.optimizedPlan.collect {
@@ -404,7 +404,7 @@ class PlanAuditSpec extends SparkSpec {
     assert(p110.contains("partial_"), s"q110: no partial agg in:\n$p110")
     // per-group top-k (q111): the two-phase partials replace the
     // oracle's keyed ROW_NUMBER — no window node at all
-    val d111 = SparkEntry.queries("q111_top_tokens_by_group")(
+    val d111 = SparkEntry("q111_top_tokens_by_group").run(
       spark, "/root/testdata/sf0.001")
     d111.collect()
     val w111 = d111.queryExecution.optimizedPlan.collect {
@@ -414,7 +414,7 @@ class PlanAuditSpec extends SparkSpec {
       s"q111: window in:\n${d111.queryExecution.optimizedPlan}")
     // weighted sparse pairs (q112): AllPairs equi-joins on the term
     // only, TakeOrdered cut — no window, no cartesian
-    val d112 = SparkEntry.queries("q112_tfidf_pairs")(
+    val d112 = SparkEntry("q112_tfidf_pairs").run(
       spark, "/root/testdata/sf0.001")
     d112.collect()
     val w112 = d112.queryExecution.optimizedPlan.collect {
@@ -427,7 +427,7 @@ class PlanAuditSpec extends SparkSpec {
       s"q112: no TakeOrdered in:\n$p112")
     assert(!p112.contains("CartesianProduct"), s"q112: cartesian:\n$p112")
     // contamination share (q113): equi-joins only, no window
-    val d113 = SparkEntry.queries("q113_ref_overlap")(
+    val d113 = SparkEntry("q113_ref_overlap").run(
       spark, "/root/testdata/sf0.001")
     d113.collect()
     val w113 = d113.queryExecution.optimizedPlan.collect {
@@ -442,7 +442,7 @@ class PlanAuditSpec extends SparkSpec {
   test("histogram percentile sketch (q109): the one unkeyed window " +
     "runs over the POST-AGGREGATION bucket frame (<= 65 rows by " +
     "construction), never the corpus") {
-    val d109 = SparkEntry.queries("q109_hist_percentiles")(
+    val d109 = SparkEntry("q109_hist_percentiles").run(
       spark, "/root/testdata/sf0.001")
     d109.collect()
     val ws = d109.queryExecution.optimizedPlan.collect {
@@ -463,7 +463,7 @@ class PlanAuditSpec extends SparkSpec {
 
   test("interval-overlap join (q103) is a hash equi-join on the " +
     "bucket id — never a nested loop over session pairs") {
-    val df = SparkEntry.queries("q103_interval_join")(
+    val df = SparkEntry("q103_interval_join").run(
       spark, "/root/testdata/sf0.001")
     df.collect()
     val plan = df.queryExecution.executedPlan.toString
@@ -475,7 +475,7 @@ class PlanAuditSpec extends SparkSpec {
   test("one-copy span dedup (q102) windows PER DOCUMENT only (the " +
     "canonical pick is an aggregation, never a per-gram sort), joins " +
     "hash/sort-based, map-side partials present") {
-    val df = SparkEntry.queries("q102_span_dedup")(
+    val df = SparkEntry("q102_span_dedup").run(
       spark, "/root/testdata/sf0.001")
     df.collect()
     val ws = df.queryExecution.optimizedPlan.collect {
@@ -494,7 +494,7 @@ class PlanAuditSpec extends SparkSpec {
   test("positional forget (q101) maintains via equi-joins only, " +
     "aggregates with map-side partials, no nested loop, and its " +
     "windows (if any) are always keyed") {
-    val df = SparkEntry.queries("q101_positional_forget")(
+    val df = SparkEntry("q101_positional_forget").run(
       spark, "/root/testdata/sf0.001")
     df.collect()
     val plan = df.queryExecution.executedPlan.toString
@@ -540,10 +540,10 @@ class PlanAuditSpec extends SparkSpec {
     // before any timing by Bench and Plans: build it here with one
     // untimed run of the entry, so the fused side reads the same stored
     // frame whether or not an earlier test already built it.
-    SparkEntry.queries("q117_curation_v2")(spark, sfDir).collect()
+    SparkEntry("q117_curation_v2").run(spark, sfDir).collect()
     graft.llm.Dedup.releaseCaches()
     val (df, fusedBytes) =
-      measure(SparkEntry.queries("q117_curation_v2")(spark, sfDir))
+      measure(SparkEntry("q117_curation_v2").run(spark, sfDir))
     graft.llm.Dedup.releaseCaches()
     val plan = df.queryExecution.executedPlan.toString
     // all census consumers hang off ONE repartition(gram) exchange:
@@ -592,7 +592,7 @@ class PlanAuditSpec extends SparkSpec {
   test("index insert (q118) maintains via equi-joins only — no " +
     "cartesian, no nested loop, map-side partials — and its per-token " +
     "update never windows") {
-    val df = SparkEntry.queries("q118_index_insert")(
+    val df = SparkEntry("q118_index_insert").run(
       spark, "/root/testdata/sf0.001")
     df.collect()
     val plan = df.queryExecution.executedPlan.toString
@@ -608,7 +608,7 @@ class PlanAuditSpec extends SparkSpec {
 
   test("positional insert (q119): equi-joins only, keyed or absent " +
     "windows, no cartesian") {
-    val df = SparkEntry.queries("q119_positional_insert")(
+    val df = SparkEntry("q119_positional_insert").run(
       spark, "/root/testdata/sf0.001")
     df.collect()
     val plan = df.queryExecution.executedPlan.toString
@@ -626,7 +626,7 @@ class PlanAuditSpec extends SparkSpec {
     "engine — hash equi-joins on the chunk, never a fingerprint " +
     "cross product") {
     Seq("q120_image_near_dedup", "q121_audio_near_dedup").foreach { q =>
-      val df = SparkEntry.queries(q)(spark, "/root/testdata/sf0.001")
+      val df = SparkEntry(q).run(spark, "/root/testdata/sf0.001")
       df.collect()
       val plan = df.queryExecution.executedPlan.toString
       assert(!plan.contains("CartesianProduct"), s"$q: cartesian in:\n$plan")
@@ -649,13 +649,13 @@ class PlanAuditSpec extends SparkSpec {
     "clustering inline") {
     val sfDir = "/root/testdata/sf0.001"
     // first consumer builds the artifact (derive + parquet write)...
-    SparkEntry.queries("q65_dup_profile")(spark, sfDir).collect()
+    SparkEntry("q65_dup_profile").run(spark, sfDir).collect()
     graft.llm.Dedup.releaseCaches()
     // ...every later consumer's plan must READ it: the losers branch
     // is a FileScan of the artifact path, not a MinHash/CC subtree
     Seq("q66_curation_pipeline", "q93_leakage_split",
         "q117_curation_v2", "q124_curation_v3").foreach { q =>
-      val df = SparkEntry.queries(q)(spark, sfDir)
+      val df = SparkEntry(q).run(spark, sfDir)
       df.collect()
       graft.llm.Dedup.releaseCaches()
       val plan = df.queryExecution.executedPlan.toString
@@ -672,7 +672,7 @@ class PlanAuditSpec extends SparkSpec {
     Seq("q95_dup_coverage" -> "graft-span-census-",
         "q102_span_dedup" -> "graft-span-census-").foreach {
       case (q, marker) =>
-        val df = SparkEntry.queries(q)(spark, sfDir)
+        val df = SparkEntry(q).run(spark, sfDir)
         df.collect()
         graft.llm.Dedup.releaseCaches()
         val plan = df.queryExecution.executedPlan.toString
@@ -685,7 +685,7 @@ class PlanAuditSpec extends SparkSpec {
     "shared by its consumers (quality filter + novelty census + " +
     "roster) instead of re-executing the scrub per consumer; no " +
     "cartesian") {
-    val df = SparkEntry.queries("q124_curation_v3")(
+    val df = SparkEntry("q124_curation_v3").run(
       spark, "/root/testdata/sf0.001")
     df.collect()
     graft.llm.Dedup.releaseCaches()
@@ -707,7 +707,7 @@ class PlanAuditSpec extends SparkSpec {
   test("CMS forget (q100) is two bounded counter aggregations and one " +
     "register-wise merge — state never exceeds depth×width rows, no " +
     "joins at all") {
-    val df = SparkEntry.queries("q100_cms_forget")(
+    val df = SparkEntry("q100_cms_forget").run(
       spark, "/root/testdata/sf0.001")
     val out = df.collect()
     assert(out.length <= 4 * 1024, s"q100: ${out.length} registers")

@@ -65,8 +65,9 @@ trait SweepHarness { self: SparkSpec =>
     val graceless = scala.collection.mutable.ArrayBuffer.empty[String]
     val loud = scala.collection.mutable.Set.empty[String]
     val t0 = System.nanoTime()
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      try { fn(spark, dir).collect(); () }
+    SparkEntry.selected(Nil).foreach { e =>
+      val name = e.name
+      try { e.run(spark, dir).collect(); () }
       catch {
         case e: Throwable => rootCause(e) match {
           case iae: IllegalArgumentException

@@ -65,11 +65,12 @@ class TimezoneParitySpec extends SparkSpec with SweepHarness {
     val orig = spark.conf.get("spark.sql.session.timeZone")
     val mismatched = scala.collection.mutable.ArrayBuffer.empty[String]
     try {
-      SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+      SparkEntry.selected(Nil).foreach { e =>
+        val name = e.name
         spark.conf.set("spark.sql.session.timeZone", "UTC")
-        val utc = outcome(fn, dir)
+        val utc = outcome(e.run, dir)
         spark.conf.set("spark.sql.session.timeZone", "Asia/Kolkata")
-        val ist = outcome(fn, dir)
+        val ist = outcome(e.run, dir)
         if (utc != ist) {
           val detail = (utc, ist) match {
             case (Right(a), Right(b)) =>

@@ -146,6 +146,36 @@ class PiiForgetSpec extends SparkSpec {
     }), s"residual PII: $after")
   }
 
+  test("scrubTable leaves no detected PII in any file under the table, " +
+    "version store included") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-pii-")
+    // uncompressed parquet and plain JSON lines, so a surviving copy of
+    // a PII value shows in the file bytes
+    rows.toDF("doc_id", "text").repartition(2).write
+      .option("compression", "none").parquet(s"$dir/p")
+    rows.toDF("doc_id", "text").repartition(2).write
+      .option("compression", "none").json(s"$dir/j")
+    val pEvents = PiiForget.scrubTable(spark, "pii-purge-p",
+      spark.read.parquet(s"$dir/p"), "text")
+    val jEvents = PiiForget.scrubTable(spark, "pii-purge-j",
+      spark.read.json(s"$dir/j"), "text", DataFormat.JsonLines)
+    val events = pEvents ++ jEvents
+    assert(events.size >= 2 &&
+      events.forall(_.eventName == JobEventName.ObjectUpdated),
+      events.map(e => (e.eventName, e.error)).mkString(","))
+    val files = java.nio.file.Files.walk(dir).iterator().asScala
+      .filter(java.nio.file.Files.isRegularFile(_)).toList
+    val leaks = files.flatMap { f =>
+      val text = new String(java.nio.file.Files.readAllBytes(f),
+        java.nio.charset.StandardCharsets.ISO_8859_1)
+      PiiScrub.Detectors.collect { case (kind, p, _)
+        if java.util.regex.Pattern.compile(p).matcher(text).find() =>
+        s"${dir.relativize(f)}: $kind"
+      }
+    }
+    assert(leaks.isEmpty, s"PII left on disk:\n${leaks.mkString("\n")}")
+  }
+
   test("scrubTable takes a DOTTED nested column: the Find dot-path and " +
     "the task-side scrub path resolve the same leaf") {
     val dir = java.nio.file.Files.createTempDirectory("graft-pii-")
