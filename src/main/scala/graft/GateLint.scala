@@ -94,9 +94,8 @@ object GateLint {
   def oracleViolations(name: String, sql: String): Seq[String] =
     if (allowedOracles.contains(name)) Seq.empty
     else {
-      // Locale.ROOT: SQL keyword matching, not linguistic case (★r19
-      // default-locale sweep — "DISTINCT" lowercases to "dıstınct" on
-      // a tr-TR JVM)
+      // Locale.ROOT: SQL keyword matching, not linguistic case
+      // ("DISTINCT" lowercases to "dıstınct" on a tr-TR JVM)
       val lower = sql.toLowerCase(java.util.Locale.ROOT)
       // match on the LOWERED string so offsets index the same string
       // castEncloses slices — lowercasing can change length for

@@ -201,10 +201,12 @@ object Finder {
         val cast = casts.lazyZip(rawVals).map {
           case ((toType, render, toScala), raw) =>
             val v = toType.eval(InternalRow(UTF8String.fromString(raw)))
+            // the message names the queue item and the column types,
+            // never the value: it lands in event-log `error` fields
             if (raw != null && v == null)
               throw new MatchIdCastingError(
-                s"Match id ${rawVals.mkString(",")} (item $id) " +
-                  s"cannot be cast to types ${g.types.mkString(",")}")
+                s"Match id of item $id cannot be cast to types " +
+                  g.types.mkString(","))
             (toScala(v), render.eval(InternalRow(v)))
         }
         val parts = cast.map(_._2)

@@ -24,12 +24,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * either input is null — and null on a LENGTH MISMATCH or a null
   * ELEMENT, because that is what the builtin composition yields
   * (`zip_with` pads the shorter side with nulls; a null product folds
-  * the aggregate to NULL). ★r19 dimension-drift sweep: the kernel
-  * previously clamped to the shorter array, which DISAGREED with its
-  * own "matches the composition" contract and with the int8 path —
-  * a truncated corrupt vector got a valid-looking prefix cosine and
-  * could rank as a nearest neighbor, where every zip_with-scored path
-  * already excluded it. A mismatched pair has no cosine; NULL flows
+  * the aggregate to NULL). Clamping to the shorter array would
+  * DISAGREE with its own "matches the composition" contract and with
+  * the int8 path — a truncated corrupt vector would get a
+  * valid-looking prefix cosine and could rank as a nearest neighbor,
+  * where every zip_with-scored path excludes it. A mismatched pair has no cosine; NULL flows
   * into [[graft.llm.Similarity.rankTopK]]'s central exclusion and
   * every `>= threshold` pair filter. The null-element check is emitted
   * only when an input's array type declares containsNull — clean

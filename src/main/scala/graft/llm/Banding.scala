@@ -64,9 +64,8 @@ object Banding {
     * `observe()` metrics arrive via a QueryExecutionListener, which
     * fires ASYNCHRONOUSLY after the triggering action returns — on a
     * loaded bus (a long suite run) the records can trail the collect
-    * by seconds, so an immediate drain races (★r19: one such flake in
-    * four same-code suite runs). Polls until at least `minRecords`
-    * arrive or the deadline passes, returning whatever arrived — the
+    * by seconds, so an immediate drain races. Polls until at least
+    * `minRecords` arrive or the deadline passes, returning whatever arrived — the
     * caller's assertion stays the truth test. */
   def awaitAudits(minRecords: Int,
                   timeoutMs: Long = 30000L): Seq[BandAudit] = {

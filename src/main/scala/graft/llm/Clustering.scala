@@ -65,14 +65,13 @@ object Clustering {
     require(centroids.forall(_.length == centroids.head.length),
       "centroids must share one dimension, got lengths " +
         centroids.map(_.length).distinct.mkString(","))
-    // non-finite vectors take NULL cluster_id on BOTH branches (★r18
-    // numeric-pathology sweep), joining the null-vector convention: a
-    // NaN/Inf vector's sims are all NaN, NaN compares greatest AND
-    // equal to itself under Spark's total order, so the expression
-    // argmax "assigned" it to cluster 0 — a directionless corrupt
-    // vector must not land in (and skew the consumers of) a real
-    // cluster. WRONG-LENGTH vectors take NULL cluster_id too (★r19
-    // dimension-drift sweep): on the expression branch that is the
+    // non-finite vectors take NULL cluster_id on BOTH branches,
+    // joining the null-vector convention: a NaN/Inf vector's sims are
+    // all NaN, NaN compares greatest AND equal to itself under Spark's
+    // total order, so a bare expression argmax would "assign" it to
+    // cluster 0 — a directionless corrupt vector must not land in (and
+    // skew the consumers of) a real cluster. WRONG-LENGTH vectors take
+    // NULL cluster_id too: on the expression branch that is the
     // kernel's own mismatch → NULL flowing through array_max /
     // array_position (both NULL-in NULL-out), on the UDF branch an
     // explicit length gate — the branches stay twins. Finite
@@ -107,7 +106,7 @@ object Clustering {
     * op-for-op (double accumulation in element order, `sqrt(na)*
     * sqrt(nb)` denominator, 0.0 on zero norm), strict `>` keeping the
     * FIRST max — the lower-index tie-break. PRECONDITION: `v.length ==
-    * cents(i).length` for every i (every caller length-gates, ★r19) —
+    * cents(i).length` for every i (every caller length-gates) —
     * a mismatched pair scores NaN, which never wins the strict `>`,
     * and an ALL-mismatch call would fall through to index 0. */
   private[llm] def nearestCentroid(v: Array[Float],
@@ -125,9 +124,9 @@ object Clustering {
   /** [[graft.functions.FloatVectorCosine]] arithmetic op-for-op:
     * double accumulation in element order, `sqrt(na)*sqrt(nb)`
     * denominator, 0.0 on zero norm. A LENGTH MISMATCH returns NaN —
-    * the closure-world analog of the kernel's NULL (★r19
-    * dimension-drift sweep; the old min-clip gave a truncated vector
-    * a valid-looking prefix cosine). Callers length-gate their rows,
+    * the closure-world analog of the kernel's NULL (a min-clip would
+    * give a truncated vector a valid-looking prefix cosine). Callers
+    * length-gate their rows,
     * so a NaN here marks a caller bug, and it can never win
     * [[nearestCentroid]]'s strict `>`. */
   private[llm] def cosineSim(v: Array[Float], cv: Array[Float]): Double = {
@@ -201,14 +200,13 @@ object Clustering {
     // deterministic centroid pick, and the former expression plan
     // dropped them by null propagation) — the closure must not NPE
     // on getSeq(null).toArray or abort the fit on a stray null id.
-    // Ids keep their ORIGINAL values (★r18, ADVICE r17: the RDD
-    // rewrite briefly narrowed accepted id types to Long/Int, which
-    // the former orderBy(idCol) path never required) — tie-breaks
+    // Ids keep their ORIGINAL values (any orderable id type is
+    // accepted, not just Long/Int) — tie-breaks
     // compare via [[cmpId]], a generic ordering over whatever
     // Comparable type the column yields (integrals fast-pathed as
     // Long, strings/decimals/dates via compareTo).
     // null-id, null-vector AND non-finite-vector rows are skipped
-    // (★r18: a NaN/Inf vector scores NaN against everything — as the
+    // (a NaN/Inf vector scores NaN against everything — as the
     // min-id seed it would poison every round's farthest pick)
     val rows = data.select(col(idCol), col(vecCol)).rdd.flatMap { r =>
       if (r.isNullAt(0) || r.isNullAt(1) ||
@@ -229,10 +227,10 @@ object Clustering {
       }
     }.persist()
     try {
-      // modal vector length (★r19 dimension-drift sweep): farthest-
-      // first LOVED a wrong-length vector — its clamped prefix cosine
-      // made it look far from everything chosen, so one truncated row
-      // was near-certain to be picked as a seed and poison the fit.
+      // modal vector length: farthest-first would LOVE a wrong-length
+      // vector — a clamped prefix cosine makes it look far from
+      // everything chosen, so one truncated row would be near-certain
+      // to be picked as a seed and poison the fit.
       // The fit's dimension is the corpus's MODAL length (count desc,
       // length asc tie-break — deterministic for any partitioning),
       // and rows of any other length contribute nothing, matching the
@@ -323,13 +321,13 @@ object Clustering {
       val parts = data.sparkSession.sparkContext.defaultParallelism
       // null vectors contribute to no (cluster, dim) sum — the former
       // posexplode aggregation dropped them; skip, don't NPE. Same
-      // whole-vector exclusion for NON-FINITE elements (★r18
-      // numeric-pathology sweep): BigDecimal.valueOf(NaN/Inf) throws
+      // whole-vector exclusion for NON-FINITE elements:
+      // BigDecimal.valueOf(NaN/Inf) throws
       // NumberFormatException, so ONE corrupt vector in 10^11 killed
       // the entire fit (and the former ANSI-on decimal cast crashed
       // on it too — there is no silent precedent to preserve). And the
-      // same exclusion for a WRONG-LENGTH vector (★r19 dimension-drift
-      // sweep): the fold used to min-clip it, silently skewing the
+      // same exclusion for a WRONG-LENGTH vector: min-clipping it
+      // would silently skew the
       // prefix dims of whichever centroid its clamped prefix cosine
       // picked — a truncated encoder batch must contribute NOTHING,
       // matching the NULL cluster_id the assignment gives it.
@@ -338,7 +336,7 @@ object Clustering {
         else {
           // usability check on the row-backed seq BEFORE toArray:
           // toArray unboxes, turning a null element into 0.0f where
-          // finiteVec could no longer see it (★r19, ADVICE r18)
+          // finiteVec could no longer see it
           val s = r.getSeq[Float](0)
           if (Similarity.finiteVec(s) && s.length == dim)
             Iterator.single(s.toArray)

@@ -850,15 +850,6 @@ object Dedup {
       .map(r => r.getLong(0) -> (r.getLong(1) * scale).toLong).toMap
   }
 
-  /** Distinct shingle array straight from text, one linear pass (UDF —
-    * see [[shingleSet]] note on the quadratic SQL-expression form). */
-  def shinglesUdf(shingleLen: Int)
-      : org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf { (text: String) =>
-      import scala.jdk.CollectionConverters._
-      shingleSet(text, shingleLen).iterator().asScala.toArray
-    }
-
   /** Distinct 64-bit shingle hashes straight from text — the census
     * input of [[jaccardPairsExact]]: 8-byte shuffle keys instead of
     * n-char strings, no string array ever materialized. */

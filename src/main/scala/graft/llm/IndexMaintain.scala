@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.ArrayType
 
@@ -33,28 +33,41 @@ import org.apache.spark.sql.types.ArrayType
   * FORGET BATCH's vocabulary (the forget drivers already batch ids —
   * [[DedupForget]]'s bounded seam), the update itself is one
   * equi-join on `token`, and the crossing rebuild — usually empty —
-  * scans the remaining corpus ONCE restricted to the (collected,
-  * batch-vocabulary-bounded) crossing tokens, and is SKIPPED entirely
-  * when no overflow token crosses.
+  * runs the one build of its shape ([[invertedRows]] /
+  * [[positionalRows]]) over the remaining corpus restricted to the
+  * (collected, batch-vocabulary-bounded) crossing tokens, and is
+  * SKIPPED entirely when no overflow token crosses. Every full build,
+  * crossing rebuild and novel-token insert goes through those two
+  * builds, so all of them share one df window and one overflow rule.
   */
 object IndexMaintain {
 
-  /** [[TextStats.invertedIndex]] with the overflow contract: one row
-    * per token with df >= `minDf` — sorted distinct postings while
-    * df <= `maxDf`, NULL postings (exact df) above it. Buffer safety
-    * is the batch build's: only in-window tokens' lists are ever
-    * collected.
-    *
-    * Output: (`token`, `df`, `postings` sorted array | null). */
-  def indexWithOverflow(df: DataFrame, idCol: String, textCol: String,
-                        minDf: Long, maxDf: Long): DataFrame = {
+  /** Distinct (`idCol`, `token`) rows of `df` — the input of
+    * [[invertedRows]]. */
+  private[llm] def docTokens(df: DataFrame, idCol: String,
+                             textCol: String): DataFrame =
+    df.select(col(idCol), explode(TextStats.tokenArray(textCol))
+      .as("token")).distinct()
+
+  /** (`idCol`, `_pos0`, `token`) rows of `df`, `_pos0` the 0-based
+    * position in the token stream — the input of [[positionalRows]]. */
+  private[llm] def tokenPositions(df: DataFrame, idCol: String,
+                                  textCol: String): DataFrame =
+    df.select(col(idCol), posexplode(TextStats.tokenArray(textCol))
+      .as(Seq("_pos0", "token")))
+
+  /** The one inverted-index build. `docTok` holds distinct (`idCol`,
+    * `token`) rows, already restricted to the tokens to build. Output:
+    * one (`token`, `df`, `postings`) row per token with df >= `minDf`
+    * — the sorted document list while df <= `maxDf`; above it, with
+    * `overflow`, the exact df and NULL postings, else no row. Counts
+    * come first and only in-window tokens' lists are collected, so a
+    * stopword's corpus-sized list never enters an aggregation buffer. */
+  private[llm] def invertedRows(docTok: DataFrame, idCol: String,
+                                minDf: Long, maxDf: Long,
+                                overflow: Boolean): DataFrame = {
     require(minDf >= 1 && maxDf >= minDf,
       s"need 1 <= minDf <= maxDf; got $minDf, $maxDf")
-    val idType = df.schema(idCol).dataType
-    val docTok = df
-      .select(col(idCol), explode(filter(TextStats.tokens(col(textCol)),
-        t => length(t) > 0)).as("token"))
-      .distinct()
     val dfs = docTok.groupBy(col("token"))
       .agg(count(lit(1)).as("df"))
       .filter(col("df") >= minDf)
@@ -62,11 +75,50 @@ object IndexMaintain {
       .groupBy(col("token"), col("df"))
       .agg(sort_array(collect_list(col(idCol))).as("postings"))
       .select(col("token"), col("df"), col("postings"))
-    val overflow = dfs.filter(col("df") > maxDf)
+    if (!overflow) inWin
+    else inWin.unionByName(dfs.filter(col("df") > maxDf)
       .select(col("token"), col("df"),
-        lit(null).cast(ArrayType(idType)).as("postings"))
-    inWin.unionByName(overflow)
+        lit(null).cast(ArrayType(docTok.schema(idCol).dataType))
+          .as("postings")))
   }
+
+  /** The one positional-index build. `tokPos` holds (`idCol`, `_pos0`,
+    * `token`) rows, already restricted to the tokens to build. Output:
+    * one (`token`, `df`, idCol, `positions` sorted 1-based) row per
+    * (token, document) for tokens with `minDf` <= df <= `maxDf`; with
+    * `overflow`, one MARKER row (exact df, null id, null positions)
+    * per token above `maxDf`. Positions make (token, doc) rows
+    * non-distinct, so df counts distinct ids, not rows. */
+  private[llm] def positionalRows(tokPos: DataFrame, idCol: String,
+                                  minDf: Long, maxDf: Long,
+                                  overflow: Boolean): DataFrame = {
+    require(minDf >= 1 && maxDf >= minDf,
+      s"need 1 <= minDf <= maxDf; got $minDf, $maxDf")
+    val dfs = tokPos.groupBy(col("token"))
+      .agg(countDistinct(col(idCol)).as("df"))
+      .filter(col("df") >= minDf)
+    val inWin = tokPos.join(dfs.filter(col("df") <= maxDf), "token")
+      .groupBy(col("token"), col("df"), col(idCol))
+      .agg(sort_array(collect_list(col("_pos0") + lit(1)))
+        .as("positions"))
+      .select(col("token"), col("df"), col(idCol), col("positions"))
+    if (!overflow) inWin
+    else inWin.unionByName(dfs.filter(col("df") > maxDf)
+      .select(col("token"), col("df"),
+        lit(null).cast(tokPos.schema(idCol).dataType).as(idCol),
+        lit(null).cast(inWin.schema("positions").dataType)
+          .as("positions")))
+  }
+
+  /** [[TextStats.invertedIndex]] with the overflow contract: one row
+    * per token with df >= `minDf` — sorted distinct postings while
+    * df <= `maxDf`, NULL postings (exact df) above it.
+    *
+    * Output: (`token`, `df`, `postings` sorted array | null). */
+  def indexWithOverflow(df: DataFrame, idCol: String, textCol: String,
+                        minDf: Long, maxDf: Long): DataFrame =
+    invertedRows(docTokens(df, idCol, textCol), idCol, minDf, maxDf,
+      overflow = true)
 
   /** Forget for PER-ROW derived artifacts — PQ code frames
     * ([[Pq.encode]]), IVF-PQ (cell, codes) rows ([[IvfPq.encode]]),
@@ -92,6 +144,16 @@ object IndexMaintain {
     artifact.join(forgottenIds.select(col(idCol)).distinct(),
       Seq(idCol), "left_anti")
 
+  /** The overflow tokens of `touched` (one row each) that CROSS back
+    * into the df window — the one case an index cannot answer from its
+    * own state. A bounded driver collect (a subset of the batch's
+    * overflow vocabulary) that lets the rebuild be skipped when empty,
+    * the common case. */
+  private def crossingTokens(touched: DataFrame, overflowed: Column,
+                             maxDf: Long): Seq[String] =
+    touched.filter(overflowed && col("_ndf") <= maxDf)
+      .select(col("token")).collect().map(_.getString(0)).toSeq
+
   /** Apply a forget batch to an [[indexWithOverflow]] frame: returns
     * the index AS IF built on the corpus minus `forgotten` (exactly —
     * including overflow tokens that cross back into the df window,
@@ -107,22 +169,16 @@ object IndexMaintain {
     * `array_except` against the batch's per-token removed-id lists
     * (each bounded by the batch size); touched overflow tokens keep
     * their decremented df, except CROSSING ones (new df <= `maxDf`)
-    * whose postings rebuild via one remaining-corpus pass filtered to
-    * the collected crossing-token literals — a bounded driver collect
-    * (<= the batch's distinct overflow tokens, stopword-scale by
-    * construction) that lets the rebuild be skipped when empty, the
-    * common case. */
+    * whose postings rebuild via [[invertedRows]] over the remaining
+    * corpus restricted to the collected crossing tokens, skipped when
+    * none cross. */
   def forgetFromIndex(index: DataFrame, forgotten: DataFrame,
                       remaining: DataFrame, idCol: String,
                       textCol: String, minDf: Long, maxDf: Long)
       : DataFrame = {
     require(minDf >= 1 && maxDf >= minDf,
       s"need 1 <= minDf <= maxDf; got $minDf, $maxDf")
-    val remTok = forgotten
-      .select(col(idCol), explode(filter(TextStats.tokens(col(textCol)),
-        t => length(t) > 0)).as("token"))
-      .distinct()
-    val rem = remTok.groupBy(col("token"))
+    val rem = docTokens(forgotten, idCol, textCol).groupBy(col("token"))
       .agg(count(lit(1)).as("_rm"),
         sort_array(collect_list(col(idCol))).as("_rm_ids"))
     val joined = index.join(rem, Seq("token"), "left")
@@ -138,26 +194,14 @@ object IndexMaintain {
       .filter(col("postings").isNull && col("_ndf") > maxDf)
       .select(col("token"), col("_ndf").as("df"), col("postings"))
     val base = untouched.unionByName(updatedInWin).unionByName(stillOver)
-    // the one case the index cannot answer from its own state: an
-    // overflow token whose df fell into the window. Bounded collect —
-    // crossing tokens are a subset of the batch's overflow vocabulary
-    val crossing = touched
-      .filter(col("postings").isNull && col("_ndf") <= maxDf)
-      .select(col("token")).collect().map(_.getString(0)).toSeq
+    val crossing = crossingTokens(touched, col("postings").isNull, maxDf)
+    // a crossing token's remaining df is in the window by construction,
+    // so the rebuild has no overflow rows to add
     if (crossing.isEmpty) base
-    else {
-      val rebuilt = remaining
-        .select(col(idCol),
-          explode(filter(TextStats.tokens(col(textCol)),
-            t => length(t) > 0)).as("token"))
-        .filter(col("token").isin(crossing: _*))
-        .distinct()
-        .groupBy(col("token"))
-        .agg(count(lit(1)).as("df"),
-          sort_array(collect_list(col(idCol))).as("postings"))
-        .select(col("token"), col("df"), col("postings"))
-      base.unionByName(rebuilt)
-    }
+    else base.unionByName(invertedRows(
+      docTokens(remaining, idCol, textCol)
+        .filter(col("token").isin(crossing: _*)),
+      idCol, minDf, maxDf, overflow = false))
   }
 
   /** Apply an INSERT batch to an [[indexWithOverflow]] frame: returns
@@ -180,23 +224,15 @@ object IndexMaintain {
     *     crossing-down rebuild);
     *   - a token ABSENT from the index is the one case the index
     *     cannot answer alone when `minDf > 1`: its pre-insert df is
-    *     somewhere in [0, minDf-1] but not stored. With `minDf == 1`
-    *     absence means df == 0, so novel tokens build batch-locally
-    *     and the maintenance NEVER scans the corpus; with `minDf > 1`
-    *     the novel tokens (an anti-join — no driver collect, the
-    *     batch vocabulary can be large) rebuild via ONE corpus pass
-    *     restricted to them, skipped when the batch introduces no
-    *     unknown token. */
+    *     somewhere in [0, minDf-1] but not stored. See
+    *     [[withNovel]]. */
   def insertIntoIndex(index: DataFrame, inserted: DataFrame,
                       corpus: DataFrame, idCol: String, textCol: String,
                       minDf: Long, maxDf: Long): DataFrame = {
     require(minDf >= 1 && maxDf >= minDf,
       s"need 1 <= minDf <= maxDf; got $minDf, $maxDf")
     val postingsType = index.schema("postings").dataType
-    val addTok = inserted
-      .select(col(idCol), explode(filter(TextStats.tokens(col(textCol)),
-        t => length(t) > 0)).as("token"))
-      .distinct()
+    val addTok = docTokens(inserted, idCol, textCol)
     val add = addTok.groupBy(col("token"))
       .agg(count(lit(1)).as("_ad"),
         sort_array(collect_list(col(idCol))).as("_ad_ids"))
@@ -218,33 +254,27 @@ object IndexMaintain {
       .select(col("token"), col("_ndf").as("df"), col("postings"))
     val base = untouched.unionByName(stillIn).unionByName(crossedUp)
       .unionByName(stillOver)
-    val novel = add.join(index.select(col("token")),
-      Seq("token"), "left_anti")
-    if (minDf == 1L) {
-      // absence from the index proves pre-insert df == 0: novel
-      // tokens are fully described by the batch — no corpus scan
-      val novelRows = novel.select(col("token"), col("_ad").as("df"),
-        when(col("_ad") <= maxDf, col("_ad_ids"))
-          .otherwise(lit(null).cast(postingsType)).as("postings"))
-      base.unionByName(novelRows)
-    } else if (novel.isEmpty) base
+    withNovel(base, index, addTok, docTokens(corpus, idCol, textCol),
+      minDf)(invertedRows(_, idCol, minDf, maxDf, overflow = true))
+  }
+
+  /** `base` plus the rows `build` makes for the batch's NOVEL tokens
+    * (in the batch, absent from `index`). With `minDf == 1` absence
+    * proves the pre-insert df was 0, so they build from `batchRows`
+    * alone and the insert NEVER scans the corpus; with `minDf > 1`
+    * they build from `corpusRows` restricted to them (an anti-join —
+    * no driver collect, the batch vocabulary can be large), skipped
+    * when the batch brings no unknown token. */
+  private def withNovel(base: DataFrame, index: DataFrame,
+                        batchRows: DataFrame, corpusRows: => DataFrame,
+                        minDf: Long)
+                       (build: DataFrame => DataFrame): DataFrame = {
+    val novel = batchRows.select(col("token")).distinct()
+      .join(index.select(col("token")), Seq("token"), "left_anti")
+    if (minDf > 1L && novel.isEmpty) base
     else {
-      val tok = corpus
-        .select(col(idCol),
-          explode(filter(TextStats.tokens(col(textCol)),
-            t => length(t) > 0)).as("token"))
-        .join(novel.select(col("token")), Seq("token"), "left_semi")
-        .distinct()
-      val dfs = tok.groupBy(col("token")).agg(count(lit(1)).as("df"))
-        .filter(col("df") >= minDf)
-      val inWin = tok.join(dfs.filter(col("df") <= maxDf), "token")
-        .groupBy(col("token"), col("df"))
-        .agg(sort_array(collect_list(col(idCol))).as("postings"))
-        .select(col("token"), col("df"), col("postings"))
-      val over = dfs.filter(col("df") > maxDf)
-        .select(col("token"), col("df"),
-          lit(null).cast(postingsType).as("postings"))
-      base.unionByName(inWin).unionByName(over)
+      val src = if (minDf == 1L) batchRows else corpusRows
+      base.unionByName(build(src.join(novel, Seq("token"), "left_semi")))
     }
   }
 
@@ -261,41 +291,10 @@ object IndexMaintain {
     * Output: (`token`, `df`, idCol nullable, `positions` nullable). */
   def positionalIndexWithOverflow(df: DataFrame, idCol: String,
                                   textCol: String, minDf: Long,
-                                  maxDf: Long): DataFrame = {
-    require(minDf >= 1 && maxDf >= minDf,
-      s"need 1 <= minDf <= maxDf; got $minDf, $maxDf")
-    val idType = df.schema(idCol).dataType
-    val tokPos = df
-      .select(col(idCol), posexplode(filter(TextStats.tokens(col(textCol)),
-        t => length(t) > 0)).as(Seq("_pos0", "token")))
-    val dfs = tokPos.groupBy(col("token"))
-      .agg(countDistinct(col(idCol)).as("df"))
-      .filter(col("df") >= minDf)
-    val inWin = tokPos.join(dfs.filter(col("df") <= maxDf), "token")
-      .groupBy(col("token"), col("df"), col(idCol))
-      .agg(sort_array(collect_list(col("_pos0") + lit(1)))
-        .as("positions"))
-      .select(col("token"), col("df"), col(idCol), col("positions"))
-    val overflow = dfs.filter(col("df") > maxDf)
-      .select(col("token"), col("df"),
-        lit(null).cast(idType).as(idCol),
-        lit(null).cast(inWin.schema("positions").dataType)
-          .as("positions"))
-    inWin.unionByName(overflow)
-  }
+                                  maxDf: Long): DataFrame =
+    positionalRows(tokenPositions(df, idCol, textCol), idCol, minDf,
+      maxDf, overflow = true)
 
-  /** Apply a forget batch to a [[positionalIndexWithOverflow]] frame:
-    * the index AS IF built on the corpus minus the forgotten docs.
-    * Unlike [[forgetFromIndex]] no `array_except` is needed — a
-    * document's positions live in their own row, which the anti-join
-    * drops whole — but the per-token `df` column must decrement on
-    * every surviving row of a touched token, tokens falling below
-    * `minDf` drop entirely, and marker tokens CROSSING back under
-    * `maxDf` rebuild their position rows via the same targeted
-    * remaining-corpus pass (bounded collect of the crossing tokens,
-    * skipped when empty). `forgotten` must be the deleted rows (id +
-    * text), `remaining` the corpus after deletion — the
-    * [[forgetFromIndex]] contract. */
   /** Apply an INSERT batch to a [[positionalIndexWithOverflow]] frame:
     * the index AS IF built on the corpus plus `inserted` — the
     * [[insertIntoIndex]] crossing story on the positional shape. A
@@ -304,10 +303,8 @@ object IndexMaintain {
     * increments on every surviving row of a touched token; an
     * in-window token crossing UP drops its position rows for one
     * marker row (pure projection — the inverse crossing needs no
-    * rebuild); a marker token stays a marker. Novel tokens build
-    * batch-locally when `minDf == 1` (absence proves df == 0) and via
-    * one corpus pass restricted to them otherwise (anti-join bounded,
-    * skipped when none). Contracts as [[insertIntoIndex]]: new ids
+    * rebuild); a marker token stays a marker. Novel tokens build as
+    * in [[withNovel]]. Contracts as [[insertIntoIndex]]: new ids
     * only, `corpus` is the post-insert corpus. */
   def insertIntoPositionalIndex(index: DataFrame, inserted: DataFrame,
                                 corpus: DataFrame, idCol: String,
@@ -317,11 +314,8 @@ object IndexMaintain {
       s"need 1 <= minDf <= maxDf; got $minDf, $maxDf")
     val idType = index.schema(idCol).dataType
     val posType = index.schema("positions").dataType
-    val batchPos = inserted
-      .select(col(idCol),
-        posexplode(filter(TextStats.tokens(col(textCol)),
-          t => length(t) > 0)).as(Seq("_pos0", "token")))
-      .groupBy(col("token"), col(idCol))
+    val batchTokPos = tokenPositions(inserted, idCol, textCol)
+    val batchPos = batchTokPos.groupBy(col("token"), col(idCol))
       .agg(sort_array(collect_list(col("_pos0") + lit(1))).as("_bpos"))
     val add = batchPos.groupBy(col("token"))
       .agg(count(lit(1)).as("_ad"))
@@ -357,52 +351,30 @@ object IndexMaintain {
         col("_bpos").as("positions"))
     val base = untouched.unionByName(stayRows).unionByName(crossedUp)
       .unionByName(stillOver).unionByName(batchRows)
-    val novel = batchPos.join(index.select(col("token")).distinct(),
-      Seq("token"), "left_anti")
-    if (minDf == 1L) {
-      val ndf = novel.groupBy(col("token")).agg(count(lit(1)).as("df"))
-      val rows = novel.join(ndf.filter(col("df") <= maxDf), "token")
-        .select(col("token"), col("df"), col(idCol),
-          col("_bpos").as("positions"))
-      val markers = ndf.filter(col("df") > maxDf)
-        .select(col("token"), col("df"),
-          lit(null).cast(idType).as(idCol),
-          lit(null).cast(posType).as("positions"))
-      base.unionByName(rows).unionByName(markers)
-    } else if (novel.isEmpty) base
-    else {
-      val novelToks = novel.select(col("token")).distinct()
-      val tokPos = corpus
-        .select(col(idCol),
-          posexplode(filter(TextStats.tokens(col(textCol)),
-            t => length(t) > 0)).as(Seq("_pos0", "token")))
-        .join(novelToks, Seq("token"), "left_semi")
-      val dfs = tokPos.groupBy(col("token"))
-        .agg(countDistinct(col(idCol)).as("df"))
-        .filter(col("df") >= minDf)
-      val rows = tokPos.join(dfs.filter(col("df") <= maxDf), "token")
-        .groupBy(col("token"), col("df"), col(idCol))
-        .agg(sort_array(collect_list(col("_pos0") + lit(1)))
-          .as("positions"))
-        .select(col("token"), col("df"), col(idCol), col("positions"))
-      val markers = dfs.filter(col("df") > maxDf)
-        .select(col("token"), col("df"),
-          lit(null).cast(idType).as(idCol),
-          lit(null).cast(posType).as("positions"))
-      base.unionByName(rows).unionByName(markers)
-    }
+    withNovel(base, index, batchTokPos,
+      tokenPositions(corpus, idCol, textCol), minDf)(
+      positionalRows(_, idCol, minDf, maxDf, overflow = true))
   }
 
+  /** Apply a forget batch to a [[positionalIndexWithOverflow]] frame:
+    * the index AS IF built on the corpus minus the forgotten docs.
+    * Unlike [[forgetFromIndex]] no `array_except` is needed — a
+    * document's positions live in their own row, which the anti-join
+    * drops whole — but the per-token `df` column must decrement on
+    * every surviving row of a touched token, tokens falling below
+    * `minDf` drop entirely, and marker tokens CROSSING back under
+    * `maxDf` rebuild their position rows via [[positionalRows]] over
+    * the remaining corpus restricted to them (skipped when none
+    * cross). `forgotten` must be the deleted rows (id + text),
+    * `remaining` the corpus after deletion — the [[forgetFromIndex]]
+    * contract. */
   def forgetFromPositionalIndex(index: DataFrame, forgotten: DataFrame,
                                 remaining: DataFrame, idCol: String,
                                 textCol: String, minDf: Long,
                                 maxDf: Long): DataFrame = {
     require(minDf >= 1 && maxDf >= minDf,
       s"need 1 <= minDf <= maxDf; got $minDf, $maxDf")
-    val remCnt = forgotten
-      .select(col(idCol), explode(filter(TextStats.tokens(col(textCol)),
-        t => length(t) > 0)).as("token"))
-      .distinct()
+    val remCnt = docTokens(forgotten, idCol, textCol)
       .groupBy(col("token")).agg(count(lit(1)).as("_rm"))
     val fids = forgotten.select(col(idCol)).distinct()
     val joined = index.join(remCnt, Seq("token"), "left")
@@ -420,24 +392,12 @@ object IndexMaintain {
       .select(col("token"), col("_ndf").as("df"), col(idCol),
         col("positions"))
     val base = untouched.unionByName(touchedRows).unionByName(stillOver)
-    val crossing = touched
-      .filter(col(idCol).isNull && col("_ndf") <= maxDf)
-      .select(col("token")).collect().map(_.getString(0)).toSeq
+    val crossing = crossingTokens(touched, col(idCol).isNull, maxDf)
+    // in the window by construction, as in forgetFromIndex
     if (crossing.isEmpty) base
-    else {
-      val tokPos = remaining
-        .select(col(idCol),
-          posexplode(filter(TextStats.tokens(col(textCol)),
-            t => length(t) > 0)).as(Seq("_pos0", "token")))
-        .filter(col("token").isin(crossing: _*))
-      val dfs = tokPos.groupBy(col("token"))
-        .agg(countDistinct(col(idCol)).as("df"))
-      val rebuilt = tokPos.join(dfs, "token")
-        .groupBy(col("token"), col("df"), col(idCol))
-        .agg(sort_array(collect_list(col("_pos0") + lit(1)))
-          .as("positions"))
-        .select(col("token"), col("df"), col(idCol), col("positions"))
-      base.unionByName(rebuilt)
-    }
+    else base.unionByName(positionalRows(
+      tokenPositions(remaining, idCol, textCol)
+        .filter(col("token").isin(crossing: _*)),
+      idCol, minDf, maxDf, overflow = false))
   }
 }

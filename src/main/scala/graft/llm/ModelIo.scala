@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Parquet (de)serializers for the driver-side learned models —
   * k-means centroids, BPE merge lists, PQ codebooks, and the IVF-PQ
-  * model (★r16): the piece that turns the r15 in-JVM model caches
+  * model: the piece that turns the in-JVM model caches
   * into STORED artifacts, the same write-once/read-many contract the
   * frame artifacts already have. A 100 TB pipeline trains a model
   * once and every encode/search run loads it from storage — so the

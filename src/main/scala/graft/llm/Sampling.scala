@@ -87,8 +87,8 @@ object Sampling {
     * q' > q — quota changes never reshuffle what was already picked).
     * Strata absent from `quotas` are dropped (filtered before hashing
     * — excluded strata never heap); an EMPTY quota map (a
-    * corpus-derived quota table over an empty corpus, ★r18
-    * empty-corpus sweep) admits no stratum and yields the empty
+    * corpus-derived quota table over an empty corpus) admits no
+    * stratum and yields the empty
     * result, not an error. Same bounded-heap two-phase shape
     * as [[capSample]]; the quota map rides the closure and a literal
     * CASE, never a join. */
@@ -310,8 +310,8 @@ object Sampling {
     * oversized units); zero-weight documents are never drawn — and a
     * corpus whose TOTAL weight is zero (empty, or all-zero weights)
     * draws nothing: the empty frame, not an error, exactly what the
-    * oracle's grid join produces on the same input (★r18 empty-corpus
-    * sweep — a pruned-to-empty partition must sample as zero rows).
+    * oracle's grid join produces on the same input (a
+    * pruned-to-empty partition must sample as zero rows).
     * All arithmetic BIGINT (bound: W·k < 9.2e18), so any engine
     * replays the identical draw.
     *

@@ -320,35 +320,21 @@ object TextStats {
     * whose posting lists are corpus-sized — the two knobs that bound
     * every posting list.
     *
-    * Shape: explode → per-(token, doc) distinct → one token
-    * aggregation (`collect_set` + `sort_array` — deterministic
-    * postings for any partitioning). Posting-list memory per
-    * aggregation buffer is capped by `maxDf` BY CONSTRUCTION only
-    * after the df filter — the df computation itself is counts, so
-    * the guard orders: count first, filter, then collect only
+    * Shape: explode → per-(token, doc) distinct → the shared build
+    * [[IndexMaintain.invertedRows]] (one token aggregation,
+    * `collect_list` + `sort_array` — deterministic postings for any
+    * partitioning). Posting-list memory per aggregation buffer is
+    * capped by `maxDf` BY CONSTRUCTION: the df computation itself is
+    * counts, so the build counts first, filters, then collects only
     * surviving tokens' lists.
     *
     * Output: (`token`, `df`, `postings` sorted array). */
   def invertedIndex(df: org.apache.spark.sql.DataFrame, idCol: String,
                     textCol: String, minDf: Long = 2,
                     maxDf: Long = Long.MaxValue)
-      : org.apache.spark.sql.DataFrame = {
-    require(minDf >= 1 && maxDf >= minDf,
-      s"need 1 <= minDf <= maxDf; got $minDf, $maxDf")
-    val docTok = df
-      .select(col(idCol), explode(filter(tokens(col(textCol)),
-        t => length(t) > 0)).as("token"))
-      .distinct()
-    val dfs = docTok.groupBy(col("token"))
-      .agg(count(lit(1)).as("df"))
-      .filter(col("df") >= minDf && col("df") <= maxDf)
-    // collect postings ONLY for tokens that survive the df window —
-    // a stopword's corpus-sized list never enters a buffer
-    docTok.join(dfs, "token")
-      .groupBy(col("token"), col("df"))
-      .agg(sort_array(collect_list(col(idCol))).as("postings"))
-      .select(col("token"), col("df"), col("postings"))
-  }
+      : org.apache.spark.sql.DataFrame =
+    IndexMaintain.invertedRows(IndexMaintain.docTokens(df, idCol, textCol),
+      idCol, minDf, maxDf, overflow = false)
 
   /** POSITIONAL inverted index — [[invertedIndex]] extended with
     * within-document token positions (1-based over the same
@@ -366,23 +352,10 @@ object TextStats {
   def positionalIndex(df: org.apache.spark.sql.DataFrame, idCol: String,
                       textCol: String, minDf: Long = 1,
                       maxDf: Long = Long.MaxValue)
-      : org.apache.spark.sql.DataFrame = {
-    require(minDf >= 1 && maxDf >= minDf,
-      s"need 1 <= minDf <= maxDf; got $minDf, $maxDf")
-    val tokPos = df
-      .select(col(idCol), posexplode(filter(tokens(col(textCol)),
-        t => length(t) > 0)).as(Seq("_pos0", "token")))
-    // positions make (token, doc) rows non-distinct, so df counts
-    // distinct ids, not rows (q72's distinct() collapses instead)
-    val dfs = tokPos.groupBy(col("token"))
-      .agg(countDistinct(col(idCol)).as("df"))
-      .filter(col("df") >= minDf && col("df") <= maxDf)
-    tokPos.join(dfs, "token")
-      .groupBy(col("token"), col("df"), col(idCol))
-      .agg(sort_array(collect_list(col("_pos0") + lit(1)))
-        .as("positions"))
-      .select(col("token"), col("df"), col(idCol), col("positions"))
-  }
+      : org.apache.spark.sql.DataFrame =
+    IndexMaintain.positionalRows(
+      IndexMaintain.tokenPositions(df, idCol, textCol), idCol, minDf,
+      maxDf, overflow = false)
 
   /** Arbitrary-phrase search over a [[positionalIndex]] frame —
     * posting intersection + position adjacency, the standard
@@ -740,7 +713,9 @@ object TextStats {
       .otherwise(array())
   }
 
-  private def tokenArray(textCol: String): Column =
+  /** The empty-filtered whitespace token array every operator
+    * tokenizes with. */
+  private[graft] def tokenArray(textCol: String): Column =
     filter(tokens(col(textCol)), t => length(t) > 0)
 
   /** Corpus-wide top-k n-gram frequency table — the n-gram-level
@@ -882,7 +857,7 @@ object TextStats {
   /** [[collocations]] served from STORED / MAINTAINED n-gram count
     * tables — `uni` the 1-gram and `pairs` the 2-gram (`ngram`,
     * `freq`) frames (the [[topNgrams]] aggregation shape, and exactly
-    * what [[graft.streaming.StreamingIndex.ngramCounts]] keeps over a
+    * what [[graft.streaming.StreamingIndex.ngramCountsCdc]] keeps over a
     * feed) — so a serving deployment ranks collocations from the
     * persisted artifacts without re-reading the corpus. Identical
     * arithmetic and output contract. */

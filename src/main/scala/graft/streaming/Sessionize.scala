@@ -68,15 +68,14 @@ object Sessionize {
     *                       is interpreted in the SESSION timezone —
     *                       Spark's cast semantics. Feed
     *                       timestamp/epoch types or offset-bearing
-    *                       strings for session-zone independence,
-    *                       ★r19 timezone-parity sweep)
+    *                       strings for session-zone independence)
     * @param gapMs          inactivity gap that closes a session
     * @param watermarkDelay how late events may arrive, e.g. "10 minutes"
     */
   def sessions(events: DataFrame, userCol: String, tsCol: String,
                gapMs: Long, watermarkDelay: String): DataFrame = {
     require(gapMs > 0, s"gapMs must be > 0, got $gapMs")
-    // P7 ingest tolerance (★r18): an event with a NULL user has no
+    // ingest tolerance: an event with a NULL user has no
     // session key and one with a NULL/uncastable ts has no position
     // on the time axis — both are dropped, in BOTH branches (the
     // find-side null-identifier rule; previously a null ts NPE'd the

@@ -224,7 +224,7 @@ object StreamingDedup {
         col("id"), col("vec"), col("ts"))
     def cos(a: Seq[Float], b: Seq[Float]): Double = {
       // unreachable through the banded path (the LSH signature bands
-      // only lsh.dim-length vectors, ★r19 dimension-drift sweep), but
+      // only lsh.dim-length vectors), but
       // mirror the kernel's mismatch-NULL as NaN: NaN >= tau is false,
       // so a mismatched pair emits nothing on either engine
       if (a.length != b.length) return Double.NaN

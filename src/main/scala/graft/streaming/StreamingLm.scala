@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   * Both maintained surfaces are plain streaming aggregations whose
   * state is VOCABULARY-sized (distinct tokens / distinct adjacent
   * pairs — corpus properties, not stream-length ones; the identical
-  * boundedness argument as [[StreamingIndex.ngramCounts]]), built
+  * boundedness argument as [[StreamingIndex.ngramCountsCdc]]), built
   * from the exact batch tokenization, so a snapshot equals the batch
   * frequency table over the rows seen so far. Model REBUILD from a
   * snapshot is driver-side arithmetic over ≤ vocab rows — the spec
@@ -34,10 +34,12 @@ object StreamingLm {
       .groupBy(col("token")).agg(count(lit(1)).as("freq"))
 
   /** Continuously-maintained adjacent-pair frequency table (`ngram`,
-    * `freq`) — [[StreamingIndex.ngramCounts]] at n = 2, re-exported
-    * here because it is exactly [[TextStats.bigramLm]]'s pair input. */
+    * `freq`) — [[StreamingIndex.ngramCountsCdc]] at n = 2 over an
+    * append-only feed (op +1 on every row), re-exported here because
+    * it is exactly [[TextStats.bigramLm]]'s pair input. */
   def pairFrequencies(stream: DataFrame, textCol: String): DataFrame =
-    StreamingIndex.ngramCounts(stream, textCol, 2)
+    StreamingIndex.ngramCountsCdc(stream.withColumn("_ingest", lit(1)),
+      "_ingest", textCol, 2)
 
   /** Rebuild the [[TextStats.unigramLm]] model from a frequency-table
     * snapshot: the same (freq desc, token asc) cut and micro-nat cost

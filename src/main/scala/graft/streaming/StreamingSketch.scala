@@ -22,6 +22,13 @@ import org.apache.spark.sql.functions._
   * The per-row fan-out (depth CMS rows, k Bloom positions) is ONE
   * `explode` of a literal-sized array — map-side, no self-union of
   * the stream, codegen-friendly.
+  *
+  * The linear summaries (CMS counters, histogram buckets) take a
+  * SIGNED feed: each row carries an op, +1 to ingest and −1 to
+  * forget. An append-only feed is a feed whose op is always +1
+  * (`withColumn("op", lit(1))`). HLL registers and the Bloom bitmap
+  * are monotone (max, bit-or) and cannot subtract, so they take an
+  * append-only feed and rebuild on forget.
   */
 object StreamingSketch {
 
@@ -32,35 +39,21 @@ object StreamingSketch {
       .filter(length(col("w")) > 0)
 
   /** Continuously-maintained CMS counter table (`row`, `bucket`,
-    * `cnt`) — state bounded at depth×width rows. Occurrences count
-    * directly (no word-frequency pre-collapse: a stream can't
-    * re-aggregate its past), which sums to the identical counters. */
-  def cmsCounters(stream: DataFrame, textCol: String,
-                  depth: Int, width: Int): DataFrame = {
-    require(depth >= 1 && width >= 1,
-      s"need depth, width >= 1; got $depth, $width")
-    toks(stream, textCol)
-      .select(explode(array((0 until depth).map { r =>
-        struct(lit(r).as("row"),
-          Sketch.cmsBucket(col("w"), r, width).as("bucket"))
-      }: _*)).as("_f"))
-      .groupBy(col("_f.row").as("row"), col("_f.bucket").as("bucket"))
-      .agg(count(lit(1)).as("cnt"))
-  }
-
-  /** [[cmsCounters]] over a SIGNED feed — the streaming side of
-    * [[Sketch.cmsSubtract]]'s linearity: each arriving document
-    * carries `opCol` = +1 (ingest) or −1 (forget), and every one of
-    * its token occurrences contributes that sign to its buckets, so
-    * the aggregation state is the exact net counter table of
-    * (adds − deletes) seen so far — a deletion feed maintains the
-    * sketch with no rebuild and no extra state. Order-independent by
-    * commutativity of the sum; a register can read ≤ 0 transiently
-    * when a delete's add has not yet arrived (or forever, if the
-    * feed violates the delete-what-was-added contract) — readers
-    * apply the `cnt > 0` cut, after which a snapshot equals the
-    * batch sketch of the net corpus (the differential the spec
-    * pins). */
+    * `cnt`) over a SIGNED feed — state bounded at depth×width rows,
+    * and the streaming side of [[Sketch.cmsSubtract]]'s linearity:
+    * each arriving document carries `opCol` = +1 (ingest) or −1
+    * (forget), and every one of its token occurrences contributes
+    * that sign to its buckets, so the aggregation state is the exact
+    * net counter table of (adds − deletes) seen so far — a deletion
+    * feed maintains the sketch with no rebuild and no extra state.
+    * Occurrences count directly (no word-frequency pre-collapse: a
+    * stream can't re-aggregate its past), which sums to the identical
+    * counters. Order-independent by commutativity of the sum; a
+    * register can read ≤ 0 transiently when a delete's add has not
+    * yet arrived (or forever, if the feed violates the
+    * delete-what-was-added contract) — readers apply the `cnt > 0`
+    * cut, after which a snapshot equals the batch sketch of the net
+    * corpus (the differential the spec pins). */
   def cmsCountersSigned(stream: DataFrame, textCol: String,
                         opCol: String, depth: Int, width: Int)
       : DataFrame = {
@@ -79,26 +72,17 @@ object StreamingSketch {
   }
 
   /** Continuously-maintained bit-length histogram counters (`bucket`,
-    * `n`) — the streaming side of [[Sketch.logHistogramCounters]]:
-    * state bounded at ≤ 65 rows however long the feed runs, and a
+    * `n`) over a SIGNED feed — the streaming side of
+    * [[Sketch.logHistogramCounters]] (the [[cmsCountersSigned]]
+    * pattern): `opCol` = +1 ingest / −1 forget, and the aggregation
+    * state is the exact net bucket table, bounded at ≤ 65 rows however
+    * long the feed runs — deletions maintain the histogram in-stream
+    * with no rebuild. Readers apply the `n > 0` cut, after which a
     * snapshot read through
     * [[Sketch.logHistogramPercentilesFromCounters]] equals the batch
-    * histogram of the rows seen so far (the differential the spec
-    * pins). `valueExpr` is any non-negative integer expression over
-    * the stream's columns (a length, a token count). */
-  def histogramCounters(stream: DataFrame,
-                        valueExpr: org.apache.spark.sql.Column)
-      : DataFrame =
-    stream.select(valueExpr.as("_v"))
-      .select(Sketch.logBucket(col("_v")).as("bucket"))
-      .groupBy(col("bucket")).agg(count(lit(1)).as("n"))
-
-  /** [[histogramCounters]] over a SIGNED feed (the
-    * [[cmsCountersSigned]] pattern): `opCol` = +1 ingest / −1 forget,
-    * aggregation state is the exact net bucket table — deletions
-    * maintain the histogram in-stream with no rebuild. Readers apply
-    * the `n > 0` cut, after which a snapshot equals the batch
-    * histogram of the net corpus. */
+    * histogram of the net corpus. `valueExpr` is any non-negative
+    * integer expression over the stream's columns (a length, a token
+    * count). */
   def histogramCountersSigned(stream: DataFrame,
                               valueExpr: org.apache.spark.sql.Column,
                               opCol: String): DataFrame =

@@ -15,7 +15,7 @@ object Scalars {
     * An explicit zone offset is REQUIRED, exactly like the reference:
     * its strptime format ends in `%z`, so a NAIVE string raises
     * ValueError and falls through to the passthrough branch. Mirroring
-    * that gate (★r19 timezone-parity sweep) is also what makes this
+    * that gate is also what makes this
     * scalar session-timezone independent by construction — the
     * previous form handed a naive string to `try_to_timestamp`, which
     * interprets it in `spark.sql.session.timeZone`: the same input
@@ -40,12 +40,6 @@ object Scalars {
 
   /** F6 — recursive date normalization over a parsed JSON-ish column is
     * the caller's map; this is the scalar kernel. */
-
-  /** F7 — `utc_timestamp(+delta)` (boto_utils.py:178-179): epoch seconds
-    * now + delta, rounded. */
-  def utcTimestampPlus(deltaSeconds: Long): Column =
-    (unix_micros(current_timestamp()).cast("double") / 1e6 + deltaSeconds)
-      .cast("long")
 
   /** F8 — DynamoDB Decimal JSON encode: decimals round to whole numbers
     * with HALF-EVEN (boto_utils.py:171-175 `round(o)` — Python 3 banker's

@@ -156,6 +156,24 @@ class JobRunnerSpec extends SparkSpec {
     assert(!names.contains(JobEventName.ForgetPhaseStarted))
   }
 
+  test("an uncastable match id fails the Find with an error that names " +
+    "the queue item and the column types, never the id itself") {
+    val (_, table) = lake()
+    val secret = "not-a-number-4711"
+    val run = JobRunner.run(spark, "jr-mask",
+      Seq(DataMapper("m", "t", Seq("customer_id")) -> table),
+      Seq(DeletionQueueItem("item-9", MatchId.Simple(secret))),
+      settings = JobSettings(findQueryMaxRetries = 1))
+    assert(run.state.status == JobStatus.FindFailed)
+    val errors = run.events.map(_.error).filter(_.nonEmpty)
+    // QueryRetried, QueryFailed and FindPhaseFailed all carry it
+    assert(errors.size == 3, run.events.map(_.eventName))
+    errors.foreach { e =>
+      assert(!e.contains(secret), e)
+      assert(e.contains("item-9") && e.contains("LongType"), e)
+    }
+  }
+
   test("JSON-lines Find reports full-scan bytes (row format has no " +
     "column pruning)") {
     val dir = java.nio.file.Files.createTempDirectory("graft-jb-").toString

@@ -288,6 +288,59 @@ class IndexMaintainSpec extends SparkSpec {
     assert(prows(back) === prows(idx2))
   }
 
+  test("seeded random df windows, both shapes: the window-only build is " +
+    "the overflow build minus its overflow rows, and a random forget " +
+    "batch and a random insert batch each equal the from-scratch build") {
+    val rnd = new scala.util.Random(61)
+    // min of two draws skews df toward the low tokens, so the top df
+    // sits well above the rest and every window has overflow to cross
+    val vocab = (0 until 12).map(i => s"t$i")
+    val corpusRows = (1L to 40L).map(i => i -> Seq.fill(1 + rnd.nextInt(8))(
+      vocab(math.min(rnd.nextInt(12), rnd.nextInt(12)))).mkString(" "))
+    val all = docs(corpusRows)
+    val topDf = TextStats.invertedIndex(all, "id", "text", minDf = 1)
+      .agg(max(col("df"))).head().getLong(0)
+    val windows = (1L, 1L + rnd.nextInt(topDf.toInt - 1)) +:
+      Seq.fill(2) {
+        val lo = 1L + rnd.nextInt(3)
+        (lo, lo + rnd.nextInt(topDf.toInt))
+      }
+    assert(windows.exists(_._2 < topDf), windows)
+    def split(share: Double): (DataFrame, DataFrame) = {
+      val picked = corpusRows.map(_._1).filter(_ => rnd.nextDouble() < share)
+      (all.filter(col("id").isin(picked: _*)),
+        all.filter(!col("id").isin(picked: _*)))
+    }
+    windows.foreach { case (lo, hi) =>
+      val ctx = s"window [$lo, $hi], top df $topDf"
+      val (forgotten, remaining) = split(0.3)
+      val (batch, before) = split(0.3)
+
+      val inv = IndexMaintain.indexWithOverflow(all, "id", "text", lo, hi)
+      assert(rows(TextStats.invertedIndex(all, "id", "text", lo, hi)) ===
+        rows(inv).filter(_._3 != null), ctx)
+      assert(rows(IndexMaintain.forgetFromIndex(inv, forgotten, remaining,
+        "id", "text", lo, hi)) === rows(IndexMaintain.indexWithOverflow(
+        remaining, "id", "text", lo, hi)), s"forget, $ctx")
+      assert(rows(IndexMaintain.insertIntoIndex(
+        IndexMaintain.indexWithOverflow(before, "id", "text", lo, hi),
+        batch, all, "id", "text", lo, hi)) === rows(inv), s"insert, $ctx")
+
+      val pos = IndexMaintain.positionalIndexWithOverflow(all, "id", "text",
+        lo, hi)
+      assert(prows(TextStats.positionalIndex(all, "id", "text", lo, hi)) ===
+        prows(pos).filter(_._3 != null), ctx)
+      assert(prows(IndexMaintain.forgetFromPositionalIndex(pos, forgotten,
+        remaining, "id", "text", lo, hi)) ===
+        prows(IndexMaintain.positionalIndexWithOverflow(remaining, "id",
+          "text", lo, hi)), s"positional forget, $ctx")
+      assert(prows(IndexMaintain.insertIntoPositionalIndex(
+        IndexMaintain.positionalIndexWithOverflow(before, "id", "text", lo,
+          hi), batch, all, "id", "text", lo, hi)) === prows(pos),
+        s"positional insert, $ctx")
+    }
+  }
+
   test("forgetRows on a PQ code frame: search over the pruned codes " +
     "equals search over the re-encoded remainder") {
     import spark.implicits._

@@ -21,12 +21,18 @@ class StreamingIndexSpec extends SparkSpec {
     (5L, "a b c d e"))
   private def batches = Seq(docs.take(2), docs.slice(2, 4), docs.drop(4))
 
+  /** An append-only (doc_id, text) feed as a CDC feed: op +1 on every
+    * row. */
+  private def ingestOnly(stream: MemoryStream[(Long, String)]) =
+    stream.toDF().toDF("doc_id", "text")
+      .withColumn("op", org.apache.spark.sql.functions.lit(1))
+
   test("streaming ngram counts converge to the batch gram table and " +
     "the snapshot's sorted cut equals batch topNgrams") {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val stream = MemoryStream[(Long, String)]
-    val query = StreamingIndex.ngramCounts(
-        stream.toDF().toDF("doc_id", "text"), "text", n = 2)
+    val query = StreamingIndex.ngramCountsCdc(ingestOnly(stream), "op",
+        "text", n = 2)
       .writeStream.format("memory").queryName("ngrams_out")
       .outputMode("complete").start()
     try {
@@ -53,11 +59,11 @@ class StreamingIndexSpec extends SparkSpec {
     "2-gram counts equal the batch collocation ranking") {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val stream = MemoryStream[(Long, String)]
-    val src = stream.toDF().toDF("doc_id", "text")
-    val q1 = StreamingIndex.ngramCounts(src, "text", n = 1)
+    val src = ingestOnly(stream)
+    val q1 = StreamingIndex.ngramCountsCdc(src, "op", "text", n = 1)
       .writeStream.format("memory").queryName("colloc_uni")
       .outputMode("complete").start()
-    val q2 = StreamingIndex.ngramCounts(src, "text", n = 2)
+    val q2 = StreamingIndex.ngramCountsCdc(src, "op", "text", n = 2)
       .writeStream.format("memory").queryName("colloc_pairs")
       .outputMode("complete").start()
     try {
@@ -85,9 +91,8 @@ class StreamingIndexSpec extends SparkSpec {
     val stream = MemoryStream[(Long, String)]
     // maxDf = 3: "a" (df 3) and "b" (df 4) exercise the boundary —
     // b overflows and must drop its list for good; a stays listed
-    val query = StreamingIndex.invertedIndex(
-        stream.toDF().toDF("doc_id", "text"), "doc_id", "text",
-        maxDf = 3)
+    val query = StreamingIndex.invertedIndexCdc(ingestOnly(stream), "op",
+        "doc_id", "text", maxDf = 3)
       .writeStream.format("memory").queryName("index_out")
       .outputMode("update").start()
     try {
@@ -573,9 +578,8 @@ class StreamingIndexSpec extends SparkSpec {
         vocab(rnd.nextInt(vocab.size))).mkString(" ")))
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val stream = MemoryStream[(Long, String)]
-    val query = StreamingIndex.invertedIndex(
-        stream.toDF().toDF("doc_id", "text"), "doc_id", "text",
-        maxDf = 20)
+    val query = StreamingIndex.invertedIndexCdc(ingestOnly(stream), "op",
+        "doc_id", "text", maxDf = 20)
       .writeStream.format("memory").queryName("index_rand_out")
       .outputMode("update").start()
     try {

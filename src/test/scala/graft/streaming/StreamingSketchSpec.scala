@@ -23,7 +23,10 @@ class StreamingSketchSpec extends SparkSpec {
       org.apache.spark.sql.DataFrame, name: String): Unit = {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val stream = MemoryStream[(Long, String)]
-    val query = mk(stream.toDF().toDF("doc_id", "text"))
+    // an append-only feed: op +1 on every row (ignored by the
+    // monotone sketches)
+    val query = mk(stream.toDF().toDF("doc_id", "text")
+        .withColumn("op", org.apache.spark.sql.functions.lit(1)))
       .writeStream.format("memory").queryName(name)
       .outputMode("complete").start()
     try {
@@ -32,8 +35,8 @@ class StreamingSketchSpec extends SparkSpec {
   }
 
   test("streaming CMS counters converge to the batch counter table") {
-    runComplete(StreamingSketch.cmsCounters(_, "text", depth = 3,
-      width = 16), "cms_out")
+    runComplete(StreamingSketch.cmsCountersSigned(_, "text", "op",
+      depth = 3, width = 16), "cms_out")
     val streamed = spark.table("cms_out")
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
       .sortBy(t => (t._1, t._2)).toSeq
@@ -81,7 +84,7 @@ class StreamingSketchSpec extends SparkSpec {
     "table; a snapshot percentile read equals the batch read") {
     import org.apache.spark.sql.functions.{col, size, split}
     val valueExpr = size(split(col("text"), " ")).cast("long")
-    runComplete(StreamingSketch.histogramCounters(_, valueExpr),
+    runComplete(StreamingSketch.histogramCountersSigned(_, valueExpr, "op"),
       "hist_out")
     val streamed = spark.table("hist_out")
       .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
