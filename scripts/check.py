@@ -7,12 +7,13 @@ parquet tables and compare rows/schema/hash. Usage:
 import json, subprocess, sys, hashlib
 from pathlib import Path
 
+ROOT = Path(__file__).resolve().parent.parent  # the checkout this script is in
 sfdir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 outdir = Path(sys.argv[2] if len(sys.argv) > 2 else "/tmp/graft-verify")
 if "--skip-verify" not in sys.argv:
     r = subprocess.run(
         ["sbt", "-batch", f'runMain graft.Verify {sfdir} {outdir}'],
-        cwd="/root/repo", capture_output=True, text=True)
+        cwd=ROOT, capture_output=True, text=True)
     if r.returncode != 0:
         print(r.stdout[-4000:]); print(r.stderr[-4000:]); sys.exit(1)
     for line in r.stdout.splitlines():
@@ -133,7 +134,7 @@ if ledger_path.exists():
     # alone (ADVICE r17: most perf-relevant changes land in llm/).
     def last_commit(path):
         r = subprocess.run(["git", "log", "-1", "--format=%ct", "--", path],
-                           cwd="/root/repo", capture_output=True, text=True)
+                           cwd=ROOT, capture_output=True, text=True)
         return int(r.stdout.strip() or 0)
     if last_commit("src/main/scala") > last_commit("scripts/bench_ledger.json"):
         print("WARN: bench_ledger.json predates the last commit touching "
@@ -150,7 +151,7 @@ if ledger_path.exists():
     # minimum; ambient contention only moves the median). An entry
     # FAILS only when BOTH the normalized median and the absolute min
     # floor trip — either alone is a WARN.
-    latest_path = Path("/root/repo/target/bench-latest.json")
+    latest_path = ROOT / "target" / "bench-latest.json"
     mins_ledger_path = Path(__file__).parent / "bench_ledger_mins.json"
     ledger_map = json.loads(ledger_path.read_text())
     latest = (json.loads(latest_path.read_text())

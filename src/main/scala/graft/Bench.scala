@@ -208,10 +208,10 @@ object Bench {
         li.repartition(nObjects).write.mode(SaveMode.Overwrite)
           .parquet(master)
         val matched = Finder.matchedFiles(spark,
-            spark.read.parquet(master), groups)
+            spark.read.parquet(master), groups, DataFormat.Parquet)
           .collect()
-          .map(r => fileName(DistributedRewrite.stripScheme(r.getString(0))))
-          .toSet
+          .map(p => fileName(DistributedRewrite.stripScheme(p)))
+          .toSet // a path read by several scan partitions repeats
         rewrites(f) = stagedRewrite(f, master, matched, "li",
           DataFormat.Parquet, timedRuns, warm) { (jobId, units) =>
           DistributedRewrite.run(spark, jobId, units, groups)
@@ -234,7 +234,6 @@ object Bench {
     // JSON-lines objects, Find pass untimed (row-format Find is a full
     // scan by design).
     if (wants(ForgetJson)) {
-      import org.apache.spark.sql.functions.{col, input_file_name}
       val master = s"$stage/json-master1024"
       li.repartition(1024).write.mode(SaveMode.Overwrite)
         .option("compression", "gzip").json(master)
@@ -245,12 +244,12 @@ object Bench {
           format = DataFormat.JsonLines),
         jsonTable, Seq(DeletionQueueItem("q", MatchId.Simple("R"))))
       // full-scan Find (scenario-5 semantics), untimed: declared
-      // schema + the json reader, distinct containing files
-      val matched = spark.read.schema(li.schema).json(master)
-        .withColumn("_f", input_file_name())
-        .filter(col("l_returnflag") === "R")
-        .select(col("_f")).distinct().collect()
-        .map(r => fileName(DistributedRewrite.stripScheme(r.getString(0))))
+      // schema + the json reader, the engine's JSON-lines Find
+      val matched = Finder.matchedFiles(spark,
+          spark.read.schema(li.schema).json(master), jsonGroups,
+          DataFormat.JsonLines)
+        .collect()
+        .map(p => fileName(DistributedRewrite.stripScheme(p)))
         .toSet
       rewrites(ForgetJson) = stagedRewrite(ForgetJson, master, matched,
         "lij", DataFormat.JsonLines) { (jobId, units) =>
@@ -389,7 +388,8 @@ object Bench {
       spark.sparkContext.addSparkListener(listener)
       try {
         Finder.matchedFiles(spark,
-          spark.read.parquet(s"$sfDir/lineitem.parquet"), g)
+          spark.read.parquet(s"$sfDir/lineitem.parquet"), g,
+          DataFormat.Parquet)
           .write.format("noop").mode(SaveMode.Overwrite).save()
         Thread.sleep(500) // let the listener bus drain
       } finally spark.sparkContext.removeSparkListener(listener)
@@ -413,10 +413,11 @@ object Bench {
       }
 
     // at-scale Find fallback: a queue larger than InSetMaxKeys forces the
-    // broadcast semi-join strategy (ONE scan + exploded keys + broadcast
-    // left-semi — FinderSpec pins the plan shape; this facet times it on
-    // real sf data). Keys 1..InSetMaxKeys+1 over l_orderkey guarantee
-    // real matches; the check is that the fallback actually finds files.
+    // broadcast semi-join strategy (ONE map-only scan probing broadcast
+    // key sets — FinderSpec pins the plan shape; this facet times it on
+    // real sf data, collect and driver-side distinct included). Keys
+    // 1..InSetMaxKeys+1 over l_orderkey guarantee real matches; the
+    // check is that the fallback actually finds files.
     sampled(FindJoinFallback) {
       val liTable = spark.read.parquet(s"$sfDir/lineitem.parquet")
       val queue = (1 to Finder.InSetMaxKeys + 1).map(i =>
@@ -426,10 +427,9 @@ object Bench {
         TableDef("lifb", s"$sfDir/lineitem.parquet", DataFormat.Parquet,
           liTable.schema),
         queue)
-      Sample(
-        () => Finder.matchedFiles(spark, liTable, g)
-          .write.format("noop").mode(SaveMode.Overwrite).save(),
-        () => Finder.matchedFiles(spark, liTable, g).count() > 0)
+      def find() = Finder.matchedFiles(spark, liTable, g, DataFormat.Parquet)
+        .collect().distinct
+      Sample(() => { find(); () }, () => find().nonEmpty)
     }
 
     // production model-load path: load the STORED IVF-PQ model frame

@@ -115,8 +115,10 @@ object JobRunner {
             Finder.writeManifestAudit(spark, jobId, m.id, typed, d))
           if (typed.nonEmpty) {
             val data = Finder.scoped(readTableFn(spark, table), m)
-            val paths = Finder.findFiles(spark, data, typed)
-              .collect().map(r => r.getString(0)).toSeq
+            // a path repeats once per scan partition that read part of
+            // its object (Finder class doc): the driver removes repeats
+            val paths = Finder.findFiles(spark, data, typed, table.format)
+              .collect().distinct.toSeq
             found(m.id) = paths
             val bytes = table.format match {
               case DataFormat.Parquet =>

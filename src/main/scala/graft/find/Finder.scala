@@ -2,12 +2,12 @@ package graft.find
 
 import graft.catalog.TableDef
 import graft.model._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Find-phase planner: turns (mapper, deletion queue) into the Find plan —
-  * the rows / DISTINCT file paths containing at least one match — and the
+  * the rows / file paths containing at least one match — and the
   * Forget-phase anti-predicate over the same match groups.
   *
   * Re-expresses the reference's generated Athena SQL (SURVEY.md §2.3;
@@ -21,37 +21,48 @@ import org.apache.spark.sql.types._
   *      predicates:
   *      {{{ data.filter(g1 || g2 || …) }}}
   *      This keeps genuinely duplicate source rows (an Athena `WHERE a OR b`
-  *      keeps them), needs no shuffle at all for matchedRows, and — because
-  *      the predicates are native-typed wherever the string-cast contract
-  *      allows it — pushes down to the parquet row-group stats. At 100 TB
-  *      this is the plan you want: a single pruned-projection scan whose
-  *      bytes are bounded by the identifier columns (BASELINE.md's 1.3-7%
+  *      keeps them), needs no shuffle at all, and — on parquet, where the
+  *      predicates are native-typed wherever the string-cast contract
+  *      allows it — pushes down to the row-group stats. At 100 TB this is
+  *      the plan you want: a single pruned-projection scan whose bytes are
+  *      bounded by the identifier columns (BASELINE.md's 1.3-7%
   *      column-scan ratio).
   *
   *   2. '''Semi-join strategy (huge queues).''' Above [[Finder.InSetMaxKeys]]
   *      match keys per group the literal set stops being sensible and we
   *      fall back to the reference's own shape: a broadcast left-semi join
   *      per column group against the stringified manifest
-  *      (execute_query.py:90-122), unioned, DISTINCT over paths only.
+  *      (execute_query.py:90-122). For matched files only the join's probe
+  *      side runs: each group's string key is looked up in a broadcast
+  *      hash set inside the scan's tasks.
+  *
+  * A files query ([[findFiles]], either strategy) is ONE map-only Spark
+  * job: scan, filter, `input_file_name()`, and each task emits a path
+  * once. No shuffle dedups the paths, so a path comes back once per scan
+  * partition that read part of its object (more than once only for an
+  * object larger than `spark.sql.files.maxPartitionBytes`); the caller
+  * collects the few paths and removes repeats on the driver.
   *
   * Casting contract (generate_queries.py:495-519, execute_query.py:90):
   * match values are cast to the column's type by Spark itself at plan time
   * ([[Finder.typedGroups]]); a value that does not cast raises
-  * [[graft.model.MatchIdCastingError]] before anything runs. The data-side
-  * comparison is native-typed for int/string/decimal columns — provably
-  * equivalent to the reference's varchar-equality because the string
-  * rendering of those types is injective — and string-rendered for
-  * float/double (where NaN/-0.0 make native equality diverge from the
-  * reference's varchar contract).
+  * [[graft.model.MatchIdCastingError]] before anything runs. On parquet
+  * the data-side comparison is native-typed for int/string/decimal
+  * columns — provably equivalent to the reference's varchar-equality
+  * because the string rendering of those types is injective — and
+  * string-rendered for float/double (where NaN/-0.0 make native equality
+  * diverge from the reference's varchar contract). A row format (JSON
+  * lines) has no statistics to prune, so every single-column group
+  * compares the string-rendered key — equal to the native compare by the
+  * same injectivity. Over a non-string column the cast keeps the `IN`
+  * out of the JSON parser's pushed filters, which test a line against
+  * each key in turn, so a line costs one hash probe.
   */
 object Finder {
 
   /** Sentinel joining composite key parts; same role as the reference's
     * `_S3F2COMP_` token (generate_queries.py:27). */
   val CompositeToken = "_GRAFTCOMP_"
-
-  /** Output column holding the source file path. */
-  val PathCol = "_file_path"
 
   /** Above this many match keys in a group, the predicate strategy yields
     * to the broadcast semi-join strategy.
@@ -217,16 +228,18 @@ object Finder {
     }
   }
 
-  /** The Find predicate for one cast-validated group — see class doc for
-    * the native-vs-string contract. */
-  def findPredicate(tg: TypedGroup): Column = {
+  /** The Find predicate for one cast-validated group over a table stored
+    * as `format` — see class doc for the native-vs-string contract. */
+  def findPredicate(tg: TypedGroup, format: DataFormat): Column = {
     val g = tg.group
     if (g.columns.size == 1) {
       val c = col(g.columns.head)
       g.types.head match {
-        case FloatType | DoubleType =>
-          // string-rendered: mirrors the reference varchar equality (NaN
-          // matches 'NaN'; native == would not)
+        case t if t == FloatType || t == DoubleType ||
+                  format == DataFormat.JsonLines =>
+          // string-rendered: float/double mirror the reference varchar
+          // equality (NaN matches 'NaN'; native == would not); a row
+          // format has no stats to prune and probes one hash set per line
           stringIn(c.cast(StringType), tg.stringKeys.filter(_ != null))
         case t =>
           nativeIn(c, t, tg.native.map(_.head).filter(_ != null))
@@ -291,48 +304,65 @@ object Finder {
     partitionPredicate(mapper.partitionFilter)
       .map(data.filter).getOrElse(data)
 
-  /** OR of all groups' Find predicates (null ⇒ no match, like the
-    * reference's SQL equality). */
-  def matchPredicate(spark: SparkSession, groups: Seq[GroupMatches]): Column =
-    anyFind(typedGroups(spark, groups))
+  /** OR of all groups' Find predicates over a table stored as `format`
+    * (null ⇒ no match, like the reference's SQL equality). */
+  def matchPredicate(spark: SparkSession, groups: Seq[GroupMatches],
+                     format: DataFormat): Column =
+    anyFind(typedGroups(spark, groups), format)
 
-  private def anyFind(typed: Seq[TypedGroup]): Column =
-    typed.map(findPredicate).reduceOption(_ || _).getOrElse(lit(false))
+  private def anyFind(typed: Seq[TypedGroup], format: DataFormat): Column =
+    typed.map(findPredicate(_, format)).reduceOption(_ || _)
+      .getOrElse(lit(false))
 
-  /** Matched ROWS — ONE scan, OR of group predicates; genuinely duplicate
-    * source rows are preserved (Athena's `WHERE a OR b` keeps them). Falls
-    * back to the semi-join strategy above [[InSetMaxKeys]]. */
+  /** Matched ROWS — ONE scan, OR of the group predicates in their
+    * parquet (pushdown) form; genuinely duplicate source rows are
+    * preserved (Athena's `WHERE a OR b` keeps them). Falls back to the
+    * semi-join strategy above [[InSetMaxKeys]]. */
   def matchedRows(spark: SparkSession, data: DataFrame,
                   groups: Seq[GroupMatches]): DataFrame = {
     require(groups.nonEmpty, "no match groups — nothing to find")
     val typed = typedGroups(spark, groups)
     if (totalKeys(typed) > InSetMaxKeys) rowsViaJoin(spark, data, typed)
-    else data.filter(anyFind(typed))
+    else data.filter(anyFind(typed, DataFormat.Parquet))
   }
 
   /** [[findFiles]] over groups cast here. */
   def matchedFiles(spark: SparkSession, data: DataFrame,
-                   groups: Seq[GroupMatches]): DataFrame =
-    findFiles(spark, data, typedGroups(spark, groups))
+                   groups: Seq[GroupMatches],
+                   format: DataFormat): Dataset[String] =
+    findFiles(spark, data, typedGroups(spark, groups), format)
 
-  /** The Find query for one mapper: DISTINCT file paths containing ≥1
-    * matching row. ONE pruned-projection scan (identifier columns only) +
-    * a distinct over the surviving paths — the Spark form of the
-    * reference's UNION ALL of per-group subqueries
-    * (execute_query.py:105-137), minus the per-group rescans.
+  /** The Find query for one mapper: the paths of the objects holding ≥1
+    * matching row. ONE map-only Spark job: a pruned-projection scan
+    * (identifier columns only), the OR of the group predicates and
+    * [[objectPaths]] — the Spark form of the reference's UNION ALL of
+    * per-group subqueries (execute_query.py:105-137), minus the
+    * per-group rescans. A path may repeat across scan partitions (class
+    * doc): collect, then `.distinct` on the driver.
     *
-    * @param data  the mapper's table as a DataFrame (already
-    *              partition-filtered if the mapper scopes partitions)
-    * @param typed the mapper's groups, cast by [[typedGroups]] */
+    * @param data   the mapper's table as a DataFrame (already
+    *               partition-filtered if the mapper scopes partitions)
+    * @param typed  the mapper's groups, cast by [[typedGroups]]
+    * @param format the table's storage format; a row format compares
+    *               string keys (class doc) */
   def findFiles(spark: SparkSession, data: DataFrame,
-                typed: Seq[TypedGroup]): DataFrame = {
+                typed: Seq[TypedGroup],
+                format: DataFormat): Dataset[String] = {
     require(typed.nonEmpty, "no match groups — nothing to find")
     if (totalKeys(typed) > InSetMaxKeys) filesViaJoin(spark, data, typed)
-    else
-      data.filter(anyFind(typed))
-        .select(input_file_name().as(PathCol))
-        .distinct()
+    else objectPaths(data, anyFind(typed, format))
   }
+
+  /** Paths of the objects holding a row of `data` that satisfies `pred`,
+    * as a map-only plan: each task emits a path the first time it reads
+    * it. A path repeats once per further scan partition that read part
+    * of its object, so callers collect and `.distinct` on the driver. */
+  def objectPaths(data: DataFrame, pred: Column): Dataset[String] =
+    data.filter(pred).select(input_file_name()).as(Encoders.STRING)
+      .mapPartitions { paths =>
+        val seen = scala.collection.mutable.HashSet.empty[String]
+        paths.filter(seen.add)
+      }(Encoders.STRING)
 
   /** Surviving rows of `fileDf` after removing every row matching any
     * group — the Forget anti-filter (parquet_handler.py:133-152). A row
@@ -416,24 +446,25 @@ object Finder {
     array(typed.map(tg => struct(
       lit(tg.group.key).as("ck"), dataKey(tg.group).as("mk"))): _*)
 
-  /** Semi-join form of [[matchedFiles]]: one scan (identifier columns +
-    * path only), per-group keys exploded, single broadcast left-semi join
-    * on `(columns_key, match_key)`, DISTINCT over paths only. */
+  /** Semi-join form of [[matchedFiles]]: the probe side of a broadcast
+    * left-semi join on `(columns_key, match_key)`, without the join
+    * operator. Each group's string keys reach the executors in one
+    * broadcast variable; a row's group keys are computed from its own
+    * columns ([[dataKey]]) and looked up in the group's hash set inside
+    * the scan's tasks, so the query is ONE scan in one map-only job. */
   def matchedFilesViaJoin(spark: SparkSession, data: DataFrame,
-                          groups: Seq[GroupMatches]): DataFrame =
+                          groups: Seq[GroupMatches]): Dataset[String] =
     filesViaJoin(spark, data, typedGroups(spark, groups))
 
   private def filesViaJoin(spark: SparkSession, data: DataFrame,
-                           typed: Seq[TypedGroup]): DataFrame = {
-    import spark.implicits._
-    data
-      .select(input_file_name().as(PathCol),
-        explode(groupKeyStructs(typed)).as("_k"))
-      .join(broadcast(manifestUnion(spark, typed)),
-        $"_k.ck" === $"columns_key" && $"_k.mk" === $"match_key",
-        "left_semi")
-      .select(col(PathCol))
-      .distinct()
+                           typed: Seq[TypedGroup]): Dataset[String] = {
+    val keySets = spark.sparkContext.broadcast(
+      typed.map(_.stringKeys.filter(_ != null).toSet).toVector)
+    val probes = typed.indices.map { i =>
+      udf((k: String) => k != null && keySets.value(i).contains(k))
+        .apply(dataKey(typed(i).group))
+    }
+    objectPaths(data, probes.reduce(_ || _))
   }
 
   /** Semi-join form of [[matchedRows]]: duplicate-safe via a stable

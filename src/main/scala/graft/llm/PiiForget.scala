@@ -1,6 +1,7 @@
 package graft.llm
 
 import com.fasterxml.jackson.databind.JsonNode
+import graft.find.Finder
 import graft.forget.{DistributedRewrite, JsonMatch, PayloadCodec}
 import graft.forget.DistributedRewrite.{Disposition, Keep, Replace}
 import graft.model._
@@ -15,10 +16,11 @@ import org.apache.spark.sql.functions._
   * distributed rewrite machinery, exactly as [[DedupForget]] composes
   * dedup onto deletion jobs. The two phases mirror the core engine:
   *
-  *   - FIND ([[findObjects]]): one column-pruned scan over the table;
-  *     objects whose text column matches ANY detector become the work
-  *     list — `input_file_name` distinct, the [[graft.find.Finder]] P2
-  *     shape (the object list is bounded and driver-safe, the same
+  *   - FIND ([[findObjects]]): one column-pruned, map-only scan over
+  *     the table; objects whose text column matches ANY detector become
+  *     the work list — [[graft.find.Finder.objectPaths]], the same
+  *     query shape as the deletion Find, with repeats removed on the
+  *     driver (the object list is bounded and driver-safe, the same
   *     collect the reference's driver performs on Athena results).
   *   - FORGET ([[scrubObjects]]): ONE Spark job, k objects per task,
   *     through [[DistributedRewrite.runWith]] — staging, CSE envelope,
@@ -60,13 +62,13 @@ object PiiForget {
       .reduce(_ || _)
 
   /** The Find phase: distinct object paths whose `textCol` holds PII.
-    * Catalyst prunes the scan to the text column; the result is the
-    * bounded object list (scheme-stripped, ready for
-    * [[ObjectWorkUnit]]s). */
+    * Catalyst prunes the scan to the text column; the one map-only job
+    * may return a path once per scan partition, so repeats are removed
+    * here. The result is the bounded object list (scheme-stripped, ready
+    * for [[ObjectWorkUnit]]s). */
   def findObjects(data: DataFrame, textCol: String): Seq[String] =
-    data.filter(anyPii(col(textCol)))
-      .select(input_file_name().as("_p")).distinct()
-      .collect().map(r => DistributedRewrite.stripScheme(r.getString(0))).toSeq
+    Finder.objectPaths(data, anyPii(col(textCol)))
+      .collect().map(DistributedRewrite.stripScheme).distinct.toSeq
 
   /** The Forget phase: scrub `textPath` (dot path, case-insensitive) in
     * every work unit through the shared distributed rewrite job.

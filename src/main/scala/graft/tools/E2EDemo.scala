@@ -283,7 +283,8 @@ object E2EDemo {
         DataMapper("m2", "customer_pq", Seq("c_custkey")), pqTable,
         Seq(DeletionQueueItem("bad", MatchId.Simple("not-a-number"))))
       Finder.matchedFiles(spark,
-        spark.read.parquet(pqTable.location), badGroups).collect()
+        spark.read.parquet(pqTable.location), badGroups, DataFormat.Parquet)
+        .collect()
       false
     } catch { case _: MatchIdCastingError => true }
     check(probe2, "uncastable match id -> MatchIdCastingError")

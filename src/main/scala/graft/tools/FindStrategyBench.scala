@@ -40,7 +40,8 @@ object FindStrategyBench {
         DeletionQueueItem(s"q$i", MatchId.Simple((1L + i * step).toString)))
       val groups = Finder.plan(mapper, table, queue)
       val (tPred, nPred) = timeMedian3(
-        data.filter(Finder.matchPredicate(spark, groups)).count())
+        data.filter(Finder.matchPredicate(spark, groups, table.format))
+          .count())
       val (tJoin, nJoin) = timeMedian3(
         Finder.matchedRowsViaJoin(spark, data, groups).count())
       require(nPred == nJoin, s"strategy results differ: $nPred vs $nJoin")

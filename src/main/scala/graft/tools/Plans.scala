@@ -17,16 +17,25 @@ package graft.tools
   * exchange's `plan_id` (which differs run to run) as `<n>`, and every
   * lineage cut's call site is `Materialize.scala`, so two runs of the
   * same entries dump the same text, and moving lines of an entry does
-  * not change its plan.
+  * not change its plan. Expression ids (`doc_id#3416L`) are written as
+  * `#<id>` and lambda variables (`x_48`) as `x_<n>`: both count the
+  * expressions the session built before the entry, so they shift with
+  * any change that builds a different number of them first. A JVM
+  * lambda's class and identity (`Finder$$$Lambda$4004/0x7f0f…@5769…`,
+  * printed by an object operator such as `MapPartitions`) is written as
+  * `$Lambda<n>`.
   */
 object Plans {
-  private val tmpSuffix = """(graft-[A-Za-z0-9-]*?-)\d+(?=[/\]\s,]|$)""".r
-  private val planId = """\[plan_id=\d+\]""".r
+  private val masks = Seq(
+    """(graft-[A-Za-z0-9-]*?-)\d+(?=[/\]\s,]|$)""".r -> "$1<tmp>",
+    """\[plan_id=\d+\]""".r -> "[plan_id=<n>]",
+    """#\d+L?""".r -> "#<id>",
+    """\bx_\d+""".r -> "x_<n>",
+    """\$Lambda[$\d]*/0x[0-9a-f]+@[0-9a-f]+""".r -> "\\$Lambda<n>")
 
   /** `plan` with its run-specific tokens replaced (see above). */
   def comparable(plan: String): String =
-    planId.replaceAllIn(tmpSuffix.replaceAllIn(plan, "$1<tmp>"),
-      "[plan_id=<n>]")
+    masks.foldLeft(plan) { case (p, (re, to)) => re.replaceAllIn(p, to) }
 
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: Plans <outDir> <suffix> [query ...]")

@@ -27,7 +27,7 @@ class PlanAuditSpec extends SparkSpec {
     val groups = Finder.plan(mapper, table,
       Seq(DeletionQueueItem("a", MatchId.Simple("7")),
         DeletionQueueItem("b", MatchId.Simple("23"))))
-    val files = Finder.matchedFiles(spark, data, groups)
+    val files = Finder.matchedFiles(spark, data, groups, DataFormat.Parquet)
     // sparkPlan (pre-AQE) exposes the scan node directly
     val scan = files.queryExecution.sparkPlan.collectLeaves().collectFirst {
       case s: FileSourceScanExec => s

@@ -98,8 +98,9 @@ class SchemaDriftSpec extends SparkSpec {
     val gName = Finder.plan(mapperName, table,
       Seq(DeletionQueueItem("q1", MatchId.Simple("beta"))))
     val data = JobRunner.readTable(spark, table)
-    val filesByName = Finder.matchedFiles(spark, data, gName)
-      .as[String].collect().map(p => p.substring(p.lastIndexOf('/') + 1))
+    val filesByName = Finder.matchedFiles(spark, data, gName,
+        DataFormat.Parquet)
+      .collect().map(p => p.substring(p.lastIndexOf('/') + 1))
     assert(filesByName.toSet == Set("a.parquet", "c.parquet"),
       s"name=beta lives in a and c only, got ${filesByName.mkString(",")}")
 
@@ -108,8 +109,8 @@ class SchemaDriftSpec extends SparkSpec {
       Seq(DeletionQueueItem("q2", MatchId.Simple("2")),
         DeletionQueueItem("q3", MatchId.Simple("5")),
         DeletionQueueItem("q4", MatchId.Simple("8"))))
-    val filesById = Finder.matchedFiles(spark, data, gId)
-      .as[String].collect().map(p => p.substring(p.lastIndexOf('/') + 1))
+    val filesById = Finder.matchedFiles(spark, data, gId, DataFormat.Parquet)
+      .collect().map(p => p.substring(p.lastIndexOf('/') + 1))
     assert(filesById.toSet ==
       Set("a.parquet", "b.parquet", "c.parquet"), filesById.mkString(","))
   }
@@ -180,8 +181,8 @@ class SchemaDriftSpec extends SparkSpec {
     val mapper = DataMapper("mn", "drift2", Seq("name"))
     val groups = Finder.plan(mapper, table,
       Seq(DeletionQueueItem("q", MatchId.Simple("beta"))))
-    val files = Finder.matchedFiles(spark, data, groups)
-      .as[String].collect()
+    val files = Finder.matchedFiles(spark, data, groups, DataFormat.Parquet)
+      .collect().distinct
     assert(files.length == 1 && files.head.endsWith("1.parquet"),
       files.mkString(","))
   }

@@ -232,6 +232,7 @@ class JobRunnerSpec extends SparkSpec {
 
   test("the Forget phase of a three-mapper job (two parquet, one JSON " +
     "lines) is ONE rewrite Spark job and ONE sweep Spark job") {
+    // ... and the whole job is five: ONE map-only Find job per mapper
     val dir = java.nio.file.Files.createTempDirectory("graft-1job-").toString
     Seq(Seq((1L, "a"), (7L, "b")), Seq((7L, "c"), (7L, "d"), (9L, "e")))
       .foreach(rows => rows.toDF("customer_id", "x").coalesce(1)
@@ -263,15 +264,15 @@ class JobRunnerSpec extends SparkSpec {
     }.toMap
     assert(expected.size == 5 && expected.values.sum == 8L, expected)
 
-    val starts = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    // (job name, innermost engine frame of its call site) per job
+    val starts =
+      new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
           e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
         e.stageInfos.maxByOption(_.stageId).foreach { st =>
-          // the innermost engine frame of the job's call site
-          st.details.split('\n').map(_.trim).find(_.contains("graft."))
-            .filter(_.contains("graft.forget."))
-            .foreach(_ => starts.add(st.name))
+          starts.add(st.name -> st.details.split('\n').map(_.trim)
+            .find(_.contains("graft.")).getOrElse(""))
         }
     }
     Thread.sleep(300) // let earlier tests' listener events drain
@@ -286,7 +287,11 @@ class JobRunnerSpec extends SparkSpec {
         r
       } finally spark.sparkContext.removeSparkListener(listener)
     assert(run.state.status == JobStatus.Completed, run.state.status)
-    val forgetJobs = starts.asScala.toSeq
+    val jobs = starts.asScala.toSeq
+    val findJobs = jobs.filter(_._2.contains("graft.driver.JobRunner"))
+    assert(findJobs.size == 3, jobs)
+    assert(jobs.size == 5, jobs)
+    val forgetJobs = jobs.filter(_._2.contains("graft.forget.")).map(_._1)
     assert(forgetJobs.count(_.startsWith("collect")) == 1, forgetJobs)
     assert(forgetJobs.count(_.startsWith("foreach")) == 1, forgetJobs)
     assert(forgetJobs.size == 2, forgetJobs)

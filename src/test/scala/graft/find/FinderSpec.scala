@@ -312,4 +312,186 @@ class FinderSpec extends SparkSpec {
       .select("id").as[Long].collect().toSeq
     assert(got == Seq(1L))
   }
+
+  // ---- map-only files query ----------------------------------------
+
+  private def fileName(p: String): String = p.substring(p.lastIndexOf('/') + 1)
+
+  /** Operators a map-only files query must not plan, in `plan` or any
+    * of its subqueries. */
+  private def shuffleOps(plan: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[String] = {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    plan.collectWithSubqueries {
+      case p @ (_: ShuffleExchangeExec | _: HashAggregateExec |
+                _: AdaptiveSparkPlanExec) => p.nodeName
+    }
+  }
+
+  /** Executed plan of the next successful action `body` runs. */
+  private def executedPlanOf(body: => Unit)
+      : org.apache.spark.sql.execution.SparkPlan = {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val seen = new java.util.concurrent.LinkedBlockingQueue[QueryExecution]
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        seen.add(qe)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      val qe = seen.poll(10, java.util.concurrent.TimeUnit.SECONDS)
+      assert(qe != null, "no query ran")
+      qe.executedPlan
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("both Find strategies and PiiForget.findObjects run map-only: no " +
+    "shuffle, no hash aggregate, no adaptive re-plan") {
+    val file = stageParquetFile(df)
+    val data = spark.read.parquet(file)
+    val mapper = DataMapper("m", "t", Seq("id", "name"))
+    val small = Finder.typedGroups(spark, Finder.plan(mapper, tableOf(df),
+      Seq(DeletionQueueItem("a", MatchId.Simple("1")))))
+    val huge = Finder.typedGroups(spark, Finder.plan(mapper, tableOf(df),
+      (0 to Finder.InSetMaxKeys).map(i =>
+        DeletionQueueItem(s"q$i", MatchId.Simple(i.toString)))))
+    Seq("predicate" -> small, "semi-join" -> huge).foreach {
+      case (strategy, typed) =>
+        val q = Finder.findFiles(spark, data, typed, DataFormat.Parquet)
+        assert(q.collect().map(fileName).distinct.toSeq ==
+          Seq(fileName(file)), strategy)
+        val ops = shuffleOps(q.queryExecution.executedPlan)
+        assert(ops.isEmpty, s"$strategy plans $ops")
+        assert("Scan parquet".r.findAllIn(
+          q.queryExecution.executedPlan.toString).size == 1, strategy)
+    }
+    val text = stageParquetFile(Seq((1L, "mail a@b.com now"), (2L, "none"))
+      .toDF("id", "text"))
+    val piiPlan = executedPlanOf {
+      assert(graft.llm.PiiForget.findObjects(spark.read.parquet(text), "text")
+        .map(fileName) == Seq(fileName(text)))
+    }
+    assert(shuffleOps(piiPlan).isEmpty, s"findObjects plans:\n$piiPlan")
+  }
+
+  test("a JSON-lines Find with more than 10 keys pushes no In into its " +
+    "scan; the same keys on parquet do") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    val file = stageTextFile(
+      (1 to 40).map(i => s"""{"user_id":$i,"x":"v$i"}""").mkString("\n"))
+    val table = TableDef("j", file, DataFormat.JsonLines,
+      StructType(Seq(StructField("user_id", LongType),
+        StructField("x", StringType))))
+    val typed = Finder.typedGroups(spark, Finder.plan(
+      DataMapper("mj", "j", Seq("user_id"), format = DataFormat.JsonLines),
+      table, (1 to 20).map(i =>
+        DeletionQueueItem(s"q$i", MatchId.Simple((i * 3).toString)))))
+    def pushed(format: DataFormat): String = {
+      val q = Finder.findFiles(spark,
+        graft.driver.JobRunner.readTable(spark, table), typed, format)
+      assert(q.collect().nonEmpty)
+      q.queryExecution.executedPlan.collectFirst {
+        case s: FileSourceScanExec => s.metadata.getOrElse("PushedFilters", "")
+      }.getOrElse(fail("no file scan"))
+    }
+    val json = pushed(DataFormat.JsonLines)
+    assert(!json.contains("In("), s"JSON-lines scan pushes $json")
+    // the check can see a pushed In: the native predicate pushes one
+    assert(pushed(DataFormat.Parquet).contains("In(user_id"))
+  }
+
+  test("seeded JSON-lines Find: the string-key predicate matches exactly " +
+    "the rows and objects of the native predicate") {
+    val rnd = new scala.util.Random(11)
+    val dir = java.nio.file.Files.createTempDirectory("graft-jsonkeys-")
+    val pool = Seq.fill(30)(rnd.between(-500L, 500L)) ++ Seq(12L, -7L)
+    (0 until 12).foreach { f =>
+      val lines = (0 until 8).map { _ =>
+        rnd.nextInt(10) match {
+          case 0 => """{"user_id":null,"x":1}"""
+          case 1 => """{"x":2}"""
+          case 2 => """{"user_id":"12","x":3}"""
+          case _ => s"""{"user_id":${pool(rnd.nextInt(pool.size))},"x":4}"""
+        }
+      }
+      java.nio.file.Files.write(dir.resolve(s"p$f.json"),
+        lines.mkString("", "\n", "\n").getBytes("UTF-8"))
+    }
+    val table = TableDef("j", dir.toString, DataFormat.JsonLines,
+      StructType(Seq(StructField("user_id", LongType),
+        StructField("x", IntegerType))))
+    val data = graft.driver.JobRunner.readTable(spark, table)
+    val mapper = DataMapper("mj", "j", Seq("user_id"),
+      format = DataFormat.JsonLines)
+    var matchedRows, narrowerRounds = 0
+    val allObjects = objectsOf(data)
+    (1 to 6).foreach { round =>
+      val keys = Seq.fill(rnd.between(1, 25))(
+        if (rnd.nextBoolean()) pool(rnd.nextInt(pool.size)).toString
+        else rnd.between(-1000L, 1000L).toString) ++ Seq(" 12 ", "-7")
+      val typed = Finder.typedGroups(spark, Finder.plan(mapper, table,
+        keys.zipWithIndex.map { case (k, i) =>
+          DeletionQueueItem(s"q$i", MatchId.Simple(k)) }))
+      val native = col("user_id").isin(
+        typed.head.native.map(_.head).filter(_ != null): _*)
+      val pred = Finder.findPredicate(typed.head, DataFormat.JsonLines)
+      def rows(p: org.apache.spark.sql.Column) =
+        data.filter(p).select("user_id", "x").collect()
+          .map(_.toString).sorted.toSeq
+      val oracle = objectsOf(data.filter(native))
+      assert(rows(pred) == rows(native), s"round $round keys $keys")
+      assert(Finder.findFiles(spark, data, typed, DataFormat.JsonLines)
+        .collect().toSet == oracle,
+        s"round $round keys $keys")
+      matchedRows += rows(native).size
+      if (oracle.size < allObjects.size) narrowerRounds += 1
+    }
+    // the rounds discriminate: rows match, and not every object does
+    assert(matchedRows > 0 && narrowerRounds > 0,
+      s"$matchedRows rows, $narrowerRounds narrower rounds")
+  }
+
+  private def objectsOf(d: org.apache.spark.sql.DataFrame): Set[String] =
+    d.select(input_file_name()).distinct().collect().map(_.getString(0)).toSet
+
+  test("an object read over several scan partitions comes back once " +
+    "from JobRunner.run and once from PiiForget.findObjects") {
+    val key = "spark.sql.files.maxPartitionBytes"
+    val rows = (0 until 4000).map(i =>
+      (if (i % 100 == 0) 7L else i.toLong + 100,
+        if (i % 100 == 0) s"reach me at u$i@example.com" else s"row $i"))
+    val file = stageParquetFile(rows.toDF("id", "text"),
+      Map("parquet.block.size" -> "4096"))
+    val dir = new java.io.File(file).getParent
+    val table = TableDef("t", dir, DataFormat.Parquet,
+      spark.read.parquet(dir).schema)
+    val mapper = DataMapper("m", "t", Seq("id"))
+    val before = spark.conf.getOption(key)
+    spark.conf.set(key, (new java.io.File(file).length / 4).toString)
+    try {
+      // the scan really splits the object: the Find query repeats it
+      val raw = Finder.matchedFiles(spark, spark.read.parquet(dir),
+        Finder.plan(mapper, table,
+          Seq(DeletionQueueItem("q", MatchId.Simple("7")))),
+        DataFormat.Parquet).collect()
+      assert(raw.length >= 3, s"${raw.length} scan partitions matched")
+      val name = fileName(file)
+      assert(graft.llm.PiiForget.findObjects(spark.read.parquet(dir), "text")
+        .map(fileName) == Seq(name))
+      val run = graft.driver.JobRunner.run(spark, "split-once",
+        Seq(mapper -> table),
+        Seq(DeletionQueueItem("q", MatchId.Simple("7"))))
+      assert(run.state.status == JobStatus.Completed, run.events)
+      assert(run.foundPaths("m").map(fileName) == Seq(name))
+      assert(run.state.stats.totalRowsDeletedCount == 40)
+    } finally before match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
 }

@@ -64,8 +64,8 @@ class SqlFindSpec extends SparkSpec {
           Map("id" -> "3", "name" -> "carol")), dataMappers = Seq("m"))))
     val viaSql = SqlFind.runOnSpark(spark, data, "j1", "m", groups)
       .collect().map(_.getString(0)).toSet
-    val native = Finder.matchedFiles(spark, data, groups)
-      .collect().map(_.getString(0)).toSet
+    val native = Finder.matchedFiles(spark, data, groups, DataFormat.Parquet)
+      .collect().toSet
     assert(viaSql == native && native.nonEmpty)
   }
 
@@ -80,7 +80,7 @@ class SqlFindSpec extends SparkSpec {
       Seq(DeletionQueueItem("a", MatchId.Simple("x@y.z"))))
     val viaSql = SqlFind.runOnSpark(spark, data, "j2", "m", groups)
       .collect().map(_.getString(0)).toSet
-    assert(viaSql == Finder.matchedFiles(spark, data, groups)
-      .collect().map(_.getString(0)).toSet)
+    assert(viaSql == Finder.matchedFiles(spark, data, groups,
+        DataFormat.Parquet).collect().toSet)
   }
 }
