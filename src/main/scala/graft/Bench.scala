@@ -412,12 +412,12 @@ object Bench {
           errors += s"${f.name}: ${String.valueOf(e.getMessage).take(200)}"
       }
 
-    // at-scale Find fallback: a queue larger than InSetMaxKeys forces the
-    // broadcast semi-join strategy (ONE map-only scan probing broadcast
-    // key sets — FinderSpec pins the plan shape; this facet times it on
-    // real sf data, collect and driver-side distinct included). Keys
-    // 1..InSetMaxKeys+1 over l_orderkey guarantee real matches; the
-    // check is that the fallback actually finds files.
+    // at-scale Find: a queue larger than InSetMaxKeys takes the key
+    // probe (ONE map-only scan probing broadcast key sets — FinderSpec
+    // pins the plan shape; this facet times it on real sf data, collect
+    // and driver-side distinct included). Keys 1..InSetMaxKeys+1 over
+    // l_orderkey guarantee real matches; the check is that the probe
+    // actually finds files.
     sampled(FindJoinFallback) {
       val liTable = spark.read.parquet(s"$sfDir/lineitem.parquet")
       val queue = (1 to Finder.InSetMaxKeys + 1).map(i =>

@@ -488,7 +488,7 @@ object SparkEntry {
   }
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0:
-    * the Find semi-join (matched rows) over the customer table. */
+    * the Find filter (matched rows) over the customer table. */
   def entry(spark: SparkSession): DataFrame =
     apply("q01_find_simple").run(spark, "/root/testdata/sf0.001")
 
@@ -556,8 +556,9 @@ object SparkEntry {
 
   /** One entry per implemented operator from SURVEY.md §2. */
   val entries: Seq[Entry] = table(
-    // §2.3 J1/J2/J5 — simple-match Find: broadcast semi-join, string-cast
-    // keys, value fanned across every identifier column of the mapper
+    // §2.3 J1/J2/J5 — simple-match Find: the native literal predicate
+    // (varchar-equal by the injective rendering), value fanned across
+    // every identifier column of the mapper
     Entry("q01_find_simple", (s, dir) => {
       val groups = customerGroups(s, dir, simpleQueue,
         Seq("c_custkey", "c_name"))

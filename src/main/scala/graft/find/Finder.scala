@@ -12,51 +12,51 @@ import org.apache.spark.sql.types._
   *
   * Re-expresses the reference's generated Athena SQL (SURVEY.md §2.3;
   * reference: backend/lambdas/tasks/generate_queries.py and
-  * execute_query.py:30-137) as a Catalyst plan. Two strategies:
+  * execute_query.py:30-137) as a Catalyst plan. Find is one membership
+  * test — a row matches when some group's key is in the queue — and ONE
+  * filter builds it for rows and files alike ([[Finder.findFilter]]):
+  * literal where the scan can prune, probe everywhere else.
   *
-  *   1. '''Predicate strategy (default).''' The deletion queue is small
-  *      (thousands of matches — it is broadcast in the reference too), so
-  *      each column group becomes an `InSet` predicate over the group's
-  *      columns and the whole Find is ONE scan with the OR of all group
-  *      predicates:
-  *      {{{ data.filter(g1 || g2 || …) }}}
-  *      This keeps genuinely duplicate source rows (an Athena `WHERE a OR b`
-  *      keeps them), needs no shuffle at all, and — on parquet, where the
-  *      predicates are native-typed wherever the string-cast contract
-  *      allows it — pushes down to the row-group stats. At 100 TB this is
-  *      the plan you want: a single pruned-projection scan whose bytes are
-  *      bounded by the identifier columns (BASELINE.md's 1.3-7%
-  *      column-scan ratio).
+  *   1. '''Literal form.''' On parquet, when the mapper has at most
+  *      [[Finder.InSetMaxKeys]] keys, a group with no float/double
+  *      column becomes its native `IN` (for a composite of at most
+  *      [[Finder.CompositeOrMaxTuples]] tuples, the OR of per-tuple
+  *      conjunctions). It is the only form parquet pushes down to the
+  *      row-group stats: at 100 TB the Find is one pruned-projection scan
+  *      whose bytes are bounded by the identifier columns (BASELINE.md's
+  *      1.3-7% column-scan ratio).
   *
-  *   2. '''Semi-join strategy (huge queues).''' Above [[Finder.InSetMaxKeys]]
-  *      match keys per group the literal set stops being sensible and we
-  *      fall back to the reference's own shape: a broadcast left-semi join
-  *      per column group against the stringified manifest
-  *      (execute_query.py:90-122). For matched files only the join's probe
-  *      side runs: each group's string key is looked up in a broadcast
-  *      hash set inside the scan's tasks.
+  *   2. '''Key probe.''' Every other group — float/double columns,
+  *      composites above [[Finder.CompositeOrMaxTuples]] tuples, every
+  *      JSON-lines group, every group of a mapper above the key
+  *      threshold — looks its string-rendered key ([[Finder.dataKey]]) up
+  *      in a hash set that ONE broadcast per query ships to the scan's
+  *      tasks ([[Finder.keyProbe]]): the reference's broadcast semi-join
+  *      against the manifest (execute_query.py:90-122), minus the join.
+  *      A row format has no statistics to prune, and no scan can push the
+  *      probe, so the JSON parser never tests a line against each key in
+  *      turn: a line costs one hash probe per group.
   *
-  * A files query ([[findFiles]], either strategy) is ONE map-only Spark
-  * job: scan, filter, `input_file_name()`, and each task emits a path
-  * once. No shuffle dedups the paths, so a path comes back once per scan
-  * partition that read part of its object (more than once only for an
-  * object larger than `spark.sql.files.maxPartitionBytes`); the caller
-  * collects the few paths and removes repeats on the driver.
+  * The Find filter is the OR of the group predicates, so a Find is ONE
+  * scan that plans no shuffle and keeps genuinely duplicate source rows
+  * (an Athena `WHERE a OR b` keeps them). A files query ([[findFiles]])
+  * is ONE map-only Spark job: scan, filter, `input_file_name()`, and
+  * each task emits a path once. No shuffle dedups the paths, so a path
+  * comes back once per scan partition that read part of its object (more
+  * than once only for an object larger than
+  * `spark.sql.files.maxPartitionBytes`); the caller collects the few
+  * paths and removes repeats on the driver.
   *
   * Casting contract (generate_queries.py:495-519, execute_query.py:90):
   * match values are cast to the column's type by Spark itself at plan time
   * ([[Finder.typedGroups]]); a value that does not cast raises
-  * [[graft.model.MatchIdCastingError]] before anything runs. On parquet
-  * the data-side comparison is native-typed for int/string/decimal
-  * columns — provably equivalent to the reference's varchar-equality
-  * because the string rendering of those types is injective — and
-  * string-rendered for float/double (where NaN/-0.0 make native equality
-  * diverge from the reference's varchar contract). A row format (JSON
-  * lines) has no statistics to prune, so every single-column group
-  * compares the string-rendered key — equal to the native compare by the
-  * same injectivity. Over a non-string column the cast keeps the `IN`
-  * out of the JSON parser's pushed filters, which test a line against
-  * each key in turn, so a line costs one hash probe.
+  * [[graft.model.MatchIdCastingError]] before anything runs. The literal
+  * form compares native values — provably equivalent to the reference's
+  * varchar equality for int/string/decimal columns, because the string
+  * rendering of those types is injective. The probe compares the
+  * string-rendered key, the varchar contract itself; float/double groups
+  * always take it, because NaN/-0.0 make native equality diverge from
+  * that contract.
   */
 object Finder {
 
@@ -64,37 +64,35 @@ object Finder {
     * `_S3F2COMP_` token (generate_queries.py:27). */
   val CompositeToken = "_GRAFTCOMP_"
 
-  /** Above this many match keys in a group, the predicate strategy yields
-    * to the broadcast semi-join strategy.
+  /** Above this many match keys in a mapper, every group of its Find
+    * goes through the key probe ([[findFilter]]).
     *
-    * Evidence, not folklore (`runMain graft.tools.Soak find-strategy`, sf0.1
-    * lineitem ~600k rows, local[32], median-of-3, both strategies
-    * returning identical row counts): predicate wins small queues
-    * (1k keys: 0.30 s vs 0.64 s — the semi-join pays a fixed broadcast
-    * + join-plan overhead), the curves cross at ≈20k keys (25k: 1.04
-    * vs 0.91), and the semi-join wins widening from there (100k: 3.09
-    * vs 1.76; 200k: 6.37 vs 2.84 — ≈2× and growing, the per-row
-    * literal-set evaluation loses to the broadcast hash join). The
-    * asymmetry is structural, so it survives scale-up: parquet only
-    * pushes an `In` down as OR-of-eq below
-    * `spark.sql.parquet.pushdown.inFilterThreshold` (≈10 values),
-    * beyond which the scan-side filter degrades to the keys' min/max
-    * RANGE — a scattered 100k-key queue prunes nothing, erasing the
-    * predicate strategy's one advantage while its evaluation cost
-    * keeps climbing. 32768 sits above the measured crossover (small
-    * inversion there is within noise) and caps the wrong-side penalty
-    * at ~1.2×; re-derive on new hardware by running the bench. */
+    * Evidence (`runMain graft.tools.Soak find-strategy`, sf0.1 lineitem
+    * ~600k rows, `l_orderkey` keys spread over the table, local[4] on a
+    * 4-core VM, median-of-3 matched-rows counts, both forms returning
+    * identical counts), literal `IN` vs probe: 10 keys 0.19 vs 0.31 s,
+    * 100 keys 0.26 vs 0.32 s, 1k keys 0.26 vs 0.27 s (the crossover),
+    * 10k keys 0.68 vs 0.26 s, 32,768 keys 1.68 vs 0.27 s, 100k keys
+    * 4.07 vs 0.52 s, 200k keys 10.6 vs 0.91 s. The probe pays one
+    * broadcast and a per-row UDF call; the literal set's per-row
+    * evaluation grows with the keys. Parquet only pushes an `In` down as
+    * OR-of-eq below `spark.sql.parquet.pushdown.inFilterThreshold` (≈10
+    * values), beyond which the scan-side filter degrades to the keys'
+    * min/max RANGE, so a scattered queue prunes little either way. On
+    * that box the constant sits far above the crossover: a parquet queue
+    * of ~1k to 32,768 keys takes the slower literal form. Re-derive it on
+    * new hardware by running the bench. */
   val InSetMaxKeys = 32768
 
   /** Composite groups with at most this many tuples use an OR-of-ANDs
-    * native predicate (row-group-stats friendly); larger ones use a single
-    * token-joined string `InSet`. The cap is a CODEGEN guard more than a
-    * perf tunable: each tuple contributes an `(a = x AND b = y)` branch
-    * to one giant disjunction, and past a few hundred branches the
-    * generated evaluator risks the JVM's 64KB method limit /
-    * whole-stage-codegen fallback to interpreted mode — whereas the
-    * token-joined `InSet` stays O(1) per row regardless of tuple count.
-    * 256 keeps the OR form (and its row-group-stat pruning) for every
+    * native predicate (row-group-stats friendly); larger ones are probed
+    * by their token-joined string key ([[keyProbe]]). The cap is a
+    * CODEGEN guard more than a perf tunable: each tuple contributes an
+    * `(a = x AND b = y)` branch to one giant disjunction, and past a few
+    * hundred branches the generated evaluator risks the JVM's 64KB
+    * method limit / whole-stage-codegen fallback to interpreted mode —
+    * whereas the probe stays O(1) per row regardless of tuple count. 256
+    * keeps the OR form (and its row-group-stat pruning) for every
     * realistic manual queue while routing bulk composite queues to the
     * flat form the q02 gate covers. */
   val CompositeOrMaxTuples = 256
@@ -228,44 +226,14 @@ object Finder {
     }
   }
 
-  /** The Find predicate for one cast-validated group over a table stored
-    * as `format` — see class doc for the native-vs-string contract. */
-  def findPredicate(tg: TypedGroup, format: DataFormat): Column = {
-    val g = tg.group
-    if (g.columns.size == 1) {
-      val c = col(g.columns.head)
-      g.types.head match {
-        case t if t == FloatType || t == DoubleType ||
-                  format == DataFormat.JsonLines =>
-          // string-rendered: float/double mirror the reference varchar
-          // equality (NaN matches 'NaN'; native == would not); a row
-          // format has no stats to prune and probes one hash set per line
-          stringIn(c.cast(StringType), tg.stringKeys.filter(_ != null))
-        case t =>
-          nativeIn(c, t, tg.native.map(_.head).filter(_ != null))
-      }
-    } else if (tg.native.size <= CompositeOrMaxTuples &&
-               !g.types.exists(t => t == FloatType || t == DoubleType)) {
-      // OR of per-tuple conjunctions, native-typed (pushdown-friendly)
-      tg.native.map { tuple =>
-        g.columns.lazyZip(g.types).lazyZip(tuple).map { (c, t, v) =>
-          col(c) === typedLit(v, t)
-        }.reduce(_ && _)
-      }.reduceOption(_ || _).getOrElse(lit(false))
-    } else {
-      // token-joined string key InSet (the reference's own join key shape,
-      // execute_query.py:91)
-      stringIn(dataKey(g), tg.stringKeys.filter(_ != null))
-    }
-  }
-
   /** The Forget predicate for one group: NATIVE-typed for every column —
     * the reference's Forget phase compares native values, not strings
-    * (generate_queries.py:102-109, main.py:97-129). Float caveat: native
-    * equality treats -0.0 == 0.0, so a match id '-0.0' deletes 0.0 rows in
-    * any file the Find phase returned — identical to the reference, where
-    * Python `float('-0.0') == 0.0` is also true, while the varchar-typed
-    * Find join distinguishes '-0.0' from '0.0' on both engines. */
+    * (generate_queries.py:102-109, main.py:97-129). It is also Find's
+    * literal form ([[findFilter]]). Float caveat: native equality treats
+    * -0.0 == 0.0, so a match id '-0.0' deletes 0.0 rows in any file the
+    * Find phase returned — identical to the reference, where Python
+    * `float('-0.0') == 0.0` is also true, while the varchar-typed Find
+    * probe distinguishes '-0.0' from '0.0' on both engines. */
   def forgetPredicate(tg: TypedGroup): Column = {
     val g = tg.group
     if (g.columns.size == 1)
@@ -285,9 +253,6 @@ object Finder {
     if (vals.isEmpty) lit(false)
     else c.cast(t.sql).isin(vals: _*) // cast is a no-op when types align
 
-  private def stringIn(key: Column, keys: Seq[String]): Column =
-    if (keys.isEmpty) lit(false) else key.isin(keys: _*)
-
   /** AND of partition-literal predicates — the Spark form of the
     * reference's per-partition query fan-out (execute_query.py:97-103:
     * `AND pk = value` appended per partition key; here one `pk IN (...)`
@@ -304,26 +269,58 @@ object Finder {
     partitionPredicate(mapper.partitionFilter)
       .map(data.filter).getOrElse(data)
 
-  /** OR of all groups' Find predicates over a table stored as `format`
-    * (null ⇒ no match, like the reference's SQL equality). */
-  def matchPredicate(spark: SparkSession, groups: Seq[GroupMatches],
-                     format: DataFormat): Column =
-    anyFind(typedGroups(spark, groups), format)
+  /** The Find filter over one mapper's cast groups on a table stored as
+    * `format`: the OR of one predicate per group, in one of two forms
+    * (class doc). A group keeps its native literal predicate — the very
+    * one Forget deletes by, [[forgetPredicate]] — when the scan can
+    * prune with it: the table is parquet, the mapper has at most
+    * [[InSetMaxKeys]] keys and the group is [[nativeComparable]]. Every
+    * other group goes through ONE [[keyProbe]]. Null identifiers never
+    * match. */
+  def findFilter(spark: SparkSession, typed: Seq[TypedGroup],
+                 format: DataFormat): Column = {
+    val literal = format == DataFormat.Parquet &&
+      typed.map(_.native.size.toLong).sum <= InSetMaxKeys
+    val (literals, probed) =
+      typed.partition(tg => literal && nativeComparable(tg))
+    (literals.map(forgetPredicate) ++
+      Option.when(probed.nonEmpty)(keyProbe(spark, probed)))
+      .reduceOption(_ || _).getOrElse(lit(false))
+  }
 
-  private def anyFind(typed: Seq[TypedGroup], format: DataFormat): Column =
-    typed.map(findPredicate(_, format)).reduceOption(_ || _)
-      .getOrElse(lit(false))
+  /** Whether a group's native compare is the reference's varchar
+    * compare in a form small enough to evaluate as literals: no
+    * float/double column (NaN and -0.0 render apart but compare
+    * otherwise), and one column or at most [[CompositeOrMaxTuples]]
+    * tuples. */
+  private def nativeComparable(tg: TypedGroup): Boolean =
+    !tg.group.types.exists(t => t == FloatType || t == DoubleType) &&
+      (tg.group.columns.size == 1 || tg.native.size <= CompositeOrMaxTuples)
 
-  /** Matched ROWS — ONE scan, OR of the group predicates in their
-    * parquet (pushdown) form; genuinely duplicate source rows are
-    * preserved (Athena's `WHERE a OR b` keeps them). Falls back to the
-    * semi-join strategy above [[InSetMaxKeys]]. */
+  /** The groups' string keys in ONE broadcast, probed by each row's
+    * [[dataKey]] inside the scan's tasks: the reference's semi-join
+    * against the manifest (execute_query.py:90-122) without a join
+    * operator. A row passes when some group's key is in that group's
+    * set (a null key never is), so the filter keeps duplicate source
+    * rows and plans no shuffle; no scan can push it down. */
+  def keyProbe(spark: SparkSession, typed: Seq[TypedGroup]): Column = {
+    val keySets = spark.sparkContext.broadcast(
+      typed.map(_.stringKeys.filter(_ != null).toSet).toVector)
+    typed.indices.map { i =>
+      udf((k: String) => k != null && keySets.value(i).contains(k))
+        .apply(dataKey(typed(i).group))
+    }.reduce(_ || _)
+  }
+
+  /** Matched ROWS: `data` under [[findFilter]]'s parquet form, ONE
+    * map-only scan. A filter never repeats a row, and genuinely
+    * duplicate source rows are all kept (Athena's `WHERE a OR b` keeps
+    * them). */
   def matchedRows(spark: SparkSession, data: DataFrame,
                   groups: Seq[GroupMatches]): DataFrame = {
     require(groups.nonEmpty, "no match groups — nothing to find")
-    val typed = typedGroups(spark, groups)
-    if (totalKeys(typed) > InSetMaxKeys) rowsViaJoin(spark, data, typed)
-    else data.filter(anyFind(typed, DataFormat.Parquet))
+    data.filter(
+      findFilter(spark, typedGroups(spark, groups), DataFormat.Parquet))
   }
 
   /** [[findFiles]] over groups cast here. */
@@ -334,23 +331,22 @@ object Finder {
 
   /** The Find query for one mapper: the paths of the objects holding ≥1
     * matching row. ONE map-only Spark job: a pruned-projection scan
-    * (identifier columns only), the OR of the group predicates and
-    * [[objectPaths]] — the Spark form of the reference's UNION ALL of
-    * per-group subqueries (execute_query.py:105-137), minus the
-    * per-group rescans. A path may repeat across scan partitions (class
-    * doc): collect, then `.distinct` on the driver.
+    * (identifier columns only), [[findFilter]] and [[objectPaths]] — the
+    * Spark form of the reference's UNION ALL of per-group subqueries
+    * (execute_query.py:105-137), minus the per-group rescans. A path may
+    * repeat across scan partitions (class doc): collect, then
+    * `.distinct` on the driver.
     *
     * @param data   the mapper's table as a DataFrame (already
     *               partition-filtered if the mapper scopes partitions)
     * @param typed  the mapper's groups, cast by [[typedGroups]]
-    * @param format the table's storage format; a row format compares
-    *               string keys (class doc) */
+    * @param format the table's storage format; only parquet keeps
+    *               literal predicates (class doc) */
   def findFiles(spark: SparkSession, data: DataFrame,
                 typed: Seq[TypedGroup],
                 format: DataFormat): Dataset[String] = {
     require(typed.nonEmpty, "no match groups — nothing to find")
-    if (totalKeys(typed) > InSetMaxKeys) filesViaJoin(spark, data, typed)
-    else objectPaths(data, anyFind(typed, format))
+    objectPaths(data, findFilter(spark, typed, format))
   }
 
   /** Paths of the objects holding a row of `data` that satisfies `pred`,
@@ -376,16 +372,6 @@ object Finder {
     fileDf.filter(!coalesce(pred, lit(false)))
   }
 
-  private def totalKeys(typed: Seq[TypedGroup]): Long =
-    typed.map(_.native.size.toLong).sum
-
-  // --------------------------------------------------------------------
-  // Semi-join strategy — the reference's own plan shape, used when the
-  // match set is too large for literal predicates. Kept broadcast: the
-  // manifest is still tiny relative to the data (millions of matches ≪
-  // 100 TB probe side).
-  // --------------------------------------------------------------------
-
   /** Build the manifest DataFrame for one cast-validated column group:
     * `(item_id, columns_key, match_key)` with `match_key` the group's
     * Spark-rendered string key ([[typedGroups]]), so it agrees
@@ -400,8 +386,8 @@ object Finder {
   /** S12 — manifest audit sink: persist every group's manifest rows,
     * partitioned `(job_id, data_mapper_id)` exactly like the reference's
     * manifests Glue table (generate_queries.py:223-225,288-326;
-    * templates/manifests.yaml:60-88). Broadcast joins read the in-memory
-    * manifest; this copy is the audit trail. */
+    * templates/manifests.yaml:60-88). The Find filter reads the keys in
+    * memory; this copy is the audit trail. */
   def writeManifestAudit(spark: SparkSession, jobId: String,
                          mapperId: String, typed: Seq[TypedGroup],
                          auditDir: String): Unit = {
@@ -416,7 +402,7 @@ object Finder {
         .parquet(auditDir)
   }
 
-  /** Data-side join key for a group over `df`'s columns
+  /** Data-side string key for a group, the one [[keyProbe]] looks up
     * (execute_query.py:90-122 semantics). */
   def dataKey(g: ColumnGroup): Column = {
     val parts = g.columns.map(c => col(c).cast(StringType))
@@ -426,66 +412,4 @@ object Finder {
 
   private def interleave(parts: Seq[Column], sep: Column): Seq[Column] =
     parts.flatMap(p => Seq(p, sep)).dropRight(1)
-
-  /** Union of every group's manifest, keyed `(columns_key, match_key)`,
-    * with null match keys dropped (a null key never equals anything). */
-  private def manifestUnion(spark: SparkSession,
-                            typed: Seq[TypedGroup]): DataFrame = {
-    import spark.implicits._
-    typed.map(manifest(spark, _)).reduce(_ union _)
-      .select($"columns_key", $"match_key")
-      .filter($"match_key".isNotNull)
-      .distinct()
-  }
-
-  /** One `(columns_key, match_key)` struct per column group, computed from
-    * the row's own columns — exploding this array turns the k-way
-    * per-group join into ONE broadcast hash equi-join over a single scan
-    * (a per-group union would rescan the table once per group). */
-  private def groupKeyStructs(typed: Seq[TypedGroup]): Column =
-    array(typed.map(tg => struct(
-      lit(tg.group.key).as("ck"), dataKey(tg.group).as("mk"))): _*)
-
-  /** Semi-join form of [[matchedFiles]]: the probe side of a broadcast
-    * left-semi join on `(columns_key, match_key)`, without the join
-    * operator. Each group's string keys reach the executors in one
-    * broadcast variable; a row's group keys are computed from its own
-    * columns ([[dataKey]]) and looked up in the group's hash set inside
-    * the scan's tasks, so the query is ONE scan in one map-only job. */
-  def matchedFilesViaJoin(spark: SparkSession, data: DataFrame,
-                          groups: Seq[GroupMatches]): Dataset[String] =
-    filesViaJoin(spark, data, typedGroups(spark, groups))
-
-  private def filesViaJoin(spark: SparkSession, data: DataFrame,
-                           typed: Seq[TypedGroup]): Dataset[String] = {
-    val keySets = spark.sparkContext.broadcast(
-      typed.map(_.stringKeys.filter(_ != null).toSet).toVector)
-    val probes = typed.indices.map { i =>
-      udf((k: String) => k != null && keySets.value(i).contains(k))
-        .apply(dataKey(typed(i).group))
-    }
-    objectPaths(data, probes.reduce(_ || _))
-  }
-
-  /** Semi-join form of [[matchedRows]]: duplicate-safe via a stable
-    * per-row id — the post-join dedup runs on the row id, never on the
-    * full row, so genuinely duplicate source rows survive. Single scan,
-    * single broadcast hash join; the only shuffle is the dedup over the
-    * (small) matched output. */
-  def matchedRowsViaJoin(spark: SparkSession, data: DataFrame,
-                         groups: Seq[GroupMatches]): DataFrame =
-    rowsViaJoin(spark, data, typedGroups(spark, groups))
-
-  private def rowsViaJoin(spark: SparkSession, data: DataFrame,
-                          typed: Seq[TypedGroup]): DataFrame = {
-    import spark.implicits._
-    data
-      .withColumn("_rid", monotonically_increasing_id())
-      .withColumn("_k", explode(groupKeyStructs(typed)))
-      .join(broadcast(manifestUnion(spark, typed)),
-        $"_k.ck" === $"columns_key" && $"_k.mk" === $"match_key",
-        "left_semi")
-      .dropDuplicates("_rid")
-      .drop("_rid", "_k")
-  }
 }

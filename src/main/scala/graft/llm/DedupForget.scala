@@ -31,11 +31,10 @@ object DedupForget {
 
   /** Ids per batch. Each batch's queue drives one deletion job. At the
     * default (100k > [[graft.find.Finder.InSetMaxKeys]] = 32,768) a
-    * full batch Finds via the broadcast semi-join strategy — the
-    * measured crossover (InSet predicate wins below ≈20k keys,
-    * semi-join above; see `InSetMaxKeys`) makes that the RIGHT plan at
-    * this size; a batch of at most `InSetMaxKeys` ids (a small corpus,
-    * or the last batch) takes the pushed-down InSet predicate. */
+    * full batch Finds through the broadcast key probe, which the
+    * measured curve (see `InSetMaxKeys`) makes the right plan at this
+    * size; a parquet batch of at most `InSetMaxKeys` ids (a small
+    * corpus, or the last batch) takes the pushed-down literal `IN`. */
   val DefaultBatchSize = 100000
 
   /** Aggregate result of a (possibly multi-batch) dedup-forget run.

@@ -7,12 +7,13 @@ import graft.tools.Session.timed
 import org.apache.spark.sql.SparkSession
 
 /** Micro-bench behind the [[Finder.InSetMaxKeys]] threshold: times the
-  * SAME Find (matched rows, full materialization) under BOTH strategies
-  * — native `InSet` predicate vs broadcast left-semi join — across
-  * queue sizes, on sf lineitem (`l_orderkey` identifiers). The
-  * threshold is a plan-shape crossover, not a correctness switch, so
-  * the right value is wherever the curves cross; run this to re-derive
-  * it on new hardware instead of trusting the constant.
+  * SAME Find (matched rows, full materialization) in BOTH forms of the
+  * Find filter — the native literal `IN` ([[Finder.forgetPredicate]])
+  * vs the broadcast key probe ([[Finder.keyProbe]]) — across queue
+  * sizes, on sf lineitem (`l_orderkey` identifiers). The threshold is a
+  * plan-shape crossover, not a correctness switch, so the right value is
+  * wherever the curves cross; run this to re-derive it on new hardware
+  * instead of trusting the constant.
   *
   * Usage: `runMain graft.tools.Soak find-strategy [sizes]` with
   * `SPARK_GRAFT_SF_DIR` (sizes are queue sizes; default
@@ -38,16 +39,16 @@ object FindStrategyBench {
       val step = math.max(1L, maxKey / k)
       val queue = (0 until k).map(i =>
         DeletionQueueItem(s"q$i", MatchId.Simple((1L + i * step).toString)))
-      val groups = Finder.plan(mapper, table, queue)
+      val typed = Finder.typedGroups(spark, Finder.plan(mapper, table, queue))
       val (tPred, nPred) = timeMedian3(
-        data.filter(Finder.matchPredicate(spark, groups, table.format))
+        data.filter(typed.map(Finder.forgetPredicate).reduce(_ || _))
           .count())
-      val (tJoin, nJoin) = timeMedian3(
-        Finder.matchedRowsViaJoin(spark, data, groups).count())
-      require(nPred == nJoin, s"strategy results differ: $nPred vs $nJoin")
+      val (tProbe, nProbe) = timeMedian3(
+        data.filter(Finder.keyProbe(spark, typed)).count())
+      require(nPred == nProbe, s"Find forms differ: $nPred vs $nProbe")
       report.scale(k, Map("keys" -> k.toDouble,
         "rows_matched" -> nPred.toDouble, "predicate_sec" -> tPred,
-        "semijoin_sec" -> tJoin))
+        "probe_sec" -> tProbe))
     }
     report.ratios()
   }

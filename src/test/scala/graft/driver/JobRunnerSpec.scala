@@ -195,7 +195,7 @@ class JobRunnerSpec extends SparkSpec {
   test("queue above InSetMaxKeys takes the semi-join path, deletes " +
     "correctly") {
     val (_, table) = lake()
-    // 2 present keys + absent ones: InSetMaxKeys + 1 keys → join path
+    // 2 present keys + absent ones: InSetMaxKeys + 1 keys → key probe
     val absent = (1 until Finder.InSetMaxKeys).map(i =>
       DeletionQueueItem(s"a$i", MatchId.Simple((1000000L + i).toString)))
     val queue = Seq(DeletionQueueItem("q1", MatchId.Simple("7")),

@@ -249,7 +249,14 @@ class FinderSpec extends SparkSpec {
       .select("id").as[Long].collect().toSeq == Seq(2L))
   }
 
-  // ---- semi-join fallback strategy ---------------------------------
+  // ---- semi-join fallback: the broadcast key probe -------------------
+
+  /** `n` queue items on one Simple value each: `present` first, then
+    * absent numeric ids until there are `n`. */
+  private def queueOf(n: Int, present: String*): Seq[DeletionQueueItem] =
+    (present ++ (present.size until n).map(i => (1000000 + i).toString))
+      .zipWithIndex.map { case (v, i) =>
+        DeletionQueueItem(s"q$i", MatchId.Simple(v)) }
 
   test("semi-join fallback returns the same rows as the predicate plan") {
     val mapper = DataMapper("m", "t", Seq("id", "name"))
@@ -260,45 +267,62 @@ class FinderSpec extends SparkSpec {
       DeletionQueueItem("b", MatchId.Simple("2")),
       DeletionQueueItem("c", MatchId.Composite(
         Map("id" -> "3", "name" -> "carol")), dataMappers = Seq("m")))
-    val groups = Finder.plan(mapper, tableOf(df), queue)
-    val viaPred = Finder.matchedRows(spark, df, groups)
-      .select("id").as[Long].collect().sorted.toSeq
-    val viaJoin = Finder.matchedRowsViaJoin(spark, df, groups)
-      .select("id").as[Long].collect().sorted.toSeq
-    assert(viaPred == viaJoin && viaJoin == Seq(1L, 2L, 3L))
+    import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+    import org.apache.spark.sql.catalyst.plans.logical.Filter
+    val typed = Finder.typedGroups(spark, Finder.plan(mapper, tableOf(df),
+      queue))
+    val data = spark.read.parquet(stageParquetFile(df))
+    // one filter builder, both forms: every group is literal on parquet
+    // and probed on JSON lines
+    def ids(format: DataFormat) = {
+      val out = data.filter(Finder.findFilter(spark, typed, format))
+      val probes = out.queryExecution.optimizedPlan.collect {
+        case f: Filter => f.condition.collect { case u: ScalaUDF => u }
+      }.flatten
+      (out.select("id").as[Long].collect().sorted.toSeq, probes.size)
+    }
+    assert(ids(DataFormat.Parquet) == (Seq(1L, 2L, 3L), 0))
+    assert(ids(DataFormat.JsonLines) == (Seq(1L, 2L, 3L), typed.size))
   }
 
   test("semi-join fallback preserves duplicate source rows") {
     val mapper = DataMapper("m", "t", Seq("id"))
     val groups = Finder.plan(mapper, tableOf(df),
-      Seq(DeletionQueueItem("a", MatchId.Simple("1"))))
-    assert(Finder.matchedRowsViaJoin(spark, df.union(df), groups).count() == 2)
+      queueOf(Finder.InSetMaxKeys + 1, "1"))
+    assert(Finder.matchedRows(spark, df.union(df), groups).count() == 2)
   }
 
   test("semi-join fallback plans ONE scan for k column groups") {
     val file = stageParquetFile(df)
     val data = spark.read.parquet(file)
     val mapper = DataMapper("m", "t", Seq("id", "name", "grp"))
-    val groups = Finder.plan(mapper, tableOf(df),
-      Seq(DeletionQueueItem("a", MatchId.Simple("1"))))
-    assert(groups.size == 3)
-    val plan = Finder.matchedFilesViaJoin(spark, data, groups)
-      .queryExecution.executedPlan.toString
+    val typed = Finder.typedGroups(spark, Finder.plan(mapper, tableOf(df),
+      queueOf(Finder.InSetMaxKeys / 3 + 1, "1")))
+    assert(typed.size == 3 &&
+      typed.map(_.native.size).sum > Finder.InSetMaxKeys)
+    val q = Finder.findFiles(spark, data, typed, DataFormat.Parquet)
+    assert(q.collect().map(fileName).toSeq == Seq(fileName(file)))
+    val plan = q.queryExecution.executedPlan.toString
     val scans = "Scan parquet".r.findAllIn(plan).size
     assert(scans == 1, s"expected 1 scan, got $scans in:\n$plan")
   }
 
-  test("above InSetMaxKeys matchedRows switches to the join strategy") {
+  test("above InSetMaxKeys matchedRows probes the keys in one map-only " +
+    "scan") {
+    val data = spark.read.parquet(stageParquetFile(df))
     val mapper = DataMapper("m", "t", Seq("id"))
     val queue = (0 to Finder.InSetMaxKeys).map(i =>
       DeletionQueueItem(s"q$i", MatchId.Simple(i.toString)))
-    val groups = Finder.plan(mapper, tableOf(df), queue)
-    val out = Finder.matchedRows(spark, df, groups)
-    // all four ids are covered by the 100k+ match set
-    assert(out.count() == 4)
-    val plan = out.queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin") ||
-      plan.contains("BroadcastExchange"), s"no broadcast join in:\n$plan")
+    val out = Finder.matchedRows(spark, data, Finder.plan(mapper,
+      tableOf(df), queue))
+    // all four ids are covered by the 32k+ match set
+    val plan = executedPlanOf(assert(out.collect().length == 4))
+    val ops = shuffleOps(plan) ++ plan.collectWithSubqueries {
+      case p: org.apache.spark.sql.execution.joins.BroadcastHashJoinExec =>
+        p.nodeName
+    }
+    assert(ops.isEmpty, s"matchedRows plans $ops in:\n$plan")
+    assert("Scan parquet".r.findAllIn(plan.toString).size == 1, plan)
   }
 
   test("composite tuples beyond CompositeOrMaxTuples use the token key") {
@@ -355,13 +379,14 @@ class FinderSpec extends SparkSpec {
     val file = stageParquetFile(df)
     val data = spark.read.parquet(file)
     val mapper = DataMapper("m", "t", Seq("id", "name"))
-    val small = Finder.typedGroups(spark, Finder.plan(mapper, tableOf(df),
-      Seq(DeletionQueueItem("a", MatchId.Simple("1")))))
-    val huge = Finder.typedGroups(spark, Finder.plan(mapper, tableOf(df),
+    val small = Finder.plan(mapper, tableOf(df),
+      Seq(DeletionQueueItem("a", MatchId.Simple("1"))))
+    val huge = Finder.plan(mapper, tableOf(df),
       (0 to Finder.InSetMaxKeys).map(i =>
-        DeletionQueueItem(s"q$i", MatchId.Simple(i.toString)))))
-    Seq("predicate" -> small, "semi-join" -> huge).foreach {
-      case (strategy, typed) =>
+        DeletionQueueItem(s"q$i", MatchId.Simple(i.toString))))
+    Seq("predicate" -> small, "probe" -> huge).foreach {
+      case (strategy, groups) =>
+        val typed = Finder.typedGroups(spark, groups)
         val q = Finder.findFiles(spark, data, typed, DataFormat.Parquet)
         assert(q.collect().map(fileName).distinct.toSeq ==
           Seq(fileName(file)), strategy)
@@ -369,6 +394,10 @@ class FinderSpec extends SparkSpec {
         assert(ops.isEmpty, s"$strategy plans $ops")
         assert("Scan parquet".r.findAllIn(
           q.queryExecution.executedPlan.toString).size == 1, strategy)
+        val rowsPlan = executedPlanOf(assert(
+          Finder.matchedRows(spark, data, groups).collect().nonEmpty))
+        assert(shuffleOps(rowsPlan).isEmpty,
+          s"$strategy matchedRows plans:\n$rowsPlan")
     }
     val text = stageParquetFile(Seq((1L, "mail a@b.com now"), (2L, "none"))
       .toDF("id", "text"))
@@ -382,27 +411,45 @@ class FinderSpec extends SparkSpec {
   test("a JSON-lines Find with more than 10 keys pushes no In into its " +
     "scan; the same keys on parquet do") {
     import org.apache.spark.sql.execution.FileSourceScanExec
-    val file = stageTextFile(
-      (1 to 40).map(i => s"""{"user_id":$i,"x":"v$i"}""").mkString("\n"))
+    val file = stageTextFile((1 to 40).map(i =>
+      s"""{"user_id":$i,"email":"u$i@x.io","x":"v$i"}""").mkString("\n"))
     val table = TableDef("j", file, DataFormat.JsonLines,
       StructType(Seq(StructField("user_id", LongType),
-        StructField("x", StringType))))
-    val typed = Finder.typedGroups(spark, Finder.plan(
-      DataMapper("mj", "j", Seq("user_id"), format = DataFormat.JsonLines),
-      table, (1 to 20).map(i =>
-        DeletionQueueItem(s"q$i", MatchId.Simple((i * 3).toString)))))
-    def pushed(format: DataFormat): String = {
+        StructField("email", StringType), StructField("x", StringType))))
+    def typed(columns: Seq[String], items: Seq[DeletionQueueItem]) =
+      Finder.typedGroups(spark, Finder.plan(DataMapper("mj", "j", columns,
+        format = DataFormat.JsonLines), table, items))
+    def pushed(t: Seq[Finder.TypedGroup], format: DataFormat): String = {
       val q = Finder.findFiles(spark,
-        graft.driver.JobRunner.readTable(spark, table), typed, format)
+        graft.driver.JobRunner.readTable(spark, table), t, format)
       assert(q.collect().nonEmpty)
       q.queryExecution.executedPlan.collectFirst {
         case s: FileSourceScanExec => s.metadata.getOrElse("PushedFilters", "")
       }.getOrElse(fail("no file scan"))
     }
-    val json = pushed(DataFormat.JsonLines)
-    assert(!json.contains("In("), s"JSON-lines scan pushes $json")
-    // the check can see a pushed In: the native predicate pushes one
-    assert(pushed(DataFormat.Parquet).contains("In(user_id"))
+    // a numeric and a string identifier: on a string column the string
+    // cast is a no-op, so only the probe keeps the keys out of the scan
+    Seq("user_id" -> ((i: Int) => i.toString),
+        "email" -> ((i: Int) => s"u$i@x.io")).foreach { case (c, v) =>
+      val t = typed(Seq(c), (1 to 20).map(i =>
+        DeletionQueueItem(s"q$i", MatchId.Simple(v(i * 3)))))
+      val json = pushed(t, DataFormat.JsonLines)
+      assert(!json.contains("In("), s"JSON-lines scan pushes $json")
+      // the check can see a pushed In: the native predicate pushes one
+      assert(pushed(t, DataFormat.Parquet).contains(s"In($c"))
+    }
+    // a composite group: the probe pushes no key either; whether the
+    // literal OR-of-ANDs form reaches the JSON parser is reported
+    val composite = typed(Seq("user_id", "email"), (1 to 20).map(i =>
+      DeletionQueueItem(s"c$i", MatchId.Composite(
+        Map("user_id" -> (i * 3).toString, "email" -> s"u${i * 3}@x.io")),
+        dataMappers = Seq("mj"))))
+    assert(composite.map(_.group.columns) == Seq(Seq("email", "user_id")))
+    val json = pushed(composite, DataFormat.JsonLines)
+    assert(!json.contains("EqualTo(") && !json.contains("In("),
+      s"JSON-lines scan pushes $json")
+    info(s"composite literal form on the JSON scan pushes: " +
+      pushed(composite, DataFormat.Parquet).take(120))
   }
 
   test("seeded JSON-lines Find: the string-key predicate matches exactly " +
@@ -410,13 +457,16 @@ class FinderSpec extends SparkSpec {
     val rnd = new scala.util.Random(11)
     val dir = java.nio.file.Files.createTempDirectory("graft-jsonkeys-")
     val pool = Seq.fill(30)(rnd.between(-500L, 500L)) ++ Seq(12L, -7L)
+    val names = Seq("ann", "Ann", " 12 ", "12", "-7", "café", "", "b\"q")
     (0 until 12).foreach { f =>
       val lines = (0 until 8).map { _ =>
+        val name = names(rnd.nextInt(names.size)).replace("\"", "\\\"")
         rnd.nextInt(10) match {
           case 0 => """{"user_id":null,"x":1}"""
-          case 1 => """{"x":2}"""
-          case 2 => """{"user_id":"12","x":3}"""
-          case _ => s"""{"user_id":${pool(rnd.nextInt(pool.size))},"x":4}"""
+          case 1 => s"""{"x":2,"name":"$name"}"""
+          case 2 => """{"user_id":"12","x":3,"name":null}"""
+          case _ => s"""{"user_id":${pool(rnd.nextInt(pool.size))},""" +
+            s""""x":4,"name":"$name"}"""
         }
       }
       java.nio.file.Files.write(dir.resolve(s"p$f.json"),
@@ -424,32 +474,38 @@ class FinderSpec extends SparkSpec {
     }
     val table = TableDef("j", dir.toString, DataFormat.JsonLines,
       StructType(Seq(StructField("user_id", LongType),
-        StructField("x", IntegerType))))
+        StructField("x", IntegerType), StructField("name", StringType))))
     val data = graft.driver.JobRunner.readTable(spark, table)
-    val mapper = DataMapper("mj", "j", Seq("user_id"),
-      format = DataFormat.JsonLines)
     var matchedRows, narrowerRounds = 0
     val allObjects = objectsOf(data)
-    (1 to 6).foreach { round =>
-      val keys = Seq.fill(rnd.between(1, 25))(
+    // a long and a string identifier: the probe against native `isin`
+    Seq[(String, () => String)](
+      "user_id" -> (() =>
         if (rnd.nextBoolean()) pool(rnd.nextInt(pool.size)).toString
-        else rnd.between(-1000L, 1000L).toString) ++ Seq(" 12 ", "-7")
-      val typed = Finder.typedGroups(spark, Finder.plan(mapper, table,
-        keys.zipWithIndex.map { case (k, i) =>
-          DeletionQueueItem(s"q$i", MatchId.Simple(k)) }))
-      val native = col("user_id").isin(
-        typed.head.native.map(_.head).filter(_ != null): _*)
-      val pred = Finder.findPredicate(typed.head, DataFormat.JsonLines)
-      def rows(p: org.apache.spark.sql.Column) =
-        data.filter(p).select("user_id", "x").collect()
-          .map(_.toString).sorted.toSeq
-      val oracle = objectsOf(data.filter(native))
-      assert(rows(pred) == rows(native), s"round $round keys $keys")
-      assert(Finder.findFiles(spark, data, typed, DataFormat.JsonLines)
-        .collect().toSet == oracle,
-        s"round $round keys $keys")
-      matchedRows += rows(native).size
-      if (oracle.size < allObjects.size) narrowerRounds += 1
+        else rnd.between(-1000L, 1000L).toString),
+      "name" -> (() =>
+        if (rnd.nextBoolean()) names(rnd.nextInt(names.size))
+        else s"n${rnd.nextInt(10)}")).foreach { case (column, key) =>
+      val mapper = DataMapper("mj", "j", Seq(column),
+        format = DataFormat.JsonLines)
+      (1 to 6).foreach { round =>
+        val keys = Seq.fill(rnd.between(1, 25))(key()) ++ Seq(" 12 ", "-7")
+        val typed = Finder.typedGroups(spark, Finder.plan(mapper, table,
+          keys.zipWithIndex.map { case (k, i) =>
+            DeletionQueueItem(s"q$i", MatchId.Simple(k)) }))
+        val native = col(column).isin(
+          typed.head.native.map(_.head).filter(_ != null): _*)
+        val pred = Finder.findFilter(spark, typed, DataFormat.JsonLines)
+        def rows(p: org.apache.spark.sql.Column) =
+          data.filter(p).select("user_id", "x", "name").collect()
+            .map(_.toString).sorted.toSeq
+        val oracle = objectsOf(data.filter(native))
+        assert(rows(pred) == rows(native), s"$column round $round: $keys")
+        assert(Finder.findFiles(spark, data, typed, DataFormat.JsonLines)
+          .collect().toSet == oracle, s"$column round $round: $keys")
+        matchedRows += rows(native).size
+        if (oracle.size < allObjects.size) narrowerRounds += 1
+      }
     }
     // the rounds discriminate: rows match, and not every object does
     assert(matchedRows > 0 && narrowerRounds > 0,
