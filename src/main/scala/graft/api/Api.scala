@@ -2,6 +2,7 @@ package graft.api
 
 import graft.catalog.{Catalog, TableDef}
 import graft.driver.JobRunner
+import graft.find.KeyIndex
 import graft.jobs.Jobs
 import graft.model._
 import org.apache.spark.sql.SparkSession
@@ -17,7 +18,9 @@ import scala.collection.concurrent.TrieMap
   * State lives in driver memory (the DynamoDB analog); every mutation is
   * guarded the way the reference guards it (no mapper/queue deletion while
   * a job runs, future watermarks rejected, composite scoping enforced at
-  * enqueue time).
+  * enqueue time). So does the per-object [[KeyIndex]] every job's Find
+  * prunes with and its Forget maintains; a mapper's entries go when the
+  * mapper is deleted or re-put with another definition.
   */
 final class GraftApi(spark: SparkSession) {
 
@@ -30,6 +33,10 @@ final class GraftApi(spark: SparkSession) {
   private val running = new AtomicBoolean(false)
   private val settings =
     new java.util.concurrent.atomic.AtomicReference(JobSettings())
+  private val keyIndex = new KeyIndex
+
+  /** Objects, key hashes and approximate driver bytes of the key index. */
+  def keyIndexSize: KeyIndex.Footprint = keyIndex.size
 
   def runningJobExists: Boolean = running.get()
 
@@ -51,7 +58,8 @@ final class GraftApi(spark: SparkSession) {
     Catalog.validateMapper(m, table)
     val others = mappers.filter(_._1 != m.id).values.toSeq
     Catalog.checkNoOverlap(others :+ (m -> table))
-    mappers.put(m.id, (m, table))
+    if (mappers.put(m.id, (m, table)).exists(_ != (m -> table)))
+      keyIndex.drop(m.id)
   }
 
   def listDataMappers(pageSize: Int = 20,
@@ -63,6 +71,7 @@ final class GraftApi(spark: SparkSession) {
     require(!running.get(),
       "Cannot delete Data Mappers whilst there is a job in progress")
     mappers.remove(id)
+    keyIndex.drop(id)
   }
 
   // ---- deletion queue (queue/handlers.py:59-116,144-180) -------------
@@ -110,7 +119,7 @@ final class GraftApi(spark: SparkSession) {
       // must not affect it (queue/handlers.py:126-141)
       val run = JobRunner.run(spark, jobId, mappers.values.toSeq,
         queue.asScala.toSeq, settings = settings.get(),
-        readTableFn = readTableFn)
+        readTableFn = readTableFn, keyIndex = Some(keyIndex))
       // cleanup phase clears consumed queue items (stream_processor.py:129-139)
       val clearedIds = run.clearedQueue.map(_.id).toSet
       queue.removeIf(i => clearedIds.contains(i.id))

@@ -1,11 +1,12 @@
 package graft.driver
 
 import graft.catalog.{Catalog, TableDef}
-import graft.find.Finder
+import graft.find.{Finder, KeyIndex}
 import graft.forget.DistributedRewrite
 import graft.jobs.Jobs
 import graft.model._
 import graft.tools.ParquetStats
+import org.apache.hadoop.fs.FileStatus
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.util.control.NonFatal
@@ -48,14 +49,22 @@ object JobRunner {
     * in its Find query ([[Finder.typedGroups]]); the Forget phase is one
     * [[DistributedRewrite]] call over every mapper's found objects, so
     * one rewrite job and one marker sweep job whatever the mapper
-    * count. */
+    * count.
+    *
+    * With a `keyIndex`, each mapper's Find scans only the objects that
+    * index admits or has no fresh entry for ([[KeyIndex.prune]]); the
+    * build scan that indexes the latter runs first, inside the Find. A
+    * mapper with nothing to scan runs no Spark job. Forget keeps the
+    * index fresh for every object it commits ([[KeyIndex.committed]]).
+    * Without one, the Find query is the unpruned one. */
   def run(spark: SparkSession, jobId: String,
           mappers: Seq[(DataMapper, TableDef)],
           queue: Seq[DeletionQueueItem],
           outPathFor: String => Option[String] = _ => None,
           manifestAuditDir: Option[String] = None,
           settings: JobSettings = JobSettings(),
-          readTableFn: (SparkSession, TableDef) => DataFrame = readTable)
+          readTableFn: (SparkSession, TableDef) => DataFrame = readTable,
+          keyIndex: Option[KeyIndex] = None)
       : JobRun = {
     settings.validate()
     def ev(name: String, bytesScanned: Long = 0L, timeTakenMs: Long = 0L,
@@ -90,6 +99,8 @@ object JobRunner {
       scala.collection.concurrent.TrieMap.empty[String, Seq[String]]
     val typedByMapper = scala.collection.concurrent.TrieMap
       .empty[String, Seq[Finder.TypedGroup]]
+    // object key -> length in the Find listing, for the rewrite's deal
+    val sizes = scala.collection.concurrent.TrieMap.empty[String, Long]
     def emit(name: String, bytesScanned: Long = 0L, timeTakenMs: Long = 0L,
              error: String = ""): Unit = events.synchronized {
       events += ev(name, bytesScanned = bytesScanned,
@@ -114,28 +125,12 @@ object JobRunner {
           manifestAuditDir.foreach(d =>
             Finder.writeManifestAudit(spark, jobId, m.id, typed, d))
           if (typed.nonEmpty) {
-            val data = Finder.scoped(readTableFn(spark, table), m)
-            // a path repeats once per scan partition that read part of
-            // its object (Finder class doc): the driver removes repeats
-            val paths = Finder.findFiles(spark, data, typed, table.format)
-              .collect().distinct.toSeq
-            found(m.id) = paths
-            val bytes = table.format match {
-              case DataFormat.Parquet =>
-                // identifier-columns-only projection: the scan cost is the
-                // pruned column chunks (README.md:75-81), not the table
-                ParquetStats.columnBytes(
-                  spark.sparkContext.hadoopConfiguration,
-                  paths.map(DistributedRewrite.stripScheme), m.columns)
-                  .selected
-              case DataFormat.JsonLines =>
-                // row format has no column pruning: a Find is a full scan
-                // of the table's bytes (reference scenario 5,
-                // docs/COST_OVERVIEW.md:316 — Athena bills the whole
-                // object set for row-format queries)
-                tableBytes(spark, table)
-            }
-            emit(JobEventName.QuerySucceeded, bytesScanned = bytes,
+            val f = find(spark, m, table, typed,
+              Finder.scoped(readTableFn(spark, table), m), keyIndex)
+            f.listing.foreach(st =>
+              sizes(KeyIndex.objectKey(st.getPath.toUri)) = st.getLen)
+            found(m.id) = f.paths
+            emit(JobEventName.QuerySucceeded, bytesScanned = f.bytesScanned,
               timeTakenMs = System.currentTimeMillis() - t0)
           } else found(m.id) = Nil
           done = true
@@ -193,10 +188,23 @@ object JobRunner {
         val units = mappers.flatMap { case (m, table) =>
           found.getOrElse(m.id, Nil).map(p =>
             ObjectWorkUnit(jobId, p, m.id, table.format,
-              m.deleteOldVersions, m.ignoreObjectNotFound))
+              m.deleteOldVersions, m.ignoreObjectNotFound,
+              sizes.getOrElse(KeyIndex.objectKey(p), -1L)))
         }
-        events ++= DistributedRewrite.runTyped(spark, jobId, units,
+        val outcomes = DistributedRewrite.deleteTyped(spark, jobId, units,
           typedByMapper.toMap, outPathFor)
+        events ++= DistributedRewrite.events(jobId, outcomes)
+        // an object written elsewhere leaves its source, and its entry,
+        // as they were
+        keyIndex.foreach { ix =>
+          val byPath = outcomes.map(o => o.path -> o).toMap
+          mappers.foreach { case (m, table) =>
+            ix.committed(m, table, typedByMapper.getOrElse(m.id, Nil),
+              found.getOrElse(m.id, Nil).filter(outPathFor(_).isEmpty)
+                .flatMap(byPath.get).map(o =>
+                  KeyIndex.Committed(o.path, o.read, o.committed)))
+          }
+        }
         events += ev(JobEventName.ForgetPhaseEnded)
       } catch {
         case NonFatal(e) =>
@@ -234,19 +242,53 @@ object JobRunner {
     JobRun(state, events.toSeq, found.toMap, cleared, settings, expiresAt)
   }
 
-  /** Total bytes of a table's data files (hidden files excluded) — the
-    * full-scan cost a row-format Find reports. */
-  private[driver] def tableBytes(spark: SparkSession, table: TableDef): Long = {
-    val path = new org.apache.hadoop.fs.Path(table.location)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val it = fs.listFiles(path, true)
-    var total = 0L
-    while (it.hasNext) {
-      val f = it.next()
-      val name = f.getPath.getName
-      if (!name.startsWith("_") && !name.startsWith(".")) total += f.getLen
+  /** One mapper's Find result: the matched object paths, the bytes the
+    * query reports scanned and the listing it planned over (empty when
+    * the read is no file relation). */
+  final case class Found(paths: Seq[String], bytesScanned: Long,
+                         listing: Seq[FileStatus])
+
+  /** One mapper's Find over `data`, its scoped table read, for the cast
+    * groups `typed`. With a `keyIndex` the objects without a fresh entry
+    * are indexed first by one build scan, and the Find query then leaves
+    * out every object the index rules out; with nothing left to scan it
+    * runs no Spark job. Both Spark actions are issued here, in the Find
+    * phase. */
+  def find(spark: SparkSession, m: DataMapper, table: TableDef,
+           typed: Seq[Finder.TypedGroup], data: DataFrame,
+           keyIndex: Option[KeyIndex]): Found = {
+    // the objects Spark listed when it planned the read: no second walk
+    // of the table
+    val listing = KeyIndex.listing(data)
+    val pruning = for (ix <- keyIndex; l <- listing) yield {
+      val p = ix.prune(m, table, typed, l)
+      if (p.unindexed.isEmpty) p
+      else {
+        ix.built(m, table, p.unindexed, KeyIndex
+          .buildScan(data, m.columns, l.diff(p.unindexed)).collect())
+        ix.prune(m, table, typed, l)
+      }
     }
-    total
+    val paths =
+      if (pruning.exists(_.scanned.isEmpty)) Nil
+      // a path repeats once per scan partition that read part of its
+      // object (Finder class doc): the driver removes repeats
+      else Finder.findFiles(spark, data, typed, table.format,
+        pruning.fold(Seq.empty[FileStatus])(_.skipped))
+        .collect().distinct.toSeq
+    val bytes = table.format match {
+      case DataFormat.Parquet =>
+        // identifier-columns-only projection: the scan cost is the
+        // pruned column chunks (README.md:75-81), not the table
+        ParquetStats.columnBytes(spark.sparkContext.hadoopConfiguration,
+          paths.map(DistributedRewrite.stripScheme), m.columns).selected
+      case DataFormat.JsonLines =>
+        // row format has no column pruning: a Find reads every object
+        // it scans whole (reference scenario 5, docs/COST_OVERVIEW.md:316
+        // — Athena bills the whole object set for row-format queries)
+        pruning.map(_.scanned).orElse(listing).fold(0L)(_.map(_.getLen).sum)
+    }
+    Found(paths, bytes, listing.getOrElse(Nil))
   }
 
   /** Read a table for the Find phase — ALWAYS through the DECLARED

@@ -45,7 +45,11 @@ import org.apache.spark.sql.types._
   * comes back once per scan partition that read part of its object (more
   * than once only for an object larger than
   * `spark.sql.files.maxPartitionBytes`); the caller collects the few
-  * paths and removes repeats on the driver.
+  * paths and removes repeats on the driver. Through `GraftApi` the scan
+  * opens only the objects that can hold a queued key: a per-object
+  * [[KeyIndex]] proposes them, and one `_metadata.file_path` predicate
+  * leaves every other object out before Spark opens a file (filter, then
+  * verify: the Find filter still decides membership).
   *
   * Casting contract (generate_queries.py:495-519, execute_query.py:90):
   * match values are cast to the column's type by Spark itself at plan time
@@ -81,7 +85,22 @@ object Finder {
     * min/max RANGE, so a scattered queue prunes little either way. On
     * that box the constant sits far above the crossover: a parquet queue
     * of ~1k to 32,768 keys takes the slower literal form. Re-derive it on
-    * new hardware by running the bench. */
+    * new hardware by running the bench.
+    *
+    * What each form makes the scan read (same bench and box, sf0.1
+    * lineitem rewritten as 16 objects range-clustered by `l_orderkey`,
+    * 562 row groups; the probe reads all of them at every size), literal
+    * form as objects read / row groups read and wall against the
+    * probe's: a clustered queue (consecutive keys) — 10 keys 1 / 1,
+    * 0.23 vs 0.34 s; 1k keys 1 / 5, 0.26 vs 0.31 s; 10k keys 2 / 39,
+    * 0.77 vs 0.22 s; 32,768 keys 4 / 124, 1.96 vs 0.25 s. A scattered
+    * queue (keys spread over the table) — 10 keys 10 / 10 (ten
+    * equalities, row-group statistics and dictionaries prune), 0.28 vs
+    * 0.50 s; 1k keys 16 / 551, 0.52 vs 0.35 s; 10k keys 16 / 525, 1.37
+    * vs 0.26 s; 32,768 keys 15 / 492, 2.36 vs 0.25 s. Above ~1k keys the
+    * literal form pays more per evaluated key than its pruning saves
+    * even on a clustered queue; object-level pruning comes from the
+    * [[KeyIndex]], which no queue size defeats. */
   val InSetMaxKeys = 32768
 
   /** Composite groups with at most this many tuples use an OR-of-ANDs
@@ -111,11 +130,16 @@ object Finder {
 
   /** A column group with its match values cast-validated and rendered by
     * Spark: `native(i)(j)` is the j-th column's value of tuple i with the
-    * column's type applied; `stringKeys` is the token-joined string form
+    * column's type applied and `rendered(i)(j)` that value cast to string
+    * (null for a null part); `stringKeys` is the token-joined string form
     * (the reference's manifest `queryablematchid`); `ids(i)` is tuple
     * i's queue item id. */
   final case class TypedGroup(group: ColumnGroup, ids: Seq[String],
-                              native: Seq[Seq[Any]], stringKeys: Seq[String])
+                              native: Seq[Seq[Any]],
+                              rendered: Seq[Seq[String]]) {
+    lazy val stringKeys: Seq[String] = rendered.map(parts =>
+      if (parts.contains(null)) null else parts.mkString(CompositeToken))
+  }
 
   /** Scope queue items to a mapper and group them by canonical column
     * group (reference: generate_queries.py:167-215). Simple matches fan
@@ -218,9 +242,8 @@ object Finder {
                   g.types.mkString(","))
             (toScala(v), render.eval(InternalRow(v)))
         }
-        val parts = cast.map(_._2)
         (cast.map(_._1),
-          if (parts.contains(null)) null else parts.mkString(CompositeToken))
+          cast.map(_._2).map(v => if (v == null) null else v.toString))
       }
       TypedGroup(g, gm.rows.map(_._1), typed.map(_._1), typed.map(_._2))
     }
@@ -341,12 +364,19 @@ object Finder {
     *               partition-filtered if the mapper scopes partitions)
     * @param typed  the mapper's groups, cast by [[typedGroups]]
     * @param format the table's storage format; only parquet keeps
-    *               literal predicates (class doc) */
+    *               literal predicates (class doc)
+    * @param skipped objects of `data`'s listing that [[KeyIndex.prune]]
+    *               found holding no queued key: one `_metadata.file_path`
+    *               predicate ([[KeyIndex.leaveOut]]) keeps the scan from
+    *               opening them */
   def findFiles(spark: SparkSession, data: DataFrame,
-                typed: Seq[TypedGroup],
-                format: DataFormat): Dataset[String] = {
+                typed: Seq[TypedGroup], format: DataFormat,
+                skipped: Seq[org.apache.hadoop.fs.FileStatus] = Nil)
+      : Dataset[String] = {
     require(typed.nonEmpty, "no match groups — nothing to find")
-    objectPaths(data, findFilter(spark, typed, format))
+    val pruned =
+      if (skipped.isEmpty) data else data.filter(KeyIndex.leaveOut(data, skipped))
+    objectPaths(pruned, findFilter(spark, typed, format))
   }
 
   /** Paths of the objects holding a row of `data` that satisfies `pred`,

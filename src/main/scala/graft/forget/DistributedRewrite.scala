@@ -561,12 +561,18 @@ object DistributedRewrite {
     if (deleteOldVersions) VersionedStore.deleteOldVersions(fs, dest)
   }
 
-  /** Serializable task outcome, turned into JobEvents driver-side. */
+  /** Serializable task outcome, turned into JobEvents driver-side.
+    * `read` is the `(length, mtime)` of the object version the task
+    * rewrote and `committed` that of the version it put in its place,
+    * both as the Hadoop `FileStatus` reports them (ms); None when the
+    * task committed nothing. */
   final case class TaskOutcome(path: String, ok: Boolean,
                                processed: Long, deleted: Long, ms: Long,
                                rollbackFailed: Boolean, error: String,
                                originalError: String,
-                               skipped: Boolean = false)
+                               skipped: Boolean = false,
+                               read: Option[(Long, Long)] = None,
+                               committed: Option[(Long, Long)] = None)
 
   // ------------------------------------------------------------------
   // The one-job driver entry
@@ -662,6 +668,15 @@ object DistributedRewrite {
                typedByMapper: Map[String, Seq[TypedGroup]],
                outPathFor: String => Option[String] = _ => None,
                codec: PayloadCodec = PayloadCodec.Identity): Seq[JobEvent] =
+    events(jobId, deleteTyped(spark, jobId, units, typedByMapper, outPathFor,
+      codec))
+
+  /** [[runTyped]]'s rewrite job, returning the per-object outcomes. */
+  def deleteTyped(spark: SparkSession, jobId: String, units: Seq[ObjectWorkUnit],
+                  typedByMapper: Map[String, Seq[TypedGroup]],
+                  outPathFor: String => Option[String] = _ => None,
+                  codec: PayloadCodec = PayloadCodec.Identity)
+      : Seq[TaskOutcome] =
     rewriteAll(spark, jobId, units,
       typedByMapper.map { case (m, typed) =>
         m -> (new DeleteRewrite(buildSpecs(typed)): TaskRewrite)
@@ -674,25 +689,41 @@ object DistributedRewrite {
                              outPathFor: String => Option[String] = _ => None,
                              codec: PayloadCodec = PayloadCodec.Identity)
       : Seq[JobEvent] =
-    rewriteAll(spark, jobId, units,
-      units.map(_.mapperId -> rewrite).toMap, outPathFor, codec)
+    events(jobId, rewriteAll(spark, jobId, units,
+      units.map(_.mapperId -> rewrite).toMap, outPathFor, codec))
+
+  /** Deal `units` into at most `slices` task batches, largest first:
+    * units of known size (`sizeBytes` ≥ 0) by size descending, then the
+    * rest in their given order, dealt back and forth across the batches
+    * (batch 0, 1, …, n−1, then n−1, …, 0, …), so the `slices` largest
+    * objects land one per task and the batch sums stay close. */
+  private[forget] def deal(units: Seq[ObjectWorkUnit],
+                           slices: Int): Seq[Seq[ObjectWorkUnit]] = {
+    val (known, unknown) = units.partition(_.sizeBytes >= 0)
+    val order = known.sortBy(-_.sizeBytes) ++ unknown
+    val n = math.max(1, math.min(slices, order.size))
+    val batches = Array.fill(n)(Vector.newBuilder[ObjectWorkUnit])
+    order.zipWithIndex.foreach { case (u, i) =>
+      val (wave, at) = (i / n, i % n)
+      batches(if (wave % 2 == 0) at else n - 1 - at) += u
+    }
+    batches.toSeq.map(_.result())
+  }
 
   /** The job body shared by every [[TaskRewrite]] strategy: ONE rewrite
-    * job (k objects per task), each unit rewritten by
+    * job (k objects per task, dealt by [[deal]]), each unit rewritten by
     * `rewriteOf(unit.mapperId)`, then ONE marker sweep job. */
   private def rewriteAll(spark: SparkSession, jobId: String,
                          units: Seq[ObjectWorkUnit],
                          rewriteOf: Map[String, TaskRewrite],
                          outPathFor: String => Option[String],
-                         codec: PayloadCodec): Seq[JobEvent] = {
+                         codec: PayloadCodec): Seq[TaskOutcome] = {
     if (units.isEmpty) return Nil
     val accProcessed = spark.sparkContext.longAccumulator("graft.forget.rowsProcessed")
     val accDeleted = spark.sparkContext.longAccumulator("graft.forget.rowsDeleted")
 
-    val work: Seq[(ObjectWorkUnit, String)] = units.map { u =>
-      val srcPath = stripScheme(u.path)
-      (u, outPathFor(u.path).map(stripScheme).getOrElse(srcPath))
-    }
+    def dest(u: ObjectWorkUnit): String =
+      outPathFor(u.path).map(stripScheme).getOrElse(stripScheme(u.path))
 
     val confBc = spark.sparkContext.broadcast(
       new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration))
@@ -709,12 +740,15 @@ object DistributedRewrite {
     // (targets 8 task waves per core so stragglers amortize — a fixed k
     // would under-split small queues or over-split large ones) and
     // bounded to 32 objects so one retry never redoes more than that.
-    val auto = math.ceil(work.size.toDouble /
+    // The largest objects are dealt first, one per task (`deal`): a
+    // task holding two of them would finish last by their sum.
+    val auto = math.ceil(units.size.toDouble /
       (spark.sparkContext.defaultParallelism.toDouble * 8)).toInt
     val k = math.min(32, math.max(1, auto))
-    val numSlices = math.max(1, math.ceil(work.size.toDouble / k).toInt)
+    val batches = deal(units, math.ceil(units.size.toDouble / k).toInt)
+      .map(_.map(u => (u, dest(u))))
     val outcomes = spark.sparkContext
-      .parallelize(work, numSlices) // k objects per task (see above)
+      .parallelize(batches, batches.size) // one batch per task (see above)
       .mapPartitions { it =>
         // ONE Configuration copy per task, not per object: the copy ctor
         // re-walks the source's property overlay under its monitor, so
@@ -722,7 +756,7 @@ object DistributedRewrite {
         // shared broadcast value. Single-threaded within the task, so
         // the objects of one batch can safely share the copy.
         val conf = confBc.value.value
-        it.map { case (u, destStr) =>
+        it.flatten.map { case (u, destStr) =>
         val t0 = System.currentTimeMillis()
         val src = new HPath(stripScheme(u.path))
         val dest = new HPath(destStr)
@@ -802,13 +836,18 @@ object DistributedRewrite {
               fs.delete(staged, false)
               throw new ZeroDeletionError(rewrite.zeroChangeMessage(u.path))
             }
+            // a rename keeps length and mtime: the staged copy's are the
+            // committed object's
+            val out = staged.getFileSystem(conf).getFileStatus(staged)
             commitTask(conf, src, dest, staged, srcLen, srcMtime,
               u.deleteOldVersions)
             writeDoneMarker(mfs, marker, processed, deleted)
             accProcessed.add(processed)
             accDeleted.add(deleted)
             TaskOutcome(u.path, ok = true, processed, deleted,
-              System.currentTimeMillis() - t0, rollbackFailed = false, "", "")
+              System.currentTimeMillis() - t0, rollbackFailed = false, "", "",
+              read = Some((srcLen, srcMtime)),
+              committed = Some((out.getLen, out.getModificationTime)))
           } finally plainLocal.foreach { f => if (f.exists()) f.delete() }
           }
         } catch {
@@ -833,8 +872,8 @@ object DistributedRewrite {
     // re-lists the shared marker dir O(N²) times for N co-located
     // objects (measured: 27 s of a 34 s job at 1,024 objects in one
     // prefix).
-    val markerDirs = work.map { case (_, destStr) =>
-      new HPath(new HPath(destStr).getParent, ".graft-done").toString
+    val markerDirs = units.map { u =>
+      new HPath(new HPath(dest(u)).getParent, ".graft-done").toString
     }.distinct
     spark.sparkContext
       .parallelize(markerDirs, math.max(1, math.min(markerDirs.size, 64)))
@@ -873,8 +912,13 @@ object DistributedRewrite {
         } catch { case NonFatal(_) => () }
       }
 
+    outcomes.toSeq
+  }
+
+  /** The job events of a rewrite job's outcomes, sorted by sk. */
+  def events(jobId: String, outcomes: Seq[TaskOutcome]): Seq[JobEvent] = {
     def sk(): String = EventSk.next()
-    outcomes.toSeq.flatMap { o =>
+    outcomes.flatMap { o =>
       if (o.ok)
         Seq(JobEvent(jobId, sk(), JobEventName.ObjectUpdated,
           System.currentTimeMillis(), statsProcessed = o.processed,

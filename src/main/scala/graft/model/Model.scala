@@ -244,6 +244,8 @@ final case class JobStats(
   * @param ignoreObjectNotFound a missing object is skipped
   *        (ObjectUpdateSkipped) instead of failed — the reference's
   *        IgnoreObjectNotFoundExceptions mapper flag (main.py:213-231)
+  * @param sizeBytes the object's length in the Find listing, -1 when
+  *        unknown; the rewrite job deals its largest objects first
   */
 final case class ObjectWorkUnit(
     jobId: String,
@@ -251,7 +253,8 @@ final case class ObjectWorkUnit(
     mapperId: String,
     format: DataFormat,
     deleteOldVersions: Boolean,
-    ignoreObjectNotFound: Boolean = false)
+    ignoreObjectNotFound: Boolean = false,
+    sizeBytes: Long = -1L)
 
 /** Raised when a match id cannot be cast to its column's type
   * (reference: generate_queries.py:516-519 MatchIdCastingError). */

@@ -301,6 +301,56 @@ class JobRunnerSpec extends SparkSpec {
     assert(updated == expected)
   }
 
+  test("with the key index, a queue no indexed object holds runs no Find " +
+    "Spark job for that mapper and still reports QuerySucceeded, 0 bytes") {
+    val (_, table) = lake()
+    val json = {
+      val dir = java.nio.file.Files.createTempDirectory("graft-jk-").toString
+      java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/d.json"),
+        "{\"customer_id\":7}\n{\"customer_id\":8}\n".getBytes("UTF-8"))
+      TableDef("j", dir, DataFormat.JsonLines,
+        spark.read.json(s"$dir/d.json").schema)
+    }
+    val mappers = Seq(DataMapper("m", "t", Seq("customer_id")) -> table,
+      DataMapper("mj", "j", Seq("customer_id"),
+        format = DataFormat.JsonLines) -> json)
+    val ix = new graft.find.KeyIndex
+    // the first job indexes both tables and deletes key 7
+    val first = JobRunner.run(spark, "jr-ix1", mappers,
+      Seq(DeletionQueueItem("q7", MatchId.Simple("7"))), keyIndex = Some(ix))
+    assert(first.state.status == JobStatus.Completed, first.state.status)
+    assert(first.state.stats.totalObjectUpdatedCount == 2)
+    val finds = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.stageInfos.exists(_.details.contains("graft.driver.JobRunner")))
+          finds.incrementAndGet()
+    }
+    Thread.sleep(300) // let earlier jobs' listener events drain
+    spark.sparkContext.addSparkListener(listener)
+    val run =
+      try {
+        // 7 is gone and 123456 was never there
+        val r = JobRunner.run(spark, "jr-ix2", mappers,
+          Seq(DeletionQueueItem("a", MatchId.Simple("7")),
+            DeletionQueueItem("b", MatchId.Simple("123456"))),
+          keyIndex = Some(ix))
+        Thread.sleep(700) // listener bus is async
+        r
+      } finally spark.sparkContext.removeSparkListener(listener)
+    assert(run.state.status == JobStatus.Completed, run.state.status)
+    assert(finds.get == 0)
+    val queries = run.events.filter(_.eventName == JobEventName.QuerySucceeded)
+    assert(queries.size == 2 && queries.forall(_.bytesScanned == 0L), queries)
+    assert(run.foundPaths.values.forall(_.isEmpty), run.foundPaths)
+    // without the index the same queue scans both tables
+    val plain = JobRunner.run(spark, "jr-ix3", mappers,
+      Seq(DeletionQueueItem("b", MatchId.Simple("123456"))))
+    assert(plain.events.filter(_.eventName == JobEventName.QuerySucceeded)
+      .map(_.bytesScanned).sum > 0)
+  }
+
   test("concurrent Find dispatch: wall-clock tracks the slowest mapper, " +
     "not the sum; event log stays sk-ordered") {
     // six mappers over six disjoint lakes, each Find artificially held

@@ -44,6 +44,24 @@ class ForgetSpec extends SparkSpec {
 
   // ---- test_parquet.py:77 — delete correct rows ---------------------
 
+  test("the rewrite deals its largest objects first, one per task; " +
+    "units of unknown size keep their order") {
+    def u(p: String, size: Long) =
+      ObjectWorkUnit("j", p, "m", DataFormat.Parquet, true, sizeBytes = size)
+    val units = Seq(u("a", 10), u("x", -1), u("b", 900), u("c", 20),
+      u("y", -1), u("d", 800), u("e", 30), u("z", -1))
+    val batches = DistributedRewrite.deal(units, 3)
+    assert(batches.size == 3 && batches.flatten.toSet == units.toSet)
+    assert(batches.map(_.head.path).toSet == Set("b", "d", "e"))
+    // no batch holds two of the three largest
+    assert(batches.forall(_.count(x => Set("b", "d", "e")(x.path)) == 1))
+    assert(batches.flatten.filter(_.sizeBytes < 0).map(_.path).sorted ==
+      Seq("x", "y", "z"))
+    val unknown = units.filter(_.sizeBytes < 0)
+    assert(DistributedRewrite.deal(unknown, 1) == Seq(unknown))
+    assert(DistributedRewrite.deal(units, 20).size == units.size)
+  }
+
   test("deletes exactly the matching rows [distributed]") {
     val d = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("customer_id", "x")
     val file = stageParquetFile(d)
